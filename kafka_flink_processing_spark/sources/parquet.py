@@ -40,6 +40,41 @@ _NANOS_TS_COLS = {"events": ("ts",)}
 # independent by design (functions/exact.py, COVERAGE.md).
 _COMPUTE_DENSE_TABLES = {"documents", "embeddings"}
 
+# Inferred schemas by path, with the on-disk signature they were inferred
+# from. Parquet schema inference runs a Spark job, and every registry query
+# reloads its (unchanged) tables on each build; a rewritten file changes
+# its signature and is inferred again.
+_SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
+
+
+def _signature(path: str) -> tuple | None:
+    """(relative path, size, mtime_ns) of the file, or of every file under
+    the directory; None when the path is not on the local file system."""
+    try:
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return (("", st.st_size, st.st_mtime_ns),)
+        out = []
+        for root, _, files in os.walk(path):
+            for f in files:
+                full = os.path.join(root, f)
+                st = os.stat(full)
+                out.append((os.path.relpath(full, path), st.st_size,
+                            st.st_mtime_ns))
+        return tuple(sorted(out))
+    except OSError:
+        return None
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    sig = _signature(path)
+    if sig is None:
+        return spark.read.parquet(path)
+    cached = _SCHEMAS.get(path)
+    if cached is None or cached[0] != sig:
+        cached = _SCHEMAS[path] = (sig, spark.read.parquet(path).schema)
+    return spark.read.schema(cached[1]).parquet(path)
+
 
 def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
     sf_dir = sf_dir or DEFAULT_SF_DIR
@@ -48,7 +83,7 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
     # UTC; session.py pins it, but load_table accepts any session — pin here
     # too so a foreign session can't silently shift wall-clock values.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     for col in _NANOS_TS_COLS.get(name, ()):
         if col in df.columns and isinstance(df.schema[col].dataType, T.LongType):
             # integral `div` keeps full 64-bit precision (a float `/` would
