@@ -1,9 +1,14 @@
 """Position-netting core (W3) and the PnL replay spec fold (W2).
 
-Pure Python — shared verbatim by the batch applyInPandas operator
-(operators/pnl.py), the streaming stateful operator (streaming/), the
-property tests, and the executable spec used in replay-equality tests.
-Semantics follow reference PnlAndExposureJob.java:106-144 exactly:
+Pure Python. apply_fill is the netting step every PnL fold calls: the
+engine's one emission loop (operators/pnl.py::fold_hub, which the batch
+folds and both streaming state APIs run), the hybrid and sliced folds'
+per-account trade passes, and the property tests. HubFold, emit_row and
+replay are the executable spec — a second, dict-per-row implementation of
+the emission loop that the differential tests (tests/test_pnl.py) and the
+stream fuzzer's TTL oracle (tools/stream_fuzz.py::_pnl_ttl_spec) compare
+the engine against; no engine path runs them. Semantics follow reference
+PnlAndExposureJob.java:106-144 exactly:
 
 - apply_fill: the netting branches (same-direction average-in vs
   opposite-direction close/flip, :113-132)
@@ -68,10 +73,11 @@ def emit_row(ts, account: str, hub: str, a: _Acct,
 
 
 class HubFold:
-    """Incremental per-hub fold — the carried state of the reference's
+    """Incremental per-hub spec fold — the carried state of the reference's
     KeyedCoProcessFunction (lastPrice ValueState + per-account MapState,
-    PnlAndExposureJob.java:107-110). Shared by the batch replay, the
-    streaming stateful processor, and the executable spec."""
+    PnlAndExposureJob.java:107-110). Runs only as the spec: replay and the
+    stream fuzzer's TTL oracle build on it; the engine folds with
+    operators/pnl.py::fold_hub."""
 
     def __init__(self, last_price: float | None = None,
                  accounts: dict[str, tuple[int, float, float]] | None = None):

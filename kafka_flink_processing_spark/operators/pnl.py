@@ -17,6 +17,11 @@ Scale design:
   100 TB variant: only each account's final row per hub.
 - input order within a group is NOT guaranteed by applyInPandas; the fold
   sorts each group by the documented total order itself.
+
+fold_hub is the one emission loop: the serial fold, the sliced fold's
+phase C and both streaming state APIs (streaming/stateful.py) call it.
+netting.replay stays a separate, dict-per-row implementation of the same
+semantics — the executable spec the differential tests compare against.
 """
 
 from __future__ import annotations
@@ -25,6 +30,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from kafka_flink_processing_spark.operators.netting import (
     PRICE,
@@ -37,24 +43,38 @@ from kafka_flink_processing_spark.operators.netting import (
 # any event that falls exactly on a slice boundary.
 STATE = -1
 
-PNL_OUT_SCHEMA = ("ts timestamp, account string, hub string, "
-                  "position_mw int, avg_price_mwh double, "
-                  "last_price_mwh double, realized_pnl double, "
-                  "unrealized_pnl double, total_pnl double")
+# positions_pnl rows, as every fold (batch and streaming) emits them
+PNL_OUT_SCHEMA = T.StructType([
+    T.StructField("ts", T.TimestampType()),
+    T.StructField("account", T.StringType()),
+    T.StructField("hub", T.StringType()),
+    T.StructField("position_mw", T.IntegerType()),
+    T.StructField("avg_price_mwh", T.DoubleType()),
+    T.StructField("last_price_mwh", T.DoubleType()),
+    T.StructField("realized_pnl", T.DoubleType()),
+    T.StructField("unrealized_pnl", T.DoubleType()),
+    T.StructField("total_pnl", T.DoubleType()),
+])
 
 
-def _fold(pdf: pd.DataFrame) -> pd.DataFrame:
-    """One hub's replay. Same fold as the executable spec
-    (netting.py::replay — the differential tests and the streaming
-    processor still run it verbatim), but plumbed column-wise (r12,
-    guide §4.2: the per-record work crossing the Python boundary was
-    dict-building, not arithmetic — to_dict('records') on the way in
-    and one dict per emitted row on the way out dominated the stage).
-    The state transitions are the SAME apply_fill calls on the same
-    values in the same order, and the emission arithmetic is the same
-    expressions, so the output is bit-identical (oracle-gated, and
-    tests/test_pnl.py pins fold==hybrid==sliced bitwise)."""
+def fold_hub(pdf: pd.DataFrame, last_price: float | None = None,
+             accounts: dict | None = None
+             ) -> tuple[pd.DataFrame, float | None, dict]:
+    """Fold one hub's trade/price events (the tagged_events columns) into
+    positions_pnl rows, starting from the carried state (last_price,
+    accounts: account -> (pos, avg, realized), in first-trade order).
+    Returns (rows, last_price, accounts) — the end state seeds the next
+    call, so folding a prefix and then the rest equals one fold over all.
+
+    The events are sorted once into the documented (ts, kind, trade_id)
+    total order, so callers pass every row of the key at once: sorting
+    Arrow chunks separately would fold them in the wrong order. Same
+    apply_fill calls and emission arithmetic as the spec
+    (netting.py::replay), plumbed column-wise: one list per column in and
+    out instead of a dict per row, which dominated the stage's Python
+    time. Output is bit-identical to the spec (tests/test_pnl.py)."""
     pdf = pdf.sort_values(["ts", "kind", "trade_id"], kind="mergesort")
+    accounts = dict(accounts or {})  # insertion order = fan-out order
     ts_l = pdf["ts"].tolist()
     hub_l = pdf["hub"].tolist()
     acct_l = pdf["account"].tolist()
@@ -71,8 +91,6 @@ def _fold(pdf: pd.DataFrame) -> pd.DataFrame:
     o_rlz: list = []
     o_unrl: list = []
     o_tot: list = []
-    last_price = None
-    accounts: dict = {}  # account -> (pos, avg, realized); insertion order
     for i in range(len(ts_l)):
         if kind_l[i] == TRADE:
             acct = acct_l[i]
@@ -81,6 +99,7 @@ def _fold(pdf: pd.DataFrame) -> pd.DataFrame:
             signed = mw if side_l[i].upper() == "BUY" else -mw
             st = apply_fill(pos, avg, rlz, signed, px_l[i])
             accounts[acct] = st
+            # cold start: no tick yet -> the trade's own price (reference :130)
             px = last_price if last_price is not None else px_l[i]
             unrl = st[0] * (px - st[1])
             o_ts.append(ts_l[i]); o_acct.append(acct); o_hub.append(hub_l[i])
@@ -91,8 +110,8 @@ def _fold(pdf: pd.DataFrame) -> pd.DataFrame:
             last_price = px_l[i]
             hub = hub_l[i]
             ts = ts_l[i]
-            # fan-out: one row per account seen on this hub, in first-trade
-            # (dict insertion) order — exactly HubFold.process's iteration
+            # fan-out: one row per account seen on this hub (reference
+            # :134-137), in first-trade order like HubFold.process
             for acct, (pos, avg, rlz) in accounts.items():
                 unrl = pos * (last_price - avg)
                 o_ts.append(ts); o_acct.append(acct); o_hub.append(hub)
@@ -100,23 +119,56 @@ def _fold(pdf: pd.DataFrame) -> pd.DataFrame:
                 o_rlz.append(rlz); o_unrl.append(unrl)
                 o_tot.append(rlz + unrl)
     if not o_ts:
-        # all-price hub with no trades: zero rows. Empty typed lists
-        # would give ts a float64 dtype Arrow cannot cast to timestamp;
-        # the old all-object empty frame converts cleanly.
-        return pd.DataFrame(columns=["ts", "account", "hub", "position_mw",
-                                     "avg_price_mwh", "last_price_mwh",
-                                     "realized_pnl", "unrealized_pnl",
-                                     "total_pnl"])
-    return pd.DataFrame({
-        "ts": o_ts, "account": o_acct, "hub": o_hub, "position_mw": o_pos,
-        "avg_price_mwh": o_avg, "last_price_mwh": o_last,
-        "realized_pnl": o_rlz, "unrealized_pnl": o_unrl, "total_pnl": o_tot,
-    })
+        # e.g. an all-price hub with no trades. Empty typed lists would
+        # give ts a float64 dtype Arrow cannot cast to timestamp; the
+        # all-object empty frame converts cleanly.
+        rows = pd.DataFrame(columns=PNL_OUT_SCHEMA.fieldNames())
+    else:
+        rows = pd.DataFrame({
+            "ts": o_ts, "account": o_acct, "hub": o_hub, "position_mw": o_pos,
+            "avg_price_mwh": o_avg, "last_price_mwh": o_last,
+            "realized_pnl": o_rlz, "unrealized_pnl": o_unrl,
+            "total_pnl": o_tot,
+        })
+    return rows, last_price, accounts
+
+
+def _fold(pdf: pd.DataFrame) -> pd.DataFrame:
+    """One hub's replay from empty state (the applyInPandas body of
+    pnl_positions)."""
+    return fold_hub(pdf)[0]
 
 
 def _tick_seq(prices: DataFrame):
     return (F.col("tick_id") if "tick_id" in prices.columns
             else F.lit(0)).cast("long")
+
+
+def _trade_events(trades: DataFrame) -> DataFrame:
+    return trades.select(
+        F.col("ts"), F.col("hub"), F.col("account"), F.col("side"),
+        F.col("mw").cast("long"), F.col("price_mwh"),
+        F.col("trade_id").cast("long"), F.lit(TRADE).alias("kind"))
+
+
+def tagged_events(trades: DataFrame, prices: DataFrame) -> DataFrame:
+    """The reference's two keyed inputs as one tagged stream — the rows
+    fold_hub folds: ts, hub, account, side, mw, price_mwh, trade_id, kind.
+
+    trades: trade_id, ts, account, hub, side, mw, price_mwh
+    prices: ts, hub, price_mwh[, tick_id]
+    """
+    p = prices.select(
+        F.col("ts"), F.col("hub"),
+        F.lit(None).cast("string").alias("account"),
+        F.lit(None).cast("string").alias("side"),
+        F.lit(None).cast("long").alias("mw"),
+        F.col("price_mwh"),
+        # tick_id is the same-ts tick tie-break; price sources without
+        # one leave same-ts ticks in arbitrary order
+        _tick_seq(prices).alias("trade_id"),
+        F.lit(PRICE).alias("kind"))
+    return _trade_events(trades).unionByName(p)
 
 
 def pnl_positions(trades: DataFrame, prices: DataFrame,
@@ -128,22 +180,8 @@ def pnl_positions(trades: DataFrame, prices: DataFrame,
     """
     from kafka_flink_processing_spark.shipping import ensure_shipped
     ensure_shipped(trades.sparkSession)
-    t = trades.select(
-        F.col("ts"), F.col("hub"), F.col("account"), F.col("side"),
-        F.col("mw").cast("long"), F.col("price_mwh"),
-        F.col("trade_id").cast("long"), F.lit(TRADE).alias("kind"))
-    p = prices.select(
-        F.col("ts"), F.col("hub"),
-        F.lit(None).cast("string").alias("account"),
-        F.lit(None).cast("string").alias("side"),
-        F.lit(None).cast("long").alias("mw"),
-        F.col("price_mwh"),
-        # tick_id is the same-ts tick tie-break (r8 events fuzzer);
-        # price sources without one degrade to the old ambiguity
-        _tick_seq(prices).alias("trade_id"),
-        F.lit(PRICE).alias("kind"))
-    unioned = t.unionByName(p)
-    out = unioned.groupBy("hub").applyInPandas(_fold, PNL_OUT_SCHEMA)
+    out = (tagged_events(trades, prices).groupBy("hub")
+           .applyInPandas(_fold, PNL_OUT_SCHEMA))
     if snapshot_only:
         from kafka_flink_processing_spark.operators.windows import latest_per_key
         out = latest_per_key(out, ["hub", "account"], ["ts", "position_mw"])
@@ -205,73 +243,23 @@ def _boundary_states(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def _fold_slice(pdf: pd.DataFrame) -> pd.DataFrame:
     """Phase C (one (hub, slice)): seed the fold state from the carried-in
-    STATE rows (they sort first), then replay the slice's events exactly
-    as the single-fold path does — the same column-wise plumbing and the
-    same apply_fill/emission arithmetic as _fold (r13, guide §4.2; the
-    sliced==single bitwise test pins equality)."""
-    pdf = pdf.sort_values(["ts", "kind", "trade_id"], kind="mergesort")
-    ts_l = pdf["ts"].tolist()
-    hub_l = pdf["hub"].tolist()
-    acct_l = pdf["account"].tolist()
-    side_l = pdf["side"].tolist()
-    mw_l = pdf["mw"].tolist()
-    px_l = pdf["price_mwh"].tolist()
-    kind_l = pdf["kind"].tolist()
-    st_pos_l = pdf["st_pos"].tolist()
-    st_avg_l = pdf["st_avg"].tolist()
-    st_rlz_l = pdf["st_realized"].tolist()
-    st_px_l = pdf["st_lastpx"].tolist()
-    o_ts: list = []
-    o_acct: list = []
-    o_hub: list = []
-    o_pos: list = []
-    o_avg: list = []
-    o_last: list = []
-    o_rlz: list = []
-    o_unrl: list = []
-    o_tot: list = []
+    STATE rows, then fold the slice's events with fold_hub exactly as the
+    single-fold path does (the sliced==single bitwise test pins
+    equality). STATE rows sit at the slice's first instant, ahead of every
+    event, so seeding first is the same as folding them in order."""
+    is_state = pdf["kind"] == STATE
+    st = pdf[is_state]
     last_price = None
-    accounts: dict = {}  # account -> (pos, avg, realized); insertion order
-    for i in range(len(ts_l)):
-        k = kind_l[i]
-        if k == STATE:
-            acct = acct_l[i]
-            if isinstance(acct, str):
-                accounts[acct] = (int(st_pos_l[i]), st_avg_l[i], st_rlz_l[i])
-            elif not pd.isna(st_px_l[i]):
-                last_price = st_px_l[i]
-        elif k == TRADE:
-            acct = acct_l[i]
-            pos, avg, rlz = accounts.get(acct, (0, 0.0, 0.0))
-            mw = mw_l[i]
-            signed = mw if side_l[i].upper() == "BUY" else -mw
-            st = apply_fill(pos, avg, rlz, signed, px_l[i])
-            accounts[acct] = st
-            px = last_price if last_price is not None else px_l[i]
-            unrl = st[0] * (px - st[1])
-            o_ts.append(ts_l[i]); o_acct.append(acct); o_hub.append(hub_l[i])
-            o_pos.append(st[0]); o_avg.append(st[1]); o_last.append(px)
-            o_rlz.append(st[2]); o_unrl.append(unrl)
-            o_tot.append(st[2] + unrl)
-        else:
-            last_price = px_l[i]
-            hub = hub_l[i]
-            ts = ts_l[i]
-            for acct, (pos, avg, rlz) in accounts.items():
-                unrl = pos * (last_price - avg)
-                o_ts.append(ts); o_acct.append(acct); o_hub.append(hub)
-                o_pos.append(pos); o_avg.append(avg); o_last.append(last_price)
-                o_rlz.append(rlz); o_unrl.append(unrl)
-                o_tot.append(rlz + unrl)
-    cols = ["ts", "account", "hub", "position_mw", "avg_price_mwh",
-            "last_price_mwh", "realized_pnl", "unrealized_pnl", "total_pnl"]
-    if not o_ts:
-        return pd.DataFrame(columns=cols)
-    return pd.DataFrame({
-        "ts": o_ts, "account": o_acct, "hub": o_hub, "position_mw": o_pos,
-        "avg_price_mwh": o_avg, "last_price_mwh": o_last,
-        "realized_pnl": o_rlz, "unrealized_pnl": o_unrl, "total_pnl": o_tot,
-    })
+    accounts: dict = {}
+    for acct, pos, avg, rlz, px in zip(
+            st["account"].tolist(), st["st_pos"].tolist(),
+            st["st_avg"].tolist(), st["st_realized"].tolist(),
+            st["st_lastpx"].tolist()):
+        if isinstance(acct, str):
+            accounts[acct] = (int(pos), avg, rlz)
+        elif not pd.isna(px):
+            last_price = px
+    return fold_hub(pdf[~is_state], last_price, accounts)[0]
 
 
 def _carried_entry_price(grid: DataFrame, prices: DataFrame,
@@ -325,7 +313,7 @@ def pnl_positions_sliced(trades: DataFrame, prices: DataFrame,
     B) the boundary last-price is relational: max_by(price, ts) per
        (hub, slice), forward-filled across the slice grid with a window
        over the tiny hubs x slices table;
-    C) per (hub, slice), seed a HubFold from the carried-in STATE rows and
+    C) per (hub, slice), seed fold_hub from the carried-in STATE rows and
        replay that slice's trades+prices — the expensive part (the price ->
        every-account fan-out output) now parallelizes across slices.
 
@@ -335,22 +323,9 @@ def pnl_positions_sliced(trades: DataFrame, prices: DataFrame,
     """
     from kafka_flink_processing_spark.shipping import ensure_shipped
     ensure_shipped(trades.sparkSession)
-    day = lambda c: F.to_date(c)  # noqa: E731  — slice granularity
-    t = trades.select(
-        F.col("ts"), F.col("hub"), F.col("account"), F.col("side"),
-        F.col("mw").cast("long"), F.col("price_mwh"),
-        F.col("trade_id").cast("long"), F.lit(TRADE).alias("kind"),
-        day(F.col("ts")).alias("slice"))
-    p = prices.select(
-        F.col("ts"), F.col("hub"),
-        F.lit(None).cast("string").alias("account"),
-        F.lit(None).cast("string").alias("side"),
-        F.lit(None).cast("long").alias("mw"),
-        F.col("price_mwh"),
-        _tick_seq(prices).alias("trade_id"),
-        F.lit(PRICE).alias("kind"),
-        day(F.col("ts")).alias("slice"))
-    unioned = t.unionByName(p)
+    t = _trade_events(trades).withColumn("slice", F.to_date("ts"))
+    unioned = tagged_events(trades, prices).withColumn("slice",
+                                                       F.to_date("ts"))
 
     # the (hub, slice) grid: one marker/state anchor per fold shard, with
     # each slice's closing tick price fused into the SAME aggregate (r13,
@@ -453,7 +428,7 @@ def _trade_states(pdf: pd.DataFrame) -> pd.DataFrame:
     side_l = pdf["side"].tolist()
     mw_l = pdf["mw"].tolist()
     px_l = pdf["price_mwh"].tolist()
-    # column-wise plumbing, same apply_fill sequence (see _fold's note)
+    # column-wise plumbing, same apply_fill sequence (see fold_hub)
     o_pos: list = []
     o_avg: list = []
     o_rlz: list = []
@@ -504,10 +479,7 @@ def pnl_positions_hybrid(trades: DataFrame, prices: DataFrame) -> DataFrame:
     """
     from kafka_flink_processing_spark.shipping import ensure_shipped
     ensure_shipped(trades.sparkSession)
-    t = trades.select(
-        F.col("ts"), F.col("hub"), F.col("account"), F.col("side"),
-        F.col("mw").cast("long"), F.col("price_mwh"),
-        F.col("trade_id").cast("long"), F.lit(TRADE).alias("kind"))
+    t = _trade_events(trades)
     states = (t.groupBy("hub", "account")
                .applyInPandas(_trade_states, _TRADE_STATE_SCHEMA)).cache()
     # Eager prime: both emission passes read the state table inside one

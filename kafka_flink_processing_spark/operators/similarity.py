@@ -335,20 +335,11 @@ def _sqd_expr_sql(a: str, b: str) -> str:
             "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)")
 
 
-def _lit_vec_sql(cv) -> str:
-    """A literal double vector; the string-cast parses via the same
-    correctly-rounded double parser every engine shares, so the 6dp
-    codebook text denotes identical bits here, in the Column API, and
-    in the DuckDB oracle."""
-    return ("array(" + ", ".join(f"CAST('{float(v)!r}' AS DOUBLE)"
-                                 for v in cv) + ")")
-
-
 def _dlit(v) -> str:
     """One double as a SQL 'D'-suffixed literal — the same correctly
-    rounded text->double parse as the CAST form (identical bits), with
-    one parser token instead of a Cast(Literal) pair. Exists for the
-    codebook-sized literals (r12): expression ANALYSIS cost is
+    rounded text->double parse as CAST('<repr>' AS DOUBLE) (identical
+    bits), with one parser token instead of a Cast(Literal) pair. Exists
+    for the codebook-sized literals: expression ANALYSIS cost is
     proportional to tree size and every DataFrame method re-analyzes
     the whole plan, so the M*K*dsub codebook wants the fewest nodes
     per value."""

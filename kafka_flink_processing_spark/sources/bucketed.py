@@ -1,43 +1,23 @@
-"""Bucketed-table layout — shuffle-free co-located joins.
+"""Parquet data layouts — the parquet-native analogue of the reference
+read store's Postgres B-tree indexes on (hub, ts) (init.sql:17,28,41,...):
 
-The reference's read store relies on Postgres B-tree indexes
-(init.sql:17,28,41,...); the parquet-native analogue for JOIN locality is
-bucketing: both fact tables hash-partitioned into the same number of
-buckets on the join key at WRITE time, so every later join/aggregation on
-that key runs with ZERO exchanges (verified in tests/test_bucketing.py —
-the sort-merge join reads co-located buckets directly).
+- write_partitioned: Hive-style directory partitioning on low-cardinality
+  keys, so equality/IN filters prune whole directories at planning time.
+- zorder_column / write_zordered: Morton (Z-order) clustering over several
+  numeric columns, so parquet min/max statistics prune files for
+  multi-range box queries.
 
-When to bucket at 100 TB: tables joined repeatedly on a stable key
-(lineitem⋈orders on orderkey, events keyed by hub) where the one-time
-bucketed rewrite amortizes across many queries. Pick bucket counts so one
-bucket ~ one executor-sized task (and keep both sides' counts equal or an
-integer multiple; Spark still avoids the larger side's shuffle otherwise).
+Both are measured in tests/test_layout.py. Join co-location by bucketing
+needs no helper: DataFrameWriter.bucketBy(...).saveAsTable does it, and
+tests/test_bucketing.py checks that the bucketed join runs without an
+exchange.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
-
-
-def write_bucketed(df: DataFrame, table: str, keys: Sequence[str],
-                   n_buckets: int,
-                   sort_by: Sequence[str] | None = None) -> None:
-    """Persist df as a bucketed (and optionally per-bucket sorted) table.
-
-    sort_by on the join key additionally removes the Sort from later
-    sort-merge joins (buckets are read pre-sorted).
-    """
-    writer = (df.write.mode("overwrite").format("parquet")
-                .bucketBy(n_buckets, *keys))
-    if sort_by:
-        writer = writer.sortBy(*sort_by)
-    writer.saveAsTable(table)
-
-
-def bucketed(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
+from pyspark.sql import DataFrame
 
 
 def write_partitioned(df: DataFrame, path: str,

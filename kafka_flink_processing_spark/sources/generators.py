@@ -5,7 +5,7 @@ The reference's producers are unseeded Python loops (producer.py:44-46)
 emitting ~20 prices/s and ~2.5 trades/s (BASELINE.md). Here the same
 distributions are generated as Spark column expressions over spark.range —
 deterministic given the seed, and they scale to any row count without a
-driver-side loop. A `rate`-source streaming variant feeds live demos.
+driver-side loop.
 """
 
 from __future__ import annotations
@@ -61,15 +61,3 @@ def gen_trades(spark: SparkSession, n_rounds: int = 1000, seed: int = 43,
           .withColumn("mw", _pick(MW_CHOICES, (F.rand(seed + 4) * 1000).cast("long")))
           .withColumn("price_mwh", F.round(F.lit(45.0) + F.rand(seed + 5) * 2 - 1, 2)))
     return df.select("trade_id", "ts", "account", "hub", "side", "mw", "price_mwh")
-
-
-def rate_price_stream(spark: SparkSession, rows_per_second: int = 20) -> DataFrame:
-    """Streaming generator mirroring the producer's steady state (~20 ev/s,
-    BASELINE.md) over the built-in rate source."""
-    rate = (spark.readStream.format("rate")
-            .option("rowsPerSecond", rows_per_second).load())
-    return rate.select(
-        F.col("timestamp").alias("ts"),
-        _pick(HUBS, F.col("value")).alias("hub"),
-        F.round(F.lit(40.0) + F.rand(7) * 20.0
-                + F.sin(F.col("value") / 50.0) * 2.0, 2).alias("price_mwh"))

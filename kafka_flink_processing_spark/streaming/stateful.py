@@ -1,17 +1,23 @@
-"""Streaming stateful operators (W1/W2) via applyInPandasWithState.
+"""Streaming stateful operators (W1/W2) on both Spark state APIs:
+applyInPandasWithState (streaming_sma_forecast, streaming_pnl — what the
+production jobs run) and transformWithStateInPandas (SmaProcessor,
+PnlProcessor and the TTL variant).
 
 The reference keeps per-hub keyed state in Flink (ListState ring buffers,
 ForecastsJob.java:77-81; ValueState+MapState, PnlAndExposureJob.java:107-110)
 and processes records in arrival order with no watermarks (SURVEY.md §2.6).
-Structured Streaming equivalent: groupBy(key).applyInPandasWithState with
-explicit state schemas; records are processed in (ts, kind, trade_id) order
-WITHIN each micro-batch (the engine's documented refinement of the
-reference's arrival-order nondeterminism), and state carries across batches.
+Here each micro-batch's rows for a key are concatenated across Arrow chunks
+and folded in the documented (ts, kind, trade_id) order — the engine's
+refinement of the reference's arrival-order nondeterminism — and state
+carries across batches.
 
-The arithmetic is shared with the batch operators (same Python float fold
-for PnL via netting.HubFold; the SMA averages sum oldest->newest exactly
-like Spark's window-frame fold), so single-batch streaming output is
-bit-identical to the batch plans — asserted in tests/test_streaming.py.
+Both state APIs run the batch operators' code: PnL through
+operators/pnl.py::fold_hub seeded with the carried state, SMA through
+_sma_rows, whose averages sum oldest->newest exactly like Spark's
+window-frame fold. Streaming output is therefore bit-identical to the batch
+plans however the input is split into micro-batches and Arrow chunks —
+asserted in tests/test_streaming.py, tests/test_pnl.py and
+tools/stream_fuzz.py.
 
 Scale: state per key is O(1) for SMA (<=20 floats) and O(#accounts) for PnL;
 shuffle on the key only — identical exchange structure to the batch path and
@@ -22,7 +28,6 @@ from __future__ import annotations
 
 import json
 from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 
@@ -31,10 +36,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from kafka_flink_processing_spark.operators.netting import (
-    PRICE,
-    TRADE,
-    HubFold,
+from kafka_flink_processing_spark.operators.netting import TRADE
+from kafka_flink_processing_spark.operators.pnl import (
+    PNL_OUT_SCHEMA,
+    fold_hub,
+    tagged_events,
 )
 from kafka_flink_processing_spark.shipping import ensure_shipped
 
@@ -53,23 +59,35 @@ _SMA_OUT = T.StructType([
 _SMA_STATE = T.StructType([T.StructField("buf", T.ArrayType(T.DoubleType()))])
 
 
+def _sma_rows(hub: str, pdf: pd.DataFrame,
+              buf: list[float]) -> tuple[pd.DataFrame, list[float]]:
+    """Fold one key's micro-batch (all its Arrow chunks) through the
+    <=20-price ring buffer in (ts, seq) order; returns (rows, buf)."""
+    pdf = pdf.sort_values(["ts", "seq"], kind="mergesort")
+    px_l = pdf["price_mwh"].tolist()
+    o_sma5: list[float] = []
+    o_sma20: list[float] = []
+    for px in px_l:
+        buf.append(float(px))
+        if len(buf) > 20:          # addAndTrim, ForecastsJob.java:77-81
+            del buf[0]
+        o_sma5.append(sum(buf[-5:]) / min(len(buf), 5))
+        o_sma20.append(sum(buf) / len(buf))
+    rows = pd.DataFrame({
+        "ts": pdf["ts"].tolist(), "hub": [hub] * len(px_l),
+        "price_mwh": px_l, "sma5": o_sma5, "sma20": o_sma20,
+        "forecast_next": o_sma5,
+    }, columns=_SMA_OUT.fieldNames())
+    return rows, buf
+
+
 def _sma_fn(key: tuple, pdfs: Iterator[pd.DataFrame],
             state: GroupState) -> Iterator[pd.DataFrame]:
     buf: list[float] = list(state.get[0]) if state.exists else []
-    hub = key[0]
-    out: list[dict[str, Any]] = []
-    for pdf in pdfs:
-        pdf = pdf.sort_values(["ts", "seq"], kind="mergesort")
-        for ts, px in zip(pdf["ts"], pdf["price_mwh"]):
-            buf.append(float(px))
-            if len(buf) > 20:          # addAndTrim, ForecastsJob.java:77-81
-                del buf[0]
-            sma5 = sum(buf[-5:]) / min(len(buf), 5)
-            sma20 = sum(buf) / len(buf)
-            out.append({"ts": ts, "hub": hub, "price_mwh": px, "sma5": sma5,
-                        "sma20": sma20, "forecast_next": sma5})
+    rows, buf = _sma_rows(key[0], pd.concat(list(pdfs), ignore_index=True),
+                          buf)
     state.update((buf,))
-    yield pd.DataFrame(out, columns=[f.name for f in _SMA_OUT.fields])
+    yield rows
 
 
 def streaming_sma_forecast(prices: DataFrame,
@@ -92,17 +110,6 @@ def streaming_sma_forecast(prices: DataFrame,
 # W2 streaming: PnL/position fold (reference PnlAndExposureJob.java:106-144)
 # ---------------------------------------------------------------------------
 
-_PNL_OUT = T.StructType([
-    T.StructField("ts", T.TimestampType()),
-    T.StructField("account", T.StringType()),
-    T.StructField("hub", T.StringType()),
-    T.StructField("position_mw", T.IntegerType()),
-    T.StructField("avg_price_mwh", T.DoubleType()),
-    T.StructField("last_price_mwh", T.DoubleType()),
-    T.StructField("realized_pnl", T.DoubleType()),
-    T.StructField("unrealized_pnl", T.DoubleType()),
-    T.StructField("total_pnl", T.DoubleType()),
-])
 # accounts dict serialized to JSON: applyInPandasWithState state schemas are
 # flat structs; #accounts per hub is small and bounded (reference MapState)
 _PNL_STATE = T.StructType([
@@ -113,19 +120,14 @@ _PNL_STATE = T.StructType([
 
 def _pnl_fn(key: tuple, pdfs: Iterator[pd.DataFrame],
             state: GroupState) -> Iterator[pd.DataFrame]:
+    last_price, accounts = None, None
     if state.exists:
         last_price, accounts_json = state.get
-        fold = HubFold(last_price, json.loads(accounts_json))
-    else:
-        fold = HubFold()
-    out: list[dict[str, Any]] = []
-    for pdf in pdfs:
-        pdf = pdf.sort_values(["ts", "kind", "trade_id"], kind="mergesort")
-        for rec in pdf.to_dict("records"):
-            out.extend(fold.process(rec))
-    last_price, accounts = fold.snapshot()
+        accounts = json.loads(accounts_json)
+    rows, last_price, accounts = fold_hub(
+        pd.concat(list(pdfs), ignore_index=True), last_price, accounts)
     state.update((last_price, json.dumps(accounts, sort_keys=True)))
-    yield pd.DataFrame(out, columns=[f.name for f in _PNL_OUT.fields])
+    yield rows
 
 
 def streaming_pnl(trades: DataFrame, prices: DataFrame) -> DataFrame:
@@ -135,30 +137,15 @@ def streaming_pnl(trades: DataFrame, prices: DataFrame) -> DataFrame:
     prices: (ts, hub, price_mwh) stream
     """
     ensure_shipped(trades.sparkSession)
-    return (_tagged_union(trades, prices)
+    return (tagged_events(trades, prices)
             .groupBy("hub")
-            .applyInPandasWithState(_pnl_fn, _PNL_OUT, _PNL_STATE,
+            .applyInPandasWithState(_pnl_fn, PNL_OUT_SCHEMA, _PNL_STATE,
                                     "append", GroupStateTimeout.NoTimeout))
 
 
 # ---------------------------------------------------------------------------
 # W2 streaming on the Spark-4 primitive: transformWithStateInPandas
 # ---------------------------------------------------------------------------
-
-def _tagged_union(trades: DataFrame, prices: DataFrame) -> DataFrame:
-    t = trades.select(
-        "ts", "hub", "account", "side", F.col("mw").cast("long").alias("mw"),
-        "price_mwh", F.col("trade_id").cast("long").alias("trade_id"),
-        F.lit(TRADE).alias("kind"))
-    tick_seq = (F.col("tick_id") if "tick_id" in prices.columns
-                else F.lit(0)).cast("long")
-    p = prices.select(
-        "ts", "hub", F.lit(None).cast("string").alias("account"),
-        F.lit(None).cast("string").alias("side"),
-        F.lit(None).cast("long").alias("mw"), "price_mwh",
-        tick_seq.alias("trade_id"), F.lit(PRICE).alias("kind"))
-    return t.unionByName(p)
-
 
 def book_puts(before: dict[str, tuple[int, float, float]],
               after: dict) -> dict[str, tuple[int, float, float]]:
@@ -192,9 +179,9 @@ class PnlProcessor:
     with the account map crammed into a JSON string. At scale that's the
     difference that matters: RocksDB updates only the touched accounts
     per micro-batch (point puts) rather than rewriting one ever-growing
-    blob per hub. The fold arithmetic is the SAME HubFold shared
-    with the batch operator and the spec replay, so output parity with
-    streaming_pnl and the batch plan is structural. Book-expiry TTL for
+    blob per hub. The fold is the batch operator's fold_hub, seeded
+    with the carried state, so output parity with streaming_pnl and the
+    batch plan is structural. Book-expiry TTL for
     account churn lives in the PnlProcessorTtl subclass (event-time
     timers evict long-flat accounts); this base processor matches the
     reference exactly — Flink never evicts either.
@@ -211,35 +198,27 @@ class PnlProcessor:
             "pos long, avg double, realized double")
 
     def _fold_batch(self, rows: Iterator[pd.DataFrame]):
-        """Shared micro-batch fold: restore state, process the batch in
-        the documented total order, write back the touched state.
-        Returns (sorted batch pdf, emitted rows, post-batch book) so
-        subclasses (TTL) can add bookkeeping without re-folding."""
+        """Shared micro-batch fold: restore state, fold all of the key's
+        Arrow chunks at once with fold_hub, write back the touched state.
+        Returns (batch pdf, emitted rows, post-batch book) so subclasses
+        (TTL) can add bookkeeping without re-folding."""
         last = self._last.get()
         accounts: dict[str, tuple[int, float, float]] = {}
         if self._accounts.exists():
             for k, v in self._accounts.iterator():
                 accounts[k[0]] = (int(v[0]), float(v[1]), float(v[2]))
-        before = dict(accounts)
-        fold = HubFold(None if last is None else float(last[0]), accounts)
-        # ONE global sort over the micro-batch's rows for this key (the
-        # documented total order), independent of Arrow chunking
         pdf = pd.concat(list(rows), ignore_index=True)
-        pdf = pdf.sort_values(["ts", "kind", "trade_id"], kind="mergesort")
-        out: list[dict[str, Any]] = []
-        for rec in pdf.to_dict("records"):
-            out.extend(fold.process(rec))
-        last_price, accounts = fold.snapshot()
+        out, last_price, book = fold_hub(
+            pdf, None if last is None else float(last[0]), accounts)
         if last_price is not None:
             self._last.update((float(last_price),))
-        for acct, st in book_puts(before, accounts).items():
+        for acct, st in book_puts(accounts, book).items():
             self._accounts.updateValue((acct,), st)
-        return pdf, out, accounts
+        return pdf, out, book
 
     def handleInputRows(self, key: tuple, rows: Iterator[pd.DataFrame],
                         timer_values) -> Iterator[pd.DataFrame]:
-        _pdf, out, _book = self._fold_batch(rows)
-        yield pd.DataFrame(out, columns=[f.name for f in _PNL_OUT.fields])
+        yield self._fold_batch(rows)[1]
 
     def handleInitialState(self, key, initialState, timer_values) -> None:
         pass
@@ -283,7 +262,8 @@ class PnlProcessorTtl(PnlProcessor):
     def handleInputRows(self, key: tuple, rows: Iterator[pd.DataFrame],
                         timer_values) -> Iterator[pd.DataFrame]:
         pdf, out, book = self._fold_batch(rows)
-        trades = pdf[pdf["kind"] == TRADE]
+        # in ts order, so each account's last put is its latest trade
+        trades = pdf[pdf["kind"] == TRADE].sort_values("ts", kind="mergesort")
         flat_at: dict[str, int] = {}
         for acct, ts in zip(trades["account"], trades["ts"]):
             ms = int(pd.Timestamp(ts).value // 1_000_000)
@@ -293,7 +273,7 @@ class PnlProcessorTtl(PnlProcessor):
                 flat_at[acct] = ms
         for ms in sorted(set(flat_at.values())):
             self._handle.registerTimer(ms + self._ttl_ms)
-        yield pd.DataFrame(out, columns=[f.name for f in _PNL_OUT.fields])
+        yield out
 
     def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
         # parameter names MUST match the ABC's — the runtime invokes this
@@ -332,10 +312,10 @@ def streaming_pnl_tws_ttl(trades: DataFrame, prices: DataFrame,
                     (PnlProcessorTtl, StatefulProcessor), {})
     ensure_shipped(trades.sparkSession)
     ensure_tws_ready(trades.sparkSession)
-    union = _tagged_union(trades, prices).withWatermark(
+    union = tagged_events(trades, prices).withWatermark(
         "ts", watermark_delay)
     return (union.groupBy("hub")
-            .transformWithStateInPandas(proc_cls(ttl_ms), _PNL_OUT,
+            .transformWithStateInPandas(proc_cls(ttl_ms), PNL_OUT_SCHEMA,
                                         "append", "eventtime"))
 
 
@@ -346,9 +326,9 @@ class SmaProcessor:
     ring buffer is a REAL ListState, the exact Flink primitive the
     reference uses (applyInPandasWithState's flat struct forces an
     array-in-a-column encoding instead). The buffer is bounded (20
-    doubles), so the per-batch rewrite is O(1) per hub; the fold is the
-    same append-trim-average arithmetic as _sma_fn, so output parity
-    with streaming_sma_forecast and the batch window plan is structural.
+    doubles), so the per-batch rewrite is O(1) per hub; the fold is
+    _sma_rows, the same as _sma_fn's, so output parity with
+    streaming_sma_forecast and the batch window plan is structural.
 
     Declared lazily like PnlProcessor (no Spark-4-only imports at module
     import time)."""
@@ -360,25 +340,14 @@ class SmaProcessor:
                         timer_values) -> Iterator[pd.DataFrame]:
         buf: list[float] = ([float(r[0]) for r in self._buf.get()]
                             if self._buf.exists() else [])
-        hub = key[0]
-        pdf = pd.concat(list(rows), ignore_index=True)
-        pdf = pdf.sort_values(["ts", "seq"], kind="mergesort")
-        out: list[dict[str, Any]] = []
-        for ts, px in zip(pdf["ts"], pdf["price_mwh"]):
-            buf.append(float(px))
-            if len(buf) > 20:          # addAndTrim, ForecastsJob.java:77-81
-                del buf[0]
-            sma5 = sum(buf[-5:]) / min(len(buf), 5)
-            sma20 = sum(buf) / len(buf)
-            out.append({"ts": ts, "hub": hub, "price_mwh": px,
-                        "sma5": sma5, "sma20": sma20,
-                        "forecast_next": sma5})
+        out, buf = _sma_rows(key[0], pd.concat(list(rows), ignore_index=True),
+                             buf)
         # typed put (the r8 state-boundary lesson): every element coerced
         # to the declared double before crossing into the JVM row encoder
         self._buf.clear()
         if buf:
             self._buf.put([(float(v),) for v in buf])
-        yield pd.DataFrame(out, columns=[f.name for f in _SMA_OUT.fields])
+        yield out
 
     def handleInitialState(self, key, initialState, timer_values) -> None:
         pass
@@ -435,7 +404,7 @@ def streaming_pnl_tws(trades: DataFrame, prices: DataFrame) -> DataFrame:
     # sc.pythonExec at creation, and the tws driver worker needs the
     # wrapper for protobuf + this package (see session.ensure_tws_ready)
     ensure_tws_ready(trades.sparkSession)
-    return (_tagged_union(trades, prices)
+    return (tagged_events(trades, prices)
             .groupBy("hub")
-            .transformWithStateInPandas(proc_cls(), _PNL_OUT,
+            .transformWithStateInPandas(proc_cls(), PNL_OUT_SCHEMA,
                                         "append", "none"))

@@ -8,13 +8,21 @@
 - replay equality: the Spark applyInPandas fold must equal the straight-line
   Python spec fold row-for-row under the documented total order, on both a
   hand fixture and the sf0.001 events derivation
+- carried state: fold_hub over a prefix, then over the rest seeded with the
+  prefix's end state, equals one spec replay over everything
+- Arrow chunking: the streaming folds equal the batch plans when one key's
+  micro-batch spans several out-of-order Arrow chunks
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import json
 import math
+from collections import Counter
 
+import pandas as pd
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -25,7 +33,7 @@ from kafka_flink_processing_spark.operators.netting import (
     replay,
     sort_key,
 )
-from kafka_flink_processing_spark.operators.pnl import pnl_positions
+from kafka_flink_processing_spark.operators.pnl import fold_hub, pnl_positions
 
 # ---------------------------------------------------------------------------
 # netting core properties
@@ -249,9 +257,6 @@ def test_sliced_fold_boundary_fixture():
                                                           45.0, 50.0)
 
 
-import pytest
-
-
 @pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001",
                                     "/root/testdata/sf0.01"])
 def test_hybrid_fold_bitwise_equals_single_fold(spark, sf_dir):
@@ -273,3 +278,139 @@ def test_hybrid_fold_bitwise_equals_single_fold(spark, sf_dir):
     assert len(single) == len(hybrid)
     key = lambda r: tuple(sorted(r.asDict().items()))  # noqa: E731
     assert {key(r) for r in single} == {key(r) for r in hybrid}
+
+
+# ---------------------------------------------------------------------------
+# carried-state contract of fold_hub (the sliced fold, _pnl_fn and
+# PnlProcessor all seed it with the state a previous fold ended in)
+# ---------------------------------------------------------------------------
+
+@st.composite
+def _hub_events(draw):
+    """One hub's events: an optional price-only prefix, then trades and
+    ticks on a coarse clock (same-ts ties within and across kinds), with
+    lot sizes that make positions close and flip."""
+    n_lead = draw(st.integers(0, 3))
+    events = [dict(kind=PRICE, ts=_t(i), hub="H", trade_id=i,
+                   price_mwh=draw(st.floats(20.0, 80.0)))
+              for i in range(n_lead)]
+    body = draw(st.lists(st.tuples(
+        st.booleans(), st.integers(0, 6), st.sampled_from(["A", "B", "C"]),
+        st.sampled_from(["BUY", "SELL"]), st.sampled_from([5, 10, 25, 50]),
+        st.floats(20.0, 80.0)), max_size=40))
+    for i, (is_trade, dt_s, acct, side, mw, px) in enumerate(body):
+        ts = _t(n_lead + dt_s)
+        if is_trade:
+            events.append(dict(kind=TRADE, ts=ts, hub="H", trade_id=i,
+                               account=acct, side=side, mw=mw, price_mwh=px))
+        else:
+            events.append(dict(kind=PRICE, ts=ts, hub="H",
+                               trade_id=n_lead + i, price_mwh=px))
+    return events
+
+
+def _frame(events):
+    cols = ["ts", "hub", "account", "side", "mw", "price_mwh", "trade_id",
+            "kind"]
+    return pd.DataFrame([{c: e.get(c) for c in cols} for e in events],
+                        columns=cols)
+
+
+def _bits(row):
+    # positions compare as ints (the Arrow cast), floats bit for bit
+    return (pd.Timestamp(row["ts"]), row["account"], row["hub"],
+            int(row["position_mw"])) + tuple(
+        float(row[c]).hex() for c in ("avg_price_mwh", "last_price_mwh",
+                                      "realized_pnl", "unrealized_pnl",
+                                      "total_pnl"))
+
+
+@settings(max_examples=200, deadline=None)
+@given(_hub_events(), st.data())
+def test_fold_hub_seeded_with_prefix_state_equals_spec(events, data):
+    ordered = sorted(events, key=sort_key)
+    cut = data.draw(st.integers(0, len(ordered)), label="cut")
+    # each side arrives shuffled: fold_hub must impose the total order
+    head = data.draw(st.permutations(ordered[:cut]), label="head")
+    tail = data.draw(st.permutations(ordered[cut:]), label="tail")
+    rows1, last_price, accounts = fold_hub(_frame(head))
+    rows2, _, _ = fold_hub(_frame(tail), last_price, accounts)
+    got = [_bits(r) for r in rows1.to_dict("records")
+           + rows2.to_dict("records")]
+    assert got == [_bits(r) for r in replay(ordered)]
+
+
+# ---------------------------------------------------------------------------
+# streaming folds vs batch when a key's micro-batch spans Arrow chunks
+# ---------------------------------------------------------------------------
+
+_EVENT_SCHEMA = ("kind string, ts timestamp, hub string, tick_id long, "
+                 "trade_id long, account string, side string, mw int, "
+                 "price_mwh double")
+
+
+def _bag(df):
+    return Counter(tuple(sorted(r.asDict().items())) for r in df.collect())
+
+
+def test_streaming_folds_equal_batch_across_arrow_chunks(spark, tmp_path):
+    """One hub's 12 ticks and 12 trades, written in reverse ts order and
+    cut into 3-row Arrow chunks: the streaming SMA and PnL folds must
+    fold the whole micro-batch in ts order, not each chunk on its own."""
+    from kafka_flink_processing_spark.operators.windows import (
+        rolling_sma_forecast,
+    )
+    from kafka_flink_processing_spark.streaming.sinks import (
+        run_available_now,
+    )
+    from kafka_flink_processing_spark.streaming.stateful import (
+        streaming_pnl,
+        streaming_sma_forecast,
+    )
+
+    events = []
+    for i in range(12):
+        events.append(dict(kind="price", ts=_t(2 * i).isoformat(), hub="H1",
+                           tick_id=i, price_mwh=40.0 + 3.5 * (i % 5)))
+        events.append(dict(kind="trade", ts=_t(2 * i + 1).isoformat(),
+                           hub="H1", trade_id=i, account=f"A{i % 3}",
+                           side="BUY" if i % 4 < 2 else "SELL",
+                           mw=(5, 10, 25)[i % 3], price_mwh=41.0 + i))
+    src = tmp_path / "src"
+    src.mkdir()
+    with open(src / "events.json", "w") as f:
+        for e in sorted(events, key=lambda e: e["ts"], reverse=True):
+            f.write(json.dumps(e) + "\n")
+
+    def split(ev):
+        trades = ev.filter("kind = 'trade'").select(
+            "trade_id", "ts", "account", "hub", "side", "mw", "price_mwh")
+        prices = ev.filter("kind = 'price'").select(
+            "ts", "hub", "price_mwh", "tick_id")
+        return trades, prices
+
+    def stream():
+        return spark.readStream.schema(_EVENT_SCHEMA).json(str(src))
+
+    trades, prices = split(spark.read.schema(_EVENT_SCHEMA).json(str(src)))
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        run_available_now(
+            streaming_sma_forecast(split(stream())[1], seq_col="tick_id"),
+            "chunked_sma_out", str(tmp_path / "ck_sma"))
+        s_trades, s_prices = split(stream())
+        run_available_now(streaming_pnl(s_trades, s_prices),
+                          "chunked_pnl_out", str(tmp_path / "ck_pnl"))
+        want_sma = rolling_sma_forecast(
+            prices.withColumnRenamed("tick_id", "seq"), ["hub"],
+            ["ts", "seq"], "price_mwh").select(
+            "ts", "hub", "price_mwh", "sma5", "sma20", "forecast_next")
+        want_pnl = pnl_positions(trades, prices)
+        assert (_bag(spark.table("chunked_sma_out"))
+                == _bag(want_sma))
+        assert (_bag(spark.table("chunked_pnl_out"))
+                == _bag(want_pnl))
+    finally:
+        spark.conf.set(key, prev)

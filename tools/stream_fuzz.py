@@ -65,6 +65,11 @@ DOC-corpora engines (edge_ascii/random_ascii/zipf_dup/unicode):
 NaN-bearing corpora (events_extreme) compare via a NaN sentinel: NaN !=
 NaN would fail set equality even when both engines emit the same rows.
 
+The event-corpus drains run with 3-row Arrow chunks
+(spark.sql.execution.arrow.maxRecordsPerBatch), so one key's micro-batch
+reaches the Python folds as several chunks: a fold must order the whole
+micro-batch, not each chunk.
+
 Usage: python tools/stream_fuzz.py [--seed N] [--corpus NAME ...]
                                    [--engines pnl,sma,inc_dedup,...]
 """
@@ -126,6 +131,9 @@ DOC_CORPORA = ("edge_ascii", "random_ascii", "zipf_dup", "unicode")
 # pins the clean-tape behavior.)
 _TTL_NEVER_MS = 10 ** 12  # ~31 years of event time
 
+# Arrow chunk size for the event-corpus drains (see run_corpus)
+_ARROW_CHUNK_ROWS = 3
+
 
 def _norm(v):
     # NaN is the one value where exact row equality needs help: Python's
@@ -186,27 +194,33 @@ def _drain(spark, df: DataFrame, name: str, ckpt: str,
     return _rowbag(rows) if output_mode == "append" else _rowset(rows)
 
 
-class _rocksdb_provider:
-    """transformWithState needs the RocksDB store; restore the session's
-    previous provider afterwards so the applyInPandasWithState drains
-    keep running on whatever the session had (mirrors the test fixture)."""
+class _session_conf:
+    """Set one session conf for a block, then restore the previous value
+    (or unset it), so later drains keep whatever the session had."""
 
-    def __init__(self, spark):
-        self.spark = spark
+    def __init__(self, spark, key: str, value: str):
+        self.spark, self.key, self.value = spark, key, value
 
     def __enter__(self):
         try:
-            self.prev = self.spark.conf.get(_PROVIDER_KEY)
+            self.prev = self.spark.conf.get(self.key)
         except Exception:
             self.prev = None
-        self.spark.conf.set(_PROVIDER_KEY, _ROCKSDB)
+        self.spark.conf.set(self.key, self.value)
 
     def __exit__(self, *exc):
         if self.prev is None:
-            self.spark.conf.unset(_PROVIDER_KEY)
+            self.spark.conf.unset(self.key)
         else:
-            self.spark.conf.set(_PROVIDER_KEY, self.prev)
+            self.spark.conf.set(self.key, self.prev)
         return False
+
+
+def _rocksdb_provider(spark):
+    """transformWithState needs the RocksDB store; the
+    applyInPandasWithState drains keep the session's own provider
+    (mirrors the test fixture)."""
+    return _session_conf(spark, _PROVIDER_KEY, _ROCKSDB)
 
 
 # ---------------------------------------------------------------------------
@@ -215,8 +229,9 @@ class _rocksdb_provider:
 # only ever tested on one clean 3-account tape. A finite TTL cannot be
 # parity-checked against the batch engine (eviction diverges BY DESIGN),
 # so the oracle is a deterministic pure-Python replay of PnlProcessorTtl
-# over the exact staged micro-batch composition, built on the same shared
-# HubFold the engine and the batch operator use. The three engine-timing
+# over the exact staged micro-batch composition, built on the spec fold
+# netting.HubFold — an implementation independent of the engine's
+# operators/pnl.py::fold_hub. The three engine-timing
 # facts it encodes were pinned by direct probes against the real engine
 # (Spark 4.1, availableNow, maxFilesPerTrigger=1, delay 0s):
 #   1. watermark for batch k = floor-ms(max event ts over batches < k)
@@ -240,7 +255,7 @@ def _to_ms(ts) -> int:
 
 def _tagged_records(t_rows, p_rows) -> list[dict]:
     """Collected trades/prices rows -> the tagged-union record shape
-    HubFold folds (streaming/stateful.py::_tagged_union)."""
+    HubFold folds (operators/pnl.py::tagged_events)."""
     from kafka_flink_processing_spark.operators.netting import PRICE, TRADE
 
     recs = []
@@ -279,7 +294,7 @@ def _pnl_ttl_spec(batches: list[list[dict] | None],
                   ttl_ms: int) -> list[dict]:
     """Deterministic replay of PnlProcessorTtl (streaming/stateful.py)
     over explicit micro-batches: per batch, per hub — fold rows in the
-    documented (ts, kind, trade_id) total order via the SHARED HubFold,
+    documented (ts, kind, trade_id) total order via the spec HubFold,
     record last-trade ms, register flat-account timers at last-flat-ms +
     ttl; then fire every timer whose expiry <= the batch's watermark and
     sweep-evict still-flat accounts with last_trade + ttl <= expiry
@@ -375,6 +390,16 @@ def _corpus_ttl_ms(t_rows, p_rows) -> int:
 
 def run_corpus(spark, cname: str, seed: int, engines: list[str],
                tag: str) -> list[tuple[str, bool]]:
+    # tiny Arrow chunks: one key's micro-batch reaches the Python folds
+    # as several chunks, so a fold that orders each chunk on its own
+    # fails parity
+    with _session_conf(spark, "spark.sql.execution.arrow.maxRecordsPerBatch",
+                       str(_ARROW_CHUNK_ROWS)):
+        return _run_corpus(spark, cname, seed, engines, tag)
+
+
+def _run_corpus(spark, cname: str, seed: int, engines: list[str],
+                tag: str) -> list[tuple[str, bool]]:
     rng = random.Random(seed)
     rows = EVENT_CORPORA[cname](rng)
     work = tempfile.mkdtemp(prefix=f"kfps_sfz_{cname}_")
