@@ -4,24 +4,22 @@ The reference computes per-account positions and PnL in a
 KeyedCoProcessFunction keyed by hub (PnlAndExposureJob.java:50-51,106-144).
 The path-dependent netting (realized PnL depends on the running position's
 sign) is not expressible in SQL window algebra (SURVEY.md §4.2), so this is
-the one operator that runs Python: an Arrow-batched per-hub ordered fold via
-applyInPandas, sharing its core (operators/netting.py) with the executable
-spec.
+the one operator that runs Python. Two batch forms, bit-identical by test:
 
-Scale design:
-- one hash shuffle on hub (exactly Flink's keyBy), fold parallelism = #hubs;
-  per-hub state is O(#accounts on that hub), rows stream through pandas in
-  Arrow batches.
-- the price->every-account fan-out (reference :134-137) makes output
-  superlinear (~ticks x accounts). `snapshot_only=True` gives the sane
-  100 TB variant: only each account's final row per hub.
-- input order within a group is NOT guaranteed by applyInPandas; the fold
-  sorts each group by the documented total order itself.
+- pnl_positions: the reference's shape — one hash shuffle on hub (exactly
+  Flink's keyBy), then an Arrow-batched per-hub ordered fold via
+  applyInPandas; fold parallelism = #hubs, per-hub state is O(#accounts
+  on that hub). Input order within a group is NOT guaranteed by
+  applyInPandas; fold_hub sorts each group by the documented total order.
+- pnl_positions_hybrid: the scale path with no per-hub serial unit —
+  Python folds only the sparse trade stream per (hub, account), and the
+  price -> every-account fan-out (reference :134-137, superlinear output
+  ~ticks x accounts) is JVM window algebra.
 
-fold_hub is the one emission loop: the serial fold, the sliced fold's
-phase C and both streaming state APIs (streaming/stateful.py) call it.
-netting.replay stays a separate, dict-per-row implementation of the same
-semantics — the executable spec the differential tests compare against.
+fold_hub is the one emission loop: pnl_positions and both streaming state
+APIs (streaming/stateful.py) call it. netting.replay stays a separate,
+dict-per-row implementation of the same semantics — the executable spec the
+differential tests compare against.
 """
 
 from __future__ import annotations
@@ -37,11 +35,6 @@ from kafka_flink_processing_spark.operators.netting import (
     TRADE,
     apply_fill,
 )
-
-# kind tag for slice-boundary marker/state rows: sorts BEFORE trades (0) and
-# prices (1) at the boundary timestamp, so entry state is applied ahead of
-# any event that falls exactly on a slice boundary.
-STATE = -1
 
 # positions_pnl rows, as every fold (batch and streaming) emits them
 PNL_OUT_SCHEMA = T.StructType([
@@ -171,8 +164,7 @@ def tagged_events(trades: DataFrame, prices: DataFrame) -> DataFrame:
     return _trade_events(trades).unionByName(p)
 
 
-def pnl_positions(trades: DataFrame, prices: DataFrame,
-                  snapshot_only: bool = False) -> DataFrame:
+def pnl_positions(trades: DataFrame, prices: DataFrame) -> DataFrame:
     """Replay trades+prices into positions_pnl rows (reference semantics).
 
     trades: trade_id, ts, account, hub, side, mw, price_mwh
@@ -180,228 +172,31 @@ def pnl_positions(trades: DataFrame, prices: DataFrame,
     """
     from kafka_flink_processing_spark.shipping import ensure_shipped
     ensure_shipped(trades.sparkSession)
-    out = (tagged_events(trades, prices).groupBy("hub")
-           .applyInPandas(_fold, PNL_OUT_SCHEMA))
-    if snapshot_only:
-        from kafka_flink_processing_spark.operators.windows import latest_per_key
-        out = latest_per_key(out, ["hub", "account"], ["ts", "position_mw"])
-    return out
-
-
-_STATE_SCHEMA = ("hub string, slice date, account string, st_pos long, "
-                 "st_avg double, st_realized double")
-
-
-def _boundary_states(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Phase A (one (hub, account)): fold ONLY this account's trades in
-    total order; at each slice-boundary marker emit the state as of that
-    instant (only once the account has traded — an account unseen at a
-    boundary carries no state, matching the single fold's lazy dict).
-    Prices never enter here — position/avg/realized change only on trades.
-    Keyed by (hub, account), NOT hub: account states are independent (the
-    only hub-global state, last_price, is derived relationally in phase B),
-    so the sequential pass parallelizes across accounts too instead of
-    serializing each hub's full trade stream through one task.
-
-    Column-wise plumbing (r13, guide §4.2 — the same treatment _fold got
-    in r12): the per-record work was to_dict('records') on the way in and
-    one dict per emitted row on the way out; the state transitions are
-    the SAME apply_fill calls on the same values in the same order, so
-    the output is bit-identical (the sliced==single bitwise test pins
-    it)."""
-    pdf = pdf.sort_values(["ts", "kind", "trade_id"], kind="mergesort")
-    kind_l = pdf["kind"].tolist()
-    side_l = pdf["side"].tolist()
-    mw_l = pdf["mw"].tolist()
-    px_l = pdf["price_mwh"].tolist()
-    slice_l = pdf["slice"].tolist()
-    state = None
-    o_slice: list = []
-    o_pos: list = []
-    o_avg: list = []
-    o_rlz: list = []
-    for i in range(len(kind_l)):
-        if kind_l[i] == STATE:  # marker: snapshot entry state for its slice
-            if state is not None:
-                o_slice.append(slice_l[i])
-                o_pos.append(int(state[0]))
-                o_avg.append(state[1])
-                o_rlz.append(state[2])
-        else:
-            a = state if state is not None else (0, 0.0, 0.0)
-            signed = mw_l[i] if side_l[i].upper() == "BUY" else -mw_l[i]
-            state = apply_fill(a[0], a[1], a[2], signed, px_l[i])
-    cols = ["hub", "slice", "account", "st_pos", "st_avg", "st_realized"]
-    if not o_slice:
-        return pd.DataFrame(columns=cols)
-    return pd.DataFrame({
-        "hub": pdf["hub"].iat[0], "slice": o_slice,
-        "account": pdf["account"].iat[0], "st_pos": o_pos,
-        "st_avg": o_avg, "st_realized": o_rlz,
-    }, columns=cols)
-
-
-def _fold_slice(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Phase C (one (hub, slice)): seed the fold state from the carried-in
-    STATE rows, then fold the slice's events with fold_hub exactly as the
-    single-fold path does (the sliced==single bitwise test pins
-    equality). STATE rows sit at the slice's first instant, ahead of every
-    event, so seeding first is the same as folding them in order."""
-    is_state = pdf["kind"] == STATE
-    st = pdf[is_state]
-    last_price = None
-    accounts: dict = {}
-    for acct, pos, avg, rlz, px in zip(
-            st["account"].tolist(), st["st_pos"].tolist(),
-            st["st_avg"].tolist(), st["st_realized"].tolist(),
-            st["st_lastpx"].tolist()):
-        if isinstance(acct, str):
-            accounts[acct] = (int(pos), avg, rlz)
-        elif not pd.isna(px):
-            last_price = px
-    return fold_hub(pdf[~is_state], last_price, accounts)[0]
+    return (tagged_events(trades, prices).groupBy("hub")
+            .applyInPandas(_fold, PNL_OUT_SCHEMA))
 
 
 def _carried_entry_price(grid: DataFrame, prices: DataFrame,
-                         day_col: str,
-                         day_close: DataFrame | None = None) -> DataFrame:
+                         day_col: str) -> DataFrame:
     """Per-(hub, day) strictly-before price carry: each day's closing tick
-    price (max_by over tick ts), forward-filled across the hub's day grid
-    EXCLUDING the current day. Shared by the sliced fold's phase B and the
-    hybrid replay's pass 1 — both must encode identical carry semantics to
-    stay bit-equal to the single fold, so the construction lives once.
+    price (max_by over tick (ts, seq)), forward-filled across the hub's day
+    grid EXCLUDING the current day — the last price a day's first event
+    sees.
 
-    grid: (hub, <day_col>) rows; prices: (ts, hub, price_mwh). Returns
-    (hub, <day_col>, entry_px) with entry_px null before the first tick.
-
-    day_close: optional precomputed (hub, <day_col>, day_close_px) relation
-    (r13, guide §2.4 shared-exchange posture: the sliced fold's grid
-    aggregate passes over the exact rows this helper would re-scan, so it
-    fuses max_by into that aggregate and hands the result in — the carry
-    window below stays the single shared definition either way; `prices`
-    is ignored when day_close is given). A caller-supplied day_close must
-    be max_by(price, (ts, tick-seq)) over kind=PRICE rows per (hub, day),
-    null where the day has no tick — the fused aggregate in
-    pnl_positions_sliced and the derivation below are the same expression."""
-    if day_close is None:
-        day_close = (prices.groupBy("hub", F.to_date("ts").alias(day_col))
-                     .agg(F.max_by("price_mwh",
-                                   F.struct("ts", _tick_seq(prices)
-                                            .alias("__seq")))
-                          .alias("day_close_px")))
+    grid: (hub, <day_col>) rows; prices: (ts, hub, price_mwh[, tick_id]).
+    Returns (hub, <day_col>, entry_px) with entry_px null before the first
+    tick."""
+    day_close = (prices.groupBy("hub", F.to_date("ts").alias(day_col))
+                 .agg(F.max_by("price_mwh",
+                               F.struct("ts", _tick_seq(prices)
+                                        .alias("__seq")))
+                      .alias("day_close_px")))
     w_ff = (Window.partitionBy("hub").orderBy(day_col)
             .rowsBetween(Window.unboundedPreceding, -1))
     return (grid.join(day_close, ["hub", day_col], "left")
             .select("hub", day_col,
                     F.last("day_close_px", ignorenulls=True).over(w_ff)
                      .alias("entry_px")))
-
-
-def pnl_positions_sliced(trades: DataFrame, prices: DataFrame,
-                         snapshot_only: bool = False) -> DataFrame:
-    """Time-sliced W2 replay: bit-identical to pnl_positions, but the fold
-    is sharded by (hub, day-slice) with carried-in state, so a hot hub no
-    longer serializes one task (fold parallelism = hubs x days instead of
-    hubs — the reference's keyBy bound).
-
-    Three-phase plan, one sequential pass only over the SPARSE stream:
-    A) per (hub, account), fold that account's trades + boundary markers in
-       total order; emit its (pos, avg, realized) at every slice boundary
-       (_boundary_states — position state changes only on trades, and
-       account states are independent, so this pass is parallel in
-       hubs x accounts);
-    B) the boundary last-price is relational: max_by(price, ts) per
-       (hub, slice), forward-filled across the slice grid with a window
-       over the tiny hubs x slices table;
-    C) per (hub, slice), seed fold_hub from the carried-in STATE rows and
-       replay that slice's trades+prices — the expensive part (the price ->
-       every-account fan-out output) now parallelizes across slices.
-
-    State crosses the Arrow boundary as float64 round-trips (exact), so the
-    per-record arithmetic path is identical to the single fold's —
-    tests/test_pnl.py asserts bitwise output equality.
-    """
-    from kafka_flink_processing_spark.shipping import ensure_shipped
-    ensure_shipped(trades.sparkSession)
-    t = _trade_events(trades).withColumn("slice", F.to_date("ts"))
-    unioned = tagged_events(trades, prices).withColumn("slice",
-                                                       F.to_date("ts"))
-
-    # the (hub, slice) grid: one marker/state anchor per fold shard, with
-    # each slice's closing tick price fused into the SAME aggregate (r13,
-    # guide §2.4: grid-distinct and phase B's day_close pass over the same
-    # rows keyed the same way — one exchange instead of two, and entry_px
-    # no longer re-scans the price stream; max_by ignores rows whose
-    # ordering key is null, so trade rows never contribute a close).
-    # Primed eagerly: three plan branches (markers, entry_px, phase-C union)
-    # read it inside one job and would race the cold cache otherwise — the
-    # same pathology the dedup signature memo hit in BENCH_r02.
-    is_px = F.col("kind") == PRICE
-    base = (unioned.groupBy("hub", "slice")
-            .agg(F.max_by(F.when(is_px, F.col("price_mwh")),
-                          F.when(is_px, F.struct(F.col("ts"),
-                                                 F.col("trade_id")
-                                                 .alias("__seq"))))
-                 .alias("day_close_px"))
-            .cache())
-    base.count()
-    grid = base.select("hub", "slice")
-    slice_ts = F.col("slice").cast("timestamp")
-
-    # phase A input: trades + per-account boundary markers, grouped per
-    # (hub, account) — the account grid is tiny (it is phase A's own output
-    # key space), and per-account keying makes the sequential trade pass
-    # embarrassingly parallel instead of one task per hub.
-    accounts = t.select("hub", "account").distinct()
-    markers = grid.join(accounts, "hub").select(
-        slice_ts.alias("ts"), F.col("hub"), F.col("account"),
-        F.lit(None).cast("string").alias("side"),
-        F.lit(None).cast("long").alias("mw"),
-        F.lit(None).cast("double").alias("price_mwh"),
-        F.lit(0).cast("long").alias("trade_id"),
-        F.lit(STATE).alias("kind"), F.col("slice"))
-    states = (t.unionByName(markers).groupBy("hub", "account")
-               .applyInPandas(_boundary_states, _STATE_SCHEMA))
-
-    # phase B: entry last-price per (hub, slice) — relational, no fold;
-    # the per-slice close comes precomputed from the fused grid aggregate
-    entry_px = (_carried_entry_price(grid, None, "slice", day_close=base)
-                .withColumnRenamed("entry_px", "st_lastpx")
-                .filter(F.col("st_lastpx").isNotNull()))
-
-    # phase C input: events + state rows, grouped per (hub, slice)
-    ev = unioned.withColumn("st_pos", F.lit(None).cast("long")) \
-                .withColumn("st_avg", F.lit(None).cast("double")) \
-                .withColumn("st_realized", F.lit(None).cast("double")) \
-                .withColumn("st_lastpx", F.lit(None).cast("double"))
-    st_acct = states.select(
-        F.col("slice").cast("timestamp").alias("ts"), "hub", "account",
-        F.lit(None).cast("string").alias("side"),
-        F.lit(None).cast("long").alias("mw"),
-        F.lit(None).cast("double").alias("price_mwh"),
-        F.lit(0).cast("long").alias("trade_id"),
-        F.lit(STATE).alias("kind"), "slice",
-        "st_pos", "st_avg", "st_realized",
-        F.lit(None).cast("double").alias("st_lastpx"))
-    st_px = entry_px.select(
-        F.col("slice").cast("timestamp").alias("ts"), "hub",
-        F.lit(None).cast("string").alias("account"),
-        F.lit(None).cast("string").alias("side"),
-        F.lit(None).cast("long").alias("mw"),
-        F.lit(None).cast("double").alias("price_mwh"),
-        F.lit(0).cast("long").alias("trade_id"),
-        F.lit(STATE).alias("kind"), "slice",
-        F.lit(None).cast("long").alias("st_pos"),
-        F.lit(None).cast("double").alias("st_avg"),
-        F.lit(None).cast("double").alias("st_realized"),
-        F.col("st_lastpx"))
-    out = (ev.unionByName(st_acct).unionByName(st_px)
-             .groupBy("hub", "slice")
-             .applyInPandas(_fold_slice, PNL_OUT_SCHEMA))
-    if snapshot_only:
-        from kafka_flink_processing_spark.operators.windows import latest_per_key
-        out = latest_per_key(out, ["hub", "account"], ["ts", "position_mw"])
-    return out
 
 
 def price_exposure(pnl: DataFrame) -> DataFrame:
@@ -473,9 +268,9 @@ def pnl_positions_hybrid(trades: DataFrame, prices: DataFrame) -> DataFrame:
     pass 2) — all linear in data volume, and no per-hub serialization
     anywhere: pass 1 is day-keyed with the cross-day price carry computed
     relationally (per-day closing tick, forward-filled over the tiny
-    hub x day grid — the entry_px construction shared with
-    pnl_positions_sliced). Re-key pass 2 to (hub, account, epoch) the
-    same way if a single account's tick fan-out ever outgrows a task.
+    hub x day grid — _carried_entry_price). Re-key pass 2 to (hub,
+    account, epoch) the same way if a single account's tick fan-out ever
+    outgrows a task.
     """
     from kafka_flink_processing_spark.shipping import ensure_shipped
     ensure_shipped(trades.sparkSession)
@@ -492,8 +287,7 @@ def pnl_positions_hybrid(trades: DataFrame, prices: DataFrame) -> DataFrame:
     # Day-keyed, not per-hub: the within-day window runs per (hub, day) —
     # parallelism hubs x days, no hot-hub serialization — and the
     # cross-day carry is relational (per-day closing tick price,
-    # forward-filled over the tiny hub x day grid; the same entry_px
-    # construction as pnl_positions_sliced phase B).
+    # forward-filled over the tiny hub x day grid).
     day = F.to_date("ts").alias("day")
     st_tagged = states.select(
         "ts", "trade_id", "hub", "account", "st_pos", "st_avg",

@@ -104,66 +104,64 @@ SENTINELS: list[str] = [
     "kmeans_assign_cells",        # clustering
 ]
 
-# r12 block GENERATED by `python tools/rotation_report.py --emit-priority`
-# (pasted verbatim — ZERO hand-swaps; r12 is an optimization round with
-# ZERO new registrations per the capacity policy below, so there is no
-# unproven tier). Contents: the 8 family sentinels, then the
-# oldest-signal backfill — the full r07-green cohort (next against the
-# STALE_BOUND=5 wall) and the front of the r08 cohort. Every rotated-in
-# query re-verified locally this round via the full
-# tools/oracle_check.py gate at sf0.01 before the freeze.
-# generated by tools/rotation_report.py --emit-priority (newest committed round: r11)
+# Block GENERATED by `python tools/rotation_report.py --emit-priority`
+# against the r13 signals (pasted verbatim — ZERO hand-swaps; no new
+# registrations, so there is no unproven tier). Contents: the r08-green
+# cohort the STALE_BOUND=5 wall now reaches, the 8 family sentinels, then
+# the oldest-signal backfill from the r09 cohort. Only the order changes;
+# every name was already registered and oracle-gated at sf0.01.
+# generated by tools/rotation_report.py --emit-priority (newest committed round: r13)
 _PRIORITY: list[str] = [
-    "sql_q3_shipping_priority",  # green r11
-    "similarity_ivf_topk",  # green r11
-    "dedup_minhash_lsh",  # green r11
-    "tumbling_window_stats",  # green r11
-    "curation_pipeline",  # green r11
-    "ohlc_bars",  # green r11
-    "multimodal_decode_features",  # green r11
-    "kmeans_assign_cells",  # green r11
-    "decontaminate_bloom",  # green r07
-    "adaptive_quality_filter",  # green r07
-    "crossmodal_dup_verify",  # green r07
-    "repetition_stats",  # green r07
-    "kmeans_embeddings",  # rows_only r07
-    "data_mix_summary",  # green r07
-    "token_rarity_score",  # green r07
-    "pii_redaction",  # green r07
-    "sequence_packing",  # green r07
-    "dup_span_stats",  # green r07
-    "dup_span_redact",  # green r07
-    "embedding_quality_stats",  # green r07
-    "lsh_band_stats",  # green r07
-    "mix_temperature_sample",  # green r07
-    "split_leakage_audit",  # green r07
-    "curation_funnel",  # green r07
-    "dedup_fuzzy_corpus",  # green r07
-    "bigram_lift_top",  # green r07
-    "streaming_tumbling_stats",  # green r07
-    "sliding_window_stats",  # green r07
-    "session_window_stats",  # green r07
-    "da_rt_asof_basis",  # green r07
-    "grouping_sets_revenue",  # green r07
-    "range_join_attribution",  # green r07
-    "time_rollup_multigrain",  # green r07
-    "time_range_moving_avg",  # green r07
-    "sql_q21_waiting_suppliers",  # green r07
-    "heavy_hitters_adaptive",  # green r07
-    "rfm_customer_segments",  # green r07
-    "hll_distinct_estimate",  # green r07
-    "roll_spread_estimator",  # green r07
-    "exposure_projection",  # green r08
-    "filtered_projection",  # green r08
-    "distinct_count_by",  # green r08
-    "rollup_acctbal",  # green r08
-    "cube_qty",  # green r08
-    "pivot_linestatus",  # green r08
-    "corpus_partitioned_roundtrip",  # green r08
-    "curriculum_stages",  # green r08
-    "sql_q4_order_priority",  # green r08
-    "sql_q7_volume_shipping",  # green r08
-    "sql_q8_market_share",  # green r08
+    "sql_q10_returned_items",  # green r08
+    "sql_q12_late_lineitems",  # green r08
+    "sql_q14_promo_revenue",  # green r08
+    "sql_q15_top_supplier",  # green r08
+    "sql_q17_small_qty_revenue",  # green r08
+    "sql_q18_large_volume_customer",  # green r08
+    "sql_q19_bracketed_revenue",  # green r08
+    "sql_q22_dormant_customers",  # green r08
+    "minhash_jaccard_accuracy",  # green r08
+    "ivf_recall_eval",  # green r08
+    "lsh_threshold_sweep",  # green r08
+    "semantic_mix_matrix",  # green r08
+    "ngram_freq_top",  # green r08
+    "token_length_histogram",  # green r08
+    "source_overlap_matrix",  # green r08
+    "dedup_keep_best",  # green r08
+    "packing_efficiency",  # green r08
+    "lang_confusion_matrix",  # green r08
+    "dedup_rate_by_source",  # green r08
+    "session_funnel",  # green r08
+    "retention_cohorts",  # green r08
+    "event_hourly_anomaly",  # green r08
+    "streaming_ohlc_bars",  # green r08
+    "vwap_hub_day",  # green r08
+    "realized_variance_daily",  # green r08
+    "max_drawdown",  # green r08
+    "trade_flow_net",  # green r08
+    "variance_ratio",  # green r08
+    "amihud_illiquidity",  # green r08
+    "sql_q3_shipping_priority",  # green r13
+    "similarity_ivf_topk",  # green r13
+    "dedup_minhash_lsh",  # green r13
+    "tumbling_window_stats",  # green r13
+    "curation_pipeline",  # green r13
+    "ohlc_bars",  # green r13
+    "multimodal_decode_features",  # green r13
+    "kmeans_assign_cells",  # green r13
+    "join_topk_orders",  # green r09
+    "semi_join_late_orders",  # green r09
+    "anti_join_customers",  # green r09
+    "correlated_avg_threshold",  # green r09
+    "approx_distinct_users",  # rows_only r09
+    "exact_quantiles_value",  # green r09
+    "not_in_null_aware",  # green r09
+    "skew_salted_distinct",  # green r09
+    "skew_salted_join",  # green r09
+    "set_union",  # green r09
+    "set_intersect",  # green r09
+    "set_except",  # green r09
+    "top_orders_per_customer",  # green r09
 ]
 
 

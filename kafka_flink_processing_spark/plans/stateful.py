@@ -261,22 +261,18 @@ _PNL_COLS = ("ts, account, hub, position_mw, avg_price_mwh, "
         "106-144): one row per trade + one per (price tick x account seen), "
         "cold-start fallback to trade price, netting with close/flip. "
         "Oracle-gated since r6 via the recursive-CTE replay (see "
-        "_PNL_REPLAY_SQL above — bit-exact at three SFs). r13 (r12 "
-        "verdict task 2): runs the time-SLICED fold "
-        "(operators/pnl.py::pnl_positions_sliced, bit-identical to the "
-        "single fold by tests/test_pnl.py) — fold parallelism becomes "
-        "hubs x days instead of the reference keyBy's hub count, which "
-        "was a hard 4-task serial ceiling on this corpus at any core "
-        "count. The plain per-hub fold (operators/pnl.py::pnl_positions) "
-        "remains the executable spec the differential tests replay.",
+        "_PNL_REPLAY_SQL above — bit-exact at three SFs). Runs the "
+        "reference-shaped per-hub fold (operators/pnl.py::pnl_positions: "
+        "one hub-keyed shuffle, then the fold_hub kernel the streaming "
+        "jobs also run), so fold parallelism = hub count, the reference "
+        "keyBy's bound. pnl_positions_hybrid below is the scale path "
+        "without that ceiling (SCALE.md §PnL).",
     bench=True,
 )
 def pnl_positions_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.operators.pnl import (
-        pnl_positions_sliced,
-    )
+    from kafka_flink_processing_spark.operators.pnl import pnl_positions
     trades, prices = derive_market(spark, sf_dir)
-    return pnl_positions_sliced(trades, prices)
+    return pnl_positions(trades, prices)
 
 
 @register(
@@ -297,47 +293,20 @@ def pnl_positions_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
         "one JSON blob per hub per batch.",
 )
 def streaming_pnl_tws_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.session import ensure_tws_ready
     from kafka_flink_processing_spark.streaming.sinks import (
         drain_streaming_multi,
     )
     from kafka_flink_processing_spark.streaming.stateful import (
+        rocksdb_state_store,
         streaming_pnl_tws,
     )
 
-    if not ensure_tws_ready(spark):
-        raise RuntimeError(
-            "transformWithState needs google.protobuf in Spark's Python "
-            "workers; neither a wheel nor the vendored runtime is present "
-            "on this box (env-gated, like the Kafka sources)")
-    trades, prices = derive_market(spark, sf_dir)
-    key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state."
-                        "RocksDBStateStoreProvider")
-    try:
+    with rocksdb_state_store(spark):
+        trades, prices = derive_market(spark, sf_dir)
         return drain_streaming_multi(
             {"t": trades, "p": prices},
             lambda s: streaming_pnl_tws(s["t"], s["p"]), "pnl_tws")
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
-
-# pnl_positions_sliced was DEREGISTERED as a separate query in r4 (r3
-# verdict: it added registry surface without a distinct role). Since r13 it
-# is the ENGINE of pnl_positions_fold above (r12 verdict task 2: the plain
-# per-hub fold's parallelism = hub count, a hard 4-task serial ceiling on
-# this corpus); the single-fold operator (operators/pnl.py::pnl_positions)
-# is retained as the executable spec, and the bitwise-equality test
-# (tests/test_pnl.py) is now the fold query's correctness argument as well
-# as the independent exerciser of the _carried_entry_price construction the
-# hybrid shares. Rationale in SCALE.md §PnL.
 
 @register(
     "pnl_positions_hybrid",
@@ -348,10 +317,11 @@ def streaming_pnl_tws_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cost — is pure JVM window algebra in whole-stage codegen "
         "(operators/pnl.py::pnl_positions_hybrid). Bit-identical to "
         "pnl_positions_fold (asserted in tests/test_pnl.py at two SFs). "
-        "Measured ~1.5x the single fold at sf0.1 (one extra Arrow stage + "
-        "two window passes) vs 2.5x for the all-Python sliced form; at "
-        "scale it wins outright: no dense row ever crosses the Python "
-        "boundary.",
+        "Measured 1.1-1.9x the per-hub fold's time on 4 cores at sf0.1 "
+        "x1/x4/x16, the gap narrowing with scale (one extra Arrow stage + "
+        "two window passes, SCALE.md §PnL); its fold unit is (hub, "
+        "account) rather than hub, and no dense row ever crosses the "
+        "Python boundary.",
     bench=True,
 )
 def pnl_positions_hybrid_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -599,37 +569,20 @@ def streaming_forecast_sma(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_forecast_sma_tws_q(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.session import ensure_tws_ready
     from kafka_flink_processing_spark.streaming.sinks import (
         drain_streaming_result,
     )
     from kafka_flink_processing_spark.streaming.stateful import (
+        rocksdb_state_store,
         streaming_sma_forecast_tws,
     )
 
-    if not ensure_tws_ready(spark):
-        raise RuntimeError(
-            "transformWithState needs google.protobuf in Spark's Python "
-            "workers; neither a wheel nor the vendored runtime is present "
-            "on this box (env-gated, like the Kafka sources)")
-    _, prices = derive_market(spark, sf_dir)
-    key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state."
-                        "RocksDBStateStoreProvider")
-    try:
+    with rocksdb_state_store(spark):
+        _, prices = derive_market(spark, sf_dir)
         return drain_streaming_result(
             prices, lambda s: streaming_sma_forecast_tws(s, seq_col="tick_id"),
             "sma_tws").select("ts", "hub", "price_mwh", "sma5", "sma20",
                               "forecast_next")
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 # --- winsorized statistics: rank-based exact percentile bounds + clipping

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import json
 from collections.abc import Iterator
+from contextlib import contextmanager
 
 import pandas as pd
 
@@ -387,10 +388,8 @@ def streaming_pnl_tws(trades: DataFrame, prices: DataFrame) -> DataFrame:
     """streaming_pnl on transformWithStateInPandas (Spark 4 primitive).
 
     Requires the RocksDB state store provider (bundled rocksdbjni jar):
-    set spark.sql.streaming.stateStore.providerClass to
-    ...execution.streaming.state.RocksDBStateStoreProvider on the session
-    or via the session helper — the HDFS-backed default store does not
-    support the transformWithState operator family.
+    start the query inside rocksdb_state_store(spark) — the HDFS-backed
+    default store does not support the transformWithState operator family.
     """
     from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
@@ -408,3 +407,36 @@ def streaming_pnl_tws(trades: DataFrame, prices: DataFrame) -> DataFrame:
             .groupBy("hub")
             .transformWithStateInPandas(proc_cls(), PNL_OUT_SCHEMA,
                                         "append", "none"))
+
+
+_PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
+_ROCKSDB = ("org.apache.spark.sql.execution.streaming.state."
+            "RocksDBStateStoreProvider")
+
+
+@contextmanager
+def rocksdb_state_store(spark):
+    """Run a block on the RocksDB state-store provider that the
+    transformWithState builders above need, then restore the session's
+    previous provider (or unset it), so later applyInPandasWithState
+    queries keep whatever store the session had. Raises when the box
+    cannot run transformWithState at all (no protobuf for the workers)."""
+    from kafka_flink_processing_spark.session import ensure_tws_ready
+
+    if not ensure_tws_ready(spark):
+        raise RuntimeError(
+            "transformWithState needs google.protobuf in Spark's Python "
+            "workers; neither a wheel nor the vendored runtime is present "
+            "on this box (env-gated, like the Kafka sources)")
+    try:
+        prev = spark.conf.get(_PROVIDER_KEY)
+    except Exception:
+        prev = None
+    spark.conf.set(_PROVIDER_KEY, _ROCKSDB)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(_PROVIDER_KEY)
+        else:
+            spark.conf.set(_PROVIDER_KEY, prev)

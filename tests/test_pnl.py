@@ -7,7 +7,9 @@
   full close, flip — reference PnlAndExposureJob.java:113-132)
 - replay equality: the Spark applyInPandas fold must equal the straight-line
   Python spec fold row-for-row under the documented total order, on both a
-  hand fixture and the sf0.001 events derivation
+  hand fixture and the sf0.001 events derivation; both batch forms equal it
+  bit for bit on a fixture that carries state and prices across midnight
+- the registered fold query builds lazily (no eager job at build time)
 - carried state: fold_hub over a prefix, then over the rest seeded with the
   prefix's end state, equals one spec replay over everything
 - Arrow chunking: the streaming folds equal the batch plans when one key's
@@ -190,71 +192,86 @@ def test_spark_fold_equals_spec_on_events_derivation(spark):
     assert got == want
 
 
-def test_sliced_fold_bitwise_equals_single_fold(spark):
-    """The (hub, day-slice) sharded fold with carried-in state must produce
-    EXACTLY the single-fold output — same rows, bit-equal floats (state
-    crosses the Arrow boundary as float64 round-trips, so the arithmetic
-    path per record is identical). The derivation spans 30 days, so this
-    genuinely exercises ~30 boundary carries per hub."""
-    from kafka_flink_processing_spark.operators.pnl import pnl_positions_sliced
-    from kafka_flink_processing_spark.plans.stateful import derive_market
-    trades, prices = derive_market(spark, "/root/testdata/sf0.001")
-    single = pnl_positions(trades, prices).collect()
-    sliced = pnl_positions_sliced(trades, prices).collect()
-    assert len(single) == len(sliced)
-    key = lambda r: tuple(sorted(r.asDict().items()))  # noqa: E731
-    assert {key(r) for r in single} == {key(r) for r in sliced}
+def _d(day, hh, mm=0, ss=0):
+    return dt.datetime(2024, 1, day, hh, mm, ss)
 
 
-def test_sliced_fold_boundary_fixture():
-    """Hand fixture crossing a midnight boundary: position opened on day 1,
-    price ticks on day 2 must emit fan-out rows for the carried account at
-    the carried avg/realized, with last_price carried from day 1."""
-    import pandas as pd
-    from kafka_flink_processing_spark.operators.pnl import (
-        STATE,
-        _boundary_states,
-        _fold_slice,
+# One hub over four days. Day 1 opens A's position; day 2 starts with
+# trades at and after midnight before any day-2 tick, so they see the
+# day-1 close; day 3 has trades but no tick; day 4's first trade sees the
+# day-2 close carried across it, then its ticks fan out to both accounts.
+MIDNIGHT_FIXTURE = [
+    dict(kind=PRICE, ts=_d(1, 22), hub="H", trade_id=1, price_mwh=40.25),
+    dict(kind=TRADE, ts=_d(1, 23, 10), hub="H", trade_id=1, account="A",
+         side="BUY", mw=10, price_mwh=41.13),
+    dict(kind=PRICE, ts=_d(1, 23, 59, 59), hub="H", trade_id=2,
+         price_mwh=42.37),
+    dict(kind=TRADE, ts=_d(2, 0), hub="H", trade_id=2, account="B",
+         side="SELL", mw=5, price_mwh=43.01),
+    dict(kind=TRADE, ts=_d(2, 0, 30), hub="H", trade_id=3, account="A",
+         side="BUY", mw=25, price_mwh=39.7),
+    dict(kind=PRICE, ts=_d(2, 9), hub="H", trade_id=3, price_mwh=44.9),
+    dict(kind=PRICE, ts=_d(2, 17), hub="H", trade_id=4, price_mwh=38.55),
+    dict(kind=TRADE, ts=_d(3, 11), hub="H", trade_id=4, account="A",
+         side="SELL", mw=50, price_mwh=37.3),
+    dict(kind=TRADE, ts=_d(4, 1), hub="H", trade_id=5, account="B",
+         side="BUY", mw=10, price_mwh=36.45),
+    dict(kind=PRICE, ts=_d(4, 2), hub="H", trade_id=5, price_mwh=35.2),
+    dict(kind=PRICE, ts=_d(4, 3), hub="H", trade_id=6, price_mwh=36.8),
+]
+
+
+def test_midnight_carry_fixture_equals_spec(spark):
+    """Both batch forms on MIDNIGHT_FIXTURE equal the spec replay row for
+    row, floats bit for bit. Carried last prices reach the day-2 and day-4
+    first trades (day 3 has no tick), and day-2 ticks fan out carried
+    day-1 positions."""
+    from kafka_flink_processing_spark.operators.pnl import pnl_positions_hybrid
+    want = replay(sorted(MIDNIGHT_FIXTURE, key=sort_key))
+    # the cases the fixture is for, read off the spec
+    first_d2 = [r for r in want if r["ts"] == _d(2, 0)]
+    assert [r["last_price_mwh"] for r in first_d2] == [42.37]
+    first_d4 = [r for r in want if r["ts"] == _d(4, 1)]
+    assert [r["last_price_mwh"] for r in first_d4] == [38.55]
+    assert [(r["account"], r["position_mw"]) for r in want
+            if r["ts"] == _d(2, 9)] == [("A", 35), ("B", -5)]
+
+    trades = spark.createDataFrame(
+        [(r["trade_id"], r["ts"], r["account"], r["hub"], r["side"],
+          r["mw"], r["price_mwh"]) for r in MIDNIGHT_FIXTURE
+         if r["kind"] == TRADE],
+        "trade_id long, ts timestamp, account string, hub string, "
+        "side string, mw int, price_mwh double")
+    prices = spark.createDataFrame(
+        [(r["ts"], r["hub"], r["price_mwh"], r["trade_id"])
+         for r in MIDNIGHT_FIXTURE if r["kind"] == PRICE],
+        "ts timestamp, hub string, price_mwh double, tick_id long")
+    want_bits = sorted(_bits(r) for r in want)
+    for build in (pnl_positions, pnl_positions_hybrid):
+        got = sorted(_bits(r.asDict())
+                     for r in build(trades, prices).collect())
+        assert got == want_bits, build.__name__
+
+
+def test_fold_query_build_starts_no_job(spark):
+    """Building the registered pnl_positions_fold is lazy: once the input
+    schema is known, a build starts no Spark job and persists nothing."""
+    from kafka_flink_processing_spark.plans.registry import (
+        QUERIES,
+        _ensure_loaded,
     )
-    d1 = dt.datetime(2024, 1, 1, 23, 50)
-    d2 = dt.datetime(2024, 1, 2, 0, 0)
-    # phase A (one (hub, account) group): one trade on day 1, this
-    # account's markers for both days — the day-1 marker precedes the trade
-    # so no state is emitted for it (account not yet seen)
-    pa = pd.DataFrame([
-        dict(ts=d1, hub="H", account="A", side="BUY", mw=10.0,
-             price_mwh=40.0, trade_id=1, kind=TRADE,
-             slice=dt.date(2024, 1, 1)),
-        dict(ts=dt.datetime(2024, 1, 1), hub="H", account="A", side=None,
-             mw=None, price_mwh=None, trade_id=0, kind=STATE,
-             slice=dt.date(2024, 1, 1)),
-        dict(ts=d2, hub="H", account="A", side=None, mw=None,
-             price_mwh=None, trade_id=0, kind=STATE,
-             slice=dt.date(2024, 1, 2)),
-    ])
-    states = _boundary_states(pa).to_dict("records")
-    assert states == [dict(hub="H", slice=dt.date(2024, 1, 2), account="A",
-                           st_pos=10, st_avg=40.0, st_realized=0.0)]
-    # phase C: day-2 shard = carried state + a price tick
-    pc = pd.DataFrame([
-        dict(ts=d2, hub="H", account="A", side=None, mw=None, price_mwh=None,
-             trade_id=0, kind=STATE, slice=dt.date(2024, 1, 2),
-             st_pos=10, st_avg=40.0, st_realized=0.0, st_lastpx=None),
-        dict(ts=d2, hub="H", account=None, side=None, mw=None,
-             price_mwh=None, trade_id=0, kind=STATE,
-             slice=dt.date(2024, 1, 2), st_pos=None, st_avg=None,
-             st_realized=None, st_lastpx=41.0),
-        dict(ts=dt.datetime(2024, 1, 2, 0, 5), hub="H", account=None,
-             side=None, mw=None, price_mwh=45.0, trade_id=0, kind=PRICE,
-             slice=dt.date(2024, 1, 2), st_pos=None, st_avg=None,
-             st_realized=None, st_lastpx=None),
-    ])
-    out = _fold_slice(pc).to_dict("records")
-    assert len(out) == 1
-    r = out[0]
-    assert (r["account"], r["position_mw"], r["avg_price_mwh"],
-            r["last_price_mwh"], r["unrealized_pnl"]) == ("A", 10, 40.0,
-                                                          45.0, 50.0)
+    from tests.conftest import SF_SMOKE
+    from tests.test_parquet_source import _jobs_started
+    _ensure_loaded()
+    build = QUERIES["pnl_positions_fold"].spark
+    _jobs_started(spark, "pnl-fold-build-first",
+                  lambda: build(spark, SF_SMOKE))
+    jsc = spark.sparkContext._jsc
+    persisted = jsc.getPersistentRDDs().size()
+    _, n_jobs = _jobs_started(spark, "pnl-fold-build-again",
+                              lambda: build(spark, SF_SMOKE))
+    assert n_jobs == 0
+    assert jsc.getPersistentRDDs().size() == persisted
 
 
 @pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001",
@@ -281,8 +298,8 @@ def test_hybrid_fold_bitwise_equals_single_fold(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# carried-state contract of fold_hub (the sliced fold, _pnl_fn and
-# PnlProcessor all seed it with the state a previous fold ended in)
+# carried-state contract of fold_hub (_pnl_fn and PnlProcessor seed it
+# with the state a previous micro-batch ended in)
 # ---------------------------------------------------------------------------
 
 @st.composite

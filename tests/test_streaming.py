@@ -17,6 +17,7 @@ from kafka_flink_processing_spark.plans.stateful import derive_market
 from kafka_flink_processing_spark.streaming.jobs import forecasts_job, pnl_job
 from kafka_flink_processing_spark.streaming.sinks import run_available_now
 from kafka_flink_processing_spark.streaming.stateful import (
+    rocksdb_state_store,
     streaming_pnl,
     streaming_sma_forecast,
 )
@@ -88,26 +89,13 @@ def test_streaming_pnl_matches_batch_single_batch(spark, market, tmp_path):
     assert _rowset(got.collect()) == _rowset(want.collect())
 
 
-_ROCKSDB = ("org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider")
-
-
 @pytest.fixture()
 def rocksdb_state(spark):
     """transformWithState requires the RocksDB state store (bundled
     rocksdbjni jar); restore the default provider afterwards so the
     applyInPandasWithState suites keep their original store."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(key, _ROCKSDB)
-    yield
-    if prev is None:
-        spark.conf.unset(key)
-    else:
-        spark.conf.set(key, prev)
+    with rocksdb_state_store(spark):
+        yield
 
 
 def test_streaming_pnl_tws_matches_batch(spark, market, tmp_path,

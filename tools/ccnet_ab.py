@@ -28,16 +28,13 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import force  # noqa: E402
 from kafka_flink_processing_spark.plans.extensions import (  # noqa: E402
     _ccnet_bucketed,
     _ccnet_scored_b2,
 )
 from kafka_flink_processing_spark.session import get_spark  # noqa: E402
 from kafka_flink_processing_spark.sources.parquet import load_table  # noqa: E402
-
-
-def force(df) -> None:
-    df.write.mode("overwrite").format("noop").save()
 
 
 def result_hash(df) -> int:

@@ -24,14 +24,9 @@ import pandas as pd
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from bench import CONTROL_FLOORS, force
 from kafka_flink_processing_spark.plans.registry import QUERIES, _ensure_loaded
 from kafka_flink_processing_spark.session import get_spark
-
-CONTROL_FLOORS = {"latest_per_key": 0.299, "groupby_agg_q1": 0.847}
-
-
-def force(df) -> None:
-    df.write.mode("overwrite").format("noop").save()
 
 
 def main() -> None:

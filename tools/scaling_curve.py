@@ -34,6 +34,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import force  # noqa: E402
 from kafka_flink_processing_spark.plans.registry import (  # noqa: E402
     QUERIES,
     _ensure_loaded,
@@ -143,10 +144,6 @@ def replicate(spark, table: str, reps: int, out_dir: str,
     for p in parts[1:]:
         u = u.unionByName(p)
     u.write.mode("overwrite").parquet(f"{out_dir}/{table}.parquet")
-
-
-def force(df) -> None:
-    df.write.mode("overwrite").format("noop").save()
 
 
 def main() -> None:

@@ -172,6 +172,7 @@ def run_ttl_state(spark):
     import datetime as dt
 
     from kafka_flink_processing_spark.streaming.stateful import (
+        rocksdb_state_store,
         streaming_pnl_tws,
         streaming_pnl_tws_ttl,
     )
@@ -197,14 +198,7 @@ def run_ttl_state(spark):
     prices = spark.createDataFrame(
         prows, "ts timestamp, hub string, price_mwh double, tick_id long")
 
-    key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state."
-                        "RocksDBStateStoreProvider")
-    try:
+    with rocksdb_state_store(spark):
         run_stateful(spark, "pnl_tws_no_ttl_churn",
                      lambda s: streaming_pnl_tws(s["t"], s["p"]),
                      {"t": trades, "p": prices}, n_epochs=N_EP)
@@ -212,19 +206,11 @@ def run_ttl_state(spark):
                      lambda s: streaming_pnl_tws_ttl(s["t"], s["p"],
                                                      ttl_ms=2 * W * 1000),
                      {"t": trades, "p": prices}, n_epochs=N_EP)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 def main():
     spark = get_spark("stream-bench")
     if "--ttl" in sys.argv[1:]:
-        from kafka_flink_processing_spark.session import ensure_tws_ready
-        if not ensure_tws_ready(spark):
-            raise SystemExit("transformWithState unavailable on this box")
         run_ttl_state(spark)
         return
     sf01 = "/root/testdata/sf0.1"

@@ -100,10 +100,8 @@ from kafka_flink_processing_spark.plans.stateful import derive_market  # noqa: E
 from kafka_flink_processing_spark.session import get_spark  # noqa: E402
 from kafka_flink_processing_spark.sources.parquet import load_table  # noqa: E402
 from kafka_flink_processing_spark.streaming.sinks import run_available_now  # noqa: E402
+from kafka_flink_processing_spark.streaming.stateful import rocksdb_state_store  # noqa: E402
 
-_ROCKSDB = ("org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider")
-_PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
 ENGINES = ("pnl", "pnl_tws", "pnl_tws_ttl", "pnl_tws_ttl_finite",
            "sma", "sma_tws", "tumbling", "session",
            "pnl_restart", "pnl_tws_restart", "pnl_tws_ttl_restart")
@@ -214,13 +212,6 @@ class _session_conf:
         else:
             self.spark.conf.set(self.key, self.prev)
         return False
-
-
-def _rocksdb_provider(spark):
-    """transformWithState needs the RocksDB store; the
-    applyInPandasWithState drains keep the session's own provider
-    (mirrors the test fixture)."""
-    return _session_conf(spark, _PROVIDER_KEY, _ROCKSDB)
 
 
 # ---------------------------------------------------------------------------
@@ -430,7 +421,7 @@ def _run_corpus(spark, cname: str, seed: int, engines: list[str],
             from kafka_flink_processing_spark.streaming.stateful import (
                 streaming_pnl_tws,
             )
-            with _rocksdb_provider(spark):
+            with rocksdb_state_store(spark):
                 got = _drain(
                     spark,
                     streaming_pnl_tws(
@@ -442,7 +433,7 @@ def _run_corpus(spark, cname: str, seed: int, engines: list[str],
             from kafka_flink_processing_spark.streaming.stateful import (
                 streaming_pnl_tws_ttl,
             )
-            with _rocksdb_provider(spark):
+            with rocksdb_state_store(spark):
                 got = _drain(
                     spark,
                     streaming_pnl_tws_ttl(
@@ -470,7 +461,7 @@ def _run_corpus(spark, cname: str, seed: int, engines: list[str],
             recs = _tagged_records(t_rows, p_rows)
             want_ttl = _dictbag(
                 _pnl_ttl_spec(_split_batches(recs, cuts6), ttl_ms))
-            with _rocksdb_provider(spark):
+            with rocksdb_state_store(spark):
                 got = _drain(
                     spark,
                     streaming_pnl_tws_ttl(
@@ -508,7 +499,7 @@ def _run_corpus(spark, cname: str, seed: int, engines: list[str],
             from kafka_flink_processing_spark.streaming.stateful import (
                 streaming_sma_forecast_tws,
             )
-            with _rocksdb_provider(spark):
+            with rocksdb_state_store(spark):
                 got = _drain(
                     spark,
                     streaming_sma_forecast_tws(
@@ -631,7 +622,7 @@ def _run_corpus(spark, cname: str, seed: int, engines: list[str],
                 from kafka_flink_processing_spark.streaming.stateful import (
                     streaming_pnl_tws,
                 )
-                with _rocksdb_provider(spark):
+                with rocksdb_state_store(spark):
                     results.append((
                         "pnl_tws_restart",
                         _restart_parity(streaming_pnl_tws,
@@ -658,7 +649,7 @@ def _run_corpus(spark, cname: str, seed: int, engines: list[str],
                 # sentinel; see _pnl_ttl_spec)
                 batches_rs = [ph[0], None] + ph[1:] if len(ph) > 1 else ph
                 want_ttl_rs = _dictbag(_pnl_ttl_spec(batches_rs, ttl2))
-                with _rocksdb_provider(spark):
+                with rocksdb_state_store(spark):
                     results.append((
                         "pnl_tws_ttl_restart",
                         _restart_parity(
