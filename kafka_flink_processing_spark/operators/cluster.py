@@ -22,6 +22,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kafka_flink_processing_spark.operators.dedup import (
+    _UNTRACKED,
+    _clear_untracked,
+    _memo_lookup,
+    _unpersist,
+)
+
 # Edge-table memo (r12, guide §5): the near-dup pair graph is the
 # persisted artifact every clustering consumer starts from —
 # dedup_clusters, cluster_aware_folds and dedup_cluster_survivors all
@@ -35,48 +42,17 @@ from pyspark.sql import functions as F
 # holds the DOUBLED, loop-partitioned edge relation plus its count so a
 # hit also skips the width-sizing action. Only the edge INTERMEDIATE is
 # memoized — the label table (each query's actual result) is computed
-# fresh on every call.
-_EDGE_MEMO: dict[tuple, tuple[DataFrame, DataFrame, int]] = {}
-
-# Cached edge tables that could NOT be memoized (semanticHash failure or a
-# 32-bit collision, the key=None path): tracked here so
-# clear_cluster_caches() can still unpersist them (r12 advice — they were
-# session-lifetime cache leaks otherwise).
-_UNTRACKED_EDGES: list[DataFrame] = []
+# fresh on every call. Lookup, dead-session pruning and the untracked
+# list are dedup.py's, shared with its memos.
+_EDGE_MEMO: dict[tuple, tuple[DataFrame, tuple[DataFrame, int]]] = {}
 
 
 def clear_cluster_caches() -> None:
     """Unpersist and drop the edge-table memo (safe any time — consumers
     recompute lazily on next use)."""
-    for _, edges, _ in _EDGE_MEMO.values():
-        try:
-            edges.unpersist()
-        except Exception:
-            pass
+    _unpersist(edges for _, (edges, _) in _EDGE_MEMO.values())
     _EDGE_MEMO.clear()
-    for edges in _UNTRACKED_EDGES:
-        try:
-            edges.unpersist()
-        except Exception:
-            pass
-    _UNTRACKED_EDGES.clear()
-
-
-def _prune_dead_sessions() -> None:
-    """Drop memo entries whose SparkSession has been stopped (r12 advice:
-    the memo key holds the session object, so dead-session entries — and
-    their RDD references — were retained for the process lifetime). Their
-    cached blocks died with the session's SparkContext; only the dict
-    entries need collecting."""
-    dead = []
-    for key in _EDGE_MEMO:
-        try:
-            if key[0].sparkContext._jsc.sc().isStopped():
-                dead.append(key)
-        except Exception:
-            dead.append(key)
-    for key in dead:
-        _EDGE_MEMO.pop(key, None)
+    _clear_untracked()
 
 
 def _loop_width(spark, n_edges: int) -> int:
@@ -95,25 +71,12 @@ def _loop_width(spark, n_edges: int) -> int:
 
 
 def _edge_table(pairs: DataFrame) -> tuple[DataFrame, int]:
-    """Doubled (src, dst) edge relation, cached at loop width, memoized
-    per pair-mining plan (collision-checked like dedup._memo_lookup)."""
+    """Doubled (src, dst) edge relation and its row count, cached at loop
+    width, memoized per pair-mining plan."""
     spark = pairs.sparkSession
-    _prune_dead_sessions()
-    try:
-        key = (spark, pairs.semanticHash(), "edges")
-    except Exception:
-        key = None
-    if key is not None:
-        hit = _EDGE_MEMO.get(key)
-        if hit is not None:
-            src_pairs, edges, n_edges = hit
-            try:
-                if pairs.sameSemantics(src_pairs):
-                    return edges, n_edges
-            except Exception:
-                pass
-            # 32-bit collision: recompute, don't evict or cache
-            key = None
+    key, hit = _memo_lookup(_EDGE_MEMO, pairs, ("edges",))
+    if hit is not None:
+        return hit
     doubled = (pairs.select(F.col("doc_a").alias("src"),
                             F.col("doc_b").alias("dst"))
                .unionByName(pairs.select(F.col("doc_b").alias("src"),
@@ -129,9 +92,9 @@ def _edge_table(pairs: DataFrame) -> tuple[DataFrame, int]:
     edges.count()  # prime: every loop round joins against this build
     raw.unpersist()
     if key is not None:
-        _EDGE_MEMO[key] = (pairs, edges, n_edges)
+        _EDGE_MEMO[key] = (pairs, (edges, n_edges))
     else:
-        _UNTRACKED_EDGES.append(edges)
+        _UNTRACKED.append(edges)
     return edges, n_edges
 
 

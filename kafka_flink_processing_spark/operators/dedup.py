@@ -92,27 +92,61 @@ def exact_dedup(docs: DataFrame, id_col: str = "doc_id",
 # memo cannot go stale. semanticHash is 32-bit, so a hit is confirmed with
 # sameSemantics against the stored source plan before reuse — a cross-plan
 # collision recomputes instead of returning another input's shingles.
-# Entries hold (source_df, derived_df); clear_dedup_caches() unpersists.
+# Entries hold (source_df, derived); clear_dedup_caches() unpersists.
 _SHINGLE_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
 _SIG_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
 _INV_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
 _ESS_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
+
+# Cached tables that could NOT be memoized (semanticHash failure or a
+# 32-bit collision, the key=None path): tracked here so the clear
+# functions can still unpersist them instead of leaking them for the
+# session lifetime. Shared by every memo that caches on a miss.
+_UNTRACKED: list[DataFrame] = []
+
+
+def _unpersist(tables) -> None:
+    for df in tables:
+        try:
+            df.unpersist()
+        except Exception:
+            pass
+
+
+def _clear_untracked() -> None:
+    _unpersist(_UNTRACKED)
+    _UNTRACKED.clear()
 
 
 def clear_dedup_caches() -> None:
     """Unpersist and drop the dedup memo tables (frees executor storage;
     safe any time — consumers recompute lazily on next use)."""
     for memo in (_SIG_CACHE, _SHINGLE_CACHE, _INV_CACHE, _ESS_CACHE):
-        for _, derived in memo.values():
-            try:
-                derived.unpersist()
-            except Exception:
-                pass
+        _unpersist(derived for _, derived in memo.values())
         memo.clear()
+    _clear_untracked()
+
+
+def _prune_dead_sessions(memo) -> None:
+    """Drop memo entries whose SparkSession has been stopped: the key holds
+    the session object, so dead-session entries (and their RDD references)
+    would otherwise be retained for the process lifetime. Their cached
+    blocks died with the session's SparkContext; only the dict entries
+    need collecting."""
+    dead = []
+    for key in memo:
+        try:
+            if key[0].sparkContext._jsc.sc().isStopped():
+                dead.append(key)
+        except Exception:
+            dead.append(key)
+    for key in dead:
+        memo.pop(key, None)
 
 
 def _memo_lookup(memo, docs: DataFrame, parts: tuple):
     """(key, hit) for a memoized derivation of `docs`; collision-checked."""
+    _prune_dead_sessions(memo)
     try:
         key = (docs.sparkSession, docs.semanticHash(), *parts)
     except Exception:
@@ -395,6 +429,8 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3,
         sh.count()  # prime: the 32-way bit aggregation feeds both join sides
         if key is not None:
             _SIG_CACHE[key] = (docs, sh)
+        else:
+            _UNTRACKED.append(sh)
     bands = sh.select(
         "doc_id", "simhash",
         F.explode(F.array(*[

@@ -2,7 +2,7 @@
 driver testdata tables, each paired with its DuckDB oracle SQL.
 
 This is the single source for __spark_entry__.queries()/oracle_sql() and for
-bench.py's headline set. Column names are aliased identically in the Spark
+bench.py's headline set. Both return the queries in registration order. Column names are aliased identically in the Spark
 plan and the oracle (the driver hash-compares by sorted column name).
 """
 
@@ -36,205 +36,15 @@ def register(name: str, oracle: str | None, doc: str = "",
     return deco
 
 
-# The driver's correctness harness compares the FIRST `DRIVER_WINDOW`
-# registered queries against their oracles each round (observed, NOT
-# contracted: CORRECTNESS_r01/r02/r03 each hold exactly the first 50 keys
-# in registration order; tests/test_registry_guard.py::
-# test_driver_window_size_matches_newest_correctness re-checks the observed
-# size against the newest committed CORRECTNESS file every round, so a
-# driver-side window change flags immediately instead of silently making
-# this priority list meaningless).
-# Registration order is therefore a verification lever, not cosmetics: a
-# query outside the window gets NO driver signal that round. We order
-# explicitly so the window always covers (a) queries that have never had a
-# driver-green row, (b) queries whose oracles changed this round, and (c) a
-# sentinel from every operator family (join / agg / window / as-of / SQL /
-# streaming / fold) to catch regressions in the long-stable battery.
-# Everything not named keeps registration order after the priority block.
-# tests/test_registry_guard.py asserts the window ∪ committed green rows
-# covers every registered query, so a future edit can't silently demote one.
-DRIVER_WINDOW = 50
-
-# Staleness contract (r5, per the r4 verdict): no oracle-backed query's
-# newest driver signal may be more than STALE_BOUND rounds old unless it
-# sits in the current window (it refreshes this round) or is explicitly
-# deferred. tests/test_registry_guard.py::test_staleness_bound enforces it;
-# `tools/rotation_report.py --emit-priority` GENERATES the _PRIORITY block
-# below from signal age so satisfying the bound is mechanical, not curated.
-#
-# r6: raised 2 -> 4 on pigeonhole grounds. The bound is only satisfiable
-# when DRIVER_WINDOW x STALE_BOUND >= #queries (each round refreshes at
-# most DRIVER_WINDOW signals, and every oracle-backed query needs one at
-# least every STALE_BOUND rounds). At 167 registered queries the old
-# bound's capacity was 100 — mathematically unsatisfiable, and r5 hit the
-# generator's ERROR path: staying at 2 would have meant a PERMANENT
-# rolling DEFERRED_VERIFICATION treadmill, the exact thing the r5 verdict
-# told this round to stop. 4 gives 200 >= 167 with headroom for a round
-# of registrations; the generator still fills oldest-first, so the
-# EFFECTIVE refresh cadence stays as fast as capacity allows (~3.3
-# rounds) — the bound is the neglect tripwire, not the target.
-# tests/test_registry_guard.py::test_stale_bound_feasible pins the
-# pigeonhole inequality so registration growth past capacity becomes a
-# test failure that forces an explicit bound/window decision.
-#
-# r9-end: raised 4 -> 5, same grounds as the r6 raise but taken BEFORE
-# the inequality fails instead of after. r9 ends at 199 registered
-# queries vs 50 x 4 = 200 capacity — the headroom the r6 comment cited
-# ("200 >= 167 with headroom for a round of registrations") is spent,
-# and the 8 r9 post-freeze deferrals are already promised into the r10
-# window, so r10's FIRST new registration would trip the feasibility
-# guard mid-round and force this decision under pressure. 5 gives
-# 250 >= 199 with a round of headroom restored. The generator still
-# fills oldest-first, so the EFFECTIVE refresh cadence stays
-# ~#queries/window (~4 rounds) — the bound remains the neglect
-# tripwire, not the target.
-STALE_BOUND = 5
-
-# One regression tripwire per long-stable operator family, consumed by the
-# generator AFTER the staleness-mandated set: a sentinel only takes a slot
-# the rotation doesn't need. Order = preference under window pressure.
-SENTINELS: list[str] = [
-    "sql_q3_shipping_priority",   # textual SQL entry / TPC-H battery
-    "similarity_ivf_topk",        # ANN / embedding family
-    "dedup_minhash_lsh",          # dedup flagship
-    "tumbling_window_stats",      # temporal windows
-    "curation_pipeline",          # pipeline composition
-    "ohlc_bars",                  # market pack
-    "multimodal_decode_features", # Arrow mapInPandas plumbing
-    "kmeans_assign_cells",        # clustering
-]
-
-# Block GENERATED by `python tools/rotation_report.py --emit-priority`
-# against the r13 signals (pasted verbatim — ZERO hand-swaps; no new
-# registrations, so there is no unproven tier). Contents: the r08-green
-# cohort the STALE_BOUND=5 wall now reaches, the 8 family sentinels, then
-# the oldest-signal backfill from the r09 cohort. Only the order changes;
-# every name was already registered and oracle-gated at sf0.01.
-# generated by tools/rotation_report.py --emit-priority (newest committed round: r13)
-_PRIORITY: list[str] = [
-    "sql_q10_returned_items",  # green r08
-    "sql_q12_late_lineitems",  # green r08
-    "sql_q14_promo_revenue",  # green r08
-    "sql_q15_top_supplier",  # green r08
-    "sql_q17_small_qty_revenue",  # green r08
-    "sql_q18_large_volume_customer",  # green r08
-    "sql_q19_bracketed_revenue",  # green r08
-    "sql_q22_dormant_customers",  # green r08
-    "minhash_jaccard_accuracy",  # green r08
-    "ivf_recall_eval",  # green r08
-    "lsh_threshold_sweep",  # green r08
-    "semantic_mix_matrix",  # green r08
-    "ngram_freq_top",  # green r08
-    "token_length_histogram",  # green r08
-    "source_overlap_matrix",  # green r08
-    "dedup_keep_best",  # green r08
-    "packing_efficiency",  # green r08
-    "lang_confusion_matrix",  # green r08
-    "dedup_rate_by_source",  # green r08
-    "session_funnel",  # green r08
-    "retention_cohorts",  # green r08
-    "event_hourly_anomaly",  # green r08
-    "streaming_ohlc_bars",  # green r08
-    "vwap_hub_day",  # green r08
-    "realized_variance_daily",  # green r08
-    "max_drawdown",  # green r08
-    "trade_flow_net",  # green r08
-    "variance_ratio",  # green r08
-    "amihud_illiquidity",  # green r08
-    "sql_q3_shipping_priority",  # green r13
-    "similarity_ivf_topk",  # green r13
-    "dedup_minhash_lsh",  # green r13
-    "tumbling_window_stats",  # green r13
-    "curation_pipeline",  # green r13
-    "ohlc_bars",  # green r13
-    "multimodal_decode_features",  # green r13
-    "kmeans_assign_cells",  # green r13
-    "join_topk_orders",  # green r09
-    "semi_join_late_orders",  # green r09
-    "anti_join_customers",  # green r09
-    "correlated_avg_threshold",  # green r09
-    "approx_distinct_users",  # rows_only r09
-    "exact_quantiles_value",  # green r09
-    "not_in_null_aware",  # green r09
-    "skew_salted_distinct",  # green r09
-    "skew_salted_join",  # green r09
-    "set_union",  # green r09
-    "set_intersect",  # green r09
-    "set_except",  # green r09
-    "top_orders_per_customer",  # green r09
-]
-
-
-# Queries DELIBERATELY outside this round's driver window, each with the
-# reason and its compensating strong check. The guard tests allow exactly
-# these; anything else unproven outside the window is a test failure
-# (deliberate deferral is visible here, silent demotion stays impossible).
-#
-# ROUND CONVENTION (r6, per the r5 verdict): register new queries FIRST,
-# then generate/freeze the window — the generator's unproven-first tier
-# absorbs them and this dict stays empty. A post-freeze registration is
-# the exception (a handful at most, never a second r5-sized backlog), and
-# it must arrive here with committed tools/oracle_check.py parity at
-# sf0.01 AND sf0.1. r6 cleared the 16-entry r5 backlog this way: all 16
-# entered the r6 window's unproven tier, and the 5 r6 registrations were
-# made BEFORE the freeze.
-DEFERRED_VERIFICATION: dict[str, str] = {
-    # r11: EMPTY. Both r10 post-freeze deferrals (ccnet_perplexity_buckets,
-    # dedup_cluster_survivors) entered this round's window through the
-    # generator's unproven tier — the deferral dict drains to zero for the
-    # second consecutive rotation. The convention stands: register new
-    # queries BEFORE the window freeze; a post-freeze registration (ceiling:
-    # 2 per round) must arrive here with committed three-SF
-    # tools/oracle_check.py parity.
-}
-
-# CAPACITY POLICY (r11, per the r10 verdict task 7 — decided BEFORE the
-# pigeonhole wall binds, not after): 205 queries registered at the r11
-# freeze (202 + the three r11 family-gap registrations) vs
-# DRIVER_WINDOW x STALE_BOUND = 250 capacity. The window size is the
-# DRIVER's, not ours — we cannot widen it — so the only levers are
-# STALE_BOUND and registration pace. Decision: (a) the §2 surface and the
-# LLM-pipeline families are COMPLETE, so the r6-era "headroom for a round
-# of registrations" rationale has run its course — from r11 on, new
-# registrations need a missing-operator justification (a named family with
-# no entry), not just novelty, which caps organic growth at a few per
-# round; (b) when the registered count crosses 240, raise STALE_BOUND
-# 5 -> 6 in the same commit (capacity 300, effective refresh cadence
-# ~#queries/50 ≈ 5 rounds — still inside the bound, and the generator
-# keeps filling oldest-first so the realized cadence stays as fast as
-# capacity allows). test_stale_bound_feasible remains the tripwire that
-# forces this paragraph to be acted on rather than remembered.
-
-
-
-def _ordered() -> list[str]:
-    # Fail LOUDLY on a bad _PRIORITY (r5 advice): silently dropping an
-    # unknown name would shrink the driver window and promote
-    # registration-order queries into it — the guard test catches this in
-    # CI, this check catches it in the driver harness itself. Explicit
-    # raises, not asserts: the guarantee must survive python -O
-    # (r6 review).
-    unknown = [n for n in _PRIORITY if n not in QUERIES]
-    if unknown:
-        raise ValueError(f"_PRIORITY names not registered: {unknown}")
-    if len(_PRIORITY) != DRIVER_WINDOW:
-        raise ValueError(
-            f"_PRIORITY has {len(_PRIORITY)} entries, driver window is "
-            f"{DRIVER_WINDOW} — regenerate with rotation_report "
-            f"--emit-priority")
-    seen = set(_PRIORITY)
-    return list(_PRIORITY) + [n for n in QUERIES if n not in seen]
-
-
 def queries() -> dict[str, QueryFn]:
     _ensure_loaded()
-    return {name: QUERIES[name].spark for name in _ordered()}
+    return {name: spec.spark for name, spec in QUERIES.items()}
 
 
 def oracle_sql() -> dict[str, str]:
     _ensure_loaded()
-    return {name: QUERIES[name].oracle for name in _ordered()
-            if QUERIES[name].oracle is not None}
+    return {name: spec.oracle for name, spec in QUERIES.items()
+            if spec.oracle is not None}
 
 
 _LOADED = False

@@ -19,6 +19,11 @@ def test_oracle_keys_subset_of_queries():
     oracles = entrymod.oracle_sql()
     assert set(oracles) <= set(qs)
     assert len(qs) > 0
+    # rows-only queries are a deliberate, visible choice: a new query
+    # without an oracle must be added here
+    assert set(qs) - set(oracles) == {
+        "approx_distinct_users", "approx_quantiles_value",
+        "kmeans_embeddings", "embedding_pca_variance"}
 
 
 @pytest.mark.slow  # heavyweight (see pytest.ini tiers)

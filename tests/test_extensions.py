@@ -413,6 +413,29 @@ def test_ngram_max_df_bounds_hot_shingle_candidates(spark):
     assert {(r.doc_a, r.doc_b) for r in out} == {(100, 101)}
 
 
+def test_simhash_pairs_miss_path_cache_is_released(spark, monkeypatch):
+    """When the memo key cannot be built (semanticHash fails, or a 32-bit
+    collision), simhash_pairs still caches its table for the self-join;
+    clear_dedup_caches() must unpersist it too, not leak it."""
+    from kafka_flink_processing_spark.operators import dedup
+
+    def no_hash(self):
+        raise RuntimeError("semanticHash unavailable")
+
+    dedup.clear_dedup_caches()
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps"), (2, "the quick brown fox leaps")],
+        "doc_id long, text string")
+    monkeypatch.setattr(type(docs), "semanticHash", no_hash)
+    dedup.simhash_pairs(docs).count()
+    assert not dedup._SIG_CACHE  # the miss path ran: nothing memoized
+    assert jsc.getPersistentRDDs().size() > before
+    dedup.clear_dedup_caches()
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_lsh_cosine_pairs_exact_vs_bruteforce(emb):
     """The LSH-candidate pair miner must recover EXACTLY the brute-force
     pair set at the registered threshold (recall 1.0 on this corpus — the

@@ -1,9 +1,9 @@
 """Crash canary: every registered query must execute end-to-end.
 
-The driver smoke-checks only entry(); the oracle harness only the window.
-This sweep runs ALL registered queries at sf0.001 so a regression in a
-rarely-run query (an import error, a renamed column, a broken plan) fails
-CI-style instead of surfacing in a future round's driver report. ~80 s.
+The driver smoke-checks only entry(). This sweep runs ALL registered
+queries at sf0.001, including the rows-only ones the oracle gate cannot
+hash-check, so a regression in a rarely-run query (an import error, a
+renamed column, a broken plan) fails CI-style. ~80 s.
 """
 
 from __future__ import annotations
