@@ -36,6 +36,28 @@ sf0.1 were not slower.
 
 Driver heap: half the box's physical memory, capped at 48g
 (`default_driver_memory`); SPARK_DRIVER_MEMORY overrides it.
+
+Python worker daemon. At the start of every task pyspark's
+`worker_util.setup_spark_files` calls `importlib.invalidate_caches()`. On
+CPython 3.11 that makes each `zipimporter` (19 in a pandas-UDF worker:
+one per package directory imported from pyspark.zip, 1,328 entries, or
+from the shipped package zip) re-read its archive's whole central
+directory in pure Python, 0.06-0.12 s of CPU per task, counted in
+`pythonInitTime`. On a local master (`worker_daemon_conf`) the workers
+run under `worker_daemon`: pyspark's unchanged daemon with a
+`zipimporter.invalidate_caches` that re-reads an archive only when its
+(inode, size, mtime) changed, 0 re-reads per steady-state task.
+Perfbench medians, 4 interleaved pairs per workload (local[2], 2g heap,
+4-core host), parent -> change:
+
+    workload              warm_pass_cpu_s       cold_pass_cpu_s   setup_s
+    batch_desk_curation   5.91 -> 4.83 (-18%)   26.30 -> 22.32    13.80 -> 12.43
+    stream_catchup        14.94 -> 13.17 (-12%)  26.49 -> 25.48   12.29 -> 13.11
+
+The layer that moved is Python-worker process CPU (daemon, workers and
+reaped workers, from /proc): 0.97-1.32 -> 0.23-0.34 s per warm batch
+pass, 1.93-2.12 -> 0.39-0.59 s per stream drain. Other masters keep the
+stock daemon: their workers may not see this package's path.
 """
 
 from __future__ import annotations
@@ -57,6 +79,9 @@ _DRIVER_JIT_OPTIONS = (
     "-XX:Tier4BackEdgeThreshold=400000",
 )
 
+_PKG_DIR = os.path.dirname(os.path.abspath(__file__))
+WORKER_DAEMON = "kafka_flink_processing_spark.worker_daemon"
+
 # The heap share leaves the rest of the box to the Python workers, the
 # page cache and the OS.
 _DRIVER_MEMORY_CAP_MB = 48 * 1024
@@ -70,6 +95,26 @@ def default_driver_memory(total_bytes: int | None = None) -> str:
         total_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     share_mb = int(total_bytes * _DRIVER_MEMORY_SHARE) // 2**20
     return f"{min(_DRIVER_MEMORY_CAP_MB, share_mb)}m"
+
+
+def _prepend_pythonpath(path: str) -> None:
+    """Put `path` first on this process's PYTHONPATH, which the JVM (if
+    not yet started) passes on to every Python worker."""
+    parts = os.environ.get("PYTHONPATH", "")
+    if path not in parts.split(os.pathsep):
+        os.environ["PYTHONPATH"] = (path + os.pathsep + parts
+                                    if parts else path)
+
+
+def worker_daemon_conf(master: str) -> dict[str, str]:
+    """Spark conf that runs the Python workers under this package's
+    daemon (see "Python worker daemon" above) on a local master; {} on
+    any other master. Makes the package importable by the daemon, so it
+    must run BEFORE the JVM starts; get_spark() calls it."""
+    if master != "local" and not master.startswith("local["):
+        return {}
+    _prepend_pythonpath(os.path.dirname(_PKG_DIR))
+    return {"spark.python.daemon.module": WORKER_DAEMON}
 
 
 def ensure_protobuf_for_tws() -> bool:
@@ -89,12 +134,8 @@ def ensure_protobuf_for_tws() -> bool:
     vendored = "/usr/lib/google-cloud-sdk/platform/google_appengine"
     if not os.path.isdir(os.path.join(vendored, "google", "protobuf")):
         return False
-    shim_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                            "vendor_pb")
-    parts = os.environ.get("PYTHONPATH", "")
-    if shim_dir not in parts.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (shim_dir + os.pathsep + parts
-                                    if parts else shim_dir)
+    shim_dir = os.path.join(_PKG_DIR, "vendor_pb")
+    _prepend_pythonpath(shim_dir)
     # PYTHONPATH alone is NOT enough: the transformWithState driver-side
     # StreamingPythonRunner rebuilds the worker's PYTHONPATH from scratch
     # (no merge with the JVM env). Interpose on the interpreter instead:
@@ -137,8 +178,7 @@ def ensure_tws_ready(spark: SparkSession) -> bool:
     # $KFPS_REAL_PYTHON (recorded here when the env var can still reach
     # workers, i.e. pre-JVM) or `python` from PATH — on a wheel box any
     # interpreter on PATH sees the same site-packages.
-    wrapper = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "vendor_pb", "python_with_pb")
+    wrapper = os.path.join(_PKG_DIR, "vendor_pb", "python_with_pb")
     if os.access(wrapper, os.X_OK):
         import sys
 
@@ -168,9 +208,11 @@ def get_spark(app_name: str = "kafka_flink_processing_spark",
     coalesce from a higher initial number).
     """
     ensure_protobuf_for_tws()  # must precede JVM start (worker PYTHONPATH)
+    master = os.environ.get("SPARK_MASTER", f"local[{_CPUS}]")
     builder = (
         SparkSession.builder
-        .master(os.environ.get("SPARK_MASTER", f"local[{_CPUS}]"))
+        .master(master)
+        .config(map=worker_daemon_conf(master))
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or _CPUS))
         .config("spark.sql.adaptive.enabled", "true")

@@ -72,15 +72,3 @@ if not _protobuf_works() and \
         _rv.ValidateProtobufRuntimeVersion = _lenient_validate
     except ImportError:
         pass
-
-# Debug tap (dev-only, no-op unless the env var is set): records where the
-# shim ran and what it decided, for diagnosing worker-spawn paths.
-_dbg = os.environ.get("KFPS_PB_DEBUG")
-if _dbg:
-    try:
-        with open(_dbg, "a") as fh:
-            import importlib.util as _ilu
-            fh.write(f"exe={sys.executable} google="
-                     f"{_ilu.find_spec('google')} path={sys.path}\n")
-    except OSError:
-        pass

@@ -1,5 +1,5 @@
-"""Session posture (session.py): the driver's JIT compile budget and its
-heap size."""
+"""Session posture (session.py): the driver's JIT compile budget, its
+heap size and the Python worker daemon."""
 
 from __future__ import annotations
 
@@ -9,7 +9,11 @@ import sys
 import textwrap
 from pathlib import Path
 
-from kafka_flink_processing_spark.session import default_driver_memory
+from kafka_flink_processing_spark.session import (
+    WORKER_DAEMON,
+    default_driver_memory,
+    worker_daemon_conf,
+)
 
 # HotSpot's Tier-4 defaults are 5000, 600, 15000 and 40000; the driver
 # runs with 10x of each.
@@ -76,3 +80,22 @@ def test_caller_java_options_and_memory_override_still_apply():
                          capture_output=True, text=True, timeout=300,
                          check=True).stdout.split()
     assert out[-3:] == ["set", str(512 * 2**20), "True"]
+
+
+def test_worker_daemon_conf_is_set_for_local_masters_only(monkeypatch):
+    monkeypatch.setenv("PYTHONPATH", "elsewhere")
+    for master in ("spark://host:7077", "yarn", "k8s://https://host:443",
+                   "local-cluster[2,1,1024]"):
+        assert worker_daemon_conf(master) == {}
+    assert os.environ["PYTHONPATH"] == "elsewhere"
+    for master in ("local", "local[*]", "local[2]", "local[2,3]"):
+        assert worker_daemon_conf(master) == {
+            "spark.python.daemon.module": WORKER_DAEMON}
+    assert os.environ["PYTHONPATH"].split(os.pathsep) == [str(ROOT),
+                                                          "elsewhere"]
+
+
+def test_local_session_runs_the_worker_daemon(spark):
+    assert spark.sparkContext.master.startswith("local[")
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.python.daemon.module") == WORKER_DAEMON
