@@ -345,6 +345,20 @@ def lsh_self_candidates(bands: DataFrame, left_col: str = "doc_a",
              .distinct())
 
 
+def lsh_cross_candidates(probe_bands: DataFrame,
+                         index_bands: DataFrame) -> DataFrame:
+    """Distinct (doc_id [probe], dup_of [index]) pairs agreeing on at
+    least one LSH band — the one copy of the probe-vs-index candidate
+    builder, shared by incremental_minhash_dups and the streaming ingest
+    guard (streaming/jobs.py::incremental_dedup_job)."""
+    b, c = probe_bands.alias("b"), index_bands.alias("c")
+    return (b.join(c, (F.col("b.band") == F.col("c.band"))
+                   & (F.col("b.key") == F.col("c.key")))
+             .select(F.col("b.doc_id").alias("doc_id"),
+                     F.col("c.doc_id").alias("dup_of"))
+             .distinct())
+
+
 # Signature memo, same rationale, keying, and collision handling as the
 # shingle memo above: the MinHash signature table is the second expensive
 # dedup artifact (a 16-way min-agg over the exploded shingle index), and
@@ -775,14 +789,8 @@ def incremental_minhash_dups(docs: DataFrame, batch_cond,
     join the size of the day's increment.
     """
     sig = _cached_signatures(docs, n, id_col, text_col)
-    batch_bands = _lsh_bands(sig.filter(batch_cond))
-    corpus_bands = _lsh_bands(sig.filter(~batch_cond))
-    b, c = batch_bands.alias("b"), corpus_bands.alias("c")
-    cand = (b.join(c, (F.col("b.band") == F.col("c.band"))
-                   & (F.col("b.key") == F.col("c.key")))
-             .select(F.col("b.doc_id").alias("doc_id"),
-                     F.col("c.doc_id").alias("dup_of"))
-             .distinct())
+    cand = lsh_cross_candidates(_lsh_bands(sig.filter(batch_cond)),
+                                _lsh_bands(sig.filter(~batch_cond)))
     return verified_jaccard_pairs(cand, sig, sig, "doc_id", "dup_of",
                                   threshold)
 

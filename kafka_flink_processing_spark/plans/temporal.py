@@ -29,7 +29,6 @@ from kafka_flink_processing_spark.functions.exact import dsum, dsum_sql
 from kafka_flink_processing_spark.plans.registry import register
 from kafka_flink_processing_spark.sources.parquet import load_table
 
-_HUB = "F.concat(F.lit('HUB'), (F.col('user_id') % 4).cast('string'))"
 _HUB_SQL = "'HUB' || CAST(user_id % 4 AS VARCHAR)"
 
 

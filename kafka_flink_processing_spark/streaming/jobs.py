@@ -1,16 +1,23 @@
-"""The four reference jobs re-expressed as Structured Streaming pipelines.
+"""The reference's Flink jobs, and the engine's document jobs, as
+Structured Streaming pipelines.
 
 | reference job (flink-job/src/main/java/com/example/) | here |
 |---|---|
-| IngestPricesAndTradesJob (kafka->postgres passthrough)  | ingest_job |
-| ForecastsJob (SMA5/20 per hub)                          | forecasts_job |
-| PnlAndExposureJob (keyed co-process -> 2 tables)        | pnl_job |
-| IngestDayAheadAndRealTimeJob                            | ingest_da_rt_job |
+| IngestPricesAndTradesJob (kafka->postgres passthrough) | ingest_job |
+| ForecastsJob (SMA5/20 per hub)                         | forecasts_job |
+| PnlAndExposureJob (keyed co-process -> 2 tables)       | pnl_job(_jdbc) |
+| IngestDayAheadAndRealTimeJob                           | ingest_job |
 
-Each takes already-parsed streaming DataFrames (from sources.kafka.
-topic_stream in production, file/rate sources in tests) and returns the
-started StreamingQuery(s). Checkpointing mirrors K2 (10 s); sinks mirror K1
-(see streaming/sinks.py).
+Each takes already-parsed streaming DataFrames (sources.kafka.
+topic_stream in production, file sources in tests) and returns the
+started StreamingQuery; decontamination_job and ccnet_quality_filter_job
+also return their cached artifacts. Every job writes through the one
+write path in streaming/sinks.py: start_epochs starts it on
+`<checkpoint_root>/<job>`, each epoch writes its tables with
+write_epoch_parquet (exactly-once, `<out_dir>/<table>/epoch=N`) or
+append_jdbc (at-least-once), and an epoch_cache scope holds what an
+epoch reads twice. No job sets a trigger interval, so Spark checkpoints
+every micro-batch (the reference every 10 s, ForecastsJob.java:28).
 """
 
 from __future__ import annotations
@@ -20,7 +27,13 @@ import os
 from pyspark.sql import DataFrame
 
 from kafka_flink_processing_spark.operators.pnl import price_exposure
-from kafka_flink_processing_spark.streaming.sinks import parquet_sink
+from kafka_flink_processing_spark.streaming.sinks import (
+    append_jdbc,
+    epoch_cache,
+    parquet_sink,
+    start_epochs,
+    write_epoch_parquet,
+)
 from kafka_flink_processing_spark.streaming.stateful import (
     streaming_pnl,
     streaming_sma_forecast,
@@ -44,61 +57,46 @@ def forecasts_job(prices: DataFrame, out_dir: str, checkpoint_root: str,
                         os.path.join(checkpoint_root, "forecasts"))
 
 
+def _pnl_fanout(trades: DataFrame, prices: DataFrame, write_table,
+                checkpoint_dir: str, available_now: bool = False):
+    """PnlAndExposureJob's body: ONE stateful fold feeding BOTH
+    positions_pnl and price_exposure, like the reference's single
+    operator with two sinks (PnlAndExposureJob.java:62-76). Each epoch
+    fans the batch out to `write_table(df, table, epoch)`, so the fold
+    runs once (two writeStreams would execute the state machine twice)."""
+    def write_both(batch: DataFrame, epoch: int) -> None:
+        with epoch_cache() as keep:
+            keep(batch)
+            write_table(batch, "positions_pnl", epoch)
+            write_table(price_exposure(batch), "price_exposure", epoch)
+
+    return start_epochs(streaming_pnl(trades, prices), write_both,
+                        checkpoint_dir, available_now)
+
+
 def pnl_job(trades: DataFrame, prices: DataFrame, out_dir: str,
             checkpoint_root: str):
-    """PnlAndExposureJob: ONE stateful fold feeding BOTH positions_pnl and
-    price_exposure, like the reference's single operator with two sinks
-    (PnlAndExposureJob.java:62-76). A single foreachBatch fans the batch out
-    so the fold runs once (two writeStreams would execute the state machine
-    twice)."""
-    pnl = streaming_pnl(trades, prices)
-
-    def write_both(batch: DataFrame, epoch: int) -> None:
-        batch.persist()
-        try:  # a failed write must not leak the cached batch (r6 review)
-            batch.write.mode("overwrite").parquet(
-                os.path.join(out_dir, "positions_pnl", f"epoch={epoch}"))
-            price_exposure(batch).write.mode("overwrite").parquet(
-                os.path.join(out_dir, "price_exposure", f"epoch={epoch}"))
-        finally:
-            batch.unpersist()
-
-    return (pnl.writeStream.foreachBatch(write_both)
-               .option("checkpointLocation",
-                       os.path.join(checkpoint_root, "pnl"))
-               .start())
+    """PnlAndExposureJob on the exactly-once parquet sink:
+    `<out_dir>/positions_pnl` and `<out_dir>/price_exposure`."""
+    return _pnl_fanout(
+        trades, prices,
+        lambda df, table, epoch: write_epoch_parquet(
+            df, os.path.join(out_dir, table), epoch),
+        os.path.join(checkpoint_root, "pnl"))
 
 
 def pnl_job_jdbc(trades: DataFrame, prices: DataFrame, url: str,
                  properties: dict[str, str], checkpoint_root: str,
                  available_now: bool = False):
-    """PnlAndExposureJob with the reference-exact sink: the SAME single
-    stateful fold fans out to BOTH SQL tables as JDBC batch inserts
-    (PnlAndExposureJob.java:53-76 writes positions_pnl AND price_exposure
-    to Postgres). At-least-once like the reference's plain INSERTs; the
-    parquet pnl_job above is the exactly-once alternative. Live-tested
+    """PnlAndExposureJob with the reference-exact sink: both tables as
+    JDBC batch inserts (PnlAndExposureJob.java:53-76 writes positions_pnl
+    AND price_exposure to Postgres). At-least-once like the reference's
+    plain INSERTs; pnl_job is the exactly-once alternative. Live-tested
     against embedded Derby in tests/test_jdbc_sink.py."""
-    from kafka_flink_processing_spark.streaming.sinks import JDBC_BATCH_SIZE
-
-    pnl = streaming_pnl(trades, prices)
-
-    def write_both(batch: DataFrame, _epoch: int) -> None:
-        batch.persist()
-        try:  # a failed insert must not leak the cached batch across
-            (batch.write.mode("append").option("batchsize", JDBC_BATCH_SIZE)
-                  .jdbc(url, "positions_pnl", properties=properties))
-            (price_exposure(batch).write.mode("append")
-                  .option("batchsize", JDBC_BATCH_SIZE)
-                  .jdbc(url, "price_exposure", properties=properties))
-        finally:  # epoch retries (storage memory fills otherwise)
-            batch.unpersist()
-
-    writer = (pnl.writeStream.foreachBatch(write_both)
-                 .option("checkpointLocation",
-                         os.path.join(checkpoint_root, "pnl_jdbc")))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _pnl_fanout(
+        trades, prices,
+        lambda df, table, _epoch: append_jdbc(df, url, table, properties),
+        os.path.join(checkpoint_root, "pnl_jdbc"), available_now)
 
 
 def incremental_dedup_job(docs_stream: DataFrame, corpus: DataFrame,
@@ -123,14 +121,12 @@ def incremental_dedup_job(docs_stream: DataFrame, corpus: DataFrame,
     (memo=False — epoch plans must not accumulate cache entries), and
     candidates are O(batch x dup rate), never corpus x corpus.
     """
-    import os as _os
-
-    from pyspark.sql import functions as F
-
     from kafka_flink_processing_spark.operators.dedup import (
         _cached_signatures,
         _doc_shingles,
         _lsh_bands,
+        lsh_cross_candidates,
+        lsh_self_candidates,
         signatures_from_shingles,
         verified_jaccard_pairs,
     )
@@ -141,55 +137,39 @@ def incremental_dedup_job(docs_stream: DataFrame, corpus: DataFrame,
     def screen(batch: DataFrame, epoch: int) -> None:
         if batch.isEmpty():
             return
-        # persist the batch shingles explicitly: the non-memoized path has
-        # no cache, and the shingle table feeds the min-agg branch, the
-        # signature join, and both verification sides — unpersisted, the
-        # string-heavy shingle UDF would run once per consumer
-        ds_b = _doc_shingles(batch, "doc_id", "text", n, memo=False).persist()
-        sig_b = signatures_from_shingles(ds_b)
-        bands_b = _lsh_bands(sig_b)
-        # batch vs standing corpus (the incremental_minhash_dups semantics)
-        cross_cand = (bands_b.alias("b")
-                      .join(corpus_bands.alias("c"),
-                            (F.col("b.band") == F.col("c.band"))
-                            & (F.col("b.key") == F.col("c.key")))
-                      .select(F.col("b.doc_id").alias("doc_id"),
-                              F.col("c.doc_id").alias("dup_of"))
-                      .distinct())
-        cross = verified_jaccard_pairs(cross_cand, sig_b, corpus_sig,
-                                       "doc_id", "dup_of", threshold)
-        # batch vs ITSELF: two near-identical docs arriving in one
-        # micro-batch must not both slip past the corpus probe — the later
-        # id is flagged as a dup of the earlier (canonical-min-id rule,
-        # same as the dedup_clusters convention). Cross-EPOCH novelty still
-        # requires folding accepted docs back into the corpus snapshot
-        # between runs — that refresh cadence is the caller's policy knob.
-        within_cand = (bands_b.alias("x")
-                       .join(bands_b.alias("y"),
-                             (F.col("x.band") == F.col("y.band"))
-                             & (F.col("x.key") == F.col("y.key"))
-                             & (F.col("x.doc_id") > F.col("y.doc_id")))
-                       .select(F.col("x.doc_id").alias("doc_id"),
-                               F.col("y.doc_id").alias("dup_of"))
-                       .distinct())
-        within = verified_jaccard_pairs(within_cand, sig_b, sig_b,
-                                        "doc_id", "dup_of", threshold)
-        dups = cross.unionByName(within).persist()
-        dups.write.mode("overwrite").parquet(
-            _os.path.join(out_dir, "dups", f"epoch={epoch}"))
-        accepted = batch.join(dups.select("doc_id").distinct(),
-                              "doc_id", "left_anti")
-        accepted.write.mode("overwrite").parquet(
-            _os.path.join(out_dir, "accepted", f"epoch={epoch}"))
-        dups.unpersist()
-        ds_b.unpersist()
+        with epoch_cache() as keep:
+            # cache the batch shingles explicitly: the non-memoized path
+            # has no cache, and the shingle table feeds the min-agg branch,
+            # the signature join, and both verification sides — uncached,
+            # the string-heavy shingle UDF would run once per consumer
+            ds_b = keep(_doc_shingles(batch, "doc_id", "text", n,
+                                      memo=False))
+            sig_b = signatures_from_shingles(ds_b)
+            bands_b = _lsh_bands(sig_b)
+            # batch vs standing corpus (incremental_minhash_dups semantics)
+            cross = verified_jaccard_pairs(
+                lsh_cross_candidates(bands_b, corpus_bands), sig_b,
+                corpus_sig, "doc_id", "dup_of", threshold)
+            # batch vs ITSELF: two near-identical docs arriving in one
+            # micro-batch must not both slip past the corpus probe — the
+            # later id is flagged as a dup of the earlier (canonical-min-id
+            # rule, same as the dedup_clusters convention). Cross-EPOCH
+            # novelty still requires folding accepted docs back into the
+            # corpus snapshot between runs — that refresh cadence is the
+            # caller's policy knob.
+            within = verified_jaccard_pairs(
+                lsh_self_candidates(bands_b, "dup_of", "doc_id"), sig_b,
+                sig_b, "doc_id", "dup_of", threshold)
+            dups = keep(cross.unionByName(within))
+            write_epoch_parquet(dups, os.path.join(out_dir, "dups"), epoch)
+            accepted = batch.join(dups.select("doc_id").distinct(),
+                                  "doc_id", "left_anti")
+            write_epoch_parquet(accepted, os.path.join(out_dir, "accepted"),
+                                epoch)
 
-    w = (docs_stream.writeStream.foreachBatch(screen)
-         .option("checkpointLocation",
-                 _os.path.join(checkpoint_root, "incremental_dedup")))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return start_epochs(docs_stream, screen,
+                        os.path.join(checkpoint_root, "incremental_dedup"),
+                        available_now)
 
 
 def decontamination_job(docs_stream: DataFrame, eval_docs: DataFrame,
@@ -219,8 +199,6 @@ def decontamination_job(docs_stream: DataFrame, eval_docs: DataFrame,
     artifact is part of the job's contract and must survive PySpark
     changing its StreamingQuery wrapper.)
     """
-    import os as _os
-
     from kafka_flink_processing_spark.operators.dedup import (
         _doc_shingles,
         bloom_bitmap,
@@ -237,25 +215,23 @@ def decontamination_job(docs_stream: DataFrame, eval_docs: DataFrame,
     def screen(batch: DataFrame, epoch: int) -> None:
         if batch.isEmpty():
             return
-        # memo=False + explicit persist: epoch plans must not accumulate
-        # cache entries, and the shingle table feeds both the probe and
-        # the per-doc sizes
-        ds_b = _doc_shingles(batch, "doc_id", "text", n, memo=False).persist()
-        hits = bloom_screen(ds_b, bloom).persist()
-        hits.write.mode("overwrite").parquet(
-            _os.path.join(out_dir, "contaminated", f"epoch={epoch}"))
-        accepted = batch.join(hits.select("doc_id"), "doc_id", "left_anti")
-        accepted.write.mode("overwrite").parquet(
-            _os.path.join(out_dir, "accepted", f"epoch={epoch}"))
-        hits.unpersist()
-        ds_b.unpersist()
+        with epoch_cache() as keep:
+            # memo=False + an epoch cache: epoch plans must not accumulate
+            # cache entries, and the shingle table feeds both the probe
+            # and the per-doc sizes
+            ds_b = keep(_doc_shingles(batch, "doc_id", "text", n,
+                                      memo=False))
+            hits = keep(bloom_screen(ds_b, bloom))
+            write_epoch_parquet(hits, os.path.join(out_dir, "contaminated"),
+                                epoch)
+            accepted = batch.join(hits.select("doc_id"), "doc_id",
+                                  "left_anti")
+            write_epoch_parquet(accepted, os.path.join(out_dir, "accepted"),
+                                epoch)
 
-    w = (docs_stream.writeStream.foreachBatch(screen)
-         .option("checkpointLocation",
-                 _os.path.join(checkpoint_root, "decontamination")))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start(), bloom
+    return start_epochs(docs_stream, screen,
+                        os.path.join(checkpoint_root, "decontamination"),
+                        available_now), bloom
 
 
 def ccnet_quality_filter_job(docs_stream: DataFrame,
@@ -297,8 +273,6 @@ def ccnet_quality_filter_job(docs_stream: DataFrame,
     after `query.awaitTermination()` (the explicit-tuple contract of
     decontamination_job).
     """
-    import os as _os
-
     from pyspark.sql import functions as F
 
     from kafka_flink_processing_spark.plans.extensions import (
@@ -308,17 +282,12 @@ def ccnet_quality_filter_job(docs_stream: DataFrame,
     )
 
     # The LM freezes DENSE (one row per bucket, n_t=0 floor for buckets
-    # the reference never produced) and the tercile map freezes as its
-    # two BOUNDARY centinats rather than an exact-bin relation — the two
-    # r12 advisory fixes for out-of-reference content: with the sparse
-    # LM + exact-bin join, a streamed doc whose bigram buckets or whose
-    # ce_c bin never occurred in the reference corpus was silently
-    # dropped from scoring or routed 'unscorable' despite >=2 tokens.
-    # Now every >=2-token doc scores (OOV bigrams hit the smoothing
-    # floor) and tercile = greatest boundary <= ce_c, which reproduces
-    # the exact-bin assignment bit-for-bit on every bin the reference
-    # DID produce (the map is monotone in ce_c), so batch parity on a
-    # self-trained corpus is unchanged.
+    # the reference never produced) and the tercile map as its two
+    # BOUNDARY centinats, so a streamed doc whose bigram buckets or ce_c
+    # bin never occurred in the reference still scores and routes when it
+    # has >=2 tokens. tercile = greatest boundary <= ce_c reproduces the
+    # exact-bin assignment on every bin the reference did produce (the
+    # map is monotone in ce_c), so batch parity is unchanged.
     lm = _ccnet_lm_dense(reference_docs).cache()
     lm.count()  # freeze the LM artifact before the first epoch
     ter = _ccnet_tercile_map(
@@ -328,38 +297,30 @@ def ccnet_quality_filter_job(docs_stream: DataFrame,
               for r in ter.groupBy("ppl_tercile")
                           .agg(F.min("ce_c").alias("b")).collect()}
     tercile = F.lit(1)
-    if bounds.get(2) is not None:
-        tercile = F.when(F.col("ce_c") >= F.lit(bounds[2]),
-                         F.lit(2)).otherwise(tercile)
-    if bounds.get(3) is not None:
-        tercile = F.when(F.col("ce_c") >= F.lit(bounds[3]),
-                         F.lit(3)).otherwise(tercile)
+    for t in (2, 3):
+        if bounds.get(t) is not None:
+            tercile = F.when(F.col("ce_c") >= F.lit(bounds[t]),
+                             F.lit(t)).otherwise(tercile)
     tercile = tercile.cast("long")
 
-    keep = list(keep_terciles)
+    kept = F.col("ppl_tercile").isin(list(keep_terciles))
+    routes = {"accepted": kept,
+              "rejected": F.col("ppl_tercile").isNotNull() & ~kept,
+              "unscorable": F.col("ppl_tercile").isNull()}
 
     def score(batch: DataFrame, epoch: int) -> None:
         if batch.isEmpty():
             return
-        b2 = _ccnet_score_with_lm(batch, lm)
-        scored = (batch.join(b2.select("doc_id", "n_bigrams", "xent_nats",
-                                       tercile.alias("ppl_tercile")),
-                             "doc_id", "left").persist())
-        scored.filter(F.col("ppl_tercile").isin(keep)).write.mode(
-            "overwrite").parquet(
-            _os.path.join(out_dir, "accepted", f"epoch={epoch}"))
-        scored.filter(F.col("ppl_tercile").isNotNull()
-                      & ~F.col("ppl_tercile").isin(keep)).write.mode(
-            "overwrite").parquet(
-            _os.path.join(out_dir, "rejected", f"epoch={epoch}"))
-        scored.filter(F.col("ppl_tercile").isNull()).write.mode(
-            "overwrite").parquet(
-            _os.path.join(out_dir, "unscorable", f"epoch={epoch}"))
-        scored.unpersist()
+        with epoch_cache() as keep:
+            b2 = _ccnet_score_with_lm(batch, lm)
+            scored = keep(batch.join(
+                b2.select("doc_id", "n_bigrams", "xent_nats",
+                          tercile.alias("ppl_tercile")),
+                "doc_id", "left"))
+            for table, route in routes.items():
+                write_epoch_parquet(scored.filter(route),
+                                    os.path.join(out_dir, table), epoch)
 
-    w = (docs_stream.writeStream.foreachBatch(score)
-         .option("checkpointLocation",
-                 _os.path.join(checkpoint_root, "ccnet_quality")))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start(), (lm, ter)
+    return start_epochs(docs_stream, score,
+                        os.path.join(checkpoint_root, "ccnet_quality"),
+                        available_now), (lm, ter)

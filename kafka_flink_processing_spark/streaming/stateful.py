@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
 from kafka_flink_processing_spark.operators.netting import TRADE
 from kafka_flink_processing_spark.operators.pnl import (
@@ -91,6 +92,16 @@ def _sma_fn(key: tuple, pdfs: Iterator[pd.DataFrame],
     yield rows
 
 
+def _sma_input(prices: DataFrame, key_col: str, ts_col: str,
+               value_col: str, seq_col: str | None) -> DataFrame:
+    """Project the SMA input to (ts, hub, price_mwh, seq), seq 0 when the
+    caller has no tie-breaker."""
+    return prices.select(
+        F.col(ts_col).alias("ts"), F.col(key_col).alias("hub"),
+        F.col(value_col).alias("price_mwh"),
+        (F.col(seq_col) if seq_col else F.lit(0)).cast("long").alias("seq"))
+
+
 def streaming_sma_forecast(prices: DataFrame,
                            key_col: str = "hub",
                            ts_col: str = "ts",
@@ -98,10 +109,7 @@ def streaming_sma_forecast(prices: DataFrame,
                            seq_col: str | None = None) -> DataFrame:
     """prices: streaming DF with (ts, hub, price_mwh[, seq tie-breaker])."""
     ensure_shipped(prices.sparkSession)
-    df = prices.select(
-        F.col(ts_col).alias("ts"), F.col(key_col).alias("hub"),
-        F.col(value_col).alias("price_mwh"),
-        (F.col(seq_col) if seq_col else F.lit(0)).cast("long").alias("seq"))
+    df = _sma_input(prices, key_col, ts_col, value_col, seq_col)
     return (df.groupBy("hub")
               .applyInPandasWithState(_sma_fn, _SMA_OUT, _SMA_STATE,
                                       "append", GroupStateTimeout.NoTimeout))
@@ -171,7 +179,7 @@ def book_puts(before: dict[str, tuple[int, float, float]],
     return puts
 
 
-class PnlProcessor:
+class PnlProcessor(StatefulProcessor):
     """StatefulProcessor port of the PnL co-process fold onto Spark 4's
     transformWithStateInPandas — the state layout finally matches the
     reference ONE-TO-ONE (PnlAndExposureJob.java:107-110): lastPrice is a
@@ -186,10 +194,6 @@ class PnlProcessor:
     account churn lives in the PnlProcessorTtl subclass (event-time
     timers evict long-flat accounts); this base processor matches the
     reference exactly — Flink never evicts either.
-
-    Declared lazily (class body imports nothing Spark-streaming-specific
-    at module import): the base class lives in
-    pyspark.sql.streaming.stateful_processor on Spark 4+.
     """
 
     def init(self, handle) -> None:
@@ -220,15 +224,6 @@ class PnlProcessor:
     def handleInputRows(self, key: tuple, rows: Iterator[pd.DataFrame],
                         timer_values) -> Iterator[pd.DataFrame]:
         yield self._fold_batch(rows)[1]
-
-    def handleInitialState(self, key, initialState, timer_values) -> None:
-        pass
-
-    def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-        return iter(())
-
-    def close(self) -> None:
-        pass
 
 
 class PnlProcessorTtl(PnlProcessor):
@@ -298,6 +293,22 @@ class PnlProcessorTtl(PnlProcessor):
         return iter(())
 
 
+def _tws_by_hub(df: DataFrame, processor: StatefulProcessor,
+                out_schema: T.StructType,
+                time_mode: str = "none") -> DataFrame:
+    """Run `processor` per hub on transformWithStateInPandas, in append
+    mode. ensure_tws_ready must precede the call: the UDF captures
+    sc.pythonExec at creation, and the tws driver worker needs the
+    wrapper for protobuf + this package (see session.ensure_tws_ready)."""
+    from kafka_flink_processing_spark.session import ensure_tws_ready
+
+    ensure_shipped(df.sparkSession)
+    ensure_tws_ready(df.sparkSession)
+    return (df.groupBy("hub")
+              .transformWithStateInPandas(processor, out_schema, "append",
+                                          time_mode))
+
+
 def streaming_pnl_tws_ttl(trades: DataFrame, prices: DataFrame,
                           ttl_ms: int,
                           watermark_delay: str = "0 seconds") -> DataFrame:
@@ -305,22 +316,13 @@ def streaming_pnl_tws_ttl(trades: DataFrame, prices: DataFrame,
     accounts flat for > ttl_ms of event time. Event-time timers need a
     watermark on the input and timeMode='eventtime'; same RocksDB
     state-store requirement as the base port."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    from kafka_flink_processing_spark.session import ensure_tws_ready
-
-    proc_cls = type("_PnlProcessorTtlTws",
-                    (PnlProcessorTtl, StatefulProcessor), {})
-    ensure_shipped(trades.sparkSession)
-    ensure_tws_ready(trades.sparkSession)
     union = tagged_events(trades, prices).withWatermark(
         "ts", watermark_delay)
-    return (union.groupBy("hub")
-            .transformWithStateInPandas(proc_cls(ttl_ms), PNL_OUT_SCHEMA,
-                                        "append", "eventtime"))
+    return _tws_by_hub(union, PnlProcessorTtl(ttl_ms), PNL_OUT_SCHEMA,
+                       "eventtime")
 
 
-class SmaProcessor:
+class SmaProcessor(StatefulProcessor):
     """StatefulProcessor port of the W1 rolling-SMA forecast onto Spark
     4's transformWithStateInPandas — state-layout parity with the
     reference's ForecastsJob (ForecastsJob.java:77-81): the <=20-price
@@ -329,10 +331,7 @@ class SmaProcessor:
     array-in-a-column encoding instead). The buffer is bounded (20
     doubles), so the per-batch rewrite is O(1) per hub; the fold is
     _sma_rows, the same as _sma_fn's, so output parity with
-    streaming_sma_forecast and the batch window plan is structural.
-
-    Declared lazily like PnlProcessor (no Spark-4-only imports at module
-    import time)."""
+    streaming_sma_forecast and the batch window plan is structural."""
 
     def init(self, handle) -> None:
         self._buf = handle.getListState("buf", "price double")
@@ -350,15 +349,6 @@ class SmaProcessor:
             self._buf.put([(float(v),) for v in buf])
         yield out
 
-    def handleInitialState(self, key, initialState, timer_values) -> None:
-        pass
-
-    def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-        return iter(())
-
-    def close(self) -> None:
-        pass
-
 
 def streaming_sma_forecast_tws(prices: DataFrame,
                                key_col: str = "hub",
@@ -368,20 +358,8 @@ def streaming_sma_forecast_tws(prices: DataFrame,
     """streaming_sma_forecast on transformWithStateInPandas (Spark 4):
     same signature, same output, ListState ring buffer. Needs the
     RocksDB state-store provider, like streaming_pnl_tws."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    from kafka_flink_processing_spark.session import ensure_tws_ready
-
-    proc_cls = type("_SmaProcessorTws", (SmaProcessor, StatefulProcessor), {})
-    ensure_shipped(prices.sparkSession)
-    ensure_tws_ready(prices.sparkSession)
-    df = prices.select(
-        F.col(ts_col).alias("ts"), F.col(key_col).alias("hub"),
-        F.col(value_col).alias("price_mwh"),
-        (F.col(seq_col) if seq_col else F.lit(0)).cast("long").alias("seq"))
-    return (df.groupBy("hub")
-              .transformWithStateInPandas(proc_cls(), _SMA_OUT,
-                                          "append", "none"))
+    return _tws_by_hub(_sma_input(prices, key_col, ts_col, value_col,
+                                  seq_col), SmaProcessor(), _SMA_OUT)
 
 
 def streaming_pnl_tws(trades: DataFrame, prices: DataFrame) -> DataFrame:
@@ -391,22 +369,8 @@ def streaming_pnl_tws(trades: DataFrame, prices: DataFrame) -> DataFrame:
     start the query inside rocksdb_state_store(spark) — the HDFS-backed
     default store does not support the transformWithState operator family.
     """
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    from kafka_flink_processing_spark.session import ensure_tws_ready
-
-    # register as a real StatefulProcessor subclass without importing the
-    # Spark-4-only base at module import time
-    proc_cls = type("_PnlProcessorTws", (PnlProcessor, StatefulProcessor), {})
-    ensure_shipped(trades.sparkSession)
-    # must precede transformWithStateInPandas: the UDF captures
-    # sc.pythonExec at creation, and the tws driver worker needs the
-    # wrapper for protobuf + this package (see session.ensure_tws_ready)
-    ensure_tws_ready(trades.sparkSession)
-    return (tagged_events(trades, prices)
-            .groupBy("hub")
-            .transformWithStateInPandas(proc_cls(), PNL_OUT_SCHEMA,
-                                        "append", "none"))
+    return _tws_by_hub(tagged_events(trades, prices), PnlProcessor(),
+                       PNL_OUT_SCHEMA)
 
 
 _PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"

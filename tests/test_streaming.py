@@ -14,8 +14,10 @@ from pyspark.sql import functions as F
 from kafka_flink_processing_spark.operators.pnl import pnl_positions
 from kafka_flink_processing_spark.operators.windows import rolling_sma_forecast
 from kafka_flink_processing_spark.plans.stateful import derive_market
-from kafka_flink_processing_spark.streaming.jobs import forecasts_job, pnl_job
-from kafka_flink_processing_spark.streaming.sinks import run_available_now
+from kafka_flink_processing_spark.streaming.sinks import (
+    run_available_now,
+    staged_stream,
+)
 from kafka_flink_processing_spark.streaming.stateful import (
     rocksdb_state_store,
     streaming_pnl,
@@ -25,32 +27,6 @@ from kafka_flink_processing_spark.streaming.stateful import (
 pytestmark = pytest.mark.slow  # integration tier (see pytest.ini)
 
 SF = "/root/testdata/sf0.001"
-
-
-def _stream_from(spark, df, tmpdir, n_files=1, order_col="ts"):
-    """Materialize a batch DF as n parquet files (split by order_col so later
-    files hold later data) and open a file-source stream over them."""
-    src = f"{tmpdir}/src"
-    if n_files == 1:
-        df.coalesce(1).write.mode("overwrite").parquet(src)
-    else:
-        df = df.withColumn("__ord", F.col(order_col).cast("double"))
-        cuts = df.approxQuantile("__ord", [i / n_files for i in range(1, n_files)], 0.0)
-        import os
-        os.makedirs(src, exist_ok=True)
-        lo = None
-        for i, hi in enumerate(list(cuts) + [None]):
-            part = df
-            if lo is not None:
-                part = part.filter(F.col("__ord") > lo)
-            if hi is not None:
-                part = part.filter(F.col("__ord") <= hi)
-            part.drop("__ord").coalesce(1).write.mode("overwrite") \
-                .parquet(f"{src}/f{i}")
-            lo = hi
-        src = f"{src}/f*"
-    return spark.readStream.schema(df.drop("__ord").schema).option(
-        "maxFilesPerTrigger", 1).parquet(src)
 
 
 def _rowset(rows):
@@ -66,7 +42,7 @@ def market(spark):
 def test_streaming_sma_matches_batch(spark, market, tmp_path):
     _, prices = market
     prices = prices.withColumn("seq", F.lit(0).cast("long"))
-    stream = _stream_from(spark, prices, str(tmp_path))
+    stream = staged_stream(prices, f"{tmp_path}/src")
     fc = streaming_sma_forecast(stream, seq_col="seq")
     run_available_now(fc, "sma_out", f"{tmp_path}/ckpt")
     got = spark.sql("SELECT ts, hub, price_mwh, sma5, sma20, forecast_next "
@@ -80,8 +56,8 @@ def test_streaming_sma_matches_batch(spark, market, tmp_path):
 
 def test_streaming_pnl_matches_batch_single_batch(spark, market, tmp_path):
     trades, prices = market
-    ts_stream = _stream_from(spark, trades, f"{tmp_path}/t")
-    px_stream = _stream_from(spark, prices, f"{tmp_path}/p")
+    ts_stream = staged_stream(trades, f"{tmp_path}/t")
+    px_stream = staged_stream(prices, f"{tmp_path}/p")
     pnl = streaming_pnl(ts_stream, px_stream)
     run_available_now(pnl, "pnl_out", f"{tmp_path}/ckpt")
     got = spark.sql("SELECT * FROM pnl_out")
@@ -107,8 +83,8 @@ def test_streaming_pnl_tws_matches_batch(spark, market, tmp_path,
         streaming_pnl_tws,
     )
     trades, prices = market
-    ts_stream = _stream_from(spark, trades, f"{tmp_path}/t")
-    px_stream = _stream_from(spark, prices, f"{tmp_path}/p")
+    ts_stream = staged_stream(trades, f"{tmp_path}/t")
+    px_stream = staged_stream(prices, f"{tmp_path}/p")
     pnl = streaming_pnl_tws(ts_stream, px_stream)
     run_available_now(pnl, "pnl_tws_out", f"{tmp_path}/ckpt")
     got = spark.sql("SELECT * FROM pnl_tws_out")
@@ -132,16 +108,8 @@ def test_streaming_pnl_tws_state_carries_across_batches(spark, market,
     allts = (trades.select("ts").unionByName(prices.select("ts"))
              .withColumn("o", F.col("ts").cast("double")))
     cut = allts.approxQuantile("o", [0.5], 0.0)[0]
-
-    def split_stream(df, base):
-        o = F.col("ts").cast("double")
-        df.filter(o <= cut).coalesce(1).write.parquet(f"{base}/f0")
-        df.filter(o > cut).coalesce(1).write.parquet(f"{base}/f1")
-        return (spark.readStream.schema(df.schema)
-                .option("maxFilesPerTrigger", 1).parquet(f"{base}/f*"))
-
-    ts_stream = split_stream(trades, f"{tmp_path}/t")
-    px_stream = split_stream(prices, f"{tmp_path}/p")
+    ts_stream = staged_stream(trades, f"{tmp_path}/t", [cut])
+    px_stream = staged_stream(prices, f"{tmp_path}/p", [cut])
     pnl = streaming_pnl_tws(ts_stream, px_stream)
     run_available_now(pnl, "pnl_tws_mb_out", f"{tmp_path}/ckpt")
     got = spark.sql("SELECT * FROM pnl_tws_mb_out")
@@ -194,11 +162,10 @@ def test_tws_state_echo_roundtrip(spark, tmp_path, rocksdb_state):
         def close(self):
             pass
 
-    df = spark.createDataFrame([("h1", 1.0)], "hub string, x double")
-    df.coalesce(1).write.parquet(f"{tmp_path}/f0")
-    df.coalesce(1).write.parquet(f"{tmp_path}/f1")
-    stream = (spark.readStream.schema(df.schema)
-              .option("maxFilesPerTrigger", 1).parquet(f"{tmp_path}/f*"))
+    # one row per micro-batch for the same key
+    df = spark.createDataFrame([("h1", 1.0), ("h1", 2.0)],
+                               "hub string, x double")
+    stream = staged_stream(df, f"{tmp_path}/src", [1.0], order_col="x")
     out = (stream.groupBy("hub")
            .transformWithStateInPandas(Echo(), out_schema, "append", "none"))
     run_available_now(out, "tws_echo_out", f"{tmp_path}/ckpt")
@@ -233,8 +200,7 @@ def test_streaming_sma_state_carries_across_batches(spark, market, tmp_path):
     _, prices = market
     one_hub = prices.filter(F.col("hub") == "HUB0") \
                     .withColumn("seq", F.lit(0).cast("long"))
-    stream = _stream_from(spark, one_hub, str(tmp_path), n_files=2,
-                          order_col="ts")
+    stream = staged_stream(one_hub, f"{tmp_path}/src", 2)
     fc = streaming_sma_forecast(stream, seq_col="seq")
     run_available_now(fc, "sma_mb_out", f"{tmp_path}/ckpt")
     got = spark.sql("SELECT ts, hub, sma5, sma20 FROM sma_mb_out")
@@ -242,41 +208,6 @@ def test_streaming_sma_state_carries_across_batches(spark, market, tmp_path):
         .select("ts", "hub", "sma5", "sma20")
     assert got.count() == want.count()
     assert _rowset(got.collect()) == _rowset(want.collect())
-
-
-def test_forecasts_job_end_to_end(spark, market, tmp_path):
-    """ForecastsJob analogue: stream -> stateful SMA -> exactly-once parquet
-    sink; output files match the batch computation."""
-    _, prices = market
-    prices = prices.withColumn("seq", F.lit(0).cast("long"))
-    stream = _stream_from(spark, prices, str(tmp_path))
-    q = forecasts_job(stream, f"{tmp_path}/out", f"{tmp_path}/ckpt",
-                      seq_col="seq")
-    q.processAllAvailable()
-    q.stop()
-    got = spark.read.parquet(f"{tmp_path}/out/forecasts/epoch=*")
-    want = (rolling_sma_forecast(
-        prices.select("ts", "hub", "price_mwh", "seq"),
-        ["hub"], ["ts", "seq"], "price_mwh")
-        .select("ts", "hub", "sma5", "sma20", "forecast_next"))
-    assert _rowset(got.collect()) == _rowset(want.collect())
-
-
-def test_pnl_job_writes_both_tables(spark, market, tmp_path):
-    trades, prices = market
-    ts_stream = _stream_from(spark, trades, f"{tmp_path}/t")
-    px_stream = _stream_from(spark, prices, f"{tmp_path}/p")
-    q = pnl_job(ts_stream, px_stream, f"{tmp_path}/out", f"{tmp_path}/ckpt")
-    q.processAllAvailable()
-    q.stop()
-    pnl = spark.read.parquet(f"{tmp_path}/out/positions_pnl/epoch=*")
-    exp = spark.read.parquet(f"{tmp_path}/out/price_exposure/epoch=*")
-    assert pnl.count() == exp.count() > 0
-    # exposure is the P4 projection of the fold rows (pnl01 = position)
-    joined = exp.select("ts", "account", "hub", "pnl01", "notional_usd")
-    sample = joined.limit(5).collect()
-    for r in sample:
-        assert r.notional_usd is not None
 
 
 def test_incremental_dedup_job_matches_batch_operator(spark):
@@ -301,8 +232,8 @@ def test_incremental_dedup_job_matches_batch_operator(spark):
         docs, batch_cond=F.col("doc_id") >= 400).collect())
 
     with tempfile.TemporaryDirectory(prefix="kfps_incdedup_") as td:
-        stream = _stream_from(spark, increment, td, n_files=2,
-                              order_col="doc_id")
+        stream = staged_stream(increment, f"{td}/src", 2,
+                               order_col="doc_id")
         q = incremental_dedup_job(stream, corpus, f"{td}/out", f"{td}/ckpt",
                                   available_now=True)
         q.awaitTermination()
@@ -360,8 +291,8 @@ def test_decontamination_job_matches_batch_operator(spark):
         docs, F.col("doc_id") % 13 == 0, n=4).collect())
 
     with tempfile.TemporaryDirectory(prefix="kfps_decon_") as td:
-        stream = _stream_from(spark, increment, td, n_files=2,
-                              order_col="doc_id")
+        stream = staged_stream(increment, f"{td}/src", 2,
+                               order_col="doc_id")
         q, bloom = decontamination_job(stream, eval_docs, f"{td}/out",
                                        f"{td}/ckpt", n=4, available_now=True)
         q.awaitTermination()
@@ -474,7 +405,7 @@ def test_streaming_sma_tws_matches_batch(spark, market, tmp_path,
     )
     _, prices = market
     prices = prices.withColumn("seq", F.lit(0).cast("long"))
-    stream = _stream_from(spark, prices, str(tmp_path))
+    stream = staged_stream(prices, f"{tmp_path}/src")
     fc = streaming_sma_forecast_tws(stream, seq_col="seq")
     run_available_now(fc, "sma_tws_out", f"{tmp_path}/ckpt")
     got = spark.sql("SELECT ts, hub, price_mwh, sma5, sma20, forecast_next "
@@ -558,16 +489,10 @@ def test_pnl_tws_ttl_evicts_long_flat_accounts(spark, tmp_path,
     px_schema = "ts timestamp, hub string, price_mwh double"
     ticks = [(t(120), "H", 53.0), (t(180), "H", 54.0), (t(240), "H", 55.0)]
 
-    trades.coalesce(1).write.parquet(f"{tmp_path}/t/f0")
-    for i, row in enumerate(ticks):
-        spark.createDataFrame([row], px_schema).coalesce(1) \
-            .write.parquet(f"{tmp_path}/p/f{i}")
-
-    ts = (spark.readStream.schema(trades.schema)
-          .option("maxFilesPerTrigger", 1).parquet(f"{tmp_path}/t/f*"))
-    px = (spark.readStream.schema(spark.createDataFrame([], px_schema)
-                                  .schema)
-          .option("maxFilesPerTrigger", 1).parquet(f"{tmp_path}/p/f*"))
+    ts = staged_stream(trades, f"{tmp_path}/t")
+    # one tick per micro-batch
+    px = staged_stream(spark.createDataFrame(ticks, px_schema),
+                       f"{tmp_path}/p", [53.0, 54.0], order_col="price_mwh")
     out = streaming_pnl_tws_ttl(ts, px, ttl_ms=60_000)
     run_available_now(out, "pnl_ttl_out", f"{tmp_path}/ckpt")
     got = spark.sql("SELECT * FROM pnl_ttl_out").collect()

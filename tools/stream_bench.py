@@ -23,7 +23,6 @@ Numbers land in SCALE.md with the shared-box caveat.
 from __future__ import annotations
 
 import json
-import os
 import sys
 import tempfile
 import time
@@ -39,33 +38,12 @@ from kafka_flink_processing_spark.streaming.jobs import (  # noqa: E402
     decontamination_job,
     incremental_dedup_job,
 )
+from kafka_flink_processing_spark.streaming.sinks import (  # noqa: E402
+    staged_stream,
+    start_epochs,
+)
 
 N_EPOCHS = 4
-
-
-def stream_epochs(spark, df, tmpdir, n_files, ord_col="doc_id",
-                  subdir="src"):
-    """Split df into n ordered parquet files and open a 1-file-per-trigger
-    stream (same construction as tests/test_streaming.py::_stream_from).
-    ord_col orders the split: doc_id for the corpus jobs, a ts-derived
-    ordinal for the stateful operators (state folds need time order)."""
-    src = f"{tmpdir}/{subdir}"
-    os.makedirs(src, exist_ok=True)
-    df = df.withColumn("__ord", F.col(ord_col).cast("double"))
-    cuts = df.approxQuantile("__ord",
-                             [i / n_files for i in range(1, n_files)], 0.0)
-    lo = None
-    for i, hi in enumerate(list(cuts) + [None]):
-        part = df
-        if lo is not None:
-            part = part.filter(F.col("__ord") > lo)
-        if hi is not None:
-            part = part.filter(F.col("__ord") <= hi)
-        part.drop("__ord").coalesce(1).write.mode("overwrite") \
-            .parquet(f"{src}/f{i}")
-        lo = hi
-    return spark.readStream.schema(df.drop("__ord").schema).option(
-        "maxFilesPerTrigger", 1).parquet(f"{src}/f*")
 
 
 def run_stateful(spark, label, build, sources, n_epochs=N_EPOCHS):
@@ -84,14 +62,11 @@ def run_stateful(spark, label, build, sources, n_epochs=N_EPOCHS):
         per_epoch_out.append(batch.count())  # forces the fold end-to-end
 
     with tempfile.TemporaryDirectory(prefix=f"kfps_sbench_{label}_") as td:
-        streams = {k: stream_epochs(spark, df, td, n_epochs, ord_col="ts",
-                                    subdir=k)
+        streams = {k: staged_stream(df, f"{td}/{k}", n_epochs)
                    for k, df in sources.items()}
         out = build(streams)
         t0 = time.time()
-        q = (out.writeStream.foreachBatch(drain)
-             .option("checkpointLocation", f"{td}/ckpt")
-             .trigger(availableNow=True).start())
+        q = start_epochs(out, drain, f"{td}/ckpt", available_now=True)
         q.awaitTermination()
         wall = time.time() - t0
         prog = [json.loads(p.json) for p in q.recentProgress]
@@ -118,7 +93,8 @@ def run_stateful(spark, label, build, sources, n_epochs=N_EPOCHS):
 def run_job(spark, job, corpus, increment, label):
     n_increment = increment.count()
     with tempfile.TemporaryDirectory(prefix=f"kfps_sbench_{label}_") as td:
-        stream = stream_epochs(spark, increment, td, N_EPOCHS)
+        stream = staged_stream(increment, f"{td}/src", N_EPOCHS,
+                               order_col="doc_id")
         t0 = time.time()
         res = job(stream, corpus, f"{td}/out", f"{td}/ckpt",
                   available_now=True)

@@ -99,7 +99,10 @@ from kafka_flink_processing_spark.operators.windows import (  # noqa: E402
 from kafka_flink_processing_spark.plans.stateful import derive_market  # noqa: E402
 from kafka_flink_processing_spark.session import get_spark  # noqa: E402
 from kafka_flink_processing_spark.sources.parquet import load_table  # noqa: E402
-from kafka_flink_processing_spark.streaming.sinks import run_available_now  # noqa: E402
+from kafka_flink_processing_spark.streaming.sinks import (  # noqa: E402
+    run_available_now,
+    staged_stream,
+)
 from kafka_flink_processing_spark.streaming.stateful import rocksdb_state_store  # noqa: E402
 
 ENGINES = ("pnl", "pnl_tws", "pnl_tws_ttl", "pnl_tws_ttl_finite",
@@ -158,28 +161,6 @@ def _rowbag(rows):
                    for r in rows)
 
 
-def _split_stream(spark, df: DataFrame, base: str, cuts: list[float],
-                  order_col: str = "ts"):
-    """Write df as len(cuts)+1 parquet files split at shared order-column
-    cuts (same cuts for every source, like the committed multi-batch
-    parity tests: per-source cuts would let a later-ts price precede an
-    earlier-ts trade across the boundary — a genuine reorder, not a
-    state bug) and open a 1-file-per-trigger stream over them. Tied rows
-    never straddle a cut (<=/> on the same boundary value)."""
-    o = F.col(order_col).cast("double")
-    lo = None
-    for i, hi in enumerate(list(cuts) + [None]):
-        part = df
-        if lo is not None:
-            part = part.filter(o > lo)
-        if hi is not None:
-            part = part.filter(o <= hi)
-        part.coalesce(1).write.mode("overwrite").parquet(f"{base}/f{i}")
-        lo = hi
-    return (spark.readStream.schema(df.schema)
-            .option("maxFilesPerTrigger", 1).parquet(f"{base}/f*"))
-
-
 def _drain(spark, df: DataFrame, name: str, ckpt: str,
            output_mode: str = "append"):
     """Drain availableNow into a memory sink. Append mode accumulates
@@ -232,7 +213,7 @@ class _session_conf:
 #   3. expired timers are processed AFTER that batch's input rows (a tick
 #      in the firing batch still fans out the about-to-be-evicted
 #      account; probed).
-# Under _split_stream staging a newly registered timer can never already
+# Under staged_stream staging a newly registered timer can never already
 # be expired (batch-k rows have ts > every prior batch's max), so the
 # register-then-sweep order within a batch is unobservable here.
 # ---------------------------------------------------------------------------
@@ -262,7 +243,7 @@ def _tagged_records(t_rows, p_rows) -> list[dict]:
 
 
 def _split_batches(recs: list[dict], cuts: list[float]) -> list[list[dict]]:
-    """Reproduce _split_stream's staging: batch k = rows of BOTH sources
+    """Reproduce staged_stream's staging: batch k = rows of BOTH sources
     with cut_{k-1} < ts <= cut_k (epoch seconds, same cast-double
     comparison). Equal file counts per source + maxFilesPerTrigger=1 put
     file k of each source in trigger k (probe-confirmed pairing)."""
@@ -413,8 +394,8 @@ def _run_corpus(spark, cname: str, seed: int, engines: list[str],
             got = _drain(
                 spark,
                 streaming_pnl(
-                    _split_stream(spark, trades, f"{work}/pt", cuts),
-                    _split_stream(spark, prices, f"{work}/pp", cuts)),
+                    staged_stream(trades, f"{work}/pt", cuts),
+                    staged_stream(prices, f"{work}/pp", cuts)),
                 f"sfz_{tag}_pnl", f"{work}/ck_pnl")
             results.append(("pnl", got == want_pnl))
         if "pnl_tws" in engines:
@@ -425,8 +406,8 @@ def _run_corpus(spark, cname: str, seed: int, engines: list[str],
                 got = _drain(
                     spark,
                     streaming_pnl_tws(
-                        _split_stream(spark, trades, f"{work}/tt", cuts),
-                        _split_stream(spark, prices, f"{work}/tp", cuts)),
+                        staged_stream(trades, f"{work}/tt", cuts),
+                        staged_stream(prices, f"{work}/tp", cuts)),
                     f"sfz_{tag}_pnl_tws", f"{work}/ck_pnl_tws")
             results.append(("pnl_tws", got == want_pnl))
         if "pnl_tws_ttl" in engines:
@@ -437,8 +418,8 @@ def _run_corpus(spark, cname: str, seed: int, engines: list[str],
                 got = _drain(
                     spark,
                     streaming_pnl_tws_ttl(
-                        _split_stream(spark, trades, f"{work}/lt", cuts),
-                        _split_stream(spark, prices, f"{work}/lp", cuts),
+                        staged_stream(trades, f"{work}/lt", cuts),
+                        staged_stream(prices, f"{work}/lp", cuts),
                         ttl_ms=_TTL_NEVER_MS),
                     f"sfz_{tag}_pnl_tws_ttl", f"{work}/ck_pnl_tws_ttl")
             results.append(("pnl_tws_ttl", got == want_pnl))
@@ -465,8 +446,8 @@ def _run_corpus(spark, cname: str, seed: int, engines: list[str],
                 got = _drain(
                     spark,
                     streaming_pnl_tws_ttl(
-                        _split_stream(spark, trades, f"{work}/ft", cuts6),
-                        _split_stream(spark, prices, f"{work}/fp", cuts6),
+                        staged_stream(trades, f"{work}/ft", cuts6),
+                        staged_stream(prices, f"{work}/fp", cuts6),
                         ttl_ms=ttl_ms),
                     f"sfz_{tag}_pnl_tws_ttl_finite",
                     f"{work}/ck_pnl_tws_ttl_finite")
@@ -491,7 +472,7 @@ def _run_corpus(spark, cname: str, seed: int, engines: list[str],
             got = _drain(
                 spark,
                 streaming_sma_forecast(
-                    _split_stream(spark, p2, f"{work}/sp", cuts),
+                    staged_stream(p2, f"{work}/sp", cuts),
                     seq_col="seq"),
                 f"sfz_{tag}_sma", f"{work}/ck_sma")
             results.append(("sma", got == want_sma))
@@ -503,7 +484,7 @@ def _run_corpus(spark, cname: str, seed: int, engines: list[str],
                 got = _drain(
                     spark,
                     streaming_sma_forecast_tws(
-                        _split_stream(spark, p2, f"{work}/st", cuts),
+                        staged_stream(p2, f"{work}/st", cuts),
                         seq_col="seq"),
                     f"sfz_{tag}_sma_tws", f"{work}/ck_sma_tws")
             results.append(("sma_tws", got == want_sma))
@@ -551,7 +532,7 @@ def _run_corpus(spark, cname: str, seed: int, engines: list[str],
             want = _rowset(build(px).collect())
             got = _drain(
                 spark,
-                build(_split_stream(spark, px, f"{work}/w_{ename}", cuts)),
+                build(staged_stream(px, f"{work}/w_{ename}", cuts)),
                 f"sfz_{tag}_{ename}", f"{work}/ck_{ename}",
                 output_mode="complete")
             results.append((ename, got == want))
@@ -703,7 +684,7 @@ def run_doc_corpus(spark, cname: str, seed: int,
                 if len(inc_ids) > 1 else []
             want_cross = _rowset(incremental_minhash_dups(
                 docs, batch_cond=F.col("doc_id") >= cut).collect())
-            stream = _split_stream(spark, increment, f"{work}/inc", icut,
+            stream = staged_stream(increment, f"{work}/inc", icut,
                                    order_col="doc_id")
             q = incremental_dedup_job(stream, corpus, f"{work}/dd_out",
                                       f"{work}/dd_ckpt",
@@ -762,7 +743,7 @@ def run_doc_corpus(spark, cname: str, seed: int,
                 if len(inc_ids) > 1 else []
             want = _rowset(contamination_screen_bloom(
                 docs, eval_cond, n=4).collect())
-            stream = _split_stream(spark, increment, f"{work}/dc", icut,
+            stream = staged_stream(increment, f"{work}/dc", icut,
                                    order_col="doc_id")
             q, bloom = decontamination_job(stream, eval_docs,
                                            f"{work}/dc_out",
@@ -797,7 +778,7 @@ def run_doc_corpus(spark, cname: str, seed: int,
                      r.ppl_tercile)
                     for r in _REG["ccnet_perplexity_buckets"]
                     .spark(spark, sf).collect()}
-            stream = _split_stream(spark, full, f"{work}/cq", icut,
+            stream = staged_stream(full, f"{work}/cq", icut,
                                    order_col="doc_id")
             q, (lm, ter) = ccnet_quality_filter_job(
                 stream, full, f"{work}/cq_out", f"{work}/cq_ckpt",
