@@ -23,36 +23,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kafka_flink_processing_spark.operators.dedup import (
-    _UNTRACKED,
-    _clear_untracked,
-    _memo_lookup,
-    _unpersist,
+    clear_dedup_caches,
+    memoized,
 )
 
-# Edge-table memo (r12, guide §5): the near-dup pair graph is the
-# persisted artifact every clustering consumer starts from —
-# dedup_clusters, cluster_aware_folds and dedup_cluster_survivors all
-# re-mined the SAME pair set from the (already memoized) signature
-# tables on every call, paying the LSH candidate join + exact-Jaccard
-# verification each time. Same posture as dedup.py's shingle/signature/
-# inverted-index memos: inputs are immutable parquet, a hit is
-# collision-checked with sameSemantics, and the 100 TB analogue is
-# materializing the pair table once per corpus snapshot (it is
-# O(near-duplicates), the smallest relation in the family). The memo
-# holds the DOUBLED, loop-partitioned edge relation plus its count so a
-# hit also skips the width-sizing action. Only the edge INTERMEDIATE is
-# memoized — the label table (each query's actual result) is computed
-# fresh on every call. Lookup, dead-session pruning and the untracked
-# list are dedup.py's, shared with its memos.
-_EDGE_MEMO: dict[tuple, tuple[DataFrame, tuple[DataFrame, int]]] = {}
+# The edge tables live in dedup.py's one artifact memo, so clearing it
+# clears them too.
+clear_cluster_caches = clear_dedup_caches
 
-
-def clear_cluster_caches() -> None:
-    """Unpersist and drop the edge-table memo (safe any time — consumers
-    recompute lazily on next use)."""
-    _unpersist(edges for _, (edges, _) in _EDGE_MEMO.values())
-    _EDGE_MEMO.clear()
-    _clear_untracked()
+# Label-propagation round bound: rounds = component diameter, 2-4 for
+# near-dup components, so the bound only stops a pathological graph.
+CC_MAX_ITER = 20
 
 
 def _loop_width(spark, n_edges: int) -> int:
@@ -72,34 +53,35 @@ def _loop_width(spark, n_edges: int) -> int:
 
 def _edge_table(pairs: DataFrame) -> tuple[DataFrame, int]:
     """Doubled (src, dst) edge relation and its row count, cached at loop
-    width, memoized per pair-mining plan."""
+    width, memoized per pair-mining plan: dedup_clusters,
+    cluster_aware_folds and dedup_cluster_survivors all start from the
+    same pair graph, and the hit also skips the width-sizing count. Only
+    this intermediate is memoized; each query's label table is computed
+    fresh on every call."""
     spark = pairs.sparkSession
-    key, hit = _memo_lookup(_EDGE_MEMO, pairs, ("edges",))
-    if hit is not None:
-        return hit
-    doubled = (pairs.select(F.col("doc_a").alias("src"),
-                            F.col("doc_b").alias("dst"))
-               .unionByName(pairs.select(F.col("doc_b").alias("src"),
-                                         F.col("doc_a").alias("dst"))))
-    # membership in few/small clusters => the edge relation is tiny
-    # relative to the corpus; cache it once, iterate on labels only.
-    # The raw cache exists only to size the loop width before the
-    # keyed repartition; it is superseded (and dropped) once the
-    # partitioned relation is primed.
-    raw = doubled.cache()
-    n_edges = raw.count()
-    edges = raw.repartition(_loop_width(spark, n_edges), "dst").cache()
-    edges.count()  # prime: every loop round joins against this build
-    raw.unpersist()
-    if key is not None:
-        _EDGE_MEMO[key] = (pairs, (edges, n_edges))
-    else:
-        _UNTRACKED.append(edges)
+    sized = []
+
+    def build():
+        doubled = (pairs.select(F.col("doc_a").alias("src"),
+                                F.col("doc_b").alias("dst"))
+                   .unionByName(pairs.select(F.col("doc_b").alias("src"),
+                                             F.col("doc_a").alias("dst"))))
+        # membership in few/small clusters => the edge relation is tiny
+        # relative to the corpus; cache it once, iterate on labels only.
+        # The raw cache exists only to size the loop width before the
+        # keyed repartition; it is dropped once the partitioned relation
+        # is primed.
+        raw = doubled.cache()
+        sized.append(raw)
+        return raw.repartition(_loop_width(spark, raw.count()), "dst")
+
+    edges, n_edges = memoized(pairs, ("edges",), build)
+    for raw in sized:
+        raw.unpersist()
     return edges, n_edges
 
 
-def connected_components(pairs: DataFrame, nodes: DataFrame,
-                         max_iter: int = 20) -> DataFrame:
+def connected_components(pairs: DataFrame, nodes: DataFrame) -> DataFrame:
     """(doc_id, canonical_id) for every node; canonical = min id reachable
     through the pair graph (nodes absent from `pairs` map to themselves).
 
@@ -134,7 +116,7 @@ def connected_components(pairs: DataFrame, nodes: DataFrame,
                            F.col("doc_id").alias("canonical_id"))
               .repartition(loop_parts, "doc_id")
               .localCheckpoint(eager=False))
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ITER):
         # new label = min over {own label} ∪ {labels of in-neighbors},
         # expressed as union + one groupBy: a single exchange per round
         # (the aggregation), versus the groupBy + per-round broadcast +

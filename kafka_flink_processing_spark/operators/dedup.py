@@ -13,15 +13,22 @@ Four families, all declarative DataFrame plans (no Python in the hot path):
   exact Jaccard verification. The scale path: candidate count ~ O(dups), not
   O(n^2).
 - simhash_pairs: 32-bit SimHash over word-bigram features + banded hamming
-  join (4 bytes; Pigeonhole: hamming<=6 pairs share >=1 exact byte... with
-  32/4 bands exact-match holds for hamming<=3 guaranteed recall per band
-  logic) + bit_count(xor) verification.
+  join (4 byte-bands; pigeonhole: <=3 differing bits cannot touch all 4
+  bytes, so every pair with hamming<=3 shares >=1 exact byte) +
+  bit_count(xor) verification.
+
+Every operator reads a (doc_id, text) documents table. The expensive
+intermediates (shingle arrays, signature tables, indexes, the cluster
+edge table) are built once per input plan through memoized(), the one
+artifact memo.
 
 All arithmetic is integer/md5-based so the DuckDB oracles in
 plans/extensions.py reproduce results bit-for-bit.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 import pandas as pd
 
@@ -71,117 +78,103 @@ def _shingle_udf(n: int):
     return f
 
 
-def exact_dedup(docs: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Exact duplicate groups over normalized text: (text_hash, n_docs,
     canonical_id = min id). Works at any scale: shuffle on the 128-bit hash,
     never on the text itself."""
-    norm = normalize_text(F.col(text_col))
-    return (docs.select(F.col(id_col), F.md5(norm).alias("text_hash"))
+    norm = normalize_text(F.col("text"))
+    return (docs.select(F.col("doc_id"), F.md5(norm).alias("text_hash"))
                 .groupBy("text_hash")
                 .agg(F.count("*").alias("n_docs"),
-                     F.min(id_col).alias("canonical_id")))
+                     F.min("doc_id").alias("canonical_id")))
 
 
-# Shingle-index memo: every dedup family (jaccard, minhash, simhash) starts
-# from the same distinct-n-gram arrays, so compute them once per (input plan,
-# n) and share the cached DataFrame. This is the local-mode analogue of
-# persisting the shingle index as a table, which is what a 100 TB pipeline
-# does between dedup passes (the index is the expensive artifact; every
-# consumer after that is cheap). Inputs here are immutable parquet, so the
-# memo cannot go stale. semanticHash is 32-bit, so a hit is confirmed with
-# sameSemantics against the stored source plan before reuse — a cross-plan
-# collision recomputes instead of returning another input's shingles.
-# Entries hold (source_df, derived); clear_dedup_caches() unpersists.
-_SHINGLE_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-_SIG_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-_INV_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-_ESS_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-
-# Cached tables that could NOT be memoized (semanticHash failure or a
-# 32-bit collision, the key=None path): tracked here so the clear
-# functions can still unpersist them instead of leaking them for the
-# session lifetime. Shared by every memo that caches on a miss.
-_UNTRACKED: list[DataFrame] = []
+# The one artifact memo: (session, semanticHash, *parts) ->
+# (source plan, cached artifact, primed row count). Only memoized() looks
+# entries up or adds them; clear_dedup_caches() empties it.
+_MEMO: dict[tuple, tuple[DataFrame, DataFrame, int]] = {}
 
 
-def _unpersist(tables) -> None:
-    for df in tables:
+def memoized(source: DataFrame, parts: tuple,
+             build: Callable[[], DataFrame]) -> tuple[DataFrame, int]:
+    """(artifact, n_rows) for the derivation `build()` of `source`: built,
+    cached and primed once per (session, input plan, parts), then shared.
+
+    The artifacts are the expensive dedup/cluster intermediates every
+    consumer after them reuses: the shingle arrays (all three dedup
+    families start from them), the MinHash signature table (a 16-way
+    min-agg; pairs and clustering both start from it), the SimHash table
+    (a 32-way bit aggregation), the df-capped inverted index, the
+    ExactSubstr anchor index, and the doubled near-dup edge table. Each
+    feeds several plan branches (both sides of a self-join, sizes +
+    join sides), so without a cache one action builds it once per
+    branch: the r2 bench showed dedup_ngram_jaccard paying +178% and
+    the unprimed signature table racing its cold cache up to 4x
+    (BENCH_r02: 6.403s vs 0.761s primed). One count() guarantees a
+    single build. The 100 TB analogue is persisting each artifact as a
+    table once per corpus snapshot.
+
+    Key: `parts` starts with a kind tag ("shingles", "minhash", ...), so
+    two artifacts of the same input and `n` stay distinct. Inputs are
+    immutable parquet, so an entry cannot go stale; semanticHash is
+    32-bit, so a hit is confirmed with sameSemantics against the stored
+    source plan, and a collision rebuilds instead of returning another
+    input's artifact. Entries of stopped sessions are dropped on every
+    call (their cached blocks died with the SparkContext).
+
+    Miss path, one policy: when the key cannot be built (semanticHash or
+    sameSemantics raises) or collides, the artifact is still cached,
+    primed and stored, under a key no lookup can match, so its consumers
+    still read one build and clear_dedup_caches() still unpersists it.
+
+    Streaming epochs call the plain builders (shingle_table,
+    signatures_from_shingles) instead: each epoch is a new plan, so
+    memoizing would grow one entry per epoch forever."""
+    for key in list(_MEMO):
         try:
-            df.unpersist()
+            stopped = key[0].sparkContext._jsc.sc().isStopped()
         except Exception:
-            pass
-
-
-def _clear_untracked() -> None:
-    _unpersist(_UNTRACKED)
-    _UNTRACKED.clear()
+            stopped = True
+        if stopped:
+            del _MEMO[key]
+    spark = source.sparkSession
+    try:
+        key = (spark, source.semanticHash(), *parts)
+        hit = _MEMO.get(key)
+        if hit is not None:
+            if source.sameSemantics(hit[0]):
+                return hit[1], hit[2]
+            key = (spark, object(), *parts)  # 32-bit collision
+    except Exception:
+        key = (spark, object(), *parts)
+    artifact = build().cache()
+    n_rows = artifact.count()  # the one priming job per artifact
+    _MEMO[key] = (source, artifact, n_rows)
+    return artifact, n_rows
 
 
 def clear_dedup_caches() -> None:
-    """Unpersist and drop the dedup memo tables (frees executor storage;
-    safe any time — consumers recompute lazily on next use)."""
-    for memo in (_SIG_CACHE, _SHINGLE_CACHE, _INV_CACHE, _ESS_CACHE):
-        _unpersist(derived for _, derived in memo.values())
-        memo.clear()
-    _clear_untracked()
-
-
-def _prune_dead_sessions(memo) -> None:
-    """Drop memo entries whose SparkSession has been stopped: the key holds
-    the session object, so dead-session entries (and their RDD references)
-    would otherwise be retained for the process lifetime. Their cached
-    blocks died with the session's SparkContext; only the dict entries
-    need collecting."""
-    dead = []
-    for key in memo:
+    """Unpersist and drop every memoized artifact, dedup and cluster
+    alike (frees executor storage; safe any time: consumers rebuild on
+    next use)."""
+    for _, artifact, _ in _MEMO.values():
         try:
-            if key[0].sparkContext._jsc.sc().isStopped():
-                dead.append(key)
-        except Exception:
-            dead.append(key)
-    for key in dead:
-        memo.pop(key, None)
-
-
-def _memo_lookup(memo, docs: DataFrame, parts: tuple):
-    """(key, hit) for a memoized derivation of `docs`; collision-checked."""
-    _prune_dead_sessions(memo)
-    try:
-        key = (docs.sparkSession, docs.semanticHash(), *parts)
-    except Exception:
-        return None, None
-    hit = memo.get(key)
-    if hit is not None:
-        source, derived = hit
-        try:
-            if docs.sameSemantics(source):
-                return key, derived
+            artifact.unpersist()
         except Exception:
             pass
-        return None, None  # 32-bit collision: recompute, don't evict or cache
-    return key, None
+    _MEMO.clear()
 
 
-def _doc_shingles(docs: DataFrame, id_col: str, text_col: str,
-                  n: int, memo: bool = True) -> DataFrame:
+def shingle_table(docs: DataFrame, n: int) -> DataFrame:
+    """(doc_id, sh): each document's distinct word n-grams, unmemoized."""
     from kafka_flink_processing_spark.shipping import ensure_shipped
     ensure_shipped(docs.sparkSession)
-    if not memo:
-        # streaming micro-batches pass memo=False: each epoch is a new
-        # plan, so memoizing would grow one cache entry per epoch forever
-        return docs.select(F.col(id_col).alias("doc_id"),
-                           _shingle_udf(n)(F.col(text_col)).alias("sh"))
-    key, hit = _memo_lookup(_SHINGLE_CACHE, docs, (id_col, text_col, n))
-    if hit is not None:
-        return hit
-    ds = docs.select(F.col(id_col).alias("doc_id"),
-                     _shingle_udf(n)(F.col(text_col)).alias("sh"))
-    if key is not None:
-        ds = ds.cache()
-        ds.count()  # prime once; every dedup family reuses the materialization
-        _SHINGLE_CACHE[key] = (docs, ds)
-    return ds
+    return docs.select(F.col("doc_id"),
+                       _shingle_udf(n)(F.col("text")).alias("sh"))
+
+
+def _doc_shingles(docs: DataFrame, n: int) -> DataFrame:
+    return memoized(docs, ("shingles", n), lambda: shingle_table(docs, n))[0]
 
 
 # Stop-shingle document-frequency cap, on by default: a shingle occurring in
@@ -198,39 +191,26 @@ NGRAM_MAX_DF = 1000
 def _filtered_inverted_index(ds: DataFrame, min_df: int,
                              max_df: int | None) -> DataFrame:
     """(doc_id, sh) inverted shingle index keeping shingles with document
-    frequency in [min_df, max_df] (see NGRAM_MAX_DF). Memoized per
-    (shingle plan, bounds): the index feeds BOTH sides of the candidate
-    self-join, so without a cache the df groupBy + semi-join runs twice
-    per action — and the r2 bench showed dedup_ngram_jaccard paying
-    exactly that (+178%). Cached + primed, the df pass runs once and both
-    join sides read the materialization (the 100 TB analogue: the
-    df-capped index is persisted as a table once per corpus snapshot,
-    every dedup pass reads it)."""
-    lo = min_df
-    hi = max_df if max_df is not None else None
-    key, hit = _memo_lookup(_INV_CACHE, ds, (lo, hi))
-    if hit is not None:
-        return hit
-    inv = ds.select("doc_id", F.explode("sh").alias("sh"))
-    if lo > 1 or hi is not None:
-        cond = F.col("df") >= lo
-        if hi is not None:
-            cond = cond & (F.col("df") <= hi)
-        kept = (inv.groupBy("sh").agg(F.count("*").alias("df"))
-                   .filter(cond).select("sh"))
-        inv = inv.join(kept, "sh")
-    if key is not None:
-        inv = inv.cache()
-        inv.count()  # prime: both self-join sides must hit the same build
-        _INV_CACHE[key] = (ds, inv)
-    return inv
+    frequency in [min_df, max_df] (see NGRAM_MAX_DF), memoized: it feeds
+    both sides of the candidate self-join, and its df >= DUP_SPAN_MIN_DF
+    form feeds both dup_span_redact and dup_span_stats."""
+    def build():
+        inv = ds.select("doc_id", F.explode("sh").alias("sh"))
+        if min_df > 1 or max_df is not None:
+            cond = F.col("df") >= min_df
+            if max_df is not None:
+                cond = cond & (F.col("df") <= max_df)
+            kept = (inv.groupBy("sh").agg(F.count("*").alias("df"))
+                       .filter(cond).select("sh"))
+            inv = inv.join(kept, "sh")
+        return inv
+    return memoized(ds, ("inverted", min_df, max_df), build)[0]
 
 
-def _jaccard_intersections(ds: DataFrame, prune_singletons: bool,
-                           max_df: int | None) -> DataFrame:
+def _jaccard_intersections(ds: DataFrame, max_df: int | None) -> DataFrame:
     """(doc_a, doc_b, n_common) candidate intersections from the shingle
     index, with the df-bounded inverted index (see NGRAM_MAX_DF)."""
-    inv = _filtered_inverted_index(ds, 2 if prune_singletons else 1, max_df)
+    inv = _filtered_inverted_index(ds, 1, max_df)
     a, b = inv.alias("a"), inv.alias("b")
     return (a.join(b, (F.col("a.sh") == F.col("b.sh"))
                    & (F.col("a.doc_id") < F.col("b.doc_id")))
@@ -240,9 +220,6 @@ def _jaccard_intersections(ds: DataFrame, prune_singletons: bool,
 
 
 def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.6,
-                        id_col: str = "doc_id",
-                        text_col: str = "text",
-                        prune_singletons: bool = False,
                         max_df: int | None = NGRAM_MAX_DF) -> DataFrame:
     """All pairs with distinct-word-n-gram Jaccard >= threshold, via an
     inverted index join (each shared shingle contributes one pre-aggregated
@@ -252,12 +229,6 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.6,
     they are cached AND primed so the string-heavy shingle generation runs
     once, not per branch.
 
-    prune_singletons drops shingles with document frequency 1 before the
-    self-join — semantics-preserving (singletons contribute no pairs) and a
-    large win on heavy-tailed real corpora where most shingles are unique;
-    OFF by default because on dense small-vocab corpora (like the testdata,
-    mean df ~10) it prunes nothing and costs an extra shuffle.
-
     max_df (ON by default, see NGRAM_MAX_DF) drops shingles with df above
     the cap from the index: intersection counts then ignore boilerplate
     shingles, so a pair's Jaccard can only decrease vs the uncapped form —
@@ -266,9 +237,9 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.6,
     instead of quadratic in the hottest shingle. Pass max_df=None for the
     exact uncapped semantics.
     """
-    ds = _doc_shingles(docs, id_col, text_col, n)  # cached + primed by memo
+    ds = _doc_shingles(docs, n)
     sizes = ds.select("doc_id", F.size("sh").alias("n_sh"))
-    inter = _jaccard_intersections(ds, prune_singletons, max_df)
+    inter = _jaccard_intersections(ds, max_df)
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
     return (inter.join(sa, "doc_a").join(sb, "doc_b")
@@ -291,11 +262,9 @@ def signatures_from_shingles(ds: DataFrame) -> DataFrame:
     return sig.join(ds, "doc_id")
 
 
-def minhash_signatures(docs: DataFrame, n: int = 3, id_col: str = "doc_id",
-                       text_col: str = "text", memo: bool = True) -> DataFrame:
+def minhash_signatures(docs: DataFrame, n: int = 3) -> DataFrame:
     """One row per doc with mh0..mh{k-1} minhash values + the shingle set."""
-    ds = _doc_shingles(docs, id_col, text_col, n, memo=memo)
-    return signatures_from_shingles(ds)
+    return signatures_from_shingles(_doc_shingles(docs, n))
 
 
 def jaccard_expr(sh_left, sh_right):
@@ -359,26 +328,9 @@ def lsh_cross_candidates(probe_bands: DataFrame,
              .distinct())
 
 
-# Signature memo, same rationale, keying, and collision handling as the
-# shingle memo above: the MinHash signature table is the second expensive
-# dedup artifact (a 16-way min-agg over the exploded shingle index), and
-# both the pair query and the clustering query start from it.
-def _cached_signatures(docs: DataFrame, n: int, id_col: str,
-                       text_col: str) -> DataFrame:
-    key, hit = _memo_lookup(_SIG_CACHE, docs, (id_col, text_col, n))
-    if hit is not None:
-        return hit
-    sig = minhash_signatures(docs, n, id_col, text_col)
-    if key is not None:
-        sig = sig.cache()
-        # Eager prime, restored after the r2 bench regression: without it
-        # the four plan branches reading sig (bands a/b + sh_a/sh_b) race
-        # the cold cache inside one job and the 16-way min-agg can run up
-        # to 4x before the cache fills (BENCH_r02: 6.403s vs 0.761s primed
-        # in r1). One count() guarantees a single build.
-        sig.count()
-        _SIG_CACHE[key] = (docs, sig)
-    return sig
+def _cached_signatures(docs: DataFrame, n: int) -> DataFrame:
+    return memoized(docs, ("minhash", n),
+                    lambda: minhash_signatures(docs, n))[0]
 
 
 def _lsh_bands(sig: DataFrame) -> DataFrame:
@@ -395,24 +347,22 @@ def _lsh_bands(sig: DataFrame) -> DataFrame:
     return bands.select("doc_id", "bk.band", "bk.key")
 
 
-def minhash_lsh_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.6,
-                      id_col: str = "doc_id",
-                      text_col: str = "text") -> DataFrame:
+def minhash_lsh_pairs(docs: DataFrame, n: int = 3,
+                      threshold: float = 0.6) -> DataFrame:
     """LSH candidates (bands of 2 minhashes) verified with exact Jaccard.
 
     P(candidate | j) = 1 - (1 - j^2)^8 — >=0.999 at j=0.8. Candidate
     verification uses array_intersect on the (distinct) shingle sets, which
     only runs on same-band pairs.
     """
-    sig = _cached_signatures(docs, n, id_col, text_col)
+    sig = _cached_signatures(docs, n)
     cand = lsh_self_candidates(_lsh_bands(sig))
     return verified_jaccard_pairs(cand, sig, sig, "doc_a", "doc_b", threshold)
 
 
-def simhash(docs: DataFrame, id_col: str = "doc_id",
-            text_col: str = "text") -> DataFrame:
+def simhash(docs: DataFrame) -> DataFrame:
     """32-bit SimHash over distinct word-bigram features."""
-    feats = _doc_shingles(docs, id_col, text_col, 2)
+    feats = _doc_shingles(docs, 2)
     exploded = feats.select("doc_id", F.explode("sh").alias("sh"))
     h32 = md5_hash60(F.col("sh")) % F.lit(2 ** SIMHASH_BITS)
     exploded = exploded.select("doc_id", h32.alias("h"))
@@ -429,22 +379,11 @@ def simhash(docs: DataFrame, id_col: str = "doc_id",
     return agg.select("doc_id", sh_val.alias("simhash"))
 
 
-def simhash_pairs(docs: DataFrame, max_hamming: int = 3,
-                  id_col: str = "doc_id",
-                  text_col: str = "text") -> DataFrame:
+def simhash_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs with hamming(simhash) <= max_hamming via 4-byte banding
     (pigeonhole: <=3 differing bits can't touch all 4 bytes) + exact
     bit_count verification."""
-    key, hit = _memo_lookup(_SIG_CACHE, docs, ("simhash", id_col, text_col))
-    if hit is not None:
-        sh = hit
-    else:
-        sh = simhash(docs, id_col, text_col).cache()
-        sh.count()  # prime: the 32-way bit aggregation feeds both join sides
-        if key is not None:
-            _SIG_CACHE[key] = (docs, sh)
-        else:
-            _UNTRACKED.append(sh)
+    sh, _ = memoized(docs, ("simhash",), lambda: simhash(docs))
     bands = sh.select(
         "doc_id", "simhash",
         F.explode(F.array(*[
@@ -468,17 +407,20 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3,
              .distinct())
 
 
-def dup_span_redact(docs: DataFrame, n: int = 3, min_df: int = 2,
-                    id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
+# dup_span_redact's duplicated-gram screen: a gram is duplicated when it
+# occurs in at least this many documents.
+DUP_SPAN_MIN_DF = 2
+
+
+def dup_span_redact(docs: DataFrame, n: int = 3) -> DataFrame:
     """Span-level exact-substring dedup — the APPLY step of the dup-span
     family: rebuild each document with every corpus-duplicated word n-gram
     run excised (Lee et al. 2022 exact-substring dedup at n-gram
     granularity; dup_span_stats is the matching signal/ranking pass).
 
-    A word is removed iff ANY n-gram covering it occurs in >= min_df
-    documents. Returns (doc_id, clean_text, n_words, n_removed_words,
-    removed_fraction) for every document.
+    A word is removed iff ANY n-gram covering it occurs in >=
+    DUP_SPAN_MIN_DF documents. Returns (doc_id, clean_text, n_words,
+    n_removed_words, removed_fraction) for every document.
 
     Scale shape: LINEAR in corpus words end-to-end. The duplicated-gram
     screen is the memoized df-filtered inverted index (the artifact
@@ -493,13 +435,13 @@ def dup_span_redact(docs: DataFrame, n: int = 3, min_df: int = 2,
     boilerplate-heavy long documents this operator targets.
     String/integer-only, so the DuckDB oracle (list-comprehension form)
     matches bit-for-bit."""
-    ds = _doc_shingles(docs, id_col, text_col, n)
-    # one memoized df screen for any min_df (shared with dup_span_stats
-    # at the default 2: one corpus-wide df pass per session, not one per
-    # operator)
-    dup_index = _filtered_inverted_index(ds, min_df, None).select("sh")
-    base = docs.select(F.col(id_col).alias("doc_id"),
-                       F.split(F.col(text_col), " ").alias("words"))
+    ds = _doc_shingles(docs, n)
+    # the memoized df screen, shared with dup_span_stats: one corpus-wide
+    # df pass per session, not one per operator
+    dup_index = _filtered_inverted_index(ds, DUP_SPAN_MIN_DF,
+                                         None).select("sh")
+    base = docs.select(F.col("doc_id"),
+                       F.split(F.col("text"), " ").alias("words"))
 
     def gram_at(i):  # i is the 1-based start position of the n-gram
         return F.concat_ws(" ", *[F.element_at(F.col("words"), i + k)
@@ -564,72 +506,64 @@ def dup_span_redact(docs: DataFrame, n: int = 3, min_df: int = 2,
                     .alias("removed_fraction")))
 
 
-def _ess_anchor_index(docs: DataFrame, k: int, max_df: int,
-                      id_col: str, text_col: str) -> DataFrame:
+def _ess_anchor_index(docs: DataFrame, k: int, max_df: int) -> DataFrame:
     """(doc_id, pos, g, gh) anchor index for ExactSubstr: positional
     k-grams surviving the hash df>=2 screen AND the exact-gram
-    [2, max_df] cap — O(duplicated content) by construction. Memoized
-    per (input plan, k, max_df) like the shingle index above: the
-    relation feeds BOTH sides of the seed self-join plus the redact
+    [2, max_df] cap — O(duplicated content) by construction. Memoized:
+    the relation feeds BOTH sides of the seed self-join plus the redact
     apply step, and without a cache every consumer re-runs the
     corpus-sized gram explode (the r12 executed plan showed the explode
-    3-4x per action). Cached + primed, the explode runs exactly twice
-    (once under the anchor aggregate, once materializing the
-    survivors), which is the minimum for a screen-then-attach shape
-    that never shuffles the corpus-sized gram-string relation — the
-    100 TB analogue is persisting the duplicated-content anchor table
-    once per corpus snapshot."""
+    3-4x per action). With the hash-screened intermediate cached too,
+    the explode runs exactly twice (once under the anchor aggregate,
+    once materializing the survivors), which is the minimum for a
+    screen-then-attach shape that never shuffles the corpus-sized
+    gram-string relation."""
+    screened = []
 
     def gram_at(i):  # i is the 1-based start position of the k-gram
         return F.concat_ws(" ", *[F.element_at(F.col("words"), i + t)
                                   for t in range(k)])
 
-    key, hit = _memo_lookup(_ESS_CACHE, docs,
-                            ("ess", id_col, text_col, k, max_df))
-    if hit is not None:
-        return hit
-    base = docs.select(F.col(id_col).alias("doc_id"),
-                       F.split(F.col(text_col), " ").alias("words"))
-    grams = F.when(
-        F.size("words") < k, F.array().cast("array<string>")).otherwise(
-        F.transform(F.sequence(F.lit(1), F.size("words") - (k - 1)),
-                    gram_at))
-    pg = (base.select("doc_id", F.posexplode(grams).alias("i0", "g"))
-              .select("doc_id", (F.col("i0") + 1).alias("pos"), "g",
-                      F.xxhash64("g").alias("gh")))
-    # anchor screen on the 8-byte hash: ONLY the df >= 2 lower bound
-    # (collision-safe in this direction; see docstring)
-    anchors = (pg.groupBy("gh")
-                 .agg(F.count_distinct("doc_id").alias("df"))
-                 .filter(F.col("df") >= 2)
-                 .select("gh"))
-    ag = pg.join(anchors, "gh", "leftsemi")
-    if key is not None:
-        ag = ag.cache()
+    def build():
+        base = docs.select(F.col("doc_id"),
+                           F.split(F.col("text"), " ").alias("words"))
+        grams = F.when(
+            F.size("words") < k, F.array().cast("array<string>")).otherwise(
+            F.transform(F.sequence(F.lit(1), F.size("words") - (k - 1)),
+                        gram_at))
+        pg = (base.select("doc_id", F.posexplode(grams).alias("i0", "g"))
+                  .select("doc_id", (F.col("i0") + 1).alias("pos"), "g",
+                          F.xxhash64("g").alias("gh")))
+        # anchor screen on the 8-byte hash: ONLY the df >= 2 lower bound
+        # (collision-safe in this direction; see exactsubstr_spans)
+        anchors = (pg.groupBy("gh")
+                     .agg(F.count_distinct("doc_id").alias("df"))
+                     .filter(F.col("df") >= 2)
+                     .select("gh"))
+        ag = pg.join(anchors, "gh", "leftsemi").cache()
         ag.count()  # prime: the cap screen and the final attach both read it
-    # r12: the <= max_df cap binds on EXACT grams over the surviving
-    # relation (O(duplicated content)) — a hash-pooled df could exceed
-    # the cap and silently drop both colliding grams' spans at scale.
-    # The exact df >= 2 bound rides along for free: it drops grams that
-    # only survived the hash screen via a collision (they would die in
-    # the exact-string pair join anyway, but this keeps their rows out
-    # of the self-join entirely).
-    capped = (ag.groupBy("gh", "g")
-                .agg(F.count_distinct("doc_id").alias("gdf"))
-                .filter((F.col("gdf") >= 2) & (F.col("gdf") <= max_df))
-                .select("gh", "g"))
-    out = ag.join(capped, ["gh", "g"], "leftsemi")
-    if key is not None:
-        out = out.cache()
-        out.count()  # prime once; both self-join sides + redact reuse it
-        ag.unpersist()  # superseded by the capped relation
-        _ESS_CACHE[key] = (docs, out)
+        screened.append(ag)
+        # r12: the <= max_df cap binds on EXACT grams over the surviving
+        # relation (O(duplicated content)) — a hash-pooled df could exceed
+        # the cap and silently drop both colliding grams' spans at scale.
+        # The exact df >= 2 bound rides along for free: it drops grams
+        # that only survived the hash screen via a collision (they would
+        # die in the exact-string pair join anyway, but this keeps their
+        # rows out of the self-join entirely).
+        capped = (ag.groupBy("gh", "g")
+                    .agg(F.count_distinct("doc_id").alias("gdf"))
+                    .filter((F.col("gdf") >= 2) & (F.col("gdf") <= max_df))
+                    .select("gh", "g"))
+        return ag.join(capped, ["gh", "g"], "leftsemi")
+
+    out, _ = memoized(docs, ("ess", k, max_df), build)
+    for ag in screened:
+        ag.unpersist()  # superseded by the primed capped relation
     return out
 
 
-def exactsubstr_spans(docs: DataFrame, min_len: int = 8, max_df: int = 64,
-                      id_col: str = "doc_id",
-                      text_col: str = "text") -> DataFrame:
+def exactsubstr_spans(docs: DataFrame, min_len: int = 8,
+                      max_df: int = 64) -> DataFrame:
     """ExactSubstr duplicated-substring mining (Lee et al. 2022,
     'Deduplicating Training Data Makes Language Models Better' — the
     suffix-array ExactSubstr variant, re-expressed as anchored diagonal
@@ -684,7 +618,7 @@ def exactsubstr_spans(docs: DataFrame, min_len: int = 8, max_df: int = 64,
     only, doc_a < doc_b); word-granular, like the rest of the dup-span
     family. Integer/string-only arithmetic, bit-exact oracle."""
     k = min_len
-    ag = _ess_anchor_index(docs, k, max_df, id_col, text_col)
+    ag = _ess_anchor_index(docs, k, max_df)
     a, b = ag.alias("a"), ag.alias("b")
     # join on the hash, verify the exact string (collision-proof), and
     # orient pairs doc_a < doc_b
@@ -707,8 +641,7 @@ def exactsubstr_spans(docs: DataFrame, min_len: int = 8, max_df: int = 64,
 
 
 def exactsubstr_redact(docs: DataFrame, min_len: int = 8,
-                       max_df: int = 64, id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
+                       max_df: int = 64) -> DataFrame:
     """The APPLY step of ExactSubstr dedup (Lee et al. 2022): rebuild
     each document with every duplicated span occurrence excised EXCEPT
     the copy in the smallest doc_id that shares it — the paper's
@@ -732,8 +665,7 @@ def exactsubstr_redact(docs: DataFrame, min_len: int = 8,
     (span_len rows each), the anti-join and position-ordered rebuild
     are the dup_span_redact pattern — the only corpus-sized exchange is
     the doc-keyed reassembly, which IS the output."""
-    spans = exactsubstr_spans(docs, min_len=min_len, max_df=max_df,
-                              id_col=id_col, text_col=text_col)
+    spans = exactsubstr_spans(docs, min_len=min_len, max_df=max_df)
     # same scale-safe rebuild tail as dup_span_redact (r12, guide §3.1):
     # co-partition words + covered positions by doc_id once, per-partition
     # hash anti-join (never a broadcast of the covered relation), and a
@@ -747,8 +679,8 @@ def exactsubstr_redact(docs: DataFrame, min_len: int = 8,
             F.col("b_start") + F.col("span_len") - 1)).alias("j"))
         .repartition(F.col("doc_id"))
         .dropDuplicates(["doc_id", "j"]))
-    base = docs.select(F.col(id_col).alias("doc_id"),
-                       F.split(F.col(text_col), " ").alias("words"))
+    base = docs.select(F.col("doc_id"),
+                       F.split(F.col("text"), " ").alias("words"))
     pw = (base.select("doc_id", F.posexplode("words").alias("j0", "w"))
               .select("doc_id", (F.col("j0") + 1).alias("j"), "w")
               .repartition(F.col("doc_id")))
@@ -775,9 +707,7 @@ def exactsubstr_redact(docs: DataFrame, min_len: int = 8,
 
 
 def incremental_minhash_dups(docs: DataFrame, batch_cond,
-                             n: int = 3, threshold: float = 0.6,
-                             id_col: str = "doc_id",
-                             text_col: str = "text") -> DataFrame:
+                             n: int = 3, threshold: float = 0.6) -> DataFrame:
     """Near-dup screen of an arriving batch against the standing corpus:
     (doc_id [batch], dup_of [corpus], jaccard) for every cross pair with
     Jaccard >= threshold.
@@ -788,7 +718,7 @@ def incremental_minhash_dups(docs: DataFrame, batch_cond,
     band table is the persisted LSH index and this is a bucketed lookup
     join the size of the day's increment.
     """
-    sig = _cached_signatures(docs, n, id_col, text_col)
+    sig = _cached_signatures(docs, n)
     cand = lsh_cross_candidates(_lsh_bands(sig.filter(batch_cond)),
                                 _lsh_bands(sig.filter(~batch_cond)))
     return verified_jaccard_pairs(cand, sig, sig, "doc_id", "dup_of",
@@ -802,39 +732,39 @@ def incremental_minhash_dups(docs: DataFrame, batch_cond,
 # size m to the EVAL-gram count, never the corpus (m ~ 10-20 bits/gram
 # keeps the false-positive rate <1% at k=3; 2^20 covers ~100k eval grams
 # — an undersized bitmap saturates and flags everything, observed at 2^17
-# against the sf0.1 eval slice).
+# against the sf0.1 eval slice). m must be a power of two and 1 <= k < m:
+# the no-false-negative guarantee rests on the k probe positions being
+# pairwise distinct, which the odd-stride argument only gives then.
 BLOOM_M_BITS = 1 << 20
 BLOOM_K = 3
 
 
-def _bloom_positions(h, m_bits: int, k: int):
-    """k double-hashed bit positions for a 60-bit gram hash. h1 reads the
-    low log2(m) hash bits, the stride reads the NEXT log2(m) bits (disjoint
-    — no h1/h2 correlation) and is forced odd so it is coprime with the
-    power-of-two m_bits: the k positions are pairwise distinct for
-    k < m_bits. Integer-only — DuckDB reproduces it exactly
+def _bloom_positions(h):
+    """BLOOM_K double-hashed bit positions for a 60-bit gram hash. h1
+    reads the low log2(m) hash bits, the stride reads the NEXT log2(m)
+    bits (disjoint — no h1/h2 correlation) and is forced odd so it is
+    coprime with the power-of-two BLOOM_M_BITS: the k positions are
+    pairwise distinct. Integer-only — DuckDB reproduces it exactly
     (plans/extensions.py::decontaminate_bloom)."""
-    log2m = m_bits.bit_length() - 1
-    h1 = h % m_bits
-    h2 = (F.shiftright(h, log2m) % m_bits).bitwiseOR(F.lit(1))
-    return [(h1 + F.lit(j) * h2) % m_bits for j in range(k)]
+    log2m = BLOOM_M_BITS.bit_length() - 1
+    h1 = h % BLOOM_M_BITS
+    h2 = (F.shiftright(h, log2m) % BLOOM_M_BITS).bitwiseOR(F.lit(1))
+    return [(h1 + F.lit(j) * h2) % BLOOM_M_BITS for j in range(BLOOM_K)]
 
 
-def contamination_screen_bloom(docs: DataFrame, eval_cond, n: int = 4,
-                               m_bits: int = BLOOM_M_BITS, k: int = BLOOM_K,
-                               id_col: str = "doc_id",
-                               text_col: str = "text") -> DataFrame:
+def contamination_screen_bloom(docs: DataFrame, eval_cond,
+                               n: int = 4) -> DataFrame:
     """Decontamination screen via a Bloom bitmap of the eval n-grams — the
     scale path when the eval-gram set outgrows a raw-string broadcast.
 
     Same contract as contamination_screen but with bounded memory: eval
-    grams are folded into an m_bits Bloom bitmap packed as (word_idx,
-    bits) longs — at most m_bits/64 rows regardless of eval size — which
-    broadcasts onto the training-gram scan. A gram is flagged iff all k
-    probe bits are set: a SUPERSET of the exact screen's shared grams (no
-    false negatives; false-positive rate ~(1-e^{-kN/m})^k). Flagged docs
-    feed the same quarantine/review step, so bloom false positives cost
-    review time, never silent contamination.
+    grams are folded into a BLOOM_M_BITS Bloom bitmap packed as (word_idx,
+    bits) longs — at most m/64 rows regardless of eval size — which
+    broadcasts onto the training-gram scan. A gram is flagged iff all
+    BLOOM_K probe bits are set: a SUPERSET of the exact screen's shared
+    grams (no false negatives; false-positive rate ~(1-e^{-kN/m})^k).
+    Flagged docs feed the same quarantine/review step, so bloom false
+    positives cost review time, never silent contamination.
 
     Returns (doc_id, n_flagged_grams, n_grams, flag_ratio) for training
     docs with at least one bloom-positive gram. Deterministic (md5-derived
@@ -850,8 +780,7 @@ def contamination_screen_bloom(docs: DataFrame, eval_cond, n: int = 4,
     never one row per corpus gram; a gram has k pairwise-distinct probe
     positions (odd stride, power-of-two m), so count(*) == k over its
     surviving rows is exactly the all-bits-set test."""
-    _validate_bloom_params(m_bits, k)
-    ds = _doc_shingles(docs, id_col, text_col, n)
+    ds = _doc_shingles(docs, n)
     # shingle ONCE over all docs (one memoized UDF pass), then split the
     # shingle table by the tag — shingling eval/train separately would run
     # the string-heavy UDF twice. When eval_cond resolves against the
@@ -862,21 +791,10 @@ def contamination_screen_bloom(docs: DataFrame, eval_cond, n: int = 4,
     try:
         evds, trds = ds.filter(eval_cond), ds.filter(~eval_cond)
     except Exception:
-        eval_ids = docs.select(F.col(id_col).alias("doc_id"),
-                               eval_cond.alias("ev"))
+        eval_ids = docs.select(F.col("doc_id"), eval_cond.alias("ev"))
         dst = ds.join(eval_ids, "doc_id")
         evds, trds = dst.filter(F.col("ev")), dst.filter(~F.col("ev"))
-    bloom = bloom_bitmap(evds, m_bits, k)
-    return bloom_screen(trds, bloom, m_bits, k)
-
-
-def _validate_bloom_params(m_bits: int, k: int) -> None:
-    if m_bits & (m_bits - 1) or k < 1 or k >= m_bits:
-        # the no-false-negative guarantee rests on the probe positions
-        # being pairwise distinct, which the odd-stride argument only
-        # gives for power-of-two m_bits
-        raise ValueError(f"m_bits must be a power of two and 1 <= k < "
-                         f"m_bits (got m_bits={m_bits}, k={k})")
+    return bloom_screen(trds, bloom_bitmap(evds))
 
 
 # variable-distance shift needs the SQL form (F.shiftleft only takes a
@@ -892,38 +810,31 @@ def _bloom_mask():
     return F.expr("shiftleft(cast(1 as bigint), cast(p & 63 as int))")
 
 
-def _bloom_pos_rows(ds: DataFrame, m_bits: int, k: int) -> DataFrame:
-    """(doc_id, sh, p) probe-position rows from a (doc_id, sh) shingle
-    table: each gram contributes its k pairwise-distinct bit positions."""
-    ex = ds.select("doc_id", F.explode("sh").alias("sh"))
-    return ex.select(
-        "doc_id", "sh",
-        F.explode(F.array(*_bloom_positions(
-            md5_hash60(F.col("sh")), m_bits, k))).alias("p"))
-
-
-def bloom_bitmap(ds: DataFrame, m_bits: int = BLOOM_M_BITS,
-                 k: int = BLOOM_K) -> DataFrame:
+def bloom_bitmap(ds: DataFrame) -> DataFrame:
     """(word_idx, bits) packed Bloom bitmap of every n-gram in a (doc_id,
-    sh) shingle table — at most m_bits/64 rows regardless of input size.
-    This is the persisted artifact of the decontamination family: built
-    once per eval-corpus snapshot, broadcast to every screen."""
-    _validate_bloom_params(m_bits, k)
-    return (_bloom_pos_rows(ds, m_bits, k)
+    sh) shingle table — at most BLOOM_M_BITS/64 rows regardless of input
+    size. This is the persisted artifact of the decontamination family:
+    built once per eval-corpus snapshot, broadcast to every screen."""
+    # (doc_id, sh, p) probe rows: each gram contributes its BLOOM_K
+    # pairwise-distinct bit positions
+    ex = ds.select("doc_id", F.explode("sh").alias("sh"))
+    pos = ex.select("doc_id", "sh", F.explode(F.array(
+        *_bloom_positions(md5_hash60(F.col("sh"))))).alias("p"))
+    return (pos
             .select(_bloom_word_idx().alias("word_idx"),
                     _bloom_mask().alias("mask"))
             .groupBy("word_idx")
             .agg(F.bit_or("mask").alias("bits")))
 
 
-def _bloom_dense(bloom: DataFrame, m_bits: int) -> DataFrame:
+def _bloom_dense(bloom: DataFrame) -> DataFrame:
     """One-row (arr: array<bigint>) densification of a packed (word_idx,
-    bits) bitmap: arr[word_idx] = bits, absent words = 0. m_bits/64
-    elements (16384 longs = 128 KiB at the default m) whatever the eval
+    bits) bitmap: arr[word_idx] = bits, absent words = 0. BLOOM_M_BITS/64
+    elements (16384 longs = 128 KiB) whatever the eval
     corpus size — the same bounded-artifact guarantee as the packed form,
     in a shape the screen can probe with O(1) array indexing instead of a
     per-position hash join."""
-    n_words = m_bits // 64
+    n_words = BLOOM_M_BITS // 64
     # collect_list order is partition-dependent; the struct sort restores
     # word_idx order, then one linear gap-fill pass writes arr[i] = word
     # i's bits with zeros between set words. Linear on purpose: a
@@ -950,8 +861,7 @@ def _bloom_dense(bloom: DataFrame, m_bits: int) -> DataFrame:
     return one.select(arr.alias("arr"))
 
 
-def bloom_screen(ds: DataFrame, bloom: DataFrame,
-                 m_bits: int = BLOOM_M_BITS, k: int = BLOOM_K) -> DataFrame:
+def bloom_screen(ds: DataFrame, bloom: DataFrame) -> DataFrame:
     """Screen a (doc_id, sh) shingle table against a packed Bloom bitmap:
     (doc_id, n_flagged_grams, n_grams, flag_ratio) for docs with at least
     one bloom-positive gram.
@@ -970,7 +880,6 @@ def bloom_screen(ds: DataFrame, bloom: DataFrame,
     exchange -> sort-merge join against a per-doc sizes scan. Grams are
     distinct per doc (_shingle_udf), so counting passing gram rows per
     doc is exactly the old count of all-bits-set grams."""
-    _validate_bloom_params(m_bits, k)
     # positions are projected on the stream side BEFORE the dense attach:
     # the filter then enters the BNLJ condition as plain _p column
     # references, and the md5 runs once per gram in a codegen Project
@@ -988,11 +897,10 @@ def bloom_screen(ds: DataFrame, bloom: DataFrame,
                          # infers no isnotnull pre-filter — which would
                          # re-expand all k position exprs into a second
                          # md5 pass per row
-                         _bloom_positions(md5_hash60(F.col("sh")),
-                                          m_bits, k))])
-             .crossJoin(F.broadcast(_bloom_dense(bloom, m_bits))))
+                         _bloom_positions(md5_hash60(F.col("sh"))))])
+             .crossJoin(F.broadcast(_bloom_dense(bloom))))
     cond = None
-    for j in range(k):
+    for j in range(BLOOM_K):
         word = F.element_at(
             "arr", (F.shiftright(F.col(f"_p{j}"), 6) + 1).cast("int"))
         mask = F.expr(f"shiftleft(cast(1 as bigint), "
@@ -1007,9 +915,7 @@ def bloom_screen(ds: DataFrame, bloom: DataFrame,
                      / F.col("n_grams")).alias("flag_ratio")))
 
 
-def contamination_screen(docs: DataFrame, eval_cond, n: int = 4,
-                         id_col: str = "doc_id",
-                         text_col: str = "text") -> DataFrame:
+def contamination_screen(docs: DataFrame, eval_cond, n: int = 4) -> DataFrame:
     """Benchmark-decontamination screen: for every training doc, count the
     distinct word n-grams it shares with ANY doc in the held-out eval set
     (eval_cond true => eval member). Returns only contaminated docs:
@@ -1020,9 +926,9 @@ def contamination_screen(docs: DataFrame, eval_cond, n: int = 4,
     screened map-side with no shuffle of the training data; the only
     exchange is the per-doc hit count on doc_id. Shares the cached shingle
     index with the dedup families (same (plan, n) memo)."""
-    ds = _doc_shingles(docs, id_col, text_col, n)
+    ds = _doc_shingles(docs, n)
     ex = ds.select("doc_id", F.explode("sh").alias("sh"))
-    eval_ids = docs.select(F.col(id_col).alias("doc_id"), eval_cond.alias("ev"))
+    eval_ids = docs.select(F.col("doc_id"), eval_cond.alias("ev"))
     tagged = ex.join(eval_ids, "doc_id")
     ev_grams = tagged.filter(F.col("ev")).select("sh").distinct()
     hits = (tagged.filter(~F.col("ev"))
@@ -1037,9 +943,8 @@ def contamination_screen(docs: DataFrame, eval_cond, n: int = 4,
                      / F.col("n_grams")).alias("contamination_ratio")))
 
 
-def containment_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.5,
-                      id_col: str = "doc_id", text_col: str = "text",
-                      max_df: int | None = NGRAM_MAX_DF) -> DataFrame:
+def containment_pairs(docs: DataFrame, n: int = 3,
+                      threshold: float = 0.5) -> DataFrame:
     """All pairs whose n-gram CONTAINMENT — |A∩B| / min(|A|, |B|) — meets
     the threshold, alongside their Jaccard for contrast.
 
@@ -1054,9 +959,9 @@ def containment_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.5,
     shingle index, the df-capped inverted-index self-join, pre-aggregated
     intersection counts — no O(n^2) cross join anywhere.
     """
-    ds = _doc_shingles(docs, id_col, text_col, n)  # cached + primed by memo
+    ds = _doc_shingles(docs, n)
     sizes = ds.select("doc_id", F.size("sh").alias("n_sh"))
-    inter = _jaccard_intersections(ds, False, max_df)
+    inter = _jaccard_intersections(ds, NGRAM_MAX_DF)
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
     return (inter.join(sa, "doc_a").join(sb, "doc_b")

@@ -98,7 +98,7 @@ def minhash_jaccard_accuracy_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         lsh_self_candidates,
     )
     docs = load_table(spark, "documents", sf_dir)
-    sig = _cached_signatures(docs, 3, "doc_id", "text")
+    sig = _cached_signatures(docs, 3)
     cand = lsh_self_candidates(_lsh_bands(sig))
     sa = sig.select(F.col("doc_id").alias("doc_a"),
                     F.col("sh").alias("sh_a"),
@@ -241,7 +241,7 @@ def lsh_threshold_sweep_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         lsh_self_candidates,
     )
     docs = load_table(spark, "documents", sf_dir)
-    sig = _cached_signatures(docs, 3, "doc_id", "text")
+    sig = _cached_signatures(docs, 3)
     cand = lsh_self_candidates(_lsh_bands(sig))
     sh_a = sig.select(F.col("doc_id").alias("doc_a"),
                       F.col("sh").alias("sh_a"))

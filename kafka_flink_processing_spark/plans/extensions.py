@@ -1946,7 +1946,7 @@ def repetition_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c").cast("long").alias("n_tokens"),
         F.count("*").alias("n_distinct"),
         F.max("c").alias("top_count"))
-    g2 = _doc_shingles(docs, "doc_id", "text", 2) \
+    g2 = _doc_shingles(docs, 2) \
         .select("doc_id", F.size("sh").alias("n_bigrams"))
     j = s.join(g2, "doc_id")
     distinct_frac = F.col("n_distinct").cast("double") / F.col("n_tokens")
@@ -2235,14 +2235,15 @@ def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dup_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_flink_processing_spark.operators.dedup import (
+        DUP_SPAN_MIN_DF,
         _doc_shingles,
         _filtered_inverted_index,
     )
     docs = load_table(spark, "documents", sf_dir)
-    ds = _doc_shingles(docs, "doc_id", "text", 3)
+    ds = _doc_shingles(docs, 3)
     # the memoized df>=2 inverted index (shared with dup_span_redact):
     # its (doc_id, sh) rows are exactly the corpus-duplicated grams
-    inv = _filtered_inverted_index(ds, 2, None)
+    inv = _filtered_inverted_index(ds, DUP_SPAN_MIN_DF, None)
     hits = (inv.groupBy("doc_id")
                .agg(F.count("*").cast("long").alias("n_dup_grams")))
     sizes = ds.select("doc_id", F.size("sh").cast("long").alias("n_grams"))
@@ -2493,7 +2494,7 @@ def lsh_band_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         _lsh_bands,
     )
     docs = load_table(spark, "documents", sf_dir)
-    bands = _lsh_bands(_cached_signatures(docs, 3, "doc_id", "text"))
+    bands = _lsh_bands(_cached_signatures(docs, 3))
     buckets = (bands.groupBy("band", "key")
                     .agg(F.count("*").cast("long").alias("sz")))
     return (buckets.groupBy(F.col("band").cast("long").alias("band"))
@@ -2935,7 +2936,7 @@ def token_drift_chi2_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ngram_novelty_by_source_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_flink_processing_spark.operators.dedup import _doc_shingles
     docs = load_table(spark, "documents", sf_dir)
-    ds = _doc_shingles(docs, "doc_id", "text", 3)
+    ds = _doc_shingles(docs, 3)
     ex = ds.select("doc_id", F.explode("sh").alias("sh"))
     first = ex.groupBy("sh").agg(F.min("doc_id").alias("first_doc"))
     pd_ = (ex.join(first, "sh")
@@ -3487,35 +3488,19 @@ def _ccnet_bigram_buckets(docs: DataFrame) -> DataFrame:
 
 
 def _ccnet_lm(docs: DataFrame) -> DataFrame:
-    """The frozen LM artifact: (bucket, logp6) — <=_PPL_B rows, trained
-    on the trusted slice (lang=_DSIR_TARGET_LANG) of `docs`. This is the
-    relation a production pipeline persists/broadcasts; the streaming
-    quality filter (streaming/jobs.py::ccnet_quality_filter_job) caches
-    it once and scores every micro-batch against it."""
-    h = _ccnet_bigram_buckets(docs)
-    bstats = h.groupBy("bucket").agg(
-        F.sum(F.when(F.col("lang") == _DSIR_TARGET_LANG, 1)
-              .otherwise(0)).alias("n_t"))
-    tot = bstats.agg(F.sum("n_t").alias("t_tot"))
-    return (bstats.crossJoin(F.broadcast(tot))
-            .select("bucket",
-                    F.round((F.log(F.col("n_t") + 1)
-                             - F.log(F.col("t_tot") + _PPL_B)) * 1e6)
-                    .cast("long").alias("logp6")))
-
-
-def _ccnet_lm_dense(docs: DataFrame) -> DataFrame:
-    """`_ccnet_lm` in its FROZEN-ARTIFACT form: one row for every one of
-    the _PPL_B buckets, so scoring a corpus the reference never saw
-    cannot drop OOV bigrams at the inner bucket join (r12 advisory fix:
-    the sparse LM only carries buckets observed in the reference, and a
-    streamed doc whose bigrams all hash into unseen buckets silently
-    lost its score). Unseen buckets get the SAME n_t=0 Laplace floor
+    """The frozen LM artifact: (bucket, logp6), one row for every one of
+    the _PPL_B buckets, trained on the trusted slice
+    (lang=_DSIR_TARGET_LANG) of `docs`. This is the relation a production
+    pipeline persists/broadcasts; the streaming quality filter
+    (streaming/jobs.py::ccnet_quality_filter_job) caches it once and
+    scores every micro-batch against it. Dense, so scoring a corpus the
+    reference never saw cannot drop OOV bigrams at the inner bucket join
+    (r12 advisory fix). Unseen buckets get the SAME n_t=0 Laplace floor
     logp6 = round((ln 1 - ln(t_tot + B)) * 1e6) the smoothing already
-    assigns to observed-but-untrusted buckets, and t_tot is unchanged by
-    the zero rows — so for any bucket both forms share, the two LMs are
-    bit-identical, and self-trained scoring (the batch query, the parity
-    tests) is unaffected (the extra rows match no probe)."""
+    assigns to observed-but-untrusted buckets, and the zero rows leave
+    t_tot unchanged, so self-trained scoring (the batch query, the
+    parity tests) matches the sparse observed-bucket LM bit for bit:
+    the extra rows match no probe."""
     h = _ccnet_bigram_buckets(docs)
     bstats = h.groupBy("bucket").agg(
         F.sum(F.when(F.col("lang") == _DSIR_TARGET_LANG, 1)

@@ -31,6 +31,7 @@ from kafka_flink_processing_spark.functions.exact import (
     dsum_wide_sql,
 )
 from kafka_flink_processing_spark.plans.registry import register
+from kafka_flink_processing_spark.plans.stateful import derive_market
 from kafka_flink_processing_spark.sources.parquet import load_table
 
 # (ts, hub, price_mwh, tick_id): the PRICE_TYPES derivation from
@@ -55,26 +56,13 @@ _TRADES_SQL = """
 
 
 def _ticks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, "events", sf_dir)
-    hub = F.concat(F.lit("HUB"), (F.col("user_id") % 4).cast("string"))
-    return (ev.filter(F.col("event_type").isin("view", "click"))
-            .select(F.col("event_id").alias("tick_id"), "ts",
-                    hub.alias("hub"), F.col("value").alias("price_mwh")))
+    _, prices = derive_market(spark, sf_dir)
+    return prices.select("tick_id", "ts", "hub", "price_mwh")
 
 
 def _trades(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, "events", sf_dir)
-    hub = F.concat(F.lit("HUB"), (F.col("user_id") % 4).cast("string"))
-    return (ev.filter(F.col("event_type").isin("purchase", "signup", "error"))
-            .select(F.col("event_id").alias("trade_id"), "ts",
-                    hub.alias("hub"),
-                    F.when(F.col("event_type").isin("purchase", "signup"),
-                           "BUY").otherwise("SELL").alias("side"),
-                    F.when(F.col("event_id") % 4 == 0, 5)
-                     .when(F.col("event_id") % 4 == 1, 10)
-                     .when(F.col("event_id") % 4 == 2, 25)
-                     .otherwise(50).alias("mw"),
-                    F.col("value").alias("price_mwh")))
+    trades, _ = derive_market(spark, sf_dir)
+    return trades.drop("account")
 
 
 # ONE oracle text for both OHLC registrations: the batch and streaming

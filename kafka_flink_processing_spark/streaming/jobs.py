@@ -118,32 +118,31 @@ def incremental_dedup_job(docs_stream: DataFrame, corpus: DataFrame,
     Scale shape: the corpus signature/band tables are built ONCE (cached
     via the dedup memo — at 100 TB this is the persisted LSH index a daily
     pipeline maintains); per batch only the increment is shingled
-    (memo=False — epoch plans must not accumulate cache entries), and
+    (unmemoized — epoch plans must not accumulate memo entries), and
     candidates are O(batch x dup rate), never corpus x corpus.
     """
     from kafka_flink_processing_spark.operators.dedup import (
         _cached_signatures,
-        _doc_shingles,
         _lsh_bands,
         lsh_cross_candidates,
         lsh_self_candidates,
+        shingle_table,
         signatures_from_shingles,
         verified_jaccard_pairs,
     )
 
-    corpus_sig = _cached_signatures(corpus, n, "doc_id", "text")
+    corpus_sig = _cached_signatures(corpus, n)
     corpus_bands = _lsh_bands(corpus_sig)
 
     def screen(batch: DataFrame, epoch: int) -> None:
         if batch.isEmpty():
             return
         with epoch_cache() as keep:
-            # cache the batch shingles explicitly: the non-memoized path
+            # cache the batch shingles explicitly: the unmemoized builder
             # has no cache, and the shingle table feeds the min-agg branch,
             # the signature join, and both verification sides — uncached,
             # the string-heavy shingle UDF would run once per consumer
-            ds_b = keep(_doc_shingles(batch, "doc_id", "text", n,
-                                      memo=False))
+            ds_b = keep(shingle_table(batch, n))
             sig_b = signatures_from_shingles(ds_b)
             bands_b = _lsh_bands(sig_b)
             # batch vs standing corpus (incremental_minhash_dups semantics)
@@ -200,15 +199,15 @@ def decontamination_job(docs_stream: DataFrame, eval_docs: DataFrame,
     changing its StreamingQuery wrapper.)
     """
     from kafka_flink_processing_spark.operators.dedup import (
-        _doc_shingles,
         bloom_bitmap,
         bloom_screen,
+        shingle_table,
     )
 
-    # memo=False: the eval shingle table is consumed exactly once (the
+    # unmemoized: the eval shingle table is consumed exactly once (the
     # bitmap build below); memoizing would cache+count a full extra
     # materialization and pin it in executor storage for the session
-    eval_ds = _doc_shingles(eval_docs, "doc_id", "text", n, memo=False)
+    eval_ds = shingle_table(eval_docs, n)
     bloom = bloom_bitmap(eval_ds).cache()
     bloom.count()  # build the artifact once, before the first epoch
 
@@ -216,11 +215,10 @@ def decontamination_job(docs_stream: DataFrame, eval_docs: DataFrame,
         if batch.isEmpty():
             return
         with epoch_cache() as keep:
-            # memo=False + an epoch cache: epoch plans must not accumulate
-            # cache entries, and the shingle table feeds both the probe
+            # unmemoized + an epoch cache: epoch plans must not accumulate
+            # memo entries, and the shingle table feeds both the probe
             # and the per-doc sizes
-            ds_b = keep(_doc_shingles(batch, "doc_id", "text", n,
-                                      memo=False))
+            ds_b = keep(shingle_table(batch, n))
             hits = keep(bloom_screen(ds_b, bloom))
             write_epoch_parquet(hits, os.path.join(out_dir, "contaminated"),
                                 epoch)
@@ -276,7 +274,7 @@ def ccnet_quality_filter_job(docs_stream: DataFrame,
     from pyspark.sql import functions as F
 
     from kafka_flink_processing_spark.plans.extensions import (
-        _ccnet_lm_dense,
+        _ccnet_lm,
         _ccnet_score_with_lm,
         _ccnet_tercile_map,
     )
@@ -288,7 +286,7 @@ def ccnet_quality_filter_job(docs_stream: DataFrame,
     # has >=2 tokens. tercile = greatest boundary <= ce_c reproduces the
     # exact-bin assignment on every bin the reference did produce (the
     # map is monotone in ce_c), so batch parity is unchanged.
-    lm = _ccnet_lm_dense(reference_docs).cache()
+    lm = _ccnet_lm(reference_docs).cache()
     lm.count()  # freeze the LM artifact before the first epoch
     ter = _ccnet_tercile_map(
         _ccnet_score_with_lm(reference_docs, lm)).cache()

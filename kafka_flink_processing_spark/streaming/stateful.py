@@ -92,24 +92,19 @@ def _sma_fn(key: tuple, pdfs: Iterator[pd.DataFrame],
     yield rows
 
 
-def _sma_input(prices: DataFrame, key_col: str, ts_col: str,
-               value_col: str, seq_col: str | None) -> DataFrame:
+def _sma_input(prices: DataFrame, seq_col: str | None) -> DataFrame:
     """Project the SMA input to (ts, hub, price_mwh, seq), seq 0 when the
     caller has no tie-breaker."""
     return prices.select(
-        F.col(ts_col).alias("ts"), F.col(key_col).alias("hub"),
-        F.col(value_col).alias("price_mwh"),
+        "ts", "hub", "price_mwh",
         (F.col(seq_col) if seq_col else F.lit(0)).cast("long").alias("seq"))
 
 
 def streaming_sma_forecast(prices: DataFrame,
-                           key_col: str = "hub",
-                           ts_col: str = "ts",
-                           value_col: str = "price_mwh",
                            seq_col: str | None = None) -> DataFrame:
     """prices: streaming DF with (ts, hub, price_mwh[, seq tie-breaker])."""
     ensure_shipped(prices.sparkSession)
-    df = _sma_input(prices, key_col, ts_col, value_col, seq_col)
+    df = _sma_input(prices, seq_col)
     return (df.groupBy("hub")
               .applyInPandasWithState(_sma_fn, _SMA_OUT, _SMA_STATE,
                                       "append", GroupStateTimeout.NoTimeout))
@@ -309,15 +304,18 @@ def _tws_by_hub(df: DataFrame, processor: StatefulProcessor,
                                           time_mode))
 
 
+# Event-time timers need a watermark; the TTL fold tolerates no lateness.
+_TTL_WATERMARK_DELAY = "0 seconds"
+
+
 def streaming_pnl_tws_ttl(trades: DataFrame, prices: DataFrame,
-                          ttl_ms: int,
-                          watermark_delay: str = "0 seconds") -> DataFrame:
+                          ttl_ms: int) -> DataFrame:
     """streaming_pnl_tws with book-expiry TTL (PnlProcessorTtl): evicts
     accounts flat for > ttl_ms of event time. Event-time timers need a
     watermark on the input and timeMode='eventtime'; same RocksDB
     state-store requirement as the base port."""
     union = tagged_events(trades, prices).withWatermark(
-        "ts", watermark_delay)
+        "ts", _TTL_WATERMARK_DELAY)
     return _tws_by_hub(union, PnlProcessorTtl(ttl_ms), PNL_OUT_SCHEMA,
                        "eventtime")
 
@@ -351,15 +349,12 @@ class SmaProcessor(StatefulProcessor):
 
 
 def streaming_sma_forecast_tws(prices: DataFrame,
-                               key_col: str = "hub",
-                               ts_col: str = "ts",
-                               value_col: str = "price_mwh",
                                seq_col: str | None = None) -> DataFrame:
     """streaming_sma_forecast on transformWithStateInPandas (Spark 4):
     same signature, same output, ListState ring buffer. Needs the
     RocksDB state-store provider, like streaming_pnl_tws."""
-    return _tws_by_hub(_sma_input(prices, key_col, ts_col, value_col,
-                                  seq_col), SmaProcessor(), _SMA_OUT)
+    return _tws_by_hub(_sma_input(prices, seq_col), SmaProcessor(),
+                       _SMA_OUT)
 
 
 def streaming_pnl_tws(trades: DataFrame, prices: DataFrame) -> DataFrame:
@@ -379,6 +374,24 @@ _ROCKSDB = ("org.apache.spark.sql.execution.streaming.state."
 
 
 @contextmanager
+def session_conf(spark, key: str, value: str):
+    """Set one session conf for a block, then restore the previous value
+    (or unset it), so later queries keep whatever the session had."""
+    try:
+        prev = spark.conf.get(key)
+    except Exception:
+        prev = None
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
+@contextmanager
 def rocksdb_state_store(spark):
     """Run a block on the RocksDB state-store provider that the
     transformWithState builders above need, then restore the session's
@@ -392,15 +405,5 @@ def rocksdb_state_store(spark):
             "transformWithState needs google.protobuf in Spark's Python "
             "workers; neither a wheel nor the vendored runtime is present "
             "on this box (env-gated, like the Kafka sources)")
-    try:
-        prev = spark.conf.get(_PROVIDER_KEY)
-    except Exception:
-        prev = None
-    spark.conf.set(_PROVIDER_KEY, _ROCKSDB)
-    try:
+    with session_conf(spark, _PROVIDER_KEY, _ROCKSDB):
         yield
-    finally:
-        if prev is None:
-            spark.conf.unset(_PROVIDER_KEY)
-        else:
-            spark.conf.set(_PROVIDER_KEY, prev)

@@ -42,6 +42,11 @@ def test_edge_memo_reused_and_result_plan_truncated(spark):
     # partitions, not the unrolled iteration (the r12 before-plan
     # printed 4174 Exchange nodes for the cached-loop form).
     from kafka_flink_processing_spark.operators import cluster as C
+    from kafka_flink_processing_spark.operators.dedup import _MEMO
+
+    def edge_entries():  # the edge tables in the one artifact memo
+        return [art for key, (_, art, _) in _MEMO.items()
+                if key[2:] == ("edges",)]
 
     C.clear_cluster_caches()
     edges = [(1, 2), (2, 3), (10, 11)]
@@ -50,16 +55,15 @@ def test_edge_memo_reused_and_result_plan_truncated(spark):
     nodes1 = spark.createDataFrame(nodes, "doc_id long")
     out1 = {r.doc_id: r.canonical_id
             for r in C.connected_components(pairs1, nodes1).collect()}
-    assert len(C._EDGE_MEMO) == 1
-    memo_edges = next(iter(C._EDGE_MEMO.values()))[1]
+    assert len(edge_entries()) == 1
+    memo_edges = edge_entries()[0]
     # a semantically-equal pairs plan must hit the memo, not add an entry
     # (the registered queries rebuild the pairs plan from the memoized
     # signature caches each call, so the plans compare equal; a local
     # createDataFrame embeds fresh data and would legitimately miss)
     nodes2 = spark.createDataFrame(nodes, "doc_id long")
     result = C.connected_components(pairs1, nodes2)
-    assert len(C._EDGE_MEMO) == 1
-    assert next(iter(C._EDGE_MEMO.values()))[1] is memo_edges
+    assert len(edge_entries()) == 1 and edge_entries()[0] is memo_edges
     out2 = {r.doc_id: r.canonical_id for r in result.collect()}
     assert out1 == out2 == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
     # plan truncation: the returned plan is a checkpoint scan — no Join/
@@ -69,4 +73,4 @@ def test_edge_memo_reused_and_result_plan_truncated(spark):
     for node in ("Join", "HashAggregate", "Exchange"):
         assert node not in plan, plan
     C.clear_cluster_caches()
-    assert len(C._EDGE_MEMO) == 0
+    assert not _MEMO

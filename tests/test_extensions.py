@@ -401,10 +401,10 @@ def test_ngram_max_df_bounds_hot_shingle_candidates(spark):
     rows += [(100, "rare alpha beta gamma delta epsilon zeta eta theta"),
              (101, "rare alpha beta gamma delta epsilon zeta eta iota")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    ds = _doc_shingles(docs, "doc_id", "text", 3)
+    ds = _doc_shingles(docs, 3)
 
-    uncapped = _jaccard_intersections(ds, False, None).count()
-    capped = _jaccard_intersections(ds, False, 10).count()
+    uncapped = _jaccard_intersections(ds, None).count()
+    capped = _jaccard_intersections(ds, 10).count()
     # 40 docs x 7 shared boilerplate shingles -> C(40,2)=780 hot pairs
     assert uncapped >= 780
     assert capped < 40  # hot shingles gone; only rare-shingle pairs remain
@@ -413,11 +413,24 @@ def test_ngram_max_df_bounds_hot_shingle_candidates(spark):
     assert {(r.doc_a, r.doc_b) for r in out} == {(100, 101)}
 
 
-def test_simhash_pairs_miss_path_cache_is_released(spark, monkeypatch):
+_MEMO_ENTRY_POINTS = {
+    "shingles": lambda d, c, docs: d._doc_shingles(docs, 3),
+    "inverted": lambda d, c, docs: d._filtered_inverted_index(
+        d._doc_shingles(docs, 3), 1, d.NGRAM_MAX_DF),
+    "minhash": lambda d, c, docs: d._cached_signatures(docs, 3),
+    "simhash": lambda d, c, docs: d.simhash_pairs(docs),
+    "ess": lambda d, c, docs: d._ess_anchor_index(docs, 3, 64),
+    "edges": lambda d, c, docs: c._edge_table(d.minhash_lsh_pairs(docs)),
+}
+
+
+@pytest.mark.parametrize("kind", list(_MEMO_ENTRY_POINTS))
+def test_memo_miss_path_cache_is_released(spark, monkeypatch, kind):
     """When the memo key cannot be built (semanticHash fails, or a 32-bit
-    collision), simhash_pairs still caches its table for the self-join;
-    clear_dedup_caches() must unpersist it too, not leak it."""
-    from kafka_flink_processing_spark.operators import dedup
+    collision), every memoized artifact is still cached and primed for
+    its consumers, and clear_dedup_caches() must unpersist it too, not
+    leak it."""
+    from kafka_flink_processing_spark.operators import cluster, dedup
 
     def no_hash(self):
         raise RuntimeError("semanticHash unavailable")
@@ -426,14 +439,38 @@ def test_simhash_pairs_miss_path_cache_is_released(spark, monkeypatch):
     jsc = spark.sparkContext._jsc
     before = jsc.getPersistentRDDs().size()
     docs = spark.createDataFrame(
-        [(1, "the quick brown fox jumps"), (2, "the quick brown fox leaps")],
+        [(1, "the quick brown fox jumps over the lazy dog"),
+         (2, "the quick brown fox jumps over the lazy cat")],
         "doc_id long, text string")
     monkeypatch.setattr(type(docs), "semanticHash", no_hash)
-    dedup.simhash_pairs(docs).count()
-    assert not dedup._SIG_CACHE  # the miss path ran: nothing memoized
+    _MEMO_ENTRY_POINTS[kind](dedup, cluster, docs)
+    artifacts = [art for key, (_, art, _) in dedup._MEMO.items()
+                 if key[2] == kind]
+    assert len(artifacts) == 1 and artifacts[0].is_cached
     assert jsc.getPersistentRDDs().size() > before
     dedup.clear_dedup_caches()
     assert jsc.getPersistentRDDs().size() == before
+
+
+@pytest.mark.parametrize("query", ["dedup_minhash_lsh", "dedup_simhash",
+                                   "dedup_ngram_jaccard"])
+def test_dedup_query_second_build_starts_no_job(spark, query):
+    """The memoized artifacts make a rebuild free: building a registered
+    dedup query again starts no Spark job and persists nothing new."""
+    from kafka_flink_processing_spark.plans.registry import (
+        QUERIES,
+        _ensure_loaded,
+    )
+    from tests.test_parquet_source import _jobs_started
+    _ensure_loaded()
+    build = QUERIES[query].spark
+    _jobs_started(spark, f"{query}-build-first", lambda: build(spark, SF))
+    jsc = spark.sparkContext._jsc
+    persisted = jsc.getPersistentRDDs().size()
+    _, n_jobs = _jobs_started(spark, f"{query}-build-again",
+                              lambda: build(spark, SF))
+    assert n_jobs == 0
+    assert jsc.getPersistentRDDs().size() == persisted
 
 
 def test_lsh_cosine_pairs_exact_vs_bruteforce(emb):
@@ -550,7 +587,7 @@ def test_dup_span_stats_ground_truth(spark):
         "doc_id long, text string")
     # drive the operator body directly on the fixture frame
     from kafka_flink_processing_spark.operators.dedup import _doc_shingles
-    ds = _doc_shingles(docs, "doc_id", "text", 3)
+    ds = _doc_shingles(docs, 3)
     ex = ds.select("doc_id", F.explode("sh").alias("sh"))
     dup_sh = (ex.groupBy("sh").agg(F.count("*").alias("df"))
                 .filter(F.col("df") >= 2).select("sh"))
@@ -581,7 +618,7 @@ def test_lsh_band_stats_pair_volume_consistent(docs, spark):
         _cached_signatures,
         _lsh_bands,
     )
-    bands = _lsh_bands(_cached_signatures(docs, 3, "doc_id", "text"))
+    bands = _lsh_bands(_cached_signatures(docs, 3))
     buckets = bands.groupBy("band", "key").agg(F.count("*").alias("sz"))
     total_cand = (buckets.agg(F.sum(F.expr("sz * (sz - 1) div 2")))
                   .collect()[0][0])

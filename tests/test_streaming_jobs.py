@@ -105,7 +105,7 @@ def test_failed_epoch_write_frees_epoch_caches(spark, tmp_path, job):
     if job == "incremental_dedup":
         # the corpus signatures are the job's memoized artifact; build
         # them first so the snapshot below already holds them
-        _cached_signatures(docs, 3, "doc_id", "text")
+        _cached_signatures(docs, 3)
     before = _persistent_rdds(spark)
     artifacts = []
     if job == "incremental_dedup":

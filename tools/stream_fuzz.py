@@ -103,7 +103,10 @@ from kafka_flink_processing_spark.streaming.sinks import (  # noqa: E402
     run_available_now,
     staged_stream,
 )
-from kafka_flink_processing_spark.streaming.stateful import rocksdb_state_store  # noqa: E402
+from kafka_flink_processing_spark.streaming.stateful import (  # noqa: E402
+    rocksdb_state_store,
+    session_conf,
+)
 
 ENGINES = ("pnl", "pnl_tws", "pnl_tws_ttl", "pnl_tws_ttl_finite",
            "sma", "sma_tws", "tumbling", "session",
@@ -171,28 +174,6 @@ def _drain(spark, df: DataFrame, name: str, ckpt: str,
     run_available_now(df, name, ckpt, output_mode=output_mode)
     rows = spark.sql(f"SELECT * FROM {name}").collect()
     return _rowbag(rows) if output_mode == "append" else _rowset(rows)
-
-
-class _session_conf:
-    """Set one session conf for a block, then restore the previous value
-    (or unset it), so later drains keep whatever the session had."""
-
-    def __init__(self, spark, key: str, value: str):
-        self.spark, self.key, self.value = spark, key, value
-
-    def __enter__(self):
-        try:
-            self.prev = self.spark.conf.get(self.key)
-        except Exception:
-            self.prev = None
-        self.spark.conf.set(self.key, self.value)
-
-    def __exit__(self, *exc):
-        if self.prev is None:
-            self.spark.conf.unset(self.key)
-        else:
-            self.spark.conf.set(self.key, self.prev)
-        return False
 
 
 # ---------------------------------------------------------------------------
@@ -365,7 +346,7 @@ def run_corpus(spark, cname: str, seed: int, engines: list[str],
     # tiny Arrow chunks: one key's micro-batch reaches the Python folds
     # as several chunks, so a fold that orders each chunk on its own
     # fails parity
-    with _session_conf(spark, "spark.sql.execution.arrow.maxRecordsPerBatch",
+    with session_conf(spark, "spark.sql.execution.arrow.maxRecordsPerBatch",
                        str(_ARROW_CHUNK_ROWS)):
         return _run_corpus(spark, cname, seed, engines, tag)
 
