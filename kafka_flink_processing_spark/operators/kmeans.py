@@ -1,8 +1,8 @@
 """Distributed Lloyd's k-means over an embedding column.
 
 This is the offline training step that produces the IVF coarse-quantizer
-codebook (operators/similarity.py::ivf_cosine_topk uses the first-K-by-id
-stand-in; this operator is the real thing). Reference has no counterpart —
+codebook (tools/train_ivf_codebook.py pins its output for
+operators/similarity.py's IVF operators). Reference has no counterpart —
 engine extension for the training-data-pipeline north star.
 
 Iteration shape (what survives a 100 TB corpus):
@@ -54,14 +54,14 @@ def _assign_udf(cents: np.ndarray):
 
 
 def kmeans_train(emb: DataFrame, k: int = 8, iters: int = 5,
-                 id_col: str = "vec_id",
                  vec_col: str = "embedding") -> tuple[np.ndarray, DataFrame]:
-    """Run `iters` Lloyd iterations; return (centroids, assignments).
+    """Run `iters` Lloyd iterations over the `vec_col` vectors of
+    (vec_id, vec_col) rows; return (centroids, assignments).
 
-    assignments = DataFrame(id_col, cell, sqdist) for the final centroids.
+    assignments = DataFrame(vec_id, cell, sqdist) for the final centroids.
     """
-    vecs = emb.select(F.col(id_col), F.col(vec_col).alias("v"))
-    init = (emb.orderBy(id_col).limit(k)
+    vecs = emb.select(F.col("vec_id"), F.col(vec_col).alias("v"))
+    init = (emb.orderBy("vec_id").limit(k)
             .select(vec_col).toPandas()[vec_col].tolist())
     if not init:
         raise ValueError("kmeans_train: embeddings input is empty")
@@ -70,7 +70,7 @@ def kmeans_train(emb: DataFrame, k: int = 8, iters: int = 5,
     d = cents.shape[1]
     for _ in range(iters):
         asg = vecs.select(
-            F.col(id_col), F.col("v"),
+            F.col("vec_id"), F.col("v"),
             _assign_udf(cents)(F.col("v")).alias("a"))
         # map-side-combined partial sums: k rows cross the wire per partition
         agg = (asg.groupBy(F.col("a.cell").alias("cell"))
@@ -83,21 +83,18 @@ def kmeans_train(emb: DataFrame, k: int = 8, iters: int = 5,
             new[row["cell"]] = [row[f"s{i}"] / row["n"] for i in range(d)]
         cents = new
     final = vecs.select(
-        F.col(id_col), _assign_udf(cents)(F.col("v")).alias("a")) \
-        .select(id_col, F.col("a.cell").alias("cell"),
+        F.col("vec_id"), _assign_udf(cents)(F.col("v")).alias("a")) \
+        .select("vec_id", F.col("a.cell").alias("cell"),
                 F.col("a.sqdist").alias("sqdist"))
     return cents, final
 
 
-def kmeans_summary(emb: DataFrame, k: int = 8, iters: int = 5,
-                   id_col: str = "vec_id",
-                   vec_col: str = "embedding") -> DataFrame:
+def kmeans_summary(emb: DataFrame, k: int = 8, iters: int = 5) -> DataFrame:
     """Per-cluster training summary: (cell, n_points, inertia,
     centroid_norm) — the k-row codebook health view. Every trained cell
     appears, empty ones with n_points=0 (left join from the codebook side;
     an inner join would silently drop them)."""
-    cents, asg = kmeans_train(emb, k=k, iters=iters,
-                              id_col=id_col, vec_col=vec_col)
+    cents, asg = kmeans_train(emb, k=k, iters=iters)
     # iterate the trained matrix, not range(k): kmeans_train clamps k to
     # the corpus size, so cents may have fewer than k rows
     norms = {c: float(np.sqrt((cents[c] * cents[c]).sum()))

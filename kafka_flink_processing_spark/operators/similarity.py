@@ -1,16 +1,43 @@
-"""Embedding similarity search (approximate-nearest-neighbor extensions).
+"""Embedding similarity search: exact and approximate nearest neighbours.
 
-- cosine_topk: brute-force baseline. Query set broadcast against the corpus;
-  dot products via zip_with + sequential aggregate fold (JVM-side, and
-  bit-reproducible against the DuckDB oracle's list_reduce). At 100 TB the
-  corpus side stays partitioned; cost is O(|Q| * N) — correct but the
-  fallback path.
-- lsh_cosine_topk: random-hyperplane LSH. 16 fixed literal hyperplanes ->
-  16-bit signature; candidates = same-signature bucket; exact cosine + top-k
-  within bucket. The scale path: one shuffle on the signature, bucket sizes
-  ~ N/2^16 per hash cell. Deterministic (seeded literal planes), so the
-  oracle reproduces it exactly; recall vs brute force is asserted in
-  tests/test_extensions.py.
+Every operator reads an embeddings frame with the fixed columns `vec_id`
+(the vector id) and `embedding` (array<float>); search operators take the
+query set as `query_ids` (a subset of the corpus ids, never matched with
+themselves). Scores are bit-reproducible against the DuckDB oracles: dot
+products and squared distances are sequential index-order folds (the
+oracle's list_reduce), and every ranking breaks ties on the smaller id.
+
+Operators:
+- cosine_topk: brute-force baseline. Query set broadcast against the
+  corpus; cost O(|Q| * N) — correct but the fallback path.
+- lsh_cosine_topk: banded random-hyperplane LSH (16 fixed literal planes,
+  8 bands x 2 bits, OR-amplified); exact cosine on the bucket candidates.
+- ivf_cosine_topk: IVF coarse quantizer (pinned k-means codebook), probe
+  the IVF_NPROBE nearest cells, exact cosine re-rank.
+- pq_encode / pq_adc_topk / pq_adc_rerank_topk: product quantization with
+  asymmetric distance (ADC) over the M-byte codes, optionally re-ranked
+  exactly on a shortlist.
+- ivfpq_adc_topk / ivfpq_residual_adc_topk: IVFADC — IVF cell pruning
+  composed with PQ codes of the raw vector or of its residual.
+- assign_cells: map-only nearest-cell assignment (the IVF index build).
+- cosine_pairs / lsh_cosine_pairs / semdedup: near-duplicate pair mining
+  (brute force, LSH candidates, within-cell SemDeDup).
+
+The search skeleton they share — one copy of each step:
+- _topk: per-query ranking by (score, cand_id), rank <= k.
+- _side / _side_cosine: the (id, vector, norm) projection of one join side
+  (query/candidate or a/b) and the exact cosine between two sides.
+- _lsh_bands: the banded-signature explode.
+- _scored_cells / _probe_order: every (vector, centroid) cosine, and each
+  query's cells ranked by (cosine DESC, cid) — the IVF probe order.
+- _pq_codes / _query_luts / _adc_topk: PQ code extraction, the query
+  lookup tables, and the sum_m lut[m*K + codes[m]] fold with its top-k.
+
+Codebooks are inputs, never trained here: registered queries pass the
+pinned artifacts (functions/ivf_codebook.py, pq_codebook.py,
+pq_residual_codebook.py) that the oracles embed as the same literals; the
+offline trainers are tools/train_ivf_codebook.py and
+tools/train_pq_codebook.py over operators/kmeans.py::kmeans_train.
 """
 
 from __future__ import annotations
@@ -45,35 +72,61 @@ def _cosine(dot: Column, na: Column, nb: Column) -> Column:
     return F.when(den != 0, dot / den)
 
 
-def with_unit_info(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    return emb.withColumn("nrm", _norm(F.col(vec_col)))
+def with_unit_info(emb: DataFrame) -> DataFrame:
+    return emb.withColumn("nrm", _norm(F.col("embedding")))
 
 
-def cosine_topk(emb: DataFrame, query_ids, k: int = 10,
-                id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Exact top-k cosine neighbors for each query id (excluding self)."""
-    base = with_unit_info(emb, vec_col).select(
-        F.col(id_col), F.col(vec_col), F.col("nrm"))
-    q = base.filter(F.col(id_col).isin(list(query_ids))).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-        F.col("nrm").alias("qn"))
-    c = base.select(F.col(id_col).alias("cand_id"),
-                    F.col(vec_col).alias("cv"), F.col("nrm").alias("cn"))
-    cos = _cosine(_dot(F.col("qv"), F.col("cv")), F.col("qn"), F.col("cn"))
-    scored = (F.broadcast(q).join(c, F.col("query_id") != F.col("cand_id"))
-               .select("query_id", "cand_id", cos.alias("cosine")))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(),
-                                               F.col("cand_id"))
+def _queries(df: DataFrame, query_ids) -> DataFrame:
+    """The rows of `df` whose vec_id is in the query set."""
+    return df.filter(F.col("vec_id").isin(list(query_ids)))
+
+
+def _topk(scored: DataFrame, k: int, order: Column) -> DataFrame:
+    """Per-query top-k of (query_id, cand_id, score) rows: rank by `order`
+    (the score descending for similarities, ascending for distances), ties
+    to the smaller cand_id — the oracles' ROW_NUMBER order."""
+    w = Window.partitionBy("query_id").orderBy(order, F.col("cand_id"))
     return (scored.withColumn("rank", F.row_number().over(w))
                   .filter(F.col("rank") <= k))
 
 
-def lsh_signature(vec_col: Column) -> Column:
+# (id, vector, norm) names of each join side: query/candidate for top-k
+# search, a/b for pair mining
+_SIDES = {"q": ("query_id", "qv", "qn"), "c": ("cand_id", "cv", "cn"),
+          "a": ("vec_a", "va", "na"), "b": ("vec_b", "vb", "nb")}
+
+
+def _side(df: DataFrame, role: str, *extra) -> DataFrame:
+    """(vec_id, embedding, nrm, *extra) rows renamed as one join side."""
+    i, v, n = _SIDES[role]
+    return df.select(F.col("vec_id").alias(i), F.col("embedding").alias(v),
+                     F.col("nrm").alias(n), *extra)
+
+
+def _side_cosine(x: str, y: str) -> Column:
+    """Exact cosine between the vectors of sides `x` and `y`."""
+    (_, xv, xn), (_, yv, yn) = _SIDES[x], _SIDES[y]
+    return _cosine(_dot(F.col(xv), F.col(yv)), F.col(xn), F.col(yn))
+
+
+def cosine_topk(emb: DataFrame, query_ids, k: int = 10) -> DataFrame:
+    """Exact top-k cosine neighbors for each query id (excluding self)."""
+    base = with_unit_info(emb).select(
+        F.col("vec_id"), F.col("embedding"), F.col("nrm"))
+    q = _side(_queries(base, query_ids), "q")
+    c = _side(base, "c")
+    scored = (F.broadcast(q).join(c, F.col("query_id") != F.col("cand_id"))
+               .select("query_id", "cand_id",
+                       _side_cosine("q", "c").alias("cosine")))
+    return _topk(scored, k, F.col("cosine").desc())
+
+
+def lsh_signature(vec: Column) -> Column:
     """16-bit random-hyperplane signature from the fixed literal planes."""
     sig = F.lit(0).cast("long")
     for p, plane in enumerate(LSH_PLANES):
         arr = F.array(*[F.lit(w) for w in plane])
-        proj = _dot(vec_col, arr)
+        proj = _dot(vec, arr)
         sig = sig + F.when(proj > 0, F.lit(2 ** p).cast("long")) \
                      .otherwise(F.lit(0).cast("long"))
     return sig
@@ -87,34 +140,35 @@ LSH_BAND_BITS = 2
 LSH_N_BANDS = 8
 
 
-def lsh_cosine_topk(emb: DataFrame, query_ids, k: int = 10,
-                    id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> DataFrame:
-    """ANN top-k with banded hyperplane LSH (OR-amplification).
-
-    The 16-bit signature is split into 4 bands of 4 bits; a corpus vector is
-    a candidate if it matches the query on any band. Band width tunes the
-    bucket size (~N/2^bits per band); at larger corpora raise LSH_BAND_BITS
-    rather than scanning bigger buckets. Exact cosine + top-k on candidates.
-    """
-    base = with_unit_info(emb, vec_col).withColumn(
-        "sig", lsh_signature(F.col(vec_col)))
+def _lsh_bands(emb: DataFrame) -> DataFrame:
+    """(vec_id, embedding, nrm, band, key): one row per vector per band of
+    its 16-bit signature."""
+    base = with_unit_info(emb).withColumn(
+        "sig", lsh_signature(F.col("embedding")))
     mask = (1 << LSH_BAND_BITS) - 1
-    bands = base.select(
-        F.col(id_col), F.col(vec_col), F.col("nrm"),
+    return base.select(
+        F.col("vec_id"), F.col("embedding"), F.col("nrm"),
         F.explode(F.array(*[
             F.struct(F.lit(b).alias("band"),
                      F.shiftright(F.col("sig"), b * LSH_BAND_BITS)
                       .bitwiseAND(mask).alias("key"))
             for b in range(LSH_N_BANDS)])).alias("bk")) \
-        .select(F.col(id_col), F.col(vec_col), F.col("nrm"),
+        .select(F.col("vec_id"), F.col("embedding"), F.col("nrm"),
                 F.col("bk.band"), F.col("bk.key"))
-    q = bands.filter(F.col(id_col).isin(list(query_ids))).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-        F.col("nrm").alias("qn"), F.col("band").alias("qband"),
-        F.col("key").alias("qkey"))
-    c = bands.select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv"),
-                     F.col("nrm").alias("cn"), F.col("band"), F.col("key"))
+
+
+def lsh_cosine_topk(emb: DataFrame, query_ids, k: int = 10) -> DataFrame:
+    """ANN top-k with banded hyperplane LSH (OR-amplification).
+
+    A corpus vector is a candidate if it matches the query on any of the
+    LSH_N_BANDS bands. Band width tunes the bucket size (~N/2^bits per
+    band); at larger corpora raise LSH_BAND_BITS rather than scanning
+    bigger buckets. Exact cosine + top-k on candidates.
+    """
+    bands = _lsh_bands(emb)
+    q = _side(_queries(bands, query_ids), "q",
+              F.col("band").alias("qband"), F.col("key").alias("qkey"))
+    c = _side(bands, "c", F.col("band"), F.col("key"))
     matched = (F.broadcast(q)
                .join(c, (F.col("qband") == F.col("band"))
                      & (F.col("qkey") == F.col("key"))
@@ -125,64 +179,62 @@ def lsh_cosine_topk(emb: DataFrame, query_ids, k: int = 10,
     # arrays, and the groupBy partial-aggregates map-side (the duplicate
     # band matches collapse before the exchange). Duplicates score
     # identically, so first() is deterministic.
-    cos = _cosine(_dot(F.col("qv"), F.col("cv")), F.col("qn"), F.col("cn"))
-    scored = (matched.select("query_id", "cand_id", cos.alias("cosine"))
+    scored = (matched.select("query_id", "cand_id",
+                             _side_cosine("q", "c").alias("cosine"))
               .groupBy("query_id", "cand_id")
               .agg(F.first("cosine").alias("cosine")))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(),
-                                               F.col("cand_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= k))
+    return _topk(scored, k, F.col("cosine").desc())
 
 
-# IVF coarse quantizer: K cells, probe the nprobe nearest cells per query.
-# The codebook comes from the k-means trainer (operators/kmeans.py::
-# kmeans_train): by default ivf_cosine_topk trains it on the corpus it is
-# indexing (a quantizer is an artifact OF its corpus — a codebook trained
-# on one draw recalls ~0.4 on another vs ~0.9 same-corpus); registered
-# queries instead pass the pinned per-corpus artifact from
-# functions/ivf_codebook.py (generated by tools/train_ivf_codebook.py) so
-# the DuckDB oracle can embed the identical 6dp literals.
+# IVF coarse quantizer: K cells, probe the IVF_NPROBE nearest cells per
+# query. The codebook is an artifact OF its corpus (one trained on one
+# draw recalls ~0.4 on another vs ~0.9 same-corpus), trained offline by
+# tools/train_ivf_codebook.py with operators/kmeans.py::kmeans_train at
+# IVF_K / IVF_TRAIN_ITERS and pinned in functions/ivf_codebook.py, so the
+# DuckDB oracle can embed the identical 6dp literals.
 IVF_K = 16
 IVF_NPROBE = 4
 IVF_TRAIN_ITERS = 10
 
 
-def _codebook_df(spark, centroids) -> DataFrame:
-    """(cid, cv, cn) rows from a k x d centroid matrix."""
-    df = spark.createDataFrame(
+def _scored_cells(base: DataFrame, centroids) -> DataFrame:
+    """Every (vector, centroid) cosine — (vec_id, embedding, nrm, cid,
+    ccos): the K-row codebook broadcast against the partitioned corpus,
+    N*K scored rows, never shuffled. `base` carries nrm
+    (with_unit_info)."""
+    cents = base.sparkSession.createDataFrame(
         [(i, [float(v) for v in c]) for i, c in enumerate(centroids)],
-        "cid int, cv array<double>")
-    return df.withColumn("cn", _norm(F.col("cv")))
-
-
-def _scored_cells(base: DataFrame, cents: DataFrame, id_col: str,
-                  vec_col: str) -> DataFrame:
-    """Every (vector, centroid) cosine: broadcast K-row codebook against the
-    partitioned corpus — N*K scored rows, never shuffled."""
-    cos_to_cent = _cosine(_dot(F.col(vec_col), F.col("cv")),
+        "cid int, cv array<double>").withColumn("cn", _norm(F.col("cv")))
+    cos_to_cent = _cosine(_dot(F.col("embedding"), F.col("cv")),
                           F.col("nrm"), F.col("cn"))
     return (base.crossJoin(F.broadcast(cents))
-                .select(F.col(id_col), F.col(vec_col), F.col("nrm"),
+                .select(F.col("vec_id"), F.col("embedding"), F.col("nrm"),
                         F.col("cid"), cos_to_cent.alias("ccos")))
 
 
-def _argmax_cell(scored_cells: DataFrame, id_col: str,
-                 vec_col: str) -> DataFrame:
-    """Nearest-cell assignment (id, cell, vec, nrm) via broadcast-scored
-    rows + map-side max_by partial aggregation (one ~N-row exchange).
-    Semantically identical to assign_cells (max_by(cid, struct(ccos,
-    -cid)) == the fold's first-strict-max; oracle ROW_NUMBER(ORDER BY
-    cos DESC, cid)); kept beside it because the two win in DIFFERENT
-    plan shapes, measured at sf0.1: when a fat join/re-rank follows in
-    the same stage, the literal fold's CodegenFallback drags the whole
-    stage interpreted (ivf_cosine_topk 0.85 s agg vs 1.65 s map), while
-    a standalone assignment is 3x faster as a pure map
+def _probe_order(scored_cells: DataFrame) -> DataFrame:
+    """_scored_cells rows plus `rn`: each vector's cells ranked by (ccos
+    DESC, cid) — the IVF probe order (a query probes rn <= nprobe)."""
+    w = Window.partitionBy("vec_id").orderBy(F.col("ccos").desc(),
+                                             F.col("cid"))
+    return scored_cells.withColumn("rn", F.row_number().over(w))
+
+
+def _argmax_cell(scored_cells: DataFrame) -> DataFrame:
+    """Nearest-cell assignment (vec_id, cell, embedding, nrm) via
+    broadcast-scored rows + map-side max_by partial aggregation (one ~N-row
+    exchange). Semantically identical to assign_cells (max_by(cid,
+    struct(ccos, -cid)) == the fold's first-strict-max; oracle
+    ROW_NUMBER(ORDER BY cos DESC, cid)); kept beside it because the two
+    win in DIFFERENT plan shapes, measured at sf0.1: when a fat join/re-rank
+    follows in the same stage, the literal fold's CodegenFallback drags the
+    whole stage interpreted (ivf_cosine_topk 0.85 s agg vs 1.65 s map),
+    while a standalone assignment is 3x faster as a pure map
     (kmeans_assign_cells 0.9 s -> 0.3 s)."""
     tie = F.struct(F.col("ccos").alias("c"), (-F.col("cid")).alias("nj"))
-    return scored_cells.groupBy(id_col).agg(
+    return scored_cells.groupBy("vec_id").agg(
         F.max_by("cid", tie).cast("long").alias("cell"),
-        F.first(vec_col).alias(vec_col),
+        F.first("embedding").alias("embedding"),
         F.first("nrm").alias("nrm"))
 
 
@@ -193,9 +245,9 @@ def _dot_expr_sql(a: str, b: str) -> str:
             "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)")
 
 
-def _ivf_best_sql(vec_col: str, nrm_col: str, centroids) -> str:
-    """struct<v double, j int>: the argmax-cosine centroid (ties ->
-    smallest cid; NULL cosines — zero-norm vectors — lose to any
+def _ivf_best_sql(centroids) -> str:
+    """struct<v double, j int>: the argmax-cosine centroid of `embedding`
+    (ties -> smallest cid; NULL cosines — zero-norm vectors — lose to any
     non-NULL, and an all-NULL row keeps j=0 with v NULL), via a
     first-strict-max fold over the K literal-centroid cosines. Replays
     the previous max_by(cid, struct(ccos, -cid)) aggregation bit for
@@ -203,7 +255,7 @@ def _ivf_best_sql(vec_col: str, nrm_col: str, centroids) -> str:
     orders above every double in both the fold's `>` and max_by's
     struct ordering — but as a PURE MAP: the centroid table enters the
     plan as constants, so cell assignment adds no join and no exchange.
-    `nrm_col` must be a materialized column (with_unit_info): it is
+    `nrm` must be a materialized column (with_unit_info): it is
     referenced once per centroid and must not re-evaluate."""
     import math
 
@@ -222,9 +274,9 @@ def _ivf_best_sql(vec_col: str, nrm_col: str, centroids) -> str:
 
     cents = _lit_mat_sql(centroids)
     cns = "array(" + ", ".join(_dlit(_py_norm(cv)) for cv in centroids) + ")"
-    den = f"({nrm_col} * element_at({cns}, i + 1))"
+    den = f"(nrm * element_at({cns}, i + 1))"
     cos = (f"CASE WHEN {den} <> 0 THEN "
-           f"{_dot_expr_sql(vec_col, f'element_at({cents}, i + 1)')}"
+           f"{_dot_expr_sql('embedding', f'element_at({cents}, i + 1)')}"
            f" / {den} END")
     take = ("COALESCE(x > acc.v, acc.v IS NULL AND x IS NOT NULL) "
             "OR acc.j = -1")
@@ -239,35 +291,29 @@ def _ivf_best_sql(vec_col: str, nrm_col: str, centroids) -> str:
 
 
 def assign_cells(base: DataFrame, centroids,
-                 id_col: str = "vec_id", vec_col: str = "embedding",
                  with_cosine: bool = False) -> DataFrame:
     """Map-only IVF cell assignment: same output relation as
-    the old broadcast-score + max_by aggregation — (id, cell, vec, nrm
-    [, cell_cosine]) — with the codebook compiled into the projection
-    instead of broadcast-joined and re-aggregated, removing the
+    the old broadcast-score + max_by aggregation — (vec_id, cell,
+    embedding, nrm[, cell_cosine]) — with the codebook compiled into the
+    projection instead of broadcast-joined and re-aggregated, removing the
     corpus-sized exchange from every index build. `base` must already
     carry the nrm column (with_unit_info)."""
-    st = base.withColumn(
-        "_asg", F.expr(_ivf_best_sql(vec_col, "nrm", centroids)))
-    cols = [F.col(id_col), F.col("_asg.j").cast("long").alias("cell"),
-            F.col(vec_col), F.col("nrm")]
+    st = base.withColumn("_asg", F.expr(_ivf_best_sql(centroids)))
+    cols = [F.col("vec_id"), F.col("_asg.j").cast("long").alias("cell"),
+            F.col("embedding"), F.col("nrm")]
     if with_cosine:
         cols.append(F.col("_asg.v").alias("cell_cosine"))
     return st.select(*cols)
 
 
-def ivf_cosine_topk(emb: DataFrame, query_ids, k: int = 10,
-                    id_col: str = "vec_id",
-                    vec_col: str = "embedding",
-                    centroids=None) -> DataFrame:
-    """ANN top-k with an IVF (inverted-file) index.
+def ivf_cosine_topk(emb: DataFrame, query_ids, centroids,
+                    k: int = 10) -> DataFrame:
+    """ANN top-k with an IVF (inverted-file) index over the K-row
+    `centroids` codebook.
 
-    Build: the K-row k-means codebook — trained on this corpus by
-    operators/kmeans.py::kmeans_train when `centroids` is None, or the
-    caller's pinned artifact (functions/ivf_codebook.py for the testdata
-    corpora) — broadcast-joins the corpus; N*K scored rows never shuffle;
-    map-side max_by partial aggregation reduces them to one (vector, cell)
-    row per vector before the single exchange on vec_id.
+    Build: the codebook broadcast-joins the corpus; N*K scored rows never
+    shuffle; map-side max_by partial aggregation reduces them to one
+    (vector, cell) row per vector before the single exchange on vec_id.
 
     Search: each query probes its IVF_NPROBE nearest cells; candidates =
     corpus vectors in probed cells (equi-join on cell against the broadcast
@@ -275,25 +321,16 @@ def ivf_cosine_topk(emb: DataFrame, query_ids, k: int = 10,
     force; at 100 TB raise K so cells stay executor-sized and the probe
     join stays broadcast.
     """
-    if centroids is None:
-        from kafka_flink_processing_spark.operators.kmeans import kmeans_train
-        centroids, _ = kmeans_train(emb, k=IVF_K, iters=IVF_TRAIN_ITERS,
-                                    id_col=id_col, vec_col=vec_col)
-    base = with_unit_info(emb, vec_col)
-    cents = _codebook_df(emb.sparkSession, centroids)
+    base = with_unit_info(emb)
     # agg-based assignment here, NOT assign_cells: the exact re-rank
     # join follows in-stage, and the measured sf0.1 tradeoff favors the
     # codegen-friendly aggregation (see _argmax_cell's docstring)
-    scored_cells = _scored_cells(base, cents, id_col, vec_col)
-    asg = _argmax_cell(scored_cells, id_col, vec_col)
-
-    wq = Window.partitionBy(id_col).orderBy(F.col("ccos").desc(), F.col("cid"))
-    probes = (scored_cells.filter(F.col(id_col).isin(list(query_ids)))
-              .withColumn("rn", F.row_number().over(wq))
-              .filter(F.col("rn") <= IVF_NPROBE)
-              .select(F.col(id_col).alias("query_id"),
-                      F.col(vec_col).alias("qv"), F.col("nrm").alias("qn"),
-                      F.col("cid").cast("long").alias("cell")))
+    scored_cells = _scored_cells(base, centroids)
+    asg = _argmax_cell(scored_cells)
+    probes = _side(
+        _probe_order(_queries(scored_cells, query_ids))
+        .filter(F.col("rn") <= IVF_NPROBE),
+        "q", F.col("cid").cast("long").alias("cell"))
 
     # No distinct needed: every corpus vector is argmax-assigned to exactly
     # ONE cell and a query's probe list holds distinct cells, so each
@@ -301,16 +338,13 @@ def ivf_cosine_topk(emb: DataFrame, query_ids, k: int = 10,
     # array-keyed shuffle over the whole candidate set for nothing.
     cand = (F.broadcast(probes)
             .join(asg, "cell")
-            .filter(F.col("query_id") != F.col(id_col))
+            .filter(F.col("query_id") != F.col("vec_id"))
             .select("query_id", "qv", "qn",
-                    F.col(id_col).alias("cand_id"),
-                    F.col(vec_col).alias("cv"), F.col("nrm").alias("cn")))
-    cos = _cosine(_dot(F.col("qv"), F.col("cv")), F.col("qn"), F.col("cn"))
-    scored = cand.select("query_id", "cand_id", cos.alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(),
-                                               F.col("cand_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= k))
+                    F.col("vec_id").alias("cand_id"),
+                    F.col("embedding").alias("cv"), F.col("nrm").alias("cn")))
+    scored = cand.select("query_id", "cand_id",
+                         _side_cosine("q", "c").alias("cosine"))
+    return _topk(scored, k, F.col("cosine").desc())
 
 
 def _sqd(a: Column, b: Column) -> Column:
@@ -354,7 +388,7 @@ def _lit_mat_sql(mat) -> str:
         for cv in mat) + ")")
 
 
-def _pq_sqds_sql(vec_col: str, codebook) -> str:
+def _pq_sqds_sql(vec: str, codebook) -> str:
     """SQL for the M x K matrix (array<array<double>>) of squared
     distances from the vector's m-th slice to each literal centroid —
     the codebook enters the plan as constants, not a joined relation.
@@ -369,12 +403,12 @@ def _pq_sqds_sql(vec_col: str, codebook) -> str:
     dsub = len(codebook[0][0])
     cb = ("array(" + ", ".join(_lit_mat_sql(sub) for sub in codebook)
           + ")")
-    sqd = _sqd_expr_sql(f"slice({vec_col}, m * {dsub} + 1, {dsub})", "cv")
+    sqd = _sqd_expr_sql(f"slice({vec}, m * {dsub} + 1, {dsub})", "cv")
     return (f"transform(sequence(0, {m_count - 1}), m -> "
             f"transform(element_at({cb}, m + 1), cv -> {sqd}))")
 
 
-def _pq_best_expr(vec_col: str, codebook) -> Column:
+def _pq_best_expr(vec: str, codebook) -> Column:
     """array<struct<v double, j int>>: per subspace, the argmin centroid
     (ties -> smallest j) and ITS squared distance, via a first-strict-min
     fold. The fold iterates over the materialized sqds array ITSELF (a
@@ -387,7 +421,7 @@ def _pq_best_expr(vec_col: str, codebook) -> Column:
     `x < acc.v` skips NaN unless everything is NaN (then j=0 wins in
     both — the first element is always taken via the j = -1 guard)."""
     return F.expr(
-        f"transform({_pq_sqds_sql(vec_col, codebook)}, sqds -> "
+        f"transform({_pq_sqds_sql(vec, codebook)}, sqds -> "
         "aggregate(sqds, "
         "named_struct('v', CAST('Infinity' AS DOUBLE), "
         "'j', -1, 'i', -1), "
@@ -398,36 +432,59 @@ def _pq_best_expr(vec_col: str, codebook) -> Column:
         "acc -> named_struct('v', acc.v, 'j', acc.j)))")
 
 
-def _pq_lut_expr(vec_col: str, codebook) -> Column:
+def _pq_codes(vec: str, codebook) -> Column:
+    """`codes` array<int>: the per-subspace argmin centroid ids of `vec`."""
+    return F.transform(_pq_best_expr(vec, codebook),
+                       lambda s: s["j"]).alias("codes")
+
+
+def _pq_lut_expr(vec: str, codebook) -> Column:
     """Flat M*K ADC lookup table (index = m*K + j) as one map-side
     expression."""
-    return F.expr(f"flatten({_pq_sqds_sql(vec_col, codebook)})")
+    return F.expr(f"flatten({_pq_sqds_sql(vec, codebook)})")
 
 
-def _ivf_centroids_lit_sql(centroids) -> str:
-    """The whole centroid table as one 2-D array literal."""
-    return _lit_mat_sql(centroids)
+def _query_luts(emb: DataFrame, query_ids, codebook) -> DataFrame:
+    """(query_id, lut): each query vector's flat ADC lookup table."""
+    return _queries(emb, query_ids).select(
+        F.col("vec_id").alias("query_id"),
+        _pq_lut_expr("embedding", codebook).alias("lut"))
 
 
-def residual_expr(vec_col: str, cell_col: str, centroids) -> Column:
+def _adc_topk(cand: DataFrame, codebook, k: int) -> DataFrame:
+    """Top-k by asymmetric distance over (query_id, lut) x (vec_id, codes)
+    candidate rows: adist = sum_m lut[m*K + codes[m]], folded in subspace
+    order (the oracle's unrolled sum, bit-identical); self-matches
+    dropped. Returns (query_id, cand_id, adist, rank)."""
+    M = len(codebook)
+    K = len(codebook[0])
+    adist = F.aggregate(
+        F.sequence(F.lit(0), F.lit(M - 1)), F.lit(0.0),
+        lambda acc, m: acc + F.element_at(
+            F.col("lut"),
+            m * K + F.element_at(F.col("codes"), m + 1) + 1))
+    scored = (cand.filter(F.col("query_id") != F.col("vec_id"))
+              .select("query_id", F.col("vec_id").alias("cand_id"),
+                      adist.alias("adist")))
+    return _topk(scored, k, F.col("adist"))
+
+
+def residual_expr(vec: str, centroids) -> Column:
     """vec - C_ivf[cell], elementwise in double — the quantity residual
     IVFADC encodes (Jegou et al. 2011 §V.A): PQ distortion drops because
     residuals concentrate near 0 once the coarse quantizer has absorbed
     the cell mean. Map-side: the centroid table is a 2-D literal indexed
-    by the (already-computed) cell column."""
+    by the (already-computed) `cell` column."""
     return F.expr(
-        f"zip_with({vec_col}, "
-        f"element_at({_ivf_centroids_lit_sql(centroids)}, "
-        f"CAST({cell_col} AS INT) + 1), "
+        f"zip_with({vec}, "
+        f"element_at({_lit_mat_sql(centroids)}, CAST(cell AS INT) + 1), "
         "(x, y) -> CAST(x AS DOUBLE) - CAST(y AS DOUBLE))")
 
 
-def pq_encode(emb: DataFrame, codebook,
-              id_col: str = "vec_id",
-              vec_col: str = "embedding") -> DataFrame:
+def pq_encode(emb: DataFrame, codebook) -> DataFrame:
     """Product-quantization encode (Jegou et al. 2011): per subspace m,
     code = argmin_j ||x_m - C[m][j]||^2 (ties -> smallest j, the
-    oracle's ROW_NUMBER order). Returns (id, codes array<int>,
+    oracle's ROW_NUMBER order). Returns (vec_id, codes array<int>,
     distortion double) where distortion is the reconstruction error
     sum_m min_j ||x_m - C[m][j]||^2, folded in subspace order so the
     double is bit-identical cross-engine.
@@ -439,21 +496,20 @@ def pq_encode(emb: DataFrame, codebook,
     point of PQ: one pass compresses the corpus ~16x (M bytes + id vs
     M*dsub floats) and every downstream ADC scan reads codes, not
     vectors."""
-    best = _pq_best_expr(vec_col, codebook)
+    best = _pq_best_expr("embedding", codebook)
     # one Project materializes the per-subspace structs; the consumers
     # reference it twice, which CollapseProject leaves un-inlined
     # (non-cheap expression), so the fold runs once per row
-    st = emb.select(F.col(id_col), best.alias("_pq"))
+    st = emb.select(F.col("vec_id"), best.alias("_pq"))
     return st.select(
-        id_col,
+        "vec_id",
         F.transform(F.col("_pq"), lambda s: s["j"]).alias("codes"),
         F.aggregate(F.transform(F.col("_pq"), lambda s: s["v"]),
                     F.lit(0.0), lambda acc, x: acc + x).alias("distortion"))
 
 
-def pq_adc_topk(emb: DataFrame, query_ids, codebook, k: int = 10,
-                id_col: str = "vec_id",
-                vec_col: str = "embedding") -> DataFrame:
+def pq_adc_topk(emb: DataFrame, query_ids, codebook,
+                k: int = 10) -> DataFrame:
     """ANN top-k by PQ asymmetric distance computation: encode the corpus
     once (pq_encode), build each query's M x K lookup table of exact
     subspace distances to every centroid, then approximate
@@ -467,33 +523,13 @@ def pq_adc_topk(emb: DataFrame, query_ids, codebook, k: int = 10,
     map over the filtered queries, and the ADC scan reads the M-byte
     codes relation (the compressed corpus), not the vectors — the
     textbook memory-bandwidth win of PQ."""
-    M = len(codebook)
-    K = len(codebook[0])
-    enc = pq_encode(emb, codebook, id_col, vec_col).select(id_col, "codes")
-
-    luts = (emb.filter(F.col(id_col).isin(list(query_ids)))
-            .select(F.col(id_col).alias("query_id"),
-                    _pq_lut_expr(vec_col, codebook).alias("lut")))
-
-    adist = F.aggregate(
-        F.sequence(F.lit(0), F.lit(M - 1)), F.lit(0.0),
-        lambda acc, m: acc + F.element_at(
-            F.col("lut"),
-            m * K + F.element_at(F.col("codes"), m + 1) + 1))
-    scored = (enc.crossJoin(F.broadcast(luts))
-              .filter(F.col("query_id") != F.col(id_col))
-              .select("query_id", F.col(id_col).alias("cand_id"),
-                      adist.alias("adist")))
-    w = Window.partitionBy("query_id").orderBy(F.col("adist"),
-                                               F.col("cand_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= k))
+    enc = pq_encode(emb, codebook).select("vec_id", "codes")
+    luts = _query_luts(emb, query_ids, codebook)
+    return _adc_topk(enc.crossJoin(F.broadcast(luts)), codebook, k)
 
 
 def pq_adc_rerank_topk(emb: DataFrame, query_ids, codebook, k: int = 10,
-                       shortlist: int = 50,
-                       id_col: str = "vec_id",
-                       vec_col: str = "embedding") -> DataFrame:
+                       shortlist: int = 50) -> DataFrame:
     """The production PQ pattern: ADC retrieves a `shortlist`-sized
     candidate set from the compressed codes, then ONLY the shortlist's
     original vectors are fetched for an exact squared-L2 re-rank —
@@ -505,100 +541,57 @@ def pq_adc_rerank_topk(emb: DataFrame, query_ids, codebook, k: int = 10,
     re-rank join touches |Q| * shortlist vectors (broadcastable), so
     the full-precision corpus is read ~|Q|*R/N as often as brute force
     would read it."""
-    short = pq_adc_topk(emb, query_ids, codebook, k=shortlist,
-                        id_col=id_col, vec_col=vec_col)
-    q = (emb.filter(F.col(id_col).isin(list(query_ids)))
-         .select(F.col(id_col).alias("query_id"),
-                 F.col(vec_col).alias("qv")))
+    short = pq_adc_topk(emb, query_ids, codebook, k=shortlist)
+    q = _queries(emb, query_ids).select(F.col("vec_id").alias("query_id"),
+                                        F.col("embedding").alias("qv"))
     cand = (short.select("query_id", "cand_id")
-            .join(emb.select(F.col(id_col).alias("cand_id"),
-                             F.col(vec_col).alias("cv")), "cand_id")
+            .join(emb.select(F.col("vec_id").alias("cand_id"),
+                             F.col("embedding").alias("cv")), "cand_id")
             .join(F.broadcast(q), "query_id"))
     scored = cand.select("query_id", "cand_id",
                          _sqd(F.col("qv"), F.col("cv")).alias("dist"))
-    w = Window.partitionBy("query_id").orderBy(F.col("dist"),
-                                               F.col("cand_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= k))
+    return _topk(scored, k, F.col("dist"))
 
 
-def ivfpq_adc_topk(emb: DataFrame, query_ids, codebook, k: int = 10,
-                   nprobe: int = IVF_NPROBE,
-                   id_col: str = "vec_id",
-                   vec_col: str = "embedding",
-                   centroids=None) -> DataFrame:
+def ivfpq_adc_topk(emb: DataFrame, query_ids, codebook, centroids,
+                   k: int = 10) -> DataFrame:
     """IVFADC (Jegou et al. 2011 §V, the FAISS default architecture):
     IVF coarse-cell pruning COMPOSED with PQ asymmetric-distance scoring
-    — each query probes its `nprobe` nearest cells and scans only those
+    — each query probes its IVF_NPROBE nearest cells and scans only those
     cells' M-byte PQ codes, so the two orthogonal scale levers multiply:
     read nprobe/K of the corpus (IVF) at ~1/16 the bytes per row (PQ).
     Raw vectors are encoded (no residual — the deterministic variant
     both engines replay bit-exact; FAISS's encode_residual=false mode).
     Returns (query_id, cand_id, adist, rank) by (adist ASC, cand_id).
 
-    Index build = the cell argmax (broadcast centroid scores, one
-    map-side-combined exchange of N rows) followed by a pure-map PQ
-    encode (literal codebook) with the cell riding along — the (cell,
-    codes) index needs no corpus-sized self-join and no PQ shuffle. At
-    100 TB the index is materialized once (partitioned by cell) and
-    queries touch nprobe cells of codes."""
-    if centroids is None:
-        from kafka_flink_processing_spark.operators.kmeans import kmeans_train
-        centroids, _ = kmeans_train(emb, k=IVF_K, iters=IVF_TRAIN_ITERS,
-                                    id_col=id_col, vec_col=vec_col)
-    spark = emb.sparkSession
-    M = len(codebook)
-    K = len(codebook[0])
-
-    # coarse quantizer: map-only literal-codebook assignment — one
-    # (vector, cell) row per corpus vector, no exchange
-    base = with_unit_info(emb, vec_col)
-    cents = _codebook_df(spark, centroids)
-    asg = assign_cells(base, centroids, id_col, vec_col)
-    scored_cells = _scored_cells(base, cents, id_col, vec_col)
-
-    # PQ-encode the assigned corpus — a pure map over asg (literal
-    # codebook), the cell column rides along untouched
-    codes = asg.select(
-        F.col(id_col), F.col("cell"),
-        F.transform(_pq_best_expr(vec_col, codebook),
-                    lambda s: s["j"]).alias("codes"))
+    Index build = map-only literal-codebook cell assignment followed by a
+    pure-map PQ encode (literal codebook) with the cell riding along —
+    the (cell, codes) index needs no corpus-sized self-join and no PQ
+    shuffle. At 100 TB the index is materialized once (partitioned by
+    cell) and queries touch nprobe cells of codes."""
+    base = with_unit_info(emb)
+    asg = assign_cells(base, centroids)
+    codes = asg.select(F.col("vec_id"), F.col("cell"),
+                       _pq_codes("embedding", codebook))
 
     # query side: nprobe nearest cells + the flat M x K ADC lookup table
-    wq = Window.partitionBy(id_col).orderBy(F.col("ccos").desc(),
-                                            F.col("cid"))
-    probes = (scored_cells.filter(F.col(id_col).isin(list(query_ids)))
-              .withColumn("rn", F.row_number().over(wq))
-              .filter(F.col("rn") <= nprobe)
-              .select(F.col(id_col).alias("query_id"),
+    probes = (_probe_order(_queries(_scored_cells(base, centroids),
+                                    query_ids))
+              .filter(F.col("rn") <= IVF_NPROBE)
+              .select(F.col("vec_id").alias("query_id"),
                       F.col("cid").cast("long").alias("cell")))
-    luts = (emb.filter(F.col(id_col).isin(list(query_ids)))
-            .select(F.col(id_col).alias("query_id"),
-                    _pq_lut_expr(vec_col, codebook).alias("lut")))
+    luts = _query_luts(emb, query_ids, codebook)
 
     # probed-cell code scan: each (query, candidate) joins at most once
     # (argmax assigns one cell per vector; a query's probe cells are
     # distinct), then M LUT lookups per candidate
-    adist = F.aggregate(
-        F.sequence(F.lit(0), F.lit(M - 1)), F.lit(0.0),
-        lambda acc, m: acc + F.element_at(
-            F.col("lut"),
-            m * K + F.element_at(F.col("codes"), m + 1) + 1))
-    cand = (codes.join(F.broadcast(probes.join(luts, "query_id")), "cell")
-            .filter(F.col("query_id") != F.col(id_col))
-            .select("query_id", F.col(id_col).alias("cand_id"),
-                    adist.alias("adist")))
-    w = Window.partitionBy("query_id").orderBy(F.col("adist"),
-                                               F.col("cand_id"))
-    return (cand.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k))
+    return _adc_topk(
+        codes.join(F.broadcast(probes.join(luts, "query_id")), "cell"),
+        codebook, k)
 
 
-def ivfpq_residual_adc_topk(emb: DataFrame, query_ids, codebook,
-                            k: int = 10, nprobe: int = IVF_NPROBE,
-                            id_col: str = "vec_id",
-                            vec_col: str = "embedding",
-                            centroids=None) -> DataFrame:
+def ivfpq_residual_adc_topk(emb: DataFrame, query_ids, codebook, centroids,
+                            k: int = 10) -> DataFrame:
     """Residual IVFADC — the full FAISS-default encoding (Jegou et al.
     2011 §V.A): each corpus vector PQ-encodes its RESIDUAL x - C_ivf[
     cell(x)] rather than the raw vector, so the codebook only has to
@@ -612,75 +605,40 @@ def ivfpq_residual_adc_topk(emb: DataFrame, query_ids, codebook,
     zero corpus exchanges. The codebook must be residual-trained
     (tools/train_pq_codebook.py --residual; functions/
     pq_residual_codebook.py is the pinned artifact)."""
-    if centroids is None:
-        from kafka_flink_processing_spark.operators.kmeans import kmeans_train
-        centroids, _ = kmeans_train(emb, k=IVF_K, iters=IVF_TRAIN_ITERS,
-                                    id_col=id_col, vec_col=vec_col)
-    M = len(codebook)
-    K = len(codebook[0])
-
-    base = with_unit_info(emb, vec_col)
-    asg = assign_cells(base, centroids, id_col, vec_col)
-    resid = asg.withColumn("_rv",
-                           residual_expr(vec_col, "cell", centroids))
-    codes = resid.select(
-        F.col(id_col), F.col("cell"),
-        F.transform(_pq_best_expr("_rv", codebook),
-                    lambda s: s["j"]).alias("codes"))
+    base = with_unit_info(emb)
+    asg = assign_cells(base, centroids)
+    resid = asg.withColumn("_rv", residual_expr("embedding", centroids))
+    codes = resid.select(F.col("vec_id"), F.col("cell"),
+                         _pq_codes("_rv", codebook))
 
     # query side: nprobe nearest cells, then ONE LUT per (query, cell)
     # over the query's residual AGAINST THAT CELL
-    cents = _codebook_df(emb.sparkSession, centroids)
-    scored_cells = _scored_cells(base, cents, id_col, vec_col)
-    wq = Window.partitionBy(id_col).orderBy(F.col("ccos").desc(),
-                                            F.col("cid"))
-    probes = (scored_cells.filter(F.col(id_col).isin(list(query_ids)))
-              .withColumn("rn", F.row_number().over(wq))
-              .filter(F.col("rn") <= nprobe)
-              .select(F.col(id_col).alias("query_id"),
+    probes = (_probe_order(_queries(_scored_cells(base, centroids),
+                                    query_ids))
+              .filter(F.col("rn") <= IVF_NPROBE)
+              .select(F.col("vec_id").alias("query_id"),
                       F.col("cid").cast("long").alias("cell"),
-                      F.col(vec_col)))
+                      F.col("embedding")))
     luts = (probes
-            .withColumn("_qr", residual_expr(vec_col, "cell", centroids))
+            .withColumn("_qr", residual_expr("embedding", centroids))
             .select("query_id", "cell",
                     _pq_lut_expr("_qr", codebook).alias("lut")))
-
-    adist = F.aggregate(
-        F.sequence(F.lit(0), F.lit(M - 1)), F.lit(0.0),
-        lambda acc, m: acc + F.element_at(
-            F.col("lut"),
-            m * K + F.element_at(F.col("codes"), m + 1) + 1))
-    cand = (codes.join(F.broadcast(luts), "cell")
-            .filter(F.col("query_id") != F.col(id_col))
-            .select("query_id", F.col(id_col).alias("cand_id"),
-                    adist.alias("adist")))
-    w = Window.partitionBy("query_id").orderBy(F.col("adist"),
-                                               F.col("cand_id"))
-    return (cand.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k))
+    return _adc_topk(codes.join(F.broadcast(luts), "cell"), codebook, k)
 
 
-def cosine_pairs(emb: DataFrame, threshold: float = 0.45,
-                 id_col: str = "vec_id",
-                 vec_col: str = "embedding") -> DataFrame:
+def cosine_pairs(emb: DataFrame, threshold: float) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, brute force: O(n^2) all-pairs
     theta-join. TEST-ONLY BASELINE and the oracle's ground truth —
     production paths go through lsh_cosine_pairs (the registered query
     does), which replaces the all-pairs join with LSH bucket candidates."""
-    base = with_unit_info(emb, vec_col)
-    a = base.select(F.col(id_col).alias("vec_a"), F.col(vec_col).alias("va"),
-                    F.col("nrm").alias("na"))
-    b = base.select(F.col(id_col).alias("vec_b"), F.col(vec_col).alias("vb"),
-                    F.col("nrm").alias("nb"))
-    cos = _cosine(_dot(F.col("va"), F.col("vb")), F.col("na"), F.col("nb"))
+    base = with_unit_info(emb)
+    a, b = _side(base, "a"), _side(base, "b")
     return (a.join(b, F.col("vec_a") < F.col("vec_b"))
-             .select("vec_a", "vec_b", cos.alias("cosine"))
+             .select("vec_a", "vec_b", _side_cosine("a", "b").alias("cosine"))
              .filter(F.col("cosine") >= threshold))
 
 
-def lsh_cosine_pairs(emb: DataFrame, threshold: float = 0.45,
-                     id_col: str = "vec_id",
-                     vec_col: str = "embedding") -> DataFrame:
+def lsh_cosine_pairs(emb: DataFrame, threshold: float) -> DataFrame:
     """Embedding-cosine near-dup pairs via banded-LSH candidates + exact
     re-scoring — no all-pairs join anywhere in the plan.
 
@@ -698,22 +656,8 @@ def lsh_cosine_pairs(emb: DataFrame, threshold: float = 0.45,
     cosine_pairs (quadratic) — low-threshold exact pair mining has no
     sub-quadratic complete algorithm.
     """
-    base = with_unit_info(emb, vec_col).withColumn(
-        "sig", lsh_signature(F.col(vec_col)))
-    mask = (1 << LSH_BAND_BITS) - 1
-    bands = base.select(
-        F.col(id_col), F.col(vec_col), F.col("nrm"),
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band"),
-                     F.shiftright(F.col("sig"), b * LSH_BAND_BITS)
-                      .bitwiseAND(mask).alias("key"))
-            for b in range(LSH_N_BANDS)])).alias("bk")) \
-        .select(F.col(id_col), F.col(vec_col), F.col("nrm"),
-                F.col("bk.band"), F.col("bk.key"))
-    a = bands.select(F.col(id_col).alias("vec_a"), F.col(vec_col).alias("va"),
-                     F.col("nrm").alias("na"), "band", "key")
-    b = bands.select(F.col(id_col).alias("vec_b"), F.col(vec_col).alias("vb"),
-                     F.col("nrm").alias("nb"), "band", "key")
+    bands = _lsh_bands(emb)
+    a, b = _side(bands, "a", "band", "key"), _side(bands, "b", "band", "key")
     cand = (a.join(b, ["band", "key"])
              .filter(F.col("vec_a") < F.col("vec_b")))
     # Score and threshold BEFORE the dedup: the multi-band duplicates then
@@ -721,8 +665,8 @@ def lsh_cosine_pairs(emb: DataFrame, threshold: float = 0.45,
     # aggregation map-side), instead of a distinct whose key is two whole
     # embedding arrays. Duplicate band matches score identically, so
     # first() is deterministic.
-    cos = _cosine(_dot(F.col("va"), F.col("vb")), F.col("na"), F.col("nb"))
-    return (cand.select("vec_a", "vec_b", cos.alias("cosine"))
+    return (cand.select("vec_a", "vec_b",
+                        _side_cosine("a", "b").alias("cosine"))
                 .filter(F.col("cosine") >= threshold)
                 .groupBy("vec_a", "vec_b")
                 .agg(F.first("cosine").alias("cosine")))
@@ -732,14 +676,8 @@ def lsh_cosine_pairs(emb: DataFrame, threshold: float = 0.45,
 # clustering the embedding space and pruning near-identical vectors WITHIN
 # each cluster — the pairwise cosine never crosses cluster boundaries, which
 # is what makes it tractable at corpus scale.
-SEMDEDUP_THRESHOLD = 0.45  # the testdata's planted near-dup regime (same
-#                            threshold as lsh_cosine_pairs)
-
-
-def semdedup(emb: DataFrame, threshold: float = SEMDEDUP_THRESHOLD,
-             centroids=None, id_col: str = "vec_id",
-             vec_col: str = "embedding") -> DataFrame:
-    """Semantic dedup: one (id, cell, keep) row per vector.
+def semdedup(emb: DataFrame, threshold: float, centroids) -> DataFrame:
+    """Semantic dedup: one (vec_id, cell, keep) row per vector.
 
     A vector is dropped iff some SAME-CELL vector with a smaller id sits at
     cosine >= threshold — the deterministic keep-lowest-id variant of
@@ -748,30 +686,22 @@ def semdedup(emb: DataFrame, threshold: float = SEMDEDUP_THRESHOLD,
     near-dups are deliberately out of scope — that approximation is the
     algorithm's entire scale story.
 
-    Scale shape: cell assignment is the IVF quantizer's (broadcast codebook,
-    map-side argmax, one ~N-row exchange); the pairwise stage joins on
-    `cell` only, so cost is sum(m_c^2) over cell sizes m_c — at 100 TB you
-    raise K with the corpus (cells stay executor-sized) exactly as for
-    similarity_ivf_topk, and the pair join parallelizes per cell. Dropping
-    is a size-(#dups) distinct + left join back onto the assignment.
+    Scale shape: cell assignment is the IVF quantizer's (map-only literal
+    codebook); the pairwise stage joins on `cell` only, so cost is
+    sum(m_c^2) over cell sizes m_c — at 100 TB you raise K with the corpus
+    (cells stay executor-sized) exactly as for similarity_ivf_topk, and
+    the pair join parallelizes per cell. Dropping is a size-(#dups)
+    distinct + left join back onto the assignment.
     """
-    if centroids is None:
-        from kafka_flink_processing_spark.operators.kmeans import kmeans_train
-        centroids, _ = kmeans_train(emb, k=IVF_K, iters=IVF_TRAIN_ITERS,
-                                    id_col=id_col, vec_col=vec_col)
-    base = with_unit_info(emb, vec_col)
-    asg = assign_cells(base, centroids, id_col, vec_col)
-    a = asg.select(F.col(id_col).alias("vec_a"), F.col(vec_col).alias("va"),
-                   F.col("nrm").alias("na"), "cell")
-    b = asg.select(F.col(id_col).alias("vec_b"), F.col(vec_col).alias("vb"),
-                   F.col("nrm").alias("nb"), "cell")
-    cos = _cosine(_dot(F.col("va"), F.col("vb")), F.col("na"), F.col("nb"))
+    asg = assign_cells(with_unit_info(emb), centroids)
+    a, b = _side(asg, "a", "cell"), _side(asg, "b", "cell")
     dups = (a.join(b, "cell")
              .filter(F.col("vec_a") < F.col("vec_b"))
-             .select(F.col("vec_b").alias(id_col), cos.alias("cosine"))
+             .select(F.col("vec_b").alias("vec_id"),
+                     _side_cosine("a", "b").alias("cosine"))
              .filter(F.col("cosine") >= threshold)
-             .select(id_col).distinct()
+             .select("vec_id").distinct()
              .withColumn("_dup", F.lit(True)))
-    return (asg.join(dups, id_col, "left")
-               .select(F.col(id_col), F.col("cell"),
+    return (asg.join(dups, "vec_id", "left")
+               .select(F.col("vec_id"), F.col("cell"),
                        F.coalesce(~F.col("_dup"), F.lit(True)).alias("keep")))

@@ -33,26 +33,31 @@ def _order_cols(order_by: Sequence[str | Column], desc: bool = False) -> list[Co
     return [c.desc() for c in cols] if desc else cols
 
 
+# The reference ForecastFunction's two ring buffers (ForecastsJob.java:
+# 77-88), shared by the batch window plan and the streaming state fold
+# (streaming/stateful.py::_sma_rows).
+SMA_SHORT = 5
+SMA_LONG = 20
+
+
 def rolling_sma_forecast(df: DataFrame,
                          partition_by: Sequence[str],
                          order_by: Sequence[str],
-                         value_col: str,
-                         short_window: int = 5,
-                         long_window: int = 20) -> DataFrame:
+                         value_col: str) -> DataFrame:
     """Per-key rolling simple moving averages + naive forecast.
 
-    Emits one row per input row with sma{short}, sma{long} computed over the
-    trailing `short_window`/`long_window` rows (fewer during warm-up — the
+    Emits one row per input row with sma5, sma20 computed over the
+    trailing SMA_SHORT/SMA_LONG rows (fewer during warm-up — the
     reference emits from the very first row, ForecastsJob.java:86-87) and
-    `forecast_next = sma_short` (ForecastsJob.java:84).
+    `forecast_next = sma5` (ForecastsJob.java:84).
     """
     w = Window.partitionBy(*partition_by).orderBy(*_order_cols(order_by))
-    sma_s = F.avg(value_col).over(w.rowsBetween(-(short_window - 1), 0))
-    sma_l = F.avg(value_col).over(w.rowsBetween(-(long_window - 1), 0))
+    sma_s = F.avg(value_col).over(w.rowsBetween(-(SMA_SHORT - 1), 0))
+    sma_l = F.avg(value_col).over(w.rowsBetween(-(SMA_LONG - 1), 0))
     return (df
-            .withColumn(f"sma{short_window}", sma_s)
-            .withColumn(f"sma{long_window}", sma_l)
-            .withColumn("forecast_next", F.col(f"sma{short_window}")))
+            .withColumn(f"sma{SMA_SHORT}", sma_s)
+            .withColumn(f"sma{SMA_LONG}", sma_l)
+            .withColumn("forecast_next", F.col(f"sma{SMA_SHORT}")))
 
 
 def last_value_carried_forward(df: DataFrame,

@@ -292,8 +292,7 @@ def semantic_mix_matrix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     emb = load_table(spark, "embeddings", sf_dir)
     base = with_unit_info(emb)
-    asg = assign_cells(base, IVF_CENTROIDS, "vec_id", "embedding") \
-        .select("vec_id", "cell")
+    asg = assign_cells(base, IVF_CENTROIDS).select("vec_id", "cell")
     lab = emb.select("vec_id", F.col("label").cast("long").alias("label"))
     return (asg.join(lab, "vec_id")
             .groupBy("cell", "label")
@@ -1001,7 +1000,7 @@ def ivf_probe_sweep_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         IVF_CENTROIDS,
     )
     from kafka_flink_processing_spark.operators.similarity import (
-        _codebook_df,
+        _probe_order,
         _scored_cells,
         assign_cells,
         cosine_topk,
@@ -1011,14 +1010,9 @@ def ivf_probe_sweep_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     bf = cosine_topk(emb, query_ids=range(5), k=10) \
         .select("query_id", "cand_id")
     base = with_unit_info(emb)
-    cents = _codebook_df(spark, IVF_CENTROIDS)
-    scored = _scored_cells(base, cents, "vec_id", "embedding")
-    asg = assign_cells(base, IVF_CENTROIDS, "vec_id", "embedding") \
-        .select("vec_id", "cell")
-    wq = Window.partitionBy("vec_id").orderBy(F.col("ccos").desc(),
-                                              F.col("cid"))
-    qrank = (scored.filter(F.col("vec_id") < 5)
-             .withColumn("rn", F.row_number().over(wq))
+    scored = _scored_cells(base, IVF_CENTROIDS)
+    asg = assign_cells(base, IVF_CENTROIDS).select("vec_id", "cell")
+    qrank = (_probe_order(scored.filter(F.col("vec_id") < 5))
              .select(F.col("vec_id").alias("query_id"),
                      F.col("cid").cast("long").alias("cell"), "rn"))
     truth = (bf.join(asg, bf.cand_id == asg.vec_id)

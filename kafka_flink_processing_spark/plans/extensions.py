@@ -47,7 +47,6 @@ from kafka_flink_processing_spark.operators.dedup import (
     simhash_pairs,
 )
 from kafka_flink_processing_spark.operators.similarity import (
-    cosine_pairs,
     cosine_topk,
     lsh_cosine_topk,
 )
@@ -641,8 +640,8 @@ def similarity_ivf_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, "embeddings", sf_dir)
     # the ONE pinned codebook the static oracle embeds — the oracle_sql
     # contract is "equivalent at any sf_dir", so the query may not switch
-    # artifacts per corpus; live per-corpus training is the operator's
-    # default path (centroids=None) and is recall-tested separately
+    # artifacts per corpus (a per-corpus trained codebook is
+    # recall-tested separately)
     out = ivf_cosine_topk(emb, query_ids=range(5), k=10,
                           centroids=IVF_CENTROIDS)
     return out.select("query_id", "cand_id", "cosine",
@@ -1017,8 +1016,7 @@ def kmeans_assign_cells_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = with_unit_info(emb)
     # the IVF quantizer's own argmax (one copy of the tie-break), with the
     # winning cosine emitted alongside — map-only literal assignment
-    asg = assign_cells(base, IVF_CENTROIDS, "vec_id", "embedding",
-                       with_cosine=True)
+    asg = assign_cells(base, IVF_CENTROIDS, with_cosine=True)
     return asg.select("vec_id", "cell", "cell_cosine")
 
 
@@ -1057,8 +1055,7 @@ def dedup_semantic_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_flink_processing_spark.operators.similarity import semdedup
     emb = load_table(spark, "embeddings", sf_dir)
     # same pinned-codebook contract as similarity_ivf_topk: the static
-    # oracle embeds the one artifact, live per-corpus training is the
-    # operator default (centroids=None)
+    # oracle embeds the one artifact
     return semdedup(emb, threshold=EMBED_COS_T, centroids=IVF_CENTROIDS)
 
 
@@ -1886,7 +1883,7 @@ def crossmodal_dup_verify_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
     emb = load_table(spark, "embeddings", sf_dir)
     pairs = minhash_lsh_pairs(docs, n=3, threshold=0.6)
-    base = with_unit_info(emb, "embedding")
+    base = with_unit_info(emb)
     ea = base.select(F.col("vec_id").alias("doc_a"),
                      F.col("embedding").alias("va"), F.col("nrm").alias("na"))
     eb = base.select(F.col("vec_id").alias("doc_b"),

@@ -44,6 +44,7 @@ from kafka_flink_processing_spark.operators.pnl import (
     fold_hub,
     tagged_events,
 )
+from kafka_flink_processing_spark.operators.windows import SMA_LONG, SMA_SHORT
 from kafka_flink_processing_spark.shipping import ensure_shipped
 
 # ---------------------------------------------------------------------------
@@ -64,16 +65,16 @@ _SMA_STATE = T.StructType([T.StructField("buf", T.ArrayType(T.DoubleType()))])
 def _sma_rows(hub: str, pdf: pd.DataFrame,
               buf: list[float]) -> tuple[pd.DataFrame, list[float]]:
     """Fold one key's micro-batch (all its Arrow chunks) through the
-    <=20-price ring buffer in (ts, seq) order; returns (rows, buf)."""
+    <=SMA_LONG-price ring buffer in (ts, seq) order; returns (rows, buf)."""
     pdf = pdf.sort_values(["ts", "seq"], kind="mergesort")
     px_l = pdf["price_mwh"].tolist()
     o_sma5: list[float] = []
     o_sma20: list[float] = []
     for px in px_l:
         buf.append(float(px))
-        if len(buf) > 20:          # addAndTrim, ForecastsJob.java:77-81
+        if len(buf) > SMA_LONG:    # addAndTrim, ForecastsJob.java:77-81
             del buf[0]
-        o_sma5.append(sum(buf[-5:]) / min(len(buf), 5))
+        o_sma5.append(sum(buf[-SMA_SHORT:]) / min(len(buf), SMA_SHORT))
         o_sma20.append(sum(buf) / len(buf))
     rows = pd.DataFrame({
         "ts": pdf["ts"].tolist(), "hub": [hub] * len(px_l),

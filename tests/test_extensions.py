@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from kafka_flink_processing_spark.functions.multimodal import (
     decode_features,
-    decode_image,
     with_payload,
 )
 from kafka_flink_processing_spark.operators.dedup import (
@@ -31,12 +30,16 @@ SF = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="module")
 def docs(spark):
-    return load_table(spark, "documents", SF).cache()
+    df = load_table(spark, "documents", SF).cache()
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")
 def emb(spark):
-    return load_table(spark, "embeddings", SF).cache()
+    df = load_table(spark, "embeddings", SF).cache()
+    yield df
+    df.unpersist()
 
 
 def test_minhash_lsh_recall_vs_exact(docs):
@@ -83,9 +86,16 @@ def test_lsh_ann_recall_vs_bruteforce(emb):
 def test_ivf_ann_recall_vs_bruteforce(emb):
     """IVF with nprobe=4 of 16 cells: precision is exact on its candidates
     (same re-rank), recall bounded below — near neighbors concentrate in
-    the same/adjacent cells for clustered embeddings."""
+    the same/adjacent cells for clustered embeddings. The codebook is
+    trained on this corpus with the pinned artifacts' recipe."""
+    from kafka_flink_processing_spark.operators.kmeans import kmeans_train
+    from kafka_flink_processing_spark.operators.similarity import (
+        IVF_K,
+        IVF_TRAIN_ITERS,
+    )
+    centroids, _ = kmeans_train(emb, k=IVF_K, iters=IVF_TRAIN_ITERS)
     exact = cosine_topk(emb, range(5), k=10).collect()
-    approx = ivf_cosine_topk(emb, range(5), k=10).collect()
+    approx = ivf_cosine_topk(emb, range(5), centroids, k=10).collect()
     exact_sets = {}
     for r in exact:
         exact_sets.setdefault(r.query_id, set()).add(r.cand_id)
@@ -107,11 +117,6 @@ def test_multimodal_decode_plumbing(spark):
     byte_len = {r.doc_id: r.n_bytes for r in rows}
     src = {r.doc_id: len(r.text.encode()) for r in docs.select("doc_id", "text").collect()}
     assert byte_len == src
-
-
-def test_real_decoder_is_explicit_stub():
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\x89PNG")
 
 
 def test_train_test_split_stable_and_proportional(spark):
@@ -310,7 +315,7 @@ def test_crossmodal_verify_keeps_pairs_missing_embeddings(spark, docs, emb):
     pairs = minhash_lsh_pairs(docs, 3, 0.6)
     first = pairs.orderBy("doc_a", "doc_b").first()
     partial = emb.filter(F.col("vec_id") != first.doc_a)
-    base = with_unit_info(partial, "embedding")
+    base = with_unit_info(partial)
     ea = base.select(F.col("vec_id").alias("doc_a"),
                      F.col("embedding").alias("va"), F.col("nrm").alias("na"))
     eb = base.select(F.col("vec_id").alias("doc_b"),
@@ -578,24 +583,18 @@ def test_semdedup_drop_set_matches_bruteforce_within_cells(spark):
 
 # --- round-3 additions: dup spans, embedding quality, LSH index health ---
 
-def test_dup_span_stats_ground_truth(spark):
-    """Hand corpus: doc 0 and 1 share one 3-gram; doc 2 shares none."""
+def test_dup_span_stats_ground_truth(spark, tmp_path):
+    """Hand corpus: doc 0 and 1 share one 3-gram; doc 2 shares none. Runs
+    the registered query on a directory holding only that corpus."""
+    import pandas as pd
+
     from kafka_flink_processing_spark.plans.extensions import dup_span_stats
-    import kafka_flink_processing_spark.plans.extensions as ext
-    docs = spark.createDataFrame(
-        [(0, "a b c d"), (1, "a b c x"), (2, "p q r s")],
-        "doc_id long, text string")
-    # drive the operator body directly on the fixture frame
-    from kafka_flink_processing_spark.operators.dedup import _doc_shingles
-    ds = _doc_shingles(docs, 3)
-    ex = ds.select("doc_id", F.explode("sh").alias("sh"))
-    dup_sh = (ex.groupBy("sh").agg(F.count("*").alias("df"))
-                .filter(F.col("df") >= 2).select("sh"))
-    hits = {r.doc_id: r.n for r in
-            ex.join(dup_sh, "sh").groupBy("doc_id")
-              .agg(F.count("*").alias("n")).collect()}
-    # docs 0/1 share exactly the shingle "a b c"; doc 2 shares nothing
-    assert hits == {0: 1, 1: 1}
+    pd.DataFrame({"doc_id": [0, 1, 2],
+                  "text": ["a b c d", "a b c x", "p q r s"]}) \
+        .to_parquet(tmp_path / "documents.parquet")
+    rows = {tuple(r) for r in dup_span_stats(spark, str(tmp_path)).collect()}
+    # docs 0/1 share exactly the shingle "a b c" of their two 3-grams
+    assert rows == {(0, 2, 1, 0.5), (1, 2, 1, 0.5), (2, 2, 0, 0.0)}
 
 
 def test_embedding_quality_flags_zero_vector(spark):

@@ -29,7 +29,9 @@ CB = np.array(PQ_CODEBOOK)          # (M, K, dsub)
 
 @pytest.fixture(scope="module")
 def emb(spark):
-    return load_table(spark, "embeddings", SF).cache()
+    df = load_table(spark, "embeddings", SF).cache()
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")
@@ -97,7 +99,9 @@ def emb01(spark):
     """sf0.01 — the corpus the shipped codebook was TRAINED on; recall
     floors belong here (at sf0.001 the distribution mismatch costs
     ~2x recall, a codebook-fit fact, not an operator property)."""
-    return load_table(spark, "embeddings", "/root/testdata/sf0.01").cache()
+    df = load_table(spark, "embeddings", "/root/testdata/sf0.01").cache()
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")

@@ -36,7 +36,10 @@ def _rowset(rows):
 @pytest.fixture(scope="module")
 def market(spark):
     trades, prices = derive_market(spark, SF)
-    return trades.cache(), prices.cache()
+    trades, prices = trades.cache(), prices.cache()
+    yield trades, prices
+    trades.unpersist()
+    prices.unpersist()
 
 
 def test_streaming_sma_matches_batch(spark, market, tmp_path):

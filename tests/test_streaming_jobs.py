@@ -30,7 +30,10 @@ SF = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def market(spark):
     trades, prices = derive_market(spark, SF)
-    return trades.cache(), prices.cache()
+    trades, prices = trades.cache(), prices.cache()
+    yield trades, prices
+    trades.unpersist()
+    prices.unpersist()
 
 
 def _assert_same_rows(got, want):

@@ -9,11 +9,16 @@ explicitly named ones). Plans are the pre-execution formatted plans at
 $SPARK_GRAFT_SF_DIR (default sf0.1) — exchange structure, join strategy,
 pushdown and Python-eval nodes; AQE finalization happens at run time and
 is SF/runtime-dependent, so the static plan is the comparable artifact.
+
+Expression ids (`#123`) and the per-process lambda-variable suffixes
+(`x_121`) are normalized to `#N` / `x_N` (see `normalize`), so dumps made
+from two trees, or two runs of one tree, diff cleanly.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 from pathlib import Path
 
@@ -21,6 +26,18 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from kafka_flink_processing_spark.plans.registry import QUERIES, _ensure_loaded
 from kafka_flink_processing_spark.session import get_spark
+
+_EXPR_ID = re.compile(r"#\d+")
+# lambda variables carry a process-global counter suffix
+# (UnresolvedNamedLambdaVariable.freshVarName), and every reference to
+# one prints as `lambda x_121`
+_LAMBDA_VAR = re.compile(r"\b(lambda \w+?)_\d+\b")
+
+
+def normalize(plan: str) -> str:
+    """The plan text with expression ids and lambda-variable suffixes
+    replaced by fixed tokens."""
+    return _EXPR_ID.sub("#N", _LAMBDA_VAR.sub(r"\1_N", plan))
 
 
 def main() -> None:
@@ -37,7 +54,7 @@ def main() -> None:
         plan = df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode
             .fromString("formatted"))
-        (outdir / f"{name}{suffix}.txt").write_text(plan)
+        (outdir / f"{name}{suffix}.txt").write_text(normalize(plan))
         print(f"wrote {outdir / (name + suffix + '.txt')}")
 
 

@@ -23,11 +23,13 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from kafka_flink_processing_spark.operators.kmeans import kmeans_train  # noqa: E402
+from kafka_flink_processing_spark.operators.similarity import (  # noqa: E402
+    IVF_K,
+    IVF_TRAIN_ITERS,
+)
 from kafka_flink_processing_spark.session import get_spark  # noqa: E402
 from kafka_flink_processing_spark.sources.parquet import load_table  # noqa: E402
 
-K = 16
-ITERS = 10
 DEFAULT_DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01",
                 "/root/testdata/sf0.1"]
 OUT = Path(__file__).resolve().parent.parent / \
@@ -48,7 +50,7 @@ def main() -> None:
     books: dict[str, list[list[float]]] = {}
     for sf_dir in sf_dirs:
         emb = load_table(spark, "embeddings", sf_dir)
-        cents, _ = kmeans_train(emb, k=K, iters=ITERS)
+        cents, _ = kmeans_train(emb, k=IVF_K, iters=IVF_TRAIN_ITERS)
         books[Path(sf_dir).name] = [
             [round(float(v), 6) for v in c] for c in cents]
         print(f"trained {Path(sf_dir).name}: {cents.shape}")
@@ -56,7 +58,8 @@ def main() -> None:
         f'    "{name}": {_matrix_literal(rows)}' for name, rows in books.items())
     OUT.write_text(
         '"""GENERATED by tools/train_ivf_codebook.py — do not edit.\n\n'
-        f"IVF coarse-quantizer codebooks: k-means (k={K}, iters={ITERS}, "
+        f"IVF coarse-quantizer codebooks: k-means (k={IVF_K}, "
+        f"iters={IVF_TRAIN_ITERS}, "
         "deterministic\nfirst-K init) per embeddings corpus, rounded to 6dp "
         "so the decimal\nliterals parse to identical doubles in PySpark and "
         'DuckDB. One codebook\nper corpus — see tools/train_ivf_codebook.py '

@@ -67,7 +67,7 @@ def main() -> None:
         asg = assign_cells(with_unit_info(emb), IVF_CENTROIDS)
         emb = asg.select(
             "vec_id",
-            residual_expr("embedding", "cell", IVF_CENTROIDS)
+            residual_expr("embedding", IVF_CENTROIDS)
             .alias("embedding"))
     subs: list[list[list[float]]] = []
     for m in range(M):
