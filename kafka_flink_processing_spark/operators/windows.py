@@ -6,7 +6,8 @@ Batch equivalents of the reference's keyed process functions:
 - rolling_sma_forecast: ForecastFunction — per-hub rolling SMA(5)/SMA(20)
   ring buffers emitting on every tick (reference ForecastsJob.java:76-88).
   A count-based ring buffer that averages over fewer rows while warming up
-  is exactly a ROWS BETWEEN (n-1) PRECEDING AND CURRENT ROW frame.
+  is exactly a ROWS BETWEEN (n-1) PRECEDING AND CURRENT ROW frame;
+  lag_chain_avg_sql is its oracle rendering (every SMA oracle uses it).
 - last_value_carried_forward: the lastPrice ValueState
   (reference PnlAndExposureJob.java:107-109,130,134-136).
 - latest_per_key: the read-side `SELECT DISTINCT ON (account,hub) ...
@@ -58,6 +59,21 @@ def rolling_sma_forecast(df: DataFrame,
             .withColumn(f"sma{SMA_SHORT}", sma_s)
             .withColumn(f"sma{SMA_LONG}", sma_l)
             .withColumn("forecast_next", F.col(f"sma{SMA_SHORT}")))
+
+
+def lag_chain_avg_sql(col: str, n: int) -> str:
+    """Oracle SQL for a trailing-n moving average of `col` over the window
+    named `w`, as an explicit oldest->newest lag chain.
+
+    Reproduces Spark's SlidingWindowFunctionFrame fold order bitwise (DuckDB's
+    own AVG OVER a 20-row frame uses a segment tree whose combine order drifts
+    from Spark's by ~1e-14 — enough to break an exact value-hash check).
+    """
+    terms = [f"COALESCE(LAG({col}, {k}) OVER w, 0.0)"
+             for k in range(n - 1, 0, -1)]
+    terms.append(col)
+    return (f"({' + '.join(terms)})"
+            f" / CAST(LEAST(ROW_NUMBER() OVER w, {n}) AS DOUBLE)")
 
 
 def last_value_carried_forward(df: DataFrame,

@@ -627,7 +627,7 @@ def _codebook_values_sql() -> str:
     ) WHERE rank <= 10
     """,
     doc=f"ANN top-k via IVF coarse quantizer ({IVF_K} cells, nprobe="
-        f"{IVF_NPROBE}): codebook = per-corpus offline k-means output "
+        f"{IVF_NPROBE}): codebook = offline k-means output on sf0.01 "
         "(operators/kmeans.py, pinned as 6dp literals by "
         "tools/train_ivf_codebook.py so the oracle embeds the identical "
         "doubles), shuffle-free cell assignment, probe-join + exact "
@@ -3261,18 +3261,45 @@ _DSIR_B = 1024
 _DSIR_TARGET_LANG = "en"
 
 
-@register(
-    "dsir_importance_weights",
-    oracle=f"""
-    WITH ts AS (SELECT doc_id, lang, string_split(text, ' ') AS a
+def _bigram_buckets(docs: DataFrame, salt: str,
+                    n_buckets: int) -> DataFrame:
+    """(doc_id, lang, bucket) — one row per word bigram of each doc with
+    at least two tokens, md5-hashed with `salt` into n_buckets buckets.
+    The hashed bigram stream of DSIR ('ds:') and the CCNet LM ('pp:')."""
+    from kafka_flink_processing_spark.functions.text import md5_hash60
+
+    ts = (docs.select("doc_id", "lang", F.split("text", " ").alias("a"))
+          .filter(F.size("a") >= 2))
+    g = ts.select(
+        "doc_id", "lang",
+        F.explode(F.expr(
+            "transform(sequence(1, size(a) - 1), "
+            "i -> concat(element_at(a, i), ' ', element_at(a, i + 1)))"))
+        .alias("w"))
+    return g.select(
+        "doc_id", "lang",
+        F.pmod(md5_hash60(F.concat(F.lit(salt), F.col("w"))),
+               F.lit(n_buckets)).alias("bucket"))
+
+
+def _bigram_buckets_sql(salt: str, n_buckets: int) -> str:
+    """Oracle CTE fragment ending in `h` = (doc_id, lang, bucket) over the
+    `documents` view — the DuckDB rendering of _bigram_buckets."""
+    return f"""ts AS (SELECT doc_id, lang, string_split(text, ' ') AS a
                 FROM documents),
     g AS (SELECT doc_id, lang,
                  unnest(list_transform(range(1, len(a)),
                         i -> a[i] || ' ' || a[i+1])) AS w
           FROM ts WHERE len(a) >= 2),
     h AS (SELECT doc_id, lang,
-                 {_H60.format(x="'ds:' || w")} % {_DSIR_B} AS bucket
-          FROM g),
+                 {_H60.format(x=f"'{salt}' || w")} % {n_buckets} AS bucket
+          FROM g)"""
+
+
+@register(
+    "dsir_importance_weights",
+    oracle=f"""
+    WITH {_bigram_buckets_sql("ds:", _DSIR_B)},
     bstats AS MATERIALIZED (SELECT bucket,
                  COUNT(*) AS n_r,
                  SUM(CASE WHEN lang = '{_DSIR_TARGET_LANG}'
@@ -3316,21 +3343,8 @@ _DSIR_TARGET_LANG = "en"
 )
 def dsir_importance_weights_q(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.functions.text import md5_hash60
-
     docs = load_table(spark, "documents", sf_dir)
-    ts = (docs.select("doc_id", "lang", F.split("text", " ").alias("a"))
-          .filter(F.size("a") >= 2))
-    g = ts.select(
-        "doc_id", "lang",
-        F.explode(F.expr(
-            "transform(sequence(1, size(a) - 1), "
-            "i -> concat(element_at(a, i), ' ', element_at(a, i + 1)))"))
-        .alias("w"))
-    h = g.select(
-        "doc_id", "lang",
-        F.pmod(md5_hash60(F.concat(F.lit("ds:"), F.col("w"))),
-               F.lit(_DSIR_B)).alias("bucket"))
+    h = _bigram_buckets(docs, "ds:", _DSIR_B)
     bstats = h.groupBy("bucket").agg(
         F.count("*").alias("n_r"),
         F.sum(F.when(F.col("lang") == _DSIR_TARGET_LANG, 1)
@@ -3361,15 +3375,7 @@ _PPL_B = 4096  # hashed-LM buckets; 4x DSIR's 1024 — the LM is the product
 @register(
     "ccnet_perplexity_buckets",
     oracle=f"""
-    WITH ts AS (SELECT doc_id, lang, string_split(text, ' ') AS a
-                FROM documents),
-    g AS (SELECT doc_id, lang,
-                 unnest(list_transform(range(1, len(a)),
-                        i -> a[i] || ' ' || a[i+1])) AS w
-          FROM ts WHERE len(a) >= 2),
-    h AS (SELECT doc_id, lang,
-                 {_H60.format(x="'pp:' || w")} % {_PPL_B} AS bucket
-          FROM g),
+    WITH {_bigram_buckets_sql("pp:", _PPL_B)},
     bstats AS MATERIALIZED (SELECT bucket,
                  SUM(CASE WHEN lang = '{_DSIR_TARGET_LANG}'
                      THEN 1 ELSE 0 END) AS n_t
@@ -3465,25 +3471,6 @@ def ccnet_perplexity_buckets_q(spark: SparkSession,
     return _ccnet_bucketed(docs, b2)
 
 
-def _ccnet_bigram_buckets(docs: DataFrame) -> DataFrame:
-    """(doc_id, lang, bucket) — one row per word bigram, hashed into the
-    _PPL_B-bucket LM space."""
-    from kafka_flink_processing_spark.functions.text import md5_hash60
-
-    ts = (docs.select("doc_id", "lang", F.split("text", " ").alias("a"))
-          .filter(F.size("a") >= 2))
-    g = ts.select(
-        "doc_id", "lang",
-        F.explode(F.expr(
-            "transform(sequence(1, size(a) - 1), "
-            "i -> concat(element_at(a, i), ' ', element_at(a, i + 1)))"))
-        .alias("w"))
-    return g.select(
-        "doc_id", "lang",
-        F.pmod(md5_hash60(F.concat(F.lit("pp:"), F.col("w"))),
-               F.lit(_PPL_B)).alias("bucket"))
-
-
 def _ccnet_lm(docs: DataFrame) -> DataFrame:
     """The frozen LM artifact: (bucket, logp6), one row for every one of
     the _PPL_B buckets, trained on the trusted slice
@@ -3498,7 +3485,7 @@ def _ccnet_lm(docs: DataFrame) -> DataFrame:
     t_tot unchanged, so self-trained scoring (the batch query, the
     parity tests) matches the sparse observed-bucket LM bit for bit:
     the extra rows match no probe."""
-    h = _ccnet_bigram_buckets(docs)
+    h = _bigram_buckets(docs, "pp:", _PPL_B)
     bstats = h.groupBy("bucket").agg(
         F.sum(F.when(F.col("lang") == _DSIR_TARGET_LANG, 1)
               .otherwise(0)).alias("n_t"))
@@ -3518,7 +3505,7 @@ def _ccnet_score_with_lm(docs: DataFrame, lm: DataFrame) -> DataFrame:
     """Score `docs` against a (bucket, logp6) LM relation: the per-doc
     score rows (doc_id, n_bigrams, xent_nats, ce_c). Integer-exact by
     the 6dp-scaled-int recipe regardless of which corpus trained lm."""
-    h = _ccnet_bigram_buckets(docs)
+    h = _bigram_buckets(docs, "pp:", _PPL_B)
     sc = (h.join(F.broadcast(lm), "bucket")
           .groupBy("doc_id")
           .agg(F.count("*").alias("n_bigrams"),
@@ -3535,8 +3522,8 @@ def _ccnet_scored_b2(docs: DataFrame) -> DataFrame:
     """The per-doc score relation (doc_id, n_bigrams, xent_nats, ce_c) —
     the ~24 B/doc relation a production pipeline persists once before
     the tercile join (tools/ccnet_ab.py measures that A/B — POSITIVE,
-    1.58x at 4x corpus, SCALE.md; the registered query composes it
-    lazily so no persisted handle leaks)."""
+    1.58x at 4x corpus, SCALE.md; the registered query persists it and
+    retains the cache entry, see ccnet_perplexity_buckets' doc)."""
     return _ccnet_score_with_lm(docs, _ccnet_lm(docs))
 
 

@@ -4,9 +4,9 @@ producer.py:36-70, README.md:83-101), which the reference could only
 answer by shipping rows to Postgres. OHLC candles, VWAP, realized
 variance, max drawdown, signed flow — all engine-native, all oracle-gated.
 
-Ticks/trades are the deterministic event-table derivations the PnL family
-already uses (plans/stateful.py::derive_market and its SQL twin), extended
-here with the tick_id needed for total-order tie-breaks: several ticks can
+Ticks/trades are the deterministic event-table derivation the PnL family
+also uses (sources/events_market.py: derive_market and its oracle CTEs),
+with the tick_id needed for total-order tie-breaks: several ticks can
 share (hub, ts), and open/close or a return sequence picked without a
 tie-break would be partition-order-dependent — the exact class of
 nondeterminism this engine bans.
@@ -30,46 +30,33 @@ from kafka_flink_processing_spark.functions.exact import (
     dsum_wide,
     dsum_wide_sql,
 )
+from kafka_flink_processing_spark.operators.windows import (
+    SMA_SHORT,
+    lag_chain_avg_sql,
+)
 from kafka_flink_processing_spark.plans.registry import register
-from kafka_flink_processing_spark.plans.stateful import derive_market
-from kafka_flink_processing_spark.sources.parquet import load_table
-
-# (ts, hub, price_mwh, tick_id): the PRICE_TYPES derivation from
-# plans/stateful.py::derive_market plus the event_id tie-break.
-_TICKS_SQL = """
-  ticks AS (SELECT event_id AS tick_id, ts,
-                   'HUB' || CAST(user_id % 4 AS VARCHAR) AS hub,
-                   value AS price_mwh
-            FROM events WHERE event_type IN ('view', 'click'))
-"""
-
-_TRADES_SQL = """
-  trades AS (SELECT event_id AS trade_id, ts,
-                    'HUB' || CAST(user_id % 4 AS VARCHAR) AS hub,
-                    CASE WHEN event_type IN ('purchase', 'signup')
-                         THEN 'BUY' ELSE 'SELL' END AS side,
-                    CASE event_id % 4 WHEN 0 THEN 5 WHEN 1 THEN 10
-                                      WHEN 2 THEN 25 ELSE 50 END AS mw,
-                    value AS price_mwh
-             FROM events WHERE event_type IN ('purchase', 'signup', 'error'))
-"""
+from kafka_flink_processing_spark.sources.events_market import (
+    DA_CTE,
+    RT_CTE,
+    TICKS_CTE,
+    TRADES_CTE,
+    derive_da_rt,
+    derive_market,
+)
 
 
 def _ticks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """derive_market's prices in TICKS_CTE's column order (tick_id, ts,
+    hub, price_mwh): the tick queries' plans project in this order."""
     _, prices = derive_market(spark, sf_dir)
     return prices.select("tick_id", "ts", "hub", "price_mwh")
-
-
-def _trades(spark: SparkSession, sf_dir: str) -> DataFrame:
-    trades, _ = derive_market(spark, sf_dir)
-    return trades.drop("account")
 
 
 # ONE oracle text for both OHLC registrations: the batch and streaming
 # queries exist to hash-match the SAME result, so their sameness must be
 # structural, not maintained by hand-copying two SQL strings.
 _OHLC_ORACLE = f"""
-    WITH {_TICKS_SQL},
+    WITH {TICKS_CTE},
     tb AS (SELECT hub, date_trunc('hour', ts) AS bar_hour, ts, tick_id,
                   price_mwh
            FROM ticks),
@@ -150,7 +137,7 @@ def streaming_ohlc_bars_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "vwap_hub_day",
     oracle=f"""
-    WITH {_TRADES_SQL}
+    WITH {TRADES_CTE}
     SELECT hub, date_trunc('day', ts) AS day,
            {dsum_sql('mw * price_mwh', 2)} / CAST(SUM(mw) AS BIGINT) AS vwap,
            CAST(SUM(mw) AS BIGINT) AS total_mw,
@@ -163,7 +150,7 @@ def streaming_ohlc_bars_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "map-side-combined aggregate keyed by (hub, day).",
 )
 def vwap_hub_day_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _trades(spark, sf_dir)
+    t, _ = derive_market(spark, sf_dir)
     return (t.groupBy("hub", F.date_trunc("day", F.col("ts")).alias("day"))
             .agg((dsum(F.col("mw") * F.col("price_mwh"), 2)
                   / F.sum("mw")).alias("vwap"),
@@ -174,7 +161,7 @@ def vwap_hub_day_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "realized_variance_daily",
     oracle=f"""
-    WITH {_TICKS_SQL},
+    WITH {TICKS_CTE},
     seq AS (SELECT hub, date_trunc('day', ts) AS day, price_mwh,
                    lag(price_mwh) OVER (PARTITION BY hub, date_trunc('day', ts)
                                         ORDER BY ts, tick_id) AS prev
@@ -218,7 +205,7 @@ def realized_variance_daily_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "max_drawdown",
     oracle=f"""
-    WITH {_TICKS_SQL},
+    WITH {TICKS_CTE},
     run AS (SELECT hub, price_mwh,
                    MAX(price_mwh) OVER (PARTITION BY hub ORDER BY ts, tick_id
                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
@@ -253,7 +240,7 @@ def max_drawdown_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "trade_flow_net",
     oracle=f"""
-    WITH {_TRADES_SQL}
+    WITH {TRADES_CTE}
     SELECT hub, date_trunc('hour', ts) AS flow_hour,
            CAST(SUM(CASE WHEN side = 'BUY' THEN mw ELSE 0 END) AS BIGINT)
              AS buy_mw,
@@ -270,7 +257,7 @@ def max_drawdown_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "integer conditional sums, one map-side-combined aggregate.",
 )
 def trade_flow_net_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _trades(spark, sf_dir)
+    t, _ = derive_market(spark, sf_dir)
     signed = F.when(F.col("side") == "BUY", F.col("mw")) \
               .otherwise(-F.col("mw"))
     return (t.groupBy("hub", F.date_trunc("hour", F.col("ts"))
@@ -286,7 +273,7 @@ def trade_flow_net_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "hourly_load_profile",
     oracle=f"""
-    WITH {_TICKS_SQL}
+    WITH {TICKS_CTE}
     SELECT hub, CAST(hour(ts) AS BIGINT) AS hour_of_day,
            CAST(COUNT(*) AS BIGINT) AS n_ticks,
            {dsum_sql('price_mwh')} / COUNT(*) AS avg_price,
@@ -319,7 +306,7 @@ _EWMA_SCALE = 10 ** 8  # per-term fixed-point scale for the order-free sum
 @register(
     "ewma_price",
     oracle=f"""
-    WITH {_TICKS_SQL},
+    WITH {TICKS_CTE},
     fr AS (SELECT hub, ts, tick_id, price_mwh,
                   list(price_mwh) OVER (PARTITION BY hub ORDER BY ts, tick_id
                     ROWS BETWEEN {_EWMA_N - 1} PRECEDING AND CURRENT ROW) AS l
@@ -380,7 +367,7 @@ _BB_N = 20  # Bollinger frame: SMA(20) +/- 2 sigma
 @register(
     "bollinger_bands",
     oracle=f"""
-    WITH {_TICKS_SQL},
+    WITH {TICKS_CTE},
     fr AS (SELECT hub, ts, tick_id, price_mwh,
                   SUM(CAST(ROUND(price_mwh * 100) AS BIGINT))
                     OVER w AS s1,
@@ -439,7 +426,7 @@ def bollinger_bands_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "hub_spread_hourly",
     oracle=f"""
-    WITH {_TICKS_SQL},
+    WITH {TICKS_CTE},
     hourly AS (SELECT hub, date_trunc('hour', ts) AS spread_hour,
                       {dsum_sql('price_mwh')} / COUNT(*) AS avg_price,
                       CAST(COUNT(*) AS BIGINT) AS n_ticks
@@ -513,8 +500,8 @@ def slippage_join_build(streams: dict[str, DataFrame]) -> DataFrame:
 @register(
     "streaming_slippage_join",
     oracle=f"""
-    WITH {_TICKS_SQL},
-    {_TRADES_SQL}
+    WITH {TICKS_CTE},
+    {TRADES_CTE}
     SELECT t.trade_id, p.tick_id, t.hub,
            t.ts AS trade_ts, p.ts AS tick_ts,
            t.price_mwh AS trade_price, p.price_mwh AS tick_price,
@@ -542,25 +529,25 @@ def streaming_slippage_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         drain_streaming_multi,
     )
 
+    trades, _ = derive_market(spark, sf_dir)
     return drain_streaming_multi(
-        {"ticks": _ticks(spark, sf_dir), "trades": _trades(spark, sf_dir)},
+        {"ticks": _ticks(spark, sf_dir), "trades": trades},
         slippage_join_build, "slippage")
 
 
 @register(
     "da_rt_daily_corr",
     oracle=f"""
-    WITH rt AS (SELECT 'HUB' || CAST(user_id % 4 AS VARCHAR) AS hub,
-                       date_trunc('hour', ts) AS h,
-                       {dsum_sql('value')} / COUNT(*) AS rt_avg
-                FROM events WHERE event_type = 'view' GROUP BY 1, 2),
-    da AS (SELECT 'HUB' || CAST(user_id % 4 AS VARCHAR) AS hub,
-                  date_trunc('hour', ts) AS h,
-                  {dsum_sql('value')} / COUNT(*) AS da_avg
-           FROM events WHERE event_type = 'signup' GROUP BY 1, 2),
-    p AS (SELECT rt.hub, date_trunc('day', rt.h) AS day,
-                 rt.rt_avg AS x, da.da_avg AS y
-          FROM rt JOIN da ON rt.hub = da.hub AND rt.h = da.h),
+    WITH {RT_CTE}, {DA_CTE},
+    rt_h AS (SELECT hub, date_trunc('hour', ts) AS h,
+                    {dsum_sql('lmp_rt')} / COUNT(*) AS rt_avg
+             FROM rt GROUP BY 1, 2),
+    da_h AS (SELECT hub, date_trunc('hour', ts) AS h,
+                    {dsum_sql('lmp_da')} / COUNT(*) AS da_avg
+             FROM da GROUP BY 1, 2),
+    p AS (SELECT rt_h.hub, date_trunc('day', rt_h.h) AS day,
+                 rt_h.rt_avg AS x, da_h.da_avg AS y
+          FROM rt_h JOIN da_h ON rt_h.hub = da_h.hub AND rt_h.h = da_h.h),
     m AS (SELECT hub, day, CAST(COUNT(*) AS BIGINT) AS n_hours,
                  {dsum_sql('x', 6)} AS sx, {dsum_sql('y', 6)} AS sy,
                  {dsum_sql('x * y', 6)} AS sxy,
@@ -592,16 +579,15 @@ def streaming_slippage_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "volume is touched exactly twice, both times map-side.",
 )
 def da_rt_daily_corr_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, "events", sf_dir)
-    hub = F.concat(F.lit("HUB"), (F.col("user_id") % 4).cast("string"))
+    rt, da = derive_da_rt(spark, sf_dir)
 
-    def hourly(et: str, out: str) -> DataFrame:
-        return (ev.filter(F.col("event_type") == et)
-                .groupBy(hub.alias("hub"),
-                         F.date_trunc("hour", F.col("ts")).alias("h"))
-                .agg((dsum("value") / F.count("*")).alias(out)))
+    def hourly(prints: DataFrame, price: str, out: str) -> DataFrame:
+        return (prints.groupBy("hub",
+                               F.date_trunc("hour", F.col("ts")).alias("h"))
+                .agg((dsum(price) / F.count("*")).alias(out)))
 
-    p = (hourly("view", "x").join(hourly("signup", "y"), ["hub", "h"])
+    p = (hourly(rt, "lmp_rt", "x")
+         .join(hourly(da, "lmp_da", "y"), ["hub", "h"])
          .select("hub", F.date_trunc("day", F.col("h")).alias("day"),
                  "x", "y"))
     m = p.groupBy("hub", "day").agg(
@@ -627,7 +613,7 @@ _MED_N = 21  # rolling-median frame: current tick + 20 preceding
 @register(
     "rolling_median_price",
     oracle=f"""
-    WITH {_TICKS_SQL},
+    WITH {TICKS_CTE},
     fr AS (SELECT hub, ts, tick_id, price_mwh,
                   list_sort(list(price_mwh) OVER (
                     PARTITION BY hub ORDER BY ts, tick_id
@@ -672,7 +658,7 @@ _BAND_MWH = 10.0  # price-regime band width for the SCD-2 intervals
 @register(
     "scd2_price_intervals",
     oracle=f"""
-    WITH {_TICKS_SQL},
+    WITH {TICKS_CTE},
     b AS (SELECT hub, ts, tick_id,
                  CAST(floor(price_mwh / {_BAND_MWH}) AS BIGINT) AS band
           FROM ticks),
@@ -746,7 +732,7 @@ def scd2_price_intervals_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "hub_price_corr_matrix",
     oracle=f"""
-    WITH {_TICKS_SQL},
+    WITH {TICKS_CTE},
     d AS (SELECT hub, date_trunc('day', ts) AS day,
                  {dsum_sql('price_mwh')} / COUNT(*) AS p
           FROM ticks GROUP BY 1, 2),
@@ -806,26 +792,12 @@ def hub_price_corr_matrix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- r5 late pack C: forecast backtest + execution quality ---------------
 
-_SMA_N = 5  # backtest the reference's own short SMA horizon
-
-
-def _tick_lag_chain_avg(n: int) -> str:
-    """The lag-chain SMA over ticks — same left-to-right form (and thus
-    the same IEEE addition order) as plans/stateful.py::_lag_chain_avg,
-    re-keyed to the tick derivation."""
-    terms = [f"COALESCE(LAG(price_mwh, {k}) OVER w, 0.0)"
-             for k in range(n - 1, 0, -1)]
-    terms.append("price_mwh")
-    return (f"({' + '.join(terms)})"
-            f" / CAST(LEAST(ROW_NUMBER() OVER w, {n}) AS DOUBLE)")
-
-
 @register(
     "forecast_backtest_sma",
     oracle=f"""
-    WITH {_TICKS_SQL},
+    WITH {TICKS_CTE},
     f AS (SELECT hub, ts, tick_id, price_mwh,
-                 {_tick_lag_chain_avg(_SMA_N)} AS sma,
+                 {lag_chain_avg_sql('price_mwh', SMA_SHORT)} AS sma,
                  LEAD(price_mwh) OVER w AS actual_next
           FROM ticks WINDOW w AS (PARTITION BY hub ORDER BY ts, tick_id)),
     e AS (SELECT hub, actual_next - sma AS err FROM f
@@ -857,7 +829,7 @@ def _tick_lag_chain_avg(n: int) -> str:
 def forecast_backtest_sma_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _ticks(spark, sf_dir)
     wo = Window.partitionBy("hub").orderBy("ts", "tick_id")
-    sma = F.avg("price_mwh").over(wo.rowsBetween(-(_SMA_N - 1), 0))
+    sma = F.avg("price_mwh").over(wo.rowsBetween(-(SMA_SHORT - 1), 0))
     f = t.select("hub", sma.alias("sma"),
                  F.lead("price_mwh").over(wo).alias("actual_next"))
     e = (f.filter(F.col("actual_next").isNotNull())
@@ -874,7 +846,7 @@ def forecast_backtest_sma_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "vwap_execution_quality",
     oracle=f"""
-    WITH {_TRADES_SQL},
+    WITH {TRADES_CTE},
     v AS (SELECT hub, date_trunc('day', ts) AS day,
                  {dsum_sql('mw * price_mwh', 2)} / CAST(SUM(mw) AS BIGINT)
                    AS vwap
@@ -903,7 +875,7 @@ def forecast_backtest_sma_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "aggregate to hubs x 2 rows.",
 )
 def vwap_execution_quality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _trades(spark, sf_dir)
+    t, _ = derive_market(spark, sf_dir)
     day = F.date_trunc("day", F.col("ts")).alias("day")
     v = (t.groupBy("hub", day)
           .agg((dsum(F.col("mw") * F.col("price_mwh"), 2)
@@ -932,7 +904,7 @@ def vwap_execution_quality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "kyle_lambda_price_impact",
     oracle=f"""
-    WITH {_TRADES_SQL},
+    WITH {TRADES_CTE},
     seq AS (SELECT hub,
                    CASE WHEN side = 'BUY' THEN mw ELSE -mw END AS x,
                    price_mwh - LAG(price_mwh) OVER w AS y
@@ -970,7 +942,7 @@ def vwap_execution_quality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,  # joined the headline r6: first-round floor rule (BASELINE.md)
 )
 def kyle_lambda_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _trades(spark, sf_dir)
+    t, _ = derive_market(spark, sf_dir)
     w = Window.partitionBy("hub").orderBy("ts", "trade_id")
     seq = (t.select(
             "hub",
@@ -998,7 +970,7 @@ def kyle_lambda_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "lead_lag_hub_beta",
     oracle=f"""
-    WITH {_TICKS_SQL},
+    WITH {TICKS_CTE},
     d AS (SELECT hub, date_trunc('hour', ts) AS h,
                  {dsum_sql('price_mwh')} / COUNT(*) AS p
           FROM ticks GROUP BY 1, 2),
@@ -1074,7 +1046,7 @@ def lead_lag_hub_beta_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "roll_spread_estimator",
     oracle=f"""
-    WITH {_TRADES_SQL},
+    WITH {TRADES_CTE},
     d AS (SELECT hub, ts, trade_id,
                  price_mwh - LAG(price_mwh) OVER (
                    PARTITION BY hub ORDER BY ts, trade_id) AS dp
@@ -1118,7 +1090,7 @@ def lead_lag_hub_beta_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,  # joined the headline r8: first-round floor rule (BASELINE.md)
 )
 def roll_spread_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _trades(spark, sf_dir)
+    t, _ = derive_market(spark, sf_dir)
     w = Window.partitionBy("hub").orderBy("ts", "trade_id")
     d = t.withColumn("dp", F.col("price_mwh") - F.lag("price_mwh").over(w))
     p = (d.withColumn("dp_lag", F.lag("dp").over(w))
@@ -1140,7 +1112,7 @@ def roll_spread_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "variance_ratio",
     oracle=f"""
-    WITH {_TICKS_SQL},
+    WITH {TICKS_CTE},
     d AS (SELECT hub, ts, tick_id, price_mwh,
                  price_mwh - LAG(price_mwh, 1) OVER (
                    PARTITION BY hub ORDER BY ts, tick_id) AS dp,
@@ -1212,7 +1184,7 @@ def variance_ratio_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "amihud_illiquidity",
     oracle=f"""
-    WITH {_TRADES_SQL},
+    WITH {TRADES_CTE},
     d AS (SELECT hub, date_trunc('day', ts) AS day,
                  ts, trade_id, mw, price_mwh,
                  price_mwh - LAG(price_mwh) OVER (
@@ -1248,7 +1220,7 @@ def variance_ratio_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "shuffle after the window).",
 )
 def amihud_illiquidity_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _trades(spark, sf_dir)
+    t, _ = derive_market(spark, sf_dir)
     d = t.withColumn("day", F.date_trunc("day", F.col("ts")))
     w = Window.partitionBy("hub", "day").orderBy("ts", "trade_id")
     d = d.withColumn("dp", F.col("price_mwh") - F.lag("price_mwh").over(w))

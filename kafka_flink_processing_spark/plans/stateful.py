@@ -15,75 +15,21 @@ from pyspark.sql import functions as F
 from kafka_flink_processing_spark.functions.exact import dsum, dsum_sql
 from kafka_flink_processing_spark.operators.pnl import price_exposure
 from kafka_flink_processing_spark.operators.windows import (
+    SMA_LONG,
+    SMA_SHORT,
+    lag_chain_avg_sql,
     last_value_carried_forward,
     latest_per_key,
     rolling_sma_forecast,
     top_k,
 )
 from kafka_flink_processing_spark.plans.registry import register
+from kafka_flink_processing_spark.sources.events_market import (
+    TICKS_CTE,
+    TRADES_CTE,
+    derive_market,
+)
 from kafka_flink_processing_spark.sources.parquet import load_table
-
-
-# --------------------------------------------------------------------------
-# trades/prices derivation from `events` (FIXTURES.md §B: "trades-shaped
-# derivation of events — map event_type->side, value->price, user_id->account")
-# --------------------------------------------------------------------------
-
-_TRADE_TYPES = ("purchase", "signup", "error")
-_PRICE_TYPES = ("view", "click")
-
-
-def derive_market(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """(trades, prices) shaped like the reference topics (schemas.TRADE/
-    PRICE_TICK), deterministically derived from events."""
-    ev = load_table(spark, "events", sf_dir)
-    hub = F.concat(F.lit("HUB"), (F.col("user_id") % 4).cast("string"))
-    trades = (ev.filter(F.col("event_type").isin(*_TRADE_TYPES))
-                .select(F.col("event_id").alias("trade_id"),
-                        "ts",
-                        F.concat(F.lit("ACC"), (F.col("user_id") % 3 + 1)
-                                 .cast("string")).alias("account"),
-                        hub.alias("hub"),
-                        F.when(F.col("event_type").isin("purchase", "signup"),
-                               "BUY").otherwise("SELL").alias("side"),
-                        F.when(F.col("event_id") % 4 == 0, 5)
-                         .when(F.col("event_id") % 4 == 1, 10)
-                         .when(F.col("event_id") % 4 == 2, 25)
-                         .otherwise(50).alias("mw"),
-                        F.col("value").alias("price_mwh")))
-    prices = (ev.filter(F.col("event_type").isin(*_PRICE_TYPES))
-                .select("ts", hub.alias("hub"),
-                        F.col("value").alias("price_mwh"),
-                        # tick tie-break: two ticks can share (hub, ts);
-                        # without an id the fold's "last price" is
-                        # partition-order-dependent (r8 events fuzzer)
-                        F.col("event_id").alias("tick_id")))
-    return trades, prices
-
-
-_DERIVE_TRADES_SQL = """
-  SELECT event_id AS trade_id, ts,
-         'ACC' || CAST(user_id % 3 + 1 AS VARCHAR) AS account,
-         'HUB' || CAST(user_id % 4 AS VARCHAR) AS hub,
-         CASE WHEN event_type IN ('purchase','signup')
-              THEN 'BUY' ELSE 'SELL' END AS side,
-         CASE event_id % 4 WHEN 0 THEN 5 WHEN 1 THEN 10
-                           WHEN 2 THEN 25 ELSE 50 END AS mw,
-         value AS price_mwh
-  FROM events WHERE event_type IN ('purchase','signup','error')
-"""
-
-
-def _lag_chain_avg(n: int) -> str:
-    """Trailing-n moving average as an explicit oldest->newest lag chain.
-
-    Reproduces Spark's SlidingWindowFunctionFrame fold order bitwise (DuckDB's
-    own AVG OVER a 20-row frame uses a segment tree whose combine order drifts
-    from Spark's by ~1e-14 — enough to break the driver's value hash).
-    """
-    terms = [f"COALESCE(LAG(value, {k}) OVER w, 0.0)" for k in range(n - 1, 0, -1)]
-    terms.append("value")
-    return f"({' + '.join(terms)}) / CAST(LEAST(ROW_NUMBER() OVER w, {n}) AS DOUBLE)"
 
 
 # --- W1: rolling SMA(5)/SMA(20) forecast (reference ForecastsJob.java:76-88)
@@ -91,9 +37,9 @@ def _lag_chain_avg(n: int) -> str:
     "forecast_sma",
     oracle=f"""
     SELECT event_id, ts, user_id, value,
-           {_lag_chain_avg(5)}  AS sma5,
-           {_lag_chain_avg(20)} AS sma20,
-           {_lag_chain_avg(5)}  AS forecast_next
+           {lag_chain_avg_sql('value', SMA_SHORT)} AS sma5,
+           {lag_chain_avg_sql('value', SMA_LONG)} AS sma20,
+           {lag_chain_avg_sql('value', SMA_SHORT)} AS forecast_next
     FROM events
     WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
     """,
@@ -175,23 +121,18 @@ def topk_recent(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Bit-exact against the Spark fold at sf0.001/0.01/0.1 (179,587 rows at
 # sf0.1). Precondition making the replay total: (hub, ts) is unique in
 # the driver events data (verified at all SFs) — with colliding
-# timestamps both engines would need the tick tie-break documented in
-# plans/market.py. tests/test_pnl.py's spec-fold replay equality remains
-# the fixture-level check.
-_PNL_REPLAY_SQL = """
-WITH RECURSIVE tr AS (
-  SELECT event_id AS trade_id, ts,
-         'ACC' || CAST(user_id % 3 + 1 AS VARCHAR) AS account,
-         'HUB' || CAST(user_id % 4 AS VARCHAR) AS hub,
-         (CASE WHEN event_type IN ('purchase','signup') THEN 1 ELSE -1 END)
-           * (CASE event_id % 4 WHEN 0 THEN 5 WHEN 1 THEN 10
-                                WHEN 2 THEN 25 ELSE 50 END) AS q,
-         value AS px
-  FROM events WHERE event_type IN ('purchase','signup','error')),
+# timestamps both engines would need the tick tie-break (tick_id,
+# sources/events_market.py). tests/test_pnl.py's spec-fold replay
+# equality remains the fixture-level check.
+_PNL_REPLAY_SQL = f"""
+WITH RECURSIVE {TRADES_CTE},
+{TICKS_CTE},
 seq AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY hub, account
-                               ORDER BY ts, trade_id) AS rn
-  FROM tr),
+  SELECT trade_id, ts, account, hub,
+         CASE side WHEN 'BUY' THEN mw ELSE -mw END AS q, price_mwh AS px,
+         ROW_NUMBER() OVER (PARTITION BY hub, account
+                            ORDER BY ts, trade_id) AS rn
+  FROM trades),
 st AS (
   SELECT hub, account, 0 AS rn, CAST(0 AS BIGINT) AS pos,
          CAST(0.0 AS DOUBLE) AS avg, CAST(0.0 AS DOUBLE) AS realized
@@ -213,14 +154,10 @@ st AS (
                              ELSE s.avg - t.px END) END AS realized
   FROM st s JOIN seq t
     ON t.hub = s.hub AND t.account = s.account AND t.rn = s.rn + 1),
-ticks AS (
-  SELECT ts, 'HUB' || CAST(user_id % 4 AS VARCHAR) AS hub, value AS px,
-         event_id AS tick_id
-  FROM events WHERE event_type IN ('view','click')),
 tr_emit AS (
   SELECT t.ts, t.account, t.hub,
          s.pos AS position_mw, s.avg AS avg_price_mwh,
-         COALESCE((SELECT p.px FROM ticks p
+         COALESCE((SELECT p.price_mwh FROM ticks p
                    WHERE p.hub = t.hub AND p.ts < t.ts
                    ORDER BY p.ts DESC, p.tick_id DESC LIMIT 1), t.px)
            AS last_price_mwh,
@@ -237,7 +174,7 @@ stv AS (
 tick_emit AS (
   SELECT k.ts, v.account, k.hub,
          v.pos AS position_mw, v.avg AS avg_price_mwh,
-         k.px AS last_price_mwh, v.realized AS realized_pnl
+         k.price_mwh AS last_price_mwh, v.realized AS realized_pnl
   FROM ticks k JOIN stv v
     ON v.hub = k.hub AND k.ts >= v.eff_ts
        AND (v.next_ts IS NULL OR k.ts < v.next_ts)),
@@ -378,7 +315,7 @@ def pnl_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "running_position",
     oracle=f"""
-    WITH trades AS ({_DERIVE_TRADES_SQL})
+    WITH {TRADES_CTE}
     SELECT trade_id, ts, account, hub, side, mw, price_mwh,
            CAST(SUM(CASE WHEN side = 'BUY' THEN mw ELSE -mw END) OVER (
              PARTITION BY hub, account ORDER BY ts, trade_id
@@ -510,22 +447,14 @@ def value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # path — demonstrating Spark's batch/streaming unified semantics as a
 # verifiable property, not a claim.
 _STREAM_SMA_ORACLE = f"""
-    WITH prices AS (
-      SELECT ts, 'HUB' || CAST(user_id % 4 AS VARCHAR) AS hub,
-             value AS price_mwh, event_id AS tick_id
-      FROM events WHERE event_type IN ('view','click')
-    )
+    WITH {TICKS_CTE}
     SELECT ts, hub, price_mwh,
-           {{sma5}} AS sma5,
-           {{sma20}} AS sma20,
-           {{sma5f}} AS forecast_next
-    FROM prices
+           {lag_chain_avg_sql('price_mwh', SMA_SHORT)} AS sma5,
+           {lag_chain_avg_sql('price_mwh', SMA_LONG)} AS sma20,
+           {lag_chain_avg_sql('price_mwh', SMA_SHORT)} AS forecast_next
+    FROM ticks
     WINDOW w AS (PARTITION BY hub ORDER BY ts, tick_id)
-""".format(
-    sma5=_lag_chain_avg(5).replace("value", "price_mwh"),
-    sma20=_lag_chain_avg(20).replace("value", "price_mwh"),
-    sma5f=_lag_chain_avg(5).replace("value", "price_mwh"),
-)
+"""
 
 
 @register(
@@ -652,17 +581,14 @@ def winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per batch — no state, no watermark needed for an inner equi-join).
 @register(
     "streaming_enrich_static",
-    oracle="""
-    WITH prices AS (
-      SELECT ts, 'HUB' || CAST(user_id % 4 AS VARCHAR) AS hub,
-             value AS price_mwh
-      FROM events WHERE event_type IN ('view','click')
-    ), dim AS (
+    oracle=f"""
+    WITH {TICKS_CTE},
+    dim AS (
       SELECT 'HUB' || CAST(n_nationkey AS VARCHAR) AS hub, n_name AS region
       FROM nation WHERE n_nationkey < 4
     )
     SELECT p.ts, p.hub, p.price_mwh, d.region
-    FROM prices p JOIN dim d ON p.hub = d.hub
+    FROM ticks p JOIN dim d ON p.hub = d.hub
     """,
     doc="stream-static dimension enrichment: the derived price stream "
         "joins the 4-row hub dimension (from nation) — Spark broadcasts "
@@ -696,11 +622,8 @@ def streaming_enrich_static(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "streaming_session_stats",
     oracle=f"""
-    WITH prices AS (
-      SELECT ts, 'HUB' || CAST(user_id % 4 AS VARCHAR) AS hub,
-             value AS price_mwh, event_id AS tick_id
-      FROM events WHERE event_type IN ('view','click')
-    ), o AS (
+    WITH {TICKS_CTE},
+    o AS (
       SELECT hub, ts, price_mwh, tick_id,
              CASE WHEN LAG(epoch_us(ts)) OVER w IS NULL
                        OR epoch_us(ts) - LAG(epoch_us(ts)) OVER w
@@ -709,7 +632,7 @@ def streaming_enrich_static(spark: SparkSession, sf_dir: str) -> DataFrame:
       -- (ts, tick_id) total order: with same-ts ties an untied cumsum
       -- can put a non-boundary tied row BEFORE its boundary twin and
       -- stitch it onto the previous session (r8 events fuzzer)
-      FROM prices WINDOW w AS (PARTITION BY hub ORDER BY ts, tick_id)
+      FROM ticks WINDOW w AS (PARTITION BY hub ORDER BY ts, tick_id)
     ), s AS (
       SELECT *, SUM(is_new) OVER (
                PARTITION BY hub ORDER BY ts, tick_id

@@ -27,9 +27,14 @@ from pyspark.sql import functions as F
 
 from kafka_flink_processing_spark.functions.exact import dsum, dsum_sql
 from kafka_flink_processing_spark.plans.registry import register
+from kafka_flink_processing_spark.sources.events_market import (
+    DA_CTE,
+    RT_CTE,
+    TICKS_CTE,
+    derive_da_rt,
+    derive_market,
+)
 from kafka_flink_processing_spark.sources.parquet import load_table
-
-_HUB_SQL = "'HUB' || CAST(user_id % 4 AS VARCHAR)"
 
 
 # --------------------------------------------------------------------------
@@ -70,10 +75,7 @@ def tumbling_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "streaming_tumbling_stats",
     oracle=f"""
-    WITH prices AS (
-      SELECT ts, {_HUB_SQL} AS hub, value AS price_mwh
-      FROM events WHERE event_type IN ('view','click')
-    )
+    WITH {TICKS_CTE}
     SELECT date_trunc('hour', ts) AS window_start,
            date_trunc('hour', ts) + INTERVAL '1 hour' AS window_end,
            hub,
@@ -81,7 +83,7 @@ def tumbling_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
            {dsum_sql('price_mwh')} AS sum_price,
            MIN(price_mwh) AS min_price,
            MAX(price_mwh) AS max_price
-    FROM prices GROUP BY 1, 2, 3
+    FROM ticks GROUP BY 1, 2, 3
     """,
     doc="tumbling window stats via Structured Streaming (complete-mode "
         "windowed aggregation, availableNow drain) hash-matched against the "
@@ -97,11 +99,7 @@ def streaming_tumbling_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_tumbling_stats,
     )
 
-    ev = load_table(spark, "events", sf_dir)
-    hub = F.concat(F.lit("HUB"), (F.col("user_id") % 4).cast("string"))
-    prices = (ev.filter(F.col("event_type").isin("view", "click"))
-                .select("ts", hub.alias("hub"),
-                        F.col("value").alias("price_mwh")))
+    _, prices = derive_market(spark, sf_dir)
     return drain_streaming_result(
         prices, lambda s: streaming_tumbling_stats(s, "1 hour"), "twin",
         output_mode="complete")
@@ -192,14 +190,13 @@ def session_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "da_rt_asof_basis",
     oracle=f"""
-    WITH tagged AS (
-      SELECT event_id AS rt_id, {_HUB_SQL} AS hub, ts,
-             value AS lmp_rt, 1 AS is_left,
+    WITH {RT_CTE}, {DA_CTE},
+    tagged AS (
+      SELECT rt_id, hub, ts, lmp_rt, 1 AS is_left,
              CAST(NULL AS DOUBLE) AS lmp_da, 0 AS tb
-      FROM events WHERE event_type = 'view'
+      FROM rt
       UNION ALL
-      SELECT NULL, {_HUB_SQL}, ts, NULL, 0, value, event_id
-      FROM events WHERE event_type = 'signup'
+      SELECT NULL, hub, ts, NULL, 0, lmp_da, da_id FROM da
     ), filled AS (
       SELECT rt_id, hub, ts, lmp_rt, is_left,
              LAST_VALUE(lmp_da IGNORE NULLS) OVER (
@@ -219,15 +216,7 @@ def session_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def da_rt_asof_basis(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_flink_processing_spark.operators.asof import asof_join
 
-    ev = load_table(spark, "events", sf_dir)
-    hub = F.concat(F.lit("HUB"), (F.col("user_id") % 4).cast("string"))
-    rt = (ev.filter(F.col("event_type") == "view")
-            .select(F.col("event_id").alias("rt_id"), hub.alias("hub"),
-                    "ts", F.col("value").alias("lmp_rt")))
-    da = (ev.filter(F.col("event_type") == "signup")
-            .select(hub.alias("hub"), "ts",
-                    F.col("value").alias("lmp_da"),
-                    F.col("event_id").alias("da_id")))
+    rt, da = derive_da_rt(spark, sf_dir)
     out = asof_join(rt, da, on=["hub"], order_col="ts",
                     value_cols=["lmp_da"], right_order_tiebreak="da_id")
     return out.select("rt_id", "hub", "ts", "lmp_rt", "lmp_da",
@@ -442,15 +431,14 @@ _ASOF_TOL_US = 2 * 3600 * 1_000_000  # 2-hour max quote staleness
 @register(
     "da_rt_asof_tolerance",
     oracle=f"""
-    WITH tagged AS (
-      SELECT event_id AS rt_id, {_HUB_SQL} AS hub, ts,
-             value AS lmp_rt, 1 AS is_left,
+    WITH {RT_CTE}, {DA_CTE},
+    tagged AS (
+      SELECT rt_id, hub, ts, lmp_rt, 1 AS is_left,
              CAST(NULL AS DOUBLE) AS lmp_da,
              CAST(NULL AS TIMESTAMP) AS da_ts, 0 AS tb
-      FROM events WHERE event_type = 'view'
+      FROM rt
       UNION ALL
-      SELECT NULL, {_HUB_SQL}, ts, NULL, 0, value, ts, event_id
-      FROM events WHERE event_type = 'signup'
+      SELECT NULL, hub, ts, NULL, 0, lmp_da, ts, da_id FROM da
     ), filled AS (
       SELECT rt_id, hub, ts, lmp_rt, is_left,
              LAST_VALUE(lmp_da IGNORE NULLS) OVER sw AS lmp_da,
@@ -481,16 +469,8 @@ _ASOF_TOL_US = 2 * 3600 * 1_000_000  # 2-hour max quote staleness
 def da_rt_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_flink_processing_spark.operators.asof import asof_join
 
-    ev = load_table(spark, "events", sf_dir)
-    hub = F.concat(F.lit("HUB"), (F.col("user_id") % 4).cast("string"))
-    rt = (ev.filter(F.col("event_type") == "view")
-            .select(F.col("event_id").alias("rt_id"), hub.alias("hub"),
-                    "ts", F.col("value").alias("lmp_rt")))
-    da = (ev.filter(F.col("event_type") == "signup")
-            .select(hub.alias("hub"), "ts",
-                    F.col("value").alias("lmp_da"),
-                    F.col("ts").alias("da_ts"),
-                    F.col("event_id").alias("da_id")))
+    rt, da = derive_da_rt(spark, sf_dir)
+    da = da.withColumn("da_ts", F.col("ts"))
     out = asof_join(rt, da, on=["hub"], order_col="ts",
                     value_cols=["lmp_da", "da_ts"],
                     right_order_tiebreak="da_id")

@@ -298,37 +298,38 @@ def test_crossmodal_verify_cosines_match_numpy(spark, docs, emb):
         assert r.semantic_agree == (r.cosine >= 0.45)
 
 
-def test_crossmodal_verify_keeps_pairs_missing_embeddings(spark, docs, emb):
+def test_crossmodal_verify_keeps_pairs_missing_embeddings(spark, tmp_path):
     """A lexical pair whose doc lacks an embedding row must surface with
-    null cosine/semantic_agree — never vanish from the triage output."""
-    from kafka_flink_processing_spark.operators.dedup import (
-        minhash_lsh_pairs,
-    )
-    from kafka_flink_processing_spark.operators.similarity import (
-        _dot,
-        with_unit_info,
-    )
-    from kafka_flink_processing_spark.plans.extensions import (
-        CROSSMODAL_COS_T,
-    )
+    null cosine/semantic_agree — never vanish from the triage output.
+    Runs the registered query on a hand corpus: docs 0/1 and 2/3 are
+    verbatim duplicates, doc 4 shares nothing, doc 0 has no embedding."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    pairs = minhash_lsh_pairs(docs, 3, 0.6)
-    first = pairs.orderBy("doc_a", "doc_b").first()
-    partial = emb.filter(F.col("vec_id") != first.doc_a)
-    base = with_unit_info(partial)
-    ea = base.select(F.col("vec_id").alias("doc_a"),
-                     F.col("embedding").alias("va"), F.col("nrm").alias("na"))
-    eb = base.select(F.col("vec_id").alias("doc_b"),
-                     F.col("embedding").alias("vb"), F.col("nrm").alias("nb"))
-    cos = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-    out = (pairs.join(ea, "doc_a", "left").join(eb, "doc_b", "left")
-           .select("doc_a", "doc_b", "jaccard", cos.alias("cosine"),
-                   (cos >= CROSSMODAL_COS_T).alias("semantic_agree")))
-    rows = {(r.doc_a, r.doc_b): r for r in out.collect()}
-    assert set(rows) == {(r.doc_a, r.doc_b) for r in pairs.collect()}
-    gap = rows[(first.doc_a, first.doc_b)]
+    from kafka_flink_processing_spark.plans.extensions import (
+        crossmodal_dup_verify_q,
+    )
+    a = "the quick brown fox jumps over the lazy dog"
+    b = "lorem ipsum dolor sit amet consectetur adipiscing elit"
+    texts = [a, a, b, b, "one two three four five six"]
+    pq.write_table(pa.table({
+        "doc_id": pa.array(range(5), pa.int64()), "text": texts,
+        "lang": ["en"] * 5, "source": ["web"] * 5,
+        "n_chars": pa.array([len(t) for t in texts], pa.int64()),
+    }), tmp_path / "documents.parquet")
+    pq.write_table(pa.table({
+        "vec_id": pa.array([1, 2, 3, 4], pa.int64()),
+        "embedding": pa.array([[1.0, 0.0], [0.0, 1.0], [0.0, 1.0],
+                               [1.0, 1.0]], pa.list_(pa.float32())),
+        "label": pa.array([0] * 4, pa.int32()),
+    }), tmp_path / "embeddings.parquet")
+    rows = {(r.doc_a, r.doc_b): r
+            for r in crossmodal_dup_verify_q(spark, str(tmp_path)).collect()}
+    assert set(rows) == {(0, 1), (2, 3)}
+    gap = rows[(0, 1)]
     assert gap.cosine is None and gap.semantic_agree is None
-    assert gap.jaccard is not None
+    assert gap.jaccard == 1.0
+    assert rows[(2, 3)].cosine == 1.0 and rows[(2, 3)].semantic_agree
 
 
 def test_dup_span_redact_ground_truth(docs):
@@ -597,15 +598,23 @@ def test_dup_span_stats_ground_truth(spark, tmp_path):
     assert rows == {(0, 2, 1, 0.5), (1, 2, 1, 0.5), (2, 2, 0, 0.0)}
 
 
-def test_embedding_quality_flags_zero_vector(spark):
-    from kafka_flink_processing_spark.operators.similarity import _dot
-    emb = spark.createDataFrame(
-        [(0, [3.0, 4.0]), (1, [0.0, 0.0])],
-        "vec_id long, embedding array<float>")
-    x = F.col("embedding")
-    out = {r.vec_id: r for r in emb.select(
-        "vec_id", F.sqrt(_dot(x, x)).alias("l2_norm"),
-        (_dot(x, x) == 0.0).alias("is_degenerate")).collect()}
+def test_embedding_quality_flags_zero_vector(spark, tmp_path):
+    """Runs the registered query on a two-vector corpus: a 3-4-5 vector
+    and a zero vector, which must be flagged degenerate."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from kafka_flink_processing_spark.plans.extensions import (
+        embedding_quality_stats,
+    )
+    pq.write_table(pa.table({
+        "vec_id": pa.array([0, 1], pa.int64()),
+        "embedding": pa.array([[3.0, 4.0], [0.0, 0.0]],
+                              pa.list_(pa.float32())),
+        "label": pa.array([0, 0], pa.int32()),
+    }), tmp_path / "embeddings.parquet")
+    out = {r.vec_id: r
+           for r in embedding_quality_stats(spark, str(tmp_path)).collect()}
     assert out[0].l2_norm == 5.0 and not out[0].is_degenerate
     assert out[1].l2_norm == 0.0 and out[1].is_degenerate
 

@@ -128,7 +128,9 @@ def test_pnl_job_jdbc_two_tables_match_batch(spark, derby, tmp_path):
         pnl_positions,
         price_exposure,
     )
-    from kafka_flink_processing_spark.plans.stateful import derive_market
+    from kafka_flink_processing_spark.sources.events_market import (
+        derive_market,
+    )
     from kafka_flink_processing_spark.streaming.jobs import pnl_job_jdbc
 
     url, props = derby
@@ -182,7 +184,9 @@ def test_forecasts_job_jdbc_matches_batch(spark, derby, tmp_path):
     from kafka_flink_processing_spark.operators.windows import (
         rolling_sma_forecast,
     )
-    from kafka_flink_processing_spark.plans.stateful import derive_market
+    from kafka_flink_processing_spark.sources.events_market import (
+        derive_market,
+    )
     from kafka_flink_processing_spark.streaming.stateful import (
         streaming_sma_forecast,
     )

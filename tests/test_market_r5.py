@@ -155,11 +155,14 @@ def test_slippage_join_matches_batch_and_time_bound(spark):
         assert r.trade_ts - r.tick_ts <= tol    # within tolerance
         assert abs(r.slippage - (r.trade_price - r.tick_price)) < 1e-12
     # batch parity: the same interval join as plain DataFrame algebra
-    from kafka_flink_processing_spark.plans.market import _ticks, _trades
-    p = _ticks(spark, sf_dir).select(
+    from kafka_flink_processing_spark.sources.events_market import (
+        derive_market,
+    )
+    trades, prices = derive_market(spark, sf_dir)
+    p = prices.select(
         "tick_id", F.col("ts").alias("tick_ts"),
         F.col("hub").alias("tick_hub"), F.col("price_mwh"))
-    t = _trades(spark, sf_dir).select(
+    t = trades.select(
         "trade_id", F.col("ts").alias("trade_ts"), "hub")
     cond = ((F.col("hub") == F.col("tick_hub"))
             & (F.col("tick_ts") <= F.col("trade_ts"))

@@ -301,8 +301,8 @@ def test_containment_brute_force_parity(spark):
 
 
 def test_forecast_backtest_matches_pandas(spark):
+    from kafka_flink_processing_spark.operators.windows import SMA_SHORT
     from kafka_flink_processing_spark.plans.market import (
-        _SMA_N,
         forecast_backtest_sma_q,
     )
     prices = [round(100.0 + 10.0 * math.sin(i / 3.0), 2) for i in range(50)]
@@ -312,7 +312,7 @@ def test_forecast_backtest_matches_pandas(spark):
         got = forecast_backtest_sma_q(spark, td).collect()
     assert len(got) == 1 and got[0].hub == "HUB0"
     s = pd.Series(prices)
-    err = (s.shift(-1) - s.rolling(_SMA_N, min_periods=1).mean()).dropna()
+    err = (s.shift(-1) - s.rolling(SMA_SHORT, min_periods=1).mean()).dropna()
     scaled = (err * 1e4).round()
     n = len(err)
     assert got[0].n_forecasts == n == len(prices) - 1

@@ -166,7 +166,9 @@ def test_spark_fold_equals_spec_on_fixture(spark):
 
 
 def test_spark_fold_equals_spec_on_events_derivation(spark):
-    from kafka_flink_processing_spark.plans.stateful import derive_market
+    from kafka_flink_processing_spark.sources.events_market import (
+        derive_market,
+    )
     sf = "/root/testdata/sf0.001"
     trades, prices = derive_market(spark, sf)
     spark_rows = pnl_positions(trades, prices).collect()
@@ -288,7 +290,9 @@ def test_hybrid_fold_bitwise_equals_single_fold(spark, sf_dir):
     trades (included) — one row differing in last_price or state breaks
     set equality."""
     from kafka_flink_processing_spark.operators.pnl import pnl_positions_hybrid
-    from kafka_flink_processing_spark.plans.stateful import derive_market
+    from kafka_flink_processing_spark.sources.events_market import (
+        derive_market,
+    )
     trades, prices = derive_market(spark, sf_dir)
     single = pnl_positions(trades, prices).collect()
     hybrid = pnl_positions_hybrid(trades, prices).collect()

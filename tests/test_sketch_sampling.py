@@ -245,6 +245,7 @@ def test_asof_tolerance_null_gates_stale_quotes(spark):
     import unittest.mock as mock
 
     from kafka_flink_processing_spark.plans import temporal
+    from kafka_flink_processing_spark.sources import events_market
 
     T0 = dt.datetime(2024, 1, 1, 12, 0, 0)
     H = dt.timedelta(hours=1)
@@ -262,7 +263,7 @@ def test_asof_tolerance_null_gates_stale_quotes(spark):
         [(eid, ts, uid, et, v, "{}") for eid, ts, uid, et, v in rows],
         "event_id long, ts timestamp, user_id long, event_type string, "
         "value double, props string")
-    with mock.patch.object(temporal, "load_table", return_value=ev):
+    with mock.patch.object(events_market, "load_table", return_value=ev):
         out = {r.rt_id: r for r in
                temporal.da_rt_asof_tolerance(spark, "unused").collect()}
     assert out[2].lmp_da_bounded == 50.0 and out[2].basis == 5.0

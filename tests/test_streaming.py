@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from kafka_flink_processing_spark.operators.pnl import pnl_positions
 from kafka_flink_processing_spark.operators.windows import rolling_sma_forecast
-from kafka_flink_processing_spark.plans.stateful import derive_market
+from kafka_flink_processing_spark.sources.events_market import derive_market
 from kafka_flink_processing_spark.streaming.sinks import (
     run_available_now,
     staged_stream,

@@ -14,7 +14,7 @@ from kafka_flink_processing_spark.operators.pnl import (
     price_exposure,
 )
 from kafka_flink_processing_spark.operators.windows import rolling_sma_forecast
-from kafka_flink_processing_spark.plans.stateful import derive_market
+from kafka_flink_processing_spark.sources.events_market import derive_market
 from kafka_flink_processing_spark.streaming.jobs import (
     ccnet_quality_filter_job,
     decontamination_job,

@@ -1,17 +1,17 @@
 """ccnet persisted-score A/B (r10 verdict task 4): does persisting the
-per-doc score relation before the tercile join beat the registered
-lazy form's double score-branch?
+per-doc score relation before the tercile join beat the lazy form's
+double score-branch?
 
-The registered `ccnet_perplexity_buckets` plan recomputes the score
-branch (bigram explode + LM build + doc-keyed agg) for the histogram
-side of the tercile join — the leak-free-lazy-plan constraint for
-registered queries forbids a persisted handle (the r8 finding). Unlike
-the DSIR candidate (SCALE.md, measured NEGATIVE), the recompute here
-is the WHOLE score pipeline including two corpus bigram passes, so the
-trade may flip. Protocol = the DSIR one: interleaved A/B reps at sf0.1
-on a warm session, results hash-compared before timing counts.
+The lazy plan recomputes the score branch (bigram explode + LM build +
+doc-keyed agg) for the histogram side of the tercile join. Unlike the
+DSIR candidate (SCALE.md, measured NEGATIVE), the recompute here is the
+WHOLE score pipeline including two corpus bigram passes, so the trade
+may flip. Protocol = the DSIR one: interleaved A/B reps at sf0.1 on a
+warm session, results hash-compared before timing counts. B measured
+POSITIVE (1.58x at 4x corpus, SCALE.md), and the registered
+`ccnet_perplexity_buckets` now runs shape B (keeping its cache entry).
 
-  A (registered, lazy): _ccnet_bucketed(docs, _ccnet_scored_b2(docs))
+  A (lazy):             _ccnet_bucketed(docs, _ccnet_scored_b2(docs))
   B (production shape): b2 = _ccnet_scored_b2(docs).persist();
                         b2.count(); _ccnet_bucketed(docs, b2); unpersist
 
@@ -81,7 +81,7 @@ def main() -> None:
         times_b.append(run_b())
         print(f"pair {i + 1}: A={times_a[-1]:.3f}s B={times_b[-1]:.3f}s",
               flush=True)
-    print(f"A (lazy, registered)  reps={[round(t, 3) for t in times_a]} "
+    print(f"A (lazy)              reps={[round(t, 3) for t in times_a]} "
           f"min={min(times_a):.3f}")
     print(f"B (persisted b2)      reps={[round(t, 3) for t in times_b]} "
           f"min={min(times_b):.3f}")

@@ -46,6 +46,18 @@ from kafka_flink_processing_spark.streaming.sinks import (  # noqa: E402
 N_EPOCHS = 4
 
 
+def _epochs(q) -> list[dict]:
+    """One entry per non-empty trigger of a finished query, read from its
+    StreamingQueryProgress: input rows, trigger seconds and the first
+    state operator's total rows (None for a stateless query)."""
+    prog = [json.loads(p.json) for p in q.recentProgress]
+    return [{"rows": p["numInputRows"],
+             "sec": round(p["durationMs"]["triggerExecution"] / 1e3, 3),
+             "state_rows": (p["stateOperators"][0]["numRowsTotal"]
+                            if p.get("stateOperators") else None)}
+            for p in prog if p["numInputRows"] > 0]
+
+
 def run_stateful(spark, label, build, sources, n_epochs=N_EPOCHS):
     """Drive a stateful streaming operator over n_epochs time-ordered
     file epochs and report per-epoch cost. `sources` maps subdir -> batch
@@ -69,12 +81,7 @@ def run_stateful(spark, label, build, sources, n_epochs=N_EPOCHS):
         q = start_epochs(out, drain, f"{td}/ckpt", available_now=True)
         q.awaitTermination()
         wall = time.time() - t0
-        prog = [json.loads(p.json) for p in q.recentProgress]
-    epochs = [{"rows": p["numInputRows"],
-               "sec": round(p["durationMs"]["triggerExecution"] / 1e3, 3),
-               "state_rows": (p["stateOperators"][0]["numRowsTotal"]
-                              if p.get("stateOperators") else None)}
-              for p in prog if p["numInputRows"] > 0]
+        epochs = _epochs(q)
     # epoch 1 carries python-worker spin-up + state-store init
     steady = epochs[1:] if len(epochs) > 1 else epochs
     steady_sec = sum(e["sec"] for e in steady)
@@ -103,7 +110,8 @@ def run_job(spark, job, corpus, increment, label):
         q, artifact = res if isinstance(res, tuple) else (res, None)
         q.awaitTermination()
         wall = time.time() - t0
-        prog = [json.loads(p.json) for p in q.recentProgress]
+        epochs = [{"source_rows_read": e["rows"], "sec": e["sec"]}
+                  for e in _epochs(q)]
         if artifact is not None:
             artifact.unpersist()
         # numInputRows per trigger counts SOURCE SCANS, not distinct docs:
@@ -112,9 +120,6 @@ def run_job(spark, job, corpus, increment, label):
         # a 125-doc epoch reports ~375 input rows. Throughput is therefore
         # derived from the TRUE doc counts (increment.count() split evenly
         # by the quantile cut), never from numInputRows.
-        epochs = [{"source_rows_read": p["numInputRows"],
-                   "sec": round(p["durationMs"]["triggerExecution"] / 1e3, 3)}
-                  for p in prog if p["numInputRows"] > 0]
         docs_per_epoch = n_increment / max(len(epochs), 1)
         # first non-empty epoch carries the one-off corpus-artifact build +
         # python worker spin-up; steady state = the later epochs
@@ -215,7 +220,9 @@ def main():
                 eval_docs, increment, f"decontamination_{tag}")
 
     # Part 2: the reference jobs' stateful operators at two input scales
-    from kafka_flink_processing_spark.plans.stateful import derive_market
+    from kafka_flink_processing_spark.sources.events_market import (
+        derive_market,
+    )
     from kafka_flink_processing_spark.streaming.stateful import (
         streaming_pnl,
         streaming_sma_forecast,
@@ -236,16 +243,11 @@ def main():
     # plateau at O(watermark lag x rate) per hub while tick HISTORY grows
     # epoch over epoch. 8 epochs give the plateau room to show; per-epoch
     # sec must stay flat alongside.
-    from kafka_flink_processing_spark.plans.market import (
-        _ticks,
-        _trades,
-        slippage_join_build,
-    )
+    from kafka_flink_processing_spark.plans.market import slippage_join_build
     for sf, tag in ((sf001, "sf0.01"), (sf01, "sf0.1")):
+        trades, prices = derive_market(spark, sf)
         run_stateful(spark, f"slippage_join_{tag}", slippage_join_build,
-                     {"ticks": _ticks(spark, sf),
-                      "trades": _trades(spark, sf)},
-                     n_epochs=8)
+                     {"ticks": prices, "trades": trades}, n_epochs=8)
 
 
 if __name__ == "__main__":

@@ -96,7 +96,7 @@ from kafka_flink_processing_spark.operators.pnl import pnl_positions  # noqa: E4
 from kafka_flink_processing_spark.operators.windows import (  # noqa: E402
     rolling_sma_forecast,
 )
-from kafka_flink_processing_spark.plans.stateful import derive_market  # noqa: E402
+from kafka_flink_processing_spark.sources.events_market import derive_market  # noqa: E402
 from kafka_flink_processing_spark.session import get_spark  # noqa: E402
 from kafka_flink_processing_spark.sources.parquet import load_table  # noqa: E402
 from kafka_flink_processing_spark.streaming.sinks import (  # noqa: E402
