@@ -43,7 +43,7 @@ CPython 3.11 that makes each `zipimporter` (19 in a pandas-UDF worker:
 one per package directory imported from pyspark.zip, 1,328 entries, or
 from the shipped package zip) re-read its archive's whole central
 directory in pure Python, 0.06-0.12 s of CPU per task, counted in
-`pythonInitTime`. On a local master (`worker_daemon_conf`) the workers
+`pythonInitTime`. On a local master (`local_master_conf`) the workers
 run under `worker_daemon`: pyspark's unchanged daemon with a
 `zipimporter.invalidate_caches` that re-reads an archive only when its
 (inode, size, mtime) changed, 0 re-reads per steady-state task.
@@ -58,6 +58,54 @@ The layer that moved is Python-worker process CPU (daemon, workers and
 reaped workers, from /proc): 0.97-1.32 -> 0.23-0.34 s per warm batch
 pass, 1.93-2.12 -> 0.39-0.59 s per stream drain. Other masters keep the
 stock daemon: their workers may not see this package's path.
+
+Per-operation fixed costs. The streaming jobs commit a checkpoint every
+micro-batch, and a catch-up drain is all small epochs, so costs paid per
+file operation or per DataFrame call add up. Two fixed settings remove
+the largest two:
+
+1. Checkpoint renames without a fork (local masters only). Spark's
+   default checkpoint manager renames through Hadoop's FileContext,
+   whose local file system calls `getFileLinkStatus`; without Hadoop's
+   native library that shells out to `readlink`, about 4 processes per
+   rename. `local_master_conf` sets `FileSystemBasedCheckpointFileManager`
+   instead. On the local file system both managers make the same
+   existence check and then the same `File.renameTo`, and write the same
+   files and `.crc` checksums; a checkpoint written under the
+   FileContext manager restarts under this one (a test in
+   tests/test_streaming_jobs.py). Other masters keep the FileContext
+   default, which HDFS and object stores want. Counted with logging
+   `PATH` shims,
+   one perfbench `stream_catchup` run (setup, cold drain, warm drain):
+   `readlink` 805 -> 5 processes, `chmod` 422 -> 422. The `chmod` forks
+   come from every non-append file create and need libhadoop's NativeIO
+   to avoid. The driver JVM's reaped child CPU (cutime + cstime) per
+   drain, 3 runs each: 1.80-2.03 -> 0.62-0.69 s.
+2. No Python call-site capture (every master). pyspark 4 records the
+   Python `file:line` of every Column and `functions` call for the
+   `== DataFrame ==` error context: several py4j round trips and one
+   failed `import IPython` per call. `get_spark` sets
+   `spark.python.sql.dataFrameDebugging.enabled=false` at session build
+   (pyspark caches the flag on first use). Error class, SQLSTATE and the
+   failing fragment stay; only the Python `file:line` is gone. py4j round
+   trips to build a query at sf0.01 (warm, second build in one session):
+   `dedup_minhash_lsh` 1,062-1,178 -> 432, `session_window_stats` 332 ->
+   132-283, `asof_join_events` 559-708 -> 309-382.
+
+Perfbench, 12 interleaved stream pairs and 10 batch pairs (local[2], 2g
+heap, 4-core shared host), parent -> change, medians [quartiles]; the
+stream warm pass won 12 of 12 pairs, the stream cold pass 11 of 12:
+
+    metric            stream_catchup              batch_desk_curation
+    warm_pass_cpu_s   16.37 [16.18-16.62] ->      5.88 [5.50-6.04] ->
+                      13.68 [13.24-14.20]         5.48 [5.14-6.13]
+    cold_pass_cpu_s   31.51 [30.83-31.84] ->      27.85 [26.80-28.93] ->
+                      28.19 [27.67-28.88]         26.28 [24.48-27.43]
+    setup_s           15.75 [15.65-16.37] ->      15.63 [15.25-16.74] ->
+                      15.83 [15.56-16.56]         15.44 [14.77-15.93]
+
+The batch workload has no checkpoints, so only the second setting
+applies there.
 """
 
 from __future__ import annotations
@@ -81,6 +129,9 @@ _DRIVER_JIT_OPTIONS = (
 
 _PKG_DIR = os.path.dirname(os.path.abspath(__file__))
 WORKER_DAEMON = "kafka_flink_processing_spark.worker_daemon"
+FS_CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager")
 
 # The heap share leaves the rest of the box to the Python workers, the
 # page cache and the OS.
@@ -106,15 +157,18 @@ def _prepend_pythonpath(path: str) -> None:
                                     if parts else path)
 
 
-def worker_daemon_conf(master: str) -> dict[str, str]:
-    """Spark conf that runs the Python workers under this package's
-    daemon (see "Python worker daemon" above) on a local master; {} on
-    any other master. Makes the package importable by the daemon, so it
-    must run BEFORE the JVM starts; get_spark() calls it."""
+def local_master_conf(master: str) -> dict[str, str]:
+    """Spark conf for a local master: the Python workers run under this
+    package's daemon (see "Python worker daemon" above) and checkpoint
+    files are renamed without a fork (see "Per-operation fixed costs");
+    {} on any other master. Makes the package importable by the daemon,
+    so it must run BEFORE the JVM starts; get_spark() calls it."""
     if master != "local" and not master.startswith("local["):
         return {}
     _prepend_pythonpath(os.path.dirname(_PKG_DIR))
-    return {"spark.python.daemon.module": WORKER_DAEMON}
+    return {"spark.python.daemon.module": WORKER_DAEMON,
+            "spark.sql.streaming.checkpointFileManagerClass":
+                FS_CHECKPOINT_FILE_MANAGER}
 
 
 def ensure_protobuf_for_tws() -> bool:
@@ -212,8 +266,12 @@ def get_spark(app_name: str = "kafka_flink_processing_spark",
     builder = (
         SparkSession.builder
         .master(master)
-        .config(map=worker_daemon_conf(master))
+        .config(map=local_master_conf(master))
         .appName(app_name)
+        # No Python call-site capture per Column call; see "Per-operation
+        # fixed costs". pyspark caches the flag on first use, so it is
+        # set here, at session build.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or _CPUS))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -1,5 +1,6 @@
 """Session posture (session.py): the driver's JIT compile budget, its
-heap size and the Python worker daemon."""
+heap size, the Python worker daemon, the checkpoint file manager and
+pyspark's call-site capture."""
 
 from __future__ import annotations
 
@@ -9,10 +10,13 @@ import sys
 import textwrap
 from pathlib import Path
 
+from pyspark.errors.utils import is_debugging_enabled
+
 from kafka_flink_processing_spark.session import (
+    FS_CHECKPOINT_FILE_MANAGER,
     WORKER_DAEMON,
     default_driver_memory,
-    worker_daemon_conf,
+    local_master_conf,
 )
 
 # HotSpot's Tier-4 defaults are 5000, 600, 15000 and 40000; the driver
@@ -82,15 +86,17 @@ def test_caller_java_options_and_memory_override_still_apply():
     assert out[-3:] == ["set", str(512 * 2**20), "True"]
 
 
-def test_worker_daemon_conf_is_set_for_local_masters_only(monkeypatch):
+def test_local_master_conf_is_set_for_local_masters_only(monkeypatch):
     monkeypatch.setenv("PYTHONPATH", "elsewhere")
     for master in ("spark://host:7077", "yarn", "k8s://https://host:443",
                    "local-cluster[2,1,1024]"):
-        assert worker_daemon_conf(master) == {}
+        assert local_master_conf(master) == {}
     assert os.environ["PYTHONPATH"] == "elsewhere"
     for master in ("local", "local[*]", "local[2]", "local[2,3]"):
-        assert worker_daemon_conf(master) == {
-            "spark.python.daemon.module": WORKER_DAEMON}
+        assert local_master_conf(master) == {
+            "spark.python.daemon.module": WORKER_DAEMON,
+            "spark.sql.streaming.checkpointFileManagerClass":
+                FS_CHECKPOINT_FILE_MANAGER}
     assert os.environ["PYTHONPATH"].split(os.pathsep) == [str(ROOT),
                                                           "elsewhere"]
 
@@ -99,3 +105,21 @@ def test_local_session_runs_the_worker_daemon(spark):
     assert spark.sparkContext.master.startswith("local[")
     conf = spark.sparkContext.getConf()
     assert conf.get("spark.python.daemon.module") == WORKER_DAEMON
+
+
+def test_local_session_renames_checkpoints_through_the_file_system(
+        spark, tmp_path):
+    """The manager Spark builds for a checkpoint directory, not only the
+    conf string: a misspelt class name would fail here."""
+    jvm = spark._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing \
+        .CheckpointFileManager.create(
+            jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+            spark._jsparkSession.sessionState().newHadoopConf())
+    assert manager.getClass().getName() == FS_CHECKPOINT_FILE_MANAGER
+
+
+def test_session_skips_python_call_site_capture(spark):
+    assert spark.conf.get(
+        "spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert is_debugging_enabled() is False

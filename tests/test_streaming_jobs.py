@@ -5,6 +5,8 @@ leak. The JDBC fan-out is in tests/test_jdbc_sink.py."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
@@ -23,8 +25,12 @@ from kafka_flink_processing_spark.streaming.jobs import (
     pnl_job,
 )
 from kafka_flink_processing_spark.streaming.sinks import staged_stream
+from kafka_flink_processing_spark.streaming.stateful import session_conf
 
 SF = "/root/testdata/sf0.001"
+FILE_CONTEXT_CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileContextBasedCheckpointFileManager")
 
 
 @pytest.fixture(scope="module")
@@ -61,6 +67,40 @@ def test_forecasts_job_end_to_end(spark, market, tmp_path):
         prices.select("ts", "hub", "price_mwh", "seq"),
         ["hub"], ["ts", "seq"], "price_mwh")
         .select("ts", "hub", "sma5", "sma20", "forecast_next"))
+    _assert_same_rows(got, want)
+
+
+def test_forecasts_checkpoint_from_file_context_manager_restarts(
+        spark, market, tmp_path):
+    """A checkpoint written under Spark's default FileContext manager,
+    which non-local masters keep, restarts on a local session's
+    FileSystem manager: the keyed SMA state resumes, the first slice is
+    not re-emitted, and the whole output equals the batch plan over the
+    whole tape."""
+    _, prices = market
+    prices = prices.withColumn("seq", F.lit(0).cast("long"))
+    src, out, ckpt = (f"{tmp_path}/src", f"{tmp_path}/out",
+                      f"{tmp_path}/ckpt")
+    stream = staged_stream(prices, src, 2)
+    os.rename(f"{src}/f1", f"{tmp_path}/held")    # the next slice
+
+    def drain():
+        q = forecasts_job(stream, out, ckpt, seq_col="seq")
+        q.processAllAvailable()
+        q.stop()
+
+    with session_conf(spark, "spark.sql.streaming.checkpointFileManagerClass",
+                      FILE_CONTEXT_CHECKPOINT_FILE_MANAGER):
+        drain()
+    n_first = spark.read.parquet(f"{out}/forecasts/epoch=*").count()
+    os.rename(f"{tmp_path}/held", f"{src}/f1")
+    drain()
+    got = spark.read.parquet(f"{out}/forecasts/epoch=*")
+    want = (rolling_sma_forecast(
+        prices.select("ts", "hub", "price_mwh", "seq"),
+        ["hub"], ["ts", "seq"], "price_mwh")
+        .select("ts", "hub", "sma5", "sma20", "forecast_next"))
+    assert 0 < n_first < want.count()
     _assert_same_rows(got, want)
 
 

@@ -55,9 +55,11 @@ discount exactly 0/1, all-same-date + all-same-totalprice ties, 60/70%
 single-key skew). First run: 43 queries x 3 corpora, all green — the
 family's dsum/tie-break discipline held; kept as a regression wall.
 
-Usage: python tools/oracle_fuzz.py [--seed N] [--corpus name ...]
-                                   [query ...]
-Exit 1 on any mismatch. Each failure prints the oracle_check diff.
+Usage: python tools/oracle_fuzz.py [--seed N] [query ...]
+                                   [--corpus name [name ...]]
+Query names must be registered; put them before `--corpus` (or after
+`--`). Exit 1 on any mismatch, and when no selected query has an oracle
+(zero checks). Each failure prints the oracle_check diff.
 """
 
 from __future__ import annotations
@@ -727,46 +729,70 @@ def stage_sf_dir(spark, rows, workdir: str,
     return sf
 
 
-def main() -> int:
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    """`--corpus` takes one or more names and may repeat; positional
+    names must be registered queries (a typo is an error, not a filter
+    that matches nothing)."""
     ap = argparse.ArgumentParser()
     ap.add_argument("--seed", type=int, default=7)
-    ap.add_argument("--corpus", action="append", choices=sorted(CORPORA))
+    ap.add_argument("--corpus", nargs="+", action="extend",
+                    choices=sorted(CORPORA))
     ap.add_argument("queries", nargs="*")
-    args = ap.parse_args()
-    corpora = args.corpus or list(CORPORA)
+    args = ap.parse_args(argv)
+    unknown = sorted(set(args.queries) - set(entrymod.queries()))
+    if unknown:
+        ap.error(f"not registered queries: {' '.join(unknown)}")
+    return args
+
+
+def corpus_queries(cname: str, wanted: list[str],
+                   oracles: dict[str, str]) -> list[str]:
+    """The queries with an oracle that run on corpus `cname`: `wanted`
+    if given, else the corpus family's default list."""
+    if wanted:
+        names = wanted
+    elif cname in TPCH_CORPORA:
+        names = tpch_query_names(oracles)
+    elif cname == "unicode":
+        names = TOTAL_TEXT
+    elif cname == "media_stress":
+        names = MEDIA_QUERIES
+    elif cname == "media_binary":
+        names = MEDIA_BINARY_QUERIES
+    elif cname in EVENT_CORPORA:
+        names = EVENT_QUERIES
+    elif cname in EMB_CORPORA:
+        names = EMB_QUERIES
+    else:
+        names = DOC_QUERIES
+    return [n for n in names if n in oracles]
+
+
+def main(argv: list[str] | None = None) -> int:
+    args = parse_args(argv)
+    oracles = entrymod.oracle_sql()
+    plan = {cname: corpus_queries(cname, args.queries, oracles)
+            for cname in args.corpus or list(CORPORA)}
+    if not any(plan.values()):
+        print("fuzz: no checks to run (no selected query has an oracle)")
+        return 1
     spark = get_spark("oracle_fuzz")
-    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+    qs = entrymod.queries()
     n_pass = n_fail = 0
     failures: list[str] = []
-    for cname in corpora:
+    for cname, names in plan.items():
+        if not names:
+            continue
         rng = random.Random(args.seed)
         rows = CORPORA[cname](rng)
         table = ("events" if cname in EVENT_CORPORA
                  else "embeddings" if cname in EMB_CORPORA
                  else "documents")
-        if args.queries:
-            names = args.queries
-        elif cname in TPCH_CORPORA:
-            names = tpch_query_names(oracles)
-        elif cname == "unicode":
-            names = TOTAL_TEXT
-        elif cname == "media_stress":
-            names = MEDIA_QUERIES
-        elif cname == "media_binary":
-            names = MEDIA_BINARY_QUERIES
-        elif table == "events":
-            names = EVENT_QUERIES
-        elif table == "embeddings":
-            names = EMB_QUERIES
-        else:
-            names = DOC_QUERIES
         work = tempfile.mkdtemp(prefix=f"kfps_fuzz_{cname}_")
         try:
             sf = stage_sf_dir(spark, rows, work, table=table)
             con = duck_connection(sf)
             for name in names:
-                if name not in oracles:
-                    continue
                 try:
                     sdf = qs[name](spark, sf).toPandas()
                     ddf = con.execute(oracles[name]).fetchdf()

@@ -16,6 +16,12 @@ flat across epochs — keyed state is a constant-size ring buffer / position
 struct per hub(+account), so accumulating history must not grow the
 per-row cost.
 
+Every run also reports `jvm_child_cpu_s`: the CPU of the driver JVM's
+reaped child processes during the run (cutime + cstime of
+/proc/<jvm>/stat). Without Hadoop's native library the local file system
+forks for some file operations (`chmod` on every file create), and that
+cost is in no Spark metric.
+
 Usage: python tools/stream_bench.py   (prints one JSON line per run)
 Numbers land in SCALE.md with the shared-box caveat.
 """
@@ -23,6 +29,7 @@ Numbers land in SCALE.md with the shared-box caveat.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import tempfile
 import time
@@ -58,6 +65,14 @@ def _epochs(q) -> list[dict]:
             for p in prog if p["numInputRows"] > 0]
 
 
+def _jvm_child_cpu_s(spark) -> float:
+    """CPU seconds of the driver JVM's reaped children so far."""
+    pid = spark._jvm.java.lang.ProcessHandle.current().pid()
+    with open(f"/proc/{pid}/stat") as fh:
+        fields = fh.read().rsplit(")", 1)[1].split()
+    return (int(fields[13]) + int(fields[14])) / os.sysconf("SC_CLK_TCK")
+
+
 def run_stateful(spark, label, build, sources, n_epochs=N_EPOCHS):
     """Drive a stateful streaming operator over n_epochs time-ordered
     file epochs and report per-epoch cost. `sources` maps subdir -> batch
@@ -77,10 +92,11 @@ def run_stateful(spark, label, build, sources, n_epochs=N_EPOCHS):
         streams = {k: staged_stream(df, f"{td}/{k}", n_epochs)
                    for k, df in sources.items()}
         out = build(streams)
-        t0 = time.time()
+        t0, c0 = time.time(), _jvm_child_cpu_s(spark)
         q = start_epochs(out, drain, f"{td}/ckpt", available_now=True)
         q.awaitTermination()
         wall = time.time() - t0
+        child_cpu = _jvm_child_cpu_s(spark) - c0
         epochs = _epochs(q)
     # epoch 1 carries python-worker spin-up + state-store init
     steady = epochs[1:] if len(epochs) > 1 else epochs
@@ -91,6 +107,7 @@ def run_stateful(spark, label, build, sources, n_epochs=N_EPOCHS):
         "input_rows": sum(e["rows"] for e in epochs),
         "output_rows": sum(per_epoch_out),
         "epochs": epochs,
+        "jvm_child_cpu_s": round(child_cpu, 2),
         "wall_sec": round(wall, 3),
         "steady_rows_per_sec": round(steady_rows / steady_sec, 1)
         if steady_sec else None,
@@ -102,7 +119,7 @@ def run_job(spark, job, corpus, increment, label):
     with tempfile.TemporaryDirectory(prefix=f"kfps_sbench_{label}_") as td:
         stream = staged_stream(increment, f"{td}/src", N_EPOCHS,
                                order_col="doc_id")
-        t0 = time.time()
+        t0, c0 = time.time(), _jvm_child_cpu_s(spark)
         res = job(stream, corpus, f"{td}/out", f"{td}/ckpt",
                   available_now=True)
         # decontamination_job returns (query, cached-artifact); the other
@@ -110,6 +127,7 @@ def run_job(spark, job, corpus, increment, label):
         q, artifact = res if isinstance(res, tuple) else (res, None)
         q.awaitTermination()
         wall = time.time() - t0
+        child_cpu = _jvm_child_cpu_s(spark) - c0
         epochs = [{"source_rows_read": e["rows"], "sec": e["sec"]}
                   for e in _epochs(q)]
         if artifact is not None:
@@ -131,6 +149,7 @@ def run_job(spark, job, corpus, increment, label):
             "increment_docs": n_increment,
             "docs_per_epoch": docs_per_epoch,
             "epochs": epochs,
+            "jvm_child_cpu_s": round(child_cpu, 2),
             "wall_sec": round(wall, 3),
             "steady_docs_per_sec": round(
                 docs_per_epoch * len(steady) / steady_sec, 1)
