@@ -1,51 +1,91 @@
-"""Multimodal column plumbing: opaque binary payloads + typed metadata.
+"""Media payload stages: opaque binary payloads next to typed metadata.
 
-Design (for a real 100 TB corpus): image/audio/video travel as parquet
-`binary` columns next to typed metadata (mime, width, height, duration...).
-Decode / feature-extract / resize / frame-sample run as Arrow-batched
-mapInPandas stages so bytes never round-trip through Python row-at-a-time.
-Partition by content hash or source shard; decoded features are columnar
-outputs, the raw bytes are dropped as early as possible (column pruning).
+Images and audio travel as `binary` columns. Every stage in this module
+is one Arrow-batched `mapInPandas` pass (`_row_stage`) that reads the
+`doc_id` column and one input column and returns typed rows, so the
+bytes never leave the executor.
 
-Codec reality ladder (each rung un-gated the round its stdlib path was
-found — environment gates are falsifiable claims, re-audited per round):
-24-bit BI_RGB BMP and 16-bit PCM WAV decode for real with struct + numpy
-(late-r6); 8-bit gray/RGB/RGBA PNG decodes for real with stdlib zlib +
-numpy unfiltering (r7) — a genuinely COMPRESSED container, CRC-validated,
-all five PNG filters. See decode_bmp / decode_wav / decode_png /
-decode_media below, round-tripped against the matching encoders in
-tests/test_multimodal_codecs.py. Codecs that need entropy coders or DSP
-beyond the stdlib (JPEG/MP3/video) are not decoded: decode_features
-derives deterministic pseudo-features from the bytes (_fake_features) —
-the Spark-side plumbing (schema, partitioning, UDF signature, Arrow batch
-shape) is real and tested either way.
+Containers that decode for real, with stdlib struct/zlib and numpy only:
 
-PERMANENT DESCOPE (r10, per the r9 verdict): JPEG, MP3, and video
-decoding are out of scope for this repo for good. A from-scratch baseline
-JPEG decoder (Huffman entropy coding + IDCT), MPEG audio synthesis
-filterbank, or any video codec is thousands of lines of DSP that neither
-the reference (which has no media path at all) nor the query surface
-needs; the sandbox ships no binding for libjpeg/libmp3lame/ffmpeg, and
-re-auditing that gate every round costs attention with zero expected
-change. The contract stays: payloads sniffing as these formats route to
-decode_media's null-feature audit bucket (counted, never crashing the
-job), and decode_features' byte-statistics stand-in keeps the Arrow
-plumbing testable. If a codec lib
-ever lands in the environment, un-gating follows the BMP/WAV/PNG/GIF
-ladder above — until then this gate needs no further per-round audit.
+- BMP: 24-bit uncompressed (BI_RGB).
+- WAV: 16-bit PCM, any channel count.
+- PNG: 8-bit grayscale, RGB or RGBA, non-interlaced, all five row
+  filters, every chunk CRC-checked.
+- GIF: single-frame, non-interlaced GIF87a/89a, variable-width LZW.
+
+Each has a matching encoder. The payload stages (`with_png_payload`,
+`with_gif_payload`, `with_wav_payload`) build media from text, so the
+DuckDB oracles recompute the decoded values from the text alone and a
+hash match covers the whole encode/decode round trip.
+
+The audit bucket: a payload that is NULL, unrecognized, malformed or
+outside the formats above (`_UNDECODABLE`) never fails the job.
+`decode_media` emits container='unknown' with null features for it, and
+`audio_zcr_features` emits -1 counts.
+
+Out of scope: JPEG, MP3 and video. Their decoders need entropy coding
+and signal processing that the stdlib lacks, the environment ships no
+codec library, and no query needs them; such payloads land in the audit
+bucket. `decode_features`, `resize_features` and `sample_frames` are
+stand-ins for codec stages: byte statistics, every-k-th-byte resampling
+and fixed-size chunking, which the oracles reproduce in SQL.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import hashlib
+import struct
+import zlib
+from collections.abc import Callable, Iterator
+from typing import Any
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BinaryType,
+    DataType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
-DECODE_SCHEMA = ("doc_id long, mime string, n_bytes long, "
-                 "width int, height int, mean_byte double, entropy_bucket int")
+
+def _schema(*fields: tuple[str, DataType]) -> StructType:
+    """A stage's output schema: `doc_id long`, then `fields`."""
+    return StructType([StructField(name, dtype) for name, dtype
+                       in (("doc_id", LongType()), *fields)])
+
+
+def _row_stage(df: DataFrame, schema: StructType, col: str,
+               row_fn: Callable[[Any], list[tuple]]) -> DataFrame:
+    """The module's one Arrow stage. `row_fn` maps one value of `col`
+    (None for NULL) to the rows that follow `doc_id` in `schema`: one
+    row for a 1 -> 1 stage, any number for a fan-out."""
+    names = schema.fieldNames()
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            yield pd.DataFrame([(doc_id, *row) for doc_id, value
+                                in zip(pdf["doc_id"], pdf[col])
+                                for row in row_fn(value)], columns=names)
+
+    from kafka_flink_processing_spark.shipping import ensure_shipped
+    ensure_shipped(df.sparkSession)
+    return df.mapInPandas(batches, schema)
+
+
+# --- Codec stand-ins over raw bytes ----------------------------------------
+
+DECODE_SCHEMA = _schema(("mime", StringType()), ("n_bytes", LongType()),
+                        ("width", IntegerType()), ("height", IntegerType()),
+                        ("mean_byte", DoubleType()),
+                        ("entropy_bucket", IntegerType()))
 
 
 def _fake_features(payload: bytes) -> tuple[int, int, float, int]:
@@ -59,145 +99,114 @@ def _fake_features(payload: bytes) -> tuple[int, int, float, int]:
     return width, height, mean_byte, entropy_bucket
 
 
-def decode_features(df: DataFrame, payload_col: str = "payload",
-                    id_col: str = "doc_id") -> DataFrame:
-    """mapInPandas decode stage: binary payload -> typed feature columns
-    (the _fake_features byte statistics).
+def decode_features(df: DataFrame) -> DataFrame:
+    """Decode stand-in: `payload` -> the _fake_features byte statistics.
+    A NULL payload gives NULL features."""
+    def row(p: bytes | None) -> list[tuple]:
+        if p is None:
+            return [("application/octet-stream", None, None, None, None,
+                     None)]
+        b = bytes(p)
+        return [("application/octet-stream", len(b), *_fake_features(b))]
 
-    Arrow ships the binary column in batches; each batch is decoded in bulk
-    and only the (small) feature columns come back — the pattern for real
-    image decode at scale.
-    """
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            # NULL payload -> NULL features (the oracle's NULL
-            # propagation), never a worker crash (r8 fuzzer)
-            feats = [(None, None, None, None) if p is None
-                     else _fake_features(bytes(p)) for p in pdf[payload_col]]
-            out = pd.DataFrame(feats, columns=["width", "height", "mean_byte",
-                                               "entropy_bucket"])
-            out.insert(0, "doc_id", pdf[id_col].to_numpy())
-            out.insert(1, "mime", "application/octet-stream")
-            out.insert(2, "n_bytes", [None if p is None else len(bytes(p))
-                                      for p in pdf[payload_col]])
-            yield out
-
-    from kafka_flink_processing_spark.shipping import ensure_shipped
-    ensure_shipped(df.sparkSession)
-    return df.mapInPandas(batches, DECODE_SCHEMA)
+    return _row_stage(df, DECODE_SCHEMA, "payload", row)
 
 
-def with_payload(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def with_payload(docs: DataFrame) -> DataFrame:
     """Derive an opaque binary payload column from text (the testdata has no
     real media; utf-8 bytes stand in as the payload)."""
-    return docs.withColumn("payload", F.encode(F.col(text_col), "UTF-8"))
+    return docs.withColumn("payload", F.encode(F.col("text"), "UTF-8"))
 
 
-RESIZE_SCHEMA = ("doc_id long, target_w int, target_h int, "
-                 "src_w int, src_h int, scale double, thumb_hash string")
+TARGET_W = TARGET_H = 64     # resize_features' thumbnail size
+
+RESIZE_SCHEMA = _schema(("target_w", IntegerType()),
+                        ("target_h", IntegerType()),
+                        ("src_w", IntegerType()), ("src_h", IntegerType()),
+                        ("scale", DoubleType()), ("thumb_hash", StringType()))
 
 
-def resize_features(df: DataFrame, target_w: int = 64, target_h: int = 64,
-                    payload_col: str = "payload",
-                    id_col: str = "doc_id") -> DataFrame:
-    """mapInPandas resize stage (1 row -> 1 row, bytes stay executor-side).
+def resize_features(df: DataFrame) -> DataFrame:
+    """Resize stand-in (1 row -> 1 row): the source dims come from
+    _fake_features, the resample keeps every k-th byte for the scale to
+    (TARGET_W, TARGET_H), and the thumbnail is its md5. A NULL payload
+    keeps the target dims and nulls the rest."""
+    def row(p: bytes | None) -> list[tuple]:
+        if p is None:
+            return [(TARGET_W, TARGET_H, None, None, None, None)]
+        b = bytes(p)
+        src_w, src_h, _, _ = _fake_features(b)
+        scale = min(TARGET_W / src_w, TARGET_H / src_h)
+        k = max(1, int(1 / scale)) if scale < 1 else 1
+        return [(TARGET_W, TARGET_H, src_w, src_h, scale,
+                 hashlib.md5(b[::k]).hexdigest())]
 
-    Real pipeline: decode, resample to (target_w, target_h), re-encode or
-    emit pixel tensors. Stubbed resample = keep every k-th byte (k chosen
-    from the fake source dims), hash the result — deterministic, and the
-    batch shape (binary in, small typed columns out) is the real one.
-    """
-    import hashlib
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, p in zip(pdf[id_col], pdf[payload_col]):
-                if p is None:        # oracle NULL propagation (r8 fuzzer)
-                    rows.append((doc_id, target_w, target_h, None, None,
-                                 None, None))
-                    continue
-                b = bytes(p)
-                src_w, src_h, _, _ = _fake_features(b)
-                scale = min(target_w / src_w, target_h / src_h)
-                k = max(1, int(1 / scale)) if scale < 1 else 1
-                thumb = b[::k]
-                rows.append((doc_id, target_w, target_h, src_w, src_h,
-                             scale, hashlib.md5(thumb).hexdigest()))
-            yield pd.DataFrame(rows, columns=["doc_id", "target_w", "target_h",
-                                              "src_w", "src_h", "scale",
-                                              "thumb_hash"])
-
-    from kafka_flink_processing_spark.shipping import ensure_shipped
-    ensure_shipped(df.sparkSession)
-    return df.mapInPandas(batches, RESIZE_SCHEMA)
+    return _row_stage(df, RESIZE_SCHEMA, "payload", row)
 
 
-FRAME_SCHEMA = ("doc_id long, frame_idx int, frame_offset long, "
-                "frame_bytes long, frame_hash string")
+FRAME_SCHEMA = _schema(("frame_idx", IntegerType()),
+                       ("frame_offset", LongType()),
+                       ("frame_bytes", LongType()),
+                       ("frame_hash", StringType()))
 
 FRAME_SIZE = 256        # stub "video": fixed-size byte chunks as frames
 FRAME_STRIDE = 4        # sample every 4th frame
 
 
-def sample_frames(df: DataFrame, frame_size: int = FRAME_SIZE,
-                  stride: int = FRAME_STRIDE,
-                  payload_col: str = "payload",
-                  id_col: str = "doc_id") -> DataFrame:
-    """mapInPandas frame-sampling stage (1 row -> N rows).
+def sample_frames(df: DataFrame) -> DataFrame:
+    """Frame-sampling stand-in (1 row -> N rows): the payload is cut into
+    FRAME_SIZE-byte "frames" and every FRAME_STRIDE-th one yields a row
+    with its offset, length and md5. A NULL payload yields one row,
+    frame 0 at offset 0 with null length and hash."""
+    def row(p: bytes | None) -> list[tuple]:
+        if p is None:
+            return [(0, 0, None, None)]
+        b = bytes(p)
+        n_frames = max(1, (len(b) + FRAME_SIZE - 1) // FRAME_SIZE)
+        rows = []
+        for i in range(0, n_frames, FRAME_STRIDE):
+            chunk = b[i * FRAME_SIZE:(i + 1) * FRAME_SIZE]
+            rows.append((i, i * FRAME_SIZE, len(chunk),
+                         hashlib.md5(chunk).hexdigest()))
+        return rows
 
-    Real pipeline: demux video, decode every stride-th frame, emit one row
-    per sampled frame for downstream embedding. Stub: the payload is cut
-    into fixed-size chunks ("frames"); every stride-th chunk yields a row
-    with its offset and hash. The fan-out shape (one input batch producing
-    a larger output batch) is exactly the real stage's.
-    """
-    import hashlib
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, p in zip(pdf[id_col], pdf[payload_col]):
-                if p is None:        # oracle NULL propagation (r8 fuzzer)
-                    rows.append((doc_id, 0, 0, None, None))
-                    continue
-                b = bytes(p)
-                n_frames = max(1, (len(b) + frame_size - 1) // frame_size)
-                for i in range(0, n_frames, stride):
-                    chunk = b[i * frame_size:(i + 1) * frame_size]
-                    rows.append((doc_id, i, i * frame_size, len(chunk),
-                                 hashlib.md5(chunk).hexdigest()))
-            yield pd.DataFrame(rows, columns=["doc_id", "frame_idx",
-                                              "frame_offset", "frame_bytes",
-                                              "frame_hash"])
-
-    from kafka_flink_processing_spark.shipping import ensure_shipped
-    ensure_shipped(df.sparkSession)
-    return df.mapInPandas(batches, FRAME_SCHEMA)
+    return _row_stage(df, FRAME_SCHEMA, "payload", row)
 
 
-# --- Real decode for uncompressed containers (late-r6) ---------------------
+# --- Real decoders ---------------------------------------------------------
 #
-# "No image/audio libs in the container" gates JPEG/PNG/MP3/H.264 — but
-# uncompressed containers need only stdlib struct + numpy: 24-bit BI_RGB
-# BMP and 16-bit PCM WAV are fully decodable here, so for those two the
-# decode stage is REAL (header parse + bulk numpy pixel/sample stats),
-# with matching encoders so tests can round-trip known media bit-exactly.
-# Formats beyond the stdlib (JPEG/MP3/video) are not decoded; decode_media
-# routes them to its null-feature audit bucket.
+# Each decoder parses one container and returns a MEDIA_SCHEMA row as a
+# dict. ValueError means a malformed payload and NotImplementedError a
+# valid one outside the supported formats; struct.error can escape a
+# header read on a short payload. decode_media and audio_zcr_features
+# send all three to the audit bucket.
 
-MEDIA_SCHEMA = ("doc_id long, container string, width int, height int, "
-                "channels int, sample_rate int, n_samples long, "
-                "mean_level double, peak_level double")
+MEDIA_SCHEMA = _schema(("container", StringType()), ("width", IntegerType()),
+                       ("height", IntegerType()), ("channels", IntegerType()),
+                       ("sample_rate", IntegerType()),
+                       ("n_samples", LongType()), ("mean_level", DoubleType()),
+                       ("peak_level", DoubleType()))
+
+_UNDECODABLE = (ValueError, NotImplementedError, struct.error)
+
+
+def _image_row(container: str, w: int, h: int, ch: int,
+               levels: np.ndarray) -> dict:
+    """The row for a decoded image: mean and peak over all channel bytes
+    in `levels`, normalized to [0, 1]. An image without pixels (or with a
+    negative width from a crafted header) is malformed."""
+    if w <= 0 or h <= 0:
+        raise ValueError(f"{container} has no pixels ({w}x{h})")
+    return {"container": container, "width": int(w), "height": int(h),
+            "channels": ch, "sample_rate": None,
+            "n_samples": int(w) * int(h),
+            "mean_level": float(levels.mean()) / 255.0,
+            "peak_level": float(levels.max()) / 255.0}
 
 
 def encode_bmp(pixels) -> bytes:
     """Minimal 24-bit uncompressed BMP writer (BI_RGB, bottom-up rows,
     4-byte row padding). pixels: numpy uint8 array (h, w, 3) in RGB."""
-    import struct
-
-    import numpy as np
-
     arr = np.asarray(pixels, dtype=np.uint8)
     h, w, _ = arr.shape
     row_raw = w * 3
@@ -215,12 +224,8 @@ def encode_bmp(pixels) -> bytes:
 
 
 def decode_bmp(b: bytes) -> dict:
-    """Parse a 24-bit BI_RGB BMP: dimensions + bulk pixel stats (mean and
-    peak over all channel bytes, normalized to [0, 1])."""
-    import struct
-
-    import numpy as np
-
+    """Parse a 24-bit BI_RGB BMP: dimensions + bulk pixel stats. Row order
+    (bottom-up or top-down) and channel order do not change the stats."""
     if len(b) < 54 or b[:2] != b"BM":
         raise ValueError("not a BMP payload")
     pixel_off = struct.unpack_from("<I", b, 10)[0]
@@ -229,28 +234,19 @@ def decode_bmp(b: bytes) -> dict:
     if bpp != 24 or compression != 0:
         raise NotImplementedError(f"BMP bpp={bpp} compression={compression} "
                                   "needs a real codec library")
-    top_down = h < 0
-    h = abs(h)
-    row_raw = w * 3
+    h = abs(h)                              # negative height: top-down rows
+    row_raw = max(w, 0) * 3                 # _image_row rejects w <= 0
     stride = row_raw + ((-row_raw) % 4)
+    if pixel_off + stride * h > len(b):
+        raise ValueError("BMP pixel data truncated")
     rows = np.frombuffer(b, dtype=np.uint8, count=stride * h,
                          offset=pixel_off).reshape(h, stride)[:, :row_raw]
-    px = rows.reshape(h, w, 3)[:, :, ::-1]          # BGR -> RGB
-    if not top_down:
-        px = px[::-1]
-    return {"container": "bmp", "width": w, "height": h, "channels": 3,
-            "sample_rate": None, "n_samples": int(w) * int(h),
-            "mean_level": float(px.mean()) / 255.0,
-            "peak_level": float(px.max()) / 255.0}
+    return _image_row("bmp", w, h, 3, rows)
 
 
 def encode_wav(samples, sample_rate: int = 8000) -> bytes:
     """Minimal 16-bit PCM mono/stereo WAV writer. samples: numpy array of
     int16, shape (n,) or (n, channels)."""
-    import struct
-
-    import numpy as np
-
     arr = np.asarray(samples, dtype=np.int16)
     if arr.ndim == 1:
         arr = arr[:, None]
@@ -264,15 +260,10 @@ def encode_wav(samples, sample_rate: int = 8000) -> bytes:
     return out
 
 
-def _wav_chunks(b: bytes) -> tuple[tuple, bytes, int]:
-    """Shared RIFF chunk walk for every WAV consumer (decode_wav,
-    audio_zcr_features — one parser so hardening fixes can't silently
-    miss a copy, r8 review): returns (fmt_tuple, data_bytes,
-    declared_data_size), raising ValueError on structural corruption.
-    Semantic validation (PCM-ness, channel counts, alignment) stays with
-    each caller."""
-    import struct
-
+def _pcm16(b: bytes) -> tuple[np.ndarray, int, int]:
+    """The one WAV reader: walk the RIFF chunks to fmt/data, validate a
+    16-bit PCM stream and return (interleaved int16 samples, channels,
+    sample rate)."""
     if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
         raise ValueError("not a WAV payload")
     pos, fmt, data, data_sz = 12, None, None, 0
@@ -285,28 +276,25 @@ def _wav_chunks(b: bytes) -> tuple[tuple, bytes, int]:
         pos += 8 + sz + (sz % 2)
     if fmt is None or data is None:
         raise ValueError("WAV missing fmt/data chunk")
-    return fmt, data, data_sz
-
-
-def decode_wav(b: bytes) -> dict:
-    """Parse a 16-bit PCM WAV: walk RIFF chunks to fmt/data, then bulk
-    numpy sample stats (RMS mean_level, |peak| — both in [0, 1])."""
-    import numpy as np
-
-    fmt, data, data_sz = _wav_chunks(b)
     audio_fmt, ch, rate, _br, _ba, bits = fmt
     if audio_fmt != 1 or bits != 16:
         raise NotImplementedError(f"WAV fmt={audio_fmt} bits={bits} needs a "
                                   "real codec library (only 16-bit PCM here)")
-    # A crafted/corrupt fmt chunk must route to the audit bucket, not kill
-    # the job: channels=0 would divide by zero below, and a data chunk
+    # channels=0 would divide by zero in the callers, and a data chunk
     # shorter than its declared size (truncated payload) would silently
-    # under-count samples while reporting a "valid" wav row.
+    # under-count samples in a "valid" row.
     if ch < 1:
         raise ValueError("WAV channels must be >= 1")
     if len(data) != data_sz or len(data) % (ch * 2) != 0:
         raise ValueError("WAV data chunk truncated or misaligned")
-    x = np.frombuffer(data, dtype="<i2").astype(np.float64) / 32768.0
+    return np.frombuffer(data, dtype="<i2"), ch, rate
+
+
+def decode_wav(b: bytes) -> dict:
+    """Parse a 16-bit PCM WAV: bulk numpy sample stats (RMS mean_level,
+    |peak| — both in [0, 1])."""
+    s, ch, rate = _pcm16(b)
+    x = s.astype(np.float64) / 32768.0
     n = len(x) // ch
     return {"container": "wav", "width": None, "height": None,
             "channels": ch, "sample_rate": rate, "n_samples": n,
@@ -316,8 +304,6 @@ def decode_wav(b: bytes) -> dict:
 
 def _paeth(left, up, upleft):
     """PNG Paeth predictor, vectorized over a row (spec: PNG 1.2 §6.6)."""
-    import numpy as np
-
     a = left.astype(np.int16)
     b = up.astype(np.int16)
     c = upleft.astype(np.int16)
@@ -328,19 +314,12 @@ def _paeth(left, up, upleft):
 
 
 def encode_png(pixels, filter_mode: int | str = "cycle") -> bytes:
-    """Minimal REAL PNG writer — zlib is stdlib, so PNG needs no external
-    codec library (the r6 lesson about falsifiable environment gates,
-    applied to the one COMPRESSED container the stdlib can handle).
-    8-bit grayscale (h, w), RGB (h, w, 3) or RGBA (h, w, 4).
+    """Minimal PNG writer (zlib is stdlib): 8-bit grayscale (h, w), RGB
+    (h, w, 3) or RGBA (h, w, 4).
     filter_mode='cycle' filters row r with type r % 5, so a multi-row
     round-trip exercises every PNG filter (None/Sub/Up/Average/Paeth);
     an int 0-4 forces one type. Filter arithmetic is mod-256 (uint8
     wraparound IS the spec's arithmetic)."""
-    import struct
-    import zlib
-
-    import numpy as np
-
     arr = np.asarray(pixels, dtype=np.uint8)
     if arr.ndim == 2:
         arr = arr[:, :, None]
@@ -386,14 +365,8 @@ def decode_png(b: bytes) -> dict:
     RGBA): chunk walk with CRC validation, zlib inflate, per-row
     unfiltering (all five filter types), then bulk numpy pixel stats.
     Truncated chunks, CRC mismatches, and size-inconsistent pixel data
-    raise ValueError so corrupt payloads land in decode_media's audit
-    bucket; 16-bit / palette / interlaced PNGs raise NotImplementedError
-    (honest gate — rarely seen in training corpora, add on demand)."""
-    import struct
-    import zlib
-
-    import numpy as np
-
+    raise ValueError; 16-bit / palette / interlaced PNGs raise
+    NotImplementedError."""
     if len(b) < 8 or b[:8] != b"\x89PNG\r\n\x1a\n":
         raise ValueError("not a PNG payload")
     pos, ihdr, idat = 8, None, bytearray()
@@ -442,15 +415,17 @@ def decode_png(b: bytes) -> dict:
                     rec[lane::ch], dtype=np.uint64) & 0xFF
         elif ft == 2:       # Up
             rec = line + prev
-        elif ft in (3, 4):  # Average / Paeth: left-dependency -> pixel loop
-            if ch == 1:
-                # r12 (guide §4.2): the grayscale lane — every synthetic
-                # corpus image — runs the sequential recurrence on plain
-                # Python ints over lists (~10x less per-step overhead
-                # than one numpy slice per pixel; identical mod-256
-                # arithmetic, identical Paeth tie-breaking)
-                ln, pv = line.tolist(), prev.tolist()
-                rl: list[int] = [0] * stride
+        elif ft in (3, 4):
+            # Average / Paeth: filters are bytewise and the left neighbour
+            # is the same channel one pixel back, so each channel lane is
+            # its own sequential recurrence. It runs on plain Python ints
+            # over lists (~10x less per-step overhead than one numpy
+            # slice per pixel; same mod-256 arithmetic and Paeth
+            # tie-breaking as _paeth).
+            rec = np.empty(stride, dtype=np.uint8)
+            for lane in range(ch):
+                ln, pv = line[lane::ch].tolist(), prev[lane::ch].tolist()
+                rl: list[int] = [0] * w
                 left = 0
                 if ft == 3:
                     for j in range(w):
@@ -469,76 +444,12 @@ def decode_png(b: bytes) -> dict:
                         left = (ln[j] + pred) & 0xFF
                         rl[j] = left
                         upleft = up
-                rec = np.asarray(rl, dtype=np.uint8)
-            else:
-                rec = np.empty(stride, dtype=np.uint8)
-                zero = np.zeros(ch, dtype=np.uint8)
-                for j in range(w):
-                    s = slice(j * ch, (j + 1) * ch)
-                    left = rec[s.start - ch:s.start] if j else zero
-                    up = prev[s]
-                    if ft == 3:
-                        pred = ((left.astype(np.uint16) + up) // 2).astype(
-                            np.uint8)
-                    else:
-                        upleft = prev[s.start - ch:s.start] if j else zero
-                        pred = _paeth(left, up, upleft)
-                    rec[s] = line[s] + pred
+                rec[lane::ch] = rl
         else:
             raise ValueError(f"PNG unknown filter type {ft}")
         out[r] = rec
         prev = rec
-    px = out.reshape(h, w, ch)
-    return {"container": "png", "width": w, "height": h, "channels": ch,
-            "sample_rate": None, "n_samples": int(w) * int(h),
-            "mean_level": float(px.mean()) / 255.0,
-            "peak_level": float(px.max()) / 255.0}
-
-
-PNG_PAD = 32  # deterministic pad byte for text-derived synthetic images
-
-
-def with_png_payload(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
-    """mapInPandas stage synthesizing a REAL zlib-compressed PNG per doc:
-    the text's ascii codes become grayscale pixels (w = 16 + n % 32,
-    h = n // w + 1, padded with PNG_PAD so the last row always exists),
-    written through encode_png with cycling row filters. The pixel
-    content is a pure function of the text, so a DuckDB oracle can
-    recompute the decoded stats without any PNG code — which makes the
-    full compress->inflate->unfilter round-trip hash-gateable."""
-    import numpy as np
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for t in pdf[text_col]:
-                s = "" if t is None else t
-                n = len(s)
-                w = 16 + n % 32
-                h = n // w + 1
-                px = np.full(w * h, PNG_PAD, dtype=np.uint8)
-                # per-CHAR codepoints % 256, NOT utf-8 bytes: the oracle
-                # computes from ascii(c) per character, so multibyte
-                # chars must contribute ONE pixel each (same latent
-                # divergence class as the r8 WAV finding). utf-32-le is
-                # exactly one uint32 codepoint per char, so the encode +
-                # frombuffer path vectorizes ord(c) % 256 (r12, §4.2 —
-                # the per-char generator was the encode stage's hot loop).
-                # surrogatepass keeps lone surrogates encodable like the
-                # old ord(c) path did (unreachable via Arrow-delivered
-                # Spark strings; matters for direct/test callers — r12
-                # advice)
-                px[:n] = np.frombuffer(
-                    s.encode("utf-32-le", "surrogatepass"), dtype="<u4"
-                ).astype(np.uint8)
-                payloads.append(encode_png(px.reshape(h, w)))
-            yield pd.DataFrame({"doc_id": pdf[id_col],
-                                "payload": payloads})
-
-    from kafka_flink_processing_spark.shipping import ensure_shipped
-    ensure_shipped(docs.sparkSession)
-    return docs.mapInPandas(batches, "doc_id long, payload binary")
+    return _image_row("png", w, h, ch, out)
 
 
 def _lzw_encode_gif(data: bytes, min_code: int = 8) -> bytes:
@@ -605,7 +516,11 @@ def _lzw_encode_gif(data: bytes, min_code: int = 8) -> bytes:
 def _lzw_decode_gif(stream: bytes, min_code: int = 8) -> bytes:
     """Inverse of _lzw_encode_gif; also accepts deferred-clear streams
     (entries just stop being added at 4095). Raises ValueError on codes
-    beyond the table (corrupt stream) or a stream ending without EOI."""
+    beyond the table (corrupt stream) or a stream ending without EOI.
+    decode_gif runs _lzw_decode_gif_np; this scalar form is the
+    executable spec that
+    test_gif_lzw_numpy_decoder_matches_scalar_bit_for_bit compares it
+    against, output and error messages alike."""
     clear = 1 << min_code
     eoi = clear + 1
     pos = 0        # bit position
@@ -657,10 +572,9 @@ def _lzw_decode_gif(stream: bytes, min_code: int = 8) -> bytes:
 
 
 def _lzw_decode_gif_np(stream: bytes, min_code: int = 8) -> bytes:
-    """Vectorized `_lzw_decode_gif` (r13, guide §4.2 — the GIF decode
-    stage's remaining Python loop was this bit-walk + table walk; the
-    scalar form pays ~6 interpreter ops per code plus a bytes concat per
-    table entry). Bit-identical output and the same error surface as the
+    """Vectorized `_lzw_decode_gif` (the scalar form pays ~6 interpreter
+    ops per code plus a bytes concat per table entry). Bit-identical
+    output and the same error surface as the
     scalar decoder (pinned by a differential test over round-trip,
     deferred-clear and corrupt streams):
 
@@ -677,8 +591,6 @@ def _lzw_decode_gif_np(stream: bytes, min_code: int = 8) -> bytes:
       still-active string), so total work is O(output bytes) of numpy
       element ops instead of per-byte Python.
     """
-    import numpy as np
-
     clear = 1 << min_code
     eoi = clear + 1
     data = np.frombuffer(stream, dtype=np.uint8)
@@ -800,16 +712,9 @@ def _lzw_decode_gif_np(stream: bytes, min_code: int = 8) -> bytes:
 
 
 def encode_gif(pixels) -> bytes:
-    """Minimal REAL GIF87a writer for 8-bit single-frame grayscale
-    (h, w) arrays: 256-entry grayscale global color table (index i ->
-    (i,i,i)), REAL LZW-compressed pixel data in <=255-byte sub-blocks.
-    LZW is pure bit arithmetic — stdlib-only, the same falsifiable
-    environment-gate lesson as the PNG/zlib codec (r6/r7): 'compressed
-    codecs are gated' keeps narrowing."""
-    import struct
-
-    import numpy as np
-
+    """Minimal GIF87a writer for 8-bit single-frame grayscale (h, w)
+    arrays: 256-entry grayscale global color table (index i ->
+    (i,i,i)), LZW-compressed pixel data in <=255-byte sub-blocks."""
     arr = np.asarray(pixels, dtype=np.uint8)
     if arr.ndim != 2:
         raise ValueError("encode_gif expects a 2-D grayscale array")
@@ -833,16 +738,11 @@ def encode_gif(pixels) -> bytes:
 def decode_gif(b: bytes) -> dict:
     """Parse + fully decode a single-frame non-interlaced GIF87a/89a:
     header walk, global/local color table, 89a extension-block skip,
-    REAL LZW decompression (variable 9-12 bit codes, KwKwK, deferred
-    clear), then bulk numpy stats over the palette-mapped levels (level
-    = palette red channel; grayscale palettes make that the luminance).
-    Truncated structures and corrupt LZW raise ValueError so bad
-    payloads land in decode_media's audit bucket; interlaced images
-    raise NotImplementedError (honest gate)."""
-    import struct
-
-    import numpy as np
-
+    LZW decompression (variable 9-12 bit codes, KwKwK, deferred clear),
+    then bulk numpy stats over the palette-mapped levels (level =
+    palette red channel; grayscale palettes make that the luminance).
+    Truncated structures and corrupt LZW raise ValueError; interlaced
+    images raise NotImplementedError."""
     if len(b) < 13 or b[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF payload")
     _sw, _sh, packed, _bg, _aspect = struct.unpack_from("<HHBBB", b, 6)
@@ -916,169 +816,121 @@ def decode_gif(b: bytes) -> dict:
         raise ValueError("GIF pixel count mismatch")
     if int(idx.max(initial=0)) >= len(palette):
         raise ValueError("GIF pixel index beyond palette")
-    levels = palette[idx, 0]                # red channel = gray level
-    return {"container": "gif", "width": int(w), "height": int(h),
-            "channels": 1, "sample_rate": None,
-            "n_samples": int(w) * int(h),
-            "mean_level": float(levels.mean()) / 255.0,
-            "peak_level": float(levels.max()) / 255.0}
+    return _image_row("gif", w, h, 1, palette[idx, 0])
 
 
-WAV_DC = 80  # text-derived synthetic audio: sample = (ascii - WAV_DC) * 256
+# --- Media synthesized from text -------------------------------------------
+#
+# The testdata holds no media, so the payload stages build it from each
+# document's text: one pixel or sample per character, from its codepoint.
+# The content is a pure function of the text, which lets the oracles in
+# plans/extensions.py recompute the decoded values with no codec at all.
+
+PNG_PAD = 32            # pad byte after the text's pixels
+PNG_LAYOUT = (16, 32)   # (base, span): a text image is base + n % span wide
+GIF_LAYOUT = (8, 24)
+WAV_DC = 80             # sample = (codepoint % 128 - WAV_DC) * 256
+
+PAYLOAD_SCHEMA = _schema(("payload", BinaryType()))
 
 
-def with_wav_payload(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
-    """mapInPandas stage synthesizing a REAL 16-bit PCM WAV per doc: each
-    CHARACTER becomes one mono sample (codepoint % 128 - 80) * 256, so
-    spaces (32) swing negative and letters (97+) positive — a sign-rich
-    waveform whose zero crossings are a pure function of the text. Same
-    text-derived-oracle scheme as the PNG/GIF payload stages. Per-CHAR
-    codepoints (not UTF-8 bytes) with the % 128 fold keep the contract
-    int16-safe and oracle-matchable on non-ASCII text too (DuckDB's
-    ascii(c) is the codepoint; raw bytes would change the sample COUNT
-    on multibyte chars and (byte-80)*256 overflows int16 at 208+ —
-    r8 review)."""
-    import numpy as np
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for t in pdf[text_col]:
-                s = "" if t is None else t
-                # utf-32-le = one uint32 codepoint per char (r12, §4.2:
-                # vectorized ord(c) % 128 — see with_png_payload;
-                # surrogatepass per the r12 advice, same note there)
-                codes = (np.frombuffer(
-                    s.encode("utf-32-le", "surrogatepass"), dtype="<u4")
-                         .astype(np.int32) & 0x7F)
-                samples = ((codes - WAV_DC) * 256).astype(np.int16)
-                payloads.append(encode_wav(samples))
-            yield pd.DataFrame({"doc_id": pdf[id_col],
-                                "payload": payloads})
-
-    from kafka_flink_processing_spark.shipping import ensure_shipped
-    ensure_shipped(docs.sparkSession)
-    return docs.mapInPandas(batches, "doc_id long, payload binary")
+def _codepoints(text: str | None) -> np.ndarray:
+    """One uint32 codepoint per character; NULL text reads as ''.
+    Codepoints, not UTF-8 bytes: the oracles use ascii(c) per character,
+    so a multibyte character must give one pixel or sample. surrogatepass
+    keeps a lone surrogate encodable, as ord(c) would."""
+    s = "" if text is None else text
+    return np.frombuffer(s.encode("utf-32-le", "surrogatepass"), dtype="<u4")
 
 
-def audio_zcr_features(df: DataFrame, payload_col: str = "payload",
-                       id_col: str = "doc_id") -> DataFrame:
-    """mapInPandas REAL-audio feature extraction: parse each 16-bit PCM
-    WAV (RIFF chunk walk, same validation as decode_wav) and reduce the
-    raw integer samples to the classic cheap audio features — length,
-    zero-crossing count (strict sign change, a zero sample breaks no
-    crossing), absolute peak, and the integer energy sum. All-integer
-    outputs so the driver hash is exact; undecodable payloads emit -1
-    counts into the audit bucket instead of killing the job."""
-    import struct
+def _text_image(text: str | None, layout: tuple[int, int]) -> np.ndarray:
+    """The grayscale image for `text`: codepoint % 256 per character in
+    rows of w = base + n % span pixels, h = n // w + 1 rows, padded with
+    PNG_PAD so the last row always exists."""
+    codes = _codepoints(text)
+    n = len(codes)
+    base, span = layout
+    w = base + n % span
+    h = n // w + 1
+    px = np.full(w * h, PNG_PAD, dtype=np.uint8)
+    px[:n] = codes.astype(np.uint8)
+    return px.reshape(h, w)
 
-    import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, p in zip(pdf[id_col], pdf[payload_col]):
-                b = b"" if p is None else bytes(p)
+def with_png_payload(docs: DataFrame) -> DataFrame:
+    """`text` -> a PNG `payload` (PNG_LAYOUT image, row filters cycling
+    through all five types)."""
+    return _row_stage(docs, PAYLOAD_SCHEMA, "text", lambda t: [
+        (encode_png(_text_image(t, PNG_LAYOUT)),)])
+
+
+def with_gif_payload(docs: DataFrame) -> DataFrame:
+    """`text` -> a GIF `payload` (GIF_LAYOUT image, palette indices =
+    pixel values)."""
+    return _row_stage(docs, PAYLOAD_SCHEMA, "text", lambda t: [
+        (encode_gif(_text_image(t, GIF_LAYOUT)),)])
+
+
+def with_wav_payload(docs: DataFrame) -> DataFrame:
+    """`text` -> a mono 16-bit PCM WAV `payload`, one sample per
+    character. Spaces (32) swing negative and letters (97+) positive, so
+    the waveform's zero crossings follow the text; the % 128 fold keeps
+    any codepoint int16-safe."""
+    def row(t: str | None) -> list[tuple]:
+        codes = _codepoints(t).astype(np.int32) & 0x7F
+        return [(encode_wav(((codes - WAV_DC) * 256).astype(np.int16)),)]
+
+    return _row_stage(docs, PAYLOAD_SCHEMA, "text", row)
+
+
+# --- Decode stages -----------------------------------------------------------
+
+ZCR_SCHEMA = _schema(("n_samples", LongType()),
+                     ("zero_crossings", LongType()),
+                     ("abs_peak", LongType()), ("sumsq", LongType()))
+
+
+def audio_zcr_features(df: DataFrame) -> DataFrame:
+    """Mono 16-bit PCM WAV `payload` -> sample count, zero-crossing count
+    (strict sign change: a zero sample breaks no crossing), absolute peak
+    and integer energy sum. All-integer outputs, so the oracle is exact;
+    an undecodable or multi-channel payload gives -1 counts."""
+    def row(p: bytes | None) -> list[tuple]:
+        try:
+            s, ch, _rate = _pcm16(b"" if p is None else bytes(p))
+            if ch != 1:
+                raise ValueError("mono WAV only here")
+        except _UNDECODABLE:
+            return [(-1, -1, -1, -1)]
+        s = s.astype(np.int64)
+        n = len(s)
+        zc = int(np.sum(s[:-1] * s[1:] < 0)) if n > 1 else 0
+        peak = int(np.abs(s).max()) if n else 0
+        return [(n, zc, peak, int((s * s).sum()))]
+
+    return _row_stage(df, ZCR_SCHEMA, "payload", row)
+
+
+_DECODERS = ((b"BM", decode_bmp), (b"RIFF", decode_wav),
+             (b"\x89PNG\r\n\x1a\n", decode_png), (b"GIF87a", decode_gif),
+             (b"GIF89a", decode_gif))
+_MEDIA_FIELDS = MEDIA_SCHEMA.fieldNames()[1:]
+_AUDIT_ROW = ("unknown",) + (None,) * (len(_MEDIA_FIELDS) - 1)
+
+
+def decode_media(df: DataFrame) -> DataFrame:
+    """Real decode stage: sniff each `payload`'s magic bytes and decode it
+    in-executor. A NULL, unrecognized or undecodable payload lands in the
+    audit bucket: container='unknown' with null features."""
+    def row(p: bytes | None) -> list[tuple]:
+        b = b"" if p is None else bytes(p)
+        for magic, decode in _DECODERS:
+            if b.startswith(magic):
                 try:
-                    fmt, data, data_sz = _wav_chunks(b)
-                    audio_fmt, ch, _rate, _br, _ba, bits = fmt
-                    if audio_fmt != 1 or bits != 16 or ch != 1:
-                        raise ValueError("mono 16-bit PCM only here")
-                    if len(data) != data_sz or len(data) % 2 != 0:
-                        raise ValueError("WAV data truncated/misaligned")
-                    s = np.frombuffer(data, dtype="<i2").astype(np.int64)
-                    n = len(s)
-                    zc = int(np.sum(s[:-1] * s[1:] < 0)) if n > 1 else 0
-                    peak = int(np.abs(s).max()) if n else 0
-                    sumsq = int((s * s).sum())
-                    rows.append((doc_id, n, zc, peak, sumsq))
-                except (ValueError, struct.error):
-                    rows.append((doc_id, -1, -1, -1, -1))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "n_samples", "zero_crossings", "abs_peak",
-                "sumsq"])
+                    d = decode(b)
+                except _UNDECODABLE:
+                    break
+                return [tuple(d[k] for k in _MEDIA_FIELDS)]
+        return [_AUDIT_ROW]
 
-    from kafka_flink_processing_spark.shipping import ensure_shipped
-    ensure_shipped(df.sparkSession)
-    return df.mapInPandas(batches, "doc_id long, n_samples long, "
-                                   "zero_crossings long, abs_peak long, "
-                                   "sumsq long")
-
-
-def with_gif_payload(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
-    """mapInPandas stage synthesizing a REAL LZW-compressed GIF per doc:
-    the text's ascii codes become palette indices (w = 8 + n % 24,
-    h = n // w + 1, padded with PNG_PAD), written through encode_gif.
-    Like with_png_payload, the pixel content is a pure function of the
-    text, so the oracle recomputes decoded stats without touching a GIF
-    byte — hash equality certifies the whole LZW round-trip."""
-    import numpy as np
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for t in pdf[text_col]:
-                s = "" if t is None else t
-                n = len(s)
-                w = 8 + n % 24
-                h = n // w + 1
-                px = np.full(w * h, PNG_PAD, dtype=np.uint8)
-                # per-CHAR codepoints % 256, vectorized through the
-                # utf-32-le view — see with_png_payload (r12, §4.2;
-                # surrogatepass per the r12 advice, same note there)
-                px[:n] = np.frombuffer(
-                    s.encode("utf-32-le", "surrogatepass"), dtype="<u4"
-                ).astype(np.uint8)
-                payloads.append(encode_gif(px.reshape(h, w)))
-            yield pd.DataFrame({"doc_id": pdf[id_col],
-                                "payload": payloads})
-
-    from kafka_flink_processing_spark.shipping import ensure_shipped
-    ensure_shipped(docs.sparkSession)
-    return docs.mapInPandas(batches, "doc_id long, payload binary")
-
-
-def decode_media(df: DataFrame, payload_col: str = "payload",
-                 id_col: str = "doc_id") -> DataFrame:
-    """mapInPandas REAL-decode stage: sniff each payload's magic bytes and
-    decode uncompressed BMP/WAV in-executor (numpy bulk stats); anything
-    else emits container='unknown' with null features instead of raising —
-    at corpus scale a malformed or compressed payload must not kill the
-    job, it must land in the audit bucket (filter container='unknown')."""
-    from struct import error as struct_error
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, p in zip(pdf[id_col], pdf[payload_col]):
-                # NULL payload (outer join, absent message body) routes to
-                # the audit bucket like any other undecodable row
-                b = b"" if p is None else bytes(p)
-                try:
-                    if b[:2] == b"BM":
-                        d = decode_bmp(b)
-                    elif b[:4] == b"RIFF":
-                        d = decode_wav(b)
-                    elif b[:8] == b"\x89PNG\r\n\x1a\n":
-                        d = decode_png(b)
-                    elif b[:6] in (b"GIF87a", b"GIF89a"):
-                        d = decode_gif(b)
-                    else:
-                        raise ValueError("unknown container")
-                except (ValueError, NotImplementedError, struct_error):
-                    d = {"container": "unknown", "width": None,
-                         "height": None, "channels": None,
-                         "sample_rate": None, "n_samples": None,
-                         "mean_level": None, "peak_level": None}
-                rows.append((doc_id, d["container"], d["width"], d["height"],
-                             d["channels"], d["sample_rate"], d["n_samples"],
-                             d["mean_level"], d["peak_level"]))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "container", "width", "height", "channels",
-                "sample_rate", "n_samples", "mean_level", "peak_level"])
-
-    from kafka_flink_processing_spark.shipping import ensure_shipped
-    ensure_shipped(df.sparkSession)
-    return df.mapInPandas(batches, MEDIA_SCHEMA)
+    return _row_stage(df, MEDIA_SCHEMA, "payload", row)

@@ -35,6 +35,20 @@ from kafka_flink_processing_spark.functions.text import (
     token_count,
     word_count,
 )
+from kafka_flink_processing_spark.functions.multimodal import (
+    GIF_LAYOUT,
+    PNG_LAYOUT,
+    PNG_PAD,
+    audio_zcr_features,
+    decode_features,
+    decode_media,
+    resize_features,
+    sample_frames,
+    with_gif_payload,
+    with_payload,
+    with_png_payload,
+    with_wav_payload,
+)
 from kafka_flink_processing_spark.operators.dedup import (
     BLOOM_K,
     BLOOM_M_BITS,
@@ -1304,6 +1318,41 @@ def multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _text_image_oracle(container: str, layout: tuple[int, int]) -> str:
+    """Oracle for decode_media over a text-derived image payload
+    (with_png_payload / with_gif_payload): the pixels are each
+    character's codepoint % 256 in rows of `base + n % span`, padded with
+    PNG_PAD, so DuckDB recomputes the DECODED stats from the text alone
+    and a hash match certifies the whole encode -> decode round trip
+    without the oracle touching an image byte. The mean is exact:
+    integer-valued float64 sums below 2^53 are order-independent."""
+    base, span = layout
+    return f"""
+    WITH b AS (
+      SELECT doc_id, CAST(length(COALESCE(text, '')) AS BIGINT) AS n,
+             list_transform(string_split(COALESCE(text, ''), ''),
+                            c -> CAST(ascii(c) AS BIGINT) % 256) AS codes
+      FROM documents
+    ), d AS (
+      SELECT doc_id, n, codes,
+             CAST({base} + n % {span} AS BIGINT) AS w,
+             (n // ({base} + n % {span})) + 1 AS h
+      FROM b
+    )
+    SELECT doc_id, '{container}' AS container,
+           CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
+           CAST(1 AS INTEGER) AS channels,
+           CAST(NULL AS INTEGER) AS sample_rate,
+           w * h AS n_samples,
+           (CAST(COALESCE(list_sum(codes), 0)
+                 + (w * h - n) * {PNG_PAD} AS DOUBLE) / (w * h)) / 255.0
+             AS mean_level,
+           CAST(GREATEST(COALESCE(list_max(codes), 0), {PNG_PAD}) AS DOUBLE)
+             / 255.0 AS peak_level
+    FROM d
+    """
+
+
 @register(
     "multimodal_decode_features",
     # The stub decode is deterministic byte arithmetic over the UTF-8
@@ -1333,46 +1382,13 @@ def multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         "hash-checks this stage end-to-end despite the stubbed codec.",
 )
 def multimodal_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.functions.multimodal import (
-        decode_features,
-        with_payload,
-    )
     docs = with_payload(load_table(spark, "documents", sf_dir))
     return decode_features(docs)
 
 
 @register(
     "multimodal_png_decode",
-    # The PNG pixels are a pure function of the text (ascii codes + pad),
-    # so the oracle recomputes the DECODED stats from text alone — hash
-    # equality certifies the whole zlib deflate -> inflate -> unfilter
-    # round-trip (all five PNG filters cycle across rows) without DuckDB
-    # touching a single PNG byte. px.mean() is exact here: integer-valued
-    # float64 sums below 2^53 are order-independent.
-    oracle="""
-    WITH b AS (
-      SELECT doc_id, CAST(length(COALESCE(text, '')) AS BIGINT) AS n,
-             list_transform(string_split(COALESCE(text, ''), ''),
-                            c -> CAST(ascii(c) AS BIGINT) % 256) AS codes
-      FROM documents
-    ), d AS (
-      SELECT doc_id, n, codes,
-             CAST(16 + n % 32 AS BIGINT) AS w,
-             (n // (16 + n % 32)) + 1 AS h
-      FROM b
-    )
-    SELECT doc_id, 'png' AS container,
-           CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-           CAST(1 AS INTEGER) AS channels,
-           CAST(NULL AS INTEGER) AS sample_rate,
-           w * h AS n_samples,
-           (CAST(COALESCE(list_sum(codes), 0)
-                 + (w * h - n) * 32 AS DOUBLE) / (w * h)) / 255.0
-             AS mean_level,
-           CAST(GREATEST(COALESCE(list_max(codes), 0), 32) AS DOUBLE)
-             / 255.0 AS peak_level
-    FROM d
-    """,
+    oracle=_text_image_oracle("png", PNG_LAYOUT),
     doc="REAL compressed-codec round-trip at corpus scale (r7 env-gate "
         "audit: zlib is stdlib, so PNG needs no codec library): each "
         "doc's text becomes a grayscale PNG (encode_png, row filters "
@@ -1386,10 +1402,6 @@ def multimodal_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,  # joined the headline r8: first-round floor rule (BASELINE.md)
 )
 def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.functions.multimodal import (
-        decode_media,
-        with_png_payload,
-    )
     docs = with_png_payload(load_table(spark, "documents", sf_dir))
     return decode_media(docs)
 
@@ -1428,10 +1440,6 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         "byte selection + md5 — exactly reproduced by the SQL oracle.",
 )
 def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.functions.multimodal import (
-        resize_features,
-        with_payload,
-    )
     docs = with_payload(load_table(spark, "documents", sf_dir))
     return resize_features(docs)
 
@@ -1464,10 +1472,6 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "byte slicing + md5 — exactly reproduced by the SQL oracle.",
 )
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.functions.multimodal import (
-        sample_frames,
-        with_payload,
-    )
     docs = with_payload(load_table(spark, "documents", sf_dir))
     return sample_frames(docs)
 
@@ -3092,37 +3096,7 @@ def curriculum_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_gif_decode",
-    # Same text-derived-oracle trick as multimodal_png_decode: the GIF
-    # palette indices are a pure function of the text (ascii codes +
-    # pad 32, w = 8 + n % 24), and the palette is the grayscale
-    # identity, so DuckDB recomputes the DECODED stats from text alone —
-    # hash equality certifies the whole LZW compress -> decompress
-    # round-trip (variable 9-12 bit codes, KwKwK, table resets) without
-    # the oracle touching a GIF byte.
-    oracle="""
-    WITH b AS (
-      SELECT doc_id, CAST(length(COALESCE(text, '')) AS BIGINT) AS n,
-             list_transform(string_split(COALESCE(text, ''), ''),
-                            c -> CAST(ascii(c) AS BIGINT) % 256) AS codes
-      FROM documents
-    ), d AS (
-      SELECT doc_id, n, codes,
-             CAST(8 + n % 24 AS BIGINT) AS w,
-             (n // (8 + n % 24)) + 1 AS h
-      FROM b
-    )
-    SELECT doc_id, 'gif' AS container,
-           CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-           CAST(1 AS INTEGER) AS channels,
-           CAST(NULL AS INTEGER) AS sample_rate,
-           w * h AS n_samples,
-           (CAST(COALESCE(list_sum(codes), 0)
-                 + (w * h - n) * 32 AS DOUBLE) / (w * h)) / 255.0
-             AS mean_level,
-           CAST(GREATEST(COALESCE(list_max(codes), 0), 32) AS DOUBLE)
-             / 255.0 AS peak_level
-    FROM d
-    """,
+    oracle=_text_image_oracle("gif", GIF_LAYOUT),
     doc="Second REAL compressed-codec round-trip (after PNG/zlib, r7): "
         "GIF's LZW is pure bit arithmetic, so it needs no codec library "
         "either — the 'compressed codecs are env-gated' bin keeps "
@@ -3141,10 +3115,6 @@ def curriculum_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,  # joined the headline r8: first-round floor rule (BASELINE.md)
 )
 def multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.functions.multimodal import (
-        decode_media,
-        with_gif_payload,
-    )
     docs = with_gif_payload(load_table(spark, "documents", sf_dir))
     return decode_media(docs)
 
@@ -3195,10 +3165,6 @@ def multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,  # joined the headline r8: first-round floor rule (BASELINE.md)
 )
 def audio_zcr_features_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.functions.multimodal import (
-        audio_zcr_features,
-        with_wav_payload,
-    )
     docs = with_wav_payload(load_table(spark, "documents", sf_dir))
     return audio_zcr_features(docs)
 

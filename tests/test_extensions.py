@@ -149,7 +149,7 @@ def test_multimodal_resize_shapes(spark):
         resize_features,
     )
     docs = with_payload(load_table(spark, "documents", SF))
-    out = resize_features(docs, target_w=64, target_h=64)
+    out = resize_features(docs)
     rows = out.collect()
     assert len(rows) == docs.count()          # 1 -> 1 stage
     for r in rows[:20]:

@@ -137,6 +137,7 @@ def test_png_crc_mismatch_routes_to_audit_bucket():
         decode_png(bytes(ok))
 
 
+@pytest.mark.filterwarnings("error::RuntimeWarning")
 def test_png_truncated_routes_to_audit_bucket():
     # cut mid-IDAT: either the chunk reads short or IDAT never completes —
     # both must raise ValueError (losing only IEND's tail is harmless by
@@ -144,6 +145,11 @@ def test_png_truncated_routes_to_audit_bucket():
     ok = encode_png(np.full((9, 9), 100, dtype=np.uint8))
     with pytest.raises(ValueError):
         decode_png(ok[:len(ok) // 2])
+    # a zero-width or zero-height image has no pixels to take stats over:
+    # ValueError before numpy's empty-mean warning
+    for shape in [(0, 5), (4, 0)]:
+        with pytest.raises(ValueError, match="no pixels"):
+            decode_png(encode_png(np.zeros(shape, dtype=np.uint8)))
 
 
 def test_png_exotic_formats_still_gated():
@@ -160,6 +166,22 @@ def test_png_exotic_formats_still_gated():
         decode_png(b"\x89PNG\r\n\x1a\n" + chunk + idat)
 
 
+@pytest.mark.filterwarnings("error::RuntimeWarning")
+def test_bmp_crafted_dims_route_to_audit_bucket():
+    import struct
+    ok = encode_bmp(np.arange(18, dtype=np.uint8).reshape(2, 3, 3))
+    for w, h in [(-3, 2), (0, 2), (3, 0)]:   # no pixels: not a valid row
+        bad = bytearray(ok)
+        struct.pack_into("<ii", bad, 18, w, h)
+        with pytest.raises(ValueError, match="no pixels"):
+            decode_bmp(bytes(bad))
+    # dims whose pixel array outgrows the payload (and a C ssize_t)
+    bad = bytearray(ok)
+    struct.pack_into("<ii", bad, 18, 2**31 - 1, 2**31 - 1)
+    with pytest.raises(ValueError, match="truncated"):
+        decode_bmp(bytes(bad))
+
+
 def test_compressed_formats_still_gated():
     with pytest.raises(NotImplementedError):
         # 8-bit palette BMP header: honest boundary, not silent garbage
@@ -170,15 +192,29 @@ def test_compressed_formats_still_gated():
         decode_bmp(hdr + b"\x00" * 64)
 
 
+def non_pcm_wav() -> bytes:
+    """A well-formed WAV whose fmt chunk says IEEE float (audio_fmt=3):
+    valid RIFF, unsupported sample format."""
+    bad = bytearray(encode_wav(np.full(8, 100, dtype=np.int16)))
+    assert bad[12:16] == b"fmt "
+    bad[20:22] = (3).to_bytes(2, "little")
+    return bytes(bad)
+
+
 def test_decode_media_mixed_frame(spark):
+    import struct
     px = np.arange(27, dtype=np.uint8).reshape(3, 3, 3)
     wav = encode_wav(np.full(64, 8192, dtype=np.int16), 16000)
     png_px = np.arange(64, dtype=np.uint8).reshape(8, 8)
+    huge_bmp = bytearray(encode_bmp(px))
+    struct.pack_into("<ii", huge_bmp, 18, 2**31 - 1, 2**31 - 1)
     rows = [(1, bytearray(encode_bmp(px))),
             (2, bytearray(wav)),
             (3, bytearray(b"\xff\xd8\xff\xe0 not decodable here")),
             (4, None),  # NULL payload must audit-bucket, not crash (r6 rev)
-            (5, bytearray(encode_png(png_px)))]
+            (5, bytearray(encode_png(png_px))),
+            (6, bytearray(non_pcm_wav())),
+            (7, huge_bmp)]
     df = spark.createDataFrame(rows, "doc_id long, payload binary")
     out = {r["doc_id"]: r.asDict()
            for r in decode_media(df.repartition(3)).collect()}
@@ -194,7 +230,7 @@ def test_decode_media_mixed_frame(spark):
     assert out[2]["mean_level"] == pytest.approx(8192 / 32768.0, abs=1e-12)
     # junk and NULL payloads land in the audit bucket with null features,
     # the job survives
-    for bad in (3, 4):
+    for bad in (3, 4, 6, 7):
         assert out[bad]["container"] == "unknown"
         assert out[bad]["mean_level"] is None and out[bad]["width"] is None
 
@@ -395,6 +431,7 @@ def test_gif_roundtrip_stats_exact():
         assert d["peak_level"] == px.max() / 255.0
 
 
+@pytest.mark.filterwarnings("error::RuntimeWarning")
 def test_gif_crafted_payloads_route_to_audit_bucket():
     _, _, enc, dec = _gif_imports()
     good = enc(np.arange(64, dtype=np.uint8).reshape(8, 8))
@@ -405,6 +442,8 @@ def test_gif_crafted_payloads_route_to_audit_bucket():
         b"GIF87a" + b"\x00" * 7,         # no color table, no image
         good[:10] + b"\x00" + good[11:],  # clear GCT flag: palette bytes
                                           # then misparse as blocks
+        enc(np.zeros((0, 5), dtype=np.uint8)),   # no pixels
+        enc(np.zeros((4, 0), dtype=np.uint8)),
     ]:
         with pytest.raises(ValueError):
             dec(bad)
@@ -480,10 +519,24 @@ def test_audio_zcr_corrupt_payloads_route_to_audit_bucket(spark):
             (1, bytearray(good[:-1])),       # truncated data chunk
             (2, bytearray(b"junk")),         # not RIFF
             (3, None),                       # NULL payload
-            (4, bytearray(stereo))]          # stereo: mono-only path
+            (4, bytearray(stereo)),          # stereo: mono-only path
+            (5, bytearray(non_pcm_wav()))]   # NotImplementedError path
     df = spark.createDataFrame(rows, "doc_id long, payload binary")
     got = {r.doc_id: r.n_samples for r in audio_zcr_features(df).collect()}
-    assert got == {0: -1, 1: -1, 2: -1, 3: -1, 4: -1}
+    assert got == {0: -1, 1: -1, 2: -1, 3: -1, 4: -1, 5: -1}
+
+
+@pytest.mark.parametrize("stage, want", [
+    ("decode_features",
+     (7, "application/octet-stream", None, None, None, None, None)),
+    ("resize_features", (7, 64, 64, None, None, None, None)),
+    ("sample_frames", (7, 0, 0, None, None)),
+])
+def test_stand_in_stages_null_payload_row(spark, stage, want):
+    from kafka_flink_processing_spark.functions import multimodal
+    df = spark.createDataFrame([(7, None)], "doc_id long, payload binary")
+    assert [tuple(r) for r in getattr(multimodal, stage)(df).collect()] \
+        == [want]
 
 
 def test_audio_zcr_zero_sample_breaks_no_crossing(spark):
