@@ -77,7 +77,7 @@ def _row_stage(df: DataFrame, schema: StructType, col: str,
 
     from kafka_flink_processing_spark.shipping import ensure_shipped
     ensure_shipped(df.sparkSession)
-    return df.mapInPandas(batches, schema)
+    return df.select("doc_id", col).mapInPandas(batches, schema)
 
 
 # --- Codec stand-ins over raw bytes ----------------------------------------
@@ -88,14 +88,20 @@ DECODE_SCHEMA = _schema(("mime", StringType()), ("n_bytes", LongType()),
                         ("entropy_bucket", IntegerType()))
 
 
+# _fake_features' stand-in dims: width = base + n % span and
+# height = base + n // span % span for an n-byte payload
+FAKE_BASE, FAKE_SPAN = 16, 64
+ENTROPY_BUCKET = 32     # distinct byte values per entropy bucket
+
+
 def _fake_features(payload: bytes) -> tuple[int, int, float, int]:
     """Deterministic pseudo-decode: byte-statistics standing in for
     width/height/pixel stats so the pipeline shape is exercised end-to-end."""
     n = len(payload)
-    width = 16 + (n % 64)
-    height = 16 + ((n // 64) % 64)
+    width = FAKE_BASE + (n % FAKE_SPAN)
+    height = FAKE_BASE + ((n // FAKE_SPAN) % FAKE_SPAN)
     mean_byte = (sum(payload) / n) if n else 0.0
-    entropy_bucket = len(set(payload)) // 32
+    entropy_bucket = len(set(payload)) // ENTROPY_BUCKET
     return width, height, mean_byte, entropy_bucket
 
 

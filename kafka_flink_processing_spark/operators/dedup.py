@@ -30,8 +30,6 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -41,49 +39,18 @@ from kafka_flink_processing_spark.functions.constants import (
     N_BANDS,
     SIMHASH_BITS,
 )
-from kafka_flink_processing_spark.functions.text import md5_hash60
-
-
-def normalize_text(col):
-    # NULL text ≡ empty text, the corpus-wide convention (r8 fuzzer):
-    # every oracle twin coalesces identically
-    return F.trim(F.regexp_replace(F.lower(F.coalesce(col, F.lit(""))),
-                                   " +", " "))
-
-
-def _shingle_udf(n: int):
-    """Distinct word n-grams as an Arrow-batched pandas UDF.
-
-    The declarative form (functions.text.shingles: split + sequence +
-    transform(concat_ws) + array_distinct) is semantically identical but
-    runs interpreted — Spark's higher-order array lambdas are NOT part of
-    whole-stage codegen. Measured at sf0.1 (5000 docs): 3.4s built-in vs
-    0.5s warm pandas UDF, so this is one of the cases where the Arrow path
-    beats the "built-in" path. First-occurrence order matches
-    array_distinct; the DuckDB oracle's list_distinct comprehension matches
-    both (order never affects downstream set arithmetic)."""
-
-    @F.pandas_udf("array<string>")
-    def f(s: pd.Series) -> pd.Series:
-        def grams(text: str | None) -> list[str]:
-            if text is None:     # NULL text ≡ empty text (no shingles)
-                return []
-            ws = text.split(" ")
-            if len(ws) < n:
-                return []
-            return list(dict.fromkeys(
-                " ".join(ws[i:i + n]) for i in range(len(ws) - n + 1)))
-        return s.map(grams)
-
-    return f
+from kafka_flink_processing_spark.functions.text import (
+    md5_hash60,
+    text_hash,
+    word_grams,
+)
 
 
 def exact_dedup(docs: DataFrame) -> DataFrame:
     """Exact duplicate groups over normalized text: (text_hash, n_docs,
     canonical_id = min id). Works at any scale: shuffle on the 128-bit hash,
     never on the text itself."""
-    norm = normalize_text(F.col("text"))
-    return (docs.select(F.col("doc_id"), F.md5(norm).alias("text_hash"))
+    return (docs.select("doc_id", text_hash(F.col("text")).alias("text_hash"))
                 .groupBy("text_hash")
                 .agg(F.count("*").alias("n_docs"),
                      F.min("doc_id").alias("canonical_id")))
@@ -170,7 +137,7 @@ def shingle_table(docs: DataFrame, n: int) -> DataFrame:
     from kafka_flink_processing_spark.shipping import ensure_shipped
     ensure_shipped(docs.sparkSession)
     return docs.select(F.col("doc_id"),
-                       _shingle_udf(n)(F.col("text")).alias("sh"))
+                       word_grams(F.col("text"), n).alias("sh"))
 
 
 def _doc_shingles(docs: DataFrame, n: int) -> DataFrame:
@@ -878,7 +845,7 @@ def bloom_screen(ds: DataFrame, bloom: DataFrame) -> DataFrame:
     gone. Replaced plan (r11): explode x k positions -> broadcast hash
     join on word_idx -> (doc_id, sh) exchange + count==k -> doc_id
     exchange -> sort-merge join against a per-doc sizes scan. Grams are
-    distinct per doc (_shingle_udf), so counting passing gram rows per
+    distinct per doc (word_grams), so counting passing gram rows per
     doc is exactly the old count of all-bits-set grams."""
     # positions are projected on the stream side BEFORE the dense attach:
     # the filter then enters the BNLJ condition as plain _p column

@@ -15,7 +15,7 @@ Iteration shape (what survives a 100 TB corpus):
   re-partitioned.
 - assignment distances run in numpy over Arrow batches (pandas UDF), not
   per-row Python and not interpreted higher-order array lambdas (see
-  operators/dedup.py::_shingle_udf for the measurement that motivates this).
+  functions/text.py::word_grams for the measurement that motivates this).
 
 Determinism: init = the k lowest-id vectors (no RNG); ties in argmin break
 toward the lowest cell id (numpy argmin semantics). Centroid means are

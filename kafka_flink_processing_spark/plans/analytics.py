@@ -31,19 +31,28 @@ from pyspark.sql import types as T
 from kafka_flink_processing_spark.functions.constants import N_MINHASH
 from kafka_flink_processing_spark.functions.exact import dsum, dsum_sql
 from kafka_flink_processing_spark.functions.text import (
-    TOKEN_REGEX,
+    LANG_ID_SQL,
+    LANG_SCORES_SQL,
+    QUALITY_SQL,
+    TEXT_HASH_SQL,
+    TOKEN_COUNT_SQL,
+    TOKENS_SQL,
+    lang_id,
+    md5_hash60,
+    md5_hash60_sql,
     quality_score,
-    shingles,
+    text_hash,
+    tokens,
+    word_grams,
+    word_grams_sql,
 )
 from kafka_flink_processing_spark.plans.extensions import (
-    _codebook_values_sql,
-    _COSINE_BASE_SQL,
-    _DOT,
-    _H60,
-    _minhash_bands_sql,
-    _minhash_sig_sql,
-    _QUALITY_SQL,
-    _SHINGLES3,
+    COSINE_BASE_SQL,
+    DOT_SQL,
+    codebook_values_sql,
+    minhash_bands_sql,
+    minhash_sig_sql,
+    shingles_cte,
 )
 from kafka_flink_processing_spark.plans.registry import register
 from kafka_flink_processing_spark.sources.parquet import load_table
@@ -60,9 +69,9 @@ _EST_TERMS = " + ".join(
 @register(
     "minhash_jaccard_accuracy",
     oracle=f"""
-    {_SHINGLES3},
-    {_minhash_sig_sql()},
-    bands AS ({_minhash_bands_sql()}),
+    {shingles_cte(3)},
+    {minhash_sig_sql()},
+    bands AS ({minhash_bands_sql()}),
     cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
              FROM bands a JOIN bands b
                ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
@@ -126,18 +135,18 @@ from kafka_flink_processing_spark.operators.similarity import IVF_NPROBE  # noqa
 @register(
     "ivf_recall_eval",
     oracle=f"""
-    WITH {_COSINE_BASE_SQL},
-    cent AS ({_codebook_values_sql()}),
+    WITH {COSINE_BASE_SQL},
+    cent AS ({codebook_values_sql()}),
     bf AS (SELECT query_id, cand_id FROM (
         SELECT q.query_id, c.vec_id AS cand_id,
                ROW_NUMBER() OVER (PARTITION BY q.query_id
-                 ORDER BY {_DOT.format(a='q.qv', b='c.embedding')}
+                 ORDER BY {DOT_SQL.format(a='q.qv', b='c.embedding')}
                             / (q.qn * c.nrm) DESC, c.vec_id) AS rank
         FROM (SELECT vec_id AS query_id, embedding AS qv, nrm AS qn
               FROM n WHERE vec_id < 5) q
         JOIN n c ON c.vec_id != q.query_id) WHERE rank <= 10),
     asgj AS (SELECT v.vec_id, v.embedding, v.nrm, c.cid,
-                    {_DOT.format(a='v.embedding', b='c.cv')} / (v.nrm * c.cn)
+                    {DOT_SQL.format(a='v.embedding', b='c.cv')} / (v.nrm * c.cn)
                       AS cos
              FROM n v CROSS JOIN cent c),
     asg AS (SELECT vec_id, embedding, nrm, CAST(cid AS BIGINT) AS cell FROM (
@@ -154,7 +163,7 @@ from kafka_flink_processing_spark.operators.similarity import IVF_NPROBE  # noqa
                ROW_NUMBER() OVER (PARTITION BY query_id
                  ORDER BY cosine DESC, cand_id) AS rank
         FROM (SELECT DISTINCT p.query_id, a.vec_id AS cand_id,
-                     {_DOT.format(a='p.qv', b='a.embedding')} / (p.qn * a.nrm)
+                     {DOT_SQL.format(a='p.qv', b='a.embedding')} / (p.qn * a.nrm)
                        AS cosine
               FROM probes p JOIN asg a
                 ON a.cell = p.cell AND a.vec_id != p.query_id))
@@ -201,9 +210,9 @@ def ivf_recall_eval_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "lsh_threshold_sweep",
     oracle=f"""
-    {_SHINGLES3},
-    {_minhash_sig_sql()},
-    bands AS ({_minhash_bands_sql()}),
+    {shingles_cte(3)},
+    {minhash_sig_sql()},
+    bands AS ({minhash_bands_sql()}),
     cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
              FROM bands a JOIN bands b
                ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
@@ -259,11 +268,11 @@ def lsh_threshold_sweep_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "semantic_mix_matrix",
     oracle=f"""
-    WITH {_COSINE_BASE_SQL},
+    WITH {COSINE_BASE_SQL},
     lab AS (SELECT vec_id, CAST(label AS BIGINT) AS label FROM embeddings),
-    cent AS ({_codebook_values_sql()}),
+    cent AS ({codebook_values_sql()}),
     asgj AS (SELECT v.vec_id, c.cid,
-                    {_DOT.format(a='v.embedding', b='c.cv')} / (v.nrm * c.cn)
+                    {DOT_SQL.format(a='v.embedding', b='c.cv')} / (v.nrm * c.cn)
                       AS cos
              FROM n v CROSS JOIN cent c),
     asg AS (SELECT vec_id, CAST(cid AS BIGINT) AS cell FROM (
@@ -343,9 +352,7 @@ def ngram_freq_top_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "token_length_histogram",
     oracle=f"""
-    WITH tok AS (SELECT unnest(regexp_extract_all(lower(text),
-                                                  '{TOKEN_REGEX}')) AS t
-                 FROM documents),
+    WITH tok AS (SELECT unnest({TOKENS_SQL}) AS t FROM documents),
     h AS (SELECT CAST(LEAST(length(t), 20) AS BIGINT) AS tok_len,
                  CAST(COUNT(*) AS BIGINT) AS n_tokens
           FROM tok GROUP BY 1)
@@ -362,9 +369,7 @@ def ngram_freq_top_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def token_length_histogram_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
-    toks = docs.select(F.explode(
-        F.regexp_extract_all(F.lower(F.col("text")), F.lit(TOKEN_REGEX), 0))
-        .alias("t"))
+    toks = docs.select(F.explode(tokens(F.col("text"))).alias("t"))
     h = (toks.groupBy(F.least(F.length("t"), F.lit(20)).cast("long")
                       .alias("tok_len"))
          .agg(F.count("*").alias("n_tokens")))
@@ -376,16 +381,10 @@ def token_length_histogram_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "source_overlap_matrix",
-    oracle="""
+    oracle=f"""
     WITH t AS (SELECT source, string_split(text, ' ') AS words
                FROM documents),
-    ds AS (SELECT source,
-             CASE WHEN len(words) < 3 THEN []
-                  ELSE list_distinct([words[i] || ' ' || words[i+1] || ' ' ||
-                                      words[i+2]
-                                      for i in range(1, len(words)-1)])
-             END AS sh
-           FROM t),
+    ds AS (SELECT source, {word_grams_sql(3)} AS sh FROM t),
     gs AS (SELECT DISTINCT source, unnest(sh) AS sh FROM ds)
     SELECT a.source AS source_a, b.source AS source_b,
            CAST(COUNT(*) AS BIGINT) AS n_shared_grams
@@ -402,9 +401,11 @@ def token_length_histogram_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "is what keeps the gram-keyed self-join safe at 100 TB.",
 )
 def source_overlap_matrix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from kafka_flink_processing_spark.shipping import ensure_shipped
+    ensure_shipped(spark)
     docs = load_table(spark, "documents", sf_dir)
     gs = (docs.select("source",
-                      F.explode(shingles(F.col("text"), 3)).alias("sh"))
+                      F.explode(word_grams(F.col("text"), 3)).alias("sh"))
           .distinct())
     a = gs.select(F.col("source").alias("source_a"), "sh")
     b = gs.select(F.col("source").alias("source_b"), "sh")
@@ -418,10 +419,8 @@ def source_overlap_matrix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_keep_best",
     oracle=f"""
     WITH scored AS (
-      SELECT doc_id,
-             md5(trim(regexp_replace(lower(COALESCE(text, '')), ' +', ' ', 'g')))
-               AS text_hash,
-             {_QUALITY_SQL} AS quality
+      SELECT doc_id, {TEXT_HASH_SQL} AS text_hash,
+             {QUALITY_SQL} AS quality
       FROM documents
     )
     SELECT doc_id, text_hash, quality,
@@ -439,11 +438,10 @@ def source_overlap_matrix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cross-engine ranking is exact.",
 )
 def dedup_keep_best_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.operators.dedup import normalize_text
     docs = load_table(spark, "documents", sf_dir)
     scored = docs.select(
         "doc_id",
-        F.md5(normalize_text(F.col("text"))).alias("text_hash"),
+        text_hash(F.col("text")).alias("text_hash"),
         quality_score(F.col("text")).alias("quality"))
     w = Window.partitionBy("text_hash").orderBy(F.col("quality").desc(),
                                                 "doc_id")
@@ -457,9 +455,7 @@ from kafka_flink_processing_spark.operators.packing import DEFAULT_BUDGET  # noq
     "packing_efficiency",
     oracle=f"""
     WITH toks AS (
-      SELECT source, doc_id,
-             CAST(len(regexp_extract_all(lower(text), '{TOKEN_REGEX}'))
-                  AS BIGINT) AS n_tokens
+      SELECT source, doc_id, {TOKEN_COUNT_SQL} AS n_tokens
       FROM documents
     ), packed AS (
       SELECT source, n_tokens,
@@ -512,7 +508,7 @@ def packing_efficiency_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "embedding_norm_stats",
     oracle=f"""
     WITH n AS (SELECT CAST(label AS BIGINT) AS label,
-                      sqrt({_DOT.format(a='embedding', b='embedding')}) AS nrm
+                      sqrt({DOT_SQL.format(a='embedding', b='embedding')}) AS nrm
                FROM embeddings),
     f AS (SELECT label,
                  CASE WHEN isfinite(nrm) AND nrm <= 1000.0 THEN nrm END
@@ -563,25 +559,16 @@ def embedding_norm_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.max(fnrm).alias("max_norm")))
 
 
-from kafka_flink_processing_spark.functions.text import lang_id  # noqa: E402
-from kafka_flink_processing_spark.plans.extensions import (  # noqa: E402
-    _lang_case_sql,
-    _lang_scores_sql,
-)
-
-_LANG_SCORES = _lang_scores_sql()
-
-
 @register(
     "lang_confusion_matrix",
     oracle=f"""
     WITH s AS (
       SELECT lang,
              {", ".join(f"{expr} AS s_{lg}"
-                        for lg, expr in _LANG_SCORES.items())}
+                        for lg, expr in LANG_SCORES_SQL.items())}
       FROM (SELECT lang, ' ' || text || ' ' AS p FROM documents)
     )
-    SELECT lang AS lang_label, {_lang_case_sql(_LANG_SCORES)} AS lang_pred,
+    SELECT lang AS lang_label, {LANG_ID_SQL} AS lang_pred,
            CAST(COUNT(*) AS BIGINT) AS n_docs
     FROM s GROUP BY 1, 2
     """,
@@ -604,12 +591,9 @@ def lang_confusion_matrix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_rate_by_source",
-    oracle="""
+    oracle=f"""
     WITH h AS (
-      SELECT source, doc_id,
-             md5(trim(regexp_replace(lower(COALESCE(text, '')), ' +', ' ', 'g')))
-               AS text_hash
-      FROM documents
+      SELECT source, doc_id, {TEXT_HASH_SQL} AS text_hash FROM documents
     ),
     canon AS (SELECT text_hash, MIN(doc_id) AS keeper FROM h
               GROUP BY text_hash)
@@ -629,10 +613,9 @@ def lang_confusion_matrix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "and a #sources-row aggregate; the rate is one int/int division.",
 )
 def dedup_rate_by_source_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.operators.dedup import normalize_text
     docs = load_table(spark, "documents", sf_dir)
     h = docs.select("source", "doc_id",
-                    F.md5(normalize_text(F.col("text"))).alias("text_hash"))
+                    text_hash(F.col("text")).alias("text_hash"))
     canon = h.groupBy("text_hash").agg(F.min("doc_id").alias("keeper"))
     dup = F.when(F.col("doc_id") != F.col("keeper"), 1).otherwise(0)
     return (h.join(canon, "text_hash")
@@ -888,10 +871,7 @@ _LN_SUMS_SQL = (
 @register(
     "vocab_zipf_slope",
     oracle=f"""
-    WITH tok AS (
-      SELECT unnest(regexp_extract_all(lower(text), '{TOKEN_REGEX}'))
-               AS token
-      FROM documents),
+    WITH tok AS (SELECT unnest({TOKENS_SQL}) AS token FROM documents),
     counts AS (SELECT token, COUNT(*) AS freq FROM tok GROUP BY token),
     ranked AS (SELECT * FROM (
         SELECT freq,
@@ -918,10 +898,7 @@ _LN_SUMS_SQL = (
 )
 def vocab_zipf_slope_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
-    tok = docs.select(
-        F.explode(F.regexp_extract_all(F.lower("text"),
-                                       F.lit(TOKEN_REGEX), F.lit(0)))
-         .alias("token"))
+    tok = docs.select(F.explode(tokens(F.col("text"))).alias("token"))
     counts = tok.groupBy("token").agg(F.count("*").alias("freq"))
     top = counts.orderBy(F.desc("freq"), "token").limit(_ZIPF_TOP)
     ranked = top.withColumn(
@@ -947,18 +924,18 @@ _NPROBES = (1, 2, 4, 8)
 @register(
     "ivf_probe_sweep",
     oracle=f"""
-    WITH {_COSINE_BASE_SQL},
-    cent AS ({_codebook_values_sql()}),
+    WITH {COSINE_BASE_SQL},
+    cent AS ({codebook_values_sql()}),
     bf AS (SELECT query_id, cand_id FROM (
         SELECT q.query_id, c.vec_id AS cand_id,
                ROW_NUMBER() OVER (PARTITION BY q.query_id
-                 ORDER BY {_DOT.format(a='q.qv', b='c.embedding')}
+                 ORDER BY {DOT_SQL.format(a='q.qv', b='c.embedding')}
                             / (q.qn * c.nrm) DESC, c.vec_id) AS rank
         FROM (SELECT vec_id AS query_id, embedding AS qv, nrm AS qn
               FROM n WHERE vec_id < 5) q
         JOIN n c ON c.vec_id != q.query_id) WHERE rank <= 10),
     asgj AS (SELECT v.vec_id, c.cid,
-                    {_DOT.format(a='v.embedding', b='c.cv')} / (v.nrm * c.cn)
+                    {DOT_SQL.format(a='v.embedding', b='c.cv')} / (v.nrm * c.cn)
                       AS cos
              FROM n v CROSS JOIN cent c),
     asg AS (SELECT vec_id, CAST(cid AS BIGINT) AS cell FROM (
@@ -1114,9 +1091,9 @@ _SAMPLE_PER_LANG = 32
     oracle=f"""
     WITH k AS (
       SELECT doc_id, lang,
-             ROUND(ln(({_H60.format(x="'samp:' || CAST(doc_id AS VARCHAR)")}
+             ROUND(ln(({md5_hash60_sql(f"'{_ES_SALT}' || CAST(doc_id AS VARCHAR)")}
                         + 1) / {_ES_DENOM})
-                   / (({_QUALITY_SQL}) + 0.01), 6) AS skey
+                   / (({QUALITY_SQL}) + 0.01), 6) AS skey
       FROM documents),
     r AS (SELECT doc_id, lang, skey,
                  ROW_NUMBER() OVER (PARTITION BY lang
@@ -1141,7 +1118,6 @@ _SAMPLE_PER_LANG = 32
         "global sort.",
 )
 def weighted_sample_wor_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.functions.text import md5_hash60
     docs = load_table(spark, "documents", sf_dir)
     u = (md5_hash60(F.concat(F.lit(_ES_SALT),
                              F.col("doc_id").cast("string"))) + 1) \
@@ -1157,10 +1133,8 @@ def weighted_sample_wor_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "corpus_entropy_by_source",
     oracle=f"""
-    WITH tok AS (
-      SELECT source, unnest(regexp_extract_all(lower(text), '{TOKEN_REGEX}'))
-               AS token
-      FROM documents),
+    WITH tok AS (SELECT source, unnest({TOKENS_SQL}) AS token
+                 FROM documents),
     c AS (SELECT source, token, COUNT(*) AS f FROM tok GROUP BY 1, 2),
     a AS (SELECT source, CAST(SUM(f) AS BIGINT) AS n_tokens,
                  CAST(COUNT(*) AS BIGINT) AS vocab_size,
@@ -1194,11 +1168,8 @@ def weighted_sample_wor_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def corpus_entropy_by_source_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
-    tok = docs.select(
-        "source",
-        F.explode(F.regexp_extract_all(F.lower("text"),
-                                       F.lit(TOKEN_REGEX), F.lit(0)))
-         .alias("token"))
+    tok = docs.select("source",
+                      F.explode(tokens(F.col("text"))).alias("token"))
     c = tok.groupBy("source", "token").agg(F.count("*").alias("f"))
     a = c.groupBy("source").agg(
         F.sum("f").alias("n_tokens"),
@@ -1913,15 +1884,16 @@ _HLL_ALPHA = 0.7213 / (1 + 1.079 / _HLL_M)
 _HLL_EST_NUM = _HLL_ALPHA * _HLL_M * _HLL_M * float(1 << 53)
 _HLL_ZERO_TERM = 1 << 53  # a zero register contributes 2^(53-0)
 
-_HLL_H60 = ("CAST(CAST('0x' || substring(md5('hll:' || "
-            "CAST(user_id AS VARCHAR)), 1, 15) AS UBIGINT) AS BIGINT)")
 _HLL_BL = " + ".join(f"(rest >= {1 << k})::INT" for k in range(52))
 
 
 @register(
     "hll_distinct_estimate",
     oracle=f"""
-    WITH h AS (SELECT event_type, user_id, {_HLL_H60} AS hv FROM events),
+    WITH h AS (SELECT event_type, user_id,
+                      {md5_hash60_sql("'hll:' || CAST(user_id AS VARCHAR)")}
+                        AS hv
+               FROM events),
     b AS (SELECT event_type, hv % {_HLL_M} AS bucket,
                  hv // {_HLL_M} AS rest FROM h),
     regs AS (SELECT event_type, bucket,
@@ -1959,7 +1931,6 @@ _HLL_BL = " + ".join(f"(rest >= {1 << k})::INT" for k in range(52))
         "two engines can agree on bit-for-bit.",
 )
 def hll_distinct_estimate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.functions.text import md5_hash60
     ev = load_table(spark, "events", sf_dir).select("event_type", "user_id")
     hv = md5_hash60(F.concat(F.lit("hll:"),
                              F.col("user_id").cast("string")))

@@ -8,7 +8,9 @@ arithmetic, sequential array folds for dot products — see tools/
 oracle_check.py). The DuckDB SQL below is GENERATED from the same constants
 (functions/constants.py) the Spark operators use, so even the approximate
 algorithms (LSH banding) compare exactly: both engines run the same
-deterministic algorithm.
+deterministic algorithm. Per-document text rules (hashes, tokens, scores,
+the split, word n-grams) are spliced in from their renderings in
+functions/text.py, never re-spelled here.
 """
 
 from __future__ import annotations
@@ -25,20 +27,43 @@ from kafka_flink_processing_spark.functions.constants import (
     SIMHASH_BITS,
 )
 from kafka_flink_processing_spark.functions.text import (
-    LANG_MARKERS,
+    LANG_ID_SQL,
     LANG_ORDER,
-    TOKEN_REGEX,
+    LANG_SCORES_SQL,
+    QUALITY_SQL,
+    SPLIT_BUCKET_SQL,
+    SPLIT_TRAIN,
+    TEXT_HASH_SQL,
+    TOKEN_COUNT_SQL,
+    TOKENS_SQL,
+    alpha_count,
+    alpha_count_sql,
     fingerprint_poly,
     lang_id,
     lang_score,
+    md5_hash60,
+    md5_hash60_sql,
     quality_score,
+    split_bucket,
+    split_name,
+    split_name_sql,
+    text_hash,
     token_count,
+    tokens,
     word_count,
+    word_grams_sql,
 )
 from kafka_flink_processing_spark.functions.multimodal import (
+    ENTROPY_BUCKET,
+    FAKE_BASE,
+    FAKE_SPAN,
+    FRAME_SIZE,
+    FRAME_STRIDE,
     GIF_LAYOUT,
     PNG_LAYOUT,
     PNG_PAD,
+    TARGET_H,
+    TARGET_W,
     audio_zcr_features,
     decode_features,
     decode_media,
@@ -57,7 +82,6 @@ from kafka_flink_processing_spark.operators.dedup import (
     exact_dedup,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
-    normalize_text,
     simhash_pairs,
 )
 from kafka_flink_processing_spark.operators.similarity import (
@@ -71,50 +95,27 @@ from kafka_flink_processing_spark.sources.parquet import load_table
 # shared DuckDB SQL fragments (generated from the same constants as Spark)
 # ---------------------------------------------------------------------------
 
-_H60 = "CAST(CAST('0x' || substring(md5({x}), 1, 15) AS UBIGINT) AS BIGINT)"
-
 _WORDS = ("SELECT doc_id, string_split(COALESCE(text, ''), ' ')"
           " AS words FROM documents")
 
-_SHINGLES3 = f"""
+
+def shingles_cte(n: int) -> str:
+    """`WITH t, ds`: each document's words and its distinct word n-grams
+    `sh` — the rendering of operators/dedup.py::_doc_shingles."""
+    return f"""
   WITH t AS ({_WORDS}),
-  ds AS (SELECT doc_id,
-           CASE WHEN len(words) < 3 THEN []
-                ELSE list_distinct([words[i] || ' ' || words[i+1] || ' ' ||
-                                    words[i+2] for i in range(1, len(words)-1)])
-           END AS sh
-         FROM t)
-"""
-
-_SHINGLES2_ROWS = f"""
-  t AS ({_WORDS}),
-  g2 AS (SELECT doc_id, unnest(
-           CASE WHEN len(words) < 2 THEN []
-                ELSE list_distinct([words[i] || ' ' || words[i+1]
-                                    for i in range(1, len(words))])
-           END) AS sh
-         FROM t)
+  ds AS (SELECT doc_id, {word_grams_sql(n)} AS sh FROM t)
 """
 
 
-def _occ_sql(padded: str, needle: str) -> str:
-    return (f"CAST((length({padded}) - length(replace({padded}, '{needle}', '')))"
-            f" / {len(needle)} AS BIGINT)")
-
-
-def _lang_scores_sql() -> dict[str, str]:
-    return {lg: " + ".join(_occ_sql("p", m) for m in LANG_MARKERS[lg])
-            for lg in LANG_ORDER}
-
-
-def _minhash_sig_sql() -> str:
-    """CTEs ex/hx/sig over _SHINGLES3's ds."""
+def minhash_sig_sql() -> str:
+    """CTEs ex/hx/sig over shingles_cte's ds."""
     mins = ", ".join(
         f"MIN(({a} * x + {b}) % {MINHASH_P}) AS mh{i}"
         for i, (a, b) in enumerate(MINHASH_COEFFS))
     return f"""
   ex AS (SELECT doc_id, unnest(sh) AS sh FROM ds),
-  hx AS (SELECT doc_id, {_H60.format(x='sh')} % {MINHASH_P} AS x FROM ex),
+  hx AS (SELECT doc_id, {md5_hash60_sql('sh')} % {MINHASH_P} AS x FROM ex),
   sig AS (SELECT doc_id, {mins} FROM hx GROUP BY doc_id)
 """
 
@@ -124,10 +125,10 @@ def _minhash_sig_sql() -> str:
 # comparable; retune it in ONE place.
 EMBED_COS_T = 0.45
 
-_DOT = ("list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-        "list_transform(list_zip({a}, {b}), "
-        "p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))), "
-        "(acc, x) -> acc + x)")
+DOT_SQL = ("list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
+           "list_transform(list_zip({a}, {b}), "
+           "p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))), "
+           "(acc, x) -> acc + x)")
 
 
 def _plane_literal(plane: list[float]) -> str:
@@ -144,10 +145,8 @@ def _plane_literal(plane: list[float]) -> str:
     SELECT doc_id,
            CAST(length(text) AS BIGINT) AS n_chars,
            CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
-           CAST(len(regexp_extract_all(lower(text), '{TOKEN_REGEX}')) AS BIGINT)
-             AS n_tokens,
-           CAST(length(regexp_replace(text, '[^a-z]', '', 'g')) AS BIGINT)
-             AS n_alpha,
+           {TOKEN_COUNT_SQL} AS n_tokens,
+           CAST({alpha_count_sql("text")} AS BIGINT) AS n_alpha,
            CAST(length(text) AS DOUBLE)
              / GREATEST(len(string_split(text, ' ')), 1) AS avg_word_len
     FROM documents
@@ -163,18 +162,10 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length(t).cast("long").alias("n_chars"),
         word_count(t).alias("n_words"),
         token_count(t).alias("n_tokens"),
-        F.length(F.regexp_replace(t, "[^a-z]", "")).cast("long").alias("n_alpha"),
+        alpha_count(t).cast("long").alias("n_alpha"),
         (F.length(t).cast("double")
          / F.greatest(F.size(F.split(t, " ")), F.lit(1))).alias("avg_word_len"),
     )
-
-
-def _lang_case_sql(scores: dict[str, str]) -> str:
-    arms = []
-    for lg in LANG_ORDER:
-        others = ", ".join(f"s_{o}" for o in LANG_ORDER if o != lg)
-        arms.append(f"WHEN s_{lg} >= GREATEST({others}, 1) THEN '{lg}'")
-    return "CASE " + " ".join(arms) + " ELSE 'und' END"
 
 
 @register(
@@ -182,22 +173,14 @@ def _lang_case_sql(scores: dict[str, str]) -> str:
     oracle=f"""
     WITH s AS (
       SELECT doc_id, lang,
-             {", ".join(f"{expr} AS s_{lg}" for lg, expr in _lang_scores_sql().items())},
+             {", ".join(f"{expr} AS s_{lg}" for lg, expr in LANG_SCORES_SQL.items())},
              text
       FROM (SELECT doc_id, lang, text, ' ' || text || ' ' AS p FROM documents)
     )
     SELECT doc_id, lang AS lang_label,
-           {_lang_case_sql(_lang_scores_sql())} AS lang_pred,
+           {LANG_ID_SQL} AS lang_pred,
            s_en, s_de, s_fr, s_es,
-           (CAST(LEAST(CAST(len(string_split(COALESCE(text, ''), ' ')) AS BIGINT), 100) AS DOUBLE) / 100.0)
-             * (length(regexp_replace(COALESCE(text, ''), '[^a-z]', '', 'g'))
-                / GREATEST(length(COALESCE(text, '')), 1))
-             * (CASE WHEN CAST(length(COALESCE(text, '')) AS DOUBLE)
-                          / GREATEST(len(string_split(COALESCE(text, ''), ' ')), 1) >= 3.0
-                     THEN 1.0
-                     ELSE (CAST(length(COALESCE(text, '')) AS DOUBLE)
-                           / GREATEST(len(string_split(COALESCE(text, ''), ' ')), 1)) / 3.0 END)
-             AS quality
+           {QUALITY_SQL} AS quality
     FROM s
     """,
     doc="stopword-marker language-ID heuristic (argmax with fixed tie-break) "
@@ -218,7 +201,7 @@ def lang_id_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     "doc_fingerprint",
     oracle=f"""
     SELECT doc_id,
-           md5(trim(regexp_replace(lower(COALESCE(text, '')), ' +', ' ', 'g'))) AS fp_md5,
+           {TEXT_HASH_SQL} AS fp_md5,
            list_reduce(
              list_prepend(CAST(0 AS BIGINT),
                list_transform(string_split(COALESCE(text, ''), ''),
@@ -233,7 +216,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
     return docs.select(
         "doc_id",
-        F.md5(normalize_text(F.col("text"))).alias("fp_md5"),
+        text_hash(F.col("text")).alias("fp_md5"),
         fingerprint_poly(F.col("text")).alias("fp_poly"),
     )
 
@@ -244,8 +227,8 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_exact",
-    oracle="""
-    SELECT md5(trim(regexp_replace(lower(COALESCE(text, '')), ' +', ' ', 'g'))) AS text_hash,
+    oracle=f"""
+    SELECT {TEXT_HASH_SQL} AS text_hash,
            COUNT(*) AS n_docs,
            MIN(doc_id) AS canonical_id
     FROM documents GROUP BY 1
@@ -260,7 +243,7 @@ def dedup_exact_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_ngram_jaccard",
     oracle=f"""
-    {_SHINGLES3},
+    {shingles_cte(3)},
     sizes AS (SELECT doc_id, len(sh) AS n FROM ds),
     ex0 AS (SELECT doc_id, unnest(sh) AS sh FROM ds),
     kept AS (SELECT sh FROM (SELECT sh, COUNT(*) AS df FROM ex0 GROUP BY sh)
@@ -290,7 +273,7 @@ def dedup_ngram_jaccard_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_containment_pairs",
     oracle=f"""
-    {_SHINGLES3},
+    {shingles_cte(3)},
     sizes AS (SELECT doc_id, len(sh) AS n FROM ds),
     ex0 AS (SELECT doc_id, unnest(sh) AS sh FROM ds),
     kept AS (SELECT sh FROM (SELECT sh, COUNT(*) AS df FROM ex0 GROUP BY sh)
@@ -320,7 +303,7 @@ def dedup_containment_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                              n=3, threshold=0.5)
 
 
-def _minhash_bands_sql() -> str:
+def minhash_bands_sql() -> str:
     arms = []
     for k in range(N_BANDS):
         arms.append(f"SELECT doc_id, {k} AS band, "
@@ -332,9 +315,9 @@ def _minhash_bands_sql() -> str:
 @register(
     "dedup_minhash_lsh",
     oracle=f"""
-    {_SHINGLES3},
-    {_minhash_sig_sql()},
-    bands AS ({_minhash_bands_sql()}),
+    {shingles_cte(3)},
+    {minhash_sig_sql()},
+    bands AS ({minhash_bands_sql()}),
     cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
              FROM bands a JOIN bands b
                ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id)
@@ -357,7 +340,7 @@ def dedup_minhash_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _MINHASH_PAIRS_CTES = f"""
-    {_SHINGLES3},
+    {shingles_cte(3)},
     {{sig}},
     bands AS ({{bands}}),
     cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -377,7 +360,7 @@ _MINHASH_PAIRS_CTES = f"""
     oracle=f"""
     WITH RECURSIVE
     {_MINHASH_PAIRS_CTES.replace('WITH ', '', 1).format(
-        sig=_minhash_sig_sql().strip().lstrip(), bands='{bands}')}
+        sig=minhash_sig_sql().strip().lstrip(), bands='{bands}')}
     ,
     edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs
               UNION SELECT doc_b, doc_a FROM pairs),
@@ -387,7 +370,7 @@ _MINHASH_PAIRS_CTES = f"""
       SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
     )
     SELECT a AS doc_id, MIN(b) AS canonical_id FROM reach GROUP BY a
-    """.format(bands=_minhash_bands_sql()),
+    """.format(bands=minhash_bands_sql()),
     doc="duplicate CLUSTERS: connected components over the MinHash-LSH "
         "pair graph (operators/cluster.py, iterative min-label propagation "
         "— one shuffle join per round, rounds = component diameter). "
@@ -413,7 +396,7 @@ _N_FOLDS = 5
     oracle=f"""
     WITH RECURSIVE
     {_MINHASH_PAIRS_CTES.replace('WITH ', '', 1).format(
-        sig=_minhash_sig_sql().strip().lstrip(), bands='{bands}')}
+        sig=minhash_sig_sql().strip().lstrip(), bands='{bands}')}
     ,
     edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs
               UNION SELECT doc_b, doc_a FROM pairs),
@@ -425,10 +408,10 @@ _N_FOLDS = 5
     clusters AS (SELECT a AS doc_id, MIN(b) AS canonical_id
                  FROM reach GROUP BY a)
     SELECT doc_id, canonical_id,
-           {_H60.format(x="'fold:' || CAST(canonical_id AS VARCHAR)")}
+           {md5_hash60_sql("'fold:' || CAST(canonical_id AS VARCHAR)")}
              % {_N_FOLDS} AS fold
     FROM clusters
-    """.format(bands=_minhash_bands_sql()),
+    """.format(bands=minhash_bands_sql()),
     doc="leakage-safe k-fold assignment ({k} folds): the fold is the "
         "salted hash of the doc's near-dup CLUSTER canonical id, not of "
         "the doc itself — so every member of a MinHash-LSH connected "
@@ -444,7 +427,6 @@ _N_FOLDS = 5
         .format(k=_N_FOLDS),
 )
 def cluster_aware_folds_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.functions.text import md5_hash60
     from kafka_flink_processing_spark.operators.cluster import (
         connected_components,
     )
@@ -465,7 +447,7 @@ def _simhash_sql() -> str:
         f"(CASE WHEN s{j} > 0 THEN CAST({2**j} AS BIGINT) ELSE 0 END)"
         for j in range(SIMHASH_BITS))
     return f"""
-  hx AS (SELECT doc_id, {_H60.format(x='sh')} % {2**SIMHASH_BITS} AS h FROM g2),
+  hx AS (SELECT doc_id, {md5_hash60_sql('sh')} % {2**SIMHASH_BITS} AS h FROM g2),
   bsum AS (SELECT doc_id, {sums} FROM hx GROUP BY doc_id),
   sh AS (SELECT doc_id, {assemble} AS simhash FROM bsum)
 """
@@ -480,7 +462,8 @@ def _simhash_bands_sql() -> str:
 @register(
     "dedup_simhash",
     oracle=f"""
-    WITH {_SHINGLES2_ROWS},
+    WITH t AS ({_WORDS}),
+    g2 AS (SELECT doc_id, unnest({word_grams_sql(2)}) AS sh FROM t),
     {_simhash_sql()},
     bands AS ({_simhash_bands_sql()})
     SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -502,9 +485,9 @@ def dedup_simhash_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Similarity search
 # ---------------------------------------------------------------------------
 
-_COSINE_BASE_SQL = f"""
+COSINE_BASE_SQL = f"""
   n AS (SELECT vec_id, embedding,
-          sqrt({_DOT.format(a='embedding', b='embedding')}) AS nrm
+          sqrt({DOT_SQL.format(a='embedding', b='embedding')}) AS nrm
         FROM embeddings)
 """
 
@@ -512,12 +495,12 @@ _COSINE_BASE_SQL = f"""
 @register(
     "similarity_bruteforce_topk",
     oracle=f"""
-    WITH {_COSINE_BASE_SQL},
+    WITH {COSINE_BASE_SQL},
     q AS (SELECT vec_id AS query_id, embedding AS qv, nrm AS qn FROM n
           WHERE vec_id < 5),
     scored AS (
       SELECT query_id, c.vec_id AS cand_id,
-             {_DOT.format(a='qv', b='c.embedding')} / (qn * c.nrm) AS cosine
+             {DOT_SQL.format(a='qv', b='c.embedding')} / (qn * c.nrm) AS cosine
       FROM q JOIN n c ON c.vec_id != query_id)
     SELECT query_id, cand_id, cosine, rank FROM (
       SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
@@ -538,7 +521,7 @@ def similarity_bruteforce_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _lsh_sig_sql() -> str:
     projs = ", ".join(
-        _DOT.format(a='embedding', b=_plane_literal(plane)) + f" AS pr{p}"
+        DOT_SQL.format(a='embedding', b=_plane_literal(plane)) + f" AS pr{p}"
         for p, plane in enumerate(LSH_PLANES))
     assemble = " + ".join(
         f"(CASE WHEN pr{p} > 0 THEN CAST({2**p} AS BIGINT) ELSE 0 END)"
@@ -564,7 +547,7 @@ def _lsh_bands_rows_sql() -> str:
 @register(
     "similarity_lsh_topk",
     oracle=f"""
-    WITH {_COSINE_BASE_SQL},
+    WITH {COSINE_BASE_SQL},
     {_lsh_sig_sql()},
     bands AS ({_lsh_bands_rows_sql()}),
     cand AS (
@@ -575,7 +558,7 @@ def _lsh_bands_rows_sql() -> str:
       WHERE q.vec_id < 5),
     scored AS (
       SELECT query_id, cand_id,
-             {_DOT.format(a='qv', b='cv')} / (qn * cn) AS cosine
+             {DOT_SQL.format(a='qv', b='cv')} / (qn * cn) AS cosine
       FROM cand)
     SELECT query_id, cand_id, cosine, rank FROM (
       SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
@@ -599,23 +582,23 @@ from kafka_flink_processing_spark.operators.similarity import IVF_K, IVF_NPROBE 
 from kafka_flink_processing_spark.functions.ivf_codebook import IVF_CENTROIDS  # noqa: E402
 
 
-def _codebook_values_sql() -> str:
+def codebook_values_sql() -> str:
     """The pinned k-means codebook as a VALUES list — the same 6dp literals
     the Spark operator ships, so both engines assign identical cells."""
     rows = ", ".join(
         f"({cid}, {_plane_literal(list(cv))})"
         for cid, cv in enumerate(IVF_CENTROIDS))
-    return (f"SELECT cid, cv, sqrt({_DOT.format(a='cv', b='cv')}) AS cn "
+    return (f"SELECT cid, cv, sqrt({DOT_SQL.format(a='cv', b='cv')}) AS cn "
             f"FROM (VALUES {rows}) AS t(cid, cv)")
 
 
 @register(
     "similarity_ivf_topk",
     oracle=f"""
-    WITH {_COSINE_BASE_SQL},
-    cent AS ({_codebook_values_sql()}),
+    WITH {COSINE_BASE_SQL},
+    cent AS ({codebook_values_sql()}),
     asgj AS (SELECT v.vec_id, v.embedding, v.nrm, c.cid,
-                    {_DOT.format(a='v.embedding', b='c.cv')} / (v.nrm * c.cn)
+                    {DOT_SQL.format(a='v.embedding', b='c.cv')} / (v.nrm * c.cn)
                       AS cos
              FROM n v CROSS JOIN cent c),
     asg AS (SELECT vec_id, embedding, nrm, CAST(cid AS BIGINT) AS cell FROM (
@@ -632,7 +615,7 @@ def _codebook_values_sql() -> str:
              FROM probes p JOIN asg a
                ON a.cell = p.cell AND a.vec_id != p.query_id),
     scored AS (SELECT query_id, cand_id,
-                      {_DOT.format(a='qv', b='cv')} / (qn * cn) AS cosine
+                      {DOT_SQL.format(a='qv', b='cv')} / (qn * cn) AS cosine
                FROM cand)
     SELECT query_id, cand_id, cosine, rank FROM (
       SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
@@ -669,7 +652,7 @@ from kafka_flink_processing_spark.functions.pq_codebook import (  # noqa: E402
     PQ_M,
 )
 
-# squared L2 distance as the same sequential list_reduce fold _DOT uses
+# squared L2 distance as the same sequential list_reduce fold DOT_SQL uses
 # (index order, per-element cast to double) — matches operators/
 # similarity.py::_sqd bit for bit
 _SQDIST = ("list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
@@ -858,10 +841,10 @@ def pq_distortion_by_label_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "similarity_ivfpq_topk",
     oracle=f"""
-    WITH {_COSINE_BASE_SQL},
-    cent AS ({_codebook_values_sql()}),
+    WITH {COSINE_BASE_SQL},
+    cent AS ({codebook_values_sql()}),
     asgj AS (SELECT v.vec_id, v.embedding, v.nrm, c.cid,
-                    {_DOT.format(a='v.embedding', b='c.cv')} / (v.nrm * c.cn)
+                    {DOT_SQL.format(a='v.embedding', b='c.cv')} / (v.nrm * c.cn)
                       AS cos
              FROM n v CROSS JOIN cent c),
     asg AS (SELECT vec_id, CAST(cid AS BIGINT) AS cell FROM (
@@ -920,10 +903,10 @@ _RESID = ("list_transform(list_zip({a}, {b}), "
 @register(
     "similarity_ivfpq_residual_topk",
     oracle=f"""
-    WITH {_COSINE_BASE_SQL},
-    cent AS ({_codebook_values_sql()}),
+    WITH {COSINE_BASE_SQL},
+    cent AS ({codebook_values_sql()}),
     asgj AS (SELECT v.vec_id, v.embedding, v.nrm, c.cid,
-                    {_DOT.format(a='v.embedding', b='c.cv')} / (v.nrm * c.cn)
+                    {DOT_SQL.format(a='v.embedding', b='c.cv')} / (v.nrm * c.cn)
                       AS cos
              FROM n v CROSS JOIN cent c),
     asg AS (SELECT vec_id, CAST(cid AS BIGINT) AS cell FROM (
@@ -999,10 +982,10 @@ def similarity_ivfpq_residual_topk_q(spark: SparkSession,
 @register(
     "kmeans_assign_cells",
     oracle=f"""
-    WITH {_COSINE_BASE_SQL},
-    cent AS ({_codebook_values_sql()}),
+    WITH {COSINE_BASE_SQL},
+    cent AS ({codebook_values_sql()}),
     asgj AS (SELECT v.vec_id, c.cid,
-                    {_DOT.format(a='v.embedding', b='c.cv')} / (v.nrm * c.cn)
+                    {DOT_SQL.format(a='v.embedding', b='c.cv')} / (v.nrm * c.cn)
                       AS cos
              FROM n v CROSS JOIN cent c)
     SELECT vec_id, CAST(cid AS BIGINT) AS cell, cos AS cell_cosine FROM (
@@ -1037,10 +1020,10 @@ def kmeans_assign_cells_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_semantic",
     oracle=f"""
-    WITH {_COSINE_BASE_SQL},
-    cent AS ({_codebook_values_sql()}),
+    WITH {COSINE_BASE_SQL},
+    cent AS ({codebook_values_sql()}),
     asgj AS (SELECT v.vec_id, v.embedding, v.nrm, c.cid,
-                    {_DOT.format(a='v.embedding', b='c.cv')} / (v.nrm * c.cn)
+                    {DOT_SQL.format(a='v.embedding', b='c.cv')} / (v.nrm * c.cn)
                       AS cos
              FROM n v CROSS JOIN cent c),
     asg AS (SELECT vec_id, embedding, nrm, CAST(cid AS BIGINT) AS cell FROM (
@@ -1050,7 +1033,7 @@ def kmeans_assign_cells_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     dups AS (SELECT DISTINCT b.vec_id
              FROM asg a JOIN asg b
                ON a.cell = b.cell AND a.vec_id < b.vec_id
-             WHERE {_DOT.format(a='a.embedding', b='b.embedding')}
+             WHERE {DOT_SQL.format(a='a.embedding', b='b.embedding')}
                      / (a.nrm * b.nrm) >= {EMBED_COS_T})
     SELECT a.vec_id, a.cell, (d.vec_id IS NULL) AS keep
     FROM asg a LEFT JOIN dups d ON a.vec_id = d.vec_id
@@ -1084,7 +1067,7 @@ def dedup_semantic_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # recall-vs-brute-force property stays asserted in
     # tests/test_extensions.py.
     oracle=f"""
-    WITH {_COSINE_BASE_SQL},
+    WITH {COSINE_BASE_SQL},
     {_lsh_sig_sql()},
     bands AS ({_lsh_bands_rows_sql()}),
     cand AS (
@@ -1093,9 +1076,9 @@ def dedup_semantic_q(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM bands a JOIN bands b
         ON a.band = b.band AND a.key = b.key AND a.vec_id < b.vec_id)
     SELECT vec_a, vec_b,
-           {_DOT.format(a='va', b='vb')} / (na * nb) AS cosine
+           {DOT_SQL.format(a='va', b='vb')} / (na * nb) AS cosine
     FROM cand
-    WHERE {_DOT.format(a='va', b='vb')} / (na * nb) >= {EMBED_COS_T}
+    WHERE {DOT_SQL.format(a='va', b='vb')} / (na * nb) >= {EMBED_COS_T}
     """,
     doc="embedding-cosine near-dup pairs via banded-LSH candidates + exact "
         "re-scoring (no all-pairs join in the plan). Oracle = the same "
@@ -1120,15 +1103,9 @@ def embedding_cosine_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "train_test_split",
     oracle=f"""
     WITH h AS (
-      SELECT doc_id, lang,
-             {_H60.format(x="'split:' || CAST(doc_id AS VARCHAR)")} % 100
-               AS bucket
-      FROM documents
+      SELECT doc_id, lang, {SPLIT_BUCKET_SQL} AS bucket FROM documents
     )
-    SELECT doc_id, lang, bucket,
-           CASE WHEN bucket < 95 THEN 'train'
-                WHEN bucket < 99 THEN 'val'
-                ELSE 'test' END AS split
+    SELECT doc_id, lang, bucket, {split_name_sql('bucket')} AS split
     FROM h
     """,
     doc="deterministic 95/4/1 train/val/test assignment by salted content-"
@@ -1137,15 +1114,10 @@ def embedding_cosine_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "decorrelates this split from any other hash use of doc_id.",
 )
 def train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.functions.text import md5_hash60
     docs = load_table(spark, "documents", sf_dir)
-    bucket = (md5_hash60(F.concat(F.lit("split:"),
-                                  F.col("doc_id").cast("string"))) % 100)
-    return (docs.select("doc_id", "lang", bucket.alias("bucket"))
-            .withColumn("split",
-                        F.when(F.col("bucket") < 95, "train")
-                         .when(F.col("bucket") < 99, "val")
-                         .otherwise("test")))
+    return (docs.select("doc_id", "lang",
+                        split_bucket(F.col("doc_id")).alias("bucket"))
+            .withColumn("split", split_name(F.col("bucket"))))
 
 
 @register(
@@ -1153,7 +1125,7 @@ def train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT doc_id, lang, source
     FROM documents
-    WHERE {_H60.format(x="'samp:' || CAST(doc_id AS VARCHAR)")} % 10000
+    WHERE {md5_hash60_sql("'samp:' || CAST(doc_id AS VARCHAR)")} % 10000
           < CASE WHEN lang = 'en' THEN 2500 ELSE 10000 END
     """,
     doc="deterministic stratified downsampling: keep 25% of the dominant "
@@ -1164,7 +1136,6 @@ def train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the salt decorrelates it from the train/val/test split hash).",
 )
 def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.functions.text import md5_hash60
     docs = load_table(spark, "documents", sf_dir)
     rate_bp = F.when(F.col("lang") == "en", F.lit(2500)).otherwise(F.lit(10000))
     keep = (md5_hash60(F.concat(F.lit("samp:"),
@@ -1173,27 +1144,14 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.filter(keep).select("doc_id", "lang", "source")
 
 
-_QUALITY_SQL = """
-    (CAST(LEAST(CAST(len(string_split(COALESCE(text, ''), ' ')) AS BIGINT), 100) AS DOUBLE) / 100.0)
-      * (length(regexp_replace(COALESCE(text, ''), '[^a-z]', '', 'g'))
-         / GREATEST(length(COALESCE(text, '')), 1))
-      * (CASE WHEN CAST(length(COALESCE(text, '')) AS DOUBLE)
-                   / GREATEST(len(string_split(COALESCE(text, ''), ' ')), 1) >= 3.0
-              THEN 1.0
-              ELSE (CAST(length(COALESCE(text, '')) AS DOUBLE)
-                    / GREATEST(len(string_split(COALESCE(text, ''), ' ')), 1)) / 3.0 END)
-"""
-
-
 @register(
     "curation_pipeline",
     oracle=f"""
     WITH scored AS (
       SELECT doc_id, lang, text,
-             md5(trim(regexp_replace(lower(COALESCE(text, '')), ' +', ' ', 'g'))) AS text_hash,
-             CAST(len(regexp_extract_all(lower(text), '{TOKEN_REGEX}')) AS BIGINT)
-               AS n_tokens,
-             {_QUALITY_SQL} AS quality
+             {TEXT_HASH_SQL} AS text_hash,
+             {TOKEN_COUNT_SQL} AS n_tokens,
+             {QUALITY_SQL} AS quality
       FROM documents
     ),
     canon AS (
@@ -1218,7 +1176,7 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = F.col("text")
     scored = docs.select(
         "doc_id", "lang", "text",
-        F.md5(normalize_text(t)).alias("text_hash"),
+        text_hash(t).alias("text_hash"),
         token_count(t).alias("n_tokens"),
         quality_score(t).alias("quality"))
     canon = (scored.groupBy("text_hash")
@@ -1358,7 +1316,7 @@ def _text_image_oracle(container: str, layout: tuple[int, int]) -> str:
     # The stub decode is deterministic byte arithmetic over the UTF-8
     # payload, so DuckDB CAN replicate it exactly while the text is ASCII
     # (verified for all testdata SFs; a real codec would be rows-only).
-    oracle="""
+    oracle=f"""
     WITH b AS (
       SELECT doc_id, text, CAST(length(text) AS BIGINT) AS n,
              list_transform(string_split(text, ''),
@@ -1368,11 +1326,13 @@ def _text_image_oracle(container: str, layout: tuple[int, int]) -> str:
     SELECT doc_id,
            'application/octet-stream' AS mime,
            n AS n_bytes,
-           CAST(16 + n % 64 AS INTEGER) AS width,
-           CAST(16 + (n // 64) % 64 AS INTEGER) AS height,
+           CAST({FAKE_BASE} + n % {FAKE_SPAN} AS INTEGER) AS width,
+           CAST({FAKE_BASE} + (n // {FAKE_SPAN}) % {FAKE_SPAN} AS INTEGER)
+             AS height,
            CASE WHEN n = 0 THEN 0.0
                 ELSE CAST(list_sum(codes) AS DOUBLE) / n END AS mean_byte,
-           CAST(len(list_distinct(codes)) // 32 AS INTEGER) AS entropy_bucket
+           CAST(len(list_distinct(codes)) // {ENTROPY_BUCKET} AS INTEGER)
+             AS entropy_bucket
     FROM b
     """,
     doc="binary payload -> typed features via Arrow-batched mapInPandas "
@@ -1410,22 +1370,24 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     "multimodal_resize",
     # Stub resample = keep every k-th byte; k derives from the fake dims.
     # Deterministic over ASCII text => SQL-replicable (see decode note).
-    oracle="""
+    oracle=f"""
     WITH b AS (
       SELECT doc_id, text, CAST(length(text) AS BIGINT) AS n,
-             CAST(16 + length(text) % 64 AS INTEGER) AS src_w,
-             CAST(16 + (length(text) // 64) % 64 AS INTEGER) AS src_h
+             CAST({FAKE_BASE} + length(text) % {FAKE_SPAN} AS INTEGER) AS src_w,
+             CAST({FAKE_BASE} + (length(text) // {FAKE_SPAN}) % {FAKE_SPAN}
+                  AS INTEGER) AS src_h
       FROM documents
     ), s AS (
-      SELECT *, LEAST(64.0 / src_w, 64.0 / src_h) AS scale FROM b
+      SELECT *, LEAST({TARGET_W}.0 / src_w, {TARGET_H}.0 / src_h) AS scale
+      FROM b
     ), k AS (
       SELECT *, CASE WHEN scale < 1
                      THEN GREATEST(1, CAST(trunc(1.0 / scale) AS BIGINT))
                      ELSE 1 END AS step
       FROM s
     )
-    SELECT doc_id, CAST(64 AS INTEGER) AS target_w,
-           CAST(64 AS INTEGER) AS target_h, src_w, src_h, scale,
+    SELECT doc_id, CAST({TARGET_W} AS INTEGER) AS target_w,
+           CAST({TARGET_H} AS INTEGER) AS target_h, src_w, src_h, scale,
            CASE WHEN text IS NULL THEN NULL
                 ELSE md5(COALESCE(array_to_string(
                   list_transform(range(1, n + 1, step),
@@ -1446,25 +1408,29 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_frame_sample",
-    # Stub demux = 256-byte chunks, every 4th sampled. Deterministic over
-    # ASCII text => SQL-replicable (see decode note).
-    oracle="""
+    # Stub demux = FRAME_SIZE-byte chunks, every FRAME_STRIDE-th sampled.
+    # Deterministic over ASCII text => SQL-replicable (see decode note).
+    oracle=f"""
     WITH b AS (
       SELECT doc_id, text, CAST(length(text) AS BIGINT) AS n
       FROM documents
     ), idx AS (
       SELECT doc_id, text,
-             unnest(range(0, GREATEST(1, (n + 255) // 256), 4)) AS i
+             unnest(range(0, GREATEST(1, (n + {FRAME_SIZE - 1}) // {FRAME_SIZE}),
+                          {FRAME_STRIDE})) AS i
       FROM b
+    ), f AS (
+      SELECT doc_id, i,
+             substring(text, CAST(i * {FRAME_SIZE} + 1 AS BIGINT), {FRAME_SIZE})
+               AS chunk
+      FROM idx
     )
     SELECT doc_id,
            CAST(i AS INTEGER) AS frame_idx,
-           i * 256 AS frame_offset,
-           CAST(length(substring(text, CAST(i * 256 + 1 AS BIGINT), 256))
-                AS BIGINT) AS frame_bytes,
-           md5(substring(text, CAST(i * 256 + 1 AS BIGINT), 256))
-             AS frame_hash
-    FROM idx
+           i * {FRAME_SIZE} AS frame_offset,
+           CAST(length(chunk) AS BIGINT) AS frame_bytes,
+           md5(chunk) AS frame_hash
+    FROM f
     """,
     doc="video-style frame sampling via mapInPandas (1 row -> N rows "
         "fan-out: every 4th fixed-size chunk emits offset+hash; the real "
@@ -1484,8 +1450,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     "vocab_top_tokens",
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, unnest(regexp_extract_all(lower(text), '{TOKEN_REGEX}'))
-               AS token
+      SELECT doc_id, unnest({TOKENS_SQL}) AS token
       FROM documents
     )
     SELECT token, COUNT(*) AS freq,
@@ -1506,9 +1471,7 @@ def vocab_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
     tok = docs.select(
         "doc_id",
-        F.explode(F.regexp_extract_all(F.lower("text"),
-                                       F.lit(TOKEN_REGEX), F.lit(0)))
-         .alias("token"))
+        F.explode(tokens(F.col("text"))).alias("token"))
     return (tok.groupBy("token")
             .agg(F.count("*").alias("freq"),
                  F.count_distinct("doc_id").alias("doc_freq"))
@@ -1518,14 +1481,12 @@ def vocab_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_incremental",
-    oracle="""
+    oracle=f"""
     WITH corpus AS (
-      SELECT doc_id, md5(trim(regexp_replace(lower(COALESCE(text, '')), ' +', ' ', 'g')))
-               AS text_hash
+      SELECT doc_id, {TEXT_HASH_SQL} AS text_hash
       FROM documents WHERE doc_id % 10 <> 0
     ), batch AS (
-      SELECT doc_id, md5(trim(regexp_replace(lower(COALESCE(text, '')), ' +', ' ', 'g')))
-               AS text_hash
+      SELECT doc_id, {TEXT_HASH_SQL} AS text_hash
       FROM documents WHERE doc_id % 10 = 0
     )
     SELECT b.doc_id,
@@ -1546,11 +1507,8 @@ def vocab_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         "join is a hash-bucketed lookup the size of the batch.",
 )
 def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.operators.dedup import normalize_text
-
     docs = load_table(spark, "documents", sf_dir)
-    hashed = docs.select(
-        "doc_id", F.md5(normalize_text(F.col("text"))).alias("text_hash"))
+    hashed = docs.select("doc_id", text_hash(F.col("text")).alias("text_hash"))
     corpus = (hashed.filter(F.col("doc_id") % 10 != 0)
               .groupBy("text_hash")
               .agg(F.min("doc_id").alias("corpus_id")))
@@ -1570,7 +1528,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT doc_id, source, lang,
              ROW_NUMBER() OVER (
                PARTITION BY source
-               ORDER BY {_H60.format(x="'cap:' || CAST(doc_id AS VARCHAR)")},
+               ORDER BY {md5_hash60_sql("'cap:' || CAST(doc_id AS VARCHAR)")},
                         doc_id
              ) AS rn
       FROM documents
@@ -1589,7 +1547,6 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 def per_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from kafka_flink_processing_spark.functions.text import md5_hash60
     docs = load_table(spark, "documents", sf_dir)
     h = md5_hash60(F.concat(F.lit("cap:"), F.col("doc_id").cast("string")))
     rn = F.row_number().over(
@@ -1602,8 +1559,7 @@ def per_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tfidf_top_terms",
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, unnest(regexp_extract_all(lower(text), '{TOKEN_REGEX}'))
-               AS token
+      SELECT doc_id, unnest({TOKENS_SQL}) AS token
       FROM documents
     ), tf AS (
       SELECT doc_id, token, COUNT(*) AS tf FROM tok GROUP BY 1, 2
@@ -1636,9 +1592,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
     tok = docs.select(
         "doc_id",
-        F.explode(F.regexp_extract_all(F.lower("text"),
-                                       F.lit(TOKEN_REGEX), F.lit(0)))
-         .alias("token"))
+        F.explode(tokens(F.col("text"))).alias("token"))
     tf = tok.groupBy("doc_id", "token").agg(F.count("*").alias("tf"))
     df_ = tf.groupBy("token").agg(F.count("*").alias("doc_freq"))
     n_docs = docs.select(F.count("*").alias("n_docs"))
@@ -1656,9 +1610,9 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_incremental_minhash",
     oracle=f"""
-    {_SHINGLES3},
-    {_minhash_sig_sql()},
-    bands AS ({_minhash_bands_sql()}),
+    {shingles_cte(3)},
+    {minhash_sig_sql()},
+    bands AS ({minhash_bands_sql()}),
     cand AS (SELECT DISTINCT b.doc_id AS doc_id, c.doc_id AS dup_of
              FROM bands b JOIN bands c
                ON b.band = c.band AND b.key = c.key
@@ -1692,22 +1646,10 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
                                     n=3, threshold=0.6)
 
 
-_SHINGLES4 = f"""
-  WITH t AS ({_WORDS}),
-  ds AS (SELECT doc_id,
-           CASE WHEN len(words) < 4 THEN []
-                ELSE list_distinct([words[i] || ' ' || words[i+1] || ' ' ||
-                                    words[i+2] || ' ' || words[i+3]
-                                    for i in range(1, len(words)-2)])
-           END AS sh
-         FROM t)
-"""
-
-
 @register(
     "decontaminate_ngram",
     oracle=f"""
-    {_SHINGLES4},
+    {shingles_cte(4)},
     ex AS (SELECT doc_id, unnest(sh) AS sh FROM ds),
     ev AS (SELECT DISTINCT sh FROM ex WHERE doc_id % 13 = 0),
     hits AS (SELECT doc_id, COUNT(*) AS n_shared_grams
@@ -1738,9 +1680,9 @@ def decontaminate_ngram_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "decontaminate_bloom",
     oracle=f"""
-    {_SHINGLES4},
+    {shingles_cte(4)},
     ex AS (SELECT doc_id, unnest(sh) AS sh FROM ds),
-    hx AS (SELECT doc_id, sh, {_H60.format(x='sh')} AS h FROM ex),
+    hx AS (SELECT doc_id, sh, {md5_hash60_sql('sh')} AS h FROM ex),
     px AS (SELECT doc_id, sh,
                   ((h % {BLOOM_M_BITS})
                    + j * (((h >> {BLOOM_M_BITS.bit_length() - 1})
@@ -1781,7 +1723,7 @@ def decontaminate_bloom_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "adaptive_quality_filter",
     oracle=f"""
     WITH scored AS (
-      SELECT doc_id, source, {_QUALITY_SQL} AS quality FROM documents
+      SELECT doc_id, source, {QUALITY_SQL} AS quality FROM documents
     ), r AS (
       SELECT doc_id, source, quality,
              ROW_NUMBER() OVER (PARTITION BY source
@@ -1839,9 +1781,9 @@ CROSSMODAL_COS_T = EMBED_COS_T
 @register(
     "crossmodal_dup_verify",
     oracle=f"""
-    {_SHINGLES3},
-    {_minhash_sig_sql()},
-    bands AS ({_minhash_bands_sql()}),
+    {shingles_cte(3)},
+    {minhash_sig_sql()},
+    bands AS ({minhash_bands_sql()}),
     cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
              FROM bands a JOIN bands b
                ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
@@ -1855,13 +1797,13 @@ CROSSMODAL_COS_T = EMBED_COS_T
               / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh)))
             >= 0.6)
     SELECT p.doc_a, p.doc_b, p.jaccard,
-           {_DOT.format(a='ea.embedding', b='eb.embedding')}
-             / (sqrt({_DOT.format(a='ea.embedding', b='ea.embedding')})
-                * sqrt({_DOT.format(a='eb.embedding', b='eb.embedding')}))
+           {DOT_SQL.format(a='ea.embedding', b='eb.embedding')}
+             / (sqrt({DOT_SQL.format(a='ea.embedding', b='ea.embedding')})
+                * sqrt({DOT_SQL.format(a='eb.embedding', b='eb.embedding')}))
              AS cosine,
-           {_DOT.format(a='ea.embedding', b='eb.embedding')}
-             / (sqrt({_DOT.format(a='ea.embedding', b='ea.embedding')})
-                * sqrt({_DOT.format(a='eb.embedding', b='eb.embedding')}))
+           {DOT_SQL.format(a='ea.embedding', b='eb.embedding')}
+             / (sqrt({DOT_SQL.format(a='ea.embedding', b='ea.embedding')})
+                * sqrt({DOT_SQL.format(a='eb.embedding', b='eb.embedding')}))
              >= {CROSSMODAL_COS_T} AS semantic_agree
     FROM pairs p
     LEFT JOIN embeddings ea ON p.doc_a = ea.vec_id
@@ -1910,12 +1852,7 @@ def crossmodal_dup_verify_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     s AS (SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_tokens,
                  COUNT(*) AS n_distinct, MAX(c) AS top_count
           FROM pt GROUP BY 1),
-    g2 AS (SELECT doc_id,
-             CASE WHEN len(words) < 2 THEN 0
-                  ELSE len(list_distinct([words[i] || ' ' || words[i+1]
-                                          for i in range(1, len(words))]))
-             END AS n_bigrams
-           FROM t)
+    g2 AS (SELECT doc_id, len({word_grams_sql(2)}) AS n_bigrams FROM t)
     SELECT s.doc_id, s.n_tokens,
            CAST(s.n_distinct AS DOUBLE) / s.n_tokens AS distinct_frac,
            CAST(s.top_count AS DOUBLE) / s.n_tokens AS top_token_frac,
@@ -2005,7 +1942,6 @@ def kmeans_embeddings_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "that tiny grouped set, never the corpus.",
 )
 def data_mix_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.functions.text import word_count
     docs = load_table(spark, "documents", sf_dir)
     d = (docs.groupBy("source", "lang")
          .agg(F.count("*").alias("n_docs"),
@@ -2167,9 +2103,7 @@ from kafka_flink_processing_spark.operators.packing import (  # noqa: E402
     "sequence_packing",
     oracle=f"""
     WITH toks AS (
-      SELECT source, doc_id,
-             CAST(len(regexp_extract_all(lower(text), '{TOKEN_REGEX}'))
-                  AS BIGINT) AS n_tokens
+      SELECT source, doc_id, {TOKEN_COUNT_SQL} AS n_tokens
       FROM documents
     ), packed AS (
       SELECT source, doc_id, n_tokens,
@@ -2211,7 +2145,7 @@ def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dup_span_stats",
     oracle=f"""
-    {_SHINGLES3},
+    {shingles_cte(3)},
     sizes AS (SELECT doc_id, CAST(len(sh) AS BIGINT) AS n_grams FROM ds),
     ex AS (SELECT doc_id, unnest(sh) AS sh FROM ds),
     dup_sh AS (SELECT sh FROM ex GROUP BY sh HAVING COUNT(*) >= 2),
@@ -2260,7 +2194,7 @@ def dup_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dup_span_redact",
     oracle=f"""
-    {_SHINGLES3},
+    {shingles_cte(3)},
     ex AS (SELECT doc_id, unnest(sh) AS sh FROM ds),
     dup_sh AS (SELECT sh FROM ex GROUP BY sh HAVING COUNT(*) >= 2),
     dset AS (SELECT e.doc_id, list(e.sh) AS dup_grams
@@ -2435,14 +2369,14 @@ def exactsubstr_redact_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT vec_id,
            CAST(len(embedding) AS BIGINT) AS dim,
-           sqrt({_DOT.format(a='embedding', b='embedding')}) AS l2_norm,
+           sqrt({DOT_SQL.format(a='embedding', b='embedding')}) AS l2_norm,
            CAST(list_min(list_transform(embedding, x -> CAST(x AS DOUBLE)))
                 AS DOUBLE) AS min_c,
            CAST(list_max(list_transform(embedding, x -> CAST(x AS DOUBLE)))
                 AS DOUBLE) AS max_c,
            CAST(len(list_filter(embedding, x -> x != 0)) AS BIGINT)
              AS n_nonzero,
-           {_DOT.format(a='embedding', b='embedding')} = 0.0 AS is_degenerate
+           {DOT_SQL.format(a='embedding', b='embedding')} = 0.0 AS is_degenerate
     FROM embeddings
     """,
     doc="embedding quality screen before ANN indexing: per-vector L2 norm "
@@ -2470,9 +2404,9 @@ def embedding_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "lsh_band_stats",
     oracle=f"""
-    {_SHINGLES3},
-    {_minhash_sig_sql()},
-    bands AS ({_minhash_bands_sql()}),
+    {shingles_cte(3)},
+    {minhash_sig_sql()},
+    bands AS ({minhash_bands_sql()}),
     buckets AS (SELECT band, key, CAST(COUNT(*) AS BIGINT) AS sz
                 FROM bands GROUP BY band, key)
     SELECT CAST(band AS BIGINT) AS band,
@@ -2518,7 +2452,7 @@ def lsh_band_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT d.doc_id, d.lang,
            CAST(FLOOR(r.rate * 1000000) AS BIGINT) AS rate_ppm
     FROM documents d JOIN r USING (lang)
-    WHERE {_H60.format(x="'mix:' || CAST(d.doc_id AS VARCHAR)")} % 1000000
+    WHERE {md5_hash60_sql("'mix:' || CAST(d.doc_id AS VARCHAR)")} % 1000000
           < FLOOR(r.rate * 1000000)
     """,
     doc="temperature-scaled language mixing (alpha=0.5, the multilingual-"
@@ -2536,7 +2470,6 @@ def lsh_band_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "combines.",
 )
 def mix_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.functions.text import md5_hash60
     docs = load_table(spark, "documents", sf_dir)
     w = Window.partitionBy()  # counts table is #languages rows — tiny
     counts = docs.groupBy("lang").agg(F.count("*").alias("n_lang"))
@@ -2556,8 +2489,8 @@ def mix_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "split_leakage_audit",
     oracle=f"""
-    {_MINHASH_PAIRS_CTES.format(sig=_minhash_sig_sql().strip().lstrip(),
-                                bands=_minhash_bands_sql())},
+    {_MINHASH_PAIRS_CTES.format(sig=minhash_sig_sql().strip().lstrip(),
+                                bands=minhash_bands_sql())},
     jac AS (
       SELECT doc_a, doc_b,
              len(list_intersect(sa.sh, sb.sh))
@@ -2565,12 +2498,7 @@ def mix_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS jaccard
       FROM pairs JOIN ds sa ON doc_a = sa.doc_id JOIN ds sb ON doc_b = sb.doc_id),
     s AS (
-      SELECT doc_id,
-             CASE WHEN {_H60.format(x="'split:' || CAST(doc_id AS VARCHAR)")}
-                       % 100 < 95 THEN 'train'
-                  WHEN {_H60.format(x="'split:' || CAST(doc_id AS VARCHAR)")}
-                       % 100 < 99 THEN 'val'
-                  ELSE 'test' END AS split
+      SELECT doc_id, {split_name_sql(SPLIT_BUCKET_SQL)} AS split
       FROM documents)
     SELECT j.doc_a, j.doc_b, j.jaccard,
            a.split AS split_a, b.split AS split_b,
@@ -2590,13 +2518,9 @@ def mix_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ship-blocking gate at 100 TB.",
 )
 def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.functions.text import md5_hash60
     docs = load_table(spark, "documents", sf_dir)
     pairs = minhash_lsh_pairs(docs, n=3, threshold=0.6)
-    bucket = (md5_hash60(F.concat(F.lit("split:"),
-                                  F.col("doc_id").cast("string"))) % 100)
-    split = (F.when(bucket < 95, "train")
-              .when(bucket < 99, "val").otherwise("test"))
+    split = split_name(split_bucket(F.col("doc_id")))
     s = docs.select("doc_id", split.alias("split"))
     sa = s.select(F.col("doc_id").alias("doc_a"), F.col("split").alias("split_a"))
     sb = s.select(F.col("doc_id").alias("doc_b"), F.col("split").alias("split_b"))
@@ -2610,10 +2534,9 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH scored AS (
       SELECT doc_id, text,
-             md5(trim(regexp_replace(lower(COALESCE(text, '')), ' +', ' ', 'g'))) AS text_hash,
-             CAST(len(regexp_extract_all(lower(text), '{TOKEN_REGEX}')) AS BIGINT)
-               AS n_tokens,
-             {_QUALITY_SQL} AS quality
+             {TEXT_HASH_SQL} AS text_hash,
+             {TOKEN_COUNT_SQL} AS n_tokens,
+             {QUALITY_SQL} AS quality
       FROM documents
     ),
     canon AS (
@@ -2643,7 +2566,7 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = F.col("text")
     scored = docs.select(
         "doc_id",
-        F.md5(normalize_text(t)).alias("text_hash"),
+        text_hash(t).alias("text_hash"),
         token_count(t).alias("n_tokens"),
         quality_score(t).alias("quality"))
     canon = (scored.groupBy("text_hash")
@@ -2667,8 +2590,8 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH RECURSIVE
     {_MINHASH_PAIRS_CTES.replace('WITH ', '', 1).format(
-        sig=_minhash_sig_sql().strip().lstrip(),
-        bands=_minhash_bands_sql())}
+        sig=minhash_sig_sql().strip().lstrip(),
+        bands=minhash_bands_sql())}
     ,
     edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs
               UNION SELECT doc_b, doc_a FROM pairs),
@@ -2708,7 +2631,7 @@ def dedup_fuzzy_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT lang,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM({_H60.format(x='text')} % 1000000007) AS BIGINT)
+           CAST(SUM({md5_hash60_sql('text')} % 1000000007) AS BIGINT)
              AS content_hash_sum,
            CAST(SUM(length(text)) AS BIGINT) AS total_chars
     FROM documents GROUP BY lang
@@ -2722,7 +2645,6 @@ def dedup_fuzzy_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         "jsonl/csv round-trips prove the text connectors.",
 )
 def corpus_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.functions.text import md5_hash60
     from kafka_flink_processing_spark.sources.formats import (
         roundtrip_scratch_dir,
         write_corpus,
@@ -2745,14 +2667,8 @@ def corpus_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _n_sweep_leg_sql(n: int) -> str:
     """Per-n CTE trio for the decontamination n-sweep: distinct n-gram
     rows, the eval gram set, per-train-doc hit counts."""
-    grams = " || ' ' || ".join(f"words[i+{k}]" for k in range(n))
     return f"""
-  s{n} AS (SELECT doc_id, unnest(
-             CASE WHEN len(words) < {n} THEN []
-                  ELSE list_distinct([{grams}
-                                      for i in range(1, len(words)-{n - 2})])
-             END) AS sh
-           FROM t),
+  s{n} AS (SELECT doc_id, unnest({word_grams_sql(n)}) AS sh FROM t),
   ev{n} AS (SELECT DISTINCT sh FROM s{n} WHERE doc_id % 13 = 0),
   hit{n} AS (SELECT doc_id, COUNT(*) AS c FROM s{n} JOIN ev{n} USING (sh)
              WHERE doc_id % 13 <> 0 GROUP BY 1)"""
@@ -2817,8 +2733,7 @@ _DRIFT_MIN_TOTAL = 50  # test only tokens with enough pooled mass for a
     "token_drift_chi2",
     oracle=f"""
     WITH s AS (SELECT doc_id, text,
-                 CASE WHEN {_H60.format(
-                     x="'split:' || CAST(doc_id AS VARCHAR)")} % 100 < 95
+                 CASE WHEN {SPLIT_BUCKET_SQL} < {SPLIT_TRAIN}
                       THEN 'train' ELSE 'holdout' END AS split
                FROM documents),
     tok AS (SELECT split, unnest(string_split(text, ' ')) AS token FROM s),
@@ -2847,7 +2762,7 @@ _DRIFT_MIN_TOTAL = 50  # test only tokens with enough pooled mass for a
     """,
     doc="train/holdout token-distribution drift: two-sample chi-squared "
         "contribution per token over THE engine's own 95/5 salted-hash "
-        "split (same 'split:' salt as train_test_split, so this audits "
+        "split (the same salted split as train_test_split, so this audits "
         "the split users actually get), top-50 drifted tokens. A "
         "well-mixed hash split should show only sampling noise; a large "
         "contribution flags a token whose distribution the split "
@@ -2864,12 +2779,10 @@ _DRIFT_MIN_TOTAL = 50  # test only tokens with enough pooled mass for a
     bench=True,  # joined the headline r6: first-round floor rule (BASELINE.md)
 )
 def token_drift_chi2_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.functions.text import md5_hash60
     docs = load_table(spark, "documents", sf_dir)
-    bucket = (md5_hash60(F.concat(F.lit("split:"),
-                                  F.col("doc_id").cast("string"))) % 100)
     s = docs.select(
-        F.when(bucket < 95, "train").otherwise("holdout").alias("split"),
+        F.when(split_bucket(F.col("doc_id")) < SPLIT_TRAIN, "train")
+         .otherwise("holdout").alias("split"),
         F.explode(F.split(F.col("text"), " ")).alias("token"))
     c = s.groupBy("token").agg(
         F.sum(F.when(F.col("split") == "train", 1).otherwise(0))
@@ -2904,7 +2817,7 @@ def token_drift_chi2_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ngram_novelty_by_source",
     oracle=f"""
-    {_SHINGLES3},
+    {shingles_cte(3)},
     ex AS (SELECT doc_id, unnest(sh) AS sh FROM ds),
     first AS (SELECT sh, MIN(doc_id) AS first_doc FROM ex GROUP BY 1),
     pd AS (SELECT e.doc_id,
@@ -3178,8 +3091,8 @@ _FH_BUCKETS = 1024
     WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w
                FROM documents),
     h AS (SELECT doc_id,
-                 {_H60.format(x="'fh:' || w")} % {_FH_BUCKETS} AS bucket,
-                 1 - 2 * ({_H60.format(x="'fhs:' || w")} % 2) AS sign
+                 {md5_hash60_sql("'fh:' || w")} % {_FH_BUCKETS} AS bucket,
+                 1 - 2 * ({md5_hash60_sql("'fhs:' || w")} % 2) AS sign
           FROM t),
     v AS (SELECT doc_id, bucket, SUM(sign) AS val
           FROM h GROUP BY doc_id, bucket)
@@ -3204,8 +3117,6 @@ _FH_BUCKETS = 1024
     bench=True,  # joined the headline r8: first-round floor rule (BASELINE.md)
 )
 def feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.functions.text import md5_hash60
-
     docs = load_table(spark, "documents", sf_dir)
     t = docs.select("doc_id",
                     F.explode(F.split(F.col("text"), " ")).alias("w"))
@@ -3232,8 +3143,6 @@ def _bigram_buckets(docs: DataFrame, salt: str,
     """(doc_id, lang, bucket) — one row per word bigram of each doc with
     at least two tokens, md5-hashed with `salt` into n_buckets buckets.
     The hashed bigram stream of DSIR ('ds:') and the CCNet LM ('pp:')."""
-    from kafka_flink_processing_spark.functions.text import md5_hash60
-
     ts = (docs.select("doc_id", "lang", F.split("text", " ").alias("a"))
           .filter(F.size("a") >= 2))
     g = ts.select(
@@ -3258,7 +3167,7 @@ def _bigram_buckets_sql(salt: str, n_buckets: int) -> str:
                         i -> a[i] || ' ' || a[i+1])) AS w
           FROM ts WHERE len(a) >= 2),
     h AS (SELECT doc_id, lang,
-                 {_H60.format(x=f"'{salt}' || w")} % {n_buckets} AS bucket
+                 {md5_hash60_sql(f"'{salt}' || w")} % {n_buckets} AS bucket
           FROM g)"""
 
 
@@ -3529,7 +3438,7 @@ def _ccnet_bucketed(docs: DataFrame, b2: DataFrame) -> DataFrame:
     oracle=f"""
     WITH RECURSIVE
     {_MINHASH_PAIRS_CTES.replace('WITH ', '', 1).format(
-        sig=_minhash_sig_sql().strip().lstrip(), bands='{bands}')}
+        sig=minhash_sig_sql().strip().lstrip(), bands='{bands}')}
     ,
     edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs
               UNION SELECT doc_b, doc_a FROM pairs),
@@ -3550,7 +3459,7 @@ def _ccnet_bucketed(docs: DataFrame, b2: DataFrame) -> DataFrame:
     SELECT doc_id, canonical_id, survivor_id,
            doc_id = survivor_id AS is_survivor
     FROM r
-    """.format(bands=_minhash_bands_sql()),
+    """.format(bands=minhash_bands_sql()),
     doc="NEAR-dup survivor selection: one kept document per MinHash-LSH "
         "connected component — the decision step a production dedup "
         "actually ships (Lee et al. 2022 keep one per duplicate "

@@ -117,7 +117,8 @@ def topk_recent(spark: SparkSession, sf_dir: str) -> DataFrame:
 # advance one rank per iteration with the exact same IEEE double
 # expressions the pandas fold evaluates, and both emission families
 # (post-fill trade rows; tick mark-to-market fan-out rows) attach
-# relationally (strict-before last-tick subquery; state-interval join).
+# relationally (strict-before ASOF join on the per-(hub, ts) last tick;
+# state-interval join).
 # Bit-exact against the Spark fold at sf0.001/0.01/0.1 (179,587 rows at
 # sf0.1). Precondition making the replay total: (hub, ts) is unique in
 # the driver events data (verified at all SFs) — with colliding
@@ -154,16 +155,17 @@ st AS (
                              ELSE s.avg - t.px END) END AS realized
   FROM st s JOIN seq t
     ON t.hub = s.hub AND t.account = s.account AND t.rn = s.rn + 1),
+last_tick AS (
+  SELECT hub, ts, arg_max_null(price_mwh, tick_id) AS price_mwh
+  FROM ticks WHERE hub IS NOT NULL AND ts IS NOT NULL GROUP BY hub, ts),
 tr_emit AS (
   SELECT t.ts, t.account, t.hub,
          s.pos AS position_mw, s.avg AS avg_price_mwh,
-         COALESCE((SELECT p.price_mwh FROM ticks p
-                   WHERE p.hub = t.hub AND p.ts < t.ts
-                   ORDER BY p.ts DESC, p.tick_id DESC LIMIT 1), t.px)
-           AS last_price_mwh,
+         COALESCE(l.price_mwh, t.px) AS last_price_mwh,
          s.realized AS realized_pnl
   FROM seq t JOIN st s
-    ON s.hub = t.hub AND s.account = t.account AND s.rn = t.rn),
+    ON s.hub = t.hub AND s.account = t.account AND s.rn = t.rn
+  ASOF LEFT JOIN last_tick l ON l.hub = t.hub AND t.ts > l.ts),
 stv AS (
   SELECT s.hub, s.account, t.ts AS eff_ts,
          LEAD(t.ts) OVER (PARTITION BY s.hub, s.account

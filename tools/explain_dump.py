@@ -10,9 +10,11 @@ $SPARK_GRAFT_SF_DIR (default sf0.1) — exchange structure, join strategy,
 pushdown and Python-eval nodes; AQE finalization happens at run time and
 is SF/runtime-dependent, so the static plan is the comparable artifact.
 
-Expression ids (`#123`) and the per-process lambda-variable suffixes
-(`x_121`) are normalized to `#N` / `x_N` (see `normalize`), so dumps made
-from two trees, or two runs of one tree, diff cleanly.
+Expression ids (`#123`), the per-process lambda-variable suffixes
+(`x_121`) and exchange plan ids (`plan_id=41`, a process-global counter,
+so they depend on what was planned before) are normalized to `#N` /
+`x_N` / `plan_id=N` (see `normalize`), so dumps made from two trees, or
+two runs of one tree, diff cleanly.
 """
 
 from __future__ import annotations
@@ -32,12 +34,14 @@ _EXPR_ID = re.compile(r"#\d+")
 # (UnresolvedNamedLambdaVariable.freshVarName), and every reference to
 # one prints as `lambda x_121`
 _LAMBDA_VAR = re.compile(r"\b(lambda \w+?)_\d+\b")
+_PLAN_ID = re.compile(r"\bplan_id=\d+")
 
 
 def normalize(plan: str) -> str:
-    """The plan text with expression ids and lambda-variable suffixes
-    replaced by fixed tokens."""
-    return _EXPR_ID.sub("#N", _LAMBDA_VAR.sub(r"\1_N", plan))
+    """The plan text with expression ids, lambda-variable suffixes and
+    exchange plan ids replaced by fixed tokens."""
+    plan = _PLAN_ID.sub("plan_id=N", _LAMBDA_VAR.sub(r"\1_N", plan))
+    return _EXPR_ID.sub("#N", plan)
 
 
 def main() -> None:
