@@ -33,6 +33,13 @@ The search skeleton they share — one copy of each step:
 - _pq_codes / _query_luts / _adc_topk: PQ code extraction, the query
   lookup tables, and the sum_m lut[m*K + codes[m]] fold with its top-k.
 
+Beside each step is its DuckDB rendering (`*_sql` / `*_cte` / `*_CTE`),
+the text the oracles in plans/ splice in; no plan module spells a step.
+The renderings read the CTE names they document: UNIT_INFO_CTE's `n`
+(vec_id, embedding, nrm), ivf_cells_cte's `cent`/`asgj`/`asg`,
+ivf_probes_cte's `probes`, pq_encode_cte's `cb`/`best`/`codes`,
+pq_luts_cte's `luts` and lsh_bands_cte's `bands`.
+
 Codebooks are inputs, never trained here: registered queries pass the
 pinned artifacts (functions/ivf_codebook.py, pq_codebook.py,
 pq_residual_codebook.py) that the oracles embed as the same literals; the
@@ -56,8 +63,28 @@ def _dot(a: Column, b: Column) -> Column:
         lambda acc, x: acc + x)
 
 
+def sum_fold_sql(xs: str) -> str:
+    """DuckDB: the index-order sum of the double list `xs` from 0.0 — the
+    rendering of every F.aggregate(..., 0.0, acc + x) fold here."""
+    return (f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), {xs}), "
+            "(acc, x) -> acc + x)")
+
+
+def _pair_fold_sql(a: str, b: str, term: str) -> str:
+    return sum_fold_sql(f"list_transform(list_zip({a}, {b}), p -> {term})")
+
+
+def dot_sql(a: str, b: str) -> str:
+    """DuckDB rendering of _dot."""
+    return _pair_fold_sql(a, b, "CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)")
+
+
 def _norm(a: Column) -> Column:
     return F.sqrt(_dot(a, a))
+
+
+def norm_sql(a: str) -> str:
+    return f"sqrt({dot_sql(a, a)})"
 
 
 def _cosine(dot: Column, na: Column, nb: Column) -> Column:
@@ -72,13 +99,29 @@ def _cosine(dot: Column, na: Column, nb: Column) -> Column:
     return F.when(den != 0, dot / den)
 
 
+def cosine_sql(x: str, y: str) -> str:
+    """DuckDB rendering of _side_cosine between the rows `x` and `y` of
+    UNIT_INFO_CTE's `n` (x / 0 is NULL in DuckDB, as _cosine makes it)."""
+    return (f"{dot_sql(f'{x}.embedding', f'{y}.embedding')}"
+            f" / ({x}.nrm * {y}.nrm)")
+
+
 def with_unit_info(emb: DataFrame) -> DataFrame:
     return emb.withColumn("nrm", _norm(F.col("embedding")))
+
+
+UNIT_INFO_CTE = (f"n AS (SELECT vec_id, embedding, "
+                 f"{norm_sql('embedding')} AS nrm FROM embeddings)")
 
 
 def _queries(df: DataFrame, query_ids) -> DataFrame:
     """The rows of `df` whose vec_id is in the query set."""
     return df.filter(F.col("vec_id").isin(list(query_ids)))
+
+
+def query_set_sql(query_ids) -> str:
+    """DuckDB: the query set as an IN list, `(0, 1, ...)`."""
+    return "(" + ", ".join(str(int(i)) for i in query_ids) + ")"
 
 
 def _topk(scored: DataFrame, k: int, order: Column) -> DataFrame:
@@ -88,6 +131,16 @@ def _topk(scored: DataFrame, k: int, order: Column) -> DataFrame:
     w = Window.partitionBy("query_id").orderBy(order, F.col("cand_id"))
     return (scored.withColumn("rank", F.row_number().over(w))
                   .filter(F.col("rank") <= k))
+
+
+def topk_sql(scored: str, score: str, k: int, desc: bool = False) -> str:
+    """DuckDB rendering of _topk over the relation `scored` (query_id,
+    cand_id, `score`): (query_id, cand_id, score, rank BIGINT)."""
+    order = f"{score} DESC" if desc else score
+    return (f"SELECT query_id, cand_id, {score}, rank FROM ("
+            f"SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id "
+            f"ORDER BY {order}, cand_id) AS BIGINT) AS rank FROM {scored}) "
+            f"WHERE rank <= {k}")
 
 
 # (id, vector, norm) names of each join side: query/candidate for top-k
@@ -119,6 +172,25 @@ def cosine_topk(emb: DataFrame, query_ids, k: int = 10) -> DataFrame:
                .select("query_id", "cand_id",
                        _side_cosine("q", "c").alias("cosine")))
     return _topk(scored, k, F.col("cosine").desc())
+
+
+def cosine_topk_sql(cand: str, k: int) -> str:
+    """DuckDB: the exact-cosine top-k re-rank of the (query_id, cand_id)
+    pairs of relation `cand` over `n` — the last step of every cosine
+    search."""
+    return topk_sql(
+        f"(SELECT p.query_id, p.cand_id, {cosine_sql('q', 'c')} AS cosine "
+        f"FROM {cand} p JOIN n q ON q.vec_id = p.query_id "
+        f"JOIN n c ON c.vec_id = p.cand_id)", "cosine", k, desc=True)
+
+
+def bruteforce_topk_sql(query_ids, k: int) -> str:
+    """DuckDB rendering of cosine_topk over `n`: the exact top-k, also
+    the ground truth of the recall evals."""
+    return cosine_topk_sql(
+        f"(SELECT q.vec_id AS query_id, c.vec_id AS cand_id "
+        f"FROM n q JOIN n c ON c.vec_id != q.vec_id "
+        f"WHERE q.vec_id IN {query_set_sql(query_ids)})", k)
 
 
 def lsh_signature(vec: Column) -> Column:
@@ -155,6 +227,20 @@ def _lsh_bands(emb: DataFrame) -> DataFrame:
             for b in range(LSH_N_BANDS)])).alias("bk")) \
         .select(F.col("vec_id"), F.col("embedding"), F.col("nrm"),
                 F.col("bk.band"), F.col("bk.key"))
+
+
+def lsh_bands_cte() -> str:
+    """DuckDB rendering of _lsh_bands (with lsh_signature) over `n`:
+    CTEs `planes`, `sig` and `bands` (vec_id, band, key)."""
+    mask = (1 << LSH_BAND_BITS) - 1
+    return f"""planes AS ({codebook_sql(LSH_PLANES, "p")}),
+    sig AS (SELECT v.vec_id, CAST(SUM(
+              CASE WHEN {dot_sql('v.embedding', 'pl.cv')} > 0
+                   THEN CAST(1 AS BIGINT) << pl.p ELSE 0 END) AS BIGINT) AS sig
+            FROM n v CROSS JOIN planes pl GROUP BY v.vec_id),
+    bands AS (SELECT vec_id, band,
+                     (sig >> (band * {LSH_BAND_BITS})) & {mask} AS key
+              FROM sig CROSS JOIN range({LSH_N_BANDS}) AS b(band))"""
 
 
 def lsh_cosine_topk(emb: DataFrame, query_ids, k: int = 10) -> DataFrame:
@@ -236,6 +322,32 @@ def _argmax_cell(scored_cells: DataFrame) -> DataFrame:
         F.max_by("cid", tie).cast("long").alias("cell"),
         F.first("embedding").alias("embedding"),
         F.first("nrm").alias("nrm"))
+
+
+def ivf_cells_cte(centroids) -> str:
+    """DuckDB rendering of _scored_cells + _probe_order + the cell
+    argmax over `n`: `cent` (cid, cv, cn), `asgj` (vec_id, cid, cos, rn),
+    every (vector, centroid) cosine ranked by (cos DESC, cid), and `asg`
+    (vec_id, cell, cos), its rank-1 row."""
+    return f"""cent AS (SELECT cid, cv, {norm_sql('cv')} AS cn
+             FROM ({codebook_sql(centroids, "cid")})),
+    asgj AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
+                         ORDER BY cos DESC, cid) AS rn
+             FROM (SELECT v.vec_id, c.cid,
+                          {dot_sql('v.embedding', 'c.cv')} / (v.nrm * c.cn)
+                            AS cos
+                   FROM n v CROSS JOIN cent c)),
+    asg AS (SELECT vec_id, CAST(cid AS BIGINT) AS cell, cos
+            FROM asgj WHERE rn = 1)"""
+
+
+def ivf_probes_cte(query_ids) -> str:
+    """`probes` (query_id, cell): each query's IVF_NPROBE first cells in
+    ivf_cells_cte's order."""
+    return f"""probes AS (
+      SELECT vec_id AS query_id, CAST(cid AS BIGINT) AS cell
+      FROM asgj WHERE vec_id IN {query_set_sql(query_ids)}
+        AND rn <= {IVF_NPROBE})"""
 
 
 def _dot_expr_sql(a: str, b: str) -> str:
@@ -347,6 +459,15 @@ def ivf_cosine_topk(emb: DataFrame, query_ids, centroids,
     return _topk(scored, k, F.col("cosine").desc())
 
 
+def ivf_topk_sql(k: int) -> str:
+    """DuckDB rendering of ivf_cosine_topk over ivf_probes_cte's
+    `probes`: the vectors of each probed cell, re-ranked exactly."""
+    return cosine_topk_sql(
+        "(SELECT DISTINCT p.query_id, a.vec_id AS cand_id "
+        "FROM probes p JOIN asg a "
+        "ON a.cell = p.cell AND a.vec_id != p.query_id)", k)
+
+
 def _sqd(a: Column, b: Column) -> Column:
     """Sequential-fold squared L2 distance (index order — matches the
     oracle's list_reduce; per-element cast to double like _dot)."""
@@ -355,6 +476,13 @@ def _sqd(a: Column, b: Column) -> Column:
                    * (x.cast("double") - y.cast("double"))),
         F.lit(0.0),
         lambda acc, x: acc + x)
+
+
+def sqdist_sql(a: str, b: str) -> str:
+    """DuckDB rendering of _sqd."""
+    return _pair_fold_sql(
+        a, b, "(CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)) "
+              "* (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))")
 
 
 def _sqd_expr_sql(a: str, b: str) -> str:
@@ -386,6 +514,23 @@ def _lit_mat_sql(mat) -> str:
     return ("array(" + ", ".join(
         "array(" + ", ".join(_dlit(v) for v in cv) + ")"
         for cv in mat) + ")")
+
+
+def codebook_sql(codebook, *keys: str) -> str:
+    """DuckDB: a pinned codebook as a VALUES relation (keys..., cv
+    DOUBLE[]) — one row per vector, `keys` naming its index at each
+    nesting level (`"cid"` for K x d, `"m", "j"` for M x K x dsub) — in
+    the same literals the Spark operators ship."""
+    rows = [((i,), v) for i, v in enumerate(codebook)]
+    for _ in keys[1:]:
+        rows = [((*key, j), v) for key, sub in rows
+                for j, v in enumerate(sub)]
+    vals = ", ".join(
+        "(" + "".join(f"{i}, " for i in key)
+        + "[" + ", ".join(repr(w) for w in cv) + "]::DOUBLE[])"
+        for key, cv in rows)
+    cols = ", ".join(keys)
+    return f"SELECT {cols}, cv FROM (VALUES {vals}) AS t({cols}, cv)"
 
 
 def _pq_sqds_sql(vec: str, codebook) -> str:
@@ -438,6 +583,16 @@ def _pq_codes(vec: str, codebook) -> Column:
                        lambda s: s["j"]).alias("codes")
 
 
+def _pq_sqd_sql(codebook, vecs: str, keys: str, vec: str) -> str:
+    """(keys..., m, j, sqd): the squared distance of each `vec` of the
+    relation `vecs` to every centroid of its subspace in `cb`."""
+    d = len(codebook[0][0])
+    key_cols = "".join(f"v.{k}, " for k in keys.split(", "))
+    sub = f"list_slice(v.{vec}, c.m*{d}+1, c.m*{d}+{d})"
+    return (f"SELECT {key_cols}c.m, c.j, {sqdist_sql(sub, 'c.cv')} AS sqd "
+            f"FROM {vecs} v CROSS JOIN cb c")
+
+
 def _pq_lut_expr(vec: str, codebook) -> Column:
     """Flat M*K ADC lookup table (index = m*K + j) as one map-side
     expression."""
@@ -449,6 +604,23 @@ def _query_luts(emb: DataFrame, query_ids, codebook) -> DataFrame:
     return _queries(emb, query_ids).select(
         F.col("vec_id").alias("query_id"),
         _pq_lut_expr("embedding", codebook).alias("lut"))
+
+
+def pq_luts_cte(codebook, qvecs: str, keys: str, vec: str) -> str:
+    """DuckDB rendering of _pq_lut_expr, after pq_encode_cte (it reads
+    `cb`): `luts` (keys..., lut), the flat M*K lookup table of each `vec`
+    of the relation `qvecs`."""
+    return f"""luts AS MATERIALIZED (
+      SELECT {keys}, list(sqd ORDER BY m, j) AS lut
+      FROM ({_pq_sqd_sql(codebook, qvecs, keys, vec)}) GROUP BY {keys})"""
+
+
+def query_luts_cte(codebook, query_ids) -> str:
+    """DuckDB rendering of _query_luts: `luts` (query_id, lut)."""
+    return pq_luts_cte(
+        codebook, f"(SELECT vec_id AS query_id, embedding FROM embeddings "
+                  f"WHERE vec_id IN {query_set_sql(query_ids)})",
+        "query_id", "embedding")
 
 
 def _adc_topk(cand: DataFrame, codebook, k: int) -> DataFrame:
@@ -469,6 +641,16 @@ def _adc_topk(cand: DataFrame, codebook, k: int) -> DataFrame:
     return _topk(scored, k, F.col("adist"))
 
 
+def adc_topk_sql(cand: str, codebook, k: int) -> str:
+    """DuckDB rendering of _adc_topk over the relation `cand` (query_id,
+    lut, vec_id, codes): the sum unrolled in subspace order (left-assoc
+    addition is the fold's order)."""
+    M, K = len(codebook), len(codebook[0])
+    adist = " + ".join(f"lut[{m * K} + codes[{m + 1}] + 1]" for m in range(M))
+    return topk_sql(f"(SELECT query_id, vec_id AS cand_id, {adist} AS adist "
+                    f"FROM {cand} WHERE query_id != vec_id)", "adist", k)
+
+
 def residual_expr(vec: str, centroids) -> Column:
     """vec - C_ivf[cell], elementwise in double — the quantity residual
     IVFADC encodes (Jegou et al. 2011 §V.A): PQ distortion drops because
@@ -479,6 +661,12 @@ def residual_expr(vec: str, centroids) -> Column:
         f"zip_with({vec}, "
         f"element_at({_lit_mat_sql(centroids)}, CAST(cell AS INT) + 1), "
         "(x, y) -> CAST(x AS DOUBLE) - CAST(y AS DOUBLE))")
+
+
+def residual_sql(vec: str, cv: str) -> str:
+    """DuckDB rendering of residual_expr: `vec` minus its cell's `cv`."""
+    return (f"list_transform(list_zip({vec}, {cv}), "
+            "z -> CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE))")
 
 
 def pq_encode(emb: DataFrame, codebook) -> DataFrame:
@@ -506,6 +694,22 @@ def pq_encode(emb: DataFrame, codebook) -> DataFrame:
         F.transform(F.col("_pq"), lambda s: s["j"]).alias("codes"),
         F.aggregate(F.transform(F.col("_pq"), lambda s: s["v"]),
                     F.lit(0.0), lambda acc, x: acc + x).alias("distortion"))
+
+
+def pq_encode_cte(codebook, vecs: str = "embeddings",
+                  vec: str = "embedding") -> str:
+    """DuckDB rendering of pq_encode over the relation `vecs` (vec_id,
+    `vec`): `cb` (m, j, cv), `best` (vec_id, m, code, sqd; argmin ties to
+    the smaller j) and `codes` (vec_id, codes, distortion)."""
+    return f"""cb AS MATERIALIZED ({codebook_sql(codebook, "m", "j")}),
+    sc AS MATERIALIZED ({_pq_sqd_sql(codebook, vecs, "vec_id", vec)}),
+    best AS MATERIALIZED (SELECT vec_id, m, j AS code, sqd FROM (
+            SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, m
+                       ORDER BY sqd, j) AS rn FROM sc) WHERE rn = 1),
+    codes AS MATERIALIZED (
+      SELECT vec_id, list(code ORDER BY m) AS codes,
+             {sum_fold_sql("list(sqd ORDER BY m)")} AS distortion
+      FROM best GROUP BY vec_id)"""
 
 
 def pq_adc_topk(emb: DataFrame, query_ids, codebook,

@@ -30,6 +30,7 @@ from pyspark.sql import types as T
 
 from kafka_flink_processing_spark.functions.constants import N_MINHASH
 from kafka_flink_processing_spark.functions.exact import dsum, dsum_sql
+from kafka_flink_processing_spark.functions.ivf_codebook import IVF_CENTROIDS
 from kafka_flink_processing_spark.functions.text import (
     LANG_ID_SQL,
     LANG_SCORES_SQL,
@@ -46,10 +47,15 @@ from kafka_flink_processing_spark.functions.text import (
     word_grams,
     word_grams_sql,
 )
+from kafka_flink_processing_spark.operators.similarity import (
+    UNIT_INFO_CTE,
+    bruteforce_topk_sql,
+    ivf_cells_cte,
+    ivf_probes_cte,
+    ivf_topk_sql,
+    norm_sql,
+)
 from kafka_flink_processing_spark.plans.extensions import (
-    COSINE_BASE_SQL,
-    DOT_SQL,
-    codebook_values_sql,
     minhash_bands_sql,
     minhash_sig_sql,
     shingles_cte,
@@ -129,45 +135,13 @@ def minhash_jaccard_accuracy_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "abs_err"))
 
 
-from kafka_flink_processing_spark.operators.similarity import IVF_NPROBE  # noqa: E402
-
-
 @register(
     "ivf_recall_eval",
     oracle=f"""
-    WITH {COSINE_BASE_SQL},
-    cent AS ({codebook_values_sql()}),
-    bf AS (SELECT query_id, cand_id FROM (
-        SELECT q.query_id, c.vec_id AS cand_id,
-               ROW_NUMBER() OVER (PARTITION BY q.query_id
-                 ORDER BY {DOT_SQL.format(a='q.qv', b='c.embedding')}
-                            / (q.qn * c.nrm) DESC, c.vec_id) AS rank
-        FROM (SELECT vec_id AS query_id, embedding AS qv, nrm AS qn
-              FROM n WHERE vec_id < 5) q
-        JOIN n c ON c.vec_id != q.query_id) WHERE rank <= 10),
-    asgj AS (SELECT v.vec_id, v.embedding, v.nrm, c.cid,
-                    {DOT_SQL.format(a='v.embedding', b='c.cv')} / (v.nrm * c.cn)
-                      AS cos
-             FROM n v CROSS JOIN cent c),
-    asg AS (SELECT vec_id, embedding, nrm, CAST(cid AS BIGINT) AS cell FROM (
-              SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                         ORDER BY cos DESC, cid) AS rn
-              FROM asgj) WHERE rn = 1),
-    probes AS (SELECT vec_id AS query_id, embedding AS qv, nrm AS qn,
-                      CAST(cid AS BIGINT) AS cell FROM (
-                 SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                            ORDER BY cos DESC, cid) AS rn
-                 FROM asgj WHERE vec_id < 5) WHERE rn <= {IVF_NPROBE}),
-    iv AS (SELECT query_id, cand_id FROM (
-        SELECT query_id, cand_id,
-               ROW_NUMBER() OVER (PARTITION BY query_id
-                 ORDER BY cosine DESC, cand_id) AS rank
-        FROM (SELECT DISTINCT p.query_id, a.vec_id AS cand_id,
-                     {DOT_SQL.format(a='p.qv', b='a.embedding')} / (p.qn * a.nrm)
-                       AS cosine
-              FROM probes p JOIN asg a
-                ON a.cell = p.cell AND a.vec_id != p.query_id))
-        WHERE rank <= 10)
+    WITH {UNIT_INFO_CTE}, {ivf_cells_cte(IVF_CENTROIDS)},
+    {ivf_probes_cte(range(5))},
+    bf AS ({bruteforce_topk_sql(range(5), 10)}),
+    iv AS ({ivf_topk_sql(10)})
     SELECT b.query_id, CAST(COUNT(*) AS BIGINT) AS n_true,
            CAST(COUNT(i.cand_id) AS BIGINT) AS n_hit,
            CAST(COUNT(i.cand_id) AS DOUBLE) / COUNT(*) AS recall_at_10
@@ -185,9 +159,6 @@ from kafka_flink_processing_spark.operators.similarity import IVF_NPROBE  # noqa
         "itself adds only a 50-row join to the two retrievals.",
 )
 def ivf_recall_eval_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.functions.ivf_codebook import (
-        IVF_CENTROIDS,
-    )
     from kafka_flink_processing_spark.operators.similarity import (
         cosine_topk,
         ivf_cosine_topk,
@@ -268,17 +239,8 @@ def lsh_threshold_sweep_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "semantic_mix_matrix",
     oracle=f"""
-    WITH {COSINE_BASE_SQL},
-    lab AS (SELECT vec_id, CAST(label AS BIGINT) AS label FROM embeddings),
-    cent AS ({codebook_values_sql()}),
-    asgj AS (SELECT v.vec_id, c.cid,
-                    {DOT_SQL.format(a='v.embedding', b='c.cv')} / (v.nrm * c.cn)
-                      AS cos
-             FROM n v CROSS JOIN cent c),
-    asg AS (SELECT vec_id, CAST(cid AS BIGINT) AS cell FROM (
-              SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                         ORDER BY cos DESC, cid) AS rn
-              FROM asgj) WHERE rn = 1)
+    WITH {UNIT_INFO_CTE}, {ivf_cells_cte(IVF_CENTROIDS)},
+    lab AS (SELECT vec_id, CAST(label AS BIGINT) AS label FROM embeddings)
     SELECT cell, label, CAST(COUNT(*) AS BIGINT) AS n_vecs
     FROM asg JOIN lab USING (vec_id)
     GROUP BY cell, label
@@ -295,9 +257,6 @@ def semantic_mix_matrix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_flink_processing_spark.operators.similarity import (
         assign_cells,
         with_unit_info,
-    )
-    from kafka_flink_processing_spark.functions.ivf_codebook import (
-        IVF_CENTROIDS,
     )
     emb = load_table(spark, "embeddings", sf_dir)
     base = with_unit_info(emb)
@@ -508,7 +467,7 @@ def packing_efficiency_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "embedding_norm_stats",
     oracle=f"""
     WITH n AS (SELECT CAST(label AS BIGINT) AS label,
-                      sqrt({DOT_SQL.format(a='embedding', b='embedding')}) AS nrm
+                      {norm_sql('embedding')} AS nrm
                FROM embeddings),
     f AS (SELECT label,
                  CASE WHEN isfinite(nrm) AND nrm <= 1000.0 THEN nrm END
@@ -924,31 +883,11 @@ _NPROBES = (1, 2, 4, 8)
 @register(
     "ivf_probe_sweep",
     oracle=f"""
-    WITH {COSINE_BASE_SQL},
-    cent AS ({codebook_values_sql()}),
-    bf AS (SELECT query_id, cand_id FROM (
-        SELECT q.query_id, c.vec_id AS cand_id,
-               ROW_NUMBER() OVER (PARTITION BY q.query_id
-                 ORDER BY {DOT_SQL.format(a='q.qv', b='c.embedding')}
-                            / (q.qn * c.nrm) DESC, c.vec_id) AS rank
-        FROM (SELECT vec_id AS query_id, embedding AS qv, nrm AS qn
-              FROM n WHERE vec_id < 5) q
-        JOIN n c ON c.vec_id != q.query_id) WHERE rank <= 10),
-    asgj AS (SELECT v.vec_id, c.cid,
-                    {DOT_SQL.format(a='v.embedding', b='c.cv')} / (v.nrm * c.cn)
-                      AS cos
-             FROM n v CROSS JOIN cent c),
-    asg AS (SELECT vec_id, CAST(cid AS BIGINT) AS cell FROM (
-              SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                         ORDER BY cos DESC, cid) AS rn
-              FROM asgj) WHERE rn = 1),
-    qrank AS (SELECT vec_id AS query_id, CAST(cid AS BIGINT) AS cell,
-                     ROW_NUMBER() OVER (PARTITION BY vec_id
-                        ORDER BY cos DESC, cid) AS rn
-              FROM asgj WHERE vec_id < 5),
+    WITH {UNIT_INFO_CTE}, {ivf_cells_cte(IVF_CENTROIDS)},
+    bf AS ({bruteforce_topk_sql(range(5), 10)}),
     truth AS (SELECT b.query_id, q.rn
               FROM bf b JOIN asg a ON a.vec_id = b.cand_id
-              JOIN qrank q ON q.query_id = b.query_id AND q.cell = a.cell)
+              JOIN asgj q ON q.vec_id = b.query_id AND q.cid = a.cell)
     SELECT CAST(np.nprobe AS BIGINT) AS nprobe,
            CAST(COUNT(*) AS BIGINT) AS n_true,
            CAST(SUM(CASE WHEN t.rn <= np.nprobe THEN 1 ELSE 0 END)
@@ -973,9 +912,6 @@ _NPROBES = (1, 2, 4, 8)
         "added sweep point.",
 )
 def ivf_probe_sweep_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.functions.ivf_codebook import (
-        IVF_CENTROIDS,
-    )
     from kafka_flink_processing_spark.operators.similarity import (
         _probe_order,
         _scored_cells,

@@ -10,7 +10,8 @@ oracle_check.py). The DuckDB SQL below is GENERATED from the same constants
 algorithms (LSH banding) compare exactly: both engines run the same
 deterministic algorithm. Per-document text rules (hashes, tokens, scores,
 the split, word n-grams) are spliced in from their renderings in
-functions/text.py, never re-spelled here.
+functions/text.py, and the embedding search steps (folds, top-k, IVF
+cells, PQ, LSH bands) from operators/similarity.py, never re-spelled here.
 """
 
 from __future__ import annotations
@@ -20,7 +21,6 @@ from pyspark.sql import functions as F
 
 from kafka_flink_processing_spark.functions.exact import dsum, dsum_sql
 from kafka_flink_processing_spark.functions.constants import (
-    LSH_PLANES,
     MINHASH_COEFFS,
     MINHASH_P,
     N_BANDS,
@@ -85,8 +85,28 @@ from kafka_flink_processing_spark.operators.dedup import (
     simhash_pairs,
 )
 from kafka_flink_processing_spark.operators.similarity import (
+    IVF_K,
+    IVF_NPROBE,
+    UNIT_INFO_CTE,
+    adc_topk_sql,
+    bruteforce_topk_sql,
+    cosine_sql,
     cosine_topk,
+    cosine_topk_sql,
+    dot_sql,
+    ivf_cells_cte,
+    ivf_probes_cte,
+    ivf_topk_sql,
+    lsh_bands_cte,
     lsh_cosine_topk,
+    norm_sql,
+    pq_encode_cte,
+    pq_luts_cte,
+    query_luts_cte,
+    query_set_sql,
+    residual_sql,
+    sqdist_sql,
+    topk_sql,
 )
 from kafka_flink_processing_spark.plans.registry import register
 from kafka_flink_processing_spark.sources.parquet import load_table
@@ -124,15 +144,6 @@ def minhash_sig_sql() -> str:
 # (LSH pair mining, SemDeDup, the cross-modal verifier) so the views stay
 # comparable; retune it in ONE place.
 EMBED_COS_T = 0.45
-
-DOT_SQL = ("list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-           "list_transform(list_zip({a}, {b}), "
-           "p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))), "
-           "(acc, x) -> acc + x)")
-
-
-def _plane_literal(plane: list[float]) -> str:
-    return "[" + ", ".join(repr(w) for w in plane) + "]::DOUBLE[]"
 
 
 # ---------------------------------------------------------------------------
@@ -485,29 +496,9 @@ def dedup_simhash_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Similarity search
 # ---------------------------------------------------------------------------
 
-COSINE_BASE_SQL = f"""
-  n AS (SELECT vec_id, embedding,
-          sqrt({DOT_SQL.format(a='embedding', b='embedding')}) AS nrm
-        FROM embeddings)
-"""
-
-
 @register(
     "similarity_bruteforce_topk",
-    oracle=f"""
-    WITH {COSINE_BASE_SQL},
-    q AS (SELECT vec_id AS query_id, embedding AS qv, nrm AS qn FROM n
-          WHERE vec_id < 5),
-    scored AS (
-      SELECT query_id, c.vec_id AS cand_id,
-             {DOT_SQL.format(a='qv', b='c.embedding')} / (qn * c.nrm) AS cosine
-      FROM q JOIN n c ON c.vec_id != query_id)
-    SELECT query_id, cand_id, cosine, rank FROM (
-      SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                       ORDER BY cosine DESC, cand_id) AS BIGINT) AS rank
-      FROM scored
-    ) WHERE rank <= 10
-    """,
+    oracle=f"WITH {UNIT_INFO_CTE} {bruteforce_topk_sql(range(5), 10)}",
     doc="brute-force cosine top-10 for 5 query vectors: broadcast queries x "
         "partitioned corpus, sequential-fold dot products (bit-reproducible).",
     bench=True,
@@ -519,52 +510,15 @@ def similarity_bruteforce_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.col("rank").cast("long").alias("rank"))
 
 
-def _lsh_sig_sql() -> str:
-    projs = ", ".join(
-        DOT_SQL.format(a='embedding', b=_plane_literal(plane)) + f" AS pr{p}"
-        for p, plane in enumerate(LSH_PLANES))
-    assemble = " + ".join(
-        f"(CASE WHEN pr{p} > 0 THEN CAST({2**p} AS BIGINT) ELSE 0 END)"
-        for p in range(len(LSH_PLANES)))
-    return f"""
-  pr AS (SELECT vec_id, embedding, nrm, {projs} FROM n),
-  sg AS (SELECT vec_id, embedding, nrm, {assemble} AS sig FROM pr)
-"""
-
-
-def _lsh_bands_rows_sql() -> str:
-    from kafka_flink_processing_spark.operators.similarity import (
-        LSH_BAND_BITS,
-        LSH_N_BANDS,
-    )
-    mask = (1 << LSH_BAND_BITS) - 1
-    arms = [f"SELECT vec_id, embedding, nrm, {b} AS band, "
-            f"(sig >> {b * LSH_BAND_BITS}) & {mask} AS key FROM sg"
-            for b in range(LSH_N_BANDS)]
-    return " UNION ALL ".join(arms)
-
-
 @register(
     "similarity_lsh_topk",
     oracle=f"""
-    WITH {COSINE_BASE_SQL},
-    {_lsh_sig_sql()},
-    bands AS ({_lsh_bands_rows_sql()}),
-    cand AS (
-      SELECT DISTINCT q.vec_id AS query_id, q.embedding AS qv, q.nrm AS qn,
-             c.vec_id AS cand_id, c.embedding AS cv, c.nrm AS cn
-      FROM bands q JOIN bands c
-        ON q.band = c.band AND q.key = c.key AND c.vec_id != q.vec_id
-      WHERE q.vec_id < 5),
-    scored AS (
-      SELECT query_id, cand_id,
-             {DOT_SQL.format(a='qv', b='cv')} / (qn * cn) AS cosine
-      FROM cand)
-    SELECT query_id, cand_id, cosine, rank FROM (
-      SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                       ORDER BY cosine DESC, cand_id) AS BIGINT) AS rank
-      FROM scored
-    ) WHERE rank <= 10
+    WITH {UNIT_INFO_CTE}, {lsh_bands_cte()},
+    cand AS (SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS cand_id
+             FROM bands q JOIN bands c
+               ON q.band = c.band AND q.key = c.key AND c.vec_id != q.vec_id
+             WHERE q.vec_id IN {query_set_sql(range(5))})
+    {cosine_topk_sql("cand", 10)}
     """,
     doc="ANN top-k via banded random-hyperplane LSH (8 bands x 2 bits, "
         "OR-amplified; fixed literal planes). Shuffle on (band, key) only — "
@@ -578,51 +532,16 @@ def similarity_lsh_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.col("rank").cast("long").alias("rank"))
 
 
-from kafka_flink_processing_spark.operators.similarity import IVF_K, IVF_NPROBE  # noqa: E402
 from kafka_flink_processing_spark.functions.ivf_codebook import IVF_CENTROIDS  # noqa: E402
 
-
-def codebook_values_sql() -> str:
-    """The pinned k-means codebook as a VALUES list — the same 6dp literals
-    the Spark operator ships, so both engines assign identical cells."""
-    rows = ", ".join(
-        f"({cid}, {_plane_literal(list(cv))})"
-        for cid, cv in enumerate(IVF_CENTROIDS))
-    return (f"SELECT cid, cv, sqrt({DOT_SQL.format(a='cv', b='cv')}) AS cn "
-            f"FROM (VALUES {rows}) AS t(cid, cv)")
+# the IVF oracles' common head: norms, cells, and the five queries' probes
+_IVF_CTES = (f"{UNIT_INFO_CTE}, {ivf_cells_cte(IVF_CENTROIDS)}, "
+             f"{ivf_probes_cte(range(5))}")
 
 
 @register(
     "similarity_ivf_topk",
-    oracle=f"""
-    WITH {COSINE_BASE_SQL},
-    cent AS ({codebook_values_sql()}),
-    asgj AS (SELECT v.vec_id, v.embedding, v.nrm, c.cid,
-                    {DOT_SQL.format(a='v.embedding', b='c.cv')} / (v.nrm * c.cn)
-                      AS cos
-             FROM n v CROSS JOIN cent c),
-    asg AS (SELECT vec_id, embedding, nrm, CAST(cid AS BIGINT) AS cell FROM (
-              SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                         ORDER BY cos DESC, cid) AS rn
-              FROM asgj) WHERE rn = 1),
-    probes AS (SELECT vec_id AS query_id, embedding AS qv, nrm AS qn,
-                      CAST(cid AS BIGINT) AS cell FROM (
-                 SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                            ORDER BY cos DESC, cid) AS rn
-                 FROM asgj WHERE vec_id < 5) WHERE rn <= {IVF_NPROBE}),
-    cand AS (SELECT DISTINCT query_id, qv, qn, a.vec_id AS cand_id,
-                    a.embedding AS cv, a.nrm AS cn
-             FROM probes p JOIN asg a
-               ON a.cell = p.cell AND a.vec_id != p.query_id),
-    scored AS (SELECT query_id, cand_id,
-                      {DOT_SQL.format(a='qv', b='cv')} / (qn * cn) AS cosine
-               FROM cand)
-    SELECT query_id, cand_id, cosine, rank FROM (
-      SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                       ORDER BY cosine DESC, cand_id) AS BIGINT) AS rank
-      FROM scored
-    ) WHERE rank <= 10
-    """,
+    oracle=f"WITH {_IVF_CTES} {ivf_topk_sql(10)}",
     doc=f"ANN top-k via IVF coarse quantizer ({IVF_K} cells, nprobe="
         f"{IVF_NPROBE}): codebook = offline k-means output on sf0.01 "
         "(operators/kmeans.py, pinned as 6dp literals by "
@@ -647,69 +566,20 @@ def similarity_ivf_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from kafka_flink_processing_spark.functions.pq_codebook import (  # noqa: E402
     PQ_CODEBOOK,
-    PQ_DSUB,
     PQ_K,
     PQ_M,
 )
 
-# squared L2 distance as the same sequential list_reduce fold DOT_SQL uses
-# (index order, per-element cast to double) — matches operators/
-# similarity.py::_sqd bit for bit
-_SQDIST = ("list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-           "list_transform(list_zip({a}, {b}), "
-           "p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)) "
-           "* (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)))), "
-           "(acc, x) -> acc + x)")
-
-
-def _pq_codebook_values_sql(codebook=None) -> str:
-    """A pinned M x K x dsub PQ codebook as a VALUES list — the same
-    6dp literals the Spark operators ship (functions/pq_codebook.py /
-    pq_residual_codebook.py)."""
-    rows = ", ".join(
-        f"({m}, {j}, {_plane_literal(list(cv))})"
-        for m, sub in enumerate(codebook or PQ_CODEBOOK)
-        for j, cv in enumerate(sub))
-    return f"SELECT m, j, cv FROM (VALUES {rows}) AS t(m, j, cv)"
-
-
-# shared encode stages: subspace scoring, per-(vec, m) argmin, codes list
-_PQ_ENC_SQL = f"""cb AS MATERIALIZED ({_pq_codebook_values_sql()}),
-    sc AS MATERIALIZED (SELECT e.vec_id, c.m, c.j,
-            {_SQDIST.format(
-                a=f'list_slice(e.embedding, c.m*{PQ_DSUB}+1, '
-                  f'c.m*{PQ_DSUB}+{PQ_DSUB})',
-                b='c.cv')} AS sqd
-         FROM embeddings e CROSS JOIN cb c),
-    best AS MATERIALIZED (SELECT vec_id, m, j AS code, sqd FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, m
-                       ORDER BY sqd, j) AS rn FROM sc) WHERE rn = 1),
-    codes AS MATERIALIZED (SELECT vec_id, list(code ORDER BY m) AS codes
-                           FROM best GROUP BY vec_id)"""
-
-# ADC: sum_m LUT[m*K + codes[m]] unrolled in subspace order (left-assoc
-# addition == the Spark fold's order; term values are bit-identical)
-_PQ_ADIST = " + ".join(
-    f"lut[{m * PQ_K} + codes[{m + 1}] + 1]" for m in range(PQ_M))
+# the raw-vector PQ oracles' common head: the corpus codes and the five
+# queries' lookup tables; _PQ_ADC pairs every code row with every table
+_PQ_CTES = (f"{pq_encode_cte(PQ_CODEBOOK)}, "
+            f"{query_luts_cte(PQ_CODEBOOK, range(5))}")
+_PQ_ADC = "(SELECT * FROM codes CROSS JOIN luts)"
 
 
 @register(
     "similarity_pq_topk",
-    oracle=f"""
-    WITH {_PQ_ENC_SQL},
-    luts AS MATERIALIZED (SELECT vec_id AS query_id,
-                                 list(sqd ORDER BY m, j) AS lut
-            FROM sc WHERE vec_id < 5 GROUP BY vec_id),
-    scored AS (SELECT l.query_id, c.vec_id AS cand_id,
-                      {_PQ_ADIST} AS adist
-               FROM codes c CROSS JOIN luts l
-               WHERE l.query_id != c.vec_id)
-    SELECT query_id, cand_id, adist, rank FROM (
-      SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                       ORDER BY adist, cand_id) AS BIGINT) AS rank
-      FROM scored
-    ) WHERE rank <= 10
-    """,
+    oracle=f"WITH {_PQ_CTES} {adc_topk_sql(_PQ_ADC, PQ_CODEBOOK, 10)}",
     doc=f"ANN top-k via PRODUCT QUANTIZATION + asymmetric distance "
         f"(Jegou et al. 2011): the corpus encodes once against the "
         f"pinned M={PQ_M} x K={PQ_K} codebook (trained offline per "
@@ -736,28 +606,14 @@ def similarity_pq_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "similarity_pq_rerank_topk",
     oracle=f"""
-    WITH {_PQ_ENC_SQL},
-    luts AS MATERIALIZED (SELECT vec_id AS query_id,
-                                 list(sqd ORDER BY m, j) AS lut
-            FROM sc WHERE vec_id < 5 GROUP BY vec_id),
-    adc AS (SELECT l.query_id, c.vec_id AS cand_id,
-                   {_PQ_ADIST} AS adist
-            FROM codes c CROSS JOIN luts l
-            WHERE l.query_id != c.vec_id),
-    short AS (SELECT query_id, cand_id FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                 ORDER BY adist, cand_id) AS rn FROM adc) WHERE rn <= 50),
+    WITH {_PQ_CTES},
+    short AS ({adc_topk_sql(_PQ_ADC, PQ_CODEBOOK, 50)}),
     rer AS (SELECT s.query_id, s.cand_id,
-                   {_SQDIST.format(a='q.embedding', b='x.embedding')}
-                     AS dist
+                   {sqdist_sql('q.embedding', 'x.embedding')} AS dist
             FROM short s
             JOIN embeddings q ON q.vec_id = s.query_id
             JOIN embeddings x ON x.vec_id = s.cand_id)
-    SELECT query_id, cand_id, dist, rank FROM (
-      SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                       ORDER BY dist, cand_id) AS BIGINT) AS rank
-      FROM rer
-    ) WHERE rank <= 10
+    {topk_sql("rer", "dist", 10)}
     """,
     doc="the production PQ deployment pattern: ADC over the compressed "
         "codes retrieves a 50-candidate shortlist, then ONLY the "
@@ -784,18 +640,13 @@ def similarity_pq_rerank_topk_q(spark: SparkSession,
 @register(
     "pq_distortion_by_label",
     oracle=f"""
-    WITH {_PQ_ENC_SQL},
-    pv AS (SELECT vec_id,
-                  list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                                           list(sqd ORDER BY m)),
-                              (acc, x) -> acc + x) AS distortion
-           FROM best GROUP BY vec_id),
+    WITH {pq_encode_cte(PQ_CODEBOOK)},
     f AS (SELECT vec_id,
                  CASE WHEN isfinite(distortion) AND distortion <= 1000000.0
                       THEN distortion END AS fd,
                  CASE WHEN isfinite(distortion) AND distortion <= 1000000.0
                       THEN 0 ELSE 1 END AS bad
-          FROM pv)
+          FROM codes)
     SELECT CAST(e.label AS BIGINT) AS label,
            CAST(COUNT(*) AS BIGINT) AS n_vecs,
            CAST(SUM(bad) AS BIGINT) AS n_flagged,
@@ -841,35 +692,12 @@ def pq_distortion_by_label_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "similarity_ivfpq_topk",
     oracle=f"""
-    WITH {COSINE_BASE_SQL},
-    cent AS ({codebook_values_sql()}),
-    asgj AS (SELECT v.vec_id, v.embedding, v.nrm, c.cid,
-                    {DOT_SQL.format(a='v.embedding', b='c.cv')} / (v.nrm * c.cn)
-                      AS cos
-             FROM n v CROSS JOIN cent c),
-    asg AS (SELECT vec_id, CAST(cid AS BIGINT) AS cell FROM (
-              SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                         ORDER BY cos DESC, cid) AS rn
-              FROM asgj) WHERE rn = 1),
-    probes AS (SELECT vec_id AS query_id, CAST(cid AS BIGINT) AS cell FROM (
-                 SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                            ORDER BY cos DESC, cid) AS rn
-                 FROM asgj WHERE vec_id < 5) WHERE rn <= {IVF_NPROBE}),
-    {_PQ_ENC_SQL},
-    luts AS MATERIALIZED (SELECT vec_id AS query_id,
-                                 list(sqd ORDER BY m, j) AS lut
-            FROM sc WHERE vec_id < 5 GROUP BY vec_id),
-    cand AS (SELECT p.query_id, c.vec_id AS cand_id, c.codes
-             FROM probes p
-             JOIN asg a ON a.cell = p.cell AND a.vec_id != p.query_id
-             JOIN codes c ON c.vec_id = a.vec_id),
-    scored AS (SELECT query_id, cand_id, {_PQ_ADIST} AS adist
-               FROM cand JOIN luts USING (query_id))
-    SELECT query_id, cand_id, adist, rank FROM (
-      SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                       ORDER BY adist, cand_id) AS BIGINT) AS rank
-      FROM scored
-    ) WHERE rank <= 10
+    WITH {_IVF_CTES}, {_PQ_CTES},
+    cand AS (SELECT p.query_id, l.lut, a.vec_id, c.codes
+             FROM probes p JOIN asg a ON a.cell = p.cell
+             JOIN codes c ON c.vec_id = a.vec_id
+             JOIN luts l ON l.query_id = p.query_id)
+    {adc_topk_sql("cand", PQ_CODEBOOK, 10)}
     """,
     doc=f"IVFADC (Jegou et al. 2011 §V — the FAISS default): IVF "
         f"cell pruning composed with PQ asymmetric distance, probing "
@@ -896,64 +724,27 @@ from kafka_flink_processing_spark.functions.pq_residual_codebook import (  # noq
     PQR_CODEBOOK,
 )
 
-_RESID = ("list_transform(list_zip({a}, {b}), "
-          "z -> CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE))")
+# each query's residual against each of its probed cells
+_PROBE_RESIDUALS = f"""(
+      SELECT p.query_id, p.cell, {residual_sql('e.embedding', 'c.cv')} AS r
+      FROM probes p JOIN embeddings e ON e.vec_id = p.query_id
+      JOIN cent c ON c.cid = p.cell)"""
 
 
 @register(
     "similarity_ivfpq_residual_topk",
     oracle=f"""
-    WITH {COSINE_BASE_SQL},
-    cent AS ({codebook_values_sql()}),
-    asgj AS (SELECT v.vec_id, v.embedding, v.nrm, c.cid,
-                    {DOT_SQL.format(a='v.embedding', b='c.cv')} / (v.nrm * c.cn)
-                      AS cos
-             FROM n v CROSS JOIN cent c),
-    asg AS (SELECT vec_id, CAST(cid AS BIGINT) AS cell FROM (
-              SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                         ORDER BY cos DESC, cid) AS rn
-              FROM asgj) WHERE rn = 1),
-    probes AS (SELECT vec_id AS query_id, CAST(cid AS BIGINT) AS cell FROM (
-                 SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                            ORDER BY cos DESC, cid) AS rn
-                 FROM asgj WHERE vec_id < 5) WHERE rn <= {IVF_NPROBE}),
-    rcb AS MATERIALIZED ({_pq_codebook_values_sql(PQR_CODEBOOK)}),
-    rv AS MATERIALIZED (SELECT a.vec_id, a.cell,
-            {_RESID.format(a='e.embedding', b='c.cv')} AS r
-         FROM asg a JOIN embeddings e USING (vec_id)
-         JOIN cent c ON c.cid = a.cell),
-    sc2 AS MATERIALIZED (SELECT v.vec_id, v.cell, c.m, c.j,
-            {_SQDIST.format(
-                a=f'list_slice(v.r, c.m*{PQ_DSUB}+1, '
-                  f'c.m*{PQ_DSUB}+{PQ_DSUB})',
-                b='c.cv')} AS sqd
-         FROM rv v CROSS JOIN rcb c),
-    best2 AS (SELECT vec_id, cell, m, j AS code FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, m
-                       ORDER BY sqd, j) AS rn FROM sc2) WHERE rn = 1),
-    codes2 AS (SELECT vec_id, cell, list(code ORDER BY m) AS codes
-               FROM best2 GROUP BY vec_id, cell),
-    qrv AS (SELECT p.query_id, p.cell,
-            {_RESID.format(a='e.embedding', b='c.cv')} AS r
-         FROM probes p JOIN embeddings e ON e.vec_id = p.query_id
-         JOIN cent c ON c.cid = p.cell),
-    lsc AS (SELECT q.query_id, q.cell, c.m, c.j,
-            {_SQDIST.format(
-                a=f'list_slice(q.r, c.m*{PQ_DSUB}+1, '
-                  f'c.m*{PQ_DSUB}+{PQ_DSUB})',
-                b='c.cv')} AS sqd
-         FROM qrv q CROSS JOIN rcb c),
-    luts AS (SELECT query_id, cell, list(sqd ORDER BY m, j) AS lut
-             FROM lsc GROUP BY query_id, cell),
-    scored AS (SELECT l.query_id, c2.vec_id AS cand_id,
-                      {_PQ_ADIST} AS adist
-               FROM codes2 c2 JOIN luts l
-                 ON l.cell = c2.cell AND c2.vec_id != l.query_id)
-    SELECT query_id, cand_id, adist, rank FROM (
-      SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                       ORDER BY adist, cand_id) AS BIGINT) AS rank
-      FROM scored
-    ) WHERE rank <= 10
+    WITH {_IVF_CTES},
+    rv AS MATERIALIZED (
+      SELECT a.vec_id, {residual_sql('e.embedding', 'c.cv')} AS r
+      FROM asg a JOIN embeddings e USING (vec_id)
+      JOIN cent c ON c.cid = a.cell),
+    {pq_encode_cte(PQR_CODEBOOK, "rv", "r")},
+    {pq_luts_cte(PQR_CODEBOOK, _PROBE_RESIDUALS, "query_id, cell", "r")},
+    cand AS (SELECT l.query_id, l.lut, c.vec_id, c.codes
+             FROM codes c JOIN asg a USING (vec_id)
+             JOIN luts l ON l.cell = a.cell)
+    {adc_topk_sql("cand", PQR_CODEBOOK, 10)}
     """,
     doc="RESIDUAL IVFADC — the full FAISS-default encoding (Jegou et "
         "al. 2011 §V.A): each corpus vector PQ-encodes its residual "
@@ -982,16 +773,8 @@ def similarity_ivfpq_residual_topk_q(spark: SparkSession,
 @register(
     "kmeans_assign_cells",
     oracle=f"""
-    WITH {COSINE_BASE_SQL},
-    cent AS ({codebook_values_sql()}),
-    asgj AS (SELECT v.vec_id, c.cid,
-                    {DOT_SQL.format(a='v.embedding', b='c.cv')} / (v.nrm * c.cn)
-                      AS cos
-             FROM n v CROSS JOIN cent c)
-    SELECT vec_id, CAST(cid AS BIGINT) AS cell, cos AS cell_cosine FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                 ORDER BY cos DESC, cid) AS rn
-      FROM asgj) WHERE rn = 1
+    WITH {UNIT_INFO_CTE}, {ivf_cells_cte(IVF_CENTROIDS)}
+    SELECT vec_id, cell, cos AS cell_cosine FROM asg
     """,
     doc="k-means cell assignment against the frozen codebook "
         "(functions/ivf_codebook.py, the offline trainer's pinned 6dp "
@@ -1020,21 +803,11 @@ def kmeans_assign_cells_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_semantic",
     oracle=f"""
-    WITH {COSINE_BASE_SQL},
-    cent AS ({codebook_values_sql()}),
-    asgj AS (SELECT v.vec_id, v.embedding, v.nrm, c.cid,
-                    {DOT_SQL.format(a='v.embedding', b='c.cv')} / (v.nrm * c.cn)
-                      AS cos
-             FROM n v CROSS JOIN cent c),
-    asg AS (SELECT vec_id, embedding, nrm, CAST(cid AS BIGINT) AS cell FROM (
-              SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                         ORDER BY cos DESC, cid) AS rn
-              FROM asgj) WHERE rn = 1),
+    WITH {UNIT_INFO_CTE}, {ivf_cells_cte(IVF_CENTROIDS)},
+    an AS (SELECT * FROM asg JOIN n USING (vec_id)),
     dups AS (SELECT DISTINCT b.vec_id
-             FROM asg a JOIN asg b
-               ON a.cell = b.cell AND a.vec_id < b.vec_id
-             WHERE {DOT_SQL.format(a='a.embedding', b='b.embedding')}
-                     / (a.nrm * b.nrm) >= {EMBED_COS_T})
+             FROM an a JOIN an b ON a.cell = b.cell AND a.vec_id < b.vec_id
+             WHERE {cosine_sql('a', 'b')} >= {EMBED_COS_T})
     SELECT a.vec_id, a.cell, (d.vec_id IS NULL) AS keep
     FROM asg a LEFT JOIN dups d ON a.vec_id = d.vec_id
     """,
@@ -1067,18 +840,14 @@ def dedup_semantic_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # recall-vs-brute-force property stays asserted in
     # tests/test_extensions.py.
     oracle=f"""
-    WITH {COSINE_BASE_SQL},
-    {_lsh_sig_sql()},
-    bands AS ({_lsh_bands_rows_sql()}),
-    cand AS (
-      SELECT DISTINCT a.vec_id AS vec_a, a.embedding AS va, a.nrm AS na,
-             b.vec_id AS vec_b, b.embedding AS vb, b.nrm AS nb
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.key = b.key AND a.vec_id < b.vec_id)
-    SELECT vec_a, vec_b,
-           {DOT_SQL.format(a='va', b='vb')} / (na * nb) AS cosine
-    FROM cand
-    WHERE {DOT_SQL.format(a='va', b='vb')} / (na * nb) >= {EMBED_COS_T}
+    WITH {UNIT_INFO_CTE}, {lsh_bands_cte()},
+    cand AS (SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
+             FROM bands a JOIN bands b
+               ON a.band = b.band AND a.key = b.key AND a.vec_id < b.vec_id),
+    scored AS (SELECT vec_a, vec_b, {cosine_sql('a', 'b')} AS cosine
+               FROM cand JOIN n a ON a.vec_id = vec_a
+               JOIN n b ON b.vec_id = vec_b)
+    SELECT vec_a, vec_b, cosine FROM scored WHERE cosine >= {EMBED_COS_T}
     """,
     doc="embedding-cosine near-dup pairs via banded-LSH candidates + exact "
         "re-scoring (no all-pairs join in the plan). Oracle = the same "
@@ -1787,6 +1556,7 @@ CROSSMODAL_COS_T = EMBED_COS_T
     cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
              FROM bands a JOIN bands b
                ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
+    {UNIT_INFO_CTE},
     pairs AS (
       SELECT doc_a, doc_b,
              len(list_intersect(sa.sh, sb.sh))
@@ -1797,17 +1567,11 @@ CROSSMODAL_COS_T = EMBED_COS_T
               / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh)))
             >= 0.6)
     SELECT p.doc_a, p.doc_b, p.jaccard,
-           {DOT_SQL.format(a='ea.embedding', b='eb.embedding')}
-             / (sqrt({DOT_SQL.format(a='ea.embedding', b='ea.embedding')})
-                * sqrt({DOT_SQL.format(a='eb.embedding', b='eb.embedding')}))
-             AS cosine,
-           {DOT_SQL.format(a='ea.embedding', b='eb.embedding')}
-             / (sqrt({DOT_SQL.format(a='ea.embedding', b='ea.embedding')})
-                * sqrt({DOT_SQL.format(a='eb.embedding', b='eb.embedding')}))
-             >= {CROSSMODAL_COS_T} AS semantic_agree
+           {cosine_sql('ea', 'eb')} AS cosine,
+           {cosine_sql('ea', 'eb')} >= {CROSSMODAL_COS_T} AS semantic_agree
     FROM pairs p
-    LEFT JOIN embeddings ea ON p.doc_a = ea.vec_id
-    LEFT JOIN embeddings eb ON p.doc_b = eb.vec_id
+    LEFT JOIN n ea ON p.doc_a = ea.vec_id
+    LEFT JOIN n eb ON p.doc_b = eb.vec_id
     """,
     doc="cross-modal near-dup verification: every MinHash-LSH lexical "
         "pair annotated with its embedding cosine and a semantic_agree "
@@ -2369,14 +2133,14 @@ def exactsubstr_redact_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT vec_id,
            CAST(len(embedding) AS BIGINT) AS dim,
-           sqrt({DOT_SQL.format(a='embedding', b='embedding')}) AS l2_norm,
+           {norm_sql('embedding')} AS l2_norm,
            CAST(list_min(list_transform(embedding, x -> CAST(x AS DOUBLE)))
                 AS DOUBLE) AS min_c,
            CAST(list_max(list_transform(embedding, x -> CAST(x AS DOUBLE)))
                 AS DOUBLE) AS max_c,
            CAST(len(list_filter(embedding, x -> x != 0)) AS BIGINT)
              AS n_nonzero,
-           {DOT_SQL.format(a='embedding', b='embedding')} = 0.0 AS is_degenerate
+           {dot_sql('embedding', 'embedding')} = 0.0 AS is_degenerate
     FROM embeddings
     """,
     doc="embedding quality screen before ANN indexing: per-vector L2 norm "

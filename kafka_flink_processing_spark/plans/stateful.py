@@ -128,13 +128,13 @@ def topk_recent(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PNL_REPLAY_SQL = f"""
 WITH RECURSIVE {TRADES_CTE},
 {TICKS_CTE},
-seq AS (
+seq AS MATERIALIZED (
   SELECT trade_id, ts, account, hub,
          CASE side WHEN 'BUY' THEN mw ELSE -mw END AS q, price_mwh AS px,
          ROW_NUMBER() OVER (PARTITION BY hub, account
                             ORDER BY ts, trade_id) AS rn
   FROM trades),
-st AS (
+st AS MATERIALIZED (
   SELECT hub, account, 0 AS rn, CAST(0 AS BIGINT) AS pos,
          CAST(0.0 AS DOUBLE) AS avg, CAST(0.0 AS DOUBLE) AS realized
   FROM (SELECT DISTINCT hub, account FROM seq)

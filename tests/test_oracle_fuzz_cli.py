@@ -1,6 +1,7 @@
 """tools/oracle_fuzz.py's command line: every listed corpus runs, a query
 name that is not registered is an error, and a selection with nothing to
-check exits non-zero without starting Spark."""
+check exits non-zero without starting Spark. Its family lists leave no
+single-table oracle out."""
 
 from __future__ import annotations
 
@@ -47,3 +48,22 @@ def test_zero_checks_exit_non_zero(monkeypatch, capsys):
     assert oracle_fuzz.main(
         ["kmeans_embeddings", "--corpus", "emb_degenerate"]) == 1
     assert "no checks to run" in capsys.readouterr().out
+
+
+def test_every_single_table_oracle_has_a_fuzz_family():
+    """An oracle reading only fuzzed tables (documents, events,
+    embeddings) runs on some corpus or is excluded with a reason."""
+    import re
+
+    from kafka_flink_processing_spark.schemas import TESTDATA_TABLES
+
+    fuzzed = {"documents", "events", "embeddings"}
+    listed = (set(oracle_fuzz.DOC_QUERIES) | set(oracle_fuzz.TOTAL_TEXT)
+              | set(oracle_fuzz.EVENT_QUERIES) | set(oracle_fuzz.EMB_QUERIES)
+              | set(oracle_fuzz.MEDIA_QUERIES) | set(oracle_fuzz.FUZZ_EXCLUDED))
+    unlisted = []
+    for name, sql in oracle_fuzz.entrymod.oracle_sql().items():
+        tables = {t for t in TESTDATA_TABLES if re.search(rf"\b{t}\b", sql)}
+        if tables and tables <= fuzzed and name not in listed:
+            unlisted.append(name)
+    assert unlisted == []

@@ -82,8 +82,9 @@ from kafka_flink_processing_spark.session import get_spark  # noqa: E402
 
 BASE_SF = "/root/testdata/sf0.001"
 
-# Documents-only queries (auto-derived set, pinned here so a fuzz run is
-# reproducible; tools/oracle_fuzz.py --list prints the live derivation)
+# Documents-only queries (pinned here so a fuzz run is reproducible;
+# tests/test_oracle_fuzz_cli.py checks every single-fuzzed-table oracle
+# is in a family list or in FUZZ_EXCLUDED)
 DOC_QUERIES = [
     "adaptive_quality_filter", "audio_zcr_features", "bigram_lift_top",
     "bm25_rank", "bpe_encode_from_artifact", "bpe_encode_tokens",
@@ -101,7 +102,8 @@ DOC_QUERIES = [
     "dedup_ngram_jaccard", "dedup_rate_by_source", "dedup_simhash",
     "doc_fingerprint", "dup_span_redact", "dup_span_stats",
     "exactsubstr_redact", "exactsubstr_spans",
-    "feature_hashing", "jsonl_roundtrip", "lang_confusion_matrix",
+    "feature_hashing", "heavy_hitters_adaptive", "heavy_hitters_mg",
+    "jsonl_roundtrip", "lang_confusion_matrix",
     "lang_id_quality", "lsh_band_stats", "lsh_threshold_sweep",
     "minhash_jaccard_accuracy", "mix_temperature_sample",
     "multimodal_decode_features", "multimodal_frame_sample",
@@ -144,6 +146,18 @@ TOTAL_TEXT = [
     # same front end; the rebuild is word-array indexing + space-join,
     # both engines operate on the split word arrays, never byte offsets
     "exactsubstr_redact",
+    # built on the functions/text.py rules, each compared on umlauts,
+    # accents, CJK and emoji by tests/test_text_rules.py
+    "text_stats", "lang_id_quality", "doc_fingerprint", "dedup_exact",
+    "curation_pipeline", "curation_funnel", "dedup_incremental",
+    "dedup_keep_best", "dedup_rate_by_source", "vocab_top_tokens",
+    "tfidf_top_terms", "sequence_packing", "packing_efficiency",
+    "vocab_zipf_slope", "corpus_entropy_by_source", "lang_confusion_matrix",
+    "adaptive_quality_filter", "weighted_sample_wor", "repetition_stats",
+    "source_overlap_matrix", "dedup_minhash_lsh", "train_test_split",
+    # space-split word trigrams, counted and ordered as binary UTF-8
+    # strings in both engines
+    "heavy_hitters_adaptive", "heavy_hitters_mg",
 ]
 
 LANGS = ["en", "de", "fr", "es"]
@@ -152,11 +166,12 @@ SOURCES = [f"src{i}" for i in range(4)]
 # events-derived queries (market / temporal / PnL / streaming drains)
 EVENT_QUERIES = [
     "amihud_illiquidity", "asof_join_events", "bollinger_bands",
-    "da_rt_asof_basis", "da_rt_asof_tolerance", "da_rt_daily_corr",
+    "cms_freq_estimate", "csv_roundtrip", "da_rt_asof_basis",
+    "da_rt_asof_tolerance", "da_rt_daily_corr",
     "distinct_count_by", "event_hourly_anomaly",
     "event_rate_mad_outliers", "event_transition_matrix", "ewma_price",
     "exact_quantiles_value", "forecast_backtest_sma", "forecast_sma",
-    "funnel_time_to_convert", "hourly_load_profile",
+    "funnel_time_to_convert", "hll_distinct_estimate", "hourly_load_profile",
     "hub_price_corr_matrix", "hub_spread_hourly", "json_props_stats",
     "kyle_lambda_price_impact", "last_value_carried_forward",
     "latest_per_key", "lead_lag_hub_beta", "max_drawdown",
@@ -166,11 +181,13 @@ EVENT_QUERIES = [
     "retention_cohorts", "roll_spread_estimator", "rolling_median_price",
     "running_position", "scalar_battery", "scd2_price_intervals",
     "session_funnel", "session_window_stats", "skew_salted_distinct",
-    "sliding_window_stats", "streaming_forecast_sma",
-    "streaming_ohlc_bars", "streaming_session_stats",
+    "sliding_window_stats", "streaming_enrich_static",
+    "streaming_forecast_sma", "streaming_forecast_sma_tws",
+    "streaming_ohlc_bars", "streaming_pnl_tws", "streaming_session_stats",
     "streaming_slippage_join", "streaming_tumbling_stats",
     "time_range_moving_avg", "time_rollup_multigrain", "topk_recent",
-    "trade_flow_net", "tumbling_window_stats", "variance_ratio",
+    "trade_flow_net", "tumbling_window_stats", "value_histogram",
+    "variance_ratio",
     "vwap_execution_quality", "vwap_hub_day", "window_ntile_battery",
     "window_rank_lag", "winsorized_stats",
 ]
@@ -203,6 +220,11 @@ EMB_QUERIES = [
     "pq_distortion_by_label", "similarity_ivfpq_topk",
     "similarity_ivfpq_residual_topk",
 ]
+
+# Oracles that read only fuzzed tables but run on no corpus, name ->
+# reason; tests/test_oracle_fuzz_cli.py keeps this and the family lists
+# complete
+FUZZ_EXCLUDED: dict[str, str] = {}
 
 EMB_DIM = 64
 
