@@ -13,8 +13,9 @@ shuffle join + one aggregation — no driver-side data, only the converged
 flag crosses to the driver (an O(diameter) loop of ACTIONS, not of rows).
 
 Determinism: min() is order-free, so the result is independent of
-partitioning — the DuckDB oracle reproduces it with a recursive CTE over
-the same edge set (plans/extensions.py::dedup_clusters).
+partitioning — its DuckDB rendering, components_cte, reproduces it with a
+recursive CTE over the same edge set, and every closure oracle in plans/
+splices it in (tests/test_dedup_renderings.py compares the two).
 """
 
 from __future__ import annotations
@@ -139,3 +140,20 @@ def connected_components(pairs: DataFrame, nodes: DataFrame) -> DataFrame:
             break
         old_total = total
     return labels
+
+
+def components_cte(pairs: str = "pairs") -> str:
+    """DuckDB rendering of connected_components over the (doc_a, doc_b)
+    relation `pairs` and the `documents` nodes: CTEs `edges`, `reach` and
+    `clusters` (doc_id, canonical_id). The query must open WITH RECURSIVE;
+    `reach` is the transitive closure, so a closure oracle reads `pairs`
+    twice (see operators/dedup.py::verified_pairs_cte)."""
+    return f"""edges AS (SELECT doc_a AS a, doc_b AS b FROM {pairs}
+              UNION SELECT doc_b, doc_a FROM {pairs}),
+    reach(a, b) AS (
+      SELECT doc_id, doc_id FROM documents
+      UNION
+      SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
+    ),
+    clusters AS (SELECT a AS doc_id, MIN(b) AS canonical_id
+                 FROM reach GROUP BY a)"""

@@ -22,8 +22,16 @@ intermediates (shingle arrays, signature tables, indexes, the cluster
 edge table) are built once per input plan through memoized(), the one
 artifact memo.
 
-All arithmetic is integer/md5-based so the DuckDB oracles in
-plans/extensions.py reproduce results bit-for-bit.
+All arithmetic is integer/md5-based, so DuckDB reproduces every step
+bit-for-bit. Beside each step is its DuckDB rendering (`*_sql` / `*_cte`
+/ `*_CTE`), the text the oracles in plans/ splice in; no plan module
+spells a step. The renderings read and define the CTE names they
+document: doc_shingles_cte's `t`/`ds`, SHINGLE_ROWS_CTE's `ex`,
+inverted_index_cte's `inv`, jaccard_intersections_cte's `inter`,
+SIGNATURES_CTE's `sig`, MINHASH_BANDS_CTE's `bands`, the candidate
+CTEs' `cand`, verified_pairs_cte's `pairs`, SIMHASH_CTE's `simhashes`,
+BLOOM_PROBES_CTE's `px` and exactsubstr_cte's `base`/`spans`.
+tests/test_dedup_renderings.py compares each pair.
 """
 
 from __future__ import annotations
@@ -41,9 +49,15 @@ from kafka_flink_processing_spark.functions.constants import (
 )
 from kafka_flink_processing_spark.functions.text import (
     md5_hash60,
+    md5_hash60_sql,
     text_hash,
     word_grams,
+    word_grams_sql,
 )
+
+# The near-dup Jaccard threshold of every MinHash-LSH and n-gram pair
+# view (batch, incremental and streaming), and of their oracles.
+NEAR_DUP_JACCARD = 0.6
 
 
 def exact_dedup(docs: DataFrame) -> DataFrame:
@@ -140,8 +154,31 @@ def shingle_table(docs: DataFrame, n: int) -> DataFrame:
                        word_grams(F.col("text"), n).alias("sh"))
 
 
-def _doc_shingles(docs: DataFrame, n: int) -> DataFrame:
+def doc_shingles(docs: DataFrame, n: int) -> DataFrame:
+    """shingle_table, memoized per (input plan, n)."""
     return memoized(docs, ("shingles", n), lambda: shingle_table(docs, n))[0]
+
+
+# each document's words, split on single spaces (NULL text as '')
+WORDS_SQL = ("SELECT doc_id, string_split(COALESCE(text, ''), ' ')"
+             " AS words FROM documents")
+
+
+def doc_shingles_cte(n: int) -> str:
+    """DuckDB rendering of doc_shingles: CTEs `t` (doc_id, words) and
+    `ds` (doc_id, sh)."""
+    return (f"t AS ({WORDS_SQL}),\n"
+            f"    ds AS (SELECT doc_id, {word_grams_sql(n)} AS sh FROM t)")
+
+
+def shingle_rows(ds: DataFrame) -> DataFrame:
+    """(doc_id, sh), one row per shingle of a (doc_id, sh) shingle
+    table."""
+    return ds.select("doc_id", F.explode("sh").alias("sh"))
+
+
+# DuckDB rendering of shingle_rows over `ds`: CTE `ex`
+SHINGLE_ROWS_CTE = "ex AS (SELECT doc_id, unnest(sh) AS sh FROM ds)"
 
 
 # Stop-shingle document-frequency cap, on by default: a shingle occurring in
@@ -155,14 +192,14 @@ def _doc_shingles(docs: DataFrame, n: int) -> DataFrame:
 NGRAM_MAX_DF = 1000
 
 
-def _filtered_inverted_index(ds: DataFrame, min_df: int,
-                             max_df: int | None) -> DataFrame:
+def inverted_index(ds: DataFrame, min_df: int,
+                   max_df: int | None) -> DataFrame:
     """(doc_id, sh) inverted shingle index keeping shingles with document
     frequency in [min_df, max_df] (see NGRAM_MAX_DF), memoized: it feeds
     both sides of the candidate self-join, and its df >= DUP_SPAN_MIN_DF
     form feeds both dup_span_redact and dup_span_stats."""
     def build():
-        inv = ds.select("doc_id", F.explode("sh").alias("sh"))
+        inv = shingle_rows(ds)
         if min_df > 1 or max_df is not None:
             cond = F.col("df") >= min_df
             if max_df is not None:
@@ -174,19 +211,70 @@ def _filtered_inverted_index(ds: DataFrame, min_df: int,
     return memoized(ds, ("inverted", min_df, max_df), build)[0]
 
 
-def _jaccard_intersections(ds: DataFrame, max_df: int | None) -> DataFrame:
-    """(doc_a, doc_b, n_common) candidate intersections from the shingle
-    index, with the df-bounded inverted index (see NGRAM_MAX_DF)."""
-    inv = _filtered_inverted_index(ds, 1, max_df)
+def inverted_index_cte(min_df: int, max_df: int | None) -> str:
+    """DuckDB rendering of inverted_index over `ex`: CTE `inv` (doc_id,
+    sh). Shingles are distinct per document, so a row count is the
+    document frequency."""
+    having = f"COUNT(*) >= {min_df}"
+    if max_df is not None:
+        having += f" AND COUNT(*) <= {max_df}"
+    return (f"inv AS (SELECT doc_id, sh FROM ex JOIN "
+            f"(SELECT sh FROM ex GROUP BY sh HAVING {having}) USING (sh))")
+
+
+def jaccard_intersections(ds: DataFrame, max_df: int | None) -> DataFrame:
+    """(doc_a, doc_b, n_common, n_a, n_b): candidate intersections from
+    the df-bounded inverted index (see NGRAM_MAX_DF), with both shingle
+    set sizes."""
+    inv = inverted_index(ds, 1, max_df)
     a, b = inv.alias("a"), inv.alias("b")
-    return (a.join(b, (F.col("a.sh") == F.col("b.sh"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-             .groupBy(F.col("a.doc_id").alias("doc_a"),
-                      F.col("b.doc_id").alias("doc_b"))
-             .agg(F.count("*").alias("n_common")))
+    inter = (a.join(b, (F.col("a.sh") == F.col("b.sh"))
+                    & (F.col("a.doc_id") < F.col("b.doc_id")))
+              .groupBy(F.col("a.doc_id").alias("doc_a"),
+                       F.col("b.doc_id").alias("doc_b"))
+              .agg(F.count("*").alias("n_common")))
+    sizes = ds.select("doc_id", F.size("sh").alias("n_sh"))
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
+    return inter.join(sa, "doc_a").join(sb, "doc_b")
 
 
-def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.6,
+def jaccard_intersections_cte(max_df: int | None) -> str:
+    """DuckDB rendering of jaccard_intersections over `ds`: CTEs `ex`,
+    `inv`, `sizes`, `pc` and `inter` (doc_a, doc_b, n_common, n_a,
+    n_b)."""
+    return f"""{SHINGLE_ROWS_CTE},
+    {inverted_index_cte(1, max_df)},
+    sizes AS (SELECT doc_id, len(sh) AS n_sh FROM ds),
+    pc AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
+           FROM inv a JOIN inv b ON a.sh = b.sh AND a.doc_id < b.doc_id
+           GROUP BY 1, 2),
+    inter AS (SELECT doc_a, doc_b, n_common, sa.n_sh AS n_a, sb.n_sh AS n_b
+              FROM pc JOIN sizes sa ON doc_a = sa.doc_id
+                      JOIN sizes sb ON doc_b = sb.doc_id)"""
+
+
+def jaccard_ratio(inter, n_a, n_b):
+    """|A∩B| / (|A|+|B|-|A∩B|) from the intersection and both set sizes
+    (Columns); jaccard_ratio_sql is its DuckDB rendering."""
+    return inter / (n_a + n_b - inter)
+
+
+def jaccard_ratio_sql(inter: str, n_a: str, n_b: str) -> str:
+    return f"{inter} / ({n_a} + {n_b} - {inter})"
+
+
+def _count_jaccard():
+    """The Jaccard of jaccard_intersections rows; COUNT_JACCARD_SQL is its
+    DuckDB rendering over `inter`."""
+    return jaccard_ratio(F.col("n_common"), F.col("n_a"), F.col("n_b"))
+
+
+COUNT_JACCARD_SQL = jaccard_ratio_sql("n_common", "n_a", "n_b")
+
+
+def ngram_jaccard_pairs(docs: DataFrame, n: int = 3,
+                        threshold: float = NEAR_DUP_JACCARD,
                         max_df: int | None = NGRAM_MAX_DF) -> DataFrame:
     """All pairs with distinct-word-n-gram Jaccard >= threshold, via an
     inverted index join (each shared shingle contributes one pre-aggregated
@@ -204,14 +292,8 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.6,
     instead of quadratic in the hottest shingle. Pass max_df=None for the
     exact uncapped semantics.
     """
-    ds = _doc_shingles(docs, n)
-    sizes = ds.select("doc_id", F.size("sh").alias("n_sh"))
-    inter = _jaccard_intersections(ds, max_df)
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
-    return (inter.join(sa, "doc_a").join(sb, "doc_b")
-                 .withColumn("jaccard", F.col("n_common")
-                             / (F.col("n_a") + F.col("n_b") - F.col("n_common")))
+    inter = jaccard_intersections(doc_shingles(docs, n), max_df)
+    return (inter.withColumn("jaccard", _count_jaccard())
                  .filter(F.col("jaccard") >= threshold)
                  .select("doc_a", "doc_b", "jaccard"))
 
@@ -221,17 +303,25 @@ def signatures_from_shingles(ds: DataFrame) -> DataFrame:
     table feeds BOTH the min-agg branch and the final join; callers on the
     non-memoized path (streaming micro-batches) must persist `ds` first or
     the shingle UDF evaluates twice."""
-    exploded = ds.select("doc_id", F.explode("sh").alias("sh"))
     x = md5_hash60(F.col("sh")) % MINHASH_P
     aggs = [F.min((F.lit(a) * x + F.lit(b)) % MINHASH_P).alias(f"mh{i}")
             for i, (a, b) in enumerate(MINHASH_COEFFS)]
-    sig = exploded.groupBy("doc_id").agg(*aggs)
+    sig = shingle_rows(ds).groupBy("doc_id").agg(*aggs)
     return sig.join(ds, "doc_id")
+
+
+# DuckDB rendering of signatures_from_shingles over `ds`: CTEs `ex`, `hx`
+# and `sig` (doc_id, mh0..mh{k-1}; the shingle set stays in `ds`)
+SIGNATURES_CTE = f"""{SHINGLE_ROWS_CTE},
+    hx AS (SELECT doc_id, {md5_hash60_sql('sh')} % {MINHASH_P} AS x FROM ex),
+    sig AS (SELECT doc_id, {", ".join(
+        f"MIN(({a} * x + {b}) % {MINHASH_P}) AS mh{i}"
+        for i, (a, b) in enumerate(MINHASH_COEFFS))} FROM hx GROUP BY doc_id)"""
 
 
 def minhash_signatures(docs: DataFrame, n: int = 3) -> DataFrame:
     """One row per doc with mh0..mh{k-1} minhash values + the shingle set."""
-    return signatures_from_shingles(_doc_shingles(docs, n))
+    return signatures_from_shingles(doc_shingles(docs, n))
 
 
 def jaccard_expr(sh_left, sh_right):
@@ -241,7 +331,13 @@ def jaccard_expr(sh_left, sh_right):
     so the evals always measure exactly the semantics the dedup
     operators apply."""
     inter = F.size(F.array_intersect(sh_left, sh_right))
-    return inter / (F.size(sh_left) + F.size(sh_right) - inter)
+    return jaccard_ratio(inter, F.size(sh_left), F.size(sh_right))
+
+
+def jaccard_sql(a: str, b: str) -> str:
+    """DuckDB rendering of jaccard_expr over the shingle lists `a`, `b`."""
+    inter = f"len(list_intersect({a}, {b}))"
+    return jaccard_ratio_sql(inter, f"len({a})", f"len({b})")
 
 
 def verified_jaccard_pairs(cand: DataFrame, sig_left: DataFrame,
@@ -266,6 +362,22 @@ def verified_jaccard_pairs(cand: DataFrame, sig_left: DataFrame,
                   .select(left_col, right_col, "jaccard"))
 
 
+def verified_pairs_cte(left_col: str = "doc_a", right_col: str = "doc_b",
+                       threshold: float = NEAR_DUP_JACCARD) -> str:
+    """DuckDB rendering of verified_jaccard_pairs over the candidates
+    `cand` (left_col, right_col) and the shingle sets `ds`: CTE `pairs`
+    (left_col, right_col, jaccard). MATERIALIZED: the closure oracles
+    read `pairs` twice, and DuckDB would otherwise verify every
+    candidate once per reader."""
+    return f"""pairs AS MATERIALIZED (
+      SELECT * FROM (
+        SELECT c.{left_col}, c.{right_col},
+               {jaccard_sql('sa.sh', 'sb.sh')} AS jaccard
+        FROM cand c JOIN ds sa ON c.{left_col} = sa.doc_id
+                    JOIN ds sb ON c.{right_col} = sb.doc_id)
+      WHERE jaccard >= {threshold})"""
+
+
 def lsh_self_candidates(bands: DataFrame, left_col: str = "doc_a",
                         right_col: str = "doc_b") -> DataFrame:
     """Distinct unordered candidate pairs (left < right) agreeing on at
@@ -279,6 +391,13 @@ def lsh_self_candidates(bands: DataFrame, left_col: str = "doc_a",
              .select(F.col("a.doc_id").alias(left_col),
                      F.col("b.doc_id").alias(right_col))
              .distinct())
+
+
+# DuckDB rendering of lsh_self_candidates over `bands`: CTE `cand`
+LSH_SELF_CANDIDATES_CTE = """cand AS (
+      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+      FROM bands a JOIN bands b
+        ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id)"""
 
 
 def lsh_cross_candidates(probe_bands: DataFrame,
@@ -295,12 +414,22 @@ def lsh_cross_candidates(probe_bands: DataFrame,
              .distinct())
 
 
-def _cached_signatures(docs: DataFrame, n: int) -> DataFrame:
+def lsh_cross_candidates_cte(probe_bands: str, index_bands: str) -> str:
+    """DuckDB rendering of lsh_cross_candidates over two band relations:
+    CTE `cand` (doc_id, dup_of)."""
+    return f"""cand AS (
+      SELECT DISTINCT b.doc_id AS doc_id, c.doc_id AS dup_of
+      FROM {probe_bands} b JOIN {index_bands} c
+        ON b.band = c.band AND b.key = c.key)"""
+
+
+def doc_signatures(docs: DataFrame, n: int) -> DataFrame:
+    """minhash_signatures, memoized per (input plan, n)."""
     return memoized(docs, ("minhash", n),
                     lambda: minhash_signatures(docs, n))[0]
 
 
-def _lsh_bands(sig: DataFrame) -> DataFrame:
+def minhash_bands(sig: DataFrame) -> DataFrame:
     """Explode a signature table into (doc_id, band, key) LSH bucket rows
     (bands of 2 minhashes). In a production pipeline this table, built over
     the standing corpus, IS the persisted near-dup index."""
@@ -314,25 +443,46 @@ def _lsh_bands(sig: DataFrame) -> DataFrame:
     return bands.select("doc_id", "bk.band", "bk.key")
 
 
+# DuckDB rendering of minhash_bands over `sig`: CTE `bands`
+MINHASH_BANDS_CTE = "bands AS ({})".format(" UNION ALL ".join(
+    f"SELECT doc_id, {k} AS band, CAST(mh{2*k} AS VARCHAR) || '_' || "
+    f"CAST(mh{2*k+1} AS VARCHAR) AS key FROM sig" for k in range(N_BANDS)))
+
+
+def minhash_index_cte(n: int) -> str:
+    """DuckDB rendering of minhash_bands(doc_signatures(docs, n)), the
+    near-dup LSH index: doc_shingles_cte(n), SIGNATURES_CTE and
+    MINHASH_BANDS_CTE."""
+    return (f"{doc_shingles_cte(n)},\n    {SIGNATURES_CTE},\n"
+            f"    {MINHASH_BANDS_CTE}")
+
+
 def minhash_lsh_pairs(docs: DataFrame, n: int = 3,
-                      threshold: float = 0.6) -> DataFrame:
+                      threshold: float = NEAR_DUP_JACCARD) -> DataFrame:
     """LSH candidates (bands of 2 minhashes) verified with exact Jaccard.
 
     P(candidate | j) = 1 - (1 - j^2)^8 — >=0.999 at j=0.8. Candidate
     verification uses array_intersect on the (distinct) shingle sets, which
     only runs on same-band pairs.
     """
-    sig = _cached_signatures(docs, n)
-    cand = lsh_self_candidates(_lsh_bands(sig))
+    sig = doc_signatures(docs, n)
+    cand = lsh_self_candidates(minhash_bands(sig))
     return verified_jaccard_pairs(cand, sig, sig, "doc_a", "doc_b", threshold)
+
+
+def minhash_lsh_pairs_cte(n: int = 3,
+                          threshold: float = NEAR_DUP_JACCARD) -> str:
+    """DuckDB rendering of minhash_lsh_pairs: minhash_index_cte(n), the
+    candidates `cand` and the verified `pairs` (doc_a, doc_b, jaccard)."""
+    return (f"{minhash_index_cte(n)},\n    {LSH_SELF_CANDIDATES_CTE},\n"
+            f"    {verified_pairs_cte(threshold=threshold)}")
 
 
 def simhash(docs: DataFrame) -> DataFrame:
     """32-bit SimHash over distinct word-bigram features."""
-    feats = _doc_shingles(docs, 2)
-    exploded = feats.select("doc_id", F.explode("sh").alias("sh"))
     h32 = md5_hash60(F.col("sh")) % F.lit(2 ** SIMHASH_BITS)
-    exploded = exploded.select("doc_id", h32.alias("h"))
+    exploded = shingle_rows(doc_shingles(docs, 2)).select(
+        "doc_id", h32.alias("h"))
     bit_sums = [
         F.sum(F.when(F.shiftright(F.col("h"), j).bitwiseAND(1) == 1, 1)
                .otherwise(-1)).alias(f"s{j}")
@@ -344,6 +494,24 @@ def simhash(docs: DataFrame) -> DataFrame:
                 .otherwise(F.lit(0).cast("long"))
         sh_val = term if sh_val is None else sh_val + term
     return agg.select("doc_id", sh_val.alias("simhash"))
+
+
+# DuckDB rendering of simhash and of simhash_pairs' byte bands:
+# doc_shingles_cte(2), `ex`, `hx`, `bsum`, `simhashes` (doc_id, simhash)
+# and `bands` (doc_id, simhash, band, key)
+SIMHASH_CTE = f"""{doc_shingles_cte(2)},
+    {SHINGLE_ROWS_CTE},
+    hx AS (SELECT doc_id, {md5_hash60_sql('sh')} % {2**SIMHASH_BITS} AS h
+           FROM ex),
+    bsum AS (SELECT doc_id, {", ".join(
+        f"SUM(CASE WHEN (h >> {j}) & 1 = 1 THEN 1 ELSE -1 END) AS s{j}"
+        for j in range(SIMHASH_BITS))} FROM hx GROUP BY doc_id),
+    simhashes AS (SELECT doc_id, {" + ".join(
+        f"(CASE WHEN s{j} > 0 THEN CAST({2**j} AS BIGINT) ELSE 0 END)"
+        for j in range(SIMHASH_BITS))} AS simhash FROM bsum),
+    bands AS ({" UNION ALL ".join(
+        f"SELECT doc_id, simhash, {k} AS band, (simhash >> {8*k}) & 255 "
+        f"AS key FROM simhashes" for k in range(4))})"""
 
 
 def simhash_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
@@ -374,8 +542,19 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
              .distinct())
 
 
-# dup_span_redact's duplicated-gram screen: a gram is duplicated when it
-# occurs in at least this many documents.
+def simhash_pairs_sql(max_hamming: int) -> str:
+    """DuckDB rendering of simhash_pairs over SIMHASH_CTE's `bands`
+    (hamming as BIGINT)."""
+    return f"""SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
+           CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
+    FROM bands a JOIN bands b
+      ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
+    WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}"""
+
+
+# the dup-span duplicated-gram screen: a gram is duplicated when it
+# occurs in at least this many documents (dup_span_redact, and the
+# dup_span_stats query)
 DUP_SPAN_MIN_DF = 2
 
 
@@ -402,23 +581,44 @@ def dup_span_redact(docs: DataFrame, n: int = 3) -> DataFrame:
     boilerplate-heavy long documents this operator targets.
     String/integer-only, so the DuckDB oracle (list-comprehension form)
     matches bit-for-bit."""
-    ds = _doc_shingles(docs, n)
+    ds = doc_shingles(docs, n)
     # the memoized df screen, shared with dup_span_stats: one corpus-wide
     # df pass per session, not one per operator
-    dup_index = _filtered_inverted_index(ds, DUP_SPAN_MIN_DF,
-                                         None).select("sh")
-    base = docs.select(F.col("doc_id"),
+    dup_index = inverted_index(ds, DUP_SPAN_MIN_DF, None).select("sh")
+    base = _split_words(docs)
+    pg = base.select("doc_id",
+                     F.posexplode(_positional_grams(n)).alias("i0", "sh"))
+    flagged = pg.join(dup_index, "sh", "leftsemi")
+    covered = flagged.select(
+        "doc_id",
+        F.explode(F.sequence(F.col("i0") + 1,
+                             F.col("i0") + n)).alias("j"))
+    return _rebuild_without(base, covered)
+
+
+def _split_words(docs: DataFrame) -> DataFrame:
+    """(doc_id, words): each document split on single spaces."""
+    return docs.select(F.col("doc_id"),
                        F.split(F.col("text"), " ").alias("words"))
 
+
+def _positional_grams(n: int):
+    """The word n-grams of `words` in start order (the gram at index i
+    starts at word i + 1); none under n words."""
     def gram_at(i):  # i is the 1-based start position of the n-gram
         return F.concat_ws(" ", *[F.element_at(F.col("words"), i + k)
                                   for k in range(n)])
 
-    grams = F.when(
+    return F.when(
         F.size("words") < n, F.array().cast("array<string>")).otherwise(
         F.transform(F.sequence(F.lit(1), F.size("words") - (n - 1)), gram_at))
-    pg = base.select("doc_id", F.posexplode(grams).alias("i0", "sh"))
-    flagged = pg.join(dup_index, "sh", "leftsemi")
+
+
+def _rebuild_without(base: DataFrame, covered: DataFrame) -> DataFrame:
+    """The rebuild tail of both redact steps: each document of `base`
+    (doc_id, words) without the 1-based word positions `covered` (doc_id,
+    j) lists, as (doc_id, clean_text, n_words, n_removed_words,
+    removed_fraction)."""
     # r12 (guide §3.1: pick the strategy deliberately): the rebuild tail
     # must never BROADCAST a corpus-scaled relation. Statically the
     # planner estimated `covered` and `rebuilt` under the auto-broadcast
@@ -434,12 +634,8 @@ def dup_span_redact(docs: DataFrame, n: int = 3) -> DataFrame:
     # build (shuffle_hash: build side = this partition's covered
     # positions, bounded by per-doc length — no sort, no broadcast, no
     # second corpus exchange at ANY scale).
-    covered = (flagged.select(
-        "doc_id",
-        F.explode(F.sequence(F.col("i0") + 1,
-                             F.col("i0") + n)).alias("j"))
-        .repartition(F.col("doc_id"))
-        .dropDuplicates(["doc_id", "j"]))
+    covered = (covered.repartition(F.col("doc_id"))
+               .dropDuplicates(["doc_id", "j"]))
     pw = base.select("doc_id", F.posexplode("words").alias("j0", "w")) \
              .select("doc_id", (F.col("j0") + 1).alias("j"), "w") \
              .repartition(F.col("doc_id"))
@@ -473,6 +669,12 @@ def dup_span_redact(docs: DataFrame, n: int = 3) -> DataFrame:
                     .alias("removed_fraction")))
 
 
+# ExactSubstr contract: shared spans of at least ESS_MIN_LEN words, mined
+# from k-gram anchors shared by 2..ESS_MAX_DF documents
+ESS_MIN_LEN = 8
+ESS_MAX_DF = 64
+
+
 def _ess_anchor_index(docs: DataFrame, k: int, max_df: int) -> DataFrame:
     """(doc_id, pos, g, gh) anchor index for ExactSubstr: positional
     k-grams surviving the hash df>=2 screen AND the exact-gram
@@ -487,18 +689,10 @@ def _ess_anchor_index(docs: DataFrame, k: int, max_df: int) -> DataFrame:
     gram-string relation."""
     screened = []
 
-    def gram_at(i):  # i is the 1-based start position of the k-gram
-        return F.concat_ws(" ", *[F.element_at(F.col("words"), i + t)
-                                  for t in range(k)])
-
     def build():
-        base = docs.select(F.col("doc_id"),
-                           F.split(F.col("text"), " ").alias("words"))
-        grams = F.when(
-            F.size("words") < k, F.array().cast("array<string>")).otherwise(
-            F.transform(F.sequence(F.lit(1), F.size("words") - (k - 1)),
-                        gram_at))
-        pg = (base.select("doc_id", F.posexplode(grams).alias("i0", "g"))
+        pg = (_split_words(docs)
+              .select("doc_id", F.posexplode(_positional_grams(k))
+                      .alias("i0", "g"))
                   .select("doc_id", (F.col("i0") + 1).alias("pos"), "g",
                           F.xxhash64("g").alias("gh")))
         # anchor screen on the 8-byte hash: ONLY the df >= 2 lower bound
@@ -529,8 +723,8 @@ def _ess_anchor_index(docs: DataFrame, k: int, max_df: int) -> DataFrame:
     return out
 
 
-def exactsubstr_spans(docs: DataFrame, min_len: int = 8,
-                      max_df: int = 64) -> DataFrame:
+def exactsubstr_spans(docs: DataFrame, min_len: int = ESS_MIN_LEN,
+                      max_df: int = ESS_MAX_DF) -> DataFrame:
     """ExactSubstr duplicated-substring mining (Lee et al. 2022,
     'Deduplicating Training Data Makes Language Models Better' — the
     suffix-array ExactSubstr variant, re-expressed as anchored diagonal
@@ -607,8 +801,46 @@ def exactsubstr_spans(docs: DataFrame, min_len: int = 8,
                .select("doc_a", "doc_b", "a_start", "b_start", "span_len"))
 
 
-def exactsubstr_redact(docs: DataFrame, min_len: int = 8,
-                       max_df: int = 64) -> DataFrame:
+def exactsubstr_cte(min_len: int = ESS_MIN_LEN,
+                    max_df: int = ESS_MAX_DF) -> str:
+    """DuckDB rendering of exactsubstr_spans: CTEs `base` (doc_id, w),
+    `grams` (the positional k-grams, k = min_len), `anchors` (grams in
+    2..max_df documents), `seeds`, `islands` and `spans` (doc_a, doc_b,
+    a_start, b_start, span_len). Grams group on the exact string, the
+    contract the Spark hash screen reproduces."""
+    k = min_len
+    return f"""base AS (SELECT doc_id, string_split(text, ' ') AS w
+             FROM documents),
+    grams AS (
+      SELECT doc_id, i AS pos, array_to_string(w[i:i+{k - 1}], ' ') AS g
+      FROM base, unnest(range(1, greatest(len(w) - {k - 2}, 1))) AS t(i)
+    ),
+    anchors AS (
+      SELECT g FROM grams GROUP BY g
+      HAVING COUNT(DISTINCT doc_id) BETWEEN 2 AND {max_df}
+    ),
+    seeds AS (
+      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+             a.pos AS pos_a, b.pos AS pos_b
+      FROM grams a JOIN grams b USING (g) JOIN anchors USING (g)
+      WHERE a.doc_id < b.doc_id
+    ),
+    islands AS (
+      SELECT doc_a, doc_b, pos_a, pos_b, pos_a - pos_b AS diag,
+             pos_a - ROW_NUMBER() OVER (
+               PARTITION BY doc_a, doc_b, pos_a - pos_b
+               ORDER BY pos_a) AS island
+      FROM seeds
+    ),
+    spans AS (
+      SELECT doc_a, doc_b, MIN(pos_a) AS a_start, MIN(pos_b) AS b_start,
+             COUNT(*) + {k - 1} AS span_len
+      FROM islands GROUP BY doc_a, doc_b, diag, island
+    )"""
+
+
+def exactsubstr_redact(docs: DataFrame, min_len: int = ESS_MIN_LEN,
+                       max_df: int = ESS_MAX_DF) -> DataFrame:
     """The APPLY step of ExactSubstr dedup (Lee et al. 2022): rebuild
     each document with every duplicated span occurrence excised EXCEPT
     the copy in the smallest doc_id that shares it — the paper's
@@ -633,48 +865,17 @@ def exactsubstr_redact(docs: DataFrame, min_len: int = 8,
     are the dup_span_redact pattern — the only corpus-sized exchange is
     the doc-keyed reassembly, which IS the output."""
     spans = exactsubstr_spans(docs, min_len=min_len, max_df=max_df)
-    # same scale-safe rebuild tail as dup_span_redact (r12, guide §3.1):
-    # co-partition words + covered positions by doc_id once, per-partition
-    # hash anti-join (never a broadcast of the covered relation), and a
-    # merge attach that streams the rebuilt text instead of broadcasting
-    # the whole rewritten corpus — see dup_span_redact for the measured
-    # 256x broadcast-cap failure this shape prevents.
-    covered = (spans.select(
+    covered = spans.select(
         F.col("doc_b").alias("doc_id"),
         F.explode(F.sequence(
             F.col("b_start"),
             F.col("b_start") + F.col("span_len") - 1)).alias("j"))
-        .repartition(F.col("doc_id"))
-        .dropDuplicates(["doc_id", "j"]))
-    base = docs.select(F.col("doc_id"),
-                       F.split(F.col("text"), " ").alias("words"))
-    pw = (base.select("doc_id", F.posexplode("words").alias("j0", "w"))
-              .select("doc_id", (F.col("j0") + 1).alias("j"), "w")
-              .repartition(F.col("doc_id")))
-    kept = pw.join(covered.hint("shuffle_hash"), ["doc_id", "j"],
-                   "left_anti")
-    rebuilt = kept.groupBy("doc_id").agg(
-        F.concat_ws(" ", F.transform(
-            F.array_sort(F.collect_list(F.struct(F.col("j").alias("j"),
-                                                 F.col("w").alias("w")))),
-            lambda s: s["w"])).alias("clean_text"),
-        F.count("*").cast("long").alias("n_kept"))
-    sizes = base.select("doc_id", F.size("words").cast("long")
-                        .alias("n_words"))
-    n_removed = F.col("n_words") - F.coalesce("n_kept",
-                                              F.lit(0).cast("long"))
-    return (sizes.join(rebuilt.hint("merge"), "doc_id", "left")
-            .select("doc_id",
-                    F.coalesce("clean_text", F.lit("")).alias("clean_text"),
-                    "n_words",
-                    n_removed.alias("n_removed_words"),
-                    (n_removed.cast("double")
-                     / F.greatest("n_words", F.lit(1).cast("long")))
-                    .alias("removed_fraction")))
+    return _rebuild_without(_split_words(docs), covered)
 
 
 def incremental_minhash_dups(docs: DataFrame, batch_cond,
-                             n: int = 3, threshold: float = 0.6) -> DataFrame:
+                             n: int = 3,
+                             threshold: float = NEAR_DUP_JACCARD) -> DataFrame:
     """Near-dup screen of an arriving batch against the standing corpus:
     (doc_id [batch], dup_of [corpus], jaccard) for every cross pair with
     Jaccard >= threshold.
@@ -685,9 +886,9 @@ def incremental_minhash_dups(docs: DataFrame, batch_cond,
     band table is the persisted LSH index and this is a bucketed lookup
     join the size of the day's increment.
     """
-    sig = _cached_signatures(docs, n)
-    cand = lsh_cross_candidates(_lsh_bands(sig.filter(batch_cond)),
-                                _lsh_bands(sig.filter(~batch_cond)))
+    sig = doc_signatures(docs, n)
+    cand = lsh_cross_candidates(minhash_bands(sig.filter(batch_cond)),
+                                minhash_bands(sig.filter(~batch_cond)))
     return verified_jaccard_pairs(cand, sig, sig, "doc_id", "dup_of",
                                   threshold)
 
@@ -706,17 +907,34 @@ BLOOM_M_BITS = 1 << 20
 BLOOM_K = 3
 
 
-def _bloom_positions(h):
+def bloom_positions(h):
     """BLOOM_K double-hashed bit positions for a 60-bit gram hash. h1
     reads the low log2(m) hash bits, the stride reads the NEXT log2(m)
     bits (disjoint — no h1/h2 correlation) and is forced odd so it is
     coprime with the power-of-two BLOOM_M_BITS: the k positions are
     pairwise distinct. Integer-only — DuckDB reproduces it exactly
-    (plans/extensions.py::decontaminate_bloom)."""
+    (BLOOM_PROBES_CTE)."""
     log2m = BLOOM_M_BITS.bit_length() - 1
     h1 = h % BLOOM_M_BITS
     h2 = (F.shiftright(h, log2m) % BLOOM_M_BITS).bitwiseOR(F.lit(1))
     return [(h1 + F.lit(j) * h2) % BLOOM_M_BITS for j in range(BLOOM_K)]
+
+
+def bloom_probes(ds: DataFrame) -> DataFrame:
+    """(doc_id, sh, p) probe rows of a (doc_id, sh) shingle table: each
+    gram with its BLOOM_K pairwise-distinct bit positions."""
+    return shingle_rows(ds).select("doc_id", "sh", F.explode(F.array(
+        *bloom_positions(md5_hash60(F.col("sh"))))).alias("p"))
+
+
+# DuckDB rendering of bloom_probes over `ex`: CTEs `hx` and `px`
+BLOOM_PROBES_CTE = f"""hx AS (SELECT doc_id, sh, {md5_hash60_sql('sh')} AS h FROM ex),
+    px AS (SELECT doc_id, sh,
+                  ((h % {BLOOM_M_BITS})
+                   + j * (((h >> {BLOOM_M_BITS.bit_length() - 1})
+                           % {BLOOM_M_BITS}) | 1))
+                    % {BLOOM_M_BITS} AS p
+           FROM hx CROSS JOIN (SELECT unnest({list(range(BLOOM_K))}) AS j) js)"""
 
 
 def contamination_screen_bloom(docs: DataFrame, eval_cond,
@@ -747,7 +965,7 @@ def contamination_screen_bloom(docs: DataFrame, eval_cond,
     never one row per corpus gram; a gram has k pairwise-distinct probe
     positions (odd stride, power-of-two m), so count(*) == k over its
     surviving rows is exactly the all-bits-set test."""
-    ds = _doc_shingles(docs, n)
+    ds = doc_shingles(docs, n)
     # shingle ONCE over all docs (one memoized UDF pass), then split the
     # shingle table by the tag — shingling eval/train separately would run
     # the string-heavy UDF twice. When eval_cond resolves against the
@@ -782,12 +1000,7 @@ def bloom_bitmap(ds: DataFrame) -> DataFrame:
     sh) shingle table — at most BLOOM_M_BITS/64 rows regardless of input
     size. This is the persisted artifact of the decontamination family:
     built once per eval-corpus snapshot, broadcast to every screen."""
-    # (doc_id, sh, p) probe rows: each gram contributes its BLOOM_K
-    # pairwise-distinct bit positions
-    ex = ds.select("doc_id", F.explode("sh").alias("sh"))
-    pos = ex.select("doc_id", "sh", F.explode(F.array(
-        *_bloom_positions(md5_hash60(F.col("sh"))))).alias("p"))
-    return (pos
+    return (bloom_probes(ds)
             .select(_bloom_word_idx().alias("word_idx"),
                     _bloom_mask().alias("mask"))
             .groupBy("word_idx")
@@ -864,7 +1077,7 @@ def bloom_screen(ds: DataFrame, bloom: DataFrame) -> DataFrame:
                          # infers no isnotnull pre-filter — which would
                          # re-expand all k position exprs into a second
                          # md5 pass per row
-                         _bloom_positions(md5_hash60(F.col("sh"))))])
+                         bloom_positions(md5_hash60(F.col("sh"))))])
              .crossJoin(F.broadcast(_bloom_dense(bloom))))
     cond = None
     for j in range(BLOOM_K):
@@ -893,8 +1106,8 @@ def contamination_screen(docs: DataFrame, eval_cond, n: int = 4) -> DataFrame:
     screened map-side with no shuffle of the training data; the only
     exchange is the per-doc hit count on doc_id. Shares the cached shingle
     index with the dedup families (same (plan, n) memo)."""
-    ds = _doc_shingles(docs, n)
-    ex = ds.select("doc_id", F.explode("sh").alias("sh"))
+    ds = doc_shingles(docs, n)
+    ex = shingle_rows(ds)
     eval_ids = docs.select(F.col("doc_id"), eval_cond.alias("ev"))
     tagged = ex.join(eval_ids, "doc_id")
     ev_grams = tagged.filter(F.col("ev")).select("sh").distinct()
@@ -926,15 +1139,9 @@ def containment_pairs(docs: DataFrame, n: int = 3,
     shingle index, the df-capped inverted-index self-join, pre-aggregated
     intersection counts — no O(n^2) cross join anywhere.
     """
-    ds = _doc_shingles(docs, n)
-    sizes = ds.select("doc_id", F.size("sh").alias("n_sh"))
-    inter = _jaccard_intersections(ds, NGRAM_MAX_DF)
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
-    return (inter.join(sa, "doc_a").join(sb, "doc_b")
-                 .withColumn("containment", F.col("n_common")
+    inter = jaccard_intersections(doc_shingles(docs, n), NGRAM_MAX_DF)
+    return (inter.withColumn("containment", F.col("n_common")
                              / F.least(F.col("n_a"), F.col("n_b")))
-                 .withColumn("jaccard", F.col("n_common")
-                             / (F.col("n_a") + F.col("n_b") - F.col("n_common")))
+                 .withColumn("jaccard", _count_jaccard())
                  .filter(F.col("containment") >= threshold)
                  .select("doc_a", "doc_b", "containment", "jaccard"))

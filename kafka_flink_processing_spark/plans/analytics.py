@@ -45,7 +45,17 @@ from kafka_flink_processing_spark.functions.text import (
     text_hash,
     tokens,
     word_grams,
-    word_grams_sql,
+)
+from kafka_flink_processing_spark.operators.dedup import (
+    LSH_SELF_CANDIDATES_CTE,
+    SHINGLE_ROWS_CTE,
+    doc_shingles_cte,
+    doc_signatures,
+    jaccard_expr,
+    jaccard_sql,
+    lsh_self_candidates,
+    minhash_bands,
+    minhash_index_cte,
 )
 from kafka_flink_processing_spark.operators.similarity import (
     UNIT_INFO_CTE,
@@ -54,11 +64,6 @@ from kafka_flink_processing_spark.operators.similarity import (
     ivf_probes_cte,
     ivf_topk_sql,
     norm_sql,
-)
-from kafka_flink_processing_spark.plans.extensions import (
-    minhash_bands_sql,
-    minhash_sig_sql,
-    shingles_cte,
 )
 from kafka_flink_processing_spark.plans.registry import register
 from kafka_flink_processing_spark.sources.parquet import load_table
@@ -75,19 +80,12 @@ _EST_TERMS = " + ".join(
 @register(
     "minhash_jaccard_accuracy",
     oracle=f"""
-    {shingles_cte(3)},
-    {minhash_sig_sql()},
-    bands AS ({minhash_bands_sql()}),
-    cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-             FROM bands a JOIN bands b
-               ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
+    WITH {minhash_index_cte(3)},
+    {LSH_SELF_CANDIDATES_CTE},
     est AS (SELECT doc_a, doc_b, ({_EST_TERMS}) / {N_MINHASH}.0 AS est_jaccard
             FROM cand JOIN sig sa ON doc_a = sa.doc_id
                       JOIN sig sb ON doc_b = sb.doc_id),
-    exa AS (SELECT doc_a, doc_b,
-                   len(list_intersect(da.sh, db.sh))
-                     / (len(da.sh) + len(db.sh)
-                        - len(list_intersect(da.sh, db.sh))) AS exact_jaccard
+    exa AS (SELECT doc_a, doc_b, {jaccard_sql('da.sh', 'db.sh')} AS exact_jaccard
             FROM cand JOIN ds da ON doc_a = da.doc_id
                       JOIN ds db ON doc_b = db.doc_id)
     SELECT e.doc_a, e.doc_b, e.est_jaccard, x.exact_jaccard,
@@ -106,15 +104,9 @@ _EST_TERMS = " + ".join(
         f"cost is O(candidates), never all-pairs.",
 )
 def minhash_jaccard_accuracy_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.operators.dedup import (
-        _cached_signatures,
-        _lsh_bands,
-        jaccard_expr,
-        lsh_self_candidates,
-    )
     docs = load_table(spark, "documents", sf_dir)
-    sig = _cached_signatures(docs, 3)
-    cand = lsh_self_candidates(_lsh_bands(sig))
+    sig = doc_signatures(docs, 3)
+    cand = lsh_self_candidates(minhash_bands(sig))
     sa = sig.select(F.col("doc_id").alias("doc_a"),
                     F.col("sh").alias("sh_a"),
                     *[F.col(f"mh{i}").alias(f"amh{i}")
@@ -181,16 +173,9 @@ def ivf_recall_eval_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "lsh_threshold_sweep",
     oracle=f"""
-    {shingles_cte(3)},
-    {minhash_sig_sql()},
-    bands AS ({minhash_bands_sql()}),
-    cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-             FROM bands a JOIN bands b
-               ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
-    j AS (SELECT doc_a, doc_b,
-                 len(list_intersect(da.sh, db.sh))
-                   / (len(da.sh) + len(db.sh)
-                      - len(list_intersect(da.sh, db.sh))) AS jac
+    WITH {minhash_index_cte(3)},
+    {LSH_SELF_CANDIDATES_CTE},
+    j AS (SELECT doc_a, doc_b, {jaccard_sql('da.sh', 'db.sh')} AS jac
           FROM cand JOIN ds da ON doc_a = da.doc_id
                     JOIN ds db ON doc_b = db.doc_id)
     SELECT CAST(COUNT(*) AS BIGINT) AS n_candidates,
@@ -214,15 +199,9 @@ def ivf_recall_eval_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "O(candidates) like every LSH-routed query; single-row output.",
 )
 def lsh_threshold_sweep_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.operators.dedup import (
-        _cached_signatures,
-        _lsh_bands,
-        jaccard_expr,
-        lsh_self_candidates,
-    )
     docs = load_table(spark, "documents", sf_dir)
-    sig = _cached_signatures(docs, 3)
-    cand = lsh_self_candidates(_lsh_bands(sig))
+    sig = doc_signatures(docs, 3)
+    cand = lsh_self_candidates(minhash_bands(sig))
     sh_a = sig.select(F.col("doc_id").alias("doc_a"),
                       F.col("sh").alias("sh_a"))
     sh_b = sig.select(F.col("doc_id").alias("doc_b"),
@@ -341,10 +320,10 @@ def token_length_histogram_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "source_overlap_matrix",
     oracle=f"""
-    WITH t AS (SELECT source, string_split(text, ' ') AS words
-               FROM documents),
-    ds AS (SELECT source, {word_grams_sql(3)} AS sh FROM t),
-    gs AS (SELECT DISTINCT source, unnest(sh) AS sh FROM ds)
+    WITH {doc_shingles_cte(3)},
+    {SHINGLE_ROWS_CTE},
+    gs AS (SELECT DISTINCT d.source, ex.sh
+           FROM ex JOIN documents d USING (doc_id))
     SELECT a.source AS source_a, b.source AS source_b,
            CAST(COUNT(*) AS BIGINT) AS n_shared_grams
     FROM gs a JOIN gs b ON a.sh = b.sh AND a.source < b.source

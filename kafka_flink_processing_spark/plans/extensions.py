@@ -10,8 +10,11 @@ oracle_check.py). The DuckDB SQL below is GENERATED from the same constants
 algorithms (LSH banding) compare exactly: both engines run the same
 deterministic algorithm. Per-document text rules (hashes, tokens, scores,
 the split, word n-grams) are spliced in from their renderings in
-functions/text.py, and the embedding search steps (folds, top-k, IVF
-cells, PQ, LSH bands) from operators/similarity.py, never re-spelled here.
+functions/text.py, the near-dup steps (shingles, inverted index, MinHash
+bands, candidates, verified pairs, SimHash, Bloom probes, ExactSubstr
+spans) from operators/dedup.py, the closure from operators/cluster.py,
+and the embedding search steps (folds, top-k, IVF cells, PQ, LSH bands)
+from operators/similarity.py, never re-spelled here.
 """
 
 from __future__ import annotations
@@ -22,9 +25,7 @@ from pyspark.sql import functions as F
 from kafka_flink_processing_spark.functions.exact import dsum, dsum_sql
 from kafka_flink_processing_spark.functions.constants import (
     MINHASH_COEFFS,
-    MINHASH_P,
     N_BANDS,
-    SIMHASH_BITS,
 )
 from kafka_flink_processing_spark.functions.text import (
     LANG_ID_SQL,
@@ -74,15 +75,45 @@ from kafka_flink_processing_spark.functions.multimodal import (
     with_png_payload,
     with_wav_payload,
 )
+from kafka_flink_processing_spark.operators.cluster import (
+    components_cte,
+    connected_components,
+)
 from kafka_flink_processing_spark.operators.dedup import (
     BLOOM_K,
-    BLOOM_M_BITS,
+    BLOOM_PROBES_CTE,
+    COUNT_JACCARD_SQL,
+    DUP_SPAN_MIN_DF,
+    NEAR_DUP_JACCARD,
     NGRAM_MAX_DF,
+    SHINGLE_ROWS_CTE,
+    SIMHASH_CTE,
+    WORDS_SQL,
     containment_pairs,
+    contamination_screen,
+    contamination_screen_bloom,
+    doc_shingles,
+    doc_shingles_cte,
+    doc_signatures,
+    dup_span_redact,
     exact_dedup,
+    exactsubstr_cte,
+    exactsubstr_redact,
+    exactsubstr_spans,
+    incremental_minhash_dups,
+    inverted_index,
+    inverted_index_cte,
+    jaccard_intersections_cte,
+    lsh_cross_candidates_cte,
+    minhash_bands,
+    minhash_index_cte,
     minhash_lsh_pairs,
+    minhash_lsh_pairs_cte,
     ngram_jaccard_pairs,
+    shingle_rows,
     simhash_pairs,
+    simhash_pairs_sql,
+    verified_pairs_cte,
 )
 from kafka_flink_processing_spark.operators.similarity import (
     IVF_K,
@@ -110,35 +141,6 @@ from kafka_flink_processing_spark.operators.similarity import (
 )
 from kafka_flink_processing_spark.plans.registry import register
 from kafka_flink_processing_spark.sources.parquet import load_table
-
-# ---------------------------------------------------------------------------
-# shared DuckDB SQL fragments (generated from the same constants as Spark)
-# ---------------------------------------------------------------------------
-
-_WORDS = ("SELECT doc_id, string_split(COALESCE(text, ''), ' ')"
-          " AS words FROM documents")
-
-
-def shingles_cte(n: int) -> str:
-    """`WITH t, ds`: each document's words and its distinct word n-grams
-    `sh` — the rendering of operators/dedup.py::_doc_shingles."""
-    return f"""
-  WITH t AS ({_WORDS}),
-  ds AS (SELECT doc_id, {word_grams_sql(n)} AS sh FROM t)
-"""
-
-
-def minhash_sig_sql() -> str:
-    """CTEs ex/hx/sig over shingles_cte's ds."""
-    mins = ", ".join(
-        f"MIN(({a} * x + {b}) % {MINHASH_P}) AS mh{i}"
-        for i, (a, b) in enumerate(MINHASH_COEFFS))
-    return f"""
-  ex AS (SELECT doc_id, unnest(sh) AS sh FROM ds),
-  hx AS (SELECT doc_id, {md5_hash60_sql('sh')} % {MINHASH_P} AS x FROM ex),
-  sig AS (SELECT doc_id, {mins} FROM hx GROUP BY doc_id)
-"""
-
 
 # One embedding-cosine near-dup threshold shared by every semantic view
 # (LSH pair mining, SemDeDup, the cross-modal verifier) so the views stay
@@ -254,21 +256,11 @@ def dedup_exact_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_ngram_jaccard",
     oracle=f"""
-    {shingles_cte(3)},
-    sizes AS (SELECT doc_id, len(sh) AS n FROM ds),
-    ex0 AS (SELECT doc_id, unnest(sh) AS sh FROM ds),
-    kept AS (SELECT sh FROM (SELECT sh, COUNT(*) AS df FROM ex0 GROUP BY sh)
-             WHERE df <= {NGRAM_MAX_DF}),
-    ex AS (SELECT ex0.doc_id, ex0.sh FROM ex0 JOIN kept USING (sh)),
-    inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-              FROM ex a JOIN ex b ON a.sh = b.sh AND a.doc_id < b.doc_id
-              GROUP BY 1, 2)
-    SELECT doc_a, doc_b,
-           n_common / (sa.n + sb.n - n_common) AS jaccard
-    FROM inter
-    JOIN sizes sa ON doc_a = sa.doc_id
-    JOIN sizes sb ON doc_b = sb.doc_id
-    WHERE n_common / (sa.n + sb.n - n_common) >= 0.6
+    WITH {doc_shingles_cte(3)},
+    {jaccard_intersections_cte(NGRAM_MAX_DF)}
+    SELECT * FROM (SELECT doc_a, doc_b, {COUNT_JACCARD_SQL} AS jaccard
+                   FROM inter)
+    WHERE jaccard >= {NEAR_DUP_JACCARD}
     """,
     doc="exact n-gram-Jaccard near-dup pairs via inverted shingle index "
         "(pre-aggregated intersections; no O(n^2) cross join) with the "
@@ -277,29 +269,19 @@ def dedup_exact_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def dedup_ngram_jaccard_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ngram_jaccard_pairs(load_table(spark, "documents", sf_dir),
-                               n=3, threshold=0.6)
+    return ngram_jaccard_pairs(load_table(spark, "documents", sf_dir), n=3)
 
 
 @register(
     "dedup_containment_pairs",
     oracle=f"""
-    {shingles_cte(3)},
-    sizes AS (SELECT doc_id, len(sh) AS n FROM ds),
-    ex0 AS (SELECT doc_id, unnest(sh) AS sh FROM ds),
-    kept AS (SELECT sh FROM (SELECT sh, COUNT(*) AS df FROM ex0 GROUP BY sh)
-             WHERE df <= {NGRAM_MAX_DF}),
-    ex AS (SELECT ex0.doc_id, ex0.sh FROM ex0 JOIN kept USING (sh)),
-    inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-              FROM ex a JOIN ex b ON a.sh = b.sh AND a.doc_id < b.doc_id
-              GROUP BY 1, 2)
-    SELECT doc_a, doc_b,
-           n_common / least(sa.n, sb.n) AS containment,
-           n_common / (sa.n + sb.n - n_common) AS jaccard
-    FROM inter
-    JOIN sizes sa ON doc_a = sa.doc_id
-    JOIN sizes sb ON doc_b = sb.doc_id
-    WHERE n_common / least(sa.n, sb.n) >= 0.5
+    WITH {doc_shingles_cte(3)},
+    {jaccard_intersections_cte(NGRAM_MAX_DF)}
+    SELECT * FROM (SELECT doc_a, doc_b,
+                          n_common / least(n_a, n_b) AS containment,
+                          {COUNT_JACCARD_SQL} AS jaccard
+                   FROM inter)
+    WHERE containment >= 0.5
     """,
     doc="asymmetric n-gram CONTAINMENT near-dup pairs — |A∩B|/min(|A|,|B|) "
         ">= 0.5 — the sub-document-duplication catch Jaccard structurally "
@@ -314,31 +296,11 @@ def dedup_containment_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                              n=3, threshold=0.5)
 
 
-def minhash_bands_sql() -> str:
-    arms = []
-    for k in range(N_BANDS):
-        arms.append(f"SELECT doc_id, {k} AS band, "
-                    f"CAST(mh{2*k} AS VARCHAR) || '_' || CAST(mh{2*k+1} AS VARCHAR)"
-                    f" AS key FROM sig")
-    return " UNION ALL ".join(arms)
-
-
 @register(
     "dedup_minhash_lsh",
     oracle=f"""
-    {shingles_cte(3)},
-    {minhash_sig_sql()},
-    bands AS ({minhash_bands_sql()}),
-    cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-             FROM bands a JOIN bands b
-               ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id)
-    SELECT doc_a, doc_b,
-           len(list_intersect(sa.sh, sb.sh))
-             / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh)))
-             AS jaccard
-    FROM cand JOIN ds sa ON doc_a = sa.doc_id JOIN ds sb ON doc_b = sb.doc_id
-    WHERE len(list_intersect(sa.sh, sb.sh))
-            / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) >= 0.6
+    WITH {minhash_lsh_pairs_cte(3)}
+    SELECT doc_a, doc_b, jaccard FROM pairs
     """,
     doc="MinHash({n}) + {b}-band LSH candidates, verified with exact Jaccard "
         "— the dedup scale path (candidates ~ O(dups))."
@@ -346,42 +308,20 @@ def minhash_bands_sql() -> str:
     bench=True,
 )
 def dedup_minhash_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return minhash_lsh_pairs(load_table(spark, "documents", sf_dir),
-                             n=3, threshold=0.6)
+    return minhash_lsh_pairs(load_table(spark, "documents", sf_dir), n=3)
 
 
-_MINHASH_PAIRS_CTES = f"""
-    {shingles_cte(3)},
-    {{sig}},
-    bands AS ({{bands}}),
-    cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-             FROM bands a JOIN bands b
-               ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
-    pairs AS (
-      SELECT doc_a, doc_b
-      FROM cand JOIN ds sa ON doc_a = sa.doc_id JOIN ds sb ON doc_b = sb.doc_id
-      WHERE len(list_intersect(sa.sh, sb.sh))
-              / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh)))
-            >= 0.6)
-"""
+# the MinHash-LSH near-dup clusters (doc_id, canonical_id) of `documents`
+_CLUSTERS_CTES = f"""WITH RECURSIVE {minhash_lsh_pairs_cte(3)},
+    {components_cte()}"""
 
 
 @register(
     "dedup_clusters",
     oracle=f"""
-    WITH RECURSIVE
-    {_MINHASH_PAIRS_CTES.replace('WITH ', '', 1).format(
-        sig=minhash_sig_sql().strip().lstrip(), bands='{bands}')}
-    ,
-    edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs
-              UNION SELECT doc_b, doc_a FROM pairs),
-    reach(a, b) AS (
-      SELECT doc_id, doc_id FROM documents
-      UNION
-      SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-    )
-    SELECT a AS doc_id, MIN(b) AS canonical_id FROM reach GROUP BY a
-    """.format(bands=minhash_bands_sql()),
+    {_CLUSTERS_CTES}
+    SELECT doc_id, canonical_id FROM clusters
+    """,
     doc="duplicate CLUSTERS: connected components over the MinHash-LSH "
         "pair graph (operators/cluster.py, iterative min-label propagation "
         "— one shuffle join per round, rounds = component diameter). "
@@ -391,11 +331,8 @@ _MINHASH_PAIRS_CTES = f"""
     bench=True,
 )
 def dedup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.operators.cluster import (
-        connected_components,
-    )
     docs = load_table(spark, "documents", sf_dir)
-    pairs = minhash_lsh_pairs(docs, n=3, threshold=0.6)
+    pairs = minhash_lsh_pairs(docs, n=3)
     return connected_components(pairs, docs.select("doc_id"))
 
 
@@ -405,24 +342,12 @@ _N_FOLDS = 5
 @register(
     "cluster_aware_folds",
     oracle=f"""
-    WITH RECURSIVE
-    {_MINHASH_PAIRS_CTES.replace('WITH ', '', 1).format(
-        sig=minhash_sig_sql().strip().lstrip(), bands='{bands}')}
-    ,
-    edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs
-              UNION SELECT doc_b, doc_a FROM pairs),
-    reach(a, b) AS (
-      SELECT doc_id, doc_id FROM documents
-      UNION
-      SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-    ),
-    clusters AS (SELECT a AS doc_id, MIN(b) AS canonical_id
-                 FROM reach GROUP BY a)
+    {_CLUSTERS_CTES}
     SELECT doc_id, canonical_id,
            {md5_hash60_sql("'fold:' || CAST(canonical_id AS VARCHAR)")}
              % {_N_FOLDS} AS fold
     FROM clusters
-    """.format(bands=minhash_bands_sql()),
+    """,
     doc="leakage-safe k-fold assignment ({k} folds): the fold is the "
         "salted hash of the doc's near-dup CLUSTER canonical id, not of "
         "the doc itself — so every member of a MinHash-LSH connected "
@@ -438,11 +363,8 @@ _N_FOLDS = 5
         .format(k=_N_FOLDS),
 )
 def cluster_aware_folds_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.operators.cluster import (
-        connected_components,
-    )
     docs = load_table(spark, "documents", sf_dir)
-    pairs = minhash_lsh_pairs(docs, n=3, threshold=0.6)
+    pairs = minhash_lsh_pairs(docs, n=3)
     cc = connected_components(pairs, docs.select("doc_id"))
     fold = md5_hash60(F.concat(F.lit("fold:"),
                                F.col("canonical_id").cast("string"))) \
@@ -450,38 +372,11 @@ def cluster_aware_folds_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cc.select("doc_id", "canonical_id", fold.alias("fold"))
 
 
-def _simhash_sql() -> str:
-    sums = ", ".join(
-        f"SUM(CASE WHEN (h >> {j}) & 1 = 1 THEN 1 ELSE -1 END) AS s{j}"
-        for j in range(SIMHASH_BITS))
-    assemble = " + ".join(
-        f"(CASE WHEN s{j} > 0 THEN CAST({2**j} AS BIGINT) ELSE 0 END)"
-        for j in range(SIMHASH_BITS))
-    return f"""
-  hx AS (SELECT doc_id, {md5_hash60_sql('sh')} % {2**SIMHASH_BITS} AS h FROM g2),
-  bsum AS (SELECT doc_id, {sums} FROM hx GROUP BY doc_id),
-  sh AS (SELECT doc_id, {assemble} AS simhash FROM bsum)
-"""
-
-
-def _simhash_bands_sql() -> str:
-    arms = [f"SELECT doc_id, simhash, {k} AS band, (simhash >> {8*k}) & 255 "
-            f"AS key FROM sh" for k in range(4)]
-    return " UNION ALL ".join(arms)
-
-
 @register(
     "dedup_simhash",
     oracle=f"""
-    WITH t AS ({_WORDS}),
-    g2 AS (SELECT doc_id, unnest({word_grams_sql(2)}) AS sh FROM t),
-    {_simhash_sql()},
-    bands AS ({_simhash_bands_sql()})
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-    FROM bands a JOIN bands b
-      ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
-    WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
+    WITH {SIMHASH_CTE}
+    {simhash_pairs_sql(3)}
     """,
     doc="32-bit SimHash over word bigrams; near-dup pairs with hamming <= 3 "
         "via 4-byte banding (pigeonhole-complete for <=3 bit flips) + exact "
@@ -1379,22 +1274,12 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_incremental_minhash",
     oracle=f"""
-    {shingles_cte(3)},
-    {minhash_sig_sql()},
-    bands AS ({minhash_bands_sql()}),
-    cand AS (SELECT DISTINCT b.doc_id AS doc_id, c.doc_id AS dup_of
-             FROM bands b JOIN bands c
-               ON b.band = c.band AND b.key = c.key
-              AND b.doc_id % 10 = 0 AND c.doc_id % 10 <> 0)
-    SELECT cand.doc_id AS doc_id, cand.dup_of AS dup_of,
-           len(list_intersect(sb.sh, sc.sh))
-             / (len(sb.sh) + len(sc.sh) - len(list_intersect(sb.sh, sc.sh)))
-             AS jaccard
-    FROM cand JOIN ds sb ON cand.doc_id = sb.doc_id
-              JOIN ds sc ON cand.dup_of = sc.doc_id
-    WHERE len(list_intersect(sb.sh, sc.sh))
-            / (len(sb.sh) + len(sc.sh) - len(list_intersect(sb.sh, sc.sh)))
-          >= 0.6
+    WITH {minhash_index_cte(3)},
+    {lsh_cross_candidates_cte(
+        "(SELECT * FROM bands WHERE doc_id % 10 = 0)",
+        "(SELECT * FROM bands WHERE doc_id % 10 <> 0)")},
+    {verified_pairs_cte("doc_id", "dup_of")}
+    SELECT doc_id, dup_of, jaccard FROM pairs
     """,
     doc="NEAR-dup incremental screen: the arriving batch (doc_id % 10 = 0) "
         "probes the standing corpus's LSH band index; only cross "
@@ -1407,19 +1292,15 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.operators.dedup import (
-        incremental_minhash_dups,
-    )
     docs = load_table(spark, "documents", sf_dir)
-    return incremental_minhash_dups(docs, F.col("doc_id") % 10 == 0,
-                                    n=3, threshold=0.6)
+    return incremental_minhash_dups(docs, F.col("doc_id") % 10 == 0, n=3)
 
 
 @register(
     "decontaminate_ngram",
     oracle=f"""
-    {shingles_cte(4)},
-    ex AS (SELECT doc_id, unnest(sh) AS sh FROM ds),
+    WITH {doc_shingles_cte(4)},
+    {SHINGLE_ROWS_CTE},
     ev AS (SELECT DISTINCT sh FROM ex WHERE doc_id % 13 = 0),
     hits AS (SELECT doc_id, COUNT(*) AS n_shared_grams
              FROM ex JOIN ev USING (sh)
@@ -1439,9 +1320,6 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dedup families.",
 )
 def decontaminate_ngram_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.operators.dedup import (
-        contamination_screen,
-    )
     docs = load_table(spark, "documents", sf_dir)
     return contamination_screen(docs, F.col("doc_id") % 13 == 0, n=4)
 
@@ -1449,15 +1327,9 @@ def decontaminate_ngram_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "decontaminate_bloom",
     oracle=f"""
-    {shingles_cte(4)},
-    ex AS (SELECT doc_id, unnest(sh) AS sh FROM ds),
-    hx AS (SELECT doc_id, sh, {md5_hash60_sql('sh')} AS h FROM ex),
-    px AS (SELECT doc_id, sh,
-                  ((h % {BLOOM_M_BITS})
-                   + j * (((h >> {BLOOM_M_BITS.bit_length() - 1})
-                           % {BLOOM_M_BITS}) | 1))
-                    % {BLOOM_M_BITS} AS p
-           FROM hx CROSS JOIN (SELECT unnest({list(range(BLOOM_K))}) AS j) js),
+    WITH {doc_shingles_cte(4)},
+    {SHINGLE_ROWS_CTE},
+    {BLOOM_PROBES_CTE},
     evp AS (SELECT DISTINCT p FROM px WHERE doc_id % 13 = 0),
     fl AS (SELECT doc_id, sh FROM px JOIN evp USING (p)
            WHERE doc_id % 13 <> 0
@@ -1481,9 +1353,6 @@ def decontaminate_ngram_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def decontaminate_bloom_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.operators.dedup import (
-        contamination_screen_bloom,
-    )
     docs = load_table(spark, "documents", sf_dir)
     return contamination_screen_bloom(docs, F.col("doc_id") % 13 == 0, n=4)
 
@@ -1550,22 +1419,8 @@ CROSSMODAL_COS_T = EMBED_COS_T
 @register(
     "crossmodal_dup_verify",
     oracle=f"""
-    {shingles_cte(3)},
-    {minhash_sig_sql()},
-    bands AS ({minhash_bands_sql()}),
-    cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-             FROM bands a JOIN bands b
-               ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
-    {UNIT_INFO_CTE},
-    pairs AS (
-      SELECT doc_a, doc_b,
-             len(list_intersect(sa.sh, sb.sh))
-               / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh)))
-               AS jaccard
-      FROM cand JOIN ds sa ON doc_a = sa.doc_id JOIN ds sb ON doc_b = sb.doc_id
-      WHERE len(list_intersect(sa.sh, sb.sh))
-              / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh)))
-            >= 0.6)
+    WITH {minhash_lsh_pairs_cte(3)},
+    {UNIT_INFO_CTE}
     SELECT p.doc_a, p.doc_b, p.jaccard,
            {cosine_sql('ea', 'eb')} AS cosine,
            {cosine_sql('ea', 'eb')} >= {CROSSMODAL_COS_T} AS semantic_agree
@@ -1592,7 +1447,7 @@ def crossmodal_dup_verify_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     docs = load_table(spark, "documents", sf_dir)
     emb = load_table(spark, "embeddings", sf_dir)
-    pairs = minhash_lsh_pairs(docs, n=3, threshold=0.6)
+    pairs = minhash_lsh_pairs(docs, n=3)
     base = with_unit_info(emb)
     ea = base.select(F.col("vec_id").alias("doc_a"),
                      F.col("embedding").alias("va"), F.col("nrm").alias("na"))
@@ -1610,7 +1465,7 @@ def crossmodal_dup_verify_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "repetition_stats",
     oracle=f"""
-    WITH t AS ({_WORDS}),
+    WITH t AS ({WORDS_SQL}),
     ex AS (SELECT doc_id, unnest(words) AS tok FROM t),
     pt AS (SELECT doc_id, tok, COUNT(*) AS c FROM ex GROUP BY 1, 2),
     s AS (SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_tokens,
@@ -1639,7 +1494,6 @@ def crossmodal_dup_verify_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "are exact integer ratios so the oracle matches bit-for-bit.",
 )
 def repetition_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.operators.dedup import _doc_shingles
     docs = load_table(spark, "documents", sf_dir)
     ex = docs.select("doc_id", F.explode(
         F.split(F.coalesce(F.col("text"), F.lit("")), " ")).alias("tok"))
@@ -1648,7 +1502,7 @@ def repetition_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c").cast("long").alias("n_tokens"),
         F.count("*").alias("n_distinct"),
         F.max("c").alias("top_count"))
-    g2 = _doc_shingles(docs, 2) \
+    g2 = doc_shingles(docs, 2) \
         .select("doc_id", F.size("sh").alias("n_bigrams"))
     j = s.join(g2, "doc_id")
     distinct_frac = F.col("n_distinct").cast("double") / F.col("n_tokens")
@@ -1719,7 +1573,7 @@ def data_mix_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "token_rarity_score",
     oracle=f"""
-    WITH t AS ({_WORDS}),
+    WITH t AS ({WORDS_SQL}),
     ex AS (SELECT doc_id, unnest(words) AS tok FROM t),
     v AS (SELECT tok, COUNT(*) AS freq FROM ex GROUP BY 1)
     SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
@@ -1909,12 +1763,12 @@ def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dup_span_stats",
     oracle=f"""
-    {shingles_cte(3)},
+    WITH {doc_shingles_cte(3)},
+    {SHINGLE_ROWS_CTE},
+    {inverted_index_cte(DUP_SPAN_MIN_DF, None)},
     sizes AS (SELECT doc_id, CAST(len(sh) AS BIGINT) AS n_grams FROM ds),
-    ex AS (SELECT doc_id, unnest(sh) AS sh FROM ds),
-    dup_sh AS (SELECT sh FROM ex GROUP BY sh HAVING COUNT(*) >= 2),
     hits AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_dup_grams
-             FROM ex JOIN dup_sh USING (sh) GROUP BY doc_id)
+             FROM inv GROUP BY doc_id)
     SELECT s.doc_id, s.n_grams,
            CAST(COALESCE(h.n_dup_grams, 0) AS BIGINT) AS n_dup_grams,
            CAST(COALESCE(h.n_dup_grams, 0) AS DOUBLE)
@@ -1933,16 +1787,11 @@ def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
         "100 TB.",
 )
 def dup_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.operators.dedup import (
-        DUP_SPAN_MIN_DF,
-        _doc_shingles,
-        _filtered_inverted_index,
-    )
     docs = load_table(spark, "documents", sf_dir)
-    ds = _doc_shingles(docs, 3)
+    ds = doc_shingles(docs, 3)
     # the memoized df>=2 inverted index (shared with dup_span_redact):
     # its (doc_id, sh) rows are exactly the corpus-duplicated grams
-    inv = _filtered_inverted_index(ds, DUP_SPAN_MIN_DF, None)
+    inv = inverted_index(ds, DUP_SPAN_MIN_DF, None)
     hits = (inv.groupBy("doc_id")
                .agg(F.count("*").cast("long").alias("n_dup_grams")))
     sizes = ds.select("doc_id", F.size("sh").cast("long").alias("n_grams"))
@@ -1958,11 +1807,10 @@ def dup_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dup_span_redact",
     oracle=f"""
-    {shingles_cte(3)},
-    ex AS (SELECT doc_id, unnest(sh) AS sh FROM ds),
-    dup_sh AS (SELECT sh FROM ex GROUP BY sh HAVING COUNT(*) >= 2),
-    dset AS (SELECT e.doc_id, list(e.sh) AS dup_grams
-             FROM ex e JOIN dup_sh USING (sh) GROUP BY 1),
+    WITH {doc_shingles_cte(3)},
+    {SHINGLE_ROWS_CTE},
+    {inverted_index_cte(DUP_SPAN_MIN_DF, None)},
+    dset AS (SELECT doc_id, list(sh) AS dup_grams FROM inv GROUP BY 1),
     base AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
     marked AS (
       SELECT b.doc_id, b.words,
@@ -2005,47 +1853,13 @@ def dup_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def dup_span_redact_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.operators.dedup import dup_span_redact
     return dup_span_redact(load_table(spark, "documents", sf_dir), n=3)
-
-
-# shared CTE body for the ExactSubstr family oracles (spans + redact):
-# k = 8 anchors, df cap 64 — the same contract the Spark operator ships
-_EXACTSUBSTR_CTES = """
-    base AS (SELECT doc_id, string_split(text, ' ') AS w
-             FROM documents),
-    grams AS (
-      SELECT doc_id, i AS pos, array_to_string(w[i:i+7], ' ') AS g
-      FROM base, unnest(range(1, greatest(len(w) - 6, 1))) AS t(i)
-    ),
-    anchors AS (
-      SELECT g FROM grams GROUP BY g
-      HAVING COUNT(DISTINCT doc_id) BETWEEN 2 AND 64
-    ),
-    seeds AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             a.pos AS pos_a, b.pos AS pos_b
-      FROM grams a JOIN grams b USING (g) JOIN anchors USING (g)
-      WHERE a.doc_id < b.doc_id
-    ),
-    islands AS (
-      SELECT doc_a, doc_b, pos_a, pos_b, pos_a - pos_b AS diag,
-             pos_a - ROW_NUMBER() OVER (
-               PARTITION BY doc_a, doc_b, pos_a - pos_b
-               ORDER BY pos_a) AS island
-      FROM seeds
-    ),
-    spans AS (
-      SELECT doc_a, doc_b, MIN(pos_a) AS a_start, MIN(pos_b) AS b_start,
-             COUNT(*) + 7 AS span_len
-      FROM islands GROUP BY doc_a, doc_b, diag, island
-    )"""
 
 
 @register(
     "exactsubstr_spans",
     oracle=f"""
-    WITH {_EXACTSUBSTR_CTES}
+    WITH {exactsubstr_cte()}
     SELECT doc_a, doc_b, CAST(a_start AS BIGINT) AS a_start,
            CAST(b_start AS BIGINT) AS b_start,
            CAST(span_len AS BIGINT) AS span_len
@@ -2068,17 +1882,13 @@ _EXACTSUBSTR_CTES = """
     bench=True,
 )
 def exactsubstr_spans_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.operators.dedup import (
-        exactsubstr_spans,
-    )
-    return exactsubstr_spans(load_table(spark, "documents", sf_dir),
-                             min_len=8, max_df=64)
+    return exactsubstr_spans(load_table(spark, "documents", sf_dir))
 
 
 @register(
     "exactsubstr_redact",
     oracle=f"""
-    WITH {_EXACTSUBSTR_CTES},
+    WITH {exactsubstr_cte()},
     covered AS (
       SELECT DISTINCT doc_b AS doc_id, CAST(j AS BIGINT) AS j
       FROM spans, unnest(range(b_start, b_start + span_len)) AS t(j)
@@ -2121,11 +1931,7 @@ def exactsubstr_spans_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(operators/dedup.py::exactsubstr_redact).",
 )
 def exactsubstr_redact_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.operators.dedup import (
-        exactsubstr_redact,
-    )
-    return exactsubstr_redact(load_table(spark, "documents", sf_dir),
-                              min_len=8, max_df=64)
+    return exactsubstr_redact(load_table(spark, "documents", sf_dir))
 
 
 @register(
@@ -2168,9 +1974,7 @@ def embedding_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "lsh_band_stats",
     oracle=f"""
-    {shingles_cte(3)},
-    {minhash_sig_sql()},
-    bands AS ({minhash_bands_sql()}),
+    WITH {minhash_index_cte(3)},
     buckets AS (SELECT band, key, CAST(COUNT(*) AS BIGINT) AS sz
                 FROM bands GROUP BY band, key)
     SELECT CAST(band AS BIGINT) AS band,
@@ -2188,12 +1992,8 @@ def embedding_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "signature table; one groupBy(band, key) + one 8-row rollup.",
 )
 def lsh_band_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.operators.dedup import (
-        _cached_signatures,
-        _lsh_bands,
-    )
     docs = load_table(spark, "documents", sf_dir)
-    bands = _lsh_bands(_cached_signatures(docs, 3))
+    bands = minhash_bands(doc_signatures(docs, 3))
     buckets = (bands.groupBy("band", "key")
                     .agg(F.count("*").cast("long").alias("sz")))
     return (buckets.groupBy(F.col("band").cast("long").alias("band"))
@@ -2253,21 +2053,14 @@ def mix_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "split_leakage_audit",
     oracle=f"""
-    {_MINHASH_PAIRS_CTES.format(sig=minhash_sig_sql().strip().lstrip(),
-                                bands=minhash_bands_sql())},
-    jac AS (
-      SELECT doc_a, doc_b,
-             len(list_intersect(sa.sh, sb.sh))
-               / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh)))
-               AS jaccard
-      FROM pairs JOIN ds sa ON doc_a = sa.doc_id JOIN ds sb ON doc_b = sb.doc_id),
+    WITH {minhash_lsh_pairs_cte(3)},
     s AS (
       SELECT doc_id, {split_name_sql(SPLIT_BUCKET_SQL)} AS split
       FROM documents)
     SELECT j.doc_a, j.doc_b, j.jaccard,
            a.split AS split_a, b.split AS split_b,
            a.split != b.split AS leaks
-    FROM jac j JOIN s a ON j.doc_a = a.doc_id JOIN s b ON j.doc_b = b.doc_id
+    FROM pairs j JOIN s a ON j.doc_a = a.doc_id JOIN s b ON j.doc_b = b.doc_id
     """,
     doc="train/heldout leakage audit at the NEAR-dup level: every MinHash-"
         "LSH near-duplicate pair annotated with both members' "
@@ -2283,7 +2076,7 @@ def mix_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
-    pairs = minhash_lsh_pairs(docs, n=3, threshold=0.6)
+    pairs = minhash_lsh_pairs(docs, n=3)
     split = split_name(split_bucket(F.col("doc_id")))
     s = docs.select("doc_id", split.alias("split"))
     sa = s.select(F.col("doc_id").alias("doc_a"), F.col("split").alias("split_a"))
@@ -2352,21 +2145,9 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_fuzzy_corpus",
     oracle=f"""
-    WITH RECURSIVE
-    {_MINHASH_PAIRS_CTES.replace('WITH ', '', 1).format(
-        sig=minhash_sig_sql().strip().lstrip(),
-        bands=minhash_bands_sql())}
-    ,
-    edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs
-              UNION SELECT doc_b, doc_a FROM pairs),
-    reach(a, b) AS (
-      SELECT doc_id, doc_id FROM documents
-      UNION
-      SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-    ),
-    canon AS (SELECT a AS doc_id, MIN(b) AS canonical_id FROM reach GROUP BY a)
+    {_CLUSTERS_CTES}
     SELECT d.doc_id, d.lang, d.source
-    FROM documents d JOIN canon c
+    FROM documents d JOIN clusters c
       ON d.doc_id = c.doc_id AND d.doc_id = c.canonical_id
     """,
     doc="the fuzzy-deduped corpus itself: keep exactly one canonical "
@@ -2379,11 +2160,8 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         "self-canonical rows.",
 )
 def dedup_fuzzy_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.operators.cluster import (
-        connected_components,
-    )
     docs = load_table(spark, "documents", sf_dir)
-    pairs = minhash_lsh_pairs(docs, n=3, threshold=0.6)
+    pairs = minhash_lsh_pairs(docs, n=3)
     labels = connected_components(pairs, docs.select("doc_id"))
     keep = (labels.filter(F.col("doc_id") == F.col("canonical_id"))
                   .select("doc_id"))
@@ -2451,7 +2229,7 @@ _N_SWEEP = (3, 4, 5)
 @register(
     "decontamination_n_sweep",
     oracle=f"""
-    WITH t AS ({_WORDS}),
+    WITH t AS ({WORDS_SQL}),
     {",".join(_n_sweep_leg_sql(n) for n in _N_SWEEP)}
     {" UNION ALL ".join(_n_sweep_select_sql(n) for n in _N_SWEEP)}
     """,
@@ -2468,9 +2246,6 @@ _N_SWEEP = (3, 4, 5)
         "dedup index, so the sweep adds a single extra shingle pass.",
 )
 def decontamination_n_sweep_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.operators.dedup import (
-        contamination_screen,
-    )
     docs = load_table(spark, "documents", sf_dir)
     legs = []
     for n in _N_SWEEP:
@@ -2581,8 +2356,8 @@ def token_drift_chi2_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ngram_novelty_by_source",
     oracle=f"""
-    {shingles_cte(3)},
-    ex AS (SELECT doc_id, unnest(sh) AS sh FROM ds),
+    WITH {doc_shingles_cte(3)},
+    {SHINGLE_ROWS_CTE},
     first AS (SELECT sh, MIN(doc_id) AS first_doc FROM ex GROUP BY 1),
     pd AS (SELECT e.doc_id,
                   SUM(CASE WHEN e.doc_id = f.first_doc
@@ -2612,10 +2387,8 @@ def token_drift_chi2_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "everything reduces on doc-sized relations; no pair joins.",
 )
 def ngram_novelty_by_source_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.operators.dedup import _doc_shingles
     docs = load_table(spark, "documents", sf_dir)
-    ds = _doc_shingles(docs, 3)
-    ex = ds.select("doc_id", F.explode("sh").alias("sh"))
+    ex = shingle_rows(doc_shingles(docs, 3))
     first = ex.groupBy("sh").agg(F.min("doc_id").alias("first_doc"))
     pd_ = (ex.join(first, "sh")
            .groupBy("doc_id")
@@ -3200,19 +2973,7 @@ def _ccnet_bucketed(docs: DataFrame, b2: DataFrame) -> DataFrame:
 @register(
     "dedup_cluster_survivors",
     oracle=f"""
-    WITH RECURSIVE
-    {_MINHASH_PAIRS_CTES.replace('WITH ', '', 1).format(
-        sig=minhash_sig_sql().strip().lstrip(), bands='{bands}')}
-    ,
-    edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs
-              UNION SELECT doc_b, doc_a FROM pairs),
-    reach(a, b) AS (
-      SELECT doc_id, doc_id FROM documents
-      UNION
-      SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-    ),
-    clusters AS (SELECT a AS doc_id, MIN(b) AS canonical_id
-                 FROM reach GROUP BY a),
+    {_CLUSTERS_CTES},
     q AS (SELECT c.doc_id, c.canonical_id, d.n_chars
           FROM clusters c JOIN documents d USING (doc_id)),
     r AS (SELECT doc_id, canonical_id,
@@ -3223,7 +2984,7 @@ def _ccnet_bucketed(docs: DataFrame, b2: DataFrame) -> DataFrame:
     SELECT doc_id, canonical_id, survivor_id,
            doc_id = survivor_id AS is_survivor
     FROM r
-    """.format(bands=minhash_bands_sql()),
+    """,
     doc="NEAR-dup survivor selection: one kept document per MinHash-LSH "
         "connected component — the decision step a production dedup "
         "actually ships (Lee et al. 2022 keep one per duplicate "
@@ -3245,11 +3006,8 @@ def _ccnet_bucketed(docs: DataFrame, b2: DataFrame) -> DataFrame:
 )
 def dedup_cluster_survivors_q(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.operators.cluster import (
-        connected_components,
-    )
     docs = load_table(spark, "documents", sf_dir)
-    pairs = minhash_lsh_pairs(docs, n=3, threshold=0.6)
+    pairs = minhash_lsh_pairs(docs, n=3)
     cc = connected_components(pairs, docs.select("doc_id"))
     q = cc.join(docs.select("doc_id", "n_chars"), "doc_id")
     w = Window.partitionBy("canonical_id").orderBy(

@@ -26,6 +26,7 @@ import os
 
 from pyspark.sql import DataFrame
 
+from kafka_flink_processing_spark.operators.dedup import NEAR_DUP_JACCARD
 from kafka_flink_processing_spark.operators.pnl import price_exposure
 from kafka_flink_processing_spark.streaming.sinks import (
     append_jdbc,
@@ -101,7 +102,7 @@ def pnl_job_jdbc(trades: DataFrame, prices: DataFrame, url: str,
 
 def incremental_dedup_job(docs_stream: DataFrame, corpus: DataFrame,
                           out_dir: str, checkpoint_root: str,
-                          n: int = 3, threshold: float = 0.6,
+                          n: int = 3, threshold: float = NEAR_DUP_JACCARD,
                           available_now: bool = False):
     """Streaming near-dup ingest guard: each arriving document micro-batch
     is screened (a) against the STANDING corpus's MinHash-LSH index — the
@@ -122,17 +123,17 @@ def incremental_dedup_job(docs_stream: DataFrame, corpus: DataFrame,
     candidates are O(batch x dup rate), never corpus x corpus.
     """
     from kafka_flink_processing_spark.operators.dedup import (
-        _cached_signatures,
-        _lsh_bands,
+        doc_signatures,
         lsh_cross_candidates,
         lsh_self_candidates,
         shingle_table,
         signatures_from_shingles,
+        minhash_bands,
         verified_jaccard_pairs,
     )
 
-    corpus_sig = _cached_signatures(corpus, n)
-    corpus_bands = _lsh_bands(corpus_sig)
+    corpus_sig = doc_signatures(corpus, n)
+    corpus_bands = minhash_bands(corpus_sig)
 
     def screen(batch: DataFrame, epoch: int) -> None:
         if batch.isEmpty():
@@ -144,7 +145,7 @@ def incremental_dedup_job(docs_stream: DataFrame, corpus: DataFrame,
             # the string-heavy shingle UDF would run once per consumer
             ds_b = keep(shingle_table(batch, n))
             sig_b = signatures_from_shingles(ds_b)
-            bands_b = _lsh_bands(sig_b)
+            bands_b = minhash_bands(sig_b)
             # batch vs standing corpus (incremental_minhash_dups semantics)
             cross = verified_jaccard_pairs(
                 lsh_cross_candidates(bands_b, corpus_bands), sig_b,

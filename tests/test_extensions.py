@@ -397,8 +397,8 @@ def test_ngram_max_df_bounds_hot_shingle_candidates(spark):
     index entirely, so candidate intersections stay bounded, while pairs
     that are near-dups through RARE shingles still surface."""
     from kafka_flink_processing_spark.operators.dedup import (
-        _doc_shingles,
-        _jaccard_intersections,
+        doc_shingles,
+        jaccard_intersections,
     )
     boiler = "all rights reserved by the example corporation of somewhere"
     rows = [(i, f"{boiler} unique{i}a unique{i}b unique{i}c unique{i}d")
@@ -407,10 +407,10 @@ def test_ngram_max_df_bounds_hot_shingle_candidates(spark):
     rows += [(100, "rare alpha beta gamma delta epsilon zeta eta theta"),
              (101, "rare alpha beta gamma delta epsilon zeta eta iota")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    ds = _doc_shingles(docs, 3)
+    ds = doc_shingles(docs, 3)
 
-    uncapped = _jaccard_intersections(ds, None).count()
-    capped = _jaccard_intersections(ds, 10).count()
+    uncapped = jaccard_intersections(ds, None).count()
+    capped = jaccard_intersections(ds, 10).count()
     # 40 docs x 7 shared boilerplate shingles -> C(40,2)=780 hot pairs
     assert uncapped >= 780
     assert capped < 40  # hot shingles gone; only rare-shingle pairs remain
@@ -420,10 +420,10 @@ def test_ngram_max_df_bounds_hot_shingle_candidates(spark):
 
 
 _MEMO_ENTRY_POINTS = {
-    "shingles": lambda d, c, docs: d._doc_shingles(docs, 3),
-    "inverted": lambda d, c, docs: d._filtered_inverted_index(
-        d._doc_shingles(docs, 3), 1, d.NGRAM_MAX_DF),
-    "minhash": lambda d, c, docs: d._cached_signatures(docs, 3),
+    "shingles": lambda d, c, docs: d.doc_shingles(docs, 3),
+    "inverted": lambda d, c, docs: d.inverted_index(
+        d.doc_shingles(docs, 3), 1, d.NGRAM_MAX_DF),
+    "minhash": lambda d, c, docs: d.doc_signatures(docs, 3),
     "simhash": lambda d, c, docs: d.simhash_pairs(docs),
     "ess": lambda d, c, docs: d._ess_anchor_index(docs, 3, 64),
     "edges": lambda d, c, docs: c._edge_table(d.minhash_lsh_pairs(docs)),
@@ -623,10 +623,10 @@ def test_lsh_band_stats_pair_volume_consistent(docs, spark):
     """sum over bands of C(bucket,2) must upper-bound the distinct LSH
     candidate count (each candidate pair collides in >= 1 band)."""
     from kafka_flink_processing_spark.operators.dedup import (
-        _cached_signatures,
-        _lsh_bands,
+        doc_signatures,
+        minhash_bands,
     )
-    bands = _lsh_bands(_cached_signatures(docs, 3))
+    bands = minhash_bands(doc_signatures(docs, 3))
     buckets = bands.groupBy("band", "key").agg(F.count("*").alias("sz"))
     total_cand = (buckets.agg(F.sum(F.expr("sz * (sz - 1) div 2")))
                   .collect()[0][0])

@@ -137,9 +137,7 @@ def test_failed_epoch_write_frees_epoch_caches(spark, tmp_path, job):
     """A document job whose epoch write raises must unpersist what the
     epoch cached: afterwards the session's persistent RDDs are exactly
     those before the job plus the artifacts it returns or memoizes."""
-    from kafka_flink_processing_spark.operators.dedup import (
-        _cached_signatures,
-    )
+    from kafka_flink_processing_spark.operators.dedup import doc_signatures
 
     docs = spark.createDataFrame(_DOCS, _DOC_SCHEMA)
     out = tmp_path / "out"
@@ -148,7 +146,7 @@ def test_failed_epoch_write_frees_epoch_caches(spark, tmp_path, job):
     if job == "incremental_dedup":
         # the corpus signatures are the job's memoized artifact; build
         # them first so the snapshot below already holds them
-        _cached_signatures(docs, 3)
+        doc_signatures(docs, 3)
     before = _persistent_rdds(spark)
     artifacts = []
     if job == "incremental_dedup":

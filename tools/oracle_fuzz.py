@@ -158,6 +158,16 @@ TOTAL_TEXT = [
     # space-split word trigrams, counted and ordered as binary UTF-8
     # strings in both engines
     "heavy_hitters_adaptive", "heavy_hitters_mg",
+    # the near-dup family: dedup_minhash_lsh's space-split shingles and
+    # md5-over-UTF-8 hashes, spliced from the operators/dedup.py renderings
+    # that tests/test_dedup_renderings.py checks on non-ASCII words
+    "dedup_ngram_jaccard", "dedup_containment_pairs", "dedup_clusters",
+    "cluster_aware_folds", "dedup_simhash", "dedup_incremental_minhash",
+    "decontaminate_ngram", "decontaminate_bloom", "crossmodal_dup_verify",
+    "dup_span_stats", "dup_span_redact", "lsh_band_stats",
+    "split_leakage_audit", "dedup_fuzzy_corpus", "dedup_cluster_survivors",
+    "minhash_jaccard_accuracy", "lsh_threshold_sweep",
+    "ngram_novelty_by_source",
 ]
 
 LANGS = ["en", "de", "fr", "es"]
