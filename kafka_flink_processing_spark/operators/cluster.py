@@ -13,7 +13,7 @@ shuffle join + one aggregation — no driver-side data, only the converged
 flag crosses to the driver (an O(diameter) loop of ACTIONS, not of rows).
 
 Determinism: min() is order-free, so the result is independent of
-partitioning — its DuckDB rendering, components_cte, reproduces it with a
+partitioning — its DuckDB rendering, COMPONENTS_CTE, reproduces it with a
 recursive CTE over the same edge set, and every closure oracle in plans/
 splices it in (tests/test_dedup_renderings.py compares the two).
 """
@@ -142,14 +142,13 @@ def connected_components(pairs: DataFrame, nodes: DataFrame) -> DataFrame:
     return labels
 
 
-def components_cte(pairs: str = "pairs") -> str:
-    """DuckDB rendering of connected_components over the (doc_a, doc_b)
-    relation `pairs` and the `documents` nodes: CTEs `edges`, `reach` and
-    `clusters` (doc_id, canonical_id). The query must open WITH RECURSIVE;
-    `reach` is the transitive closure, so a closure oracle reads `pairs`
-    twice (see operators/dedup.py::verified_pairs_cte)."""
-    return f"""edges AS (SELECT doc_a AS a, doc_b AS b FROM {pairs}
-              UNION SELECT doc_b, doc_a FROM {pairs}),
+# DuckDB rendering of connected_components over the (doc_a, doc_b)
+# relation `pairs` and the `documents` nodes: CTEs `edges`, `reach` and
+# `clusters` (doc_id, canonical_id). The query must open WITH RECURSIVE;
+# `reach` is the transitive closure, so a closure oracle reads `pairs`
+# twice (see operators/dedup.py::verified_pairs_cte).
+COMPONENTS_CTE = """edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs
+              UNION SELECT doc_b, doc_a FROM pairs),
     reach(a, b) AS (
       SELECT doc_id, doc_id FROM documents
       UNION

@@ -362,12 +362,12 @@ def verified_jaccard_pairs(cand: DataFrame, sig_left: DataFrame,
                   .select(left_col, right_col, "jaccard"))
 
 
-def verified_pairs_cte(left_col: str = "doc_a", right_col: str = "doc_b",
-                       threshold: float = NEAR_DUP_JACCARD) -> str:
-    """DuckDB rendering of verified_jaccard_pairs over the candidates
-    `cand` (left_col, right_col) and the shingle sets `ds`: CTE `pairs`
-    (left_col, right_col, jaccard). MATERIALIZED: the closure oracles
-    read `pairs` twice, and DuckDB would otherwise verify every
+def verified_pairs_cte(left_col: str = "doc_a",
+                       right_col: str = "doc_b") -> str:
+    """DuckDB rendering of verified_jaccard_pairs at NEAR_DUP_JACCARD over
+    the candidates `cand` (left_col, right_col) and the shingle sets `ds`:
+    CTE `pairs` (left_col, right_col, jaccard). MATERIALIZED: the closure
+    oracles read `pairs` twice, and DuckDB would otherwise verify every
     candidate once per reader."""
     return f"""pairs AS MATERIALIZED (
       SELECT * FROM (
@@ -375,7 +375,7 @@ def verified_pairs_cte(left_col: str = "doc_a", right_col: str = "doc_b",
                {jaccard_sql('sa.sh', 'sb.sh')} AS jaccard
         FROM cand c JOIN ds sa ON c.{left_col} = sa.doc_id
                     JOIN ds sb ON c.{right_col} = sb.doc_id)
-      WHERE jaccard >= {threshold})"""
+      WHERE jaccard >= {NEAR_DUP_JACCARD})"""
 
 
 def lsh_self_candidates(bands: DataFrame, left_col: str = "doc_a",
@@ -470,12 +470,12 @@ def minhash_lsh_pairs(docs: DataFrame, n: int = 3,
     return verified_jaccard_pairs(cand, sig, sig, "doc_a", "doc_b", threshold)
 
 
-def minhash_lsh_pairs_cte(n: int = 3,
-                          threshold: float = NEAR_DUP_JACCARD) -> str:
-    """DuckDB rendering of minhash_lsh_pairs: minhash_index_cte(n), the
-    candidates `cand` and the verified `pairs` (doc_a, doc_b, jaccard)."""
+def minhash_lsh_pairs_cte(n: int = 3) -> str:
+    """DuckDB rendering of minhash_lsh_pairs at NEAR_DUP_JACCARD:
+    minhash_index_cte(n), the candidates `cand` and the verified `pairs`
+    (doc_a, doc_b, jaccard)."""
     return (f"{minhash_index_cte(n)},\n    {LSH_SELF_CANDIDATES_CTE},\n"
-            f"    {verified_pairs_cte(threshold=threshold)}")
+            f"    {verified_pairs_cte()}")
 
 
 def simhash(docs: DataFrame) -> DataFrame:

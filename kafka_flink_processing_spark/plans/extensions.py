@@ -76,7 +76,7 @@ from kafka_flink_processing_spark.functions.multimodal import (
     with_wav_payload,
 )
 from kafka_flink_processing_spark.operators.cluster import (
-    components_cte,
+    COMPONENTS_CTE,
     connected_components,
 )
 from kafka_flink_processing_spark.operators.dedup import (
@@ -313,7 +313,7 @@ def dedup_minhash_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # the MinHash-LSH near-dup clusters (doc_id, canonical_id) of `documents`
 _CLUSTERS_CTES = f"""WITH RECURSIVE {minhash_lsh_pairs_cte(3)},
-    {components_cte()}"""
+    {COMPONENTS_CTE}"""
 
 
 @register(

@@ -126,9 +126,9 @@ def incremental_dedup_job(docs_stream: DataFrame, corpus: DataFrame,
         doc_signatures,
         lsh_cross_candidates,
         lsh_self_candidates,
+        minhash_bands,
         shingle_table,
         signatures_from_shingles,
-        minhash_bands,
         verified_jaccard_pairs,
     )
 

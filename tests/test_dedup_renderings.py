@@ -179,7 +179,7 @@ def test_connected_components(docs, docs_dir):
                                 docs.select("doc_id"))
     _same("components", cc, docs_dir,
           f"WITH RECURSIVE {D.minhash_lsh_pairs_cte(3)}, "
-          f"{C.components_cte()} SELECT * FROM clusters")
+          f"{C.COMPONENTS_CTE} SELECT * FROM clusters")
 
 
 def test_simhash(docs, docs_dir):
