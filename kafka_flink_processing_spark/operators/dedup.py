@@ -58,6 +58,8 @@ from kafka_flink_processing_spark.functions.text import (
 # The near-dup Jaccard threshold of every MinHash-LSH and n-gram pair
 # view (batch, incremental and streaming), and of their oracles.
 NEAR_DUP_JACCARD = 0.6
+# The containment threshold of containment_pairs and its oracle.
+NEAR_DUP_CONTAINMENT = 0.5
 
 
 def exact_dedup(docs: DataFrame) -> DataFrame:
@@ -1123,10 +1125,20 @@ def contamination_screen(docs: DataFrame, eval_cond, n: int = 4) -> DataFrame:
                      / F.col("n_grams")).alias("contamination_ratio")))
 
 
-def containment_pairs(docs: DataFrame, n: int = 3,
-                      threshold: float = 0.5) -> DataFrame:
-    """All pairs whose n-gram CONTAINMENT — |A∩B| / min(|A|, |B|) — meets
-    the threshold, alongside their Jaccard for contrast.
+def contamination_hits_cte(eval_cond: str, ex: str = "ex",
+                           tag: str | int = "") -> str:
+    """DuckDB rendering of contamination_screen's eval grams and per-doc
+    hits over shingle rows `ex` for the eval split `eval_cond`: CTEs
+    `ev{tag}` (sh) and `hits{tag}` (doc_id, n_shared_grams)."""
+    return (f"ev{tag} AS (SELECT DISTINCT sh FROM {ex} WHERE {eval_cond}),\n"
+            f"    hits{tag} AS (SELECT doc_id, COUNT(*) AS n_shared_grams\n"
+            f"             FROM {ex} JOIN ev{tag} USING (sh)\n"
+            f"             WHERE NOT ({eval_cond}) GROUP BY 1)")
+
+
+def containment_pairs(docs: DataFrame, n: int = 3) -> DataFrame:
+    """All pairs whose n-gram CONTAINMENT — |A∩B| / min(|A|, |B|) — is
+    at least NEAR_DUP_CONTAINMENT, alongside their Jaccard for contrast.
 
     Containment is the asymmetric near-dup measure Jaccard misses: a short
     document pasted verbatim inside a long one has tiny Jaccard (the union
@@ -1143,5 +1155,5 @@ def containment_pairs(docs: DataFrame, n: int = 3,
     return (inter.withColumn("containment", F.col("n_common")
                              / F.least(F.col("n_a"), F.col("n_b")))
                  .withColumn("jaccard", _count_jaccard())
-                 .filter(F.col("containment") >= threshold)
+                 .filter(F.col("containment") >= NEAR_DUP_CONTAINMENT)
                  .select("doc_a", "doc_b", "containment", "jaccard"))

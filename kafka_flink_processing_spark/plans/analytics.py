@@ -29,7 +29,26 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kafka_flink_processing_spark.functions.constants import N_MINHASH
-from kafka_flink_processing_spark.functions.exact import dsum, dsum_sql
+from kafka_flink_processing_spark.functions.exact import (
+    MIDDLE_RANKS_SQL,
+    dsum,
+    dsum_sql,
+    middle_mean,
+    middle_mean_sql,
+    middle_ranks,
+    middle_sum,
+    middle_sum_sql,
+    moment_sums,
+    moment_sums_sql,
+    ols_intercept,
+    ols_intercept_sql,
+    ols_slope,
+    ols_slope_sql,
+    percentile_disc,
+    percentile_disc_sql,
+    ranked_sql,
+    with_ranks,
+)
 from kafka_flink_processing_spark.functions.ivf_codebook import IVF_CENTROIDS
 from kafka_flink_processing_spark.functions.text import (
     LANG_ID_SQL,
@@ -798,12 +817,6 @@ def event_transition_matrix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _ZIPF_TOP = 1000
-_LN_SUMS_SQL = (
-    f"CAST(COUNT(*) AS BIGINT) AS n, "
-    f"{dsum_sql('ln(rank)', 6)} AS sx, "
-    f"{dsum_sql('ln(freq)', 6)} AS sy, "
-    f"{dsum_sql('ln(rank) * ln(freq)', 6)} AS sxy, "
-    f"{dsum_sql('ln(rank) * ln(rank)', 6)} AS sxx")
 
 
 @register(
@@ -815,11 +828,11 @@ _LN_SUMS_SQL = (
         SELECT freq,
                ROW_NUMBER() OVER (ORDER BY freq DESC, token) AS rank
         FROM counts) WHERE rank <= {_ZIPF_TOP}),
-    agg AS (SELECT {_LN_SUMS_SQL} FROM ranked)
-    SELECT n AS n_tokens,
-           (n * sxy - sx * sy) / (n * sxx - sx * sx) AS zipf_slope,
-           (sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx) / n
-             AS zipf_intercept
+    agg AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
+                   {moment_sums_sql('ln(rank)', 'ln(freq)')}
+            FROM ranked)
+    SELECT n AS n_tokens, {ols_slope_sql('n')} AS zipf_slope,
+           {ols_intercept_sql('n')} AS zipf_intercept
     FROM agg
     """,
     doc="Zipf's-law fit over the top-1000 token vocabulary: least-squares "
@@ -831,8 +844,8 @@ _LN_SUMS_SQL = (
         "TakeOrderedAndProject to the bounded top-K, so the single-"
         "partition row_number touches 1000 rows, never the vocabulary. "
         "Cross-engine exactness: each ln() term is rounded to 6dp and "
-        "summed as scaled int64 (functions/exact.py), so the closed-form "
-        "slope arithmetic runs on bit-identical sums in both engines.",
+        "summed exactly, so the closed-form slope runs on bit-identical "
+        "sums in both engines; one distinct token has no slope (NULL).",
 )
 def vocab_zipf_slope_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
@@ -843,17 +856,10 @@ def vocab_zipf_slope_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rank",
         F.row_number().over(Window.orderBy(F.desc("freq"), "token")))
     lr, lf = F.log(F.col("rank").cast("double")), F.log("freq")
-    agg = ranked.agg(F.count("*").alias("n"),
-                     dsum(lr, 6).alias("sx"),
-                     dsum(lf, 6).alias("sy"),
-                     dsum(lr * lf, 6).alias("sxy"),
-                     dsum(lr * lr, 6).alias("sxx"))
-    slope = ((F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy"))
-             / (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")))
-    return (agg.withColumn("zipf_slope", slope)
-            .select(F.col("n").alias("n_tokens"), "zipf_slope",
-                    ((F.col("sy") - F.col("zipf_slope") * F.col("sx"))
-                     / F.col("n")).alias("zipf_intercept")))
+    agg = ranked.agg(F.count("*").alias("n"), *moment_sums(lr, lf))
+    return agg.select(F.col("n").alias("n_tokens"),
+                      ols_slope("n").alias("zipf_slope"),
+                      ols_intercept("n").alias("zipf_intercept"))
 
 
 _NPROBES = (1, 2, 4, 8)
@@ -1177,14 +1183,12 @@ def key_skew_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
           GROUP BY 1, 2),
     d AS (SELECT p.tp - v.tv AS dt FROM v
           JOIN p ON v.user_id = p.user_id AND v.session_id = p.session_id),
-    r AS (SELECT dt, ROW_NUMBER() OVER (ORDER BY dt) AS rn,
-                 COUNT(*) OVER () AS n
-          FROM d)
+    r AS ({ranked_sql('d', (), ('dt',))})
     SELECT CAST(MAX(n) AS BIGINT) AS n_converted,
-           CAST(SUM(dt) AS DOUBLE) / COUNT(*) AS median_us,
+           {middle_mean_sql('dt')} AS median_us,
            (SELECT CAST(MIN(dt) AS BIGINT) FROM d) AS min_us,
            (SELECT CAST(MAX(dt) AS BIGINT) FROM d) AS max_us
-    FROM r WHERE rn IN ((n + 1) // 2, (n + 2) // 2)
+    FROM r WHERE {MIDDLE_RANKS_SQL}
     """,
     doc="in-session time-to-convert: for every session whose first view "
         "is later followed by a purchase (same strict ordering as "
@@ -1214,17 +1218,10 @@ def funnel_time_to_convert_q(spark: SparkSession, sf_dir: str) -> DataFrame:
          .groupBy("user_id", "session_id").agg(F.min("tp").alias("tp")))
     d = p.join(v, ["user_id", "session_id"]) \
          .select((F.col("tp") - F.col("tv")).alias("dt"))
-    w = Window.orderBy("dt")
-    ranked = (d.withColumn("rn", F.row_number().over(w))
-              .withColumn("n", F.count("*").over(
-                  Window.partitionBy(F.lit(1)))))
-    mid = ranked.filter(
-        (F.col("rn") == F.floor((F.col("n") + 1) / 2))
-        | (F.col("rn") == F.floor((F.col("n") + 2) / 2)))
+    mid = with_ranks(d, (), ("dt",)).filter(middle_ranks())
     stats = d.agg(F.min("dt").alias("min_us"), F.max("dt").alias("max_us"))
     return (mid.agg(F.max("n").cast("long").alias("n_converted"),
-                    (F.sum("dt").cast("double") / F.count("*"))
-                    .alias("median_us"))
+                    middle_mean("dt").alias("median_us"))
             .crossJoin(F.broadcast(stats)))
 
 
@@ -1336,27 +1333,14 @@ _MAD_DENSE_SQL = """
     "event_rate_mad_outliers",
     oracle=f"""
     WITH {_MAD_DENSE_SQL},
-    r1 AS (SELECT *,
-                  ROW_NUMBER() OVER (PARTITION BY event_type
-                                     ORDER BY n_events, hour) AS rn,
-                  COUNT(*) OVER (PARTITION BY event_type) AS n
-           FROM full_h),
-    med AS (SELECT event_type,
-                   SUM(CASE WHEN rn = (n + 1) // 2 THEN n_events END)
-                   + SUM(CASE WHEN rn = (n + 2) // 2 THEN n_events END)
-                     AS med2
+    r1 AS ({ranked_sql('full_h', ('event_type',), ('n_events', 'hour'))}),
+    med AS (SELECT event_type, {middle_sum_sql('n_events')} AS med2
             FROM r1 GROUP BY 1),
     dev AS (SELECT f.event_type, f.hour, f.n_events, m.med2,
                    ABS(2 * f.n_events - m.med2) AS d
             FROM full_h f JOIN med m ON f.event_type = m.event_type),
-    r2 AS (SELECT *,
-                  ROW_NUMBER() OVER (PARTITION BY event_type
-                                     ORDER BY d, hour) AS rn,
-                  COUNT(*) OVER (PARTITION BY event_type) AS n
-           FROM dev),
-    mad AS (SELECT event_type,
-                   SUM(CASE WHEN rn = (n + 1) // 2 THEN d END)
-                   + SUM(CASE WHEN rn = (n + 2) // 2 THEN d END) AS mad2
+    r2 AS ({ranked_sql('dev', ('event_type',), ('d', 'hour'))}),
+    mad AS (SELECT event_type, {middle_sum_sql('d')} AS mad2
             FROM r2 GROUP BY 1)
     SELECT v.event_type, v.hour, v.n_events,
            CAST(v.med2 AS DOUBLE) / 2.0 AS median_rate,
@@ -1388,23 +1372,12 @@ def event_rate_mad_outliers_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, "events", sf_dir)
     full_h = _dense_hourly_counts(events)
 
-    def rank_select(df: DataFrame, val: str, out: str) -> DataFrame:
-        """sum of the two middle-rank values of `val` per event_type
-        (= 2x the exact median, kept integer)."""
-        wr = Window.partitionBy("event_type").orderBy(val, "hour")
-        wn = Window.partitionBy("event_type")
-        r = (df.withColumn("rn", F.row_number().over(wr))
-             .withColumn("n", F.count("*").over(wn)))
-        p1 = F.floor((F.col("n") + 1) / 2)
-        p2 = F.floor((F.col("n") + 2) / 2)
-        return r.groupBy("event_type").agg(
-            (F.sum(F.when(F.col("rn") == p1, F.col(val)))
-             + F.sum(F.when(F.col("rn") == p2, F.col(val)))).alias(out))
-
-    med = rank_select(full_h, "n_events", "med2")
+    med = (with_ranks(full_h, ("event_type",), ("n_events", "hour"))
+           .groupBy("event_type").agg(middle_sum("n_events").alias("med2")))
     dev = (full_h.join(F.broadcast(med), "event_type")
            .withColumn("d", F.abs(2 * F.col("n_events") - F.col("med2"))))
-    mad = rank_select(dev, "d", "mad2")
+    mad = (with_ranks(dev, ("event_type",), ("d", "hour"))
+           .groupBy("event_type").agg(middle_sum("d").alias("mad2")))
     out = dev.join(F.broadcast(mad), "event_type")
     madv = F.col("mad2").cast("double") / 4.0
     return out.select(
@@ -1677,19 +1650,15 @@ def column_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- r6 late: RFM customer segmentation ----------------------------------
 
+# quintile cutoffs: each measure's value at rank ceil(q*n), custkey tie-break
 _RFM_QS = (0.2, 0.4, 0.6, 0.8)
-
-
-def _rfm_cut_sql(col: str, prefix: str) -> str:
-    """Quintile cutoffs of a per-customer measure, percentile_disc
-    semantics (value at rank ceil(q*n), custkey tie-break) — the same
-    rank-selection idiom as exact_quantiles_value."""
-    cases = ", ".join(
-        f"MIN(CASE WHEN rn = CAST(CEIL({q} * n) AS BIGINT) THEN {col} END)"
-        f" AS {prefix}{int(q * 100)}" for q in _RFM_QS)
-    return (f"(SELECT {cases} FROM (SELECT {col}, o_custkey, "
-            f"ROW_NUMBER() OVER (ORDER BY {col}, o_custkey) AS rn, "
-            f"COUNT(*) OVER () AS n FROM cust))")
+_RFM_MEASURES = (("rec_days", "r"), ("freq", "f"), ("monetary", "m"))
+_RFM_CUTS_SQL = ",\n    ".join(
+    f"{prefix}cut AS (SELECT "
+    + ", ".join(f"{percentile_disc_sql(q, col)} AS {prefix}{int(q * 100)}"
+                for q in _RFM_QS)
+    + f" FROM ({ranked_sql('cust2', (), (col, 'o_custkey'))}))"
+    for col, prefix in _RFM_MEASURES)
 
 
 @register(
@@ -1702,9 +1671,7 @@ def _rfm_cut_sql(col: str, prefix: str) -> str:
              FROM orders GROUP BY 1),
     cust2 AS (SELECT c.*, date_diff('day', last_order, as_of) AS rec_days
               FROM cust c, mx),
-    rcut AS {_rfm_cut_sql('rec_days', 'r').replace('FROM cust', 'FROM cust2')},
-    fcut AS {_rfm_cut_sql('freq', 'f')},
-    mcut AS {_rfm_cut_sql('monetary', 'm')},
+    {_RFM_CUTS_SQL},
     scored AS (SELECT
         5 - ((rec_days > r20)::INT + (rec_days > r40)::INT
              + (rec_days > r60)::INT + (rec_days > r80)::INT) AS r_score,
@@ -1750,17 +1717,14 @@ def rfm_customer_segments_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("rec_days", F.datediff("as_of", "last_order")))
 
     def cuts(col: str, prefix: str) -> DataFrame:
-        w = Window.orderBy(F.col(col), F.col("o_custkey"))
-        ranked = cust.select(
-            col, "o_custkey", F.row_number().over(w).alias("rn"),
-            F.count("*").over(Window.partitionBy()).alias("n"))
+        ranked = with_ranks(cust.select(col, "o_custkey"), (),
+                            (col, "o_custkey"))
         return ranked.agg(*[
-            F.min(F.when(F.col("rn") == F.ceil(F.lit(q) * F.col("n")),
-                         F.col(col))).alias(f"{prefix}{int(q * 100)}")
+            percentile_disc(q, col).alias(f"{prefix}{int(q * 100)}")
             for q in _RFM_QS])
 
-    cut_row = (cuts("rec_days", "r").crossJoin(cuts("freq", "f"))
-               .crossJoin(cuts("monetary", "m")))
+    r, f, m = (cuts(col, prefix) for col, prefix in _RFM_MEASURES)
+    cut_row = r.crossJoin(f).crossJoin(m)
 
     def bumps(col: str, prefix: str) -> F.Column:
         return sum((F.col(col) > F.col(f"{prefix}{int(q * 100)}"))

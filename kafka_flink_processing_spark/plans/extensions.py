@@ -22,7 +22,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kafka_flink_processing_spark.functions.exact import dsum, dsum_sql
+from kafka_flink_processing_spark.functions.exact import (
+    dsum,
+    dsum_sql,
+    percentile_disc_sql,
+    ranked_sql,
+)
 from kafka_flink_processing_spark.functions.constants import (
     MINHASH_COEFFS,
     N_BANDS,
@@ -84,12 +89,14 @@ from kafka_flink_processing_spark.operators.dedup import (
     BLOOM_PROBES_CTE,
     COUNT_JACCARD_SQL,
     DUP_SPAN_MIN_DF,
+    NEAR_DUP_CONTAINMENT,
     NEAR_DUP_JACCARD,
     NGRAM_MAX_DF,
     SHINGLE_ROWS_CTE,
     SIMHASH_CTE,
     WORDS_SQL,
     containment_pairs,
+    contamination_hits_cte,
     contamination_screen,
     contamination_screen_bloom,
     doc_shingles,
@@ -281,10 +288,11 @@ def dedup_ngram_jaccard_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                           n_common / least(n_a, n_b) AS containment,
                           {COUNT_JACCARD_SQL} AS jaccard
                    FROM inter)
-    WHERE containment >= 0.5
+    WHERE containment >= {NEAR_DUP_CONTAINMENT}
     """,
     doc="asymmetric n-gram CONTAINMENT near-dup pairs — |A∩B|/min(|A|,|B|) "
-        ">= 0.5 — the sub-document-duplication catch Jaccard structurally "
+        f">= {NEAR_DUP_CONTAINMENT} — the sub-document-duplication catch "
+        "Jaccard structurally "
         "misses (a short doc pasted into a long one has Jaccard ~|short|/"
         "|long| but containment ~1.0; Jaccard's own column rides along for "
         "the contrast). Same inverted-index machinery, memoized shingles, "
@@ -292,8 +300,7 @@ def dedup_ngram_jaccard_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "is O(sum df^2 over kept shingles) at any corpus size.",
 )
 def dedup_containment_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return containment_pairs(load_table(spark, "documents", sf_dir),
-                             n=3, threshold=0.5)
+    return containment_pairs(load_table(spark, "documents", sf_dir), n=3)
 
 
 @register(
@@ -1296,15 +1303,16 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return incremental_minhash_dups(docs, F.col("doc_id") % 10 == 0, n=3)
 
 
+# the held-out eval slice the decontamination screens test against
+_EVAL_SPLIT_SQL = "doc_id % 13 = 0"
+
+
 @register(
     "decontaminate_ngram",
     oracle=f"""
     WITH {doc_shingles_cte(4)},
     {SHINGLE_ROWS_CTE},
-    ev AS (SELECT DISTINCT sh FROM ex WHERE doc_id % 13 = 0),
-    hits AS (SELECT doc_id, COUNT(*) AS n_shared_grams
-             FROM ex JOIN ev USING (sh)
-             WHERE doc_id % 13 <> 0 GROUP BY 1)
+    {contamination_hits_cte(_EVAL_SPLIT_SQL)}
     SELECT h.doc_id, h.n_shared_grams,
            CAST(len(d.sh) AS BIGINT) AS n_grams,
            CAST(h.n_shared_grams AS DOUBLE) / len(d.sh)
@@ -1362,16 +1370,9 @@ def decontaminate_bloom_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH scored AS (
       SELECT doc_id, source, {QUALITY_SQL} AS quality FROM documents
-    ), r AS (
-      SELECT doc_id, source, quality,
-             ROW_NUMBER() OVER (PARTITION BY source
-                                ORDER BY quality, doc_id) AS rn,
-             COUNT(*) OVER (PARTITION BY source) AS n
-      FROM scored
-    ), bounds AS (
-      SELECT source,
-             MIN(CASE WHEN rn = CAST(CEIL(0.25 * n) AS BIGINT)
-                      THEN quality END) AS q25
+    ), r AS ({ranked_sql('scored', ('source',), ('quality', 'doc_id'))}),
+    bounds AS (
+      SELECT source, {percentile_disc_sql(0.25, 'quality')} AS q25
       FROM r GROUP BY source
     )
     SELECT s.doc_id, s.source, s.quality, b.q25, s.quality >= b.q25 AS kept
@@ -2206,32 +2207,25 @@ def corpus_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.sum(F.length("text")).cast("long").alias("total_chars")))
 
 
-def _n_sweep_leg_sql(n: int) -> str:
-    """Per-n CTE trio for the decontamination n-sweep: distinct n-gram
-    rows, the eval gram set, per-train-doc hit counts."""
-    return f"""
-  s{n} AS (SELECT doc_id, unnest({word_grams_sql(n)}) AS sh FROM t),
-  ev{n} AS (SELECT DISTINCT sh FROM s{n} WHERE doc_id % 13 = 0),
-  hit{n} AS (SELECT doc_id, COUNT(*) AS c FROM s{n} JOIN ev{n} USING (sh)
-             WHERE doc_id % 13 <> 0 GROUP BY 1)"""
-
-
-def _n_sweep_select_sql(n: int) -> str:
-    return (f"SELECT CAST({n} AS BIGINT) AS gram_n, "
-            f"CAST(COUNT(*) AS BIGINT) AS n_contaminated_docs, "
-            f"CAST(COALESCE(SUM(c), 0) AS BIGINT) AS total_shared_grams "
-            f"FROM hit{n}")
-
-
 _N_SWEEP = (3, 4, 5)
+# per n: the shingle rows s{n} and contamination_screen's ev{n}/hits{n}
+_N_SWEEP_CTES = ",\n    ".join(
+    f"s{n} AS (SELECT doc_id, unnest({word_grams_sql(n)}) AS sh FROM t),\n"
+    f"    {contamination_hits_cte(_EVAL_SPLIT_SQL, f's{n}', n)}"
+    for n in _N_SWEEP)
+_N_SWEEP_SELECT = " UNION ALL ".join(
+    f"SELECT CAST({n} AS BIGINT) AS gram_n, "
+    f"CAST(COUNT(*) AS BIGINT) AS n_contaminated_docs, "
+    f"CAST(COALESCE(SUM(n_shared_grams), 0) AS BIGINT) AS total_shared_grams "
+    f"FROM hits{n}" for n in _N_SWEEP)
 
 
 @register(
     "decontamination_n_sweep",
     oracle=f"""
     WITH t AS ({WORDS_SQL}),
-    {",".join(_n_sweep_leg_sql(n) for n in _N_SWEEP)}
-    {" UNION ALL ".join(_n_sweep_select_sql(n) for n in _N_SWEEP)}
+    {_N_SWEEP_CTES}
+    {_N_SWEEP_SELECT}
     """,
     doc="decontamination aggressiveness curve: contaminated-doc count and "
         "total shared grams at n-gram sizes 3/4/5 against the same eval "

@@ -25,10 +25,20 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_flink_processing_spark.functions.exact import (
+    co_moment,
+    co_moment_sql,
     dsum,
     dsum_sql,
-    dsum_wide,
-    dsum_wide_sql,
+    moment_sums,
+    moment_sums_sql,
+    ols_slope,
+    ols_slope_sql,
+    pearson_r,
+    pearson_r_sql,
+    pop_cov,
+    pop_cov_sql,
+    r_squared,
+    r_squared_sql,
 )
 from kafka_flink_processing_spark.operators.windows import (
     SMA_SHORT,
@@ -549,19 +559,9 @@ def streaming_slippage_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                  rt_h.rt_avg AS x, da_h.da_avg AS y
           FROM rt_h JOIN da_h ON rt_h.hub = da_h.hub AND rt_h.h = da_h.h),
     m AS (SELECT hub, day, CAST(COUNT(*) AS BIGINT) AS n_hours,
-                 {dsum_sql('x', 6)} AS sx, {dsum_sql('y', 6)} AS sy,
-                 {dsum_sql('x * y', 6)} AS sxy,
-                 {dsum_sql('x * x', 6)} AS sxx,
-                 {dsum_sql('y * y', 6)} AS syy
+                 {moment_sums_sql('x', 'y')}
           FROM p GROUP BY 1, 2)
-    SELECT hub, day, n_hours,
-           CASE WHEN n_hours >= 2
-                 AND (n_hours * sxx - sx * sx) > 0.0
-                 AND (n_hours * syy - sy * sy) > 0.0
-                THEN (n_hours * sxy - sx * sy)
-                     / (sqrt(n_hours * sxx - sx * sx)
-                        * sqrt(n_hours * syy - sy * sy))
-                ELSE NULL END AS corr_da_rt
+    SELECT hub, day, n_hours, {pearson_r_sql('n_hours')} AS corr_da_rt
     FROM m
     """,
     doc="daily correlation between the real-time and day-ahead price "
@@ -569,8 +569,8 @@ def streaming_slippage_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "da_rt_asof_basis's row-level view, README.md:98-100): hourly "
         "exact-average RT and DA prices are paired on (hub, hour), then "
         "Pearson r per (hub, day) from the five moment sums, each "
-        "6dp-rounded into scaled int64 (functions/exact.py) so the "
-        "reduction is order-free; the final r is a handful of IEEE ops "
+        "6dp-rounded and summed exactly (functions/exact.moment_sums) so "
+        "the reduction is order-free; the final r is a handful of IEEE ops "
         "on identical integers in both engines. Degenerate days "
         "(fewer than 2 paired hours, or a constant side) yield NULL "
         "rather than a 0/0. Scale: two map-side-combined hourly "
@@ -590,19 +590,10 @@ def da_rt_daily_corr_q(spark: SparkSession, sf_dir: str) -> DataFrame:
          .join(hourly(da, "lmp_da", "y"), ["hub", "h"])
          .select("hub", F.date_trunc("day", F.col("h")).alias("day"),
                  "x", "y"))
-    m = p.groupBy("hub", "day").agg(
-        F.count("*").alias("n_hours"),
-        dsum("x", 6).alias("sx"), dsum("y", 6).alias("sy"),
-        dsum(F.col("x") * F.col("y"), 6).alias("sxy"),
-        dsum(F.col("x") * F.col("x"), 6).alias("sxx"),
-        dsum(F.col("y") * F.col("y"), 6).alias("syy"))
-    n = F.col("n_hours")
-    vx = n * F.col("sxx") - F.col("sx") * F.col("sx")
-    vy = n * F.col("syy") - F.col("sy") * F.col("sy")
-    cov = n * F.col("sxy") - F.col("sx") * F.col("sy")
-    r = F.when((n >= 2) & (vx > 0.0) & (vy > 0.0),
-               cov / (F.sqrt(vx) * F.sqrt(vy)))
-    return m.select("hub", "day", "n_hours", r.alias("corr_da_rt"))
+    m = p.groupBy("hub", "day").agg(F.count("*").alias("n_hours"),
+                                    *moment_sums("x", "y"))
+    return m.select("hub", "day", "n_hours",
+                    pearson_r("n_hours").alias("corr_da_rt"))
 
 
 # --- r5 late pack B: frame statistics, regime intervals, cross-hub corr --
@@ -739,19 +730,9 @@ def scd2_price_intervals_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     pr AS (SELECT a.hub AS hub_a, b.hub AS hub_b, a.p AS x, b.p AS y
            FROM d a JOIN d b ON a.day = b.day AND a.hub < b.hub),
     m AS (SELECT hub_a, hub_b, CAST(COUNT(*) AS BIGINT) AS n_days,
-                 {dsum_sql('x', 6)} AS sx, {dsum_sql('y', 6)} AS sy,
-                 {dsum_sql('x * y', 6)} AS sxy,
-                 {dsum_sql('x * x', 6)} AS sxx,
-                 {dsum_sql('y * y', 6)} AS syy
+                 {moment_sums_sql('x', 'y')}
           FROM pr GROUP BY 1, 2)
-    SELECT hub_a, hub_b, n_days,
-           CASE WHEN n_days >= 2
-                 AND (n_days * sxx - sx * sx) > 0.0
-                 AND (n_days * syy - sy * sy) > 0.0
-                THEN (n_days * sxy - sx * sy)
-                     / (sqrt(n_days * sxx - sx * sx)
-                        * sqrt(n_days * syy - sy * sy))
-                ELSE NULL END AS corr
+    SELECT hub_a, hub_b, n_days, {pearson_r_sql('n_days')} AS corr
     FROM m
     """,
     doc="pairwise Pearson correlation of daily average prices across ALL "
@@ -759,7 +740,7 @@ def scd2_price_intervals_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "which hubs move together (generalizes da_rt_daily_corr's "
         "two-series form to the full hub x hub grid). Exactness: the "
         "daily averages are exact scaled-int sums over counts; the five "
-        "moment sums are 6dp-rounded into int64 so every reduction is "
+        "moment sums are 6dp-rounded exact sums so every reduction is "
         "order-free; degenerate pairs (under 2 shared days or a constant "
         "side) yield NULL. Scale: tick volume is touched ONCE by a "
         "map-side-combined (hub, day) aggregate whose output is bounded "
@@ -775,19 +756,10 @@ def hub_price_corr_matrix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = d.select(F.col("hub").alias("hub_a"), "day", F.col("p").alias("x"))
     b = d.select(F.col("hub").alias("hub_b"), "day", F.col("p").alias("y"))
     pr = a.join(b, "day").filter(F.col("hub_a") < F.col("hub_b"))
-    m = pr.groupBy("hub_a", "hub_b").agg(
-        F.count("*").alias("n_days"),
-        dsum("x", 6).alias("sx"), dsum("y", 6).alias("sy"),
-        dsum(F.col("x") * F.col("y"), 6).alias("sxy"),
-        dsum(F.col("x") * F.col("x"), 6).alias("sxx"),
-        dsum(F.col("y") * F.col("y"), 6).alias("syy"))
-    n = F.col("n_days")
-    vx = n * F.col("sxx") - F.col("sx") * F.col("sx")
-    vy = n * F.col("syy") - F.col("sy") * F.col("sy")
-    cov = n * F.col("sxy") - F.col("sx") * F.col("sy")
-    r = F.when((n >= 2) & (vx > 0.0) & (vy > 0.0),
-               cov / (F.sqrt(vx) * F.sqrt(vy)))
-    return m.select("hub_a", "hub_b", "n_days", r.alias("corr"))
+    m = pr.groupBy("hub_a", "hub_b").agg(F.count("*").alias("n_days"),
+                                         *moment_sums("x", "y"))
+    return m.select("hub_a", "hub_b", "n_days",
+                    pearson_r("n_days").alias("corr"))
 
 
 # --- r5 late pack C: forecast backtest + execution quality ---------------
@@ -894,11 +866,9 @@ def vwap_execution_quality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- r6 pack: microstructure regressions (OLS via sufficient statistics) --
 
 # Distributed closed-form OLS: every regression below reduces its input to
-# the five moment sums (n, Σx, Σy, Σxy, Σx²[, Σy²]) with ONE map-side-
-# combined aggregate, then evaluates slope/corr on the tiny grouped result.
-# This is the 100 TB linear-model pattern — no iteration, no driver-side
-# data, and the moment sums are 6dp scaled-int64 (functions/exact.dsum) so
-# the reduction is order-free and hash-identical across engines.
+# the moment sums (functions/exact.moment_sums) with ONE map-side-combined
+# aggregate, then evaluates slope/corr on the tiny grouped result — the
+# 100 TB linear-model pattern: no iteration, no driver-side data.
 
 
 @register(
@@ -910,20 +880,10 @@ def vwap_execution_quality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                    price_mwh - LAG(price_mwh) OVER w AS y
             FROM trades WINDOW w AS (PARTITION BY hub ORDER BY ts, trade_id)),
     m AS (SELECT hub, CAST(COUNT(*) AS BIGINT) AS n_obs,
-                 {dsum_sql('x', 0)} AS sx, {dsum_sql('y', 6)} AS sy,
-                 {dsum_wide_sql('x * y', 6)} AS sxy,
-                 {dsum_wide_sql('x * x', 0)} AS sxx,
-                 {dsum_wide_sql('y * y', 6)} AS syy
+                 {moment_sums_sql('x', 'y', 0, 6)}
           FROM seq WHERE y IS NOT NULL GROUP BY 1)
-    SELECT hub, n_obs,
-           CASE WHEN n_obs >= 2 AND (n_obs * sxx - sx * sx) > 0.0
-                THEN (n_obs * sxy - sx * sy) / (n_obs * sxx - sx * sx)
-                ELSE NULL END AS lambda_impact,
-           CASE WHEN n_obs >= 2 AND (n_obs * sxx - sx * sx) > 0.0
-                 AND (n_obs * syy - sy * sy) > 0.0
-                THEN ((n_obs * sxy - sx * sy) * (n_obs * sxy - sx * sy))
-                     / ((n_obs * sxx - sx * sx) * (n_obs * syy - sy * sy))
-                ELSE NULL END AS r2
+    SELECT hub, n_obs, {ols_slope_sql('n_obs')} AS lambda_impact,
+           {r_squared_sql('n_obs')} AS r2
     FROM m
     """,
     doc="Kyle's lambda per hub: OLS slope of trade-to-trade price change "
@@ -931,10 +891,8 @@ def vwap_execution_quality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "coefficient a desk uses to cost a planned position against "
         "the reference's trades stream (producer.py:36-70's side/mw "
         "fields exist exactly for this read). Exactness: x is integer "
-        "mw, y a 6dp-rounded price diff; all five moments are scaled-"
-        "int64 sums cast to double BEFORE the slope algebra, so Spark "
-        "and DuckDB evaluate identical IEEE expressions (no int64 "
-        "overflow: DuckDB would widen to int128 where Spark wraps). "
+        "mw, y a 6dp-rounded price diff; the moment sums are exact and "
+        "the slope algebra runs on identical doubles in both engines. "
         "Scale: one hub-keyed exchange for the LAG, then a map-side-"
         "combined moment aggregate to hubs rows; with few hubs the "
         "re-key lever is (hub, day) sub-regressions, same as "
@@ -951,20 +909,10 @@ def kyle_lambda_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("price_mwh")
              - F.lag("price_mwh").over(w)).alias("y"))
            .filter(F.col("y").isNotNull()))
-    m = seq.groupBy("hub").agg(
-        F.count("*").alias("n_obs"),
-        dsum("x", 0).alias("sx"), dsum("y", 6).alias("sy"),
-        dsum_wide(F.col("x") * F.col("y"), 6).alias("sxy"),
-        dsum_wide(F.col("x") * F.col("x"), 0).alias("sxx"),
-        dsum_wide(F.col("y") * F.col("y"), 6).alias("syy"))
-    n = F.col("n_obs")
-    vx = n * F.col("sxx") - F.col("sx") * F.col("sx")
-    vy = n * F.col("syy") - F.col("sy") * F.col("sy")
-    cov = n * F.col("sxy") - F.col("sx") * F.col("sy")
-    lam = F.when((n >= 2) & (vx > 0.0), cov / vx)
-    r2 = F.when((n >= 2) & (vx > 0.0) & (vy > 0.0), (cov * cov) / (vx * vy))
-    return m.select("hub", "n_obs", lam.alias("lambda_impact"),
-                    r2.alias("r2"))
+    m = seq.groupBy("hub").agg(F.count("*").alias("n_obs"),
+                               *moment_sums("x", "y", 0, 6))
+    return m.select("hub", "n_obs", ols_slope("n_obs").alias("lambda_impact"),
+                    r_squared("n_obs").alias("r2"))
 
 
 @register(
@@ -982,21 +930,10 @@ def kyle_lambda_q(spark: SparkSession, sf_dir: str) -> DataFrame:
            FROM r a JOIN r b ON b.h = a.h + INTERVAL 1 HOUR
                             AND a.hub <> b.hub),
     m AS (SELECT hub_lead, hub_lag, CAST(COUNT(*) AS BIGINT) AS n_hours,
-                 {dsum_sql('x', 6)} AS sx, {dsum_sql('y', 6)} AS sy,
-                 {dsum_sql('x * y', 6)} AS sxy,
-                 {dsum_sql('x * x', 6)} AS sxx,
-                 {dsum_sql('y * y', 6)} AS syy
+                 {moment_sums_sql('x', 'y')}
           FROM pr GROUP BY 1, 2)
-    SELECT hub_lead, hub_lag, n_hours,
-           CASE WHEN n_hours >= 2 AND (n_hours * sxx - sx * sx) > 0.0
-                THEN (n_hours * sxy - sx * sy) / (n_hours * sxx - sx * sx)
-                ELSE NULL END AS beta,
-           CASE WHEN n_hours >= 2 AND (n_hours * sxx - sx * sx) > 0.0
-                 AND (n_hours * syy - sy * sy) > 0.0
-                THEN (n_hours * sxy - sx * sy)
-                     / (sqrt(n_hours * sxx - sx * sx)
-                        * sqrt(n_hours * syy - sy * sy))
-                ELSE NULL END AS corr
+    SELECT hub_lead, hub_lag, n_hours, {ols_slope_sql('n_hours')} AS beta,
+           {pearson_r_sql('n_hours')} AS corr
     FROM m
     """,
     doc="directional lead-lag coupling: regress hub B's NEXT-hour price "
@@ -1006,7 +943,7 @@ def kyle_lambda_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Hourly returns come from consecutive-hour self-joins (a gap "
         "hour contributes nothing, rather than silently differencing "
         "across it). Exactness: hourly means are exact scaled-int sums "
-        "over counts; moment sums 6dp int64; sqrt only on identical "
+        "over counts; moment sums 6dp exact; sqrt only on identical "
         "doubles. Scale: ticks are touched ONCE by the map-side-combined "
         "(hub, hour) aggregate; every later join/aggregate runs on the "
         "hubs x hours grid (broadcast-sized; AQE picks the broadcast), "
@@ -1026,21 +963,11 @@ def lead_lag_hub_beta_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.col("ret").alias("x"))
     b = r.select(F.col("hub").alias("hub_lag"), "h", F.col("ret").alias("y"))
     pr = a.join(b, "h").filter(F.col("hub_lead") != F.col("hub_lag"))
-    m = pr.groupBy("hub_lead", "hub_lag").agg(
-        F.count("*").alias("n_hours"),
-        dsum("x", 6).alias("sx"), dsum("y", 6).alias("sy"),
-        dsum(F.col("x") * F.col("y"), 6).alias("sxy"),
-        dsum(F.col("x") * F.col("x"), 6).alias("sxx"),
-        dsum(F.col("y") * F.col("y"), 6).alias("syy"))
-    n = F.col("n_hours")
-    vx = n * F.col("sxx") - F.col("sx") * F.col("sx")
-    vy = n * F.col("syy") - F.col("sy") * F.col("sy")
-    cov = n * F.col("sxy") - F.col("sx") * F.col("sy")
-    beta = F.when((n >= 2) & (vx > 0.0), cov / vx)
-    corr = F.when((n >= 2) & (vx > 0.0) & (vy > 0.0),
-                  cov / (F.sqrt(vx) * F.sqrt(vy)))
+    m = pr.groupBy("hub_lead", "hub_lag").agg(F.count("*").alias("n_hours"),
+                                              *moment_sums("x", "y"))
     return m.select("hub_lead", "hub_lag", "n_hours",
-                    beta.alias("beta"), corr.alias("corr"))
+                    ols_slope("n_hours").alias("beta"),
+                    pearson_r("n_hours").alias("corr"))
 
 
 @register(
@@ -1056,17 +983,10 @@ def lead_lag_hub_beta_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                                ORDER BY ts, trade_id) AS dp_lag
           FROM d),
     m AS (SELECT hub, CAST(COUNT(*) AS BIGINT) AS n_obs,
-                 {dsum_sql('dp', 6)} AS sa,
-                 {dsum_sql('dp_lag', 6)} AS sb,
-                 {dsum_wide_sql('dp * dp_lag', 6)} AS sab
+                 {moment_sums_sql('dp', 'dp_lag')}
           FROM p WHERE dp IS NOT NULL AND dp_lag IS NOT NULL
           GROUP BY hub),
-    c AS (SELECT hub, n_obs,
-                 CASE WHEN n_obs >= 2
-                      THEN (n_obs * sab - sa * sb)
-                           / (CAST(n_obs AS DOUBLE) * n_obs)
-                      ELSE NULL END AS serial_cov
-          FROM m)
+    c AS (SELECT hub, n_obs, {pop_cov_sql('n_obs')} AS serial_cov FROM m)
     SELECT hub, n_obs, serial_cov,
            CASE WHEN serial_cov < 0.0 THEN 2.0 * sqrt(-serial_cov)
                 ELSE NULL END AS roll_spread
@@ -1080,7 +1000,7 @@ def lead_lag_hub_beta_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "signal and yields NULL (reported, not hidden — the desk wants "
         "to see which hubs trend). Exactness: dp is the same "
         "IEEE-subtracted double on both engines (LAG over the identical "
-        "(ts, trade_id) total order), moment sums are 6dp scaled-int64 "
+        "(ts, trade_id) total order), moment sums are 6dp exact sums "
         "(functions/exact.py), population-covariance algebra and sqrt "
         "run on identical doubles. Scale: one hub-keyed exchange feeds "
         "both LAGs (same window, one Sort), then a map-side-combined "
@@ -1095,14 +1015,9 @@ def roll_spread_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t.withColumn("dp", F.col("price_mwh") - F.lag("price_mwh").over(w))
     p = (d.withColumn("dp_lag", F.lag("dp").over(w))
           .filter(F.col("dp").isNotNull() & F.col("dp_lag").isNotNull()))
-    m = p.groupBy("hub").agg(
-        F.count("*").alias("n_obs"),
-        dsum("dp", 6).alias("sa"), dsum("dp_lag", 6).alias("sb"),
-        dsum_wide(F.col("dp") * F.col("dp_lag"), 6).alias("sab"))
-    n = F.col("n_obs")
-    cov = F.when(n >= 2, (n * F.col("sab") - F.col("sa") * F.col("sb"))
-                 / (n.cast("double") * n))
-    c = m.select("hub", "n_obs", cov.alias("serial_cov"))
+    m = p.groupBy("hub").agg(F.count("*").alias("n_obs"),
+                             *moment_sums("dp", "dp_lag"))
+    c = m.select("hub", "n_obs", pop_cov("n_obs").alias("serial_cov"))
     spread = F.when(F.col("serial_cov") < 0.0,
                     2.0 * F.sqrt(-F.col("serial_cov")))
     return c.select("hub", "n_obs", "serial_cov",
@@ -1120,25 +1035,15 @@ def roll_spread_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                    PARTITION BY hub ORDER BY ts, tick_id) AS dq
           FROM ticks),
     m AS (SELECT hub, CAST(COUNT(*) AS BIGINT) AS n_obs,
-                 {dsum_sql('dp', 6)} AS s1,
-                 {dsum_wide_sql('dp * dp', 6)} AS s11,
-                 {dsum_sql('dq', 6)} AS s4,
-                 {dsum_wide_sql('dq * dq', 6)} AS s44
+                 {moment_sums_sql('dp', 'dq')}
           FROM d WHERE dp IS NOT NULL AND dq IS NOT NULL
           GROUP BY hub)
-    SELECT hub, n_obs,
-           CASE WHEN n_obs >= 2 THEN
-             (n_obs * s11 - s1 * s1) / (CAST(n_obs AS DOUBLE) * n_obs)
-           ELSE NULL END AS var_1,
-           CASE WHEN n_obs >= 2 THEN
-             (n_obs * s44 - s4 * s4) / (CAST(n_obs AS DOUBLE) * n_obs)
-           ELSE NULL END AS var_q,
-           CASE WHEN n_obs >= 2
-                 AND (n_obs * s11 - s1 * s1) > 0.0 THEN
-             ((n_obs * s44 - s4 * s4) / (CAST(n_obs AS DOUBLE) * n_obs))
-             / (4.0 * ((n_obs * s11 - s1 * s1)
-                       / (CAST(n_obs AS DOUBLE) * n_obs)))
-           ELSE NULL END AS variance_ratio
+    SELECT hub, n_obs, {pop_cov_sql('n_obs', 'x', 'x')} AS var_1,
+           {pop_cov_sql('n_obs', 'y', 'y')} AS var_q,
+           CASE WHEN n_obs >= 2 AND {co_moment_sql('n_obs', 'x', 'x')} > 0.0
+                THEN ({pop_cov_sql('n_obs', 'y', 'y')})
+                     / (4.0 * ({pop_cov_sql('n_obs', 'x', 'x')}))
+                ELSE NULL END AS variance_ratio
     FROM m
     """,
     doc="Lo-MacKinlay variance-ratio test statistic per hub, VR(q=4) = "
@@ -1151,7 +1056,7 @@ def roll_spread_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "restricted to the SAME row set (both lags non-null) so the two "
         "variances are population moments over identical observations. "
         "Exactness: LAG over the (ts, tick_id) total order, 6dp "
-        "scaled-int64 moment sums (functions/exact.py), identical "
+        "exact moment sums (functions/exact.py), identical "
         "double algebra both sides. Scale: ONE hub-keyed exchange feeds "
         "both LAGs (same window sort), map-side-combined moment "
         "aggregate collapses to hubs rows; (hub, day) re-key lever as "
@@ -1163,20 +1068,11 @@ def variance_ratio_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (t.withColumn("dp", F.col("price_mwh") - F.lag("price_mwh", 1).over(w))
           .withColumn("dq", F.col("price_mwh") - F.lag("price_mwh", 4).over(w))
           .filter(F.col("dp").isNotNull() & F.col("dq").isNotNull()))
-    m = d.groupBy("hub").agg(
-        F.count("*").alias("n_obs"),
-        dsum("dp", 6).alias("s1"),
-        dsum_wide(F.col("dp") * F.col("dp"), 6).alias("s11"),
-        dsum("dq", 6).alias("s4"),
-        dsum_wide(F.col("dq") * F.col("dq"), 6).alias("s44"))
-    n = F.col("n_obs")
-    nn = n.cast("double") * n
-    v1 = (n * F.col("s11") - F.col("s1") * F.col("s1")) / nn
-    v4 = (n * F.col("s44") - F.col("s4") * F.col("s4")) / nn
-    var1 = F.when(n >= 2, v1)
-    var4 = F.when(n >= 2, v4)
-    vr = F.when((n >= 2) & ((n * F.col("s11") - F.col("s1") * F.col("s1"))
-                            > 0.0), v4 / (4.0 * v1))
+    m = d.groupBy("hub").agg(F.count("*").alias("n_obs"),
+                             *moment_sums("dp", "dq"))
+    var1, var4 = pop_cov("n_obs", "x", "x"), pop_cov("n_obs", "y", "y")
+    vr = F.when((F.col("n_obs") >= 2)
+                & (co_moment("n_obs", "x", "x") > 0.0), var4 / (4.0 * var1))
     return m.select("hub", "n_obs", var1.alias("var_1"),
                     var4.alias("var_q"), vr.alias("variance_ratio"))
 

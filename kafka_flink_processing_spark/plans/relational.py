@@ -23,6 +23,10 @@ from kafka_flink_processing_spark.functions.exact import (
     davg_sql,
     dsum,
     dsum_sql,
+    percentile_disc,
+    percentile_disc_sql,
+    ranked_sql,
+    with_ranks,
 )
 from kafka_flink_processing_spark.operators.asof import asof_join
 from kafka_flink_processing_spark.plans.registry import register
@@ -420,21 +424,12 @@ def approx_quantiles_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "exact_quantiles_value",
-    oracle="""
-    WITH r AS (
-      SELECT event_type, value,
-             ROW_NUMBER() OVER (PARTITION BY event_type
-                                ORDER BY value, event_id) AS rn,
-             COUNT(*) OVER (PARTITION BY event_type) AS n
-      FROM events
-    )
+    oracle=f"""
+    WITH r AS ({ranked_sql('events', ('event_type',), ('value', 'event_id'))})
     SELECT event_type,
-           MIN(CASE WHEN rn = CAST(CEIL(0.50 * n) AS BIGINT)
-                    THEN value END) AS p50,
-           MIN(CASE WHEN rn = CAST(CEIL(0.95 * n) AS BIGINT)
-                    THEN value END) AS p95,
-           MIN(CASE WHEN rn = CAST(CEIL(0.99 * n) AS BIGINT)
-                    THEN value END) AS p99,
+           {percentile_disc_sql(0.50, 'value')} AS p50,
+           {percentile_disc_sql(0.95, 'value')} AS p95,
+           {percentile_disc_sql(0.99, 'value')} AS p99,
            CAST(MAX(n) AS BIGINT) AS n_rows
     FROM r GROUP BY event_type
     """,
@@ -450,22 +445,12 @@ def approx_quantiles_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def exact_quantiles_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, "events", sf_dir)
-    w = Window.partitionBy("event_type").orderBy("value", "event_id")
-    wn = Window.partitionBy("event_type")
-    ranked = (ev.select("event_type", "value", "event_id")
-                .withColumn("rn", F.row_number().over(w))
-                .withColumn("n", F.count("*").over(wn)))
-
-    def at(p: float) -> F.Column:
-        return F.min(F.when(F.col("rn")
-                            == F.ceil(F.lit(p) * F.col("n")),
-                            F.col("value")))
-
-    return (ranked.groupBy("event_type")
-                  .agg(at(0.50).alias("p50"),
-                       at(0.95).alias("p95"),
-                       at(0.99).alias("p99"),
-                       F.max("n").cast("long").alias("n_rows")))
+    return (with_ranks(ev, ("event_type",), ("value", "event_id"))
+            .groupBy("event_type")
+            .agg(percentile_disc(0.50, "value").alias("p50"),
+                 percentile_disc(0.95, "value").alias("p95"),
+                 percentile_disc(0.99, "value").alias("p99"),
+                 F.max("n").cast("long").alias("n_rows")))
 
 
 @register(

@@ -12,7 +12,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kafka_flink_processing_spark.functions.exact import dsum, dsum_sql
+from kafka_flink_processing_spark.functions.exact import (
+    MIDDLE_RANKS_SQL,
+    dsum,
+    dsum_sql,
+    middle_mean,
+    middle_mean_sql,
+    middle_ranks,
+    percentile_disc,
+    percentile_disc_sql,
+    ranked_sql,
+    with_ranks,
+)
 from kafka_flink_processing_spark.operators.pnl import price_exposure
 from kafka_flink_processing_spark.operators.windows import (
     SMA_LONG,
@@ -378,24 +389,14 @@ def json_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .cast("long").alias("n_even")))
 
 
-# --- exact median per key: rank-based formulation, portable across engines
-# (avg of the middle one/two values; percentile_approx/quantile_cont sketch
-# or interpolation internals differ between engines, the rank form doesn't)
+# --- exact median per key: the mean of the middle one/two ranks
 @register(
     "median_value_by_type",
-    oracle="""
-    WITH r AS (
-      SELECT event_type, value,
-             ROW_NUMBER() OVER (PARTITION BY event_type
-                                ORDER BY value, event_id) AS rn,
-             COUNT(*) OVER (PARTITION BY event_type) AS n
-      FROM events
-    )
-    SELECT event_type,
-           SUM(value) / COUNT(*) AS median_value,
+    oracle=f"""
+    WITH r AS ({ranked_sql('events', ('event_type',), ('value', 'event_id'))})
+    SELECT event_type, {middle_mean_sql('value')} AS median_value,
            CAST(MAX(n) AS BIGINT) AS n_rows
-    FROM r
-    WHERE rn IN ((n + 1) // 2, (n + 2) // 2)
+    FROM r WHERE {MIDDLE_RANKS_SQL}
     GROUP BY event_type
     """,
     doc="exact per-group median via rank selection (row_number + middle-"
@@ -405,15 +406,10 @@ def json_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def median_value_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, "events", sf_dir)
-    w = Window.partitionBy("event_type").orderBy("value", "event_id")
-    wn = Window.partitionBy("event_type")
-    ranked = (ev.withColumn("rn", F.row_number().over(w))
-                .withColumn("n", F.count("*").over(wn)))
-    mid = ranked.filter(
-        (F.col("rn") == F.floor((F.col("n") + 1) / 2))
-        | (F.col("rn") == F.floor((F.col("n") + 2) / 2)))
+    mid = (with_ranks(ev, ("event_type",), ("value", "event_id"))
+           .filter(middle_ranks()))
     return (mid.groupBy("event_type")
-               .agg((F.sum("value") / F.count("*")).alias("median_value"),
+               .agg(middle_mean("value").alias("median_value"),
                     F.max("n").cast("long").alias("n_rows")))
 
 
@@ -520,18 +516,11 @@ def streaming_forecast_sma_tws_q(spark: SparkSession,
 @register(
     "winsorized_stats",
     oracle=f"""
-    WITH r AS (
-      SELECT event_type, value,
-             ROW_NUMBER() OVER (PARTITION BY event_type
-                                ORDER BY value, event_id) AS rn,
-             COUNT(*) OVER (PARTITION BY event_type) AS n
-      FROM events
-    ), bounds AS (
+    WITH r AS ({ranked_sql('events', ('event_type',), ('value', 'event_id'))}),
+    bounds AS (
       SELECT event_type,
-             MIN(CASE WHEN rn = CAST(CEIL(0.05 * n) AS BIGINT)
-                      THEN value END) AS p05,
-             MIN(CASE WHEN rn = CAST(CEIL(0.95 * n) AS BIGINT)
-                      THEN value END) AS p95,
+             {percentile_disc_sql(0.05, 'value')} AS p05,
+             {percentile_disc_sql(0.95, 'value')} AS p95,
              CAST(MAX(n) AS BIGINT) AS n_rows
       FROM r GROUP BY event_type
     )
@@ -555,18 +544,10 @@ def streaming_forecast_sma_tws_q(spark: SparkSession,
 )
 def winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, "events", sf_dir)
-    w = Window.partitionBy("event_type").orderBy("value", "event_id")
-    wn = Window.partitionBy("event_type")
-    ranked = (ev.select("event_type", "value", "event_id")
-                .withColumn("rn", F.row_number().over(w))
-                .withColumn("n", F.count("*").over(wn)))
-    bounds = (ranked.groupBy("event_type")
-              .agg(F.min(F.when(F.col("rn")
-                                == F.ceil(F.lit(0.05) * F.col("n")),
-                                F.col("value"))).alias("p05"),
-                   F.min(F.when(F.col("rn")
-                                == F.ceil(F.lit(0.95) * F.col("n")),
-                                F.col("value"))).alias("p95"),
+    bounds = (with_ranks(ev, ("event_type",), ("value", "event_id"))
+              .groupBy("event_type")
+              .agg(percentile_disc(0.05, "value").alias("p05"),
+                   percentile_disc(0.95, "value").alias("p95"),
                    F.max("n").cast("long").alias("n_rows")))
     clipped = ev.join(F.broadcast(bounds), "event_type")
     win_val = F.least(F.greatest(F.col("value"), F.col("p05")), F.col("p95"))

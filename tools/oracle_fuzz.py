@@ -26,8 +26,9 @@ family (the reference's core): tie-heavy timestamps (total-order
 tie-break stress), sparse corpora with entire event types absent (empty
 trades -> PnL over nothing; empty windows), constant-value runs (zero
 variance -> corr/beta/VR denominators), negative prices (real in power
-markets), and a 95%-one-hub skew. Same swap-one-table staging, same
-compare; streaming drains run their full availableNow cycle per corpus.
+markets), a 95%-one-hub skew, and 1e6-wide prices (moment-sum
+overflow). Same swap-one-table staging, same compare; streaming drains
+run their full availableNow cycle per corpus.
 
 r9 extension — MEDIA and EMBEDDING families:
   media_stress  codec-path stress via the text payloads derive from
@@ -381,6 +382,22 @@ def events_skew(rng: random.Random) -> list[tuple]:
     return _event_rows(rows)
 
 
+def events_wide(rng: random.Random) -> list[tuple]:
+    """Wide prices: every event type on every hub every 2nd hour for 12
+    days, prices uniform in [999000, 999999.99]. A squared 6dp moment
+    term is ~1e18 per row here, so a moment sum on int64 raises
+    ARITHMETIC_OVERFLOW in Spark where DuckDB's int128 sum does not, and
+    past 2^53 a double -> decimal cast in Spark is not exact."""
+    rows = []
+    for slot in range(12 * 12):
+        us = slot * 2 * 3600 * 1_000_000
+        for uid in range(4):
+            for et in EVENT_TYPES:
+                rows.append((len(rows), us, uid, et,
+                             round(rng.uniform(999000, 999999.99), 2)))
+    return _event_rows(rows)
+
+
 def _doc_rows(texts: list[str | None]) -> list[tuple]:
     return [(i, t, LANGS[i % len(LANGS)], SOURCES[i % len(SOURCES)],
              len(t) if t is not None else None)
@@ -581,6 +598,7 @@ EVENT_CORPORA = {
     "events_skew": events_skew,
     "events_oneside": events_oneside,
     "events_churn": events_churn,
+    "events_wide": events_wide,
 }
 CORPORA.update(EVENT_CORPORA)
 
