@@ -13,21 +13,38 @@ cost as the keyed shuffle Flink performs; no O(n·m) range join, no skew
 beyond the key's own distribution (AQE handles hot keys). This beats the
 naive `left join right on key and right.ts <= left.ts` + max() formulation,
 which explodes quadratically per key.
+
+asof_join_sql renders it for DuckDB (the same tagged union and window
+pass), carried_sql its carry step; tests/test_asof.py compares them.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def asof_join(left: DataFrame,
-              right: DataFrame,
-              on: Sequence[str],
-              order_col: str,
-              value_cols: Sequence[str],
+def carried(value_col: str, partition_by: Sequence[str | Column],
+            order_by: Sequence[str | Column]) -> Column:
+    """The carry step: the last non-null `value_col` at or before each
+    row, per partition in `order_by` order."""
+    w = (Window.partitionBy(*partition_by).orderBy(*order_by)
+         .rowsBetween(Window.unboundedPreceding, 0))
+    return F.last(value_col, ignorenulls=True).over(w)
+
+
+def carried_sql(value_col: str, partition_by: Sequence[str],
+                order_by: Sequence[str]) -> str:
+    return (f"LAST_VALUE({value_col} IGNORE NULLS) OVER ("
+            f"PARTITION BY {', '.join(partition_by)}"
+            f" ORDER BY {', '.join(order_by)}"
+            " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)")
+
+
+def asof_join(left: DataFrame, right: DataFrame, on: Sequence[str],
+              order_col: str, value_cols: Sequence[str],
               right_order_tiebreak: str | None = None) -> DataFrame:
     """For each left row, attach right's `value_cols` from the latest right
     row with the same key and right.order_col <= left.order_col.
@@ -37,43 +54,44 @@ def asof_join(left: DataFrame,
     `right_order_tiebreak` wins (pass a unique column for determinism).
     Left rows with no earlier right row get nulls.
     """
-    l_tag = left
+    def null(df: DataFrame, c: str) -> Column:
+        # typed: lit(0).cast(...) can be NULL-or-error under ANSI mode
+        return F.lit(None).cast(df.schema[c].dataType).alias(c)
+
+    # the tiebreak rides along as __tb: a projection that dropped it would
+    # leave equal-(key, ts) right rows in partition order
+    tb = (F.col(right_order_tiebreak) if right_order_tiebreak is not None
+          else F.lit(0)).alias("__tb")
+    keys = {*on, order_col}
+    l_cols = [c for c in left.columns if c not in value_cols]
+    l_tag = left.select(*l_cols, *[null(right, v) for v in value_cols],
+                        F.lit(1).alias("__is_left"),
+                        F.lit(None).cast(right.select(tb).schema[0].dataType)
+                        .alias("__tb"))
+    r_tag = right.select(*[c if c in keys else null(left, c) for c in l_cols],
+                         *value_cols, F.lit(0).alias("__is_left"), tb)
+    out = l_tag.union(r_tag)
     for v in value_cols:
-        l_tag = l_tag.withColumn(v, F.lit(None).cast(right.schema[v].dataType))
-    l_tag = l_tag.withColumn("__is_left", F.lit(1))
-
-    # carry the tiebreak column through the right-side projection (it is
-    # usually NOT a value column, and a select that drops it would silently
-    # degrade equal-(key, ts) right rows to partition-order tie-breaking —
-    # nondeterministic under repartitioning)
-    r_keep = list(on) + [order_col] + list(value_cols)
-    if right_order_tiebreak is not None and right_order_tiebreak not in r_keep:
-        r_keep.append(right_order_tiebreak)
-    r_tag = right.select(*[F.col(c) for c in r_keep])
-    if right_order_tiebreak is not None:
-        r_tag = r_tag.withColumn("__tb", F.col(right_order_tiebreak))
-        if right_order_tiebreak not in set(on) | {order_col} | set(value_cols):
-            r_tag = r_tag.drop(right_order_tiebreak)
-    else:
-        r_tag = r_tag.withColumn("__tb", F.lit(0))
-    for c in left.columns:
-        if c not in set(on) | {order_col} | set(value_cols):
-            r_tag = r_tag.withColumn(c, F.lit(None).cast(left.schema[c].dataType))
-    r_tag = r_tag.withColumn("__is_left", F.lit(0))
-    # typed NULL, not lit(0).cast(...): an int-to-date/timestamp/string
-    # cast can yield NULL-or-error under ANSI mode; a typed NULL is always
-    # castable and sorts consistently (left __tb never competes with right
-    # rows anyway — ties split on __is_left first) (r5 advice)
-    l_tag = l_tag.withColumn("__tb", F.lit(None).cast(
-        r_tag.schema["__tb"].dataType))
-
-    cols = l_tag.columns
-    unioned = l_tag.select(cols).unionByName(r_tag.select(cols))
-
-    w = (Window.partitionBy(*on)
-         .orderBy(F.col(order_col), F.col("__is_left"), F.col("__tb"))
-         .rowsBetween(Window.unboundedPreceding, 0))
-    out = unioned
-    for v in value_cols:
-        out = out.withColumn(v, F.last(v, ignorenulls=True).over(w))
+        out = out.withColumn(
+            v, carried(v, on, (order_col, "__is_left", "__tb")))
     return out.filter(F.col("__is_left") == 1).drop("__is_left", "__tb")
+
+
+def asof_join_sql(left: str, right: str, on: Sequence[str], order_col: str,
+                  value_cols: Sequence[str],
+                  right_order_tiebreak: str | None = None) -> str:
+    """asof_join of the relations named `left` and `right` as a DuckDB
+    query: left's columns, then `value_cols`. The union is by name, so
+    each side's missing columns are typed NULLs."""
+    keep = ", ".join([*on, order_col, *value_cols])
+    order = (order_col, "__is_left", "__tb")
+    filled = ", ".join(f"{carried_sql(v, on, order)} AS {v}"
+                       for v in value_cols)
+    return f"""
+      SELECT * EXCLUDE (__is_left, __tb) FROM (
+        SELECT * REPLACE ({filled}) FROM (
+          SELECT *, 1 AS __is_left FROM {left}
+          UNION ALL BY NAME
+          SELECT {keep}, 0 AS __is_left,
+                 {right_order_tiebreak or 0} AS __tb FROM {right}))
+      WHERE __is_left = 1"""

@@ -2,8 +2,8 @@
 
 Pure Python. apply_fill is the netting step every PnL fold calls: the
 engine's one emission loop (operators/pnl.py::fold_hub, which the batch
-folds and both streaming state APIs run), the hybrid and sliced folds'
-per-account trade passes, and the property tests. HubFold, emit_row and
+folds and both streaming state APIs run), the hybrid fold's
+per-account trade pass, and the property tests. HubFold, emit_row and
 replay are the executable spec — a second, dict-per-row implementation of
 the emission loop that the differential tests (tests/test_pnl.py) and the
 stream fuzzer's TTL oracle (tools/stream_fuzz.py::_pnl_ttl_spec) compare

@@ -9,7 +9,8 @@ Batch equivalents of the reference's keyed process functions:
   is exactly a ROWS BETWEEN (n-1) PRECEDING AND CURRENT ROW frame;
   lag_chain_avg_sql is its oracle rendering (every SMA oracle uses it).
 - last_value_carried_forward: the lastPrice ValueState
-  (reference PnlAndExposureJob.java:107-109,130,134-136).
+  (reference PnlAndExposureJob.java:107-109,130,134-136), the as-of
+  join's carry step.
 - latest_per_key: the read-side `SELECT DISTINCT ON (account,hub) ...
   ORDER BY ts DESC` snapshot query (reference README.md:92-96) in portable
   row_number form.
@@ -27,6 +28,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from kafka_flink_processing_spark.operators.asof import carried
 
 
 def _order_cols(order_by: Sequence[str | Column], desc: bool = False) -> list[Column]:
@@ -82,10 +85,9 @@ def last_value_carried_forward(df: DataFrame,
                                value_col: str,
                                out_col: str = "last_value") -> DataFrame:
     """Running last non-null value per key (ValueState<Double> lastPrice,
-    reference PnlAndExposureJob.java:130,134-136)."""
-    w = (Window.partitionBy(*partition_by).orderBy(*_order_cols(order_by))
-         .rowsBetween(Window.unboundedPreceding, 0))
-    return df.withColumn(out_col, F.last(value_col, ignorenulls=True).over(w))
+    reference PnlAndExposureJob.java:130,134-136): the as-of join's
+    carry step (operators/asof.py::carried; carried_sql renders it)."""
+    return df.withColumn(out_col, carried(value_col, partition_by, order_by))
 
 
 def latest_per_key(df: DataFrame,

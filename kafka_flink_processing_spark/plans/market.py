@@ -6,8 +6,9 @@ variance, max drawdown, signed flow — all engine-native, all oracle-gated.
 
 Ticks/trades are the deterministic event-table derivation the PnL family
 also uses (sources/events_market.py: derive_market and its oracle CTEs),
-with the tick_id needed for total-order tie-breaks: several ticks can
-share (hub, ts), and open/close or a return sequence picked without a
+and every order on them is that module's tape rules (tape_window and
+what is built on it), whose ids break ties: several ticks can share
+(hub, ts), and open/close or a return sequence picked without a
 tie-break would be partition-order-dependent — the exact class of
 nondeterminism this engine bans.
 
@@ -47,11 +48,29 @@ from kafka_flink_processing_spark.operators.windows import (
 from kafka_flink_processing_spark.plans.registry import register
 from kafka_flink_processing_spark.sources.events_market import (
     DA_CTE,
+    NOTIONAL_SQL,
     RT_CTE,
+    SIGNED_MW_SQL,
     TICKS_CTE,
     TRADES_CTE,
+    VWAP_SQL,
     derive_da_rt,
     derive_market,
+    lagged_price,
+    lagged_price_sql,
+    notional,
+    price_change,
+    price_change_sql,
+    side_mw,
+    side_mw_sql,
+    signed_mw,
+    tape_first,
+    tape_first_sql,
+    tape_last,
+    tape_last_sql,
+    tape_window,
+    tape_window_sql,
+    vwap,
 )
 
 
@@ -66,33 +85,32 @@ def _ticks(spark: SparkSession, sf_dir: str) -> DataFrame:
 # queries exist to hash-match the SAME result, so their sameness must be
 # structural, not maintained by hand-copying two SQL strings.
 _OHLC_ORACLE = f"""
-    WITH {TICKS_CTE},
-    tb AS (SELECT hub, date_trunc('hour', ts) AS bar_hour, ts, tick_id,
-                  price_mwh
-           FROM ticks),
-    o AS (SELECT hub, bar_hour, price_mwh AS open FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY hub, bar_hour
-                       ORDER BY ts, tick_id) AS rn FROM tb) WHERE rn = 1),
-    c AS (SELECT hub, bar_hour, price_mwh AS close FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY hub, bar_hour
-                       ORDER BY ts DESC, tick_id DESC) AS rn FROM tb)
-          WHERE rn = 1),
-    hl AS (SELECT hub, bar_hour, MAX(price_mwh) AS high,
-                  MIN(price_mwh) AS low, CAST(COUNT(*) AS BIGINT) AS n_ticks
-           FROM tb GROUP BY 1, 2)
-    SELECT hub, bar_hour, open, high, low, close, n_ticks
-    FROM hl JOIN o USING (hub, bar_hour) JOIN c USING (hub, bar_hour)
+    WITH {TICKS_CTE}
+    SELECT hub, date_trunc('hour', ts) AS bar_hour,
+           {tape_first_sql('ticks', 'price_mwh')} AS open,
+           MAX(price_mwh) AS high, MIN(price_mwh) AS low,
+           {tape_last_sql('ticks', 'price_mwh')} AS close,
+           CAST(COUNT(*) AS BIGINT) AS n_ticks
+    FROM ticks GROUP BY 1, 2
     """
+
+
+def _ohlc_aggs() -> list:
+    """The five bar aggregates of both OHLC registrations."""
+    return [tape_first("ticks", "price_mwh").alias("open"),
+            F.max("price_mwh").alias("high"),
+            F.min("price_mwh").alias("low"),
+            tape_last("ticks", "price_mwh").alias("close"),
+            F.count("*").alias("n_ticks")]
 
 
 @register(
     "ohlc_bars",
     oracle=_OHLC_ORACLE,
     doc="hourly OHLC candles per hub — the desk's basic price rollup. "
-        "open/close are min_by/max_by over a (ts, tick_id) ORDER struct "
-        "(ties at equal ts broken by tick id — first/last without the "
-        "tie-break would be partition-order-dependent), high/low/count "
-        "plain aggregates: ONE map-side-combined groupBy, no window, no "
+        "open/close are the first/last tick on the tape (min_by/max_by "
+        "over (ts, tick_id)), high/low/count plain aggregates: ONE "
+        "map-side-combined groupBy, no window, no "
         "join Spark-side (struct-keyed min_by/max_by plans as a "
         "partial+final SortAggregate rather than hash — the sort is "
         "per-partition on the bar key and the exchange still carries one "
@@ -104,13 +122,7 @@ _OHLC_ORACLE = f"""
 def ohlc_bars_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _ticks(spark, sf_dir).withColumn(
         "bar_hour", F.date_trunc("hour", F.col("ts")))
-    first_key = F.struct(F.col("ts"), F.col("tick_id"))
-    return (t.groupBy("hub", "bar_hour")
-            .agg(F.min_by("price_mwh", first_key).alias("open"),
-                 F.max("price_mwh").alias("high"),
-                 F.min("price_mwh").alias("low"),
-                 F.max_by("price_mwh", first_key).alias("close"),
-                 F.count("*").alias("n_ticks")))
+    return t.groupBy("hub", "bar_hour").agg(*_ohlc_aggs())
 
 
 @register(
@@ -130,13 +142,8 @@ def streaming_ohlc_bars_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def build(stream: DataFrame) -> DataFrame:
-        first_key = F.struct(F.col("ts"), F.col("tick_id"))
         return (stream.groupBy("hub", F.window("ts", "1 hour").alias("w"))
-                .agg(F.min_by("price_mwh", first_key).alias("open"),
-                     F.max("price_mwh").alias("high"),
-                     F.min("price_mwh").alias("low"),
-                     F.max_by("price_mwh", first_key).alias("close"),
-                     F.count("*").alias("n_ticks"))
+                .agg(*_ohlc_aggs())
                 .select("hub", F.col("w.start").alias("bar_hour"),
                         "open", "high", "low", "close", "n_ticks"))
 
@@ -148,8 +155,7 @@ def streaming_ohlc_bars_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "vwap_hub_day",
     oracle=f"""
     WITH {TRADES_CTE}
-    SELECT hub, date_trunc('day', ts) AS day,
-           {dsum_sql('mw * price_mwh', 2)} / CAST(SUM(mw) AS BIGINT) AS vwap,
+    SELECT hub, date_trunc('day', ts) AS day, {VWAP_SQL} AS vwap,
            CAST(SUM(mw) AS BIGINT) AS total_mw,
            CAST(COUNT(*) AS BIGINT) AS n_trades
     FROM trades GROUP BY 1, 2
@@ -162,8 +168,7 @@ def streaming_ohlc_bars_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def vwap_hub_day_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     t, _ = derive_market(spark, sf_dir)
     return (t.groupBy("hub", F.date_trunc("day", F.col("ts")).alias("day"))
-            .agg((dsum(F.col("mw") * F.col("price_mwh"), 2)
-                  / F.sum("mw")).alias("vwap"),
+            .agg(vwap().alias("vwap"),
                  F.sum("mw").cast("long").alias("total_mw"),
                  F.count("*").alias("n_trades")))
 
@@ -173,8 +178,7 @@ def vwap_hub_day_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {TICKS_CTE},
     seq AS (SELECT hub, date_trunc('day', ts) AS day, price_mwh,
-                   lag(price_mwh) OVER (PARTITION BY hub, date_trunc('day', ts)
-                                        ORDER BY ts, tick_id) AS prev
+                   {lagged_price_sql('ticks', 1, 'day')} AS prev
             FROM ticks),
     r AS (SELECT hub, day,
                  LEAST(GREATEST(price_mwh / prev - 1, -10.0), 10.0) AS ret
@@ -198,8 +202,7 @@ def vwap_hub_day_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def realized_variance_daily_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _ticks(spark, sf_dir).withColumn(
         "day", F.date_trunc("day", F.col("ts")))
-    w = Window.partitionBy("hub", "day").orderBy("ts", "tick_id")
-    seq = t.withColumn("prev", F.lag("price_mwh").over(w))
+    seq = t.withColumn("prev", lagged_price("ticks", 1, "day"))
     ret = F.least(F.greatest(F.col("price_mwh") / F.col("prev") - 1,
                              F.lit(-10.0)), F.lit(10.0))
     r = seq.filter(F.col("prev") > 0).select("hub", "day",
@@ -217,7 +220,7 @@ def realized_variance_daily_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {TICKS_CTE},
     run AS (SELECT hub, price_mwh,
-                   MAX(price_mwh) OVER (PARTITION BY hub ORDER BY ts, tick_id
+                   MAX(price_mwh) OVER ({tape_window_sql('ticks')}
                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
                      AS peak
             FROM ticks)
@@ -231,13 +234,12 @@ def realized_variance_daily_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "path-dependent risk statistic that IS window-expressible "
         "(unlike the PnL fold) because the running max needs no "
         "netting state. One window shuffle on hub; for hubs with years "
-        "of ticks re-key the window by (hub, epoch) and merge peaks — "
-        "same sharding lever as the sliced PnL's carry.",
+        "of ticks re-key the window by (hub, epoch) and carry each "
+        "epoch's closing peak into the next.",
 )
 def max_drawdown_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _ticks(spark, sf_dir)
-    w = (Window.partitionBy("hub").orderBy("ts", "tick_id")
-         .rowsBetween(Window.unboundedPreceding, 0))
+    w = tape_window("ticks").rowsBetween(Window.unboundedPreceding, 0)
     run = t.withColumn("peak", F.max("price_mwh").over(w))
     dd = F.when(F.col("peak") > 0,
                 (F.col("peak") - F.col("price_mwh")) / F.col("peak")) \
@@ -252,12 +254,9 @@ def max_drawdown_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {TRADES_CTE}
     SELECT hub, date_trunc('hour', ts) AS flow_hour,
-           CAST(SUM(CASE WHEN side = 'BUY' THEN mw ELSE 0 END) AS BIGINT)
-             AS buy_mw,
-           CAST(SUM(CASE WHEN side = 'SELL' THEN mw ELSE 0 END) AS BIGINT)
-             AS sell_mw,
-           CAST(SUM(CASE WHEN side = 'BUY' THEN mw ELSE -mw END) AS BIGINT)
-             AS net_mw,
+           CAST(SUM({side_mw_sql('BUY')}) AS BIGINT) AS buy_mw,
+           CAST(SUM({side_mw_sql('SELL')}) AS BIGINT) AS sell_mw,
+           CAST(SUM({SIGNED_MW_SQL}) AS BIGINT) AS net_mw,
            CAST(COUNT(*) AS BIGINT) AS n_trades
     FROM trades GROUP BY 1, 2
     """,
@@ -268,15 +267,11 @@ def max_drawdown_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def trade_flow_net_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     t, _ = derive_market(spark, sf_dir)
-    signed = F.when(F.col("side") == "BUY", F.col("mw")) \
-              .otherwise(-F.col("mw"))
     return (t.groupBy("hub", F.date_trunc("hour", F.col("ts"))
                       .alias("flow_hour"))
-            .agg(F.sum(F.when(F.col("side") == "BUY", F.col("mw"))
-                       .otherwise(0)).cast("long").alias("buy_mw"),
-                 F.sum(F.when(F.col("side") == "SELL", F.col("mw"))
-                       .otherwise(0)).cast("long").alias("sell_mw"),
-                 F.sum(signed).cast("long").alias("net_mw"),
+            .agg(F.sum(side_mw("BUY")).cast("long").alias("buy_mw"),
+                 F.sum(side_mw("SELL")).cast("long").alias("sell_mw"),
+                 F.sum(signed_mw()).cast("long").alias("net_mw"),
                  F.count("*").alias("n_trades")))
 
 
@@ -318,7 +313,7 @@ _EWMA_SCALE = 10 ** 8  # per-term fixed-point scale for the order-free sum
     oracle=f"""
     WITH {TICKS_CTE},
     fr AS (SELECT hub, ts, tick_id, price_mwh,
-                  list(price_mwh) OVER (PARTITION BY hub ORDER BY ts, tick_id
+                  list(price_mwh) OVER ({tape_window_sql('ticks')}
                     ROWS BETWEEN {_EWMA_N - 1} PRECEDING AND CURRENT ROW) AS l
            FROM ticks)
     SELECT hub, ts, tick_id, price_mwh,
@@ -354,8 +349,7 @@ def ewma_price_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partition; one collect_list buffer + HOF walk is cheaper). The
     # array form below stays; evidence in OPTIMIZATION_r13.md.
     t = _ticks(spark, sf_dir)
-    w = (Window.partitionBy("hub").orderBy("ts", "tick_id")
-         .rowsBetween(-(_EWMA_N - 1), 0))
+    w = tape_window("ticks").rowsBetween(-(_EWMA_N - 1), 0)
     fr = t.withColumn("l", F.collect_list("price_mwh").over(w))
     n = F.size(F.col("l"))
     # 0-based transform index i -> weight 0.5^(n-1-i); DuckDB's 1-based
@@ -385,7 +379,7 @@ _BB_N = 20  # Bollinger frame: SMA(20) +/- 2 sigma
                     OVER w AS s2,
                   COUNT(*) OVER w AS n
            FROM ticks
-           WINDOW w AS (PARTITION BY hub ORDER BY ts, tick_id
+           WINDOW w AS ({tape_window_sql('ticks')}
                         ROWS BETWEEN {_BB_N - 1} PRECEDING AND CURRENT ROW))
     SELECT hub, ts, tick_id, price_mwh,
            CAST(s1 AS DOUBLE) / (100.0 * n) AS mid_band,
@@ -415,8 +409,7 @@ _BB_N = 20  # Bollinger frame: SMA(20) +/- 2 sigma
 )
 def bollinger_bands_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _ticks(spark, sf_dir)
-    w = (Window.partitionBy("hub").orderBy("ts", "tick_id")
-         .rowsBetween(-(_BB_N - 1), 0))
+    w = tape_window("ticks").rowsBetween(-(_BB_N - 1), 0)
     s1 = F.sum(F.round(F.col("price_mwh") * 100).cast("long")).over(w)
     s2 = F.sum(F.round(F.col("price_mwh") * F.col("price_mwh") * 10000)
                .cast("long")).over(w)
@@ -607,7 +600,7 @@ _MED_N = 21  # rolling-median frame: current tick + 20 preceding
     WITH {TICKS_CTE},
     fr AS (SELECT hub, ts, tick_id, price_mwh,
                   list_sort(list(price_mwh) OVER (
-                    PARTITION BY hub ORDER BY ts, tick_id
+                    {tape_window_sql('ticks')}
                     ROWS BETWEEN {_MED_N - 1} PRECEDING AND CURRENT ROW)) AS l
            FROM ticks)
     SELECT hub, ts, tick_id, price_mwh,
@@ -623,8 +616,8 @@ _MED_N = 21  # rolling-median frame: current tick + 20 preceding
         "percentile sketch — the frame is sorted and the two middle "
         "elements averaged ((a+b)/2.0 is one IEEE op on identical "
         "doubles in both engines), so the value-hash matches bit-for-bit "
-        "and the result is partition-order-independent (ties broken by "
-        "tick_id in the frame ORDER). Scale: ONE window shuffle on hub; "
+        "and the result is partition-order-independent (the frame is on "
+        "the tape). Scale: ONE window shuffle on hub; "
         "per-row cost is O(k log k) on the bounded k=21 frame (the sort "
         "is in-row array algebra, never a shuffle); re-key by (hub, "
         "epoch) with a k-row overlap to shard year-long hubs — the same "
@@ -632,8 +625,7 @@ _MED_N = 21  # rolling-median frame: current tick + 20 preceding
 )
 def rolling_median_price_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _ticks(spark, sf_dir)
-    w = (Window.partitionBy("hub").orderBy("ts", "tick_id")
-         .rowsBetween(-(_MED_N - 1), 0))
+    w = tape_window("ticks").rowsBetween(-(_MED_N - 1), 0)
     l = F.array_sort(F.collect_list("price_mwh").over(w))
     fr = t.withColumn("l", l)
     n = F.size(F.col("l"))
@@ -654,16 +646,14 @@ _BAND_MWH = 10.0  # price-regime band width for the SCD-2 intervals
                  CAST(floor(price_mwh / {_BAND_MWH}) AS BIGINT) AS band
           FROM ticks),
     c AS (SELECT hub, ts, tick_id, band,
-                 CASE WHEN lag(band) OVER (PARTITION BY hub
-                                           ORDER BY ts, tick_id) IS DISTINCT
-                           FROM band THEN 1 ELSE 0 END AS chg
+                 CASE WHEN lag(band) OVER ({tape_window_sql('ticks')})
+                           IS DISTINCT FROM band THEN 1 ELSE 0 END AS chg
           FROM b),
     i AS (SELECT hub, ts, band, chg,
-                 CAST(SUM(chg) OVER (PARTITION BY hub ORDER BY ts, tick_id
+                 CAST(SUM(chg) OVER ({tape_window_sql('ticks')}
                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
                       AS BIGINT) AS island,
-                 CAST(row_number() OVER (PARTITION BY hub
-                                         ORDER BY ts, tick_id)
+                 CAST(row_number() OVER ({tape_window_sql('ticks')})
                       AS BIGINT) AS rn,
                  CAST(COUNT(*) OVER (PARTITION BY hub) AS BIGINT) AS n_hub
           FROM c),
@@ -685,9 +675,8 @@ _BAND_MWH = 10.0  # price-regime band width for the SCD-2 intervals
         "deltas. This is the slowly-changing-dimension materialization "
         "the reference's Postgres side would build with the identical "
         "SQL (README.md:83-101 reads latest state; this is its full "
-        "history form). Determinism: bands are integers, the (ts, "
-        "tick_id) ORDER is a total order, so island numbering is "
-        "partition-order-independent. Scale: deliberately NO "
+        "history form). Determinism: integer bands on the tape's total "
+        "order. Scale: deliberately NO "
         "run-collapsing groupBy — every step is a window over the SAME "
         "hub partitioning (the run aggregate would re-shuffle tick-sized "
         "data on (hub, island)), so the whole query is ONE hub-hash "
@@ -699,7 +688,7 @@ _BAND_MWH = 10.0  # price-regime band width for the SCD-2 intervals
 def scd2_price_intervals_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _ticks(spark, sf_dir)
     band = F.floor(F.col("price_mwh") / _BAND_MWH).cast("long")
-    wo = Window.partitionBy("hub").orderBy("ts", "tick_id")
+    wo = tape_window("ticks")
     wh = Window.partitionBy("hub")
     b = t.select("hub", "ts", "tick_id", band.alias("band"))
     chg = F.when(F.lag("band").over(wo).eqNullSafe(F.col("band")), 0) \
@@ -771,7 +760,7 @@ def hub_price_corr_matrix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     f AS (SELECT hub, ts, tick_id, price_mwh,
                  {lag_chain_avg_sql('price_mwh', SMA_SHORT)} AS sma,
                  LEAD(price_mwh) OVER w AS actual_next
-          FROM ticks WINDOW w AS (PARTITION BY hub ORDER BY ts, tick_id)),
+          FROM ticks WINDOW w AS ({tape_window_sql('ticks')})),
     e AS (SELECT hub, actual_next - sma AS err FROM f
           WHERE actual_next IS NOT NULL)
     SELECT hub, CAST(COUNT(*) AS BIGINT) AS n_forecasts,
@@ -800,7 +789,7 @@ def hub_price_corr_matrix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def forecast_backtest_sma_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _ticks(spark, sf_dir)
-    wo = Window.partitionBy("hub").orderBy("ts", "tick_id")
+    wo = tape_window("ticks")
     sma = F.avg("price_mwh").over(wo.rowsBetween(-(SMA_SHORT - 1), 0))
     f = t.select("hub", sma.alias("sma"),
                  F.lead("price_mwh").over(wo).alias("actual_next"))
@@ -819,9 +808,7 @@ def forecast_backtest_sma_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "vwap_execution_quality",
     oracle=f"""
     WITH {TRADES_CTE},
-    v AS (SELECT hub, date_trunc('day', ts) AS day,
-                 {dsum_sql('mw * price_mwh', 2)} / CAST(SUM(mw) AS BIGINT)
-                   AS vwap
+    v AS (SELECT hub, date_trunc('day', ts) AS day, {VWAP_SQL} AS vwap
           FROM trades GROUP BY 1, 2),
     d AS (SELECT t.hub, t.side, t.price_mwh - v.vwap AS dev
           FROM trades t JOIN v ON t.hub = v.hub
@@ -849,9 +836,7 @@ def forecast_backtest_sma_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def vwap_execution_quality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     t, _ = derive_market(spark, sf_dir)
     day = F.date_trunc("day", F.col("ts")).alias("day")
-    v = (t.groupBy("hub", day)
-          .agg((dsum(F.col("mw") * F.col("price_mwh"), 2)
-                / F.sum("mw")).alias("vwap")))
+    v = t.groupBy("hub", day).agg(vwap().alias("vwap"))
     d = (t.select("hub", "side", "price_mwh", day)
           .join(F.broadcast(v), ["hub", "day"])
           .select("hub", "side",
@@ -875,10 +860,9 @@ def vwap_execution_quality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "kyle_lambda_price_impact",
     oracle=f"""
     WITH {TRADES_CTE},
-    seq AS (SELECT hub,
-                   CASE WHEN side = 'BUY' THEN mw ELSE -mw END AS x,
-                   price_mwh - LAG(price_mwh) OVER w AS y
-            FROM trades WINDOW w AS (PARTITION BY hub ORDER BY ts, trade_id)),
+    seq AS (SELECT hub, {SIGNED_MW_SQL} AS x,
+                   {price_change_sql('trades')} AS y
+            FROM trades),
     m AS (SELECT hub, CAST(COUNT(*) AS BIGINT) AS n_obs,
                  {moment_sums_sql('x', 'y', 0, 6)}
           FROM seq WHERE y IS NOT NULL GROUP BY 1)
@@ -901,13 +885,8 @@ def vwap_execution_quality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def kyle_lambda_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     t, _ = derive_market(spark, sf_dir)
-    w = Window.partitionBy("hub").orderBy("ts", "trade_id")
-    seq = (t.select(
-            "hub",
-            F.when(F.col("side") == "BUY", F.col("mw"))
-             .otherwise(-F.col("mw")).alias("x"),
-            (F.col("price_mwh")
-             - F.lag("price_mwh").over(w)).alias("y"))
+    seq = (t.select("hub", signed_mw().alias("x"),
+                    price_change("trades").alias("y"))
            .filter(F.col("y").isNotNull()))
     m = seq.groupBy("hub").agg(F.count("*").alias("n_obs"),
                                *moment_sums("x", "y", 0, 6))
@@ -974,13 +953,9 @@ def lead_lag_hub_beta_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "roll_spread_estimator",
     oracle=f"""
     WITH {TRADES_CTE},
-    d AS (SELECT hub, ts, trade_id,
-                 price_mwh - LAG(price_mwh) OVER (
-                   PARTITION BY hub ORDER BY ts, trade_id) AS dp
+    d AS (SELECT hub, ts, trade_id, {price_change_sql('trades')} AS dp
           FROM trades),
-    p AS (SELECT hub, dp,
-                 LAG(dp) OVER (PARTITION BY hub
-                               ORDER BY ts, trade_id) AS dp_lag
+    p AS (SELECT hub, dp, LAG(dp) OVER ({tape_window_sql('trades')}) AS dp_lag
           FROM d),
     m AS (SELECT hub, CAST(COUNT(*) AS BIGINT) AS n_obs,
                  {moment_sums_sql('dp', 'dp_lag')}
@@ -998,9 +973,8 @@ def lead_lag_hub_beta_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bid-ask bounce straight off the trade tape, no quote data "
         "needed. A non-negative serial covariance carries no spread "
         "signal and yields NULL (reported, not hidden — the desk wants "
-        "to see which hubs trend). Exactness: dp is the same "
-        "IEEE-subtracted double on both engines (LAG over the identical "
-        "(ts, trade_id) total order), moment sums are 6dp exact sums "
+        "to see which hubs trend). Exactness: dp is the tape's price "
+        "change, moment sums are 6dp exact sums "
         "(functions/exact.py), population-covariance algebra and sqrt "
         "run on identical doubles. Scale: one hub-keyed exchange feeds "
         "both LAGs (same window, one Sort), then a map-side-combined "
@@ -1011,9 +985,8 @@ def lead_lag_hub_beta_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def roll_spread_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     t, _ = derive_market(spark, sf_dir)
-    w = Window.partitionBy("hub").orderBy("ts", "trade_id")
-    d = t.withColumn("dp", F.col("price_mwh") - F.lag("price_mwh").over(w))
-    p = (d.withColumn("dp_lag", F.lag("dp").over(w))
+    d = t.withColumn("dp", price_change("trades"))
+    p = (d.withColumn("dp_lag", F.lag("dp").over(tape_window("trades")))
           .filter(F.col("dp").isNotNull() & F.col("dp_lag").isNotNull()))
     m = p.groupBy("hub").agg(F.count("*").alias("n_obs"),
                              *moment_sums("dp", "dp_lag"))
@@ -1029,10 +1002,8 @@ def roll_spread_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {TICKS_CTE},
     d AS (SELECT hub, ts, tick_id, price_mwh,
-                 price_mwh - LAG(price_mwh, 1) OVER (
-                   PARTITION BY hub ORDER BY ts, tick_id) AS dp,
-                 price_mwh - LAG(price_mwh, 4) OVER (
-                   PARTITION BY hub ORDER BY ts, tick_id) AS dq
+                 {price_change_sql('ticks', 1)} AS dp,
+                 {price_change_sql('ticks', 4)} AS dq
           FROM ticks),
     m AS (SELECT hub, CAST(COUNT(*) AS BIGINT) AS n_obs,
                  {moment_sums_sql('dp', 'dq')}
@@ -1055,18 +1026,17 @@ def roll_spread_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "convention as roll_spread_estimator). Both horizon diffs are "
         "restricted to the SAME row set (both lags non-null) so the two "
         "variances are population moments over identical observations. "
-        "Exactness: LAG over the (ts, tick_id) total order, 6dp "
-        "exact moment sums (functions/exact.py), identical "
-        "double algebra both sides. Scale: ONE hub-keyed exchange feeds "
+        "Exactness: price changes on the tape, 6dp exact moment sums "
+        "(functions/exact.py), identical double algebra both sides. "
+        "Scale: ONE hub-keyed exchange feeds "
         "both LAGs (same window sort), map-side-combined moment "
         "aggregate collapses to hubs rows; (hub, day) re-key lever as "
         "documented on kyle_lambda if one hub's tape outgrows a task.",
 )
 def variance_ratio_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _ticks(spark, sf_dir)
-    w = Window.partitionBy("hub").orderBy("ts", "tick_id")
-    d = (t.withColumn("dp", F.col("price_mwh") - F.lag("price_mwh", 1).over(w))
-          .withColumn("dq", F.col("price_mwh") - F.lag("price_mwh", 4).over(w))
+    d = (t.withColumn("dp", price_change("ticks", 1))
+          .withColumn("dq", price_change("ticks", 4))
           .filter(F.col("dp").isNotNull() & F.col("dq").isNotNull()))
     m = d.groupBy("hub").agg(F.count("*").alias("n_obs"),
                              *moment_sums("dp", "dq"))
@@ -1083,14 +1053,12 @@ def variance_ratio_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH {TRADES_CTE},
     d AS (SELECT hub, date_trunc('day', ts) AS day,
                  ts, trade_id, mw, price_mwh,
-                 price_mwh - LAG(price_mwh) OVER (
-                   PARTITION BY hub, date_trunc('day', ts)
-                   ORDER BY ts, trade_id) AS dp
+                 {price_change_sql('trades', 1, 'day')} AS dp
           FROM trades),
     m AS (SELECT hub, day,
                  CAST(COUNT(*) AS BIGINT) AS n_trades,
                  {dsum_sql('ABS(dp)', 6)} AS abs_move_sum,
-                 {dsum_sql('mw * price_mwh', 2)} AS notional_usd
+                 {NOTIONAL_SQL} AS notional_usd
           FROM d GROUP BY hub, day)
     SELECT hub, day, n_trades, abs_move_sum, notional_usd,
            CASE WHEN notional_usd > 0.0
@@ -1117,13 +1085,12 @@ def variance_ratio_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def amihud_illiquidity_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     t, _ = derive_market(spark, sf_dir)
-    d = t.withColumn("day", F.date_trunc("day", F.col("ts")))
-    w = Window.partitionBy("hub", "day").orderBy("ts", "trade_id")
-    d = d.withColumn("dp", F.col("price_mwh") - F.lag("price_mwh").over(w))
+    d = (t.withColumn("day", F.date_trunc("day", F.col("ts")))
+          .withColumn("dp", price_change("trades", 1, "day")))
     m = d.groupBy("hub", "day").agg(
         F.count("*").alias("n_trades"),
         dsum(F.abs(F.col("dp")), 6).alias("abs_move_sum"),
-        dsum(F.col("mw") * F.col("price_mwh"), 2).alias("notional_usd"))
+        notional().alias("notional_usd"))
     illiq = F.when(F.col("notional_usd") > 0.0,
                    1000000.0 * F.col("abs_move_sum") / F.col("notional_usd"))
     return m.select("hub", "day", "n_trades", "abs_move_sum",

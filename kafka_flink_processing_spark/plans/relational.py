@@ -28,7 +28,10 @@ from kafka_flink_processing_spark.functions.exact import (
     ranked_sql,
     with_ranks,
 )
-from kafka_flink_processing_spark.operators.asof import asof_join
+from kafka_flink_processing_spark.operators.asof import (
+    asof_join,
+    asof_join_sql,
+)
 from kafka_flink_processing_spark.plans.registry import register
 from kafka_flink_processing_spark.sources.parquet import load_table
 
@@ -648,26 +651,15 @@ def top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "asof_join_events",
-    oracle="""
-    WITH tagged AS (
-      SELECT event_id, user_id, ts, value,
-             CAST(NULL AS DOUBLE) AS purchase_value, 1 AS is_left,
-             0 AS tb
-      FROM events WHERE event_type = 'click'
-      UNION ALL
-      SELECT CAST(NULL AS BIGINT), user_id, ts, CAST(NULL AS DOUBLE),
-             value, 0, event_id
-      FROM events WHERE event_type = 'purchase'
-    ), filled AS (
-      SELECT event_id, user_id, ts, value, is_left,
-             LAST_VALUE(purchase_value IGNORE NULLS) OVER (
-               PARTITION BY user_id ORDER BY ts, is_left, tb
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-             ) AS purchase_value
-      FROM tagged
-    )
+    oracle=f"""
+    WITH clicks AS (SELECT event_id, user_id, ts, value FROM events
+                    WHERE event_type = 'click'),
+    purchases AS (SELECT user_id, ts, value AS purchase_value,
+                         event_id AS src_id
+                  FROM events WHERE event_type = 'purchase')
     SELECT event_id, user_id, ts, value, purchase_value
-    FROM filled WHERE is_left = 1
+    FROM ({asof_join_sql('clicks', 'purchases', ['user_id'], 'ts',
+                         ['purchase_value'], 'src_id')})
     """,
     doc="as-of join: each click enriched with the user's latest purchase "
         "value at-or-before its ts; tagged-union + one window pass "

@@ -24,6 +24,7 @@ from kafka_flink_processing_spark.functions.exact import (
     ranked_sql,
     with_ranks,
 )
+from kafka_flink_processing_spark.operators.asof import carried_sql
 from kafka_flink_processing_spark.operators.pnl import price_exposure
 from kafka_flink_processing_spark.operators.windows import (
     SMA_LONG,
@@ -36,9 +37,13 @@ from kafka_flink_processing_spark.operators.windows import (
 )
 from kafka_flink_processing_spark.plans.registry import register
 from kafka_flink_processing_spark.sources.events_market import (
+    SIGNED_MW_SQL,
     TICKS_CTE,
     TRADES_CTE,
     derive_market,
+    signed_mw,
+    tape_window,
+    tape_window_sql,
 )
 from kafka_flink_processing_spark.sources.parquet import load_table
 
@@ -68,12 +73,10 @@ def forecast_sma(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- W4: last-value carried forward (reference PnlAndExposureJob.java:130,134-136)
 @register(
     "last_value_carried_forward",
-    oracle="""
+    oracle=f"""
     SELECT event_id, ts, event_type, value,
-           LAST_VALUE(value IGNORE NULLS) OVER (
-             PARTITION BY event_type ORDER BY ts, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-           ) AS last_value
+           {carried_sql('value', ['event_type'], ['ts', 'event_id'])}
+             AS last_value
     FROM events
     """,
     doc="W4 running last value per key (ValueState lastPrice analogue).",
@@ -121,29 +124,24 @@ def topk_recent(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("event_id", "ts", "user_id", "event_type", "value")
 
 
-# --- W2/W3: the PnL fold. Rows-only through r5 ("path-dependent, not
-# SQL-expressible"); r6 disproved that: the netting transition
-# (operators/netting.py::apply_fill) is per-step ALGEBRAIC, so the whole
-# sequential fold is a recursive CTE — per-(hub, account) trade states
-# advance one rank per iteration with the exact same IEEE double
-# expressions the pandas fold evaluates, and both emission families
-# (post-fill trade rows; tick mark-to-market fan-out rows) attach
-# relationally (strict-before ASOF join on the per-(hub, ts) last tick;
-# state-interval join).
-# Bit-exact against the Spark fold at sf0.001/0.01/0.1 (179,587 rows at
-# sf0.1). Precondition making the replay total: (hub, ts) is unique in
-# the driver events data (verified at all SFs) — with colliding
-# timestamps both engines would need the tick tie-break (tick_id,
-# sources/events_market.py). tests/test_pnl.py's spec-fold replay
-# equality remains the fixture-level check.
+# --- W2/W3: the PnL fold as a recursive CTE. The netting transition
+# (operators/netting.py::apply_fill) is per-step algebraic, so per-(hub,
+# account) trade states advance one rank per iteration with the same IEEE
+# double expressions the pandas fold evaluates; both emission families
+# (post-fill trade rows, tick mark-to-market fan-out rows) attach
+# relationally. Ties at one ts follow the tapes' ids: trades replay in
+# (ts, trade_id) order; a trade marks against the last tick strictly
+# before its ts, the greatest tick_id among ticks there (last_tick); a
+# tick marks each account on its hub with the state after the account's
+# last trade at or before its ts. Bit-exact against the Spark fold at
+# sf0.001/0.01/0.1 and on the events_ties fuzz corpus (1-6 events per ts).
 _PNL_REPLAY_SQL = f"""
 WITH RECURSIVE {TRADES_CTE},
 {TICKS_CTE},
 seq AS MATERIALIZED (
   SELECT trade_id, ts, account, hub,
-         CASE side WHEN 'BUY' THEN mw ELSE -mw END AS q, price_mwh AS px,
-         ROW_NUMBER() OVER (PARTITION BY hub, account
-                            ORDER BY ts, trade_id) AS rn
+         {SIGNED_MW_SQL} AS q, price_mwh AS px,
+         ROW_NUMBER() OVER ({tape_window_sql('trades', 'account')}) AS rn
   FROM trades),
 st AS MATERIALIZED (
   SELECT hub, account, 0 AS rn, CAST(0 AS BIGINT) AS pos,
@@ -330,8 +328,8 @@ def pnl_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {TRADES_CTE}
     SELECT trade_id, ts, account, hub, side, mw, price_mwh,
-           CAST(SUM(CASE WHEN side = 'BUY' THEN mw ELSE -mw END) OVER (
-             PARTITION BY hub, account ORDER BY ts, trade_id
+           CAST(SUM({SIGNED_MW_SQL}) OVER (
+             {tape_window_sql('trades', 'account')}
              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
            ) AS BIGINT) AS position_mw
     FROM trades
@@ -342,12 +340,11 @@ def pnl_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def running_position(spark: SparkSession, sf_dir: str) -> DataFrame:
     trades, _ = derive_market(spark, sf_dir)
-    signed = F.when(F.col("side") == "BUY", F.col("mw")).otherwise(-F.col("mw"))
-    w = (Window.partitionBy("hub", "account").orderBy("ts", "trade_id")
-         .rowsBetween(Window.unboundedPreceding, 0))
+    w = tape_window("trades", "account").rowsBetween(
+        Window.unboundedPreceding, 0)
     return trades.select(
         "trade_id", "ts", "account", "hub", "side", "mw", "price_mwh",
-        F.sum(signed.cast("long")).over(w).alias("position_mw"))
+        F.sum(signed_mw().cast("long")).over(w).alias("position_mw"))
 
 
 # --- semi-structured: JSON path extraction over the props column (the
@@ -451,8 +448,21 @@ _STREAM_SMA_ORACLE = f"""
            {lag_chain_avg_sql('price_mwh', SMA_LONG)} AS sma20,
            {lag_chain_avg_sql('price_mwh', SMA_SHORT)} AS forecast_next
     FROM ticks
-    WINDOW w AS (PARTITION BY hub ORDER BY ts, tick_id)
+    WINDOW w AS ({tape_window_sql('ticks')})
 """
+
+
+def _drain_sma(spark: SparkSession, sf_dir: str, fold, name: str) -> DataFrame:
+    """Drain the streaming SMA `fold` over the derived prices; its ring
+    buffer folds in tape order, as the oracle window does."""
+    from kafka_flink_processing_spark.streaming.sinks import (
+        drain_streaming_result,
+    )
+
+    _, prices = derive_market(spark, sf_dir)
+    return drain_streaming_result(
+        prices, lambda s: fold(s, seq_col="tick_id"), name).select(
+            "ts", "hub", "price_mwh", "sma5", "sma20", "forecast_next")
 
 
 @register(
@@ -463,21 +473,11 @@ _STREAM_SMA_ORACLE = f"""
         "bit-for-bit (unified batch/streaming semantics).",
 )
 def streaming_forecast_sma(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.streaming.sinks import (
-        drain_streaming_result,
-    )
     from kafka_flink_processing_spark.streaming.stateful import (
         streaming_sma_forecast,
     )
 
-    _, prices = derive_market(spark, sf_dir)
-    # tick_id is the same-ts tie-break the ring-buffer fold needs — two
-    # ticks at one (hub, ts) made the SMA partition-order-dependent
-    # (r8 events fuzzer); the oracle window orders identically
-    return drain_streaming_result(
-        prices, lambda s: streaming_sma_forecast(s, seq_col="tick_id"),
-        "sma").select("ts", "hub", "price_mwh", "sma5", "sma20",
-                      "forecast_next")
+    return _drain_sma(spark, sf_dir, streaming_sma_forecast, "sma")
 
 
 @register(
@@ -496,20 +496,14 @@ def streaming_forecast_sma(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_forecast_sma_tws_q(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.streaming.sinks import (
-        drain_streaming_result,
-    )
     from kafka_flink_processing_spark.streaming.stateful import (
         rocksdb_state_store,
         streaming_sma_forecast_tws,
     )
 
     with rocksdb_state_store(spark):
-        _, prices = derive_market(spark, sf_dir)
-        return drain_streaming_result(
-            prices, lambda s: streaming_sma_forecast_tws(s, seq_col="tick_id"),
-            "sma_tws").select("ts", "hub", "price_mwh", "sma5", "sma20",
-                              "forecast_next")
+        return _drain_sma(spark, sf_dir, streaming_sma_forecast_tws,
+                          "sma_tws")
 
 
 # --- winsorized statistics: rank-based exact percentile bounds + clipping
@@ -612,13 +606,12 @@ def streaming_enrich_static(spark: SparkSession, sf_dir: str) -> DataFrame:
                        OR epoch_us(ts) - LAG(epoch_us(ts)) OVER w
                           > 1800000000
                   THEN 1 ELSE 0 END AS is_new
-      -- (ts, tick_id) total order: with same-ts ties an untied cumsum
-      -- can put a non-boundary tied row BEFORE its boundary twin and
-      -- stitch it onto the previous session (r8 events fuzzer)
-      FROM ticks WINDOW w AS (PARTITION BY hub ORDER BY ts, tick_id)
+      -- tape order: ordered by ts alone, a non-boundary row tied with
+      -- a boundary row could sort BEFORE it and join the previous session
+      FROM ticks WINDOW w AS ({tape_window_sql('ticks')})
     ), s AS (
       SELECT *, SUM(is_new) OVER (
-               PARTITION BY hub ORDER BY ts, tick_id
+               {tape_window_sql('ticks')}
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
       FROM o
     )
@@ -642,23 +635,14 @@ def streaming_enrich_static(spark: SparkSession, sf_dir: str) -> DataFrame:
         "partial aggregate; a watermark bounds retained sessions in "
         "production append mode.",
 )
-def streaming_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+def streaming_session_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_flink_processing_spark.streaming.sinks import (
         drain_streaming_result,
     )
+    from kafka_flink_processing_spark.streaming.windows import (
+        streaming_session_stats,
+    )
 
     _, prices = derive_market(spark, sf_dir)
-
-    def build(stream: DataFrame) -> DataFrame:
-        return (stream
-                .groupBy(F.session_window("ts", "30 minutes").alias("w"),
-                         "hub")
-                .agg(F.count("*").alias("n_ticks"),
-                     dsum("price_mwh").alias("sum_price"))
-                .select("hub",
-                        F.col("w.start").alias("session_start"),
-                        F.col("w.end").alias("session_end"),
-                        "n_ticks", "sum_price"))
-
-    return drain_streaming_result(prices, build, "sess",
+    return drain_streaming_result(prices, streaming_session_stats, "sess",
                                   output_mode="complete")

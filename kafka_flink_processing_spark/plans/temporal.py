@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_flink_processing_spark.functions.exact import dsum, dsum_sql
+from kafka_flink_processing_spark.operators.asof import asof_join, asof_join_sql
 from kafka_flink_processing_spark.plans.registry import register
 from kafka_flink_processing_spark.sources.events_market import (
     DA_CTE,
@@ -190,23 +191,9 @@ def session_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "da_rt_asof_basis",
     oracle=f"""
-    WITH {RT_CTE}, {DA_CTE},
-    tagged AS (
-      SELECT rt_id, hub, ts, lmp_rt, 1 AS is_left,
-             CAST(NULL AS DOUBLE) AS lmp_da, 0 AS tb
-      FROM rt
-      UNION ALL
-      SELECT NULL, hub, ts, NULL, 0, lmp_da, da_id FROM da
-    ), filled AS (
-      SELECT rt_id, hub, ts, lmp_rt, is_left,
-             LAST_VALUE(lmp_da IGNORE NULLS) OVER (
-               PARTITION BY hub ORDER BY ts, is_left, tb
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-             ) AS lmp_da
-      FROM tagged
-    )
+    WITH {RT_CTE}, {DA_CTE}
     SELECT rt_id, hub, ts, lmp_rt, lmp_da, lmp_rt - lmp_da AS basis
-    FROM filled WHERE is_left = 1
+    FROM ({asof_join_sql('rt', 'da', ['hub'], 'ts', ['lmp_da'], 'da_id')})
     """,
     doc="DA-vs-RT comparison (README.md:98-100's implied query as an as-of "
         "join, SURVEY.md §2.7): each dense RT tick enriched with the latest "
@@ -214,8 +201,6 @@ def session_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "DA print). Tagged-union + one window pass — single shuffle on hub.",
 )
 def da_rt_asof_basis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.operators.asof import asof_join
-
     rt, da = derive_da_rt(spark, sf_dir)
     out = asof_join(rt, da, on=["hub"], order_col="ts",
                     value_cols=["lmp_da"], right_order_tiebreak="da_id")
@@ -432,28 +417,16 @@ _ASOF_TOL_US = 2 * 3600 * 1_000_000  # 2-hour max quote staleness
     "da_rt_asof_tolerance",
     oracle=f"""
     WITH {RT_CTE}, {DA_CTE},
-    tagged AS (
-      SELECT rt_id, hub, ts, lmp_rt, 1 AS is_left,
-             CAST(NULL AS DOUBLE) AS lmp_da,
-             CAST(NULL AS TIMESTAMP) AS da_ts, 0 AS tb
-      FROM rt
-      UNION ALL
-      SELECT NULL, hub, ts, NULL, 0, lmp_da, ts, da_id FROM da
-    ), filled AS (
-      SELECT rt_id, hub, ts, lmp_rt, is_left,
-             LAST_VALUE(lmp_da IGNORE NULLS) OVER sw AS lmp_da,
-             LAST_VALUE(da_ts IGNORE NULLS) OVER sw AS da_ts
-      FROM tagged
-      WINDOW sw AS (PARTITION BY hub ORDER BY ts, is_left, tb
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-    )
+    da_t AS (SELECT *, ts AS da_ts FROM da),
+    filled AS ({asof_join_sql('rt', 'da_t', ['hub'], 'ts',
+                              ['lmp_da', 'da_ts'], 'da_id')})
     SELECT rt_id, hub, ts, lmp_rt,
            epoch_us(ts) - epoch_us(da_ts) AS da_age_us,
            CASE WHEN epoch_us(ts) - epoch_us(da_ts) <= {_ASOF_TOL_US}
                 THEN lmp_da END AS lmp_da_bounded,
            CASE WHEN epoch_us(ts) - epoch_us(da_ts) <= {_ASOF_TOL_US}
                 THEN lmp_rt - lmp_da END AS basis
-    FROM filled WHERE is_left = 1
+    FROM filled
     """,
     doc="as-of join WITH a staleness tolerance: each RT tick takes the "
         "latest DA price on its hub ONLY if that quote is at most 2 hours "
@@ -467,8 +440,6 @@ _ASOF_TOL_US = 2 * 3600 * 1_000_000  # 2-hour max quote staleness
         "window pass unchanged; the age test is exact int arithmetic.",
 )
 def da_rt_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.operators.asof import asof_join
-
     rt, da = derive_da_rt(spark, sf_dir)
     da = da.withColumn("da_ts", F.col("ts"))
     out = asof_join(rt, da, on=["hub"], order_col="ts",

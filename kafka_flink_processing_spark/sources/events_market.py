@@ -19,13 +19,24 @@ Every query over the market relations reads them from here: the Spark
 builders (derive_market, derive_da_rt) and the DuckDB oracle CTEs
 (TICKS_CTE, TRADES_CTE, RT_CTE, DA_CTE) sit side by side so the two
 renderings cannot drift — the same posture as operators/sessionize.py.
+
+The tape rules sit beside them, each a Spark builder with its DuckDB
+rendering (`*_sql`; tests/test_events_market.py compares each pair).
+Each hub's tape (ticks or trades) is in (ts, id) order: the tape's own
+id breaks ties between events at one ts, so every lag, running value
+and rank on it is partition-order-free. The rules: the tape window
+(`by` adds partition keys: day, account, bar_hour), its first and last
+events, price lags and changes on it, signed and one-side MW, notional
+and VWAP.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.window import WindowSpec
 
+from kafka_flink_processing_spark.functions.exact import dsum, dsum_sql
 from kafka_flink_processing_spark.sources.parquet import load_table
 
 _PRICE_TYPES = ("view", "click")
@@ -61,9 +72,6 @@ def derive_market(spark: SparkSession,
     prices = (ev.filter(F.col("event_type").isin(*_PRICE_TYPES))
                 .select("ts", hub.alias("hub"),
                         F.col("value").alias("price_mwh"),
-                        # tick tie-break: two ticks can share (hub, ts);
-                        # without an id the fold's "last price" is
-                        # partition-order-dependent (r8 events fuzzer)
                         F.col("event_id").alias("tick_id")))
     return trades, prices
 
@@ -125,3 +133,86 @@ DA_CTE = f"""
   da AS (SELECT {_SQL_HUB} AS hub, ts, value AS lmp_da, event_id AS da_id
          FROM events WHERE event_type = '{_DA_TYPE}')
 """
+
+
+# ---- the tape rules ------------------------------------------------
+
+_TAPE_ID = {"ticks": "tick_id", "trades": "trade_id"}
+
+
+def tape_window(tape: str, *by: str) -> WindowSpec:
+    """The hub's `tape` ("ticks" or "trades") in (ts, id) order."""
+    return Window.partitionBy("hub", *by).orderBy("ts", _TAPE_ID[tape])
+
+
+def tape_window_sql(tape: str, *by: str) -> str:
+    """The window spec, for `OVER (...)` or `WINDOW w AS (...)`."""
+    return (f"PARTITION BY {', '.join(('hub', *by))}"
+            f" ORDER BY ts, {_TAPE_ID[tape]}")
+
+
+def tape_first(tape: str, col: str) -> Column:
+    """Aggregate: `col` of the group's first event on the tape."""
+    return F.min_by(col, F.struct(F.col("ts"), F.col(_TAPE_ID[tape])))
+
+
+def tape_first_sql(tape: str, col: str) -> str:
+    return f"first({col} ORDER BY ts, {_TAPE_ID[tape]})"
+
+
+def tape_last(tape: str, col: str) -> Column:
+    """Aggregate: `col` of the group's last event on the tape."""
+    return F.max_by(col, F.struct(F.col("ts"), F.col(_TAPE_ID[tape])))
+
+
+def tape_last_sql(tape: str, col: str) -> str:
+    return f"last({col} ORDER BY ts, {_TAPE_ID[tape]})"
+
+
+def lagged_price(tape: str, k: int = 1, *by: str) -> Column:
+    """price_mwh k events back on the tape (NULL for the first k)."""
+    return F.lag("price_mwh", k).over(tape_window(tape, *by))
+
+
+def lagged_price_sql(tape: str, k: int = 1, *by: str) -> str:
+    return f"LAG(price_mwh, {k}) OVER ({tape_window_sql(tape, *by)})"
+
+
+def price_change(tape: str, k: int = 1, *by: str) -> Column:
+    """price_mwh minus the price k events back on the tape."""
+    return F.col("price_mwh") - lagged_price(tape, k, *by)
+
+
+def price_change_sql(tape: str, k: int = 1, *by: str) -> str:
+    return f"(price_mwh - {lagged_price_sql(tape, k, *by)})"
+
+
+def signed_mw() -> Column:
+    """+mw for BUY, -mw for SELL (PnlAndExposureJob.java:116)."""
+    return F.when(F.col("side") == "BUY", F.col("mw")).otherwise(-F.col("mw"))
+
+
+SIGNED_MW_SQL = "CASE WHEN side = 'BUY' THEN mw ELSE -mw END"
+
+
+def side_mw(side: str) -> Column:
+    """mw on `side` ("BUY" or "SELL"), 0 on the other."""
+    return F.when(F.col("side") == side, F.col("mw")).otherwise(0)
+
+
+def side_mw_sql(side: str) -> str:
+    return f"CASE WHEN side = '{side}' THEN mw ELSE 0 END"
+
+
+def notional() -> Column:
+    """Aggregate: the exact traded notional Σ mw·price_mwh at 2dp."""
+    return dsum(F.col("mw") * F.col("price_mwh"), 2)
+
+
+def vwap() -> Column:
+    """Aggregate: the notional over the integer Σ mw."""
+    return notional() / F.sum("mw")
+
+
+NOTIONAL_SQL = dsum_sql("mw * price_mwh", 2)
+VWAP_SQL = f"{NOTIONAL_SQL} / CAST(SUM(mw) AS BIGINT)"

@@ -10,6 +10,9 @@ top of parity:
   append-mode — windows emit once, finalized, when the watermark passes
   their end, and late rows beyond the allowed delay are dropped (asserted
   in tests/test_streaming_windows.py).
+- streaming_session_stats: groupBy(session_window(ts, 30 minutes), hub)
+  aggregation; a later micro-batch can extend, and so merge, a session
+  held in state.
 
 The aggregate expressions are the same exact long-scaled sums the batch
 plan uses (plans/temporal.py::tumbling_window_stats), so batch and
@@ -53,3 +56,16 @@ def streaming_tumbling_stats(prices: DataFrame,
                        F.col("w.end").alias("window_end"),
                        "hub", "n_ticks", "sum_price",
                        "min_price", "max_price"))
+
+
+def streaming_session_stats(prices: DataFrame) -> DataFrame:
+    """Per-(30-minute-gap session, hub) tick count and exact price sum
+    over a price feed, complete mode (no watermark)."""
+    return (prices.groupBy(F.session_window("ts", "30 minutes").alias("w"),
+                           "hub")
+                  .agg(F.count("*").alias("n_ticks"),
+                       dsum("price_mwh").alias("sum_price"))
+                  .select("hub",
+                          F.col("w.start").alias("session_start"),
+                          F.col("w.end").alias("session_end"),
+                          "n_ticks", "sum_price"))

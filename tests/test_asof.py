@@ -1,5 +1,6 @@
 """as-of join semantics: cold start (left before any right), tie at equal
-ts (right matches), latest-right-wins, key isolation."""
+ts (right matches), latest-right-wins, key isolation; asof_join_sql, its
+DuckDB rendering, returns the same rows."""
 
 from __future__ import annotations
 
@@ -7,7 +8,13 @@ import pytest
 
 import datetime as dt
 
-from kafka_flink_processing_spark.operators.asof import asof_join
+import duckdb
+
+from kafka_flink_processing_spark.operators.asof import (
+    asof_join,
+    asof_join_sql,
+)
+from tools.oracle_check import compare
 
 
 def _ts(i: int) -> dt.datetime:
@@ -59,6 +66,31 @@ def test_asof_join_tiebreak_survives_adversarial_row_order(spark):
     out = asof_join(left, right, on=["k"], order_col="ts",
                     value_cols=["px"], right_order_tiebreak="rid")
     assert out.collect()[0].px == 50.0
+
+
+def test_asof_join_sql_matches_asof_join(spark):
+    # a left row before the first right row, one at the ts of two right
+    # rows (the greater rid wins), a key with no right rows, and a right
+    # side written greater rid first
+    left = spark.createDataFrame(
+        [(1, "k1", _ts(5)), (2, "k1", _ts(10)), (3, "k1", _ts(25)),
+         (4, "k2", _ts(25)), (5, "k3", _ts(1))],
+        "lid long, k string, ts timestamp")
+    right = spark.createDataFrame(
+        [(12, "k1", _ts(10), 2.0), (11, "k1", _ts(10), 1.0),
+         (13, "k1", _ts(20), 200.0), (14, "k2", _ts(7), 7.7)],
+        "rid long, k string, ts timestamp, px double")
+    got = asof_join(left, right, on=["k"], order_col="ts",
+                    value_cols=["px"], right_order_tiebreak="rid")
+    con = duckdb.connect()
+    con.register("l", left.toPandas())
+    con.register("r", right.toPandas())
+    duck = con.execute(
+        asof_join_sql("l", "r", ["k"], "ts", ["px"], "rid")).fetchdf()
+    assert list(duck.columns) == got.columns == ["lid", "k", "ts", "px"]
+    assert compare("asof", got.toPandas(), duck)
+    assert {r.lid: r.px for r in got.collect()} == \
+        {1: None, 2: 2.0, 3: 200.0, 4: 7.7, 5: None}
 
 
 # --- r5: differential property test (the tiebreak bug found in review

@@ -474,38 +474,20 @@ def _run_corpus(spark, cname: str, seed: int, engines: list[str],
         # single-file staging), so neither fuzzer has exercised window
         # STATE across batch boundaries — tumbling partials updated by a
         # later batch, session windows MERGING when a later batch extends
-        # them. Batch and streaming run the identical expression tree, so
-        # engine-level semantics (NaN, dsum scaling) cancel and only the
-        # stateful-aggregation machinery is under test.
+        # them. Batch and streaming run the registered queries' own
+        # builders (streaming/windows.py), so engine-level semantics (NaN,
+        # dsum scaling) cancel and only the stateful-aggregation
+        # machinery is under test.
         windowed: dict[str, object] = {}
         if {"tumbling", "session"} & set(engines):
-            from kafka_flink_processing_spark.functions.exact import dsum
+            from kafka_flink_processing_spark.streaming.windows import (
+                streaming_session_stats,
+                streaming_tumbling_stats,
+            )
             px = prices.select("ts", "hub", "price_mwh")
-
-            def tumbling(df: DataFrame) -> DataFrame:
-                return (df.groupBy(F.window("ts", "1 hour").alias("w"),
-                                   "hub")
-                        .agg(F.count("*").alias("n_ticks"),
-                             dsum("price_mwh").alias("sum_price"),
-                             F.min("price_mwh").alias("min_price"),
-                             F.max("price_mwh").alias("max_price"))
-                        .select(F.col("w.start").alias("window_start"),
-                                F.col("w.end").alias("window_end"), "hub",
-                                "n_ticks", "sum_price", "min_price",
-                                "max_price"))
-
-            def session(df: DataFrame) -> DataFrame:
-                return (df.groupBy(
-                            F.session_window("ts", "30 minutes").alias("w"),
-                            "hub")
-                        .agg(F.count("*").alias("n_ticks"),
-                             dsum("price_mwh").alias("sum_price"))
-                        .select("hub",
-                                F.col("w.start").alias("session_start"),
-                                F.col("w.end").alias("session_end"),
-                                "n_ticks", "sum_price"))
-
-            windowed = {"tumbling": tumbling, "session": session}
+            windowed = {
+                "tumbling": lambda df: streaming_tumbling_stats(df, "1 hour"),
+                "session": streaming_session_stats}
 
         for ename, build in windowed.items():
             if ename not in engines:
