@@ -45,14 +45,14 @@ def carried_sql(value_col: str, partition_by: Sequence[str],
 
 def asof_join(left: DataFrame, right: DataFrame, on: Sequence[str],
               order_col: str, value_cols: Sequence[str],
-              right_order_tiebreak: str | None = None) -> DataFrame:
+              right_order_tiebreak: str) -> DataFrame:
     """For each left row, attach right's `value_cols` from the latest right
     row with the same key and right.order_col <= left.order_col.
 
     Ties at equal order_col match (right sorts before left); among right
     rows with identical (key, order_col), the one with the greatest
-    `right_order_tiebreak` wins (pass a unique column for determinism).
-    Left rows with no earlier right row get nulls.
+    `right_order_tiebreak` (a unique right column) wins. Left rows with
+    no earlier right row get nulls.
     """
     def null(df: DataFrame, c: str) -> Column:
         # typed: lit(0).cast(...) can be NULL-or-error under ANSI mode
@@ -60,14 +60,13 @@ def asof_join(left: DataFrame, right: DataFrame, on: Sequence[str],
 
     # the tiebreak rides along as __tb: a projection that dropped it would
     # leave equal-(key, ts) right rows in partition order
-    tb = (F.col(right_order_tiebreak) if right_order_tiebreak is not None
-          else F.lit(0)).alias("__tb")
+    tb = F.col(right_order_tiebreak).alias("__tb")
     keys = {*on, order_col}
     l_cols = [c for c in left.columns if c not in value_cols]
     l_tag = left.select(*l_cols, *[null(right, v) for v in value_cols],
                         F.lit(1).alias("__is_left"),
-                        F.lit(None).cast(right.select(tb).schema[0].dataType)
-                        .alias("__tb"))
+                        F.lit(None).cast(right.schema[right_order_tiebreak]
+                                         .dataType).alias("__tb"))
     r_tag = right.select(*[c if c in keys else null(left, c) for c in l_cols],
                          *value_cols, F.lit(0).alias("__is_left"), tb)
     out = l_tag.union(r_tag)
@@ -78,8 +77,7 @@ def asof_join(left: DataFrame, right: DataFrame, on: Sequence[str],
 
 
 def asof_join_sql(left: str, right: str, on: Sequence[str], order_col: str,
-                  value_cols: Sequence[str],
-                  right_order_tiebreak: str | None = None) -> str:
+                  value_cols: Sequence[str], right_order_tiebreak: str) -> str:
     """asof_join of the relations named `left` and `right` as a DuckDB
     query: left's columns, then `value_cols`. The union is by name, so
     each side's missing columns are typed NULLs."""
@@ -93,5 +91,5 @@ def asof_join_sql(left: str, right: str, on: Sequence[str], order_col: str,
           SELECT *, 1 AS __is_left FROM {left}
           UNION ALL BY NAME
           SELECT {keep}, 0 AS __is_left,
-                 {right_order_tiebreak or 0} AS __tb FROM {right}))
+                 {right_order_tiebreak} AS __tb FROM {right}))
       WHERE __is_left = 1"""

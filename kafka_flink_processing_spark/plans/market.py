@@ -47,27 +47,25 @@ from kafka_flink_processing_spark.operators.windows import (
 )
 from kafka_flink_processing_spark.plans.registry import register
 from kafka_flink_processing_spark.sources.events_market import (
+    CLOSE_PRICE_SQL,
     DA_CTE,
     NOTIONAL_SQL,
+    OPEN_PRICE_SQL,
     RT_CTE,
     SIGNED_MW_SQL,
     TICKS_CTE,
     TRADES_CTE,
     VWAP_SQL,
+    close_price,
     derive_da_rt,
     derive_market,
     lagged_price,
     lagged_price_sql,
     notional,
+    open_price,
     price_change,
     price_change_sql,
-    side_mw,
-    side_mw_sql,
     signed_mw,
-    tape_first,
-    tape_first_sql,
-    tape_last,
-    tape_last_sql,
     tape_window,
     tape_window_sql,
     vwap,
@@ -87,9 +85,9 @@ def _ticks(spark: SparkSession, sf_dir: str) -> DataFrame:
 _OHLC_ORACLE = f"""
     WITH {TICKS_CTE}
     SELECT hub, date_trunc('hour', ts) AS bar_hour,
-           {tape_first_sql('ticks', 'price_mwh')} AS open,
+           {OPEN_PRICE_SQL} AS open,
            MAX(price_mwh) AS high, MIN(price_mwh) AS low,
-           {tape_last_sql('ticks', 'price_mwh')} AS close,
+           {CLOSE_PRICE_SQL} AS close,
            CAST(COUNT(*) AS BIGINT) AS n_ticks
     FROM ticks GROUP BY 1, 2
     """
@@ -97,10 +95,10 @@ _OHLC_ORACLE = f"""
 
 def _ohlc_aggs() -> list:
     """The five bar aggregates of both OHLC registrations."""
-    return [tape_first("ticks", "price_mwh").alias("open"),
+    return [open_price().alias("open"),
             F.max("price_mwh").alias("high"),
             F.min("price_mwh").alias("low"),
-            tape_last("ticks", "price_mwh").alias("close"),
+            close_price().alias("close"),
             F.count("*").alias("n_ticks")]
 
 
@@ -254,8 +252,8 @@ def max_drawdown_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {TRADES_CTE}
     SELECT hub, date_trunc('hour', ts) AS flow_hour,
-           CAST(SUM({side_mw_sql('BUY')}) AS BIGINT) AS buy_mw,
-           CAST(SUM({side_mw_sql('SELL')}) AS BIGINT) AS sell_mw,
+           CAST(SUM(IF(side = 'BUY', mw, 0)) AS BIGINT) AS buy_mw,
+           CAST(SUM(IF(side = 'SELL', mw, 0)) AS BIGINT) AS sell_mw,
            CAST(SUM({SIGNED_MW_SQL}) AS BIGINT) AS net_mw,
            CAST(COUNT(*) AS BIGINT) AS n_trades
     FROM trades GROUP BY 1, 2
@@ -269,8 +267,10 @@ def trade_flow_net_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     t, _ = derive_market(spark, sf_dir)
     return (t.groupBy("hub", F.date_trunc("hour", F.col("ts"))
                       .alias("flow_hour"))
-            .agg(F.sum(side_mw("BUY")).cast("long").alias("buy_mw"),
-                 F.sum(side_mw("SELL")).cast("long").alias("sell_mw"),
+            .agg(F.sum(F.when(F.col("side") == "BUY", F.col("mw"))
+                       .otherwise(0)).cast("long").alias("buy_mw"),
+                 F.sum(F.when(F.col("side") == "SELL", F.col("mw"))
+                       .otherwise(0)).cast("long").alias("sell_mw"),
                  F.sum(signed_mw()).cast("long").alias("net_mw"),
                  F.count("*").alias("n_trades")))
 

@@ -21,13 +21,12 @@ builders (derive_market, derive_da_rt) and the DuckDB oracle CTEs
 renderings cannot drift — the same posture as operators/sessionize.py.
 
 The tape rules sit beside them, each a Spark builder with its DuckDB
-rendering (`*_sql`; tests/test_events_market.py compares each pair).
-Each hub's tape (ticks or trades) is in (ts, id) order: the tape's own
-id breaks ties between events at one ts, so every lag, running value
-and rank on it is partition-order-free. The rules: the tape window
-(`by` adds partition keys: day, account, bar_hour), its first and last
-events, price lags and changes on it, signed and one-side MW, notional
-and VWAP.
+rendering (tests/test_events_market.py compares each pair). Each hub's
+tape (ticks or trades) is in (ts, id) order: the tape's own id breaks
+ties between events at one ts, so every lag, running value and rank on
+it is partition-order-free. The rules: the tape window (`by` adds
+partition keys), the open and close tick price, price lags and changes,
+signed MW, notional and VWAP.
 """
 
 from __future__ import annotations
@@ -151,22 +150,18 @@ def tape_window_sql(tape: str, *by: str) -> str:
             f" ORDER BY ts, {_TAPE_ID[tape]}")
 
 
-def tape_first(tape: str, col: str) -> Column:
-    """Aggregate: `col` of the group's first event on the tape."""
-    return F.min_by(col, F.struct(F.col("ts"), F.col(_TAPE_ID[tape])))
+def open_price() -> Column:
+    """Aggregate: the price of the group's first tick on the tape."""
+    return F.min_by("price_mwh", F.struct(F.col("ts"), F.col("tick_id")))
 
 
-def tape_first_sql(tape: str, col: str) -> str:
-    return f"first({col} ORDER BY ts, {_TAPE_ID[tape]})"
+def close_price() -> Column:
+    """Aggregate: the price of the group's last tick on the tape."""
+    return F.max_by("price_mwh", F.struct(F.col("ts"), F.col("tick_id")))
 
 
-def tape_last(tape: str, col: str) -> Column:
-    """Aggregate: `col` of the group's last event on the tape."""
-    return F.max_by(col, F.struct(F.col("ts"), F.col(_TAPE_ID[tape])))
-
-
-def tape_last_sql(tape: str, col: str) -> str:
-    return f"last({col} ORDER BY ts, {_TAPE_ID[tape]})"
+OPEN_PRICE_SQL = "first(price_mwh ORDER BY ts, tick_id)"
+CLOSE_PRICE_SQL = "last(price_mwh ORDER BY ts, tick_id)"
 
 
 def lagged_price(tape: str, k: int = 1, *by: str) -> Column:
@@ -193,15 +188,6 @@ def signed_mw() -> Column:
 
 
 SIGNED_MW_SQL = "CASE WHEN side = 'BUY' THEN mw ELSE -mw END"
-
-
-def side_mw(side: str) -> Column:
-    """mw on `side` ("BUY" or "SELL"), 0 on the other."""
-    return F.when(F.col("side") == side, F.col("mw")).otherwise(0)
-
-
-def side_mw_sql(side: str) -> str:
-    return f"CASE WHEN side = '{side}' THEN mw ELSE 0 END"
 
 
 def notional() -> Column:

@@ -13,28 +13,27 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from kafka_flink_processing_spark.plans.registry import oracle_sql, queries
 from kafka_flink_processing_spark.sources.events_market import (
+    CLOSE_PRICE_SQL,
     DA_CTE,
     NOTIONAL_SQL,
+    OPEN_PRICE_SQL,
     RT_CTE,
     SIGNED_MW_SQL,
     TICKS_CTE,
     TRADES_CTE,
     VWAP_SQL,
+    close_price,
     derive_da_rt,
     derive_market,
     lagged_price,
     lagged_price_sql,
     notional,
+    open_price,
     price_change,
     price_change_sql,
-    side_mw,
-    side_mw_sql,
     signed_mw,
-    tape_first,
-    tape_first_sql,
-    tape_last,
-    tape_last_sql,
     tape_window,
     tape_window_sql,
     vwap,
@@ -48,7 +47,8 @@ T0 = dt.datetime(2024, 1, 1)
 # HUB0, HUB2 and HUB3 have one tick each; HUB1 has five over two days,
 # two pairs at one ts (events 2, 3 and 13, 14), and the trades 9, 10 and
 # 16, 17 tie on ts too. Each tied pair is written greater id first, so
-# an order that drops the id follows the file, not the tape.
+# an order that drops the id follows the file, not the tape. Tick 18 has
+# no user, so no hub.
 EVENTS = [
     (0, 0, 0, "view", 50.0),
     (1, 0, 0, "purchase", 51.5),
@@ -68,6 +68,7 @@ EVENTS = [
     (15, 86520, 1, "purchase", 45.0),
     (17, 86580, 1, "error", 47.5),
     (16, 86580, 5, "error", 46.0),
+    (18, 420, None, "click", 55.0),
 ]
 
 
@@ -112,7 +113,7 @@ def test_spark_builders_match_oracle_ctes(spark, events_dir):
                   if r.hub == "HUB1" and r.ts == T0 + dt.timedelta(minutes=1)
                   ) == [2, 3]
     assert {r.hub for r in prices.collect()} == {"HUB0", "HUB1", "HUB2",
-                                                  "HUB3"}
+                                                  "HUB3", None}
     assert sorted(r.rt_id for r in rt.collect()) == [0, 3, 5, 12, 14]
     assert sorted(r.da_id for r in da.collect()) == [4, 8, 11]
 
@@ -174,11 +175,9 @@ def test_tick_tape_rules_match_renderings(spark, events_dir):
 def test_first_and_last_on_tape_match_renderings(spark, events_dir):
     _, prices = derive_market(spark, str(events_dir))
     got = _day(prices).groupBy("hub", "day").agg(
-        tape_first("ticks", "price_mwh").alias("open"),
-        tape_last("ticks", "price_mwh").alias("close"))
+        open_price().alias("open"), close_price().alias("close"))
     assert _same(got, events_dir, "ticks", f"""
-        SELECT hub, day, {tape_first_sql('ticks', 'price_mwh')} AS open,
-               {tape_last_sql('ticks', 'price_mwh')} AS close
+        SELECT hub, day, {OPEN_PRICE_SQL} AS open, {CLOSE_PRICE_SQL} AS close
         FROM t GROUP BY hub, day""")
     hub1 = {x.day.day: (x.open, x.close) for x in got.collect()
             if x.hub == "HUB1"}
@@ -193,8 +192,7 @@ def test_trade_tape_rules_match_renderings(spark, events_dir):
         rank(tape_window("trades", "account")).alias("rn_acc"),
         price_change("trades", 1).alias("d1"),
         price_change("trades", 1, "day").alias("d1_day"),
-        signed_mw().alias("signed"), side_mw("BUY").alias("buy"),
-        side_mw("SELL").alias("sell"))
+        signed_mw().alias("signed"))
     assert _same(got, events_dir, "trades", f"""
         SELECT trade_id, side,
                ROW_NUMBER() OVER ({tape_window_sql('trades')}) AS rn,
@@ -202,18 +200,15 @@ def test_trade_tape_rules_match_renderings(spark, events_dir):
                  AS rn_acc,
                {price_change_sql('trades', 1)} AS d1,
                {price_change_sql('trades', 1, 'day')} AS d1_day,
-               {SIGNED_MW_SQL} AS signed, {side_mw_sql('BUY')} AS buy,
-               {side_mw_sql('SELL')} AS sell
+               {SIGNED_MW_SQL} AS signed
         FROM t""")
     r = {x.trade_id: x for x in got.collect()}
     assert (r[9].rn, r[10].rn, r[16].rn, r[17].rn) == (1, 2, 4, 5)
     assert (r[10].d1, r[15].d1_day, r[16].d1_day) == (3.0, None, 1.0)
     assert (r[10].rn_acc, r[15].rn_acc, r[17].rn_acc) == (1, 2, 3)
     # BUY +mw, SELL -mw (trade 9: event_id % 4 == 1 -> 10 MW)
-    assert (r[9].side, r[9].signed, r[9].buy, r[9].sell) == \
-        ("SELL", -10, 0, 10)
-    assert (r[10].side, r[10].signed, r[10].buy, r[10].sell) == \
-        ("BUY", 25, 25, 0)
+    assert (r[9].side, r[9].signed) == ("SELL", -10)
+    assert (r[10].side, r[10].signed) == ("BUY", 25)
 
 
 def test_notional_and_vwap_match_renderings(spark, events_dir):
@@ -226,3 +221,13 @@ def test_notional_and_vwap_match_renderings(spark, events_dir):
     # HUB0: trades 1 (10 MW at 51.5), 8 (5 at 52.0), 11 (50 at 49.0)
     r = {x.hub: x for x in got.collect()}
     assert (r["HUB0"].notional, r["HUB0"].vwap) == (3225.0, 3225.0 / 65)
+
+
+def test_ohlc_bars_match_oracle_with_null_hub(spark, events_dir):
+    # both engines group the hub-less tick into a bar of its own
+    got = queries()["ohlc_bars"](spark, str(events_dir)).toPandas()
+    con = duck_connection(str(events_dir))
+    duck = con.execute(oracle_sql()["ohlc_bars"]).fetchdf()
+    assert compare("ohlc_bars", got, duck)
+    bar = got[got.hub.isna()]
+    assert (len(bar), bar.open.item(), bar.close.item()) == (1, 55.0, 55.0)
